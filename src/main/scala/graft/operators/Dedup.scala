@@ -71,14 +71,29 @@ object Dedup {
     * undetected-error rates of the hardware the shuffle crosses. A
     * 64-bit hash would NOT be safe (~50% collision odds at ~5e9 keys);
     * this is the same 128-bit choice [[persistExactIndex]] has always
-    * persisted, now applied to the one-shot operator. A null key
-    * fingerprints to null and still groups as the single null-key group,
-    * exactly as the raw key did.
+    * persisted, now applied to the one-shot operator. The birthday bound
+    * covers ACCIDENTAL collisions only: md5 is broken against chosen-prefix
+    * attacks, so a corpus with adversarially crafted documents can hold two
+    * different texts with one fingerprint, and one of them is then dropped
+    * as the other's duplicate. Use a keyed or stronger hash upstream when
+    * the input is hostile. A null key fingerprints to null and still groups
+    * as the single null-key group, exactly as the raw key did.
+    *
+    * Key contract: `key` must be a string or binary column (md5's input).
+    * The type is resolved when the plan is built; any other type throws an
+    * IllegalArgumentException naming it — cast the key to string first.
     */
-  def exact(df: DataFrame, key: Column, id: Column): DataFrame =
+  def exact(df: DataFrame, key: Column, id: Column): DataFrame = {
+    import org.apache.spark.sql.types.{BinaryType, StringType}
+    df.select(key).schema.head.dataType match {
+      case _: StringType | BinaryType =>
+      case t => throw new IllegalArgumentException(
+        s"Dedup.exact: key must be a string or binary column, got ${t.simpleString}")
+    }
     df.groupBy(unhex(md5(key)).as("content_key"))
       .agg(min(id).as("keep_id"), count(lit(1)).as("n_dups"))
       .select(col("keep_id"), col("n_dups"))
+  }
 
   /** MinHash + LSH near-dup pairs over word n-gram shingles.
     *

@@ -13,7 +13,7 @@ import graft.streaming.EventStreams
   */
 object StreamingQueries {
 
-  /** Streaming state partitioning is a deliberate knob, not inherited
+  /** Streaming state partitioning is a deliberate constant, not inherited
     * ambient config: the state-store instance count per stateful operator
     * equals the shuffle-partition count at the FIRST micro-batch and is
     * then pinned in the checkpoint for the query's life. Each instance
@@ -21,9 +21,10 @@ object StreamingQueries {
     * stores for kilobytes of state multiply fixed costs (measured ~2× on
     * the fixture stream-stream join) — while a TB-state join would want
     * thousands. Streaming plans therefore run in a child session sized
-    * for their state; batch plans keep the session's wide shuffle.
-    */
-  /** Checkpoint placement, probed and deliberately NOT changed (VERDICT
+    * for their state (8 state partitions); batch plans keep the
+    * session's wide shuffle.
+    *
+    * Checkpoint placement, probed and deliberately NOT changed (VERDICT
     * r20 next #8): rooting the transient per-query stream checkpoints
     * (offset/commit logs + state-store deltas) on tmpfs instead of the
     * default java.io.tmpdir measured FLAT on checkpoint-heavy st_*
@@ -35,8 +36,7 @@ object StreamingQueries {
     */
   private def streamSession(spark: SparkSession): SparkSession = {
     val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8"))
+    ss.conf.set("spark.sql.shuffle.partitions", "8")
     ss
   }
 

@@ -2,260 +2,63 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the prev-artifact tail-scrape fallback in [[Bench.scrapeTail]].
-  *
-  * The bench artifact line is `{"metric":...,"queries":{...},"failed":[...],
-  * "calibration":{...},"isolated":{...},...}`. When json4s parsing fails
-  * (front-truncated line), the scrape must NOT pick up the `isolated`
-  * section's re-run values — it reuses query names and appears after
-  * `queries`, so an unscoped last-occurrence `toMap` would silently
-  * substitute isolated numbers for the per-query mins.
+/** Pins [[Bench]]'s output contract: the final stdout line fits the
+  * driver's bounded log tail and carries exactly the contract keys, the
+  * committed full artifact min-merges same-round runs, and the
+  * diagnostics block keeps its shape.
   */
 class BenchScrapeSpec extends AnyFunSuite {
-  private val known = Set("q1", "q2", "dd_x")
-
-  test("scrape stops at the first post-queries section marker") {
-    val tail =
-      """"queries":{"q1":1.500,"q2":0.250,"dd_x":10.490},""" +
-        """"failed":[],"calibration":{"start":2.356,"end":1.315},""" +
-        """"isolated":{"dd_x":4.010,"q1":0.900}"""
-    val m = Bench.scrapeTail(tail, known)
-    assert(m === Map("q1" -> 1.5, "q2" -> 0.25, "dd_x" -> 10.49))
-  }
-
-  test("first occurrence wins across anchored segments") {
-    val tail =
-      """"queries":{"q1":1.500,"q2":0.250},"failed":[]""" + "\n" +
-        """{"metric":"total","queries":{"q1":0.900},"failed":[]}"""
-    val m = Bench.scrapeTail(tail, known)
-    assert(m("q1") === 1.5)
-  }
-
-  test("markerless fragment is dropped: it starts inside a later block") {
-    // A tail whose bounded window opens PAST the "isolated" key sees
-    // isolated entries with no section marker following them (only
-    // prev_ref/value remain) — scraping them as per-query mins was the
-    // round-13 skew. Such a fragment must contribute nothing, while the
-    // complete summary line after it scrapes normally.
-    val tail =
-      """"dd_x":4.010,"q1":0.900},"prev_ref":null,"value":115.6}""" + "\n" +
-        """{"metric":"total","summary_of":3,"queries":{"dd_x":10.490},""" +
-        """"failed":[],"isolated":{"dd_x":4.015}}"""
-    val m = Bench.scrapeTail(tail, known)
-    assert(m === Map("dd_x" -> 10.49))
-  }
-
-  test("truncated queries-map fragment is kept: a marker follows it") {
-    // Front truncation inside the cost-ascending per-query map is the
-    // DESIGNED shape — the map is always followed by "failed" within
-    // its own line, which is what proves the fragment is map content.
-    val tail = """"q2":0.250,"dd_x":10.490},"failed":[],""" +
-      """"isolated":{"dd_x":4.010}"""
-    assert(Bench.scrapeTail(tail, known) ===
-      Map("q2" -> 0.25, "dd_x" -> 10.49))
-  }
-
-  test("unknown keys are dropped; earliest marker bounds the scope") {
-    // "isolated" appearing before "failed" must still bound the scrape.
-    val tail =
-      """"metric":"total_sec","value":115.6,"q2":0.250,""" +
-        """"isolated":{"q1":0.900},"failed":["q9"],"q1":7.000"""
-    val m = Bench.scrapeTail(tail, known)
-    assert(m === Map("q2" -> 0.25))
-  }
-
-  test("empty and unprovable tails scrape cleanly to nothing") {
-    assert(Bench.scrapeTail("", known).isEmpty)
-    // a bare fragment with neither anchor nor marker cannot be proven
-    // to be per-query map content — dropped, not guessed at
-    assert(Bench.scrapeTail(""""q2":3.125""", known).isEmpty)
-  }
-
-  // --- flag auto-clear by isolated re-profile ---
-
-  test("a flag the isolated re-run refutes is cleared; others stay") {
-    val prevQ = Map("q1" -> 1.0, "q2" -> 2.0, "dd_x" -> 1.5)
-    // q1 flagged at 2.5 (> 2x1.0, > 1s) but isolated reads 1.1 -> cleared;
-    // q2 flagged and isolated STILL reads 5.0 (> 2x2.0) -> stays;
-    // dd_x flagged but not re-profiled (outside the cap) -> stays.
-    val iso = Map("q1" -> 1.1, "q2" -> 5.0)
-    assert(Bench.clearedFlags(Seq("q1", "q2", "dd_x"), prevQ, iso) ===
-      Seq("q1"))
-  }
-
-  test("an isolated re-run under the 1s floor clears regardless of ratio") {
-    // the (c) flag condition requires BOTH >2x and >1s; an isolated
-    // 0.9s read fails the floor, so the flag condition no longer holds
-    assert(Bench.clearedFlags(
-      Seq("q1"), Map("q1" -> 0.3), Map("q1" -> 0.9)) === Seq("q1"))
-  }
-
-  // --- parseArtifactText: the three artifact shapes ---
-
-  test("driver wrapper shape: queries under parsed") {
-    val text =
-      """{"round":10,"parsed":{"metric":"total","value":48.7,""" +
-        """"queries":{"q1":1.500,"q2":0.250}},"tail":""}"""
-    assert(Bench.parseArtifactText(text, known) ===
-      Map("q1" -> 1.5, "q2" -> 0.25))
-  }
-
-  test("raw bench line shape: top-level queries (BENCH_SF1 family)") {
-    val text =
-      """{"metric":"total","value":12.0,"unit":"sec",""" +
-        """"queries":{"q1":4.000,"dd_x":8.000},"failed":[],""" +
-        """"calibration":{"start":1.0,"end":1.1},"isolated":{"q1":3.000},""" +
-        """"prev_ref":null,"sf":"tmp/sf1"}"""
-    // top-level "queries" must win; the isolated re-run values must not
-    // leak in even though they reuse query names.
-    assert(Bench.parseArtifactText(text, known) ===
-      Map("q1" -> 4.0, "dd_x" -> 8.0))
-  }
-
-  test("null parsed falls back to the tail scrape") {
-    val text =
-      """{"round":8,"parsed":null,"tail":"...\"queries\":{\"q2\":2.000},""" +
-        """\"failed\":[],\"isolated\":{\"q2\":1.000}"}"""
-    assert(Bench.parseArtifactText(text, known) === Map("q2" -> 2.0))
-  }
+  private val tailWindow = 2000
+  private val byLen = SparkEntry.queries.keySet.toSeq.sortBy(-_.length)
+  private val worstCalib = (9999.999, 9999.999)
 
   test("unparseable artifact text yields empty, not a throw") {
-    assert(Bench.parseArtifactText("not json at all", known).isEmpty)
-    assert(Bench.parseArtifactText("", known).isEmpty)
-  }
-
-  test("parsed top-N summary and tail full map are unioned; parsed wins") {
-    // Since r13 the driver's "parsed" holds the summary line (top-10
-    // queries only); the full cost-ascending map lives in the wrapper's
-    // raw tail. parseArtifactText must union them or the next round's
-    // prev-ref compare would shrink to 10 shared queries.
-    val text =
-      """{"round":13,"parsed":{"metric":"total","value":48.7,""" +
-        """"summary_of":3,"queries":{"dd_x":10.490}},""" +
-        """"tail":"\"queries\":{\"q1\":1.500,\"q2\":0.250,\"dd_x\":10.491},""" +
-        """\"failed\":[],\"isolated\":{\"q1\":0.900}"}"""
-    val m = Bench.parseArtifactText(text, known)
-    assert(m === Map("q1" -> 1.5, "q2" -> 0.25, "dd_x" -> 10.49))
-  }
-
-  /** The summary line exists so the driver's final-line json parse
-    * succeeds at any registry size: worst-case top-10 + full
-    * adjudication block must fit the ~2,000-char window whole.
-    */
-  test("committed full artifact: passes-minima win, whole registry visible to the flag") {
-    // the BENCH_full_r{N}.json shape: top-level queries (rounded) plus
-    // per-pass full precision for EVERY query — no tail truncation, so
-    // the sub-second floor survives into the prev map
-    val full = """{"metric":"total","unit":"sec","sf":"x",""" +
-      """"queries":{"q1":0.2,"q2":5.1},"failed":[],""" +
-      """"calibration":{"start":1.0,"end":1.0},"isolated":{},""" +
-      """"prev_ref":null,""" +
-      """"passes":{"q1":[0.2,0.24],"q2":[null,5.1]},"value":5.3}"""
-    val m = Bench.parseArtifactText(full, known)
-    assert(m == Map("q1" -> 0.2, "q2" -> 5.1))
-    // the r15 blind spot, closed: a cheap->expensive in-session shift
-    // (0.2 s -> 6 s) is flagged against the full-precision prev map —
-    // the truncated wrapper tail never carried q1, so the flag was blind
-    assert(Bench.flaggedNames(Seq(("q1", 6.0, m("q1")))) == Seq("q1"))
-    assert(Bench.flaggedNames(Seq(("q1", 0.35, m("q1")))).isEmpty,
-      "sub-second wobble must stay under the 1 s flag floor")
-    // a wrapper whose tail lost the cheap front: q1 invisible — the
-    // documented failure shape the full-artifact source replaces
-    val truncatedWrapper =
-      """{"parsed":null,"tail":"95,\"q2\":5.1},\"failed\":[],""" +
-        """\"calibration\":{\"start\":1.0,\"end\":1.0}"}"""
-    val mt = Bench.parseArtifactText(truncatedWrapper, known)
-    assert(!mt.contains("q1") && mt.get("q2").contains(5.1))
-  }
-
-  test("isolation sanity: a sample worse than its in-run minimum is invalid") {
-    // the r15 shape: ml_lda_topics isolated 21.9 s vs 8.8 s in-run —
-    // self-contradictory, must not be citable evidence
-    assert(!Bench.isolatedValid(Some(8.8), 21.9))
-    assert(Bench.isolatedValid(Some(8.8), 8.8))
-    assert(Bench.isolatedValid(Some(8.8), 1.6))
-    // no in-run counterpart: nothing to contradict
-    assert(Bench.isolatedValid(None, 42.0))
-  }
-
-  /** The worst-case rendered flag-list fragment at the stdout budget:
-    * MAX over the two extreme shapes — (a) everything cleared (flagged
-    * renders its full 20-name budget), (b) nothing cleared (the
-    * 20-name budget goes to flag_uncleared, flagged renders empty +
-    * counter). Both built by the REAL renderer so the pin tracks it.
-    */
-  private def worstFlagLists(byLen: Seq[String]): String = {
-    val flagged = byLen.take(60) // large: all three "_more" counters render
-    val a = Bench.renderFlagLists(flagged, flagged.dropRight(3), Some(20))
-    val b = Bench.renderFlagLists(flagged, flagged.takeRight(3), Some(20))
-    if (a.length >= b.length) a else b
+    // an unreadable committed artifact is overwritten, not merged
+    assert(Bench.parseFullPasses("not json at all") == (Map.empty, 1))
+    assert(Bench.parseFullPasses("") == (Map.empty, 1))
   }
 
   test("worst-case summary LINE fits the driver's tail window whole") {
-    val tailWindow = 2000
-    val byLen = SparkEntry.queries.keySet.toSeq.sortBy(-_.length)
-    def entry(n: String) = "\"" + n + "\":9999.999"
-    val top10 = byLen.take(10).map(entry).mkString("{", ",", "}")
-    val failed = "\"failed\":" +
-      byLen.take(3).map("\"" + _ + "\"").mkString("[", ",", "]")
-    val calib = "\"calibration\":{\"start\":9999.999,\"end\":9999.999}"
-    val iso = "\"isolated\":" +
-      byLen.take(9).map(entry).mkString("{", ",", "}") +
-      ",\"isolated_more\":999"
-    val ref = "\"prev_ref\":{\"artifact\":\"BENCH_SF1_r99.json\"," +
-      "\"shared_sum_prev\":99999.999,\"shared_sum_now\":99999.999," +
-      "\"ratio\":99.999,\"calib_ratio\":99.999," +
-      "\"flag_metric\":\"wall\"," + worstFlagLists(byLen) + "}"
-    val line = "{\"metric\":\"total\",\"unit\":\"sec\"," +
-      "\"sf\":\"/root/testdata/sf0.1\"," +
-      s""""summary_of":9999,"queries":$top10,""" +
-      s"$failed,$calib,$iso,$ref," + "\"value\":99999.999}"
+    // the driver JSON-parses the final stdout line, so the summary line
+    // must fit the window whole: top-10 longest names at 9999.999 s,
+    // three failed names, worst-case calibration and total
+    val line = Bench.renderTotal("/root/testdata/sf0.1", Some(9999),
+      byLen.take(10).map(_ -> Some(9999.999)), byLen.take(3), worstCalib,
+      99999.999)
     assert(line.length <= tailWindow,
       s"worst-case summary line ${line.length} chars exceeds the " +
         s"$tailWindow-char driver tail window")
   }
 
-  // --- tail survivability of the reordered artifact line ---
-
-  /** The driver keeps only a bounded tail of the bench log; Bench emits
-    * the summary block (failed/calibration/isolated/prev_ref/value)
-    * LAST so front truncation can only eat the cheap end of the
-    * cost-ascending query map. This pins, at the CURRENT registry size,
-    * that a worst-case summary block still fits the tail window with
-    * room for the most expensive queries in front of it — the r6/r11
-    * truncation bug stays dead even as the registry grows.
+  /** The full line is ordered ascending by cost with failed/calibration/
+    * value LAST, so front truncation can only eat the cheap end of the
+    * per-query map. This pins, at the CURRENT registry size, that the
+    * worst-case summary block still fits the tail window with room for
+    * the most expensive queries in front of it.
     */
   test("worst-case summary block fits the driver's tail window") {
-    val tailWindow = 2000
-    val byLen = SparkEntry.queries.keySet.toSeq.sortBy(-_.length)
-    val longest = byLen.take(20)
+    val line = Bench.renderTotal("/root/testdata/sf0.1", None, Seq.empty,
+      byLen.take(3), worstCalib, 99999.999)
+    val summary = line.substring(line.indexOf("\"failed\""))
     def entry(n: String) = "\"" + n + "\":9999.999"
-    // failed: assume up to 3 names (a failing query is already loud in
-    // CORRECTNESS; 3 bounds a pathological run without bounding honesty)
-    val failed = "\"failed\":" +
-      longest.take(3).map("\"" + _ + "\"").mkString("[", ",", "]")
-    val calib = "\"calibration\":{\"start\":9999.999,\"end\":9999.999}"
-    // isolated: the stdout rendering is capped at 9 + counter (the
-    // exhaustive budget-capped loop may re-probe far more; the full
-    // artifact carries every sample)
-    val iso = "\"isolated\":" +
-      longest.take(9).map(entry).mkString("{", ",", "}") +
-      ",\"isolated_more\":999"
-    // prev_ref: flagged + flag_uncleared share a 20-name budget
-    // (survivors first), cleared capped at 3 — worst case over both
-    // extreme shapes, rendered by the real renderer
-    val ref = "\"prev_ref\":{\"artifact\":\"BENCH_SF1_r99.json\"," +
-      "\"shared_sum_prev\":99999.999,\"shared_sum_now\":99999.999," +
-      "\"ratio\":99.999,\"calib_ratio\":99.999," +
-      "\"flag_metric\":\"wall\"," + worstFlagLists(byLen) + "}"
-    val summary =
-      s"$failed,$calib,$iso,$ref,${"\"value\":99999.999}"}"
     // the summary must leave at least 25 top-cost query entries' worth
     // of room inside the window
     val topRoom = byLen.take(25).map(entry(_) + ",").map(_.length).sum
     assert(summary.length + topRoom <= tailWindow,
       s"summary block ${summary.length} chars + $topRoom chars of top " +
         s"queries exceeds the $tailWindow-char driver tail window")
+  }
+
+  test("summary line carries exactly the contract keys, value last") {
+    import org.json4s._
+    val line = Bench.renderTotal("x", Some(3),
+      Seq("b" -> Some(2.0), "a" -> Some(0.5)), Seq("c"), (1.0, 1.1), 2.5)
+    val JObject(fields) = org.json4s.jackson.JsonMethods.parse(line)
+    assert(fields.map(_._1) == List("metric", "unit", "sf", "summary_of",
+      "queries", "failed", "calibration", "value"))
+    assert(fields.last._2 == JDouble(2.5))
+    // the map keeps the caller's order (cost-descending here)
+    assert(line.contains(""""queries":{"b":2.000,"a":0.500}"""))
   }
 
   /** A full run over an existing same-round artifact must MERGE, not
@@ -284,208 +87,16 @@ class BenchScrapeSpec extends AnyFunSuite {
     assert(merged("c") == Seq(4.0))
     // min over the union is the committed-merge convention
     assert(merged("a").min == 0.8)
-    // a merged artifact round-trips: its passes re-parse with the stamp
-    val twice =
-      s"""{"metric":"total","merged_runs":2,"passes":{"a":[1.0]},"value":1.0}"""
-    assert(Bench.parseFullPasses(twice)._2 == 2)
-  }
-
-  /** `--reprobe` stamps hand re-probe evidence INTO the artifact
-    * (VERDICT r16 next #5): spliced before the closing brace without
-    * touching anything else, min-merged into an existing block.
-    */
-  test("appendReprobes splices a block and min-merges an existing one") {
-    val art =
-      """{"metric":"total","queries":{"a":1.0},"passes":{"a":[1.0]},"value":1.0}""" + "\n"
-    val once = Bench.appendReprobes(art, Map("q1" -> 3.6049, "q2" -> 1.2))
-    assert(once.contains(""""reprobes":{"q1":3.605,"q2":1.200}"""),
-      s"reprobe block malformed: $once")
-    // everything before the block is byte-identical
-    assert(once.startsWith(art.trim.dropRight(1)),
-      "appendReprobes must not rewrite the artifact body")
-    // a second reprobe of q1 min-merges; a new name joins
-    val twice = Bench.appendReprobes(once, Map("q1" -> 9.9, "q3" -> 0.5))
-    assert(twice.contains(""""q1":3.605"""),
-      s"reprobe must keep the per-query min: $twice")
-    assert(twice.contains(""""q3":0.500"""))
-    assert(""""reprobes":\{""".r.findAllIn(twice).size == 1,
-      s"must merge into ONE reprobes block: $twice")
-    // the merged artifact still json-parses
-    org.json4s.jackson.JsonMethods.parse(twice)
-  }
-
-  // --- IO-insensitive flag metric (VERDICT r17 next #2) ---
-
-  test("flag metric switches to cpu only in a degraded window with prev cpu") {
-    assert(Bench.flagMetric(1.0, Map("q1" -> 2.0)) == "wall",
-      "a calm window flags on wall")
-    assert(Bench.flagMetric(2.0, Map.empty) == "wall",
-      "no prev cpu -> wall even when degraded")
-    assert(Bench.flagMetric(1.4, Map("q1" -> 2.0)) == "cpu",
-      "degraded window + prev cpu -> cpu")
-  }
-
-  test("cpu metric flags on cpu ratios; wall-only queries fall back") {
-    // q1: wall 3x worse (IO window) but CPU flat -> NOT flagged under cpu
-    // q2: CPU doubled past the 1s floor -> flagged
-    // q3: no cpu on either side -> falls back to its wall condition
-    val sharedWall = Seq(("q1", 6.0, 2.0), ("q2", 5.0, 2.0), ("q3", 4.0, 1.5))
-    val curCpu = Map("q1" -> 1.9, "q2" -> 4.4)
-    val prevCpu = Map("q1" -> 1.8, "q2" -> 2.0)
-    assert(Bench.flaggedNamesBy(sharedWall, curCpu, prevCpu, "cpu") ==
-      Seq("q2", "q3"))
-    // under wall all three flag — the exact over-flagging cpu avoids
-    assert(Bench.flaggedNamesBy(sharedWall, curCpu, prevCpu, "wall") ==
-      Seq("q1", "q2", "q3"))
-    // cpu under the 1s CPU floor never flags, whatever the ratio
-    assert(Bench.flaggedNamesBy(Seq(("q4", 3.0, 1.0)),
-      Map("q4" -> 0.9), Map("q4" -> 0.2), "cpu").isEmpty)
-  }
-
-  // --- exhaustive budget-capped isolation (VERDICT r17 next #3) ---
-
-  test("forced-degraded window: every flagged query is admitted, zero residue") {
-    // the r17 shape: 59 flagged in a 4.7x-degraded window; the old
-    // top-10+2 count cap left 51 formally uncleared. Under the seconds
-    // budget, ALL flagged names are admitted when they fit.
-    val flagged = (1 to 59).map(i => f"q$i%02d")
-    val byCost = flagged.map(_ -> 2.0).toMap // ~4.1s estimate each
-    val top = flagged.take(5)
-    val (sel, dropped) = Bench.isolationSet(top, flagged, byCost, 900.0)
-    assert(dropped.isEmpty,
-      s"budget 900s must cover all 59 flagged (dropped: $dropped)")
-    assert(flagged.forall(sel.contains),
-      "every flagged query must be in the isolation set")
-  }
-
-  test("isolation budget drops expensive names but keeps filling with cheap ones") {
-    val byCost = Map("big" -> 100.0, "mid" -> 10.0, "sml" -> 0.5)
-    // budget 25s: big's ~200s estimate never fits; mid (~20s) and
-    // sml (~1s) both do — the greedy walk keeps filling after a drop
-    val (sel, dropped) =
-      Bench.isolationSet(Seq.empty, Seq("big", "mid", "sml"), byCost, 25.0)
-    assert(sel == Seq("mid", "sml") && dropped == Seq("big"),
-      s"sel=$sel dropped=$dropped")
-  }
-
-  // --- cpu / shuffle maps in the committed full artifact ---
-
-  test("full artifact carries per-query cpu and shuffle_mb maps (r18 shape)") {
-    // the representative r18 BENCH_full line shape; parseNumMap is the
-    // prev-ref reader for both new blocks
-    val full = """{"metric":"total","unit":"sec","sf":"x",""" +
-      """"queries":{"q1":0.2,"q2":5.1},"failed":[],""" +
-      """"calibration":{"start":1.0,"end":1.0},"isolated":{},""" +
-      """"prev_ref":{"artifact":"BENCH_full_r17.json","ratio":1.0,""" +
-      """"calib_ratio":1.0,"flag_metric":"wall","flagged":[]},""" +
-      """"cpu":{"q1":0.800,"q2":12.400},"shuffle_mb":{"q1":0.100,"q2":64.000},""" +
-      """"passes":{"q1":[0.2],"q2":[5.1]},"value":5.3}"""
-    assert(Bench.parseCpuMap(full) == Map("q1" -> 0.8, "q2" -> 12.4))
-    assert(Bench.parseNumMap(full, "shuffle_mb") ==
-      Map("q1" -> 0.1, "q2" -> 64.0))
-    // wall minima parsing is untouched by the new blocks
-    assert(Bench.parseArtifactText(full, known) ==
-      Map("q1" -> 0.2, "q2" -> 5.1))
-    // pre-r18 artifacts read as empty cpu -> flag falls back to wall
-    assert(Bench.parseCpuMap("""{"metric":"total","queries":{"q1":1.0}}""").isEmpty)
-  }
-
-  /** The reprobes splice is parse-modify-serialize inside a
-    * brace-matched span (VERDICT r17 What's-wrong #3): an artifact
-    * whose reprobes block — or any other block — nests braces
-    * round-trips unharmed; the old `\{[^}]*\}` regex corrupted the
-    * first nested brace it met.
-    */
-  test("appendReprobes round-trips nested-brace blocks unharmed") {
-    val art = """{"metric":"total","queries":{"a":1.0},""" +
-      """"adjudication":{"note":{"window":"degraded","runs":[1,2]}},""" +
-      """"reprobes":{"q1":3.000,"ctx":{"host":"vm","calib":{"r":2.0}}},""" +
-      """"passes":{"a":[1.0]},"value":1.0}""" + "\n"
-    val out = Bench.appendReprobes(art, Map("q1" -> 9.9, "q2" -> 0.5))
-    // min-merge keeps q1's floor; q2 joins; the nested ctx field survives
-    assert(out.contains(""""q1":3.000"""), s"min lost: $out")
-    assert(out.contains(""""q2":0.500"""), s"new name lost: $out")
-    assert(out.contains(""""ctx":{"host":"vm","calib":{"r":2.0}}"""),
-      s"nested non-numeric field mangled: $out")
-    // everything OUTSIDE the reprobes span is byte-identical
-    assert(out.contains(""""adjudication":{"note":{"window":"degraded","runs":[1,2]}}"""))
-    assert(out.startsWith("""{"metric":"total","queries":{"a":1.0},"""))
-    assert(out.trim.endsWith(""""passes":{"a":[1.0]},"value":1.0}"""))
-    org.json4s.jackson.JsonMethods.parse(out)
-    // the span finder itself: nested braces inside strings don't fool it
-    val tricky = """{"reprobes":{"k":"a{b}c","n":1.0},"value":2.0}"""
-    val (a, b) = Bench.reprobesSpan(tricky).get
-    assert(tricky.substring(a, b) == """{"k":"a{b}c","n":1.0}""")
-  }
-
-  test("a cpu-raised flag clears on isolated CPU, not isolated wall") {
-    // q1 flagged via cpu (prev 2.0 -> cur >4): its isolated WALL is at
-    // the floor but its isolated CPU still reads 5.0 — NOT cleared.
-    // q2 same flag shape but isolated CPU back at 2.1 — cleared.
-    // q3 flagged via the wall fallback (no cpu on either side) — its
-    // wall rule still applies.
-    val prevWall = Map("q1" -> 1.0, "q2" -> 1.0, "q3" -> 1.5)
-    val isoWall = Map("q1" -> 0.9, "q2" -> 0.9, "q3" -> 1.4)
-    val prevCpu = Map("q1" -> 2.0, "q2" -> 2.0)
-    val isoCpu = Map("q1" -> 5.0, "q2" -> 2.1)
-    assert(Bench.clearedFlagsBy(Seq("q1", "q2", "q3"),
-      prevWall, isoWall, prevCpu, isoCpu, "cpu") == Seq("q2", "q3"))
-    // under the wall metric all three judge by wall
-    assert(Bench.clearedFlagsBy(Seq("q1", "q2", "q3"),
-      prevWall, isoWall, prevCpu, isoCpu, "wall") == Seq("q1", "q2", "q3"))
-  }
-
-  test("flag_uncleared names every survivor on a 16-flag/13-cleared block") {
-    // VERDICT r18 What's-wrong #2: r18's artifact recorded the cleared
-    // list top-3 + counter, so the 3 SURVIVORS of 16 CPU flags could
-    // only be re-derived from the reprobes block. Survivors are the
-    // one list a reader must never have to infer: they must appear by
-    // name — exhaustively in the full artifact, and with priority
-    // inside the stdout name budget.
-    val flagged = (1 to 16).map(i => f"q$i%02d")
-    val survivors = Seq("q03", "q09", "q16")
-    val cleared = flagged.filterNot(survivors.contains)
-    for (budget <- Seq(Some(20), None)) {
-      val block = Bench.renderFlagLists(flagged, cleared, budget)
-      val unclr = """"flag_uncleared":\[([^\]]*)\]""".r
-        .findFirstMatchIn(block).map(_.group(1)).getOrElse(
-          fail(s"no flag_uncleared in $block"))
-      assert(unclr == survivors.map("\"" + _ + "\"").mkString(","),
-        s"survivors must be named exhaustively (budget=$budget): $block")
-      assert(!block.contains("uncleared_more"),
-        "a 3-survivor list must never truncate")
-    }
-    // full variant names everything; stdout variant shares the 20-name
-    // budget: 3 uncleared -> 17 slots for flagged (16 fit, no counter)
-    val full = Bench.renderFlagLists(flagged, cleared, None)
-    flagged.foreach(n => assert(full.contains("\"" + n + "\"")))
-    assert(!full.contains("_more"))
-    // nothing cleared: the whole budget goes to the survivors and
-    // flagged's own rendering shrinks to counters — no name is lost
-    // because uncleared IS the flagged list
-    val none = Bench.renderFlagLists((1 to 30).map(i => s"p$i"),
-      Seq.empty, Some(20))
-    assert(none.contains(""""flagged":[],"flagged_more":30"""))
-    assert(none.contains(""""uncleared_more":10"""))
-    (1 to 20).foreach(i => assert(none.contains("\"p" + i + "\"")))
-  }
-
-  test("cpu flag baseline is the median per-run mean, falling back to the max map") {
-    // ADVICE r18: the merged artifact's "cpu" map is max-of-run-means
-    // while the current side is ONE run's mean — ratioing cur/max
-    // biases downward after merges. Where cpu_runs exists the baseline
-    // is the MEDIAN run mean (like-for-like); older artifacts fall
-    // back to the max map.
-    val cpuMax = Map("q1" -> 9.0, "q2" -> 4.0, "q3" -> 2.0)
-    val runs = Map(
-      "q1" -> Seq(9.0, 3.0, 3.2), // median 3.2, not the 9.0 outlier max
-      "q2" -> Seq(4.0))           // single run: median == the run
-    val base = Bench.cpuFlagBaseline(cpuMax, runs)
-    assert(base("q1") == 3.2 && base("q2") == 4.0)
-    assert(base("q3") == 2.0, "no cpu_runs entry -> fall back to cpu map")
-    // even-count median averages the middle pair
-    assert(Bench.cpuFlagBaseline(Map("q" -> 9.0),
-      Map("q" -> Seq(1.0, 2.0, 3.0, 9.0)))("q") == 2.5)
+    // the rendered merge recomputes minima, failed and total from the
+    // union and round-trips its stamp
+    val text = Bench.renderFull("x", merged + ("f" -> Seq(Double.NaN)),
+      (1.0, 1.0), Some(oldRuns + 1), Bench.renderDiagnostics())
+    assert(text.contains(
+      """"queries":{"f":null,"gone":0.500,"a":0.800,"b":2.000,"c":4.000}"""), text)
+    assert(text.contains(""""failed":["f"]"""), text)
+    assert(text.endsWith(""""value":7.300}"""), text)
+    val (reread, runs) = Bench.parseFullPasses(text)
+    assert(runs == 2 && reread("b").count(_.isNaN) == 1 && reread("f").head.isNaN)
   }
 
   test("diagnostics block renders the pinned shape and parses as JSON") {
@@ -501,63 +112,5 @@ class BenchScrapeSpec extends AnyFunSuite {
     }
     assert(keys == List("cc_passes", "sampler_attempts", "sampler_hits"),
       s"pinned key set changed: $keys")
-  }
-
-  test("parseCpuRunsMap reads per-run means and survives junk") {
-    val text = """{"metric":"total","cpu":{"q1":9.0},""" +
-      """"cpu_runs":{"q1":[9.0,3.0],"q2":[],"q3":["x"]},"value":1}"""
-    assert(Bench.parseCpuRunsMap(text) == Map("q1" -> Seq(9.0, 3.0)))
-    assert(Bench.parseCpuRunsMap("{}").isEmpty)
-    assert(Bench.parseCpuRunsMap("not json").isEmpty)
-    // the same parser reads the cpu_invalid append-list by field name
-    val inv = """{"metric":"total","cpu_invalid":{"q9":[190.7]},"v":1}"""
-    assert(Bench.parseCpuRunsMap(inv, "cpu_invalid") ==
-      Map("q9" -> Seq(190.7)))
-  }
-
-  test("physically impossible CPU samples are dropped at record time and named") {
-    // VERDICT r19 What's-wrong #1 / next #1: BENCH_full_r19.json
-    // committed dd_cross_indexed at 190.7 CPU-s against a 4.81 s wall —
-    // the hard bound on a 32-core box is 32×4.81 ≈ 154 s, so the sample
-    // is listener-bus attribution corruption, not work, and it reached
-    // the headline "cpu" map through the mean → max pipeline. The screen
-    // drops such a pass's CPU at record time (NaN — excluded by the
-    // mean) and returns the raw value so the artifact can name it.
-    val passes = Seq(
-      Bench.PassStats(4.81, 15.2, 1.0),
-      Bench.PassStats(4.90, 19.7, 1.0),
-      Bench.PassStats(4.75, 16.1, 1.0),
-      Bench.PassStats(4.81, 190.7, 1.0)) // 40× the others, > 32×wall
-    val (screened, dropped) = Bench.screenCpu(passes, cpus = 32)
-    assert(dropped == Seq(190.7), "the corrupt pass must be named")
-    assert(screened.map(_.wall) == passes.map(_.wall),
-      "walls are measured directly and must never be touched")
-    assert(screened(3).cpu.isNaN, "the corrupt sample must leave the mean")
-    val mean = screened.map(_.cpu).filterNot(_.isNaN)
-    assert(mean.forall(_ <= 32 * 4.90) && mean.size == 3)
-    // a pass at full 32-core utilization is physically possible: kept
-    val (ok, none) = Bench.screenCpu(
-      Seq(Bench.PassStats(2.0, 64.0, 0.0)), cpus = 32)
-    assert(none.isEmpty && ok.head.cpu == 64.0)
-    // failed passes (NaN wall + NaN cpu) pass through unjudged
-    val (fail, noneF) = Bench.screenCpu(
-      Seq(Bench.PassStats(Double.NaN, Double.NaN, Double.NaN)), cpus = 32)
-    assert(noneF.isEmpty && fail.head.cpu.isNaN)
-  }
-
-  test("committed variant carries flag_uncleared even when empty; stdout omits it") {
-    // VERDICT r19 next #5: an omitted field is indistinguishable at a
-    // glance from an artifact predating the field — "zero survivors"
-    // must be a literal [] in the committed full artifact.
-    val flagged = Seq("q1", "q2")
-    val allCleared = Bench.renderFlagLists(flagged, flagged, None)
-    assert(allCleared.contains(""""flag_uncleared":[]"""),
-      s"committed variant must carry the empty survivors list: $allCleared")
-    val stdout = Bench.renderFlagLists(flagged, flagged, Some(20))
-    assert(!stdout.contains("flag_uncleared"),
-      s"tail-budgeted stdout variant still omits the empty list: $stdout")
-    // no flags at all: same rule
-    assert(Bench.renderFlagLists(Nil, Nil, None)
-      .contains(""""flag_uncleared":[]"""))
   }
 }

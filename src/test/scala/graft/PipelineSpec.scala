@@ -120,6 +120,14 @@ class PipelineSpec extends GraftSpecBase {
     assert(out == Set((1L, 2L), (3L, 1L)))
   }
 
+  test("exact dedup rejects a non-string, non-binary key with a typed error") {
+    import spark.implicits._
+    val docs = Seq((1L, 7), (2L, 7)).toDF("doc_id", "n")
+    val e = intercept[IllegalArgumentException](
+      Dedup.exact(docs, col("n"), col("doc_id")))
+    assert(e.getMessage.contains("int"), e.getMessage)
+  }
+
   test("dupClusters labels each component with its min id, chains included") {
     import spark.implicits._
     // component {1,2,3,4} is a CHAIN (needs >1 propagation pass), {10,11}

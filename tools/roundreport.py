@@ -67,22 +67,7 @@ def main():
     med = statistics.median(r for r, _ in ratios) if ratios else float("nan")
     failed = cur.get("failed") or []
     runs = cur.get("merged_runs", 1)
-    ref = cur.get("prev_ref") or {}
-    flagged = ref.get("flagged") or []
-    cleared = ref.get("flag_cleared_by_isolation") or []
-    uncleared = ref.get("flag_uncleared")
     calib = cur.get("calibration") or {}
-    reprobes = cur.get("reprobes") or {}
-    cpu_invalid = cur.get("cpu_invalid") or {}
-    cpus = 32
-    cpu_bound_viol = []
-    # the r20 done-criterion check, in-generator: no committed cpu entry
-    # above cpus x (the query's own max recorded pass wall)
-    for n, c in (cur.get("cpu") or {}).items():
-        walls = [w for w in (cur.get("passes") or {}).get(n, [])
-                 if isinstance(w, (int, float))]
-        if walls and c > cpus * max(walls):
-            cpu_bound_viol.append(n)
 
     lines = []
     lines.append(
@@ -100,42 +85,20 @@ def main():
            + ")" if old else "")
         + ".")
     lines.append(
-        f"  This run's adjudication: calibration "
-        f"{fmt(calib.get('start', float('nan')))} -> "
-        f"{fmt(calib.get('end', float('nan')))}, flag metric "
-        f"`{ref.get('flag_metric', 'n/a')}`, {len(flagged)} flagged, "
-        f"{len(cleared)} cleared by in-artifact isolation, "
-        + (f"{len(uncleared)} uncleared" if uncleared is not None
-           else "flag_uncleared ABSENT (pre-r20 artifact)")
-        + f"; {len(reprobes)} reprobe samples ride the artifact.")
-    if cpu_invalid:
-        drops = sum(len(v) for v in cpu_invalid.values())
-        lines.append(
-            f"  CPU screen: {drops} physically impossible sample(s) "
-            f"dropped at record time (`cpu_invalid`: "
-            f"{', '.join('`%s`' % n for n in sorted(cpu_invalid))}).")
-    else:
-        lines.append(
-            "  CPU screen: zero samples above the 32x-wall physical "
-            "bound this round (`cpu_invalid` empty).")
-    lines.append(
-        "  Committed `cpu` map bound check: "
-        + (f"VIOLATED by {sorted(cpu_bound_viol)}" if cpu_bound_viol
-           else "every entry <= 32 x its query's max recorded pass wall")
-        + ".")
+        f"  Calibration probe: "
+        f"{fmt(calib.get('start', float('nan')))} s at start, "
+        f"{fmt(calib.get('end', float('nan')))} s at end.")
     if cur_sf1 is not None:
         q1, p1 = minima(cur_sf1), minima(old_sf1)
         runs1 = cur_sf1.get("merged_runs", 1)
         shared1 = [(n, q1[n], p1[n]) for n in sorted(set(q1) & set(p1))
                    if p1[n] > 0]
         r1 = sorted((c / o, n) for n, c, o in shared1)
-        ref1 = cur_sf1.get("prev_ref") or {}
         lines.append(
             f"  The sf1 decade (`BENCH_full_SF1_r{rnd}.json`, pinned "
             f"{len(q1)}, min-merged across {runs1} runs): "
             f"**{fmt(cur_sf1.get('value', 0.0))} s, "
-            f"{len(cur_sf1.get('failed') or [])} failed, "
-            f"{len(ref1.get('flagged') or [])} flagged**"
+            f"{len(cur_sf1.get('failed') or [])} failed**"
             + (f" — {fmt(sum(c for _, c, _ in shared1) / sum(o for _, _, o in shared1))}x "
                f"vs r{prev}, worst per-query {fmt(r1[-1][0], 2)}x "
                f"`{r1[-1][1]}`" if shared1 else "")

@@ -133,8 +133,9 @@ def main() -> None:
     small = json.load(open(small_path))
     large = json.load(open(large_path))
     sq, lq = small["queries"], large["queries"]
-    # per-query executor-CPU maps ride graft.Bench's full artifacts
-    # since r18; when both sides carry one, each query also gets a
+    # per-query executor-CPU maps rode graft.Bench's full artifacts
+    # from r18 until Bench dropped its CPU listener (newer artifacts
+    # carry neither map); when both sides carry one, each query also gets a
     # cpu_ratio and the superlinear adjudication consults it (VERDICT
     # r18 next #3): wall growth on this host swings 2-4x with the IO
     # window, but executor CPU doesn't — a query whose wall ratio
@@ -145,8 +146,7 @@ def main() -> None:
         # max-aggregated "cpu" map: max locks in attribution-INFLATED
         # outliers (a stalled listener bus that starves one window
         # feeds its neighbor — r18's pipe_all_budget carried 175 CPU-s
-        # against a ~50 s true cost), and the median is the same
-        # baseline graft.Bench's own CPU flags ratio against
+        # against a ~50 s true cost)
         runs = artifact.get("cpu_runs", {})
         base = dict(artifact.get("cpu", {}))
         for name, vals in runs.items():

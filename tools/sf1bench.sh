@@ -6,8 +6,9 @@
 # expensive slice of the registry one decade up (tools/mksfx.py x10 of
 # sf0.1, ~60M lineitem-equivalent rows) so regressions surface while
 # still fitting a single background run. The artifact family is
-# BENCH_SF1_r{N}.json and adjudicates ONLY against its own like-scale
-# history (SPARK_GRAFT_PREV_PREFIX) — never against the sf0.1 family.
+# BENCH_SF1_r{N}.json (SPARK_GRAFT_PREV_PREFIX), with its full-precision
+# twin BENCH_full_SF1_r{N}.json; it is compared only with its own
+# like-scale history — never with the sf0.1 family.
 #
 # Usage: tools/sf1bench.sh <round-number>   (writes BENCH_SF1_r<N>.json)
 set -euo pipefail
@@ -65,9 +66,7 @@ ONLY=$ONLY,st_ivfpq_live
 # round-21 list revision (VERDICT r20 next #1): dd_exact — not in the
 # expensive slice by WALL, but its r21 rework (group on the md5
 # fingerprint instead of the full text) is a pure shuffle-BYTE
-# optimization whose payoff the sf0.1 family can't register; this
-# family's artifact carries per-query shuffle_mb, so dd_exact rides
-# here to keep the decade-scale shuffle volume adjudicated per round
+# optimization whose payoff the sf0.1 family can't register
 ONLY=$ONLY,dd_exact
 
 OUT="BENCH_SF1_r${ROUND}.json"
@@ -76,18 +75,16 @@ mkdir -p target
 SPARK_GRAFT_SF_DIR="$SF1" \
 SPARK_GRAFT_ONLY="$ONLY" \
 SPARK_GRAFT_PREV_PREFIX=BENCH_SF1_r \
-SPARK_GRAFT_ISOLATE=1 \
 SPARK_GRAFT_ROUND="$ROUND" \
   sbt -batch "runMain graft.Bench" > "$LOG" 2>&1 || {
     echo "[sf1bench] sbt failed; tail of $LOG:" >&2; tail -20 "$LOG" >&2; exit 1; }
 # The bench prints TWO JSON lines starting {"metric":"total": first the
 # full per-query line, then a driver-oriented top-10 summary. The FULL
-# line (head -1) is this family's artifact (Bench.prevArtifact reads
-# top-level "queries", and the SF1 set must carry every pinned query).
-# `|| true`: under pipefail a lineless log would otherwise kill the
-# script at the grep, AFTER the redirection truncated $OUT — leaving an
-# empty highest-numbered artifact that silently disables the next
-# round's prev-ref adjudication. Let the guard below do the failing.
+# line (head -1) is this family's artifact (the SF1 set must carry
+# every pinned query). `|| true`: under pipefail a lineless log would
+# otherwise kill the script at the grep, AFTER the redirection truncated
+# $OUT — leaving an empty highest-numbered artifact behind. Let the
+# guard below do the failing.
 grep -h '^{"metric":"total"' "$LOG" | head -1 > "$OUT" || true
 [ -s "$OUT" ] || { rm -f "$OUT"; echo "[sf1bench] no bench line found in $LOG" >&2; exit 1; }
 echo "[sf1bench] wrote $OUT" >&2
