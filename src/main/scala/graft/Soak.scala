@@ -1232,14 +1232,14 @@ object Soak {
       }
 
       // Prune-collect overhead at high batch frequency (VERDICT r16
-      // stretch #8): pruneToTouchedCells pays a driver collect (+ the
-      // probe side's localCheckpoint) per batch per index — negligible
-      // for the oracle queries, but a 100 ms-trigger pipeline pays two
-      // driver round-trips per batch. This measures the per-batch wall
-      // of the semantic probe kernel at MICRO batch sizes (LocalRelation
-      // frames, exactly the foreachBatch shape) three ways: the full
-      // pruned kernel, the same join UNPRUNED (every cell directory in
-      // the listing), and the prune call alone. Scale-independent of m,
+      // stretch #8): localProbe pays one driver collect of the probe
+      // side per batch per index — negligible for the oracle queries,
+      // but a 100 ms-trigger pipeline pays a driver round-trip per
+      // batch. This measures the per-batch wall of the semantic probe
+      // kernel at MICRO batch sizes (LocalRelation frames, exactly the
+      // foreachBatch shape) three ways: the full pruned kernel, the
+      // same join UNPRUNED (every cell directory in the listing), and
+      // the probe-side materialization alone. Scale-independent of m,
       // so it runs once per soak invocation. Corpus: 1M synthetic
       // dim-16 vectors → k = 8000 cells (routed assignment, grouped
       // directories at the 1024 fanout bound) — the production layout
@@ -1258,11 +1258,10 @@ object Soak {
         graft.operators.Dedup.persistSemanticIndex(cat, "soak", "prl",
           emb(nV, 0L), "vec_id", "embedding")
         val buildSec = (System.nanoTime() - t0) / 1e9
-        val (centroids, routeT) = graft.operators.SimilaritySearch
-          .loadCentroidsWithThreshold(spark, cat, "soak", "prl")
+        val cb = graft.operators.SimilaritySearch
+          .loadIndexCodebook(spark, cat, "soak", "prl")
         val vectors = cat.scanSet("soak", "prl_vectors")
-        val assign = graft.operators.SimilaritySearch
-          .indexAssignUdfFor(routeT, centroids)
+        val assign = cb.assignUdf
         val bucketType = vectors.schema("bucket").dataType
         import graft.functions.TextFunctions.l2Norm
         for (batchRows <- Seq(8, 128)) {
@@ -1278,21 +1277,23 @@ object Soak {
           def med(xs: Seq[Double]) = xs.sorted.apply(xs.size / 2)
           val pruned = (0 until nBatches).map { i =>
             val t = System.nanoTime()
-            graft.operators.Dedup.semanticBatchPairs(batch(i), centroids,
+            graft.operators.Dedup.semanticBatchPairs(batch(i), cb.centroids,
               vectors, "vec_id", "embedding", 0.999,
-              routeThreshold = Some(routeT)).count()
+              kernel = Some(cb.kernel)).count()
             (System.nanoTime() - t) / 1e9
           }
-          val unpruned = (0 until nBatches).map { i =>
-            val t = System.nanoTime()
-            val arr = graft.operators.SimilaritySearch.withCellGroup(vectors,
+          def arrivals(i: Int) =
+            graft.operators.SimilaritySearch.withCellGroup(vectors,
               batch(i).select(col("vec_id").as("id_b"),
                   col("embedding").as("b_vec"),
                   l2Norm(col("embedding")).as("b_nrm"))
                 .withColumn("bucket",
                   assign(col("b_vec")).cast(bucketType)))
-              .localCheckpoint(true)
-            vectors.join(broadcast(arr),
+          val unpruned = (0 until nBatches).map { i =>
+            val t = System.nanoTime()
+            val (_, arr) = graft.operators.SimilaritySearch
+              .localProbe(vectors, arrivals(i))
+            vectors.join(arr,
                 graft.operators.SimilaritySearch.cellJoinKeys(vectors))
               .withColumn("cos", round(graft.functions.TextFunctions
                 .dot(col("n_vec"), col("b_vec")) /
@@ -1301,16 +1302,9 @@ object Soak {
             (System.nanoTime() - t) / 1e9
           }
           val pruneOnly = (0 until nBatches).map { i =>
-            val arr = graft.operators.SimilaritySearch.withCellGroup(vectors,
-              batch(i).select(col("vec_id").as("id_b"),
-                  col("embedding").as("b_vec"),
-                  l2Norm(col("embedding")).as("b_nrm"))
-                .withColumn("bucket",
-                  assign(col("b_vec")).cast(bucketType)))
-              .localCheckpoint(true)
+            val arr = arrivals(i)
             val t = System.nanoTime()
-            graft.operators.SimilaritySearch
-              .pruneToTouchedCells(vectors, arr)
+            graft.operators.SimilaritySearch.localProbe(vectors, arr)
             (System.nanoTime() - t) / 1e9
           }
           println(f"SOAK prunelat rows=$batchRows%-4d vecs=$nV%-8d " +

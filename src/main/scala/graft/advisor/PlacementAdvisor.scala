@@ -286,7 +286,12 @@ final class PlacementAdvisor(historyPath: Option[String] = None) {
     * `targetClusterSize` itself grows as ceil(n / maxClusters) — the
     * knob that extends the linear regime arbitrarily; and past
     * `routeThreshold` fine centroids the assignment routes through
-    * ceil(√k) coarse cells (O(n·√k·d) instead of O(n·k·d)). The corpus
+    * ceil(√k) coarse cells (O(n·√k·d) instead of O(n·k·d)) — up to the
+    * tree threshold ([[graft.operators.SimilaritySearch
+    * .treeRouteThreshold]]), past which `routeCells` is 0 again: the
+    * operator's own routed kernel then takes the assignment tree, the
+    * same dispatch as the static path (a positive `routeCells` would
+    * FORCE the two-level router). The corpus
     * size is remembered in the same `setRows` history the bucket sizing
     * uses, so a later call with a stale/smaller count still sizes for
     * the largest corpus this table has been observed at.
@@ -304,7 +309,9 @@ final class PlacementAdvisor(historyPath: Option[String] = None) {
     val k = math.min(
       math.max(4L, (n + target - 1) / target), maxClusters.toLong).toInt
     val cells =
-      if (k > routeThreshold) math.max(1, math.ceil(math.sqrt(k.toDouble)).toInt)
+      if (k > routeThreshold &&
+          k <= graft.operators.SimilaritySearch.treeRouteThreshold)
+        math.max(1, math.ceil(math.sqrt(k.toDouble)).toInt)
       else 0
     SemGeometry(target, k, cells)
   }
@@ -493,8 +500,8 @@ object PlacementAdvisor {
 
 /** [[PlacementAdvisor.recommendSemGeometry]]'s recommendation: the
   * SemDeDup cluster-size knob, the codebook size it implies, and the
-  * coarse routing cell count (0 = flat assignment, below the routing
-  * threshold).
+  * coarse routing cell count (0 = the operator's own kernel: flat below
+  * the routing threshold, the assignment tree past the tree threshold).
   */
 final case class SemGeometry(
     targetClusterSize: Int, clusters: Int, routeCells: Int)

@@ -407,10 +407,10 @@ object SimilaritySearch {
     */
   private[graft] def treeRouteThreshold: Int = treeTrainThreshold
 
-  /** The routed (above-threshold) assignment kernel: two-level √k
-    * router up to [[treeRouteThreshold]], the assignment tree past it.
-    * Pure function of the codebook, so build, append, rebuild and
-    * probe of one index always agree.
+  /** The routed (above-threshold) assignment kernel of the unpersisted
+    * operators: two-level √k router up to [[treeRouteThreshold]], the
+    * assignment tree past it — the boundary [[routeKernelFor]] applies
+    * to a persisted index, whose codebook also witnesses its kernel.
     */
   private[graft] def routedNearestUdf(
       centroids: Array[Array[Double]],
@@ -457,36 +457,94 @@ object SimilaritySearch {
 
   /** The per-row cell-assignment kernel every persisted-index lifecycle
     * stage shares: flat argmin below the routing threshold (bit-
-    * identical to every oracle), two-level routed above it. This
-    * overload reads the SESSION threshold — for the build/rebuild
-    * paths, which persist their decision; lifecycle stages of an
-    * existing index use [[indexAssignUdfFor]] with the index's OWN
-    * persisted threshold.
+    * identical to every oracle), routed above it. This overload reads
+    * the SESSION threshold — for the build/rebuild paths, which persist
+    * their decision; lifecycle stages of an existing index assign with
+    * the kernel its persisted codebook witnesses ([[loadIndexCodebook]]).
     */
   private[graft] def indexAssignUdf(
       spark: SparkSession, centroids: Array[Array[Double]]): org.apache.spark.sql.expressions.UserDefinedFunction =
-    indexAssignUdfFor(sessionRouteThreshold(spark), centroids)
+    kernelUdf(sessionKernel(spark, centroids.length), centroids)
 
-  private[graft] def indexAssignUdfFor(
-      threshold: Int, centroids: Array[Array[Double]]): org.apache.spark.sql.expressions.UserDefinedFunction = {
-    val cells = routedCellsFor(threshold, centroids.length)
-    if (cells > 0) routedNearestUdf(centroids, routeIters = 2)
-    else nearestUdf(centroids)
-  }
+  /** A persisted index's cell-assignment kernel. */
+  sealed trait RouteKernel
+  case object FlatKernel extends RouteKernel
+  case object TwoLevelKernel extends RouteKernel
+  case object TreeKernel extends RouteKernel
 
-  /** The routing regime's self-describing witness, mirroring the
-    * grouped layout's `cell_group_N` pattern: the centroids set carries
-    * a marker COLUMN whose name encodes the threshold the index was
-    * built under (`route_threshold_2048`) — atomic with the codebook by
-    * construction (the swap that replaces the codebook replaces its
-    * threshold), nothing extra to crash-protect, and a session-conf
-    * drift after build cannot desynchronize assignment between the
-    * standing vectors and later arrivals/probes.
+  /** Raised loading a standing index whose stored rows were assigned by
+    * a kernel this engine no longer derives from the codebook alone: a
+    * routed codebook past [[treeRouteThreshold]] built before the
+    * `route_kernel_tree` witness existed was bucketed by the two-level
+    * router, while every later append and probe would assign with the
+    * tree — new rows and probes landing in different cells than the
+    * standing ones. Rebuild the index (its rebuild writes the witness).
     */
-  private[graft] def withRouteThreshold(
-      spark: SparkSession, centroidsDf: DataFrame): DataFrame =
-    centroidsDf.withColumn(
-      s"route_threshold_${sessionRouteThreshold(spark)}", lit(true))
+  final class IndexRebuildRequiredException(msg: String)
+    extends IllegalStateException(msg)
+
+  /** The marker column a routed codebook past [[treeRouteThreshold]]
+    * carries next to its `route_threshold_N` column: the stored rows
+    * were assigned by the tree ([[treeNearestUdf]]).
+    */
+  val TreeKernelMarker = "route_kernel_tree"
+
+  /** The assignment kernel as a pure function of the persisted witness:
+    * flat at or below the routing threshold, two-level routed up to
+    * [[treeRouteThreshold]], the tree past it — and past it ONLY when
+    * the codebook carries [[TreeKernelMarker]]; a marker-less codebook
+    * there fails with [[IndexRebuildRequiredException]] rather than
+    * assign arrivals with a kernel its standing rows never saw.
+    */
+  private[graft] def routeKernelFor(
+      threshold: Int, k: Int, treeMarker: Boolean): RouteKernel =
+    if (routedCellsFor(threshold, k) == 0) FlatKernel
+    else if (k <= treeRouteThreshold) TwoLevelKernel
+    else if (treeMarker) TreeKernel
+    else throw new IndexRebuildRequiredException(
+      s"index codebook of $k cells (route threshold $threshold) has no " +
+        s"$TreeKernelMarker witness: its rows were assigned by the " +
+        "two-level router, which this engine no longer uses past " +
+        s"$treeRouteThreshold cells — rebuild the index")
+
+  /** The kernel a fresh build assigns with (and witnesses). */
+  private[graft] def builtKernel(threshold: Int, k: Int): RouteKernel =
+    routeKernelFor(threshold, k, treeMarker = true)
+
+  /** [[builtKernel]] under the session's routing threshold. */
+  private[graft] def sessionKernel(spark: SparkSession, k: Int): RouteKernel =
+    builtKernel(sessionRouteThreshold(spark), k)
+
+  private[graft] def kernelUdf(kernel: RouteKernel,
+      centroids: Array[Array[Double]]): org.apache.spark.sql.expressions.UserDefinedFunction =
+    kernel match {
+      case FlatKernel => nearestUdf(centroids)
+      case TwoLevelKernel =>
+        twoLevelNearestUdf(centroids, sqrtCells(centroids.length), routeIters = 2)
+      case TreeKernel => treeNearestUdf(centroids, routeIters = 2)
+    }
+
+  /** A persisted codebook as build/rebuild store it, its assignment
+    * regime self-describing in marker COLUMNS (the grouped layout's
+    * `cell_group_N` pattern): `route_threshold_N` names the threshold
+    * the index was built under, and [[TreeKernelMarker]] is present
+    * when that build assigned with the tree. Atomic with the codebook
+    * by construction (the swap that replaces the codebook replaces its
+    * markers), nothing extra to crash-protect, and a session-conf drift
+    * after build cannot desynchronize assignment between the standing
+    * vectors and later arrivals/probes.
+    */
+  private[graft] def codebookFrame(
+      spark: SparkSession, centroids: Array[Array[Double]]): DataFrame = {
+    import spark.implicits._
+    val df = centroids.zipWithIndex
+      .map { case (v, b) => (b.toLong, v.toSeq) }.toSeq
+      .toDF("bucket", "centroid")
+      .withColumn(s"route_threshold_${sessionRouteThreshold(spark)}", lit(true))
+    if (sessionKernel(spark, centroids.length) == TreeKernel)
+      df.withColumn(TreeKernelMarker, lit(true))
+    else df
+  }
 
   /** Parse the persisted threshold back out of a centroids frame's
     * schema; None for pre-marker (legacy) indexes, which fall back to
@@ -497,20 +555,50 @@ object SimilaritySearch {
     centroidsDf.columns.find(_.startsWith("route_threshold_"))
       .map(_.stripPrefix("route_threshold_").toInt)
 
-  /** Collect a persisted codebook (bucket-ordered) together with the
-    * routing threshold governing ITS assignments: the persisted marker
-    * when present, else the session conf (legacy indexes). Every
-    * lifecycle stage of an existing index loads centroids through this
-    * one path, so the assignment regime cannot fork between stages.
+  /** A standing index's codebook (bucket-ordered), the routing
+    * threshold governing ITS assignments (the persisted marker when
+    * present, else the session conf — legacy indexes) and the kernel
+    * the codebook witnesses.
     */
+  final case class IndexCodebook(
+      centroids: Array[Array[Double]], routeThreshold: Int,
+      kernel: RouteKernel) {
+    def assignUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
+      kernelUdf(kernel, centroids)
+  }
+
+  /** Load a standing index's codebook through the catalog memo: one
+    * collect per codebook GENERATION (the centroids sidecar's), shared
+    * by every append, probe and search of the index. Appends never
+    * change the codebook, so they and a live probe stream reuse it; a
+    * rebuild swaps a new generation in and the next caller collects
+    * once. The kernel is checked here, so an index that needs a
+    * rebuild fails before anything is assigned or written.
+    */
+  private[graft] def loadIndexCodebook(
+      spark: SparkSession, catalog: graft.storage.SetCatalog,
+      db: String, name: String): IndexCodebook = {
+    val set = s"${name}_centroids"
+    catalog.memoized(db, set, "index.codebook") {
+      val df = catalog.scanSet(db, set)
+      // collected unordered and sorted here: buckets are 0..k-1, and an
+      // orderBy costs a sampling job plus a shuffle
+      val cents = df.select(col("bucket"), col("centroid")).collect()
+        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+        .sortBy(_._1).map(_._2)
+      val threshold =
+        persistedRouteThreshold(df).getOrElse(sessionRouteThreshold(spark))
+      IndexCodebook(cents, threshold, routeKernelFor(threshold,
+        cents.length, df.columns.contains(TreeKernelMarker)))
+    }
+  }
+
+  /** [[loadIndexCodebook]] as (centroids, routing threshold). */
   private[graft] def loadCentroidsWithThreshold(
       spark: SparkSession, catalog: graft.storage.SetCatalog,
       db: String, name: String): (Array[Array[Double]], Int) = {
-    val df = catalog.scanSet(db, s"${name}_centroids")
-    val cents = df.orderBy(col("bucket")).select(col("centroid"))
-      .collect().map(_.getSeq[Double](0).toArray)
-    (cents,
-      persistedRouteThreshold(df).getOrElse(sessionRouteThreshold(spark)))
+    val cb = loadIndexCodebook(spark, catalog, db, name)
+    (cb.centroids, cb.routeThreshold)
   }
 
   /** Directory-fanout bound for the cell-partitioned vector set: one
@@ -580,18 +668,21 @@ object SimilaritySearch {
   private[graft] def cellJoinKeys(standing: DataFrame): Seq[String] =
     cellGroupColOf(standing).map(_._1).toSeq :+ "bucket"
 
-  /** Restrict the standing cell-partitioned set to the cells a SMALL
-    * (already-materialized, about-to-be-broadcast) probe side actually
-    * touches, as LITERAL filters on the cell-layout columns — static
-    * partition pruning that holds under ANY probe-side plan shape.
-    * Dynamic partition pruning is heuristic: a streaming micro-batch
-    * arrives as a LocalRelation/LogicalRDD whose default size estimate
-    * makes the DPP benefit check decline, leaving the per-batch plan
-    * scanning every cell directory (PlanSpec pins the literal form).
-    * One extra collect over the probe side per call — batch-sized, and
-    * the frame is checkpointed by the caller so nothing recomputes.
-    * Above `maxLiterals` touched cells the filter is skipped whole: the
-    * probe covers most of the codebook, pruning buys nothing, and a
+  /** The probe side of a standing-index join, materialized ONCE: the
+    * (small) probe frame is collected to the driver, the cells those
+    * rows touch become LITERAL filters on the standing set's cell-layout
+    * columns, and the same rows come back as a broadcast local relation
+    * for the join — one job where a checkpoint, a touched-cell collect
+    * and a broadcast used to be three passes over one frame. Returns
+    * (pruned standing set, broadcast probe side).
+    *
+    * Static pruning holds under ANY probe-side plan shape; dynamic
+    * partition pruning is heuristic — a streaming micro-batch arrives as
+    * a LocalRelation/LogicalRDD whose default size estimate makes the
+    * DPP benefit check decline, leaving the per-batch plan scanning
+    * every cell directory (PlanSpec pins the literal form). Above
+    * `maxLiterals` touched cells the filter is skipped whole: the probe
+    * covers most of the codebook, pruning buys nothing, and a
     * 100k-literal IN would bloat the plan instead.
     *
     * The filter is one IN per key column, NOT per-tuple conjunctions —
@@ -608,16 +699,21 @@ object SimilaritySearch {
     * 4096 touched cells. IvfIndexSpec pins the row-level exactness on a
     * grouped layout.
     */
-  private[graft] def pruneToTouchedCells(
+  private[graft] def localProbe(
       standing: DataFrame, probeSide: DataFrame,
-      maxLiterals: Int = 4096): DataFrame = {
+      maxLiterals: Int = 4096): (DataFrame, DataFrame) = {
+    val rows = probeSide.collect()
+    val local = probeSide.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), probeSide.schema)
     val keys = cellJoinKeys(standing)
-    val touched = probeSide.select(keys.map(col): _*).distinct()
-      .limit(maxLiterals + 1).collect()
-    if (touched.length > maxLiterals) standing
-    else keys.zipWithIndex.foldLeft(standing) { case (df, (k, i)) =>
-      df.filter(col(k).isin(touched.map(_.get(i)).distinct.toIndexedSeq: _*))
-    }
+    val at = keys.map(local.schema.fieldIndex)
+    val touched = rows.map(r => at.map(r.get)).distinct
+    val pruned =
+      if (touched.length > maxLiterals) standing
+      else keys.indices.foldLeft(standing) { (df, i) =>
+        df.filter(col(keys(i)).isin(touched.map(_(i)).distinct.toIndexedSeq: _*))
+      }
+    (pruned, broadcast(local))
   }
 
   /** Codebook trainer for the persisted-index build/rebuild paths,
@@ -934,13 +1030,8 @@ object SimilaritySearch {
     // whole corpus (ADVICE r17 / VERDICT r18 next #4)
     val centroids = indexTrainCentroids(spark, emb, nCentroids, iters,
       idCol, vecCol, knownRowCount)
-    import spark.implicits._
     catalog.createSet(db, s"${name}_centroids",
-      withRouteThreshold(spark,
-        centroids.zipWithIndex
-          .map { case (v, b) => (b.toLong, v.toSeq) }.toSeq
-          .toDF("bucket", "centroid")),
-      policy = "none")
+      codebookFrame(spark, centroids), policy = "none")
     // routed above the threshold (semantic-scale codebooks) — the SAME
     // rule every later append/probe derives FROM THE PERSISTED MARKER,
     // so assignments never mix even across sessions with different
@@ -979,20 +1070,24 @@ object SimilaritySearch {
       idCol: String = "vec_id", vecCol: String = "embedding",
       rebuildIfDrifted: Boolean = false,
       driftFraction: Double = 0.5): Unit = {
-    val (centroids, threshold) =
-      loadCentroidsWithThreshold(spark, catalog, db, name)
-    // the standing schema is the witness for BOTH regimes: arrivals
-    // assign under the index's persisted routing threshold (never the
+    // the standing schemas are the witness for BOTH regimes: arrivals
+    // assign with the kernel the persisted codebook witnesses (never the
     // session conf), and grouped sets append into their group
     // directories under the modulus the build wrote — each parsed from
-    // column names, atomic with the data
-    val assign = indexAssignUdfFor(threshold, centroids)
+    // column names, atomic with the data. Both come from the catalog
+    // memo: no codebook collect, no schema inference.
+    val assign = loadIndexCodebook(spark, catalog, db, name).assignUdf
     val standing = catalog.scanSet(db, s"${name}_vectors")
     val partCol = cellGroupColOf(standing).map(_._1).getOrElse("bucket")
+    // the cell id takes the standing read type (a directory-partition
+    // column infers int), so the appended columns read back exactly as
+    // the memoized schema and the memo carries over the append
     catalog.appendToPartitionedSet(db, s"${name}_vectors",
       withCellGroup(standing,
         newEmb.select(col(idCol).as("neighbor_id"), col(vecCol).as("n_vec"),
-          l2Norm(col(vecCol)).as("n_nrm"), assign(col(vecCol)).as("bucket"))),
+          l2Norm(col(vecCol)).as("n_nrm"),
+          assign(col(vecCol)).cast(standing.schema("bucket").dataType)
+            .as("bucket"))),
       partCol)
     if (rebuildIfDrifted &&
         appendedDriftFraction(catalog, db, name) >= driftFraction)
@@ -1029,7 +1124,6 @@ object SimilaritySearch {
     val centroids = indexTrainCentroids(spark, vecs, nCentroids, iters,
       "neighbor_id", "n_vec",
       catalog.meta(db, s"${name}_vectors").map(_.rows).getOrElse(0L))
-    import spark.implicits._
     val assign = indexAssignUdf(spark, centroids)
     // Stage the re-partitioned corpus AND the new codebook before
     // touching live state — the whole-corpus rewrite (the expensive
@@ -1050,11 +1144,7 @@ object SimilaritySearch {
       partCol)
     catalog.markStaging(db, s"${name}_vectors_rebuild")
     catalog.createSet(db, s"${name}_centroids_rebuild",
-      withRouteThreshold(spark,
-        centroids.zipWithIndex
-          .map { case (v, b) => (b.toLong, v.toSeq) }.toSeq
-          .toDF("bucket", "centroid")),
-      policy = "none")
+      codebookFrame(spark, centroids), policy = "none")
     catalog.markStaging(db, s"${name}_centroids_rebuild")
     swapInStaged(catalog, db,
       Seq(s"${name}_vectors", s"${name}_centroids"))
@@ -1670,15 +1760,13 @@ object SimilaritySearch {
     val lut = pqLutUdf(codebooks)
     val codes = catalog.scanSet(db, s"${name}_codes")
     val bucketType = codes.schema("bucket").dataType
-    val probes = queries.select(col(idCol).as("query_id"),
-      explode(probe(col(vecCol))).as("bucket"), lut(col(vecCol)).as("lut"))
-      .withColumn("bucket", col("bucket").cast(bucketType))
-      .localCheckpoint(eager = true)
     // static cell pruning on the bucket-partitioned code table — the
     // probed cells as literals, deterministic at any query-frame shape
-    val short = adcShortlist(
-      pruneToTouchedCells(codes, probes).join(broadcast(probes),
-        Seq("bucket")), shortlist, k)
+    val (pruned, probes) = localProbe(codes,
+      queries.select(col(idCol).as("query_id"),
+        explode(probe(col(vecCol))).as("bucket"), lut(col(vecCol)).as("lut"))
+        .withColumn("bucket", col("bucket").cast(bucketType)))
+    val short = adcShortlist(pruned.join(probes, Seq("bucket")), shortlist, k)
     rerankExact(short, catalog.scanSet(db, s"${name}_vectors"), queries, k, idCol, vecCol)
   }
 
@@ -1741,11 +1829,11 @@ object SimilaritySearch {
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map(_._2.map(_._2)).toArray
 
-  /** Bucket-ordered coarse-centroid collect — the model load shared by
-    * the append and search paths (the build-time routing threshold is
-    * NOT read here: the search probe is the flat [[probeUdf]] over an
-    * ANN-scale codebook; persisted-threshold derivation belongs to the
-    * assignment paths via [[loadCentroidsWithThreshold]]).
+  /** Bucket-ordered coarse-centroid collect of an IVF-PQ index — the
+    * model load shared by its append and search paths (IVF-PQ assigns
+    * with the flat [[nearestUdf]] at any k, so no routing witness is
+    * read here; the IVF and semantic indexes load through
+    * [[loadIndexCodebook]]).
     */
   private def loadIvfCentroids(
       catalog: graft.storage.SetCatalog, db: String,
@@ -1844,7 +1932,7 @@ object SimilaritySearch {
       nprobe: Int = 4,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
     searchIvfWithModels(catalog, db, name, queries, k, nprobe, idCol, vecCol,
-      loadIvfCentroids(catalog, db, name))
+      loadIndexCodebook(spark, catalog, db, name).centroids)
 
   /** [[searchIvfIndex]] after its codebook load — the per-batch body the
     * streaming probe reuses with a generation-cached codebook (the
@@ -1860,21 +1948,17 @@ object SimilaritySearch {
     // partition-column type follows Hive directory inference (int), not
     // the written long — cast the probe side to whatever came back
     val bucketType = vectors.schema("bucket").dataType
-    // materialized once: the probe side is |queries|·nprobe rows and is
-    // read twice (touched-cell collect + broadcast join)
-    val probes = withCellGroup(vectors,
+    // STATIC cell pruning (see localProbe): deterministic listing-level
+    // pruning for any query-frame shape — DPP declines on
+    // local/RDD-backed query frames and is redundant after this
+    val (pruned, probes) = localProbe(vectors, withCellGroup(vectors,
       queries.select(col(idCol).as("query_id"),
         col(vecCol).as("q_vec"), l2Norm(col(vecCol)).as("q_nrm"),
         explode(probe(col(vecCol))).as("bucket"))
-        .withColumn("bucket", col("bucket").cast(bucketType)))
-      .localCheckpoint(eager = true)
+        .withColumn("bucket", col("bucket").cast(bucketType))))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id"))
-    // STATIC cell pruning (see pruneToTouchedCells): deterministic
-    // listing-level pruning for any query-frame shape — DPP declines on
-    // local/RDD-backed query frames and is redundant after this
-    pruneToTouchedCells(vectors, probes).join(broadcast(probes),
-        cellJoinKeys(vectors))
+    pruned.join(probes, cellJoinKeys(vectors))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cos",
         round(dot(col("q_vec"), col("n_vec")) / (col("q_nrm") * col("n_nrm")), 6))
@@ -1958,29 +2042,20 @@ object SimilaritySearch {
       ivfPqSearchProbeFn(catalog, db, name, k, nprobe, shortlist,
         idCol, vecCol), sink)
 
-  /** Per-batch search closure of [[streamSearchIvfIndex]] + collect
-    * counter. */
+  /** Per-batch search closure of [[streamSearchIvfIndex]] + its
+    * codebook-collect counter: the codebook comes from the catalog memo
+    * ([[loadIndexCodebook]]), so the counter is the memo's decode count
+    * for the index's centroids set.
+    */
   private[graft] def ivfSearchProbeFnCounted(
       catalog: graft.storage.SetCatalog, db: String, name: String,
       k: Int, nprobe: Int = 4,
       idCol: String = "vec_id", vecCol: String = "embedding")
       : (DataFrame => DataFrame, () => Int) = {
-    var cached: Option[(Long, Array[Array[Double]])] = None
-    var loadCount = 0
-    val fn = (batch: DataFrame) => {
-      val sc = catalog.metaStamp(db, s"${name}_centroids")
-      val centroids = cached match {
-        case Some((c0, ce)) if c0 == sc && sc != 0L => ce
-        case _ =>
-          val ce = loadIvfCentroids(catalog, db, name)
-          cached = Some((sc, ce))
-          loadCount += 1
-          ce
-      }
+    val fn = (batch: DataFrame) =>
       searchIvfWithModels(catalog, db, name, batch, k, nprobe, idCol,
-        vecCol, centroids)
-    }
-    (fn, () => loadCount)
+        vecCol, loadIndexCodebook(batch.sparkSession, catalog, db, name).centroids)
+    (fn, () => catalog.memoDecodes(db, s"${name}_centroids"))
   }
 
   /** Streaming search of a persisted IVF index — [[searchIvfIndex]] per

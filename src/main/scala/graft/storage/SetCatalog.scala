@@ -2,6 +2,12 @@ package graft.storage
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.CommandResult
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.DataSource
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
 
 /** Named-set storage — the reference's (databaseName, setName) catalog of
   * paged sets (reference: src/builtInPDBObjects/headers/DistributedStorageAddSet.h,
@@ -150,6 +156,59 @@ object SetCatalog {
     }
   }
 
+  /** Append `batch` as parquet under `path` (partitioned by
+    * `partitionColumn` when given) and return the (rows, files) the
+    * write job produced, read off the write command's own metrics. The
+    * command is planned as `DataFrameWriter.save` plans it; running it
+    * through a QueryExecution kept here is what makes its executed
+    * plan, and so its metrics, reachable.
+    */
+  private[storage] def appendCounted(spark: SparkSession, batch: DataFrame,
+      path: String, partitionColumn: Option[String]): (Long, Long) = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val write = DataSource(session, "parquet",
+      partitionColumns = partitionColumn.toSeq, options = Map("path" -> path))
+      .planForWriting(SaveMode.Append, batch.queryExecution.analyzed)
+    val qe = session.sessionState.executePlan(write)
+    qe.assertCommandExecuted()
+    val metrics = qe.commandExecuted match {
+      case r: CommandResult => WritePlan.metrics(r.commandPhysicalPlan)
+      case _ => None
+    }
+    metrics.map(m => (m("numOutputRows").value, m("numFiles").value))
+      .getOrElse(throw new IllegalStateException(
+        s"append to $path ran no file-writing command"))
+  }
+
+  private final case class Memo(
+      generation: Long, schema: Option[StructType], values: Map[String, Any])
+
+  private object WritePlan extends AdaptiveSparkPlanHelper {
+    def metrics(plan: org.apache.spark.sql.execution.SparkPlan) =
+      collectFirst(plan) { case w: DataWritingCommandExec => w.cmd.metrics }
+  }
+
+  /** True when files written from `appended` read back under `memo`
+    * exactly as the set's existing files do, so the memoized read
+    * schema stays the inferred one: the data columns must match in
+    * order, name and type (nullability aside — file reads are always
+    * nullable), and a directory-partition column must carry the
+    * memoized type itself, restricted to the types whose inference a
+    * new value cannot widen (an int written as `bucket=7` still infers
+    * int; a long or string column stays long or string).
+    */
+  private[storage] def readsAs(appended: StructType, memo: StructType,
+      partitionColumn: Option[String]): Boolean = {
+    def data(s: StructType) =
+      StructType(s.fields.filterNot(f => partitionColumn.contains(f.name)))
+    DataTypeUtils.equalsIgnoreNullability(data(appended), data(memo)) &&
+      partitionColumn.forall { c =>
+        val t = memo.find(_.name == c).map(_.dataType)
+        t.exists(Seq(IntegerType, LongType, StringType).contains) &&
+          appended.find(_.name == c).map(_.dataType) == t
+      }
+  }
+
   /** FairPolicy allocation: round-robin write slots per node proportional
     * to capacity weight, every node getting at least one (reference:
     * src/dispatcher/headers/FairPolicy.h — load batches placed by free
@@ -176,11 +235,73 @@ object SetCatalog {
   */
 final class SetCatalog(spark: SparkSession, root: String,
     recoverDbsOnOpen: Seq[String] = Nil) {
-  Files.createDirectories(Paths.get(root))
-  recoverDbsOnOpen.foreach(recoverAll(_))
 
   private def dir(db: String, set: String) = s"$root/$db.$set"
   private def metaPath(db: String, set: String) = s"${dir(db, set)}.meta"
+
+  /** What the catalog already knows about ONE generation of a set: its
+    * read schema (so [[scanSet]] skips the parquet footer-inference
+    * job) and any decoded small-set values callers asked for through
+    * [[memoized]] (a standing index's codebook). Keyed by set, one
+    * entry per set: a new sidecar generation ([[metaStamp]]) misses,
+    * and the next store replaces the old entry. Every catalog write
+    * drops the entry BEFORE touching the set's files, so a reader
+    * never applies one generation's schema to another generation's
+    * files; the catalog's own appends then carry the schema (never the
+    * decoded values) forward to the generation they wrote, and only
+    * when the appended columns equal the memoized ones.
+    */
+  private val memo =
+    scala.collection.mutable.HashMap[(String, String), SetCatalog.Memo]()
+  private val decodes = scala.collection.mutable.HashMap[(String, String), Int]()
+
+  Files.createDirectories(Paths.get(root))
+  recoverDbsOnOpen.foreach(recoverAll(_))
+
+  private def memoAt(db: String, set: String, gen: Long): Option[SetCatalog.Memo] =
+    memo.synchronized(memo.get((db, set)).filter(_.generation == gen))
+
+  /** Merge into the entry for `gen` — stored only while the sidecar
+    * still reads `gen` after the caller's read (a write that landed
+    * meanwhile makes the value unattributable, so it is not kept).
+    */
+  private def remember(db: String, set: String, gen: Long,
+      schema: Option[StructType], values: Map[String, Any]): Unit =
+    if (gen != 0L && metaStamp(db, set) == gen) memo.synchronized {
+      val old = memo.get((db, set)).filter(_.generation == gen)
+      memo((db, set)) = SetCatalog.Memo(gen, schema.orElse(old.flatMap(_.schema)),
+        old.map(_.values).getOrElse(Map.empty) ++ values)
+    }
+
+  private def forget(db: String, set: String): Unit =
+    memo.synchronized(memo.remove((db, set)))
+
+  /** `decode` run at most once per sidecar generation of `db.set`: the
+    * memo hands every later caller of the same generation the same
+    * value. `key` names the decoding (one set may be decoded more than
+    * one way).
+    */
+  def memoized[T](db: String, set: String, key: String)(decode: => T): T = {
+    val gen = metaStamp(db, set)
+    memoAt(db, set, gen).flatMap(_.values.get(key)) match {
+      case Some(v) => v.asInstanceOf[T]
+      case None =>
+        val v = decode
+        memo.synchronized(decodes((db, set)) = decodes.getOrElse((db, set), 0) + 1)
+        remember(db, set, gen, None, Map(key -> v))
+        v
+    }
+  }
+
+  /** How many times [[memoized]] decoded `db.set` (every generation). */
+  def memoDecodes(db: String, set: String): Int =
+    memo.synchronized(decodes.getOrElse((db, set), 0))
+
+  /** The written set's read schema, seeded into the memo for the
+    * generation a create just wrote (its row count read inferred it).
+    */
+  private def seedSchema(db: String, set: String, written: DataFrame): Unit =
+    remember(db, set, metaStamp(db, set), Some(written.schema), Map.empty)
 
   private[storage] def writeMeta(db: String, set: String, col: Option[String],
       n: Int, rows: Long, policy: String, shares: Seq[Int] = Nil,
@@ -201,10 +322,10 @@ final class SetCatalog(spark: SparkSession, root: String,
   }
 
   /** Count a set directory's data files — used by the CREATE paths to
-    * seed the sidecar's file count (appends advance it incrementally by
-    * the batch's own task count, never by re-listing; see
-    * [[appendToSet]]). One listing per create is the same bill the
-    * create's own row-count read just paid.
+    * seed the sidecar's file count (appends advance it by the files
+    * their write job reports, never by re-listing; see [[appendBatch]]).
+    * One listing per create is the same bill the create's own row-count
+    * read just paid.
     */
   private def countDataFiles(db: String, set: String): Long = {
     import scala.jdk.CollectionConverters._
@@ -238,15 +359,30 @@ final class SetCatalog(spark: SparkSession, root: String,
       case ("fair", _)       => df.repartition(shares.sum)
       case _ => df
     }
+    forget(db, set)
     out.write.mode(SaveMode.Overwrite).parquet(dir(db, set))
-    val rows = spark.read.parquet(dir(db, set)).count()
+    val written = spark.read.parquet(dir(db, set))
     writeMeta(db, set, partitionColumn,
-      if (policy == "fair") shares.sum else n, rows, policy, shares,
-      countDataFiles(db, set))
+      if (policy == "fair") shares.sum else n, written.count(), policy,
+      shares, countDataFiles(db, set))
+    seedSchema(db, set, written)
   }
 
-  def scanSet(db: String, set: String): DataFrame =
-    spark.read.parquet(dir(db, set))
+  /** The set's current files, read under the memoized schema of its
+    * sidecar generation when the catalog has one (no inference job),
+    * else with plain parquet inference, whose result is then memoized.
+    * Sidecar-less directories are never memoized.
+    */
+  def scanSet(db: String, set: String): DataFrame = {
+    val gen = metaStamp(db, set)
+    memoAt(db, set, gen).flatMap(_.schema) match {
+      case Some(s) => spark.read.schema(s).parquet(dir(db, set))
+      case None =>
+        val df = spark.read.parquet(dir(db, set))
+        remember(db, set, gen, Some(df.schema), Map.empty)
+        df
+    }
+  }
 
   /** [[scanSet]] with parquet schema merging — for sets whose schema
     * WIDENED across appends (a set created before a column existed and
@@ -263,10 +399,10 @@ final class SetCatalog(spark: SparkSession, root: String,
     * the streaming-sink form of [[createSet]] (a foreachBatch writer calls
     * this once per micro-batch; the reference's dispatcher likewise adds
     * pages to an existing set rather than rewriting it —
-    * src/builtInPDBObjects/headers/DistributedStorageAddSet.h). The
-    * sidecar row count is advanced by the BATCH's count, not a full
-    * rescan of the set — an append must stay O(batch) however large the
-    * accumulated log grows.
+    * src/builtInPDBObjects/headers/DistributedStorageAddSet.h). One write
+    * job; the sidecar's rows and files advance by what that job wrote
+    * ([[appendBatch]]), never by a rescan of the set — an append must
+    * stay O(batch) however large the accumulated log grows.
     */
   def appendToSet(db: String, set: String, df: DataFrame): Unit = {
     val m = meta(db, set).getOrElse(throw new IllegalArgumentException(
@@ -274,21 +410,30 @@ final class SetCatalog(spark: SparkSession, root: String,
     require(m.policy != "bucket",
       s"appendToSet: $db.$set is bucketed — appending unbucketed files " +
         "would break the bucket contract; rewrite via createBucketedSet")
-    val batch = df.persist()
-    val n = batch.count()
-    batch.write.mode(SaveMode.Append).parquet(dir(db, set))
-    // file-count advance stays O(batch): a plain parquet append writes
-    // one file per non-empty batch partition (no shuffle is inserted),
-    // counted off the cached batch — never a directory listing. A
-    // legacy sidecar (files = 0, unknown) is re-seeded by one listing.
-    val newFiles = batch.rdd
-      .mapPartitions(it => Iterator.single(if (it.hasNext) 1L else 0L))
-      .fold(0L)(_ + _)
-    batch.unpersist(blocking = false)
+    appendBatch(db, set, m, df, None)
+  }
+
+  /** The append both append entry points share: ONE parquet write job,
+    * whose command metrics (`numOutputRows`, `numFiles`) advance the
+    * sidecar — exact under any file splitting, e.g.
+    * `spark.sql.files.maxRecordsPerFile`, where counting one file per
+    * (task, partition value) undercounted. A legacy sidecar (files = 0,
+    * unknown) is re-seeded by one listing. The schema memo is carried
+    * forward to the new generation only when the batch's columns read
+    * back exactly as the memoized ones ([[readsAs]]).
+    */
+  private def appendBatch(db: String, set: String, m: SetMeta,
+      batch: DataFrame, partitionColumn: Option[String]): Unit = {
+    val prior = memoAt(db, set, metaStamp(db, set)).flatMap(_.schema)
+    forget(db, set)
+    val (rows, newFiles) =
+      SetCatalog.appendCounted(spark, batch, dir(db, set), partitionColumn)
     val files = if (m.files > 0) m.files + newFiles
       else countDataFiles(db, set)
-    writeMeta(db, set, m.partitionColumn, m.numPartitions, m.rows + n,
+    writeMeta(db, set, m.partitionColumn, m.numPartitions, m.rows + rows,
       m.policy, m.nodeShares, files, m.staging)
+    prior.filter(SetCatalog.readsAs(batch.schema, _, partitionColumn))
+      .foreach(s => remember(db, set, metaStamp(db, set), Some(s), Map.empty))
     maybeAutoCompact(db, set, files)
   }
 
@@ -308,12 +453,11 @@ final class SetCatalog(spark: SparkSession, root: String,
       .get("spark.graft.catalog.autoCompact.files", "0").toInt
     if (trigger > 0 && files > trigger) {
       // Re-seed from a real listing BEFORE paying the rewrite: the
-      // incremental advance assumes one output file per non-empty batch
-      // partition, which spark.sql.files.maxRecordsPerFile (several
-      // files per task) or a differently-planned cache re-execution can
-      // break. One listing at the trigger crossing is the bill the
-      // compaction itself is about to pay anyway; between crossings the
-      // counter stays listing-free.
+      // incremental count is exact for this catalog's own writes, but a
+      // sidecar can drift (a hand edit, a writer outside the catalog).
+      // One listing at the trigger crossing is the bill the compaction
+      // itself is about to pay anyway; between crossings the counter
+      // stays listing-free.
       val actual = countDataFiles(db, set)
       if (actual != files) meta(db, set).foreach(m =>
         writeMeta(db, set, m.partitionColumn, m.numPartitions, m.rows,
@@ -371,6 +515,7 @@ final class SetCatalog(spark: SparkSession, root: String,
       else if (Files.exists(tmp)) Files.move(tmp, src)
     }
     rmTree(tmp); rmTree(old)
+    forget(db, set)
     val df = spark.read.parquet(src.toString)
     val out = (m.policy, m.partitionColumn) match {
       case ("dirpart", Some(c)) =>
@@ -407,12 +552,14 @@ final class SetCatalog(spark: SparkSession, root: String,
     */
   def createPartitionedSet(db: String, set: String, df: DataFrame,
       partitionColumn: String): Unit = {
+    forget(db, set)
     df.write.mode(SaveMode.Overwrite)
       .partitionBy(partitionColumn)
       .parquet(dir(db, set))
-    val rows = spark.read.parquet(dir(db, set)).count()
-    writeMeta(db, set, Some(partitionColumn), 0, rows, "dirpart",
+    val written = spark.read.parquet(dir(db, set))
+    writeMeta(db, set, Some(partitionColumn), 0, written.count(), "dirpart",
       files = countDataFiles(db, set))
+    seedSchema(db, set, written)
   }
 
   /** Append rows to an existing directory-partitioned set: new files land
@@ -433,23 +580,13 @@ final class SetCatalog(spark: SparkSession, root: String,
     // measured 143 s for a 12.5k-row append into 1024 group directories
     // (~10k tiny files) vs ~1 file per touched directory clustered.
     // The shuffle is batch-sized, the thing appends are allowed to cost.
-    val batch = df.repartition(df(partitionColumn)).persist()
-    val n = batch.count()
-    batch.write.mode(SaveMode.Append)
-      .partitionBy(partitionColumn)
-      .parquet(dir(db, set))
-    // one file per distinct (task, partition value) — count it off the
-    // cached batch, O(batch)
-    val newFiles = batch
-      .select(org.apache.spark.sql.functions.spark_partition_id(),
-        batch(partitionColumn))
-      .distinct().count()
-    batch.unpersist(blocking = false)
-    val files = if (m.files > 0) m.files + newFiles
-      else countDataFiles(db, set)
-    writeMeta(db, set, m.partitionColumn, m.numPartitions, m.rows + n,
-      m.policy, m.nodeShares, files, m.staging)
-    maybeAutoCompact(db, set, files)
+    // The partition count is explicit: AQE coalesces a repartition(col)
+    // shuffle of a small batch into ONE task, which then writes every
+    // touched directory's file serially.
+    appendBatch(db, set, m,
+      df.repartition(spark.sessionState.conf.numShufflePartitions,
+        df(partitionColumn)),
+      Some(partitionColumn))
   }
 
   /** Bucketed set via the session catalog: `bucketBy` + `sortBy` on the
@@ -485,6 +622,7 @@ final class SetCatalog(spark: SparkSession, root: String,
     // does, so partition i carries exactly bucket i → one file each.
     val clustered =
       df.repartition(numBuckets, bucketColumns.map(df(_)): _*)
+    forget(db, set)
     clustered.write.mode(SaveMode.Overwrite)
       .bucketBy(numBuckets, bucketColumns.head, bucketColumns.tail: _*)
       .sortBy(bucketColumns.head, bucketColumns.tail: _*)
@@ -576,6 +714,7 @@ final class SetCatalog(spark: SparkSession, root: String,
         }
       } catch { case _: Exception => false }
     }
+    forget(db, set)
     SetCatalog.deleteTree(Paths.get(dir(db, set)))
     Files.deleteIfExists(Paths.get(metaPath(db, set)))
     if (ownsEntry)
@@ -598,6 +737,7 @@ final class SetCatalog(spark: SparkSession, root: String,
     * pattern), so a retry of the same rename self-heals into a no-op.
     */
   def renameSet(db: String, from: String, to: String): Unit = {
+    forget(db, from); forget(db, to)
     // Crash recovery BEFORE validation: data under `to` with no `to`
     // sidecar while `from`'s sidecar remains (and `from`'s data is
     // gone) is a rename that died between its two moves — finish it.

@@ -439,15 +439,19 @@ class AdvisorSpec extends GraftSpecBase {
   test("advised SemDeDup geometry matches the static sizing and remembers the largest corpus") {
     import graft.operators.{Dedup, SimilaritySearch}
     val adv = new PlacementAdvisor
-    // parity with the hand-picked rule at three regimes: fixture-scale
-    // flat (k ≤ 2048 → no routing), the routed SEMDEDUP_SCALE points,
-    // and the memory-bound cap where targetClusterSize itself grows
+    // parity with the hand-picked rule at four regimes: fixture-scale
+    // flat (k ≤ 2048 → no routing), the two-level routed point, the
+    // tree-routed points past treeRouteThreshold (routeCells 0: the
+    // operator's own routed kernel takes the tree, as on the static
+    // path), and the memory-bound cap where targetClusterSize grows
     for (n <- Seq(50000L, 1250000L, 5000000L, 30000000L)) {
       val g = adv.recommendSemGeometry(s"t$n", n)
       val k = Dedup.autoClusters(n)
       assert(g.clusters == k, s"advised k ${g.clusters} != static $k at n=$n")
       val cells =
-        if (k > Dedup.routeThreshold) SimilaritySearch.sqrtCells(k) else 0
+        if (k > Dedup.routeThreshold && k <= SimilaritySearch.treeRouteThreshold)
+          SimilaritySearch.sqrtCells(k)
+        else 0
       assert(g.routeCells == cells,
         s"advised cells ${g.routeCells} != static $cells at n=$n")
     }

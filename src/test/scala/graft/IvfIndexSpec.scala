@@ -324,7 +324,7 @@ class IvfIndexSpec extends GraftSpecBase {
         touched.toSeq.toDF("bucket")
           .select(col("bucket").cast(standing.schema("bucket").dataType)
             .as("bucket")))
-      val pruned = SimilaritySearch.pruneToTouchedCells(standing, probeSide)
+      val pruned = SimilaritySearch.localProbe(standing, probeSide)._1
         .select(col("bucket")).collect().map(_.getLong(0)).toSet
       assert(pruned == touched.toSet,
         s"pruned rows must cover exactly the touched cells ${touched.toSet}, " +

@@ -230,7 +230,7 @@ class PlanSpec extends GraftSpecBase {
     // The live-index contract re-plans the standing sets every
     // micro-batch; this pins that the re-resolved plan is the PRUNED
     // one — a probe of b cells reads ≤ b directories. The mechanism is
-    // STATIC literal PartitionFilters (pruneToTouchedCells), NOT dynamic
+    // STATIC literal PartitionFilters (SimilaritySearch.localProbe), NOT dynamic
     // partition pruning: DPP is heuristic and DECLINES on
     // LocalRelation/LogicalRDD batch plans (the exact shape foreachBatch
     // delivers — their default size estimate fails its benefit check),
