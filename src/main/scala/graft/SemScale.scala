@@ -21,11 +21,14 @@ import graft.operators.{Dedup, SimilaritySearch}
   *             tree above — [[SimilaritySearch.trainCentroidsTree]],
   *             VERDICT r19 next #2)
   *  - assign:  the FULL-CORPUS routed assignment
-  *             ([[SimilaritySearch.routedNearestUdf]]: two-level √k
+  *             ([[SimilaritySearch.Codebook.routed]]: two-level √k
   *             router up to k = 16384, the hierarchical assignment tree
-  *             past it — [[SimilaritySearch.treeNearestUdf]], ~4·k^0.25
-  *             distance evals per row, VERDICT r20 next #3) forced
-  *             through a groupBy count; the flat argmin is O(n·k·d)
+  *             past it, ~4·k^0.25 distance evals per row, VERDICT r20
+  *             next #3) forced through a groupBy count; the flat argmin
+  *             is O(n·k·d). The step reports the regime it measured,
+  *             read from that codebook: `kernel` and `cells`, the
+  *             router's root fan-out (non-empty coarse cells, or the
+  *             tree's top-level branches)
   *  - flat:    at the smallest step only, the flat assignment over the
   *             same centroids, for the measured speedup factor
   * plus sum(|cluster|²)/n — the within-cluster candidate-pair bound per
@@ -75,12 +78,12 @@ object SemScale {
     val rows = ns.map { n =>
       val emb = corpus(spark, n)
       val k = Dedup.autoClusters(n)
-      val cells = SimilaritySearch.sqrtCells(k)
       val g = adv.recommendSemGeometry(s"semscale_$n", n)
       // two-level cells in the two-level regime; 0 (the operator's own
       // kernel) when flat and past the tree threshold
       val advisedCells = if (k > Dedup.routeThreshold &&
-          k <= SimilaritySearch.treeRouteThreshold) cells else 0
+          k <= SimilaritySearch.treeRouteThreshold)
+        SimilaritySearch.sqrtCells(k) else 0
       val advisedMatch = g.clusters == k && g.routeCells == advisedCells
       require(advisedMatch,
         s"advised geometry (k=${g.clusters}, cells=${g.routeCells}) diverged " +
@@ -104,7 +107,12 @@ object SemScale {
       val (centroids, trainS) = timed {
         SimilaritySearch.trainCentroidsRouted(sample, k, iters = 3)
       }
-      val assign = SimilaritySearch.routedNearestUdf(centroids, 2)
+      val codebook = SimilaritySearch.Codebook.routed(centroids)
+      val regime = (codebook.kernel.toString, codebook.router match {
+        case SimilaritySearch.RouteBranch(centers, _) => centers.length
+        case _ => 1
+      })
+      val assign = codebook.assignUdf
       val (sizes, assignS) = timed {
         emb.select(assign(col("embedding")).as("c"))
           .groupBy(col("c")).agg(count(lit(1)).as("cnt"))
@@ -123,7 +131,7 @@ object SemScale {
       // where the flat regime is exactly what they exist to avoid)
       val flatS =
         if (n == ns.min && n.toDouble * k <= 1.0e11) {
-          val flat = SimilaritySearch.nearestUdf(centroids)
+          val flat = SimilaritySearch.Codebook.flat(centroids).assignUdf
           Some(timed {
             emb.select(flat(col("embedding")).as("c"))
               .groupBy(col("c")).agg(count(lit(1)))
@@ -177,13 +185,12 @@ object SemScale {
             (col("vec_id") + n).as("vec_id"), col("embedding")),
           "vec_id", "embedding")
       }
-      val standingC = cat.scanSet("ss", "idx_centroids")
-        .orderBy(col("bucket")).collect().map(_.getSeq[Double](1).toArray)
+      val standing = SimilaritySearch.loadIndexCodebook(spark, cat, "ss", "idx")
       val (probed, probeS) = timed {
         Dedup.semanticBatchPairs(
           corpus(spark, 1000L).select(
             (col("vec_id") + 2 * n).as("vec_id"), col("embedding")),
-          standingC, cat.scanSet("ss", "idx_vectors"),
+          standing, cat.scanSet("ss", "idx_vectors"),
           "vec_id", "embedding", threshold = 0.999).count()
       }
       // every probe row IS a corpus vector — its identity pair is in its
@@ -192,19 +199,21 @@ object SemScale {
       require(probed >= 1000L,
         s"index probe found $probed pairs for 1000 identity arrivals at n=$n")
       graft.storage.SetCatalog.deleteTree(root)
-      System.err.println(f"[semscale] n=$n k=$k cells=$cells " +
+      System.err.println(f"[semscale] n=$n k=$k kernel=${regime._1} " +
+        f"cells=${regime._2} " +
         f"sample=$sampleS%.1f train=$trainS%.1f assign=$assignS%.1f " +
         f"flat=${flatS.getOrElse(Double.NaN)}%.1f ssOverN=$pairBound%.1f " +
         f"idx_build=$buildS%.1f idx_dirs=$nDirs idx_append=$appendS%.1f " +
         f"idx_probe=$probeS%.1f")
-      (n, k, cells, usedCells, sampleS, trainS, assignS, flatS, pairBound,
+      (n, k, regime, usedCells, sampleS, trainS, assignS, flatS, pairBound,
         buildS, nDirs, appendS, probeS, buildAttempts)
     }
 
     def r2(d: Double) = "%.2f".formatLocal(java.util.Locale.ROOT, d)
     val steps = rows.map {
-      case (n, k, cells, used, sa, tr, as, fl, pb, ib, nd, ia, ip, ba) =>
-        s"""{"n":$n,"k":$k,"cells":$cells,"cells_used":$used,""" +
+      case (n, k, (kernel, cells), used, sa, tr, as, fl, pb, ib, nd, ia, ip, ba) =>
+        s"""{"n":$n,"k":$k,"kernel":"$kernel","cells":$cells,""" +
+          s""""cells_used":$used,""" +
           s""""advised_match":true,""" +
           s""""sample_s":${r2(sa)},"train_s":${r2(tr)},"assign_s":${r2(as)},""" +
           s""""flat_assign_s":${fl.map(r2).getOrElse("null")},""" +

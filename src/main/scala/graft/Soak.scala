@@ -1040,14 +1040,12 @@ object Soak {
             cat, "soak", "semr", replica(i), "vec_id", "embedding")
         }
         val idxSec = (System.nanoTime() - t0) / 1e9
-        def probe(): Set[(Long, Long)] = {
-          val centroids = cat.scanSet("soak", "semr_centroids")
-            .orderBy(col("bucket")).collect()
-            .map(_.getSeq[Double](1).toArray)
-          pairSet(graft.operators.Dedup.semanticBatchPairs(
-            queries, centroids, cat.scanSet("soak", "semr_vectors"),
+        def probe(): Set[(Long, Long)] =
+          pairSet(graft.operators.Dedup.semanticBatchPairs(queries,
+            graft.operators.SimilaritySearch
+              .loadIndexCodebook(spark, cat, "soak", "semr"),
+            cat.scanSet("soak", "semr_vectors"),
             "vec_id", "embedding", threshold = 0.4))
-        }
         t0 = System.nanoTime()
         val gotApp = probe()
         val probeSec = (System.nanoTime() - t0) / 1e9
@@ -1077,11 +1075,10 @@ object Soak {
           val cat2 = new graft.storage.SetCatalog(spark, root2.toString)
           graft.operators.Dedup.persistSemanticIndex(
             cat2, "soak", "semr", full, "vec_id", "embedding")
-          val centroids2 = cat2.scanSet("soak", "semr_centroids")
-            .orderBy(col("bucket")).collect()
-            .map(_.getSeq[Double](1).toArray)
           val gotScratch = pairSet(graft.operators.Dedup.semanticBatchPairs(
-            queries, centroids2, cat2.scanSet("soak", "semr_vectors"),
+            queries, graft.operators.SimilaritySearch
+              .loadIndexCodebook(spark, cat2, "soak", "semr"),
+            cat2.scanSet("soak", "semr_vectors"),
             "vec_id", "embedding", threshold = 0.4))
           require(gotReb == gotScratch,
             s"rebuilt probe pairs diverge from a from-scratch build's " +
@@ -1277,9 +1274,8 @@ object Soak {
           def med(xs: Seq[Double]) = xs.sorted.apply(xs.size / 2)
           val pruned = (0 until nBatches).map { i =>
             val t = System.nanoTime()
-            graft.operators.Dedup.semanticBatchPairs(batch(i), cb.centroids,
-              vectors, "vec_id", "embedding", 0.999,
-              kernel = Some(cb.kernel)).count()
+            graft.operators.Dedup.semanticBatchPairs(batch(i), cb,
+              vectors, "vec_id", "embedding", 0.999).count()
             (System.nanoTime() - t) / 1e9
           }
           def arrivals(i: Int) =

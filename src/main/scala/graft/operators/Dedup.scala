@@ -1766,7 +1766,7 @@ object Dedup {
     * flat O(n·k·d) argmin: [[semanticPairs]] routes every row through a
     * ~√k coarse quantizer trained over the k centroids themselves and
     * argmins only within the routed cell
-    * ([[SimilaritySearch.twoLevelNearestUdf]] — the ivfPqTopK shape
+    * ([[SimilaritySearch.Codebook.twoLevel]] — the ivfPqTopK shape
     * applied to codebook assignment), O(n·√k·d); the driver trainer
     * takes the same routed step ([[SimilaritySearch.trainCentroidsRouted]])
     * and the training sample scales to 2k rows so seeds exist for every
@@ -1821,17 +1821,16 @@ object Dedup {
     *
     * Assignment regime: k ≤ [[routeThreshold]] runs the flat argmin
     * (bit-identical to every oracle); larger codebooks route through a
-    * √k coarse quantizer ([[SimilaritySearch.twoLevelNearestUdf]]) so
+    * √k coarse quantizer ([[SimilaritySearch.Codebook.routed]]) so
     * the corpus pass is O(n·√k·d) — see [[autoClusters]]. `routeCells`
     * > 0 FORCES two-level assignment with that many coarse cells at any
     * k (the dd_semantic_route oracle exercises the routed path at
-    * oracle-reachable scale); `routeIters` is the coarse trainer's
-    * Lloyd iteration count.
+    * oracle-reachable scale).
     */
   def semanticPairs(emb: DataFrame, idCol: String, vecCol: String,
       nClusters: Int = 0, iters: Int = 3,
       threshold: Double = 0.4, targetClusterSize: Int = 125,
-      routeCells: Int = 0, routeIters: Int = 2): DataFrame = {
+      routeCells: Int = 0): DataFrame = {
     val (corpus, k, nRows) =
       if (nClusters > 0) (emb, nClusters, 0L)
       else {
@@ -1848,15 +1847,12 @@ object Dedup {
       corpus, idCol, vecCol, math.max(10000, 2 * k), nRows)
     val centroids = SimilaritySearch.trainCentroidsRouted(
       sample, k, iters, routeThreshold)
-    val assign =
+    val codebook =
       if (routeCells > 0)
-        SimilaritySearch.twoLevelNearestUdf(centroids, routeCells, routeIters)
-      else if (k > routeThreshold)
-        // √k two-level router up to treeRouteThreshold, the assignment
-        // tree past it (SEMDEDUP_SCALE_r20: the two-level corpus pass
-        // was the lifecycle's remaining super-linear stage)
-        SimilaritySearch.routedNearestUdf(centroids, routeIters)
-      else SimilaritySearch.nearestUdf(centroids)
+        SimilaritySearch.Codebook.twoLevel(centroids, routeCells)
+      else if (k > routeThreshold) SimilaritySearch.Codebook.routed(centroids)
+      else SimilaritySearch.Codebook.flat(centroids)
+    val assign = codebook.assignUdf
     val withC = corpus
       .select(col(idCol).as("id"), col(vecCol).as("v"))
       .transform(Parallelism.ensureWidth)
@@ -1895,14 +1891,13 @@ object Dedup {
   def semanticPairsAdvised(
       emb: DataFrame, idCol: String, vecCol: String,
       advisor: graft.advisor.PlacementAdvisor, table: String,
-      iters: Int = 3, threshold: Double = 0.4,
-      routeIters: Int = 2): DataFrame = {
+      iters: Int = 3, threshold: Double = 0.4): DataFrame = {
     val mat = emb.localCheckpoint(true)
     val g = advisor.recommendSemGeometry(table, mat.count())
     semanticPairs(mat, idCol, vecCol,
       nClusters = g.clusters, iters = iters, threshold = threshold,
       targetClusterSize = g.targetClusterSize,
-      routeCells = g.routeCells, routeIters = routeIters)
+      routeCells = g.routeCells)
   }
 
   /** Brute-force cosine near-dup pairs — the EXACT regime of a
@@ -2050,18 +2045,13 @@ object Dedup {
     * the corpus grows.
     */
   private[graft] def semanticBatchPairs(
-      batch: DataFrame, centroids: Array[Array[Double]],
+      batch: DataFrame, codebook: SimilaritySearch.Codebook,
       vectors: DataFrame, idCol: String, vecCol: String,
-      threshold: Double,
-      kernel: Option[SimilaritySearch.RouteKernel] = None): DataFrame = {
-    // the index lifecycle's shared assignment rule (flat below the
-    // routing threshold, routed above): arrivals MUST assign exactly as
-    // the standing vectors were, or probes read the wrong cells —
-    // `kernel` is the one a persisted index's codebook witnesses when
-    // the caller probes a persisted index (session conf otherwise)
-    val assign = SimilaritySearch.kernelUdf(kernel.getOrElse(
-      SimilaritySearch.sessionKernel(batch.sparkSession, centroids.length)),
-      centroids)
+      threshold: Double): DataFrame = {
+    // arrivals MUST assign exactly as the standing vectors were, or
+    // probes read the wrong cells: `codebook` is the standing index's
+    // (SimilaritySearch.loadIndexCodebook — kernel from its witness)
+    val assign = codebook.assignUdf
     val bucketType = vectors.schema("bucket").dataType
     // STATIC cell pruning, not dynamic: a foreachBatch micro-batch is a
     // LocalRelation/LogicalRDD, which gives the DPP insertion heuristics
@@ -2156,13 +2146,10 @@ object Dedup {
       catalog: graft.storage.SetCatalog, db: String, name: String,
       idCol: String, vecCol: String, threshold: Double)
       : (DataFrame => DataFrame, () => Int) = {
-    val fn = (batch: DataFrame) => {
-      val cb = SimilaritySearch
-        .loadIndexCodebook(batch.sparkSession, catalog, db, name)
-      semanticBatchPairs(batch, cb.centroids,
-        catalog.scanSet(db, s"${name}_vectors"), idCol, vecCol, threshold,
-        kernel = Some(cb.kernel))
-    }
+    val fn = (batch: DataFrame) =>
+      semanticBatchPairs(batch,
+        SimilaritySearch.loadIndexCodebook(batch.sparkSession, catalog, db, name),
+        catalog.scanSet(db, s"${name}_vectors"), idCol, vecCol, threshold)
     (fn, () => catalog.memoDecodes(db, s"${name}_centroids"))
   }
 

@@ -195,23 +195,6 @@ object SimilaritySearch {
     centroids
   }
 
-  /** Single-pass nearest-centroid assignment as a scalar UDF: the codebook
-    * rides in the closure (tiny — task-serialized like a broadcast), one
-    * tight JVM loop per row. This replaces the earlier nested
-    * transform/aggregate/zip_with form, which Catalyst evaluates
-    * INTERPRETED and which computed the 16×64 distance array twice per row
-    * (once for array_min, once for array_position). Same IEEE op order as
-    * the HOF form (sequential diff² accumulation from 0.0, first-min
-    * tiebreak), so assignment parity with the SQL oracles is preserved.
-    */
-  def nearestUdf(centroids: Array[Array[Double]]): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((v: Seq[Float]) => {
-      val arr = new Array[Double](v.length)
-      var i = 0
-      while (i < arr.length) { arr(i) = v(i).toDouble; i += 1 }
-      nearest(centroids, arr).toLong
-    })
-
   /** The `nprobe` nearest centroid ids for a query vector, ascending by
     * (distance, bucket) — one distance pass, same ordering as the SQL
     * oracle's array_sort over (d, b) structs.
@@ -263,48 +246,11 @@ object SimilaritySearch {
   private[graft] def sqrtCells(k: Int): Int =
     math.max(1, math.ceil(math.sqrt(k.toDouble)).toInt)
 
-  /** Two-level nearest-centroid assignment: route each row to its
-    * nearest (non-empty) coarse cell, then argmin over ONLY that cell's
-    * fine centroids — O(√k·d) per row. Returns the GLOBAL fine-centroid
-    * index, so downstream grouping is identical in shape to
-    * [[nearestUdf]]. Approximate by design: the true nearest fine
-    * centroid can live in a neighboring coarse cell (the IVF recall
-    * trade); ties break to the smallest global index on both levels,
-    * exactly like the flat argmin, so the routed assignment is
-    * deterministic and oracle-reproducible.
-    */
-  def twoLevelNearestUdf(
-      centroids: Array[Array[Double]], nCoarse: Int,
-      routeIters: Int): org.apache.spark.sql.expressions.UserDefinedFunction = {
-    val (coarse, members) = coarseRouter(centroids, nCoarse, routeIters)
-    udf((v: Seq[Float]) => {
-      val arr = new Array[Double](v.length)
-      var i = 0
-      while (i < arr.length) { arr(i) = v(i).toDouble; i += 1 }
-      val mem = members(nearest(coarse, arr))
-      // argmin over the cell's members in ascending GLOBAL index order —
-      // first-strict-min, so ties resolve like the flat kernel's
-      var best = mem(0)
-      var bestD = Double.MaxValue
-      var m = 0
-      while (m < mem.length) {
-        val c = centroids(mem(m))
-        var d = 0.0
-        var j = 0
-        while (j < arr.length) { val diff = c(j) - arr(j); d += diff * diff; j += 1 }
-        if (d < bestD) { bestD = d; best = mem(m) }
-        m += 1
-      }
-      best.toLong
-    })
-  }
-
-  /** Node of the hierarchical assignment router ([[treeNearestUdf]]):
-    * either an internal b-way split (coarse centers + matching
-    * children) or a leaf holding fine-centroid GLOBAL indices,
-    * ascending. Plain serializable case classes — the tree rides in
-    * the UDF closure exactly like the flat codebook does, adding only
-    * ~k/(b−1) interior centers to it.
+  /** Node of a [[Codebook]]'s router: either an internal split (coarse
+    * centers + matching children) or a leaf holding fine-centroid
+    * GLOBAL indices, ascending. Plain serializable case classes — the
+    * router rides in the UDF closure with the centroids, adding only
+    * its interior centers (~k/(b−1) for a b-way tree).
     */
   private[graft] sealed trait RouteNode extends Serializable
   private[graft] final case class RouteBranch(
@@ -354,32 +300,39 @@ object SimilaritySearch {
         buildRouteTree(centroids, members(c).toArray, branch, iters)))
   }
 
-  /** Tree-routed nearest-centroid assignment for HUGE codebooks
-    * (k > [[treeRouteThreshold]] — the semantic-index regime, k ≈ n/125):
-    * descend the [[buildRouteTree]] hierarchy with a b-way argmin per
-    * level, then argmin over only the reached leaf's fine centroids —
-    * ~4·k^(1/4) distance evaluations per row. Same contract as
-    * [[twoLevelNearestUdf]]: returns the GLOBAL fine-centroid index,
-    * approximate by design (the IVF recall trade, one level deeper),
-    * deterministic under any schedule, ties to the smallest global
-    * index. SEMDEDUP_SCALE_r20 measured the two-level corpus assignment
-    * as the lifecycle's asymptotic ceiling (assign_exp 1.69 ≈ the
-    * O(n·√k·d) design shape); this is the tree the trainer already
-    * climbs ([[trainCentroidsTree]]) applied to the cluster side.
+  /** A codebook together with how rows route to it — the ONE
+    * nearest-centroid assignment kernel of every similarity operator
+    * (the reference's client-side KMeans assignment, e.g. reference:
+    * src/tests/source/TestKMeans.cc). [[nearest]] descends the router's
+    * branches with the trainers' argmin, then argmins over the reached
+    * leaf's fine centroids. The regimes are router shapes:
+    *  - flat: one leaf over `0 until k` — the exact argmin every SQL
+    *    oracle mirrors;
+    *  - two-level: one branch of ~√k coarse cells trained over the
+    *    centroids themselves ([[coarseRouter]]) — O(√k·d) per row;
+    *  - tree: the [[buildRouteTree]] hierarchy past
+    *    [[treeRouteThreshold]] — ~4·k^(1/4) distance evaluations per row
+    *    (SEMDEDUP_SCALE_r20 measured the two-level corpus pass as the
+    *    lifecycle's asymptotic ceiling, assign_exp 1.69).
+    * Routed shapes are approximate by design: the true nearest centroid
+    * can live in a neighboring cell (the IVF recall trade). Leaves hold
+    * ascending GLOBAL indices and the scan keeps the first strict
+    * minimum, so every shape breaks ties to the smallest index exactly
+    * like the flat argmin — deterministic and oracle-reproducible.
+    * `kernel` names the regime a persisted index witnesses; the router
+    * is built once with the value, so a memoized index codebook
+    * ([[loadIndexCodebook]]) carries it across appends and probes.
     */
-  def treeNearestUdf(
-      centroids: Array[Array[Double]],
-      routeIters: Int): org.apache.spark.sql.expressions.UserDefinedFunction = {
-    val tree = buildRouteTree(centroids, centroids.indices.toArray,
-      treeRouteBranch(centroids.length), routeIters)
-    udf((v: Seq[Float]) => {
-      val arr = new Array[Double](v.length)
-      var i = 0
-      while (i < arr.length) { arr(i) = v(i).toDouble; i += 1 }
-      var node = tree
+  final case class Codebook(
+      centroids: Array[Array[Double]], kernel: RouteKernel,
+      router: RouteNode) {
+
+    /** GLOBAL index of the centroid `v` routes to. */
+    def nearest(v: Array[Double]): Int = {
+      var node = router
       while (node.isInstanceOf[RouteBranch]) {
         val b = node.asInstanceOf[RouteBranch]
-        node = b.children(nearest(b.centers, arr))
+        node = b.children(SimilaritySearch.nearest(b.centers, v))
       }
       val mem = node.asInstanceOf[RouteLeaf].members
       var best = mem(0)
@@ -389,16 +342,83 @@ object SimilaritySearch {
         val c = centroids(mem(m))
         var d = 0.0
         var j = 0
-        while (j < arr.length) { val diff = c(j) - arr(j); d += diff * diff; j += 1 }
+        while (j < v.length) { val diff = c(j) - v(j); d += diff * diff; j += 1 }
         if (d < bestD) { bestD = d; best = mem(m) }
         m += 1
       }
-      best.toLong
-    })
+      best
+    }
+
+    /** [[nearest]] as a scalar UDF over a float-array column: the
+      * codebook rides in the closure (task-serialized like a
+      * broadcast), one tight JVM loop per row. Same IEEE op order as the
+      * SQL oracles' argmin (sequential diff² accumulation from 0.0,
+      * first-min tiebreak), so assignment parity is preserved.
+      */
+    def assignUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
+      udf((v: Seq[Float]) => {
+        val arr = new Array[Double](v.length)
+        var i = 0
+        while (i < arr.length) { arr(i) = v(i).toDouble; i += 1 }
+        nearest(arr).toLong
+      })
+  }
+
+  object Codebook {
+
+    /** Lloyd iterations of every router's coarse trainer. */
+    val routeIters = 2
+
+    /** The exact argmin: one leaf over every centroid. */
+    def flat(centroids: Array[Array[Double]]): Codebook =
+      Codebook(centroids, FlatKernel, RouteLeaf(centroids.indices.toArray))
+
+    /** Two-level routing through `nCoarse` coarse cells. */
+    def twoLevel(centroids: Array[Array[Double]], nCoarse: Int): Codebook = {
+      val (coarse, members) = coarseRouter(centroids, nCoarse, routeIters)
+      Codebook(centroids, TwoLevelKernel,
+        RouteBranch(coarse, members.map[RouteNode](RouteLeaf(_))))
+    }
+
+    /** The codebook assigning with `kernel`: two-level at ⌈√k⌉ coarse
+      * cells, the tree at ⌈k^(1/4)⌉-way branches.
+      */
+    def of(kernel: RouteKernel, centroids: Array[Array[Double]]): Codebook =
+      kernel match {
+        case FlatKernel => flat(centroids)
+        case TwoLevelKernel => twoLevel(centroids, sqrtCells(centroids.length))
+        case TreeKernel => Codebook(centroids, TreeKernel,
+          buildRouteTree(centroids, centroids.indices.toArray,
+            treeRouteBranch(centroids.length), routeIters))
+      }
+
+    /** The routed regime of the unpersisted operators: two-level up to
+      * [[treeRouteThreshold]], the tree past it — the boundary
+      * [[routeKernelFor]] applies to a persisted index.
+      */
+    def routed(centroids: Array[Array[Double]]): Codebook =
+      of(if (centroids.length > treeRouteThreshold) TreeKernel
+        else TwoLevelKernel, centroids)
+  }
+
+  private def nearest(centroids: Array[Array[Double]], v: Array[Double]): Int = {
+    var best = 0
+    var bestD = Double.MaxValue
+    var c = 0
+    while (c < centroids.length) {
+      var d = 0.0
+      var i = 0
+      while (i < v.length) {
+        val diff = centroids(c)(i) - v(i); d += diff * diff; i += 1
+      }
+      if (d < bestD) { bestD = d; best = c }
+      c += 1
+    }
+    best
   }
 
   /** Codebook size above which routed assignment dispatches from the
-    * two-level router to the [[treeNearestUdf]] hierarchy — the SAME
+    * two-level router to the [[buildRouteTree]] hierarchy — the SAME
     * boundary as the trainer's [[treeTrainThreshold]], so the two
     * lifecycle dimensions (train, assign) switch regimes together.
     * Every oracle-scale (k ≤ 2048, flat) and spec-pinned mid-size
@@ -406,38 +426,6 @@ object SimilaritySearch {
     * only the multi-million-row semantic builds cross it.
     */
   private[graft] def treeRouteThreshold: Int = treeTrainThreshold
-
-  /** The routed (above-threshold) assignment kernel of the unpersisted
-    * operators: two-level √k router up to [[treeRouteThreshold]], the
-    * assignment tree past it — the boundary [[routeKernelFor]] applies
-    * to a persisted index, whose codebook also witnesses its kernel.
-    */
-  private[graft] def routedNearestUdf(
-      centroids: Array[Array[Double]],
-      routeIters: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    if (centroids.length > treeRouteThreshold)
-      treeNearestUdf(centroids, routeIters)
-    else
-      twoLevelNearestUdf(centroids, sqrtCells(centroids.length), routeIters)
-
-  /** Routed-cell count for a PERSISTED index's per-row assignment: 0
-    * (flat argmin) at or below the routing threshold, ceil(√k) above it
-    * — [[graft.operators.Dedup.semanticPairs]]' rule applied to the
-    * index lifecycle, because a semantic index's codebook grows with
-    * the corpus (k ≈ n/125 — 200k cells at 25M vectors) and a flat
-    * O(n·k·d) assignment pass in build/append/probe would re-acquire
-    * exactly the quadratic term routing removed from the pair operator.
-    * The rule is a PURE FUNCTION of the persisted centroid count (plus
-    * the session threshold), so build, append, rebuild and probe all
-    * derive the identical assignment with nothing extra to persist or
-    * crash-protect. `spark.graft.ann.routeThreshold` exists so tests
-    * can exercise the routed lifecycle at fixture scale — it is an
-    * engine constant in production (an index must be probed under the
-    * threshold it was built with; the default never changes mid-run).
-    */
-  private[graft] def autoRouteCells(
-      spark: SparkSession, k: Int): Int =
-    routedCellsFor(sessionRouteThreshold(spark), k)
 
   /** The session-conf read of the routing threshold — the BUILD-time
     * authority. Probe/append stages of a PERSISTED index must NOT read
@@ -451,20 +439,20 @@ object SimilaritySearch {
     spark.conf.get("spark.graft.ann.routeThreshold",
       graft.operators.Dedup.routeThreshold.toString).toInt
 
-  /** The routing rule as a pure function of (threshold, k). */
+  /** The routing rule as a pure function of (threshold, k): routed
+    * cells 0 (flat argmin) at or below the threshold, ⌈√k⌉ above it —
+    * [[graft.operators.Dedup.semanticPairs]]' rule applied to the
+    * persisted-index lifecycle, whose codebook grows with the corpus
+    * (k ≈ n/125) so a flat O(n·k·d) pass in build/append/probe would
+    * re-acquire the quadratic term routing removed. A pure function of
+    * the persisted centroid count and threshold, so every lifecycle
+    * stage derives the identical assignment with nothing extra to
+    * crash-protect. `spark.graft.ann.routeThreshold` exists so tests can
+    * exercise the routed lifecycle at fixture scale — an engine constant
+    * in production.
+    */
   private[graft] def routedCellsFor(threshold: Int, k: Int): Int =
     if (k > threshold) sqrtCells(k) else 0
-
-  /** The per-row cell-assignment kernel every persisted-index lifecycle
-    * stage shares: flat argmin below the routing threshold (bit-
-    * identical to every oracle), routed above it. This overload reads
-    * the SESSION threshold — for the build/rebuild paths, which persist
-    * their decision; lifecycle stages of an existing index assign with
-    * the kernel its persisted codebook witnesses ([[loadIndexCodebook]]).
-    */
-  private[graft] def indexAssignUdf(
-      spark: SparkSession, centroids: Array[Array[Double]]): org.apache.spark.sql.expressions.UserDefinedFunction =
-    kernelUdf(sessionKernel(spark, centroids.length), centroids)
 
   /** A persisted index's cell-assignment kernel. */
   sealed trait RouteKernel
@@ -485,7 +473,7 @@ object SimilaritySearch {
 
   /** The marker column a routed codebook past [[treeRouteThreshold]]
     * carries next to its `route_threshold_N` column: the stored rows
-    * were assigned by the tree ([[treeNearestUdf]]).
+    * were assigned by the tree ([[Codebook.of]] with [[TreeKernel]]).
     */
   val TreeKernelMarker = "route_kernel_tree"
 
@@ -514,15 +502,6 @@ object SimilaritySearch {
   /** [[builtKernel]] under the session's routing threshold. */
   private[graft] def sessionKernel(spark: SparkSession, k: Int): RouteKernel =
     builtKernel(sessionRouteThreshold(spark), k)
-
-  private[graft] def kernelUdf(kernel: RouteKernel,
-      centroids: Array[Array[Double]]): org.apache.spark.sql.expressions.UserDefinedFunction =
-    kernel match {
-      case FlatKernel => nearestUdf(centroids)
-      case TwoLevelKernel =>
-        twoLevelNearestUdf(centroids, sqrtCells(centroids.length), routeIters = 2)
-      case TreeKernel => treeNearestUdf(centroids, routeIters = 2)
-    }
 
   /** A persisted codebook as build/rebuild store it, its assignment
     * regime self-describing in marker COLUMNS (the grouped layout's
@@ -555,29 +534,20 @@ object SimilaritySearch {
     centroidsDf.columns.find(_.startsWith("route_threshold_"))
       .map(_.stripPrefix("route_threshold_").toInt)
 
-  /** A standing index's codebook (bucket-ordered), the routing
-    * threshold governing ITS assignments (the persisted marker when
-    * present, else the session conf — legacy indexes) and the kernel
-    * the codebook witnesses.
-    */
-  final case class IndexCodebook(
-      centroids: Array[Array[Double]], routeThreshold: Int,
-      kernel: RouteKernel) {
-    def assignUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
-      kernelUdf(kernel, centroids)
-  }
-
   /** Load a standing index's codebook through the catalog memo: one
     * collect per codebook GENERATION (the centroids sidecar's), shared
     * by every append, probe and search of the index. Appends never
     * change the codebook, so they and a live probe stream reuse it; a
     * rebuild swaps a new generation in and the next caller collects
-    * once. The kernel is checked here, so an index that needs a
-    * rebuild fails before anything is assigned or written.
+    * once — and its router is built once with it. The kernel the
+    * codebook witnesses is checked here (the routing threshold is the
+    * persisted marker when present, else the session conf — legacy
+    * indexes), so an index that needs a rebuild fails before anything
+    * is assigned or written.
     */
   private[graft] def loadIndexCodebook(
       spark: SparkSession, catalog: graft.storage.SetCatalog,
-      db: String, name: String): IndexCodebook = {
+      db: String, name: String): Codebook = {
     val set = s"${name}_centroids"
     catalog.memoized(db, set, "index.codebook") {
       val df = catalog.scanSet(db, set)
@@ -588,17 +558,9 @@ object SimilaritySearch {
         .sortBy(_._1).map(_._2)
       val threshold =
         persistedRouteThreshold(df).getOrElse(sessionRouteThreshold(spark))
-      IndexCodebook(cents, threshold, routeKernelFor(threshold,
-        cents.length, df.columns.contains(TreeKernelMarker)))
+      Codebook.of(routeKernelFor(threshold, cents.length,
+        df.columns.contains(TreeKernelMarker)), cents)
     }
-  }
-
-  /** [[loadIndexCodebook]] as (centroids, routing threshold). */
-  private[graft] def loadCentroidsWithThreshold(
-      spark: SparkSession, catalog: graft.storage.SetCatalog,
-      db: String, name: String): (Array[Array[Double]], Int) = {
-    val cb = loadIndexCodebook(spark, catalog, db, name)
-    (cb.centroids, cb.routeThreshold)
   }
 
   /** Directory-fanout bound for the cell-partitioned vector set: one
@@ -771,22 +733,11 @@ object SimilaritySearch {
       return trainCentroidsTree(sample, nCentroids, iters)
     var centroids = sample.take(nCentroids).map(_.clone())
     for (_ <- 1 to iters) {
-      val (coarse, members) = coarseRouter(centroids, sqrtCells(nCentroids), 2)
+      val codebook = Codebook.twoLevel(centroids, sqrtCells(nCentroids))
       val sums = Array.fill(centroids.length)(new Array[Double](centroids(0).length))
       val counts = new Array[Long](centroids.length)
       sample.foreach { v =>
-        val mem = members(nearest(coarse, v))
-        var best = mem(0)
-        var bestD = Double.MaxValue
-        var m = 0
-        while (m < mem.length) {
-          val cen = centroids(mem(m))
-          var d = 0.0
-          var j = 0
-          while (j < v.length) { val diff = cen(j) - v(j); d += diff * diff; j += 1 }
-          if (d < bestD) { bestD = d; best = mem(m) }
-          m += 1
-        }
+        val best = codebook.nearest(v)
         counts(best) += 1
         var i = 0
         while (i < v.length) { sums(best)(i) += v(i); i += 1 }
@@ -961,24 +912,8 @@ object SimilaritySearch {
     ks
   }
 
-  private def nearest(centroids: Array[Array[Double]], v: Array[Double]): Int = {
-    var best = 0
-    var bestD = Double.MaxValue
-    var c = 0
-    while (c < centroids.length) {
-      var d = 0.0
-      var i = 0
-      while (i < v.length) {
-        val diff = centroids(c)(i) - v(i); d += diff * diff; i += 1
-      }
-      if (d < bestD) { bestD = d; best = c }
-      c += 1
-    }
-    best
-  }
-
   /** IVF top-k: assign every vector to its nearest centroid (single JVM
-    * pass, [[nearestUdf]]), then for each query probe the `nprobe` nearest
+    * pass, [[Codebook.flat]]), then for each query probe the `nprobe` nearest
     * buckets only. The per-bucket search is a hash join on bucket id
     * instead of a cross join.
     */
@@ -987,7 +922,7 @@ object SimilaritySearch {
       nCentroids: Int = 16, nprobe: Int = 4,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val centroids = trainCentroids(emb, nCentroids, iters = 3, idCol, vecCol)
-    val assign = nearestUdf(centroids)
+    val assign = Codebook.flat(centroids).assignUdf
     val probe = probeUdf(centroids, nprobe)
 
     val bucketed = emb.select(col(idCol).as("neighbor_id"),
@@ -1037,7 +972,8 @@ object SimilaritySearch {
     // so assignments never mix even across sessions with different
     // conf; grouped directories above the fanout bound, likewise
     // schema-witnessed
-    val assign = indexAssignUdf(spark, centroids)
+    val assign =
+      Codebook.of(sessionKernel(spark, centroids.length), centroids).assignUdf
     val (partCol, laidOut) = cellLayout(spark,
       emb.select(col(idCol).as("neighbor_id"), col(vecCol).as("n_vec"),
         l2Norm(col(vecCol)).as("n_nrm"), assign(col(vecCol)).as("bucket")),
@@ -1124,7 +1060,8 @@ object SimilaritySearch {
     val centroids = indexTrainCentroids(spark, vecs, nCentroids, iters,
       "neighbor_id", "n_vec",
       catalog.meta(db, s"${name}_vectors").map(_.rows).getOrElse(0L))
-    val assign = indexAssignUdf(spark, centroids)
+    val assign =
+      Codebook.of(sessionKernel(spark, centroids.length), centroids).assignUdf
     // Stage the re-partitioned corpus AND the new codebook before
     // touching live state — the whole-corpus rewrite (the expensive
     // part; the cells ARE the corpus layout here) runs while searches
@@ -1262,7 +1199,7 @@ object SimilaritySearch {
   }
 
   /** Encode a vector as its `m` sub-centroid ids — one tight JVM pass,
-    * same argmin kernel as [[nearestUdf]] per subspace. The code column
+    * same argmin as [[Codebook.flat]] per subspace. The code column
     * IS the compressed index.
     */
   def pqEncodeUdf(codebooks: Array[Array[Array[Double]]]): org.apache.spark.sql.expressions.UserDefinedFunction = {
@@ -1471,7 +1408,7 @@ object SimilaritySearch {
     val sample = sampleVectors(emb, idCol, vecCol, 10000)
     val centroids = trainCentroidsFromSample(sample, nCentroids, iters = 3)
     val codebooks = trainPqCodebooksFromSample(sample, m, kSub, iters)
-    val assign = nearestUdf(centroids)
+    val assign = Codebook.flat(centroids).assignUdf
     val probe = probeUdf(centroids, nprobe)
     val encode = pqEncodeUdf(codebooks)
     val lut = pqLutUdf(codebooks)
@@ -1514,7 +1451,7 @@ object SimilaritySearch {
         .toDF("bucket", "centroid"),
       policy = "none")
     persistCodebooks(spark, catalog, db, name, codebooks)
-    val assign = nearestUdf(centroids)
+    val assign = Codebook.flat(centroids).assignUdf
     val encode = pqEncodeUdf(codebooks)
     catalog.createPartitionedSet(db, s"${name}_codes",
       emb.select(col(idCol).as("neighbor_id"), encode(col(vecCol)).as("codes"),
@@ -1572,7 +1509,7 @@ object SimilaritySearch {
       idCol: String = "vec_id", vecCol: String = "embedding",
       rebuildIfDrifted: Boolean = false,
       driftFraction: Double = 0.5): Unit = {
-    val assign = nearestUdf(loadIvfCentroids(catalog, db, name))
+    val assign = Codebook.flat(loadIvfCentroids(catalog, db, name)).assignUdf
     val encode = pqEncodeUdf(loadPqCodebooks(catalog, db, name))
     catalog.appendToPartitionedSet(db, s"${name}_codes",
       newEmb.select(col(idCol).as("neighbor_id"), encode(col(vecCol)).as("codes"),
@@ -1682,7 +1619,7 @@ object SimilaritySearch {
     val centroids = trainCentroidsFromSample(sample, nCentroids, iters = 3)
     val codebooks = trainPqCodebooksFromSample(sample, m, kSub, iters)
     import spark.implicits._
-    val assign = nearestUdf(centroids)
+    val assign = Codebook.flat(centroids).assignUdf
     val encode = pqEncodeUdf(codebooks)
     // Stage the data rewrite AND both model writes before touching live
     // state (rebuildPqIndex's ordering rationale): the expensive
@@ -1831,7 +1768,7 @@ object SimilaritySearch {
 
   /** Bucket-ordered coarse-centroid collect of an IVF-PQ index — the
     * model load shared by its append and search paths (IVF-PQ assigns
-    * with the flat [[nearestUdf]] at any k, so no routing witness is
+    * with [[Codebook.flat]] at any k, so no routing witness is
     * read here; the IVF and semantic indexes load through
     * [[loadIndexCodebook]]).
     */

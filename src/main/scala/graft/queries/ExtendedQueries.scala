@@ -276,7 +276,8 @@ object ExtendedQueries {
       emb, nCentroids = 4, iters = 3)
     // single-pass JVM assignment (same op order as the SQL oracle) — the
     // interpreted HOF form computed the distance array twice per row
-    val assign = graft.operators.SimilaritySearch.nearestUdf(centroids)
+    val assign =
+      graft.operators.SimilaritySearch.Codebook.flat(centroids).assignUdf
     emb.select(assign(col("embedding")).as("cluster"))
       .groupBy(col("cluster")).agg(count(lit(1)).as("n"))
   }

@@ -512,7 +512,8 @@ object PipelineQueries {
 
   /** SemDeDup with the two-level ROUTED assignment forced on at
     * oracle-reachable scale: k = 8 fine centroids, 3 coarse cells, 2
-    * coarse Lloyd iterations ([[Dedup.semanticPairs]] `routeCells = 3`).
+    * coarse Lloyd iterations ([[Dedup.semanticPairs]] `routeCells = 3`;
+    * the iteration count is [[SimilaritySearch.Codebook.routeIters]]).
     * Past k = [[Dedup.routeThreshold]] (2048) this routing is what the
     * default path runs — it is the mechanism that removed the old
     * 10k-codebook cap's O(n·k·d) assignment term — but no DuckDB-sized
@@ -524,8 +525,7 @@ object PipelineQueries {
     */
   def ddSemanticRoute(spark: SparkSession, d: String): DataFrame =
     Dedup.semanticPairs(Tables.embeddings(spark, d), "vec_id", "embedding",
-      nClusters = 8, iters = 3, threshold = 0.4,
-      routeCells = 3, routeIters = 2)
+      nClusters = 8, iters = 3, threshold = 0.4, routeCells = 3)
 
   /** Oracle for [[ddSemanticRoute]]: [[ExtendedQueries.lloydCtes]] (the
     * fine trainer, k=8, unchanged) + a second unrolled-Lloyd chain over

@@ -66,7 +66,7 @@ class IvfIndexSpec extends GraftSpecBase {
     SimilaritySearch.buildIvfIndex(spark, cref, "idx", "emb", a)
     val centroids = cref.scanSet("idx", "emb_centroids")
       .orderBy(col("bucket")).collect().map(_.getSeq[Double](1).toArray)
-    val assign = SimilaritySearch.nearestUdf(centroids)
+    val assign = SimilaritySearch.Codebook.flat(centroids).assignUdf
     cref.createPartitionedSet("idx", "emb_vectors",
       emb.select(col("vec_id").as("neighbor_id"),
         col("embedding").as("n_vec"),
@@ -279,12 +279,11 @@ class IvfIndexSpec extends GraftSpecBase {
       SimilaritySearch.appendToIvfIndex(spark, c, "idx", "grp",
         emb.filter(col("vec_id") < 5)
           .select((col("vec_id") + 2000L).as("vec_id"), col("embedding")))
-      val centroids = c.scanSet("idx", "grp_centroids")
-        .orderBy(col("bucket")).collect().map(_.getSeq[Double](1).toArray)
       val pairs = graft.operators.Dedup.semanticBatchPairs(
         emb.filter(col("vec_id") < 5)
           .select((col("vec_id") + 1000L).as("vec_id"), col("embedding")),
-        centroids, c.scanSet("idx", "grp_vectors"),
+        SimilaritySearch.loadIndexCodebook(spark, c, "idx", "grp"),
+        c.scanSet("idx", "grp_vectors"),
         "vec_id", "embedding", threshold = 0.999)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert((0L until 5L).forall(i =>
@@ -347,8 +346,9 @@ class IvfIndexSpec extends GraftSpecBase {
     assert(SimilaritySearch
       .persistedRouteThreshold(c.scanSet("idx", "rt_centroids"))
       .contains(4))
-    val (cents, t) =
-      SimilaritySearch.loadCentroidsWithThreshold(spark, c, "idx", "rt")
+    val cents = SimilaritySearch.loadIndexCodebook(spark, c, "idx", "rt").centroids
+    val t = SimilaritySearch
+      .persistedRouteThreshold(c.scanSet("idx", "rt_centroids")).get
     assert(t == 4 && cents.length == 9)
     // persisted regime: ROUTED (9 > 4); session regime would be flat —
     // the silent-identity-loss fork ADVICE r15 named

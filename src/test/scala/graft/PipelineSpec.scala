@@ -878,7 +878,7 @@ class PipelineSpec extends GraftSpecBase {
     import spark.implicits._
     // a single cell holds every fine centroid, so the routed argmin IS
     // the flat argmin — exact for ANY data, which pins the routed
-    // kernel's distance/tiebreak parity with nearestUdf
+    // kernel's distance/tiebreak parity with the flat codebook
     val emb = (0 until 600).map { i =>
       (i.toLong, Seq(i.toFloat, 1.0f, 0.0f, 0.0f))
     }.toDF("vec_id", "embedding")
@@ -900,7 +900,7 @@ class PipelineSpec extends GraftSpecBase {
     }.toDF("vec_id", "embedding")
     def run() = graft.operators.Dedup.semanticPairs(
       emb, "vec_id", "embedding", nClusters = 8, threshold = 0.99,
-      routeCells = 3, routeIters = 2).collect()
+      routeCells = 3).collect()
     val a = run(); val b = run()
     assert(a.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet ==
       b.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet)
@@ -983,42 +983,66 @@ class PipelineSpec extends GraftSpecBase {
   test("assignment tree: disjoint leaf cover, flat parity on separated centroids") {
     // VERDICT r20 next #3: above treeRouteThreshold the routed
     // assignment kernel descends a hierarchical router (~4·k^¼ distance
-    // evals/row) instead of the two-level √k router. Contract pins:
-    // (a) the tree's leaves cover every fine-centroid index exactly
-    //     once (assignment is total and unambiguous);
-    // (b) on well-separated centroids the tree assignment equals the
+    // evals/row) instead of the two-level √k router. Contract pins, for
+    // the tree AND the two-level router (one Codebook, two shapes):
+    // (a) the leaves cover every fine-centroid index exactly once
+    //     (assignment is total and unambiguous);
+    // (b) on well-separated centroids the routed assignment equals the
     //     flat argmin row-for-row (routing is exact when cells are
     //     separated — the same parity pin the routed trainer carries);
-    // (c) the build is deterministic: two builds assign identically.
-    import graft.operators.SimilaritySearch.{buildRouteTree,
-      treeRouteBranch, treeNearestUdf, nearestUdf, RouteNode, RouteBranch,
-      RouteLeaf}
+    // (c) the build is deterministic: two builds assign identically;
+    // (d) ties break to the smallest global index in every shape;
+    // (e) the two-level router is exactly coarseRouter's cells at
+    //     Codebook.routeIters = 2 (the dd_semantic_route oracle mirrors
+    //     two coarse Lloyd iterations).
+    import graft.operators.SimilaritySearch.{buildRouteTree, coarseRouter,
+      sqrtCells, treeRouteBranch, Codebook, TreeKernel, RouteNode,
+      RouteBranch, RouteLeaf}
     import spark.implicits._
     val cents = Array.tabulate(64)(i =>
       Array((i % 8) * 1000.0, (i / 8) * 1000.0))
     val tree = buildRouteTree(cents, cents.indices.toArray,
       treeRouteBranch(cents.length), 2)
+    val twoLevel = Codebook.twoLevel(cents, sqrtCells(cents.length))
     def leaves(n: RouteNode): Seq[Int] = n match {
       case RouteLeaf(m) => m.toSeq
       case RouteBranch(_, ch) => ch.toSeq.flatMap(leaves)
     }
-    assert(leaves(tree).sorted == (0 until 64).toList,
-      "leaves must cover every fine index exactly once")
+    for (router <- Seq(tree, twoLevel.router))
+      assert(leaves(router).sorted == (0 until 64).toList,
+        "leaves must cover every fine index exactly once")
     // queries: every centroid plus a small in-cell offset
     val qs = (0 until 128).map { i =>
       val c = cents(i % 64)
       (i.toLong, Seq((c(0) + (i % 3) * 0.5).toFloat,
         (c(1) + (i % 5) * 0.5).toFloat))
     }.toDF("id", "v")
-    def assigns(u: org.apache.spark.sql.expressions.UserDefinedFunction) =
-      qs.select(col("id"), u(col("v")).as("c")).collect()
+    def assigns(cb: Codebook) =
+      qs.select(col("id"), cb.assignUdf(col("v")).as("c")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toMap
-    val viaTree = assigns(treeNearestUdf(cents, 2))
-    val viaFlat = assigns(nearestUdf(cents))
+    val viaTree = assigns(Codebook.of(TreeKernel, cents))
+    val viaFlat = assigns(Codebook.flat(cents))
     assert(viaTree == viaFlat,
       "tree assignment must equal the flat argmin on separated cells")
-    assert(assigns(treeNearestUdf(cents, 2)) == viaTree,
+    assert(assigns(twoLevel) == viaFlat,
+      "two-level assignment must equal the flat argmin on separated cells")
+    assert(assigns(Codebook.of(TreeKernel, cents)) == viaTree,
       "tree build must be deterministic")
+    val dup = Array(Array(5.0, 5.0), Array(0.0, 0.0), Array(0.0, 0.0),
+      Array(5.0, 5.0))
+    for (cb <- Seq(Codebook.flat(dup), Codebook.twoLevel(dup, 2),
+        Codebook.of(TreeKernel, dup)))
+      assert(cb.nearest(Array(0.0, 0.0)) == 1 &&
+        cb.nearest(Array(5.0, 5.0)) == 0,
+        s"${cb.kernel}: ties must resolve to the smallest global index")
+    // a line converges slowly from its first-k seeds, so a different
+    // coarse iteration count moves the cells
+    val line = Array.tabulate(16)(i => Array(i.toDouble))
+    val (coarse, members) = coarseRouter(line, 4, 2)
+    val RouteBranch(centers, children) = Codebook.twoLevel(line, 4).router
+    assert(centers.map(_.toSeq).toSeq == coarse.map(_.toSeq).toSeq &&
+      children.map(leaves).toSeq == members.map(_.toSeq).toSeq,
+      "two-level router must be coarseRouter(centroids, nCoarse, 2)")
   }
 
   test("apportion: exact total, per-cell capacity cap, deterministic remainders") {

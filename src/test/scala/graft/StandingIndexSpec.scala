@@ -206,8 +206,34 @@ class StandingIndexSpec extends GraftSpecBase {
     cat.createSet("db", "new_centroids", codebookFrame(spark, big),
       policy = "none")
     val cb = loadIndexCodebook(spark, cat, "db", "new")
-    assert(cb.kernel == TreeKernel && cb.routeThreshold == 2048 &&
+    assert(cb.kernel == TreeKernel &&
+      persistedRouteThreshold(cat.scanSet("db", "new_centroids")).contains(2048) &&
       cb.centroids.length == big.length && cb.centroids(7).toSeq == Seq(7.0, 0.0))
+    SetCatalog.deleteTree(Paths.get(root))
+  }
+
+  test("a routed index codebook builds its router once per generation") {
+    val root = Files.createTempDirectory("graft-router").toString
+    val cat = new SetCatalog(spark, s"$root/sets")
+    val corpus = vectorCorpus(s"$root/corpus", 200)
+    // k = 9 routes two-level under threshold 4 (build and rebuild alike)
+    spark.conf.set("spark.graft.ann.routeThreshold", "4")
+    try {
+      SimilaritySearch.buildIvfIndex(spark, cat, "r", "ivf",
+        corpus.where(col("vec_id") < 150), nCentroids = 9)
+      val built = SimilaritySearch.loadIndexCodebook(spark, cat, "r", "ivf")
+      assert(built.kernel == SimilaritySearch.TwoLevelKernel)
+      SimilaritySearch.appendToIvfIndex(spark, cat, "r", "ivf",
+        corpus.where(col("vec_id") >= 150))
+      assert(SimilaritySearch.loadIndexCodebook(spark, cat, "r", "ivf")
+        .router eq built.router,
+        "appends and probes of one codebook generation share its router")
+      SimilaritySearch.rebuildIvfIndex(spark, cat, "r", "ivf")
+      val rebuilt = SimilaritySearch.loadIndexCodebook(spark, cat, "r", "ivf")
+      assert(rebuilt.kernel == SimilaritySearch.TwoLevelKernel &&
+        !(rebuilt.router eq built.router),
+        "a rebuild's new generation builds a new router")
+    } finally spark.conf.unset("spark.graft.ann.routeThreshold")
     SetCatalog.deleteTree(Paths.get(root))
   }
 }
