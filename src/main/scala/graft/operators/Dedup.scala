@@ -1983,7 +1983,9 @@ object Dedup {
     * arriving embeddings joins the standing semantic index (assigned
     * under the frozen codebook, appended into its cell's directory).
     * Batching-invariant — a vector's cell depends only on (vector,
-    * codebook).
+    * codebook). The stream runs in the caller's session: with
+    * `spark.sql.artifact.isolation.enabled` on there, every stream query
+    * gets a fresh class loader and recompiles its generated code.
     */
   def streamAppendToSemanticIndex(
       stream: DataFrame, catalog: graft.storage.SetCatalog,

@@ -1094,6 +1094,9 @@ object SimilaritySearch {
     * end to end. Batching-invariant by construction (a vector's bucket
     * depends only on the vector and the codebook), so any batching of
     * the same arrivals produces the same index as one batch append.
+    * The stream runs in the caller's session: with
+    * `spark.sql.artifact.isolation.enabled` on there, every stream query
+    * gets a fresh class loader and recompiles its generated code.
     */
   def streamAppendToIvfIndex(
       stream: DataFrame, catalog: graft.storage.SetCatalog,
@@ -1647,7 +1650,11 @@ object SimilaritySearch {
   }
 
   /** Streaming form of [[appendToIvfPqIndex]] — batching-invariant like
-    * its IVF and PQ siblings. */
+    * its IVF and PQ siblings.
+    * The stream runs in the caller's session: with
+    * `spark.sql.artifact.isolation.enabled` on there, every stream query
+    * gets a fresh class loader and recompiles its generated code.
+    */
   def streamAppendToIvfPqIndex(
       stream: DataFrame, catalog: graft.storage.SetCatalog,
       db: String, name: String,
@@ -1806,6 +1813,9 @@ object SimilaritySearch {
     * arriving embeddings is encoded under the standing codebooks and
     * appended. Batching-invariant by construction, like the IVF
     * streaming append.
+    * The stream runs in the caller's session: with
+    * `spark.sql.artifact.isolation.enabled` on there, every stream query
+    * gets a fresh class loader and recompiles its generated code.
     */
   def streamAppendToPqIndex(
       stream: DataFrame, catalog: graft.storage.SetCatalog,

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Event
 import graft.streaming.EventStreams
@@ -13,42 +13,60 @@ import graft.streaming.EventStreams
   */
 object StreamingQueries {
 
-  /** Streaming state partitioning is a deliberate constant, not inherited
-    * ambient config: the state-store instance count per stateful operator
-    * equals the shuffle-partition count at the FIRST micro-batch and is
-    * then pinned in the checkpoint for the query's life. Each instance
-    * pays its own per-batch checkpoint + maintenance IO, so dozens of
-    * stores for kilobytes of state multiply fixed costs (measured ~2× on
-    * the fixture stream-stream join) — while a TB-state join would want
-    * thousands. Streaming plans therefore run in a child session sized
-    * for their state (8 state partitions); batch plans keep the
-    * session's wide shuffle.
+  /** The child session every st_* query runs in. A fresh `newSession()`
+    * per call keeps temp views and memory-sink names isolated between
+    * concurrent callers; two settings make it cheap (warm 4-core local
+    * JVM, sf0.01: st_sliding fell from 1.4-1.9 s to 0.9 s per call):
     *
-    * Checkpoint placement, probed and deliberately NOT changed (VERDICT
-    * r20 next #8): rooting the transient per-query stream checkpoints
-    * (offset/commit logs + state-store deltas) on tmpfs instead of the
-    * default java.io.tmpdir measured FLAT on checkpoint-heavy st_*
-    * queries (two interleaved A/B pairs at sf0.1, deltas inside window
-    * noise in both directions) — Spark's local-FS checkpoint manager
-    * commits by rename without fsync, so the disk-backed default was
-    * already running at page-cache speed. The residual st_* fixed cost
-    * is stream-start/micro-batch machinery, not checkpoint IO.
+    *  - Artifact isolation off. Spark caches generated code keyed on
+    *    (context class loader, source), and with
+    *    `spark.sql.artifact.isolation.enabled` on, the session clone each
+    *    `StreamExecution` makes gets a fresh class loader, so every call
+    *    recompiled the same classes (13 per st_sliding call, 200-300 ms
+    *    of Janino). graft adds no session artifacts, so isolation buys
+    *    nothing.
+    *  - State partitions = min(8, defaultParallelism). The state-store
+    *    count per stateful operator equals the shuffle-partition count at
+    *    the FIRST micro-batch and is pinned in the checkpoint for the
+    *    query's life; each store pays its own per-batch commit and
+    *    maintenance, and more stores than task slots run in waves
+    *    (summed commitTimeMs per st_sliding call on 4 cores: ~750 ms with
+    *    8 stores, ~320 ms with 4, ~100 ms with 2). Batch plans keep the
+    *    session's wide shuffle.
+    *
+    * Checkpoint placement, probed and deliberately NOT changed: rooting
+    * the transient per-query stream checkpoints (offset/commit logs +
+    * state-store deltas) on tmpfs instead of the default java.io.tmpdir
+    * measured FLAT on checkpoint-heavy st_* queries (two interleaved A/B
+    * pairs at sf0.1, deltas inside window noise in both directions) —
+    * Spark's local-FS checkpoint manager commits by rename without fsync,
+    * so the disk-backed default already runs at page-cache speed.
     */
-  private def streamSession(spark: SparkSession): SparkSession = {
+  private[graft] def streamSession(spark: SparkSession): SparkSession = {
     val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "8")
+    ss.conf.set("spark.sql.artifact.isolation.enabled", "false")
+    ss.conf.set("spark.sql.shuffle.partitions",
+      math.min(8, spark.sparkContext.defaultParallelism).toString)
     ss
+  }
+
+  /** Runs `ds` to completion into the memory sink `sink` and returns the
+    * sink's table.
+    */
+  private def drainToTable(ds: Dataset[_], sink: String,
+      mode: String): DataFrame = {
+    val q = ds.writeStream.format("memory").queryName(sink)
+      .outputMode(mode).start()
+    try q.processAllAvailable() finally q.stop()
+    ds.sparkSession.table(sink)
   }
 
   /** streaming hourly window aggregate ≡ op_events_hourly's batch result */
   def stHourly(spark0: SparkSession, d: String): DataFrame = {
     val spark = streamSession(spark0)
     val stream = EventStreams.readEventStream(spark, s"$d/events.parquet")
-    val q = EventStreams.hourlyCounts(stream)
-      .writeStream.format("memory").queryName("st_hourly_sink")
-      .outputMode("complete").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table("st_hourly_sink")
+    drainToTable(EventStreams.hourlyCounts(stream),
+      "st_hourly_sink", "complete")
   }
 
   val stHourlySql: String = OperatorQueries.eventsHourlySql
@@ -59,11 +77,8 @@ object StreamingQueries {
   def stSliding(spark0: SparkSession, d: String): DataFrame = {
     val spark = streamSession(spark0)
     val stream = EventStreams.readEventStream(spark, s"$d/events.parquet")
-    val q = EventStreams.slidingCounts(stream)
-      .writeStream.format("memory").queryName("st_sliding_sink")
-      .outputMode("complete").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table("st_sliding_sink")
+    drainToTable(EventStreams.slidingCounts(stream),
+      "st_sliding_sink", "complete")
   }
 
   /** Batch oracle: the 4 slide offsets materialized per event. Window
@@ -88,11 +103,7 @@ object StreamingQueries {
     import spark.implicits._
     val stream = EventStreams.readEventStream(spark, s"$d/events.parquet")
       .as[Event]
-    val q = EventStreams.sessionize(stream)
-      .writeStream.format("memory").queryName("st_sessions_sink")
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table("st_sessions_sink")
+    drainToTable(EventStreams.sessionize(stream), "st_sessions_sink", "append")
       .groupBy(col("user_id"))
       .agg(max(col("session_seq")).as("n_sessions"))
   }
@@ -141,15 +152,12 @@ object StreamingQueries {
   def stDedup(spark0: SparkSession, d: String): DataFrame = {
     val spark = streamSession(spark0)
     val stream = EventStreams.readEventStream(spark, s"$d/events.parquet")
-    val q = stream
+    drainToTable(stream
       .withWatermark("ts", "2 hours")
       .dropDuplicates("event_id")
       .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_unique"))
-      .writeStream.format("memory").queryName("st_dedup_sink")
-      .outputMode("complete").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table("st_dedup_sink")
+      .agg(count(lit(1)).as("n_unique")),
+      "st_dedup_sink", "complete")
   }
 
   val stDedupSql: String =
@@ -166,11 +174,8 @@ object StreamingQueries {
       .groupBy(col("user_id"))
       .agg((count(lit(1)) >= 70L).as("heavy_user"))
     val stream = EventStreams.readEventStream(spark, s"$d/events.parquet")
-    val q = EventStreams.enrichWithProfile(stream, dim)
-      .writeStream.format("memory").queryName("st_enrich_sink")
-      .outputMode("complete").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table("st_enrich_sink")
+    drainToTable(EventStreams.enrichWithProfile(stream, dim),
+      "st_enrich_sink", "complete")
   }
 
   val stEnrichSql: String =
@@ -190,11 +195,8 @@ object StreamingQueries {
       .filter(col("event_type") === "purchase")
     val views = EventStreams.readEventStream(spark, s"$d/events.parquet")
       .filter(col("event_type") === "view")
-    val q = EventStreams.purchaseViewJoin(purchases, views)
-      .writeStream.format("memory").queryName("st_join_sink")
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table("st_join_sink")
+    drainToTable(EventStreams.purchaseViewJoin(purchases, views),
+      "st_join_sink", "append")
       .groupBy(col("p_user").as("user_id"))
       .agg(count(lit(1)).as("n_pairs"))
   }
@@ -678,11 +680,8 @@ object StreamingQueries {
   def stCurate(spark0: SparkSession, d: String): DataFrame = {
     val spark = streamSession(spark0)
     val stream = readDocStream(spark, d)
-    val q = graft.operators.Curation.piiScan(stream, "doc_id", "text")
-      .writeStream.format("memory").queryName("st_curate_sink")
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table("st_curate_sink")
+    drainToTable(graft.operators.Curation.piiScan(stream, "doc_id", "text"),
+      "st_curate_sink", "append")
   }
 
   /** Oracle: the batch PII scan over the same fixture rows (txt_pii's
@@ -1089,10 +1088,7 @@ object StreamingQueries {
     val out = graft.operators.Curation.streamTokenBudget(
       readDocStream(spark, d), "doc_id", "text",
       totalTokens = 30000L, nShards = 8)
-    val q = out.toDF().writeStream.format("memory").queryName("st_budget_sink")
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table("st_budget_sink")
+    drainToTable(out, "st_budget_sink", "append")
       .select(col("doc_id"), col("shard"), col("n_tokens"), col("cum_tokens"))
   }
 
@@ -1149,11 +1145,7 @@ object StreamingQueries {
       readDocStream(spark, d), "doc_id", "text", "lang",
       Map("en" -> 0.5, "fr" -> 0.2, "de" -> 0.2),
       totalTokens = 30000L, nShards = 8)
-    val q = out.toDF().writeStream.format("memory")
-      .queryName("st_domain_budget_sink")
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table("st_domain_budget_sink")
+    drainToTable(out, "st_domain_budget_sink", "append")
       .select(col("doc_id"), col("domain"), col("shard"),
         col("n_tokens"), col("cum_tokens"))
   }
@@ -1269,11 +1261,7 @@ object StreamingQueries {
       .parquet(s"${root.toString}/stx.gated")
     val out = graft.operators.Curation.streamTokenBudget(
       gstream, "doc_id", "text", totalTokens = 30000L, nShards = 8)
-    val q = out.toDF().writeStream.format("memory")
-      .queryName("st_pipe_lm_budget_sink")
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val res = spark.table("st_pipe_lm_budget_sink")
+    val res = drainToTable(out, "st_pipe_lm_budget_sink", "append")
       .select(col("doc_id"), col("shard"), col("n_tokens"), col("cum_tokens"))
       .localCheckpoint(true)
     Seq("txt_hashes", "frm_hashes", "env_fps", "gated")
@@ -1505,11 +1493,7 @@ object StreamingQueries {
       tstream, "doc_id", "text", "tier",
       Map("0" -> 0.6, "1" -> 0.3, "2" -> 0.1),
       totalTokens = 30000L, nShards = 8)
-    val q = out.toDF().writeStream.format("memory")
-      .queryName("st_pipe_quality_mix_sink")
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val res = spark.table("st_pipe_quality_mix_sink")
+    val res = drainToTable(out, "st_pipe_quality_mix_sink", "append")
       .select(col("doc_id"), col("domain"), col("shard"),
         col("n_tokens"), col("cum_tokens"))
       .localCheckpoint(true)

@@ -1040,4 +1040,19 @@ class StreamingSpec extends GraftSpecBase {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == batch && got.nonEmpty)
   }
+
+  test("a warm st_* query compiles no generated classes and runs one state store per core") {
+    import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    def run(): Set[org.apache.spark.sql.Row] =
+      SparkEntry.queries("st_sliding")(spark, sfDir).collect().toSet
+    val first = run()
+    val before = METRIC_COMPILATION_TIME.getCount
+    val second = run()
+    val compiled = METRIC_COMPILATION_TIME.getCount - before
+    assert(compiled == 0, s"warm st_sliding compiled $compiled generated classes")
+    assert(second == first && first.nonEmpty)
+    val slots = math.min(8, spark.sparkContext.defaultParallelism)
+    assert(graft.queries.StreamingQueries.streamSession(spark).conf
+      .get("spark.sql.shuffle.partitions") == slots.toString)
+  }
 }
