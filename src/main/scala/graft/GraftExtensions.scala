@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
@@ -25,6 +26,12 @@ import graft.functions.{DotProduct, WordShingles}
   *
   * The builders live on the companion so the test suite exercises the SAME
   * argument handling the extension installs, not a reimplementation.
+  *
+  * Applying the extensions also installs [[graft.storage.LocalFs]] on the
+  * context's Hadoop configuration. It has to happen here: the builder
+  * creates the context before it applies extensions, and applies them
+  * before `SharedState` first caches the `file:` filesystem, whose cache
+  * key ignores the implementation class.
   */
 object GraftExtensions {
 
@@ -55,5 +62,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[WordShingles].getName, "word_shingles"),
       GraftExtensions.wordShinglesBuilder))
     e.injectResolutionRule(graft.plans.BucketedSetReads(_))
+    graft.storage.LocalFs.install(SparkContext.getOrCreate().hadoopConfiguration)
   }
 }

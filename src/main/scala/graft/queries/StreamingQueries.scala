@@ -29,18 +29,17 @@ object StreamingQueries {
     *    count per stateful operator equals the shuffle-partition count at
     *    the FIRST micro-batch and is pinned in the checkpoint for the
     *    query's life; each store pays its own per-batch commit and
-    *    maintenance, and more stores than task slots run in waves
-    *    (summed commitTimeMs per st_sliding call on 4 cores: ~750 ms with
-    *    8 stores, ~320 ms with 4, ~100 ms with 2). Batch plans keep the
-    *    session's wide shuffle.
+    *    maintenance, and more stores than task slots run in waves. Batch
+    *    plans keep the session's wide shuffle.
     *
-    * Checkpoint placement, probed and deliberately NOT changed: rooting
-    * the transient per-query stream checkpoints (offset/commit logs +
-    * state-store deltas) on tmpfs instead of the default java.io.tmpdir
-    * measured FLAT on checkpoint-heavy st_* queries (two interleaved A/B
-    * pairs at sf0.1, deltas inside window noise in both directions) —
-    * Spark's local-FS checkpoint manager commits by rename without fsync,
-    * so the disk-backed default already runs at page-cache speed.
+    * Checkpoints (offset/commit logs and state-store deltas) go through
+    * Spark's FileContext checkpoint manager. Without libhadoop, Hadoop's
+    * local filesystem forked a `chmod` per file it created and a
+    * `readlink` per rename, and those forks, not the disk, were most of a
+    * store commit: summed commitTimeMs per warm st_sliding call (4 stores,
+    * 4-core host, sf0.01) was 340-390 ms with them and is ~40 ms with
+    * [[graft.storage.LocalFs]] installed. That is also why rooting the
+    * checkpoints on tmpfs instead of java.io.tmpdir had measured flat.
     */
   private[graft] def streamSession(spark: SparkSession): SparkSession = {
     val ss = spark.newSession()
