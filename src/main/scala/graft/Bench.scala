@@ -121,7 +121,7 @@ object Bench {
     * (bounded O(log diameter); −1 = driver regime / not exercised) and
     * the wide-sample prefilter's attempt/hit counters (a
     * certification-rate regression — hits falling behind attempts —
-    * shows up in the artifact diff, not only in a soak re-run).
+    * shows up in the artifact diff).
     * Counters cover THIS run's queries, cumulative across the JVM.
     * Shape pinned by BenchScrapeSpec.
     */

@@ -46,8 +46,8 @@ final class PlacementAdvisor(historyPath: Option[String] = None) {
     * [[recommendByReward]] */
   private val keyReward = mutable.Map.empty[(String, String), Long].withDefaultValue(0L)
   /** (index table, nprobe) -> last measured recall at that probe width —
-    * the dial rows [[recommendProbeWidth]] fits (fed by the soak's
-    * measured (nprobe, recall) points) */
+    * the dial rows [[recommendProbeWidth]] fits (fed by measured
+    * (nprobe, recall) points) */
   private val probeDial = mutable.Map.empty[(String, Int), Double]
   /** ingest index table -> census trajectory, newest last: (band rows,
     * worst bucket) at each census — the history
@@ -317,10 +317,9 @@ final class PlacementAdvisor(historyPath: Option[String] = None) {
   }
 
   /** Record one measured point of an index's probe-width quality dial:
-    * searching `table` at `nprobe` cells achieved `recall`. The soak's
-    * widened-probe rows feed this; the latest measurement per
-    * (table, nprobe) wins (recall under drift is a moving target — the
-    * dial should reflect the index as it stands).
+    * searching `table` at `nprobe` cells achieved `recall`. The latest
+    * measurement per (table, nprobe) wins (recall under drift is a
+    * moving target — the dial should reflect the index as it stands).
     */
   def observeProbeRecall(table: String, nprobe: Int, recall: Double): Unit = {
     require(nprobe >= 1 && recall >= 0.0 && recall <= 1.0,
@@ -337,11 +336,10 @@ final class PlacementAdvisor(historyPath: Option[String] = None) {
     * CONSERVATIVE by design: the recommendation is the smallest
     * MEASURED nprobe whose measured recall meets the target — a width
     * whose recall is a recorded fact, so re-searching at it
-    * deterministically reproduces ≥ target on the measured corpus
-    * (soak-asserted). Interpolating between measured points could
-    * recommend widths whose recall was never observed (the dial is
-    * monotone only in aggregate — the ADC shortlist is not nested
-    * across widths). Only when the target exceeds every measured recall
+    * deterministically reproduces ≥ target on the measured corpus.
+    * Interpolating between measured points could recommend widths
+    * whose recall was never observed (the dial is monotone only in
+    * aggregate — the ADC shortlist is not nested across widths). Only when the target exceeds every measured recall
     * does it extrapolate, by the LAST segment's measured slope
     * (recall-per-probe), capped at `maxProbe` — an explicit "measure
     * here next" pointer, not a guarantee; a flat-or-falling tail slope
@@ -370,7 +368,7 @@ final class PlacementAdvisor(historyPath: Option[String] = None) {
 
   /** Record one census point of a self-growing ingest near-dup index:
     * its band set held `bandRows` rows and its worst (band, bkey) bucket
-    * `maxBucket` distinct ids. Fed by the pipeline (or soak) from
+    * `maxBucket` distinct ids. Fed by the pipeline from
     * [[graft.operators.Dedup.ingestBandCensus]] whenever a census runs —
     * clean, pre-recap, or post-recap; each point is one already-paid
     * scan's summary, never an extra scan. Bounded at 32 points per
@@ -395,8 +393,9 @@ final class PlacementAdvisor(historyPath: Option[String] = None) {
     * a bucket of B standing ids emits B candidate rows through that
     * band, so a per-arrival candidate budget divides by the band count:
     * cap = max(floor, budget / bands). The defaults (4096-row budget at
-    * 32 bands → cap 128) sit under the hotband soak's measured knee
-    * while staying above every bucket a non-adversarial corpus shows.
+    * 32 bands → cap 128) sit under the knee measured on a generated
+    * boilerplate corpus while staying above every bucket a
+    * non-adversarial corpus shows.
     *
     * growth — census CADENCE from the table's own measured hot-bucket
     * trajectory. The census is a full band-set scan, so it should fire

@@ -233,11 +233,10 @@ object Curation extends Serializable {
     * pass — including the final filter — reads the materialized copy:
     * the caller's upstream plan executes exactly once regardless of
     * regime (CurationSpec pins this with an accumulator-counted
-    * source). A standing pipeline that prefers lineage-safe storage
-    * (localCheckpoint trades lineage for speed, the same trade
-    * pipe_curate documents) can cache the input itself, or set
-    * `spark.graft.quantile.selfMaterialize=false` when the input is a
-    * bare scan cheaper to re-read than to store.
+    * source). localCheckpoint trades lineage for speed, the same trade
+    * pipe_curate documents. The lineage-safe alternative is to cache the
+    * input before the call: a cached input (`scored.storageLevel` other
+    * than NONE) is read from the cache, with no checkpoint.
     *
     * Null scores can never pass the `>= threshold` filter, so they are
     * excluded from n as well: the gate keeps the top `fraction` of the
@@ -249,11 +248,8 @@ object Curation extends Serializable {
     require(fraction > 0 && fraction <= 1,
       s"fraction must be in (0,1], got $fraction")
     val nonNull = scored.filter(col(scoreCol).isNotNull)
-    val selfMat = scored.sparkSession.conf
-      .get("spark.graft.quantile.selfMaterialize", "true").toBoolean
     val base =
-      if (selfMat && scored.storageLevel ==
-          org.apache.spark.storage.StorageLevel.NONE)
+      if (scored.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
         nonNull.localCheckpoint(true)
       else nonNull
     val n = base.count()

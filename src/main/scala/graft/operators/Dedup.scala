@@ -148,12 +148,6 @@ object Dedup {
     materialize(verified, withSets, banded)
   }
 
-  /** The candidate stage of [[lshVerifiedPairs]], exposed for the scale
-    * soak (graft.Soak): returns (persisted shingle sets, persisted band
-    * keys, candidate pairs after the super-bucket cap and ≥2-band filter)
-    * so candidate-set growth can be measured against corpus size without
-    * paying for verification. Callers must unpersist the first two.
-    */
   /** The shingle-set and band-key frames shared by the self-join LSH, the
     * cross-corpus LSH, and the streaming ingest dedup: (persisted
     * (id, ws) sets, persisted (id, band, bkey) scalars). Callers own the
@@ -193,6 +187,12 @@ object Dedup {
     (withSets, banded)
   }
 
+  /** The candidate stage of [[lshVerifiedPairs]]: returns (persisted
+    * shingle sets, persisted band keys, candidate pairs after the
+    * super-bucket cap and ≥2-band filter), so candidate-set growth can be
+    * measured against corpus size without paying for verification.
+    * Callers must unpersist the first two.
+    */
   private[graft] def lshCandidateFrames(
       docs: DataFrame, idCol: String, shingleExpr: Column,
       k: Int, bands: Int, maxBucket: Int = 200): (DataFrame, DataFrame, DataFrame) = {
@@ -461,8 +461,8 @@ object Dedup {
       idCol, textCol, threshold, k, bands, shingleN), sink)
 
   /** One micro-batch of [[streamIngestNearDup]]: probe + grow. Public as
-    * the batch kernel so the soak harness can drive successive batches
-    * directly and time each one against the growing standing set.
+    * the batch kernel so a caller can drive successive batches directly
+    * and time each one against the growing standing set.
     *
     * Standing-set IO per batch — ONE full scan of each standing set
     * (VERDICT r14 next #2; the r14 shape re-scanned both sets for the
@@ -485,7 +485,7 @@ object Dedup {
     * first attempt's pairs. Canonicalization (not an orientation
     * filter) makes pair discovery DELIVERY-ORDER INDEPENDENT: a
     * standing id larger than the arrival's still pairs (ids may arrive
-    * interleaved — the soak's modulo batching does), and emitted
+    * interleaved, as modulo batching delivers them), and emitted
     * orientation can never flip (the oracle-side concern ADVICE r14 #4
     * raised). The verify side therefore resolves BOTH pair columns
     * through one candidate-id shingle lookup ([[ingestNearDupLookup]]).
@@ -909,6 +909,13 @@ object Dedup {
     batch => spansAgainstGrams(batch, scanGramIndex(catalog, db, name),
       idCol, textCol, k)
 
+  /** Diagnostic: passes the last distributed [[dupClusters]] run took to
+    * converge (−1 when the driver union-find regime answered instead).
+    * Read by graft.Bench, which reports it as `diagnostics.cc_passes` in
+    * the committed artifact.
+    */
+  @volatile private[graft] var lastCcPasses: Int = -1
+
   /** Connected components over a near-dup pair set — the step a dedup
     * pipeline runs after pair generation so each cluster keeps one
     * representative. Every id appearing in a pair is labeled with the
@@ -937,13 +944,6 @@ object Dedup {
     * checkpoints — the convergence check is a driver action anyway,
     * mirroring the reference's client-side iteration (SURVEY.md §2.6).
     */
-  /** Diagnostic: passes the last distributed [[dupClusters]] run took to
-    * converge (−1 when the driver union-find regime answered instead).
-    * Read by graft.Soak to report the measured pass count against the
-    * O(log diameter) bound.
-    */
-  @volatile private[graft] var lastCcPasses: Int = -1
-
   def dupClusters(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
     val spark = pairs.sparkSession
     val longIds = pairs.schema.fields.take(2).forall(
@@ -1073,7 +1073,8 @@ object Dedup {
     * value can be missed. Hot quarters are by construction the
     * non-discriminative ones, so this is the same trade as minhash LSH's
     * super-bucket drop; the sf0.01 oracle equality (cap never engaged at
-    * fixture scale) plus the skew-planted soak row validate both sides.
+    * fixture scale) plus PipelineSpec's template-flood case validate
+    * both sides.
     */
   def simhashPairs(
       docs: DataFrame, idCol: String, textCol: String,
@@ -1532,9 +1533,9 @@ object Dedup {
       sink)
 
   /** One micro-batch of [[streamIngestExactDedup]]: probe + grow. Public
-    * as the batch kernel (like [[ingestNearDupBatch]]) so the
-    * maintenance-composition soak can drive successive batches directly
-    * and inject crashes between them.
+    * as the batch kernel (like [[ingestNearDupBatch]]) so a caller can
+    * drive successive batches directly and run maintenance between
+    * them.
     */
   def ingestExactDedupBatch(
       batch: DataFrame, catalog: graft.storage.SetCatalog,

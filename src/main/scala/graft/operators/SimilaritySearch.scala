@@ -992,10 +992,10 @@ object SimilaritySearch {
     * automatic, like the PQ/IVF-PQ appends' — but note the cost
     * asymmetry: an IVF rebuild rewrites the WHOLE bucket-partitioned
     * vector set (the cells ARE the corpus layout), where the compressed
-    * tiers rewrite only codes. The ivfrecall soak also shows append-only
-    * IVF tracks the retrained codebook within 0.1 under drift, so the
-    * default here stays manual; enable the trigger when cell-size skew,
-    * not recall, is the concern.
+    * tiers rewrite only codes. Measured at sf0.1 under rotation drift,
+    * append-only IVF recall also stayed within 0.1 of the retrained
+    * codebook's, so the default here stays manual; enable the trigger
+    * when cell-size skew, not recall, is the concern.
     * Search results over build(A)+append(B) are IDENTICAL to an index
     * whose vectors were all assigned under A's codebook in one pass —
     * assignment depends only on (vector, codebook).
@@ -1033,8 +1033,8 @@ object SimilaritySearch {
   /** IVF form of [[rebuildPqIndex]]: retrain the coarse codebook from
     * the standing vectors set (same md5-ordered sample a from-scratch
     * [[ivfTopK]] trains on, so post-rebuild recall equals the retrained
-    * line exactly — soak-asserted) and re-partition the corpus under the
-    * new cells. The rewrite goes to a STAGING set and swaps in via
+    * line exactly) and re-partition the corpus under the new cells. The
+    * rewrite goes to a STAGING set and swaps in via
     * [[graft.storage.SetCatalog.swapSetGroup]] (marker-committed
     * remove+rename) — source and destination are the same set here (the
     * cells are the corpus layout), so an in-place overwrite would read
@@ -1496,8 +1496,8 @@ object SimilaritySearch {
     * (vector, model).
     *
     * `rebuildIfDrifted = true` adds the production rebuild policy the
-    * append-under-drift soaks motivated (README recall table: append-only
-    * IVF-PQ recall sinks to 0.34 at m=16 under rotation drift — stale
+    * append-under-drift measurements motivated (at sf0.1, append-only
+    * IVF-PQ recall sank to 0.34 at 16 rotated replicas — stale
     * models code drifted vectors badly, and append-only operation never
     * recovers): when the appended fraction since the last (re)train
     * reaches `driftFraction`, [[rebuildIvfPqIndex]] retrains both models
@@ -1566,7 +1566,8 @@ object SimilaritySearch {
     * [[sampleVectors]] orders by md5(id) — not physical row order — the
     * retrain sample over the vectors set is IDENTICAL to a from-scratch
     * [[pqTopK]] train over the same corpus, so post-rebuild recall equals
-    * the retrained line exactly (soak-asserted, pqrecall family).
+    * the retrained line exactly (PqSpec pins the rebuild against the
+    * standing build).
     */
   def rebuildPqIndex(
       spark: SparkSession, catalog: graft.storage.SetCatalog,

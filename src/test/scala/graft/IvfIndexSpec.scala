@@ -164,14 +164,15 @@ class IvfIndexSpec extends GraftSpecBase {
     assert(math.abs(drift - 100.0 / 150.0) < 1e-9, s"drift=$drift")
     // appended vectors are live standing state: a probe of a vector's
     // own value must pair with it (cos = 1 within its cell)
-    def probe(ids: org.apache.spark.sql.Column => org.apache.spark.sql.Column): Set[(Long, Long)] = {
+    def probe(ids: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
+        index: SetCatalog = c, threshold: Double = 0.999): Set[(Long, Long)] = {
       val input = MemoryStream[(Long, Seq[Float])]
       input.addData(emb.filter(ids(col("vec_id")))
         .select((col("vec_id") + 1000L).as("vec_id"), col("embedding"))
         .as[(Long, Seq[Float])].collect().toSeq: _*)
       graft.operators.Dedup.streamSemanticAgainstIndex(
-        input.toDS().toDF("vec_id", "embedding"), c, "idx", "sem",
-        "vec_id", "embedding", threshold = 0.999)
+        input.toDS().toDF("vec_id", "embedding"), index, "idx", "sem",
+        "vec_id", "embedding", threshold = threshold)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     }
     val hits = probe(id => id >= 150 && id < 160)
@@ -188,6 +189,17 @@ class IvfIndexSpec extends GraftSpecBase {
     val hitsAfter = probe(id => id >= 150 && id < 160)
     assert((150L until 160L).forall(i => hitsAfter.contains((i, i + 1000L))),
       s"rebuild lost appended vectors: $hitsAfter")
+    // the rebuild equals a from-scratch build over the same standing
+    // rows (same md5-ordered trainer sample, same k): within-cell pairs
+    // at a loose threshold depend on every cell boundary, and match
+    val root2 = Files.createTempDirectory("graft-sem-scratch").toString
+    val c2 = new SetCatalog(spark, root2)
+    graft.operators.Dedup.persistSemanticIndex(c2, "idx", "sem",
+      emb.filter(col("vec_id") < 250), "vec_id", "embedding",
+      targetClusterSize = 25)
+    val rebuilt = probe(id => id < 20, threshold = 0.4)
+    assert(rebuilt.size > 20 && rebuilt == probe(id => id < 20, c2, 0.4))
+    SetCatalog.deleteTree(java.nio.file.Paths.get(root2))
     SetCatalog.deleteTree(java.nio.file.Paths.get(root))
   }
 

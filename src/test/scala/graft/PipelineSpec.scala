@@ -22,6 +22,45 @@ class PipelineSpec extends GraftSpecBase {
       .filter(TextFunctions.jaccard(col("wa"), col("wb")) >= 0.8)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(lsh == exact)
+
+    // The scale claim the 100 TB design rests on: pairs and candidates
+    // grow linearly in corpus replicas. Replica i offsets ids by i·10^7
+    // and PREFIXES every word with "r{i}_", so no shingle crosses
+    // replicas and the base pair set repeats once per replica. A suffix
+    // salt would not do: the word fingerprint is a base-257 positional
+    // hash, so an appended salt moves only its lowest coefficients and
+    // simhash replicas would read as planted cross-replica near-dups.
+    val off = 10000000L
+    def replicated(m: Int) = (0 until m).map { i =>
+      docs.select((col("doc_id") + lit(i * off)).as("doc_id"),
+        regexp_replace(col("text"), "(\\S+)", s"r${i}_$$1").as("text"))
+    }.reduce(_ unionByName _)
+    def candidates(corpus: org.apache.spark.sql.DataFrame): Set[(Long, Long)] = {
+      val (ws, banded, cand) = Dedup.lshCandidateFrames(corpus, "doc_id",
+        TextFunctions.wordShingles(col("text"), 2), k = 128, bands = 32)
+      try cand.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      finally { ws.unpersist(); banded.unpersist() }
+    }
+    val base = candidates(replicated(1)).size
+    for (m <- Seq(1, 2, 4)) {
+      val corpus = replicated(m)
+      val pairs = Dedup.minhashPairs(corpus, "doc_id", "text", threshold = 0.8)
+        .select("id_a", "id_b").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      val shifted = for (i <- 0 until m; (a, b) <- exact)
+        yield (a + i * off, b + i * off)
+      assert(pairs == shifted.toSet, s"m=$m")
+      assert(pairs.size == m * exact.size, s"m=$m")
+      // Each replica re-draws its minhashes, so its background pairs
+      // that reach the >=2-band filter differ per replica: the count at
+      // m is a sum of m draws, not m copies of the base draw. eps = 0.1
+      // bounds that spread (replicas 0-3 draw 28, 29, 28 and 28); no
+      // candidate may cross replicas.
+      val cand = candidates(corpus)
+      assert(cand.forall { case (a, b) => a / off == b / off }, s"m=$m")
+      assert(cand.size <= m * base * 1.1,
+        s"m=$m: ${cand.size} candidates vs $m x $base")
+    }
   }
 
   test("cross-corpus pairs are batching-invariant against a shared index") {
@@ -496,7 +535,7 @@ class PipelineSpec extends GraftSpecBase {
     // the fixture documents table is one small file — must widen
     val docs = Tables.documents(spark, sfDir)
     assert(ensureWidth(docs).rdd.getNumPartitions == target)
-    // a union of scans (the Soak corpus shape) still widens
+    // a union of scans (a replicated corpus) still widens
     assert(ensureWidth(docs.unionByName(docs)).rdd.getNumPartitions == target)
     // an in-memory frame (foreachBatch micro-batch shape) widens too
     assert(ensureWidth(Seq((1L, "a")).toDF("doc_id", "text"))

@@ -65,7 +65,11 @@ class PqSpec extends GraftSpecBase {
     val codesOne = emb.select(col("vec_id"),
         SimilaritySearch.pqEncodeUdf(cbA)(col("embedding")).as("c"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
+    // the sidecar drift dial reads appended over built rows
+    val drift = SimilaritySearch.appendedDriftFraction(cat, "idx", "emb")
     graft.storage.SetCatalog.deleteTree(root)
+    assert(drift == (emb.count() - half.count()).toDouble / half.count(),
+      s"drift=$drift")
     assert(codesIdx == codesOne,
       "appended codes must match a one-pass encode under the built codebooks")
   }

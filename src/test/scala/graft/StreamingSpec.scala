@@ -434,8 +434,25 @@ class StreamingSpec extends GraftSpecBase {
       "replayed batch diverged from its first attempt's pair set")
     assert(catB.scanSet("t", "ind_bands").count() == preBands,
       "replayed batch grew the standing band set")
+    // fixture scale: the documents corpus delivered as 4 interleaved
+    // batches (doc_id mod 4) through the batch kernel accumulates exactly
+    // the one-shot self-join's pairs, each once
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
+    val rootC = java.nio.file.Files.createTempDirectory("graft-stind-c")
+    val catC = new graft.storage.SetCatalog(spark, rootC.toString)
+    val accumulated = (0 until 4).flatMap { i =>
+      graft.operators.Dedup.ingestNearDupBatch(
+        docs.filter(col("doc_id") % 4 === i), catC, "t", "fx",
+        "doc_id", "text")
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+    }
+    val oneShot = graft.operators.Dedup.minhashPairs(docs, "doc_id", "text")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(oneShot.nonEmpty && accumulated.size == oneShot.size &&
+      accumulated.toSet == oneShot)
     graft.storage.SetCatalog.deleteTree(rootA)
     graft.storage.SetCatalog.deleteTree(rootB)
+    graft.storage.SetCatalog.deleteTree(rootC)
   }
 
   test("streaming quality mix: frozen tercile cuts == lmQualityBuckets on the calibration slice") {
@@ -599,6 +616,18 @@ class StreamingSpec extends GraftSpecBase {
     assert(raw <= 5L * 32L,
       s"capped probe still pulled $raw standing rows (> cap x bands)")
     nSets.unpersist(); nBanded.unpersist()
+    // the same cap on the one-shot candidate stage: the template buckets
+    // drop, so capped candidates fall below the uncapped count
+    def candidates(maxBucket: Int): Long = {
+      val (ws, banded, cand) = graft.operators.Dedup.lshCandidateFrames(
+        docs.toDF("doc_id", "text"), "doc_id",
+        graft.functions.TextFunctions.wordShingles(col("text"), 2),
+        128, 32, maxBucket)
+      try cand.count() finally { ws.unpersist(); banded.unpersist() }
+    }
+    val uncapped = candidates(Int.MaxValue)
+    val capped = candidates(5)
+    assert(capped < uncapped, s"cap 5 kept $capped of $uncapped candidates")
     graft.storage.SetCatalog.deleteTree(root)
   }
 
