@@ -45,15 +45,6 @@ final class PlacementAdvisor(historyPath: Option[String] = None) {
     * that column as a join/agg key — the reward signal for
     * [[recommendByReward]] */
   private val keyReward = mutable.Map.empty[(String, String), Long].withDefaultValue(0L)
-  /** (index table, nprobe) -> last measured recall at that probe width —
-    * the dial rows [[recommendProbeWidth]] fits (fed by measured
-    * (nprobe, recall) points) */
-  private val probeDial = mutable.Map.empty[(String, Int), Double]
-  /** ingest index table -> census trajectory, newest last: (band rows,
-    * worst bucket) at each census — the history
-    * [[recommendRecapDials]] fits its cadence to */
-  private val censusHist = mutable.Map.empty[String, List[(Long, Long)]]
-    .withDefaultValue(Nil)
 
   historyPath.foreach(load)
 
@@ -64,9 +55,6 @@ final class PlacementAdvisor(historyPath: Option[String] = None) {
         line.split("\t", -1) match {
           case Array("K", t, c, n) => keyUse((t, c)) = n.toLong
           case Array("R", t, c, r) => keyReward((t, c)) = r.toLong
-          case Array("D", t, p, r) => probeDial((t, p.toInt)) = r.toDouble
-          case Array("C", t, rw, mx) =>
-            censusHist(t) = censusHist(t) :+ ((rw.toLong, mx.toLong))
           case Array("P", a, b)    => joinPartners += ((a, b))
           case Array("S", t, r)    => setRows(t) = r.toLong
           case Array("H", n, ms)   => history += ((n, ms.toLong))
@@ -89,9 +77,6 @@ final class PlacementAdvisor(historyPath: Option[String] = None) {
     val sb = new StringBuilder
     keyUse.toSeq.sortBy(_._1).foreach { case ((t, c), n) => sb ++= s"K\t$t\t$c\t$n\n" }
     keyReward.toSeq.sortBy(_._1).foreach { case ((t, c), r) => sb ++= s"R\t$t\t$c\t$r\n" }
-    probeDial.toSeq.sortBy(_._1).foreach { case ((t, p), r) => sb ++= s"D\t$t\t$p\t$r\n" }
-    censusHist.toSeq.sortBy(_._1).foreach { case (t, pts) =>
-      pts.foreach { case (rw, mx) => sb ++= s"C\t$t\t$rw\t$mx\n" } }
     joinPartners.toSeq.sorted.foreach { case (a, b) => sb ++= s"P\t$a\t$b\n" }
     setRows.toSeq.sorted.foreach { case (t, r) => sb ++= s"S\t$t\t$r\n" }
     history.foreach { case (n, ms) => sb ++= s"H\t$n\t$ms\n" }
@@ -315,122 +300,6 @@ final class PlacementAdvisor(historyPath: Option[String] = None) {
       else 0
     SemGeometry(target, k, cells)
   }
-
-  /** Record one measured point of an index's probe-width quality dial:
-    * searching `table` at `nprobe` cells achieved `recall`. The latest
-    * measurement per (table, nprobe) wins (recall under drift is a
-    * moving target — the dial should reflect the index as it stands).
-    */
-  def observeProbeRecall(table: String, nprobe: Int, recall: Double): Unit = {
-    require(nprobe >= 1 && recall >= 0.0 && recall <= 1.0,
-      s"need nprobe >= 1 and recall in [0,1], got ($nprobe, $recall)")
-    probeDial((table, nprobe)) = recall
-    persist()
-  }
-
-  /** The probe width to search `table` at for a recall target — the
-    * advisor's answer to "tune nprobe to a recall target", closing the
-    * loop the round-13 dial measurement opened (nprobe 4→8 lifted
-    * IVF-PQ recall 0.30→0.66 at comparable wall; VERDICT r13 next #3).
-    *
-    * CONSERVATIVE by design: the recommendation is the smallest
-    * MEASURED nprobe whose measured recall meets the target — a width
-    * whose recall is a recorded fact, so re-searching at it
-    * deterministically reproduces ≥ target on the measured corpus.
-    * Interpolating between measured points could recommend widths
-    * whose recall was never observed (the dial is monotone only in
-    * aggregate — the ADC shortlist is not nested across widths). Only when the target exceeds every measured recall
-    * does it extrapolate, by the LAST segment's measured slope
-    * (recall-per-probe), capped at `maxProbe` — an explicit "measure
-    * here next" pointer, not a guarantee; a flat-or-falling tail slope
-    * caps immediately (more probes demonstrably stopped paying).
-    * Returns None when the table has no dial rows at all.
-    */
-  def recommendProbeWidth(
-      table: String, targetRecall: Double, maxProbe: Int = 64): Option[Int] = {
-    val rows = probeDial.toSeq
-      .collect { case ((t, p), r) if t == table => (p, r) }
-      .sortBy(_._1)
-    if (rows.isEmpty) None
-    else rows.find(_._2 >= targetRecall) match {
-      case Some((p, _)) => Some(p)
-      case None =>
-        val (pLast, rLast) = rows.last
-        val slope = if (rows.length < 2) 0.0 else {
-          val (pPrev, rPrev) = rows(rows.length - 2)
-          (rLast - rPrev) / (pLast - pPrev).toDouble
-        }
-        if (slope <= 0) Some(maxProbe)
-        else Some(math.min(maxProbe.toLong,
-          pLast + math.ceil((targetRecall - rLast) / slope).toLong).toInt)
-    }
-  }
-
-  /** Record one census point of a self-growing ingest near-dup index:
-    * its band set held `bandRows` rows and its worst (band, bkey) bucket
-    * `maxBucket` distinct ids. Fed by the pipeline from
-    * [[graft.operators.Dedup.ingestBandCensus]] whenever a census runs —
-    * clean, pre-recap, or post-recap; each point is one already-paid
-    * scan's summary, never an extra scan. Bounded at 32 points per
-    * table (the cadence fit below reads only the newest).
-    */
-  def observeIngestCensus(
-      table: String, bandRows: Long, maxBucket: Long): Unit = {
-    require(bandRows >= 0 && maxBucket >= 0,
-      s"need non-negative census point, got ($bandRows, $maxBucket)")
-    censusHist(table) = (censusHist(table) :+ ((bandRows, maxBucket)))
-      .takeRight(32)
-    persist()
-  }
-
-  /** The recap dials for a self-growing ingest near-dup index — the last
-    * maintenance knob that was still hand-set (VERDICT r15 next #7);
-    * returns (maxBucket cap, census growthFraction) for
-    * [[graft.operators.Dedup.maybeRecapIngestNearDupIndex]] /
-    * `spark.graft.dedup.ingest.autoRecap.*`.
-    *
-    * cap — a candidate-cost BUDGET, not a guess: an arrival colliding in
-    * a bucket of B standing ids emits B candidate rows through that
-    * band, so a per-arrival candidate budget divides by the band count:
-    * cap = max(floor, budget / bands). The defaults (4096-row budget at
-    * 32 bands → cap 128) sit under the knee measured on a generated
-    * boilerplate corpus while staying above every bucket a
-    * non-adversarial corpus shows.
-    *
-    * growth — census CADENCE from the table's own measured hot-bucket
-    * trajectory. The census is a full band-set scan, so it should fire
-    * exactly often enough that the worst bucket cannot overshoot
-    * slack·cap between censuses. Boilerplate buckets grow ~linearly
-    * with the band set (each replica of the shared block adds one id),
-    * so from the latest census point (rows, max) the projected set size
-    * where the worst bucket reaches slack·cap is rows·(slack·cap/max):
-    * growth = slack·cap/max − 1. A corpus measured HOT censuses early
-    * (clamped to a 0.1 floor — growthFraction must stay positive, and
-    * census IO stays ≤ 11× data written even in the hottest regime); a
-    * clean corpus (max ≪ cap) earns a lazy cadence, clamped at
-    * `maxGrowth` so the first census can never be deferred past 5× the
-    * observed set. No history → the static defaults (budget-derived
-    * cap, growth 1.0 — the compaction-trigger amortization argument:
-    * census IO ≤ 2× data written).
-    */
-  def recommendRecapDials(
-      table: String, bands: Int = 32, candidateBudget: Long = 4096,
-      floor: Int = 64, slack: Double = 1.5,
-      maxGrowth: Double = 4.0): (Int, Double) = {
-    require(bands >= 1 && candidateBudget >= 1 && slack > 0 && maxGrowth > 0,
-      s"bad recap-dial inputs ($bands, $candidateBudget, $slack, $maxGrowth)")
-    val cap = math.max(floor, (candidateBudget / bands).toInt)
-    val growth = censusHist(table).lastOption match {
-      case Some((rows, max)) if rows > 0 && max > 0 =>
-        math.min(maxGrowth, math.max(0.1, slack * cap / max.toDouble - 1.0))
-      case _ => 1.0
-    }
-    (cap, growth)
-  }
-
-  def observedIngestCensus: Map[String, List[(Long, Long)]] = censusHist.toMap
-
-  def observedProbeDial: Map[(String, Int), Double] = probeDial.toMap
 
   def observedKeyUse: Map[(String, String), Long] = keyUse.toMap
 

@@ -41,24 +41,6 @@ object Kernels {
     out
   }
 
-  /** Cache-tiled matmul: k is chunked so the active panel of b
-    * (KC rows ≈ 1 MB at n=1000) stays L2-resident across the whole
-    * i-sweep, and the axpy is unrolled 4× over k so each out-row
-    * load/store amortizes 8 flops. Without the chunking the ikj form
-    * streams ALL of b from RAM once per output row (~8 GB of traffic
-    * per 1000³ block matmul), which at 32 concurrent tasks saturates
-    * memory bandwidth long before the ALUs — the round-11 reference-
-    * scale LA run (LA_SCALE_r11.json) is the motivating workload.
-    *
-    * Accumulation ORDER is unchanged: for every (i,j) the products are
-    * added in ascending k (chunks ascend, k ascends within a chunk,
-    * and the 4-term unroll uses sequential `acc +=`), so results are
-    * bit-identical to [[matmulNaive]] for finite inputs — the property
-    * the unrolled SQL oracles rely on. (Sole caveat: a zero a-element
-    * inside a partially-nonzero quad contributes an explicit +0.0 here
-    * where the naive form skips it — indistinguishable except under
-    * NaN/Inf/signed-zero inputs, which the LA surface never produces.)
-    */
   /** True when the JVM was launched with `--add-modules
     * jdk.incubator.vector` (build.sbt does; a cluster deploy should too).
     * Probed once; a missing module falls back to the scalar kernel.
@@ -82,6 +64,24 @@ object Kernels {
   private[graft] def matmulAxpy(a: MatrixBlock, b: MatrixBlock): Array[Double] =
     if (simdOk) SimdKernel.matmul(a, b) else matmulScalar(a, b)
 
+  /** Cache-tiled matmul: k is chunked so the active panel of b
+    * (KC rows ≈ 1 MB at n=1000) stays L2-resident across the whole
+    * i-sweep, and the axpy is unrolled 4× over k so each out-row
+    * load/store amortizes 8 flops. Without the chunking the ikj form
+    * streams ALL of b from RAM once per output row (~8 GB of traffic
+    * per 1000³ block matmul), which at 32 concurrent tasks saturates
+    * memory bandwidth long before the ALUs — the round-11 reference-
+    * scale LA run (LA_SCALE_r11.json) is the motivating workload.
+    *
+    * Accumulation ORDER is unchanged: for every (i,j) the products are
+    * added in ascending k (chunks ascend, k ascends within a chunk,
+    * and the 4-term unroll uses sequential `acc +=`), so results are
+    * bit-identical to [[matmulNaive]] for finite inputs — the property
+    * the unrolled SQL oracles rely on. (Sole caveat: a zero a-element
+    * inside a partially-nonzero quad contributes an explicit +0.0 here
+    * where the naive form skips it — indistinguishable except under
+    * NaN/Inf/signed-zero inputs, which the LA surface never produces.)
+    */
   private[graft] def matmulScalar(a: MatrixBlock, b: MatrixBlock): Array[Double] = {
     require(a.cols == b.rows, s"inner dim ${a.cols} != ${b.rows}")
     val m = a.rows
@@ -357,20 +357,6 @@ private object SimdKernel {
     out
   }
 
-  /** Register-tiled micro-kernel experiment: 2 output rows × 4 j-vectors
-    * (8 live accumulator vectors — inside C2's register budget, where
-    * the earlier >8-accumulator tile spilled and ran 6× slower) held in
-    * registers across the whole k-chunk, so the per-k out-row
-    * load/store chain of the axpy form — its throughput ceiling —
-    * disappears: out is touched once per chunk per tile instead of once
-    * per k. Accumulation stays `acc.add(vb.mul(va))` (two roundings,
-    * exactly `out += a*b`) with k ascending per (i,j) across ascending
-    * chunks — the same IEEE sequence as [[Kernels.matmulNaive]], so
-    * KernelsSpec's bit-parity pin holds (the tile adds explicit +0.0 for
-    * zero a-elements like the axpy form; same finite-input caveat).
-    * Edges (row remainder, j past the last full tile) fall through to
-    * the axpy update with identical ordering.
-    */
   /** The 2-row × 4-vector micro-kernel body as its OWN method, on
     * purpose: called once per (i-pair, j-tile, k-chunk) — hundreds of
     * thousands of times per 1000³ block — it crosses C2's invocation
@@ -424,6 +410,20 @@ private object SimdKernel {
     acc13.intoArray(out, oo1j + 3 * vlen)
   }
 
+  /** Register-tiled micro-kernel experiment: 2 output rows × 4 j-vectors
+    * (8 live accumulator vectors — inside C2's register budget, where
+    * the earlier >8-accumulator tile spilled and ran 6× slower) held in
+    * registers across the whole k-chunk, so the per-k out-row
+    * load/store chain of the axpy form — its throughput ceiling —
+    * disappears: out is touched once per chunk per tile instead of once
+    * per k. Accumulation stays `acc.add(vb.mul(va))` (two roundings,
+    * exactly `out += a*b`) with k ascending per (i,j) across ascending
+    * chunks — the same IEEE sequence as [[Kernels.matmulNaive]], so
+    * KernelsSpec's bit-parity pin holds (the tile adds explicit +0.0 for
+    * zero a-elements like the axpy form; same finite-input caveat).
+    * Edges (row remainder, j past the last full tile) fall through to
+    * the axpy update with identical ordering.
+    */
   def matmulRegTile(a: MatrixBlock, b: MatrixBlock): Array[Double] = {
     require(a.cols == b.rows, s"inner dim ${a.cols} != ${b.rows}")
     val m = a.rows

@@ -30,31 +30,19 @@ import graft.functions.TextFunctions._
   */
 object Dedup {
 
-  /** Shared LSH materialization epilogue. Default: localCheckpoint the
-    * (small) result eagerly and release the intermediate caches —
-    * otherwise every LSH query leaks cached partitions for the session
-    * lifetime (localCheckpoint blocks are GC-cleaned by the
-    * ContextCleaner, unlike CacheManager entries).
-    *
-    * CAVEATS (localCheckpoint): (1) eager — the whole pipeline runs at
-    * operator-construction time, not at the caller's action; (2) lineage
-    * is truncated into executor-local blocks, so on a real cluster an
-    * executor loss (or dynamic-allocation decommission) makes the
-    * checkpointed partitions unrecoverable and downstream actions fail.
-    * On a cluster with executor churn set
-    * `spark.graft.dedup.materialize=none`: the plan is returned lazy with
-    * its lineage intact and the caches stay persisted — the CALLER must
-    * unpersist (or write the result to reliable storage) when done.
+  /** Shared LSH materialization epilogue: localCheckpoint the (small)
+    * result eagerly and release the intermediate caches — otherwise
+    * every LSH query leaks cached partitions for the session lifetime
+    * (localCheckpoint blocks are GC-cleaned by the ContextCleaner,
+    * unlike CacheManager entries). The whole pipeline therefore runs at
+    * operator-construction time, not at the caller's action, and its
+    * lineage is truncated into executor-local blocks: on a cluster with
+    * executor churn a lost executor fails downstream actions.
     */
   private def materialize(result: DataFrame, caches: DataFrame*): DataFrame = {
-    val mode = result.sparkSession.conf
-      .get("spark.graft.dedup.materialize", "localCheckpoint")
-    if (mode == "none") result
-    else {
-      val out = result.localCheckpoint(true)
-      caches.foreach(_.unpersist())
-      out
-    }
+    val out = result.localCheckpoint(true)
+    caches.foreach(_.unpersist())
+    out
   }
 
   /** Exact dedup by content fingerprint: one row per distinct key with the
@@ -220,8 +208,8 @@ object Dedup {
   /** N-gram (word shingle) jaccard near-dup pairs — order-sensitive variant.
     * Same LSH pruning as [[minhashPairs]], verified with exact shingle
     * jaccard.
-    */
-  /** r=2 geometry (not r=4): the 0.5 threshold needs per-band collision
+    *
+    * r=2 geometry (not r=4): the 0.5 threshold needs per-band collision
     * p=j² ≈ 0.25 at the margin; with b=48 the miss probability at j=0.5 is
     * (1-0.25)⁴⁸ ≈ 1e-6. The 3-gram shingle space is sparse enough that
     * background pairs stay rare even at r=2.
@@ -273,8 +261,8 @@ object Dedup {
     * every arriving batch at 100 TB — re-shuffles in neither.
     * Session-survivable, unlike the in-memory index's executor-pinned
     * caches.
-    */
-  /** Bucket-count choice: an explicit `numBuckets` wins; otherwise an
+    *
+    * Bucket-count choice: an explicit `numBuckets` wins; otherwise an
     * `advisor` applies the Lachesis sizing rule
     * ([[graft.advisor.PlacementAdvisor.recommendBuckets]] — power-of-two
     * count keeping each bucket near `targetRowsPerBucket` rows, sized
@@ -825,7 +813,7 @@ object Dedup {
       stream: DataFrame, perBatch: DataFrame => DataFrame,
       sink: Option[(graft.storage.SetCatalog, String, String)]): DataFrame = {
     val (q, result) = startProbe(stream, perBatch, sink)
-    try q.processAllAvailable() finally q.stop()
+    drainAndStop(q)
     result()
   }
 
@@ -851,19 +839,15 @@ object Dedup {
         cat.createSet(db, set, emptyOut, policy = "none")
     }
     var acc: Option[DataFrame] = None
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val out = perBatch(batch.toDF())
-        sink match {
-          case Some((cat, db, set)) => cat.appendToSet(db, set, out)
-          case None =>
-            acc = Some(acc.map(_.unionByName(out)).getOrElse(out)
-              .localCheckpoint(eager = true))
-        }
-        ()
+    val q = startBatches(stream) { batch =>
+      val out = perBatch(batch)
+      sink match {
+        case Some((cat, db, set)) => cat.appendToSet(db, set, out)
+        case None =>
+          acc = Some(acc.map(_.unionByName(out)).getOrElse(out)
+            .localCheckpoint(eager = true))
       }
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .start()
+    }
     (q, () => sink match {
       case Some((cat, db, set)) => cat.scanSet(db, set)
       case None => acc.getOrElse(
@@ -871,6 +855,30 @@ object Dedup {
         emptyOut)
     })
   }
+
+  /** Start `stream` as a foreachBatch query (append output mode) that
+    * runs `body` on every micro-batch — the one place a foreachBatch
+    * stream starts: [[startProbe]], the standing-index stream appends
+    * and [[graft.streaming.EventStreams.upsertSnapshot]] all go through
+    * it. The stream runs in the caller's session: with
+    * `spark.sql.artifact.isolation.enabled` on there, every stream query
+    * gets a fresh class loader and recompiles its generated code.
+    */
+  private[graft] def startBatches(stream: DataFrame)(body: DataFrame => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    stream.writeStream
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+        body(batch.toDF())
+      }
+      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
+      .start()
+
+  /** Run every micro-batch already available to `q`, then stop it —
+    * also when a batch fails.
+    */
+  private[graft] def drainAndStop(
+      q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
+    try q.processAllAvailable() finally q.stop()
 
   /** Streaming form of [[spansAgainstStoredIndex]] — per-micro-batch
     * probe of the CATALOG-PERSISTED gram index, completing streaming
@@ -1081,16 +1089,11 @@ object Dedup {
       maxHamming: Int = 3, maxBucket: Int = 200): DataFrame = {
     // single-file corpus → one scan partition; spread the UDF work.
     // Persisted: the (id, sh) scalars feed the hot-bucket scan and both
-    // self-join sides — without the cache the per-doc UDF runs 3×. Under
-    // materialize=none the cache would be unreachable by the caller (the
-    // mode's unpersist contract), so skip it and pay the recompute.
-    val sh0 = Parallelism.ensureWidth(docs)
+    // self-join sides — without the cache the per-doc UDF runs 3×.
+    val sh = Parallelism.ensureWidth(docs)
       .select(col(idCol).as("id"),
         simhash64(wordSet(col(textCol))).as("sh"))
-    val sh =
-      if (docs.sparkSession.conf
-          .get("spark.graft.dedup.materialize", "localCheckpoint") == "none") sh0
-      else sh0.persist()
+      .persist()
     val banded = sh.select(col("id"), col("sh"),
       explode(array((0 until 4).map(q => struct(lit(q).as("q"),
         shiftrightunsigned(col("sh"), q * 16)
@@ -1194,11 +1197,6 @@ object Dedup {
     materialize(out, withSig)
   }
 
-  /** Embedding cosine near-dup pairs. Brute-force all-pairs baseline —
-    * correct at any scale but O(n²); the scale path is
-    * [[cosineLshPairs]] (hyperplane LSH) or
-    * [[SimilaritySearch.ivfTopK]]-style bucketing.
-    */
   /** Duplicate k-gram SPANS — substring-level exact dedup (the
     * "deduplicate repeated passages, not documents" family, here as
     * hashed k-token windows rather than a suffix array): a window of `k`
@@ -1253,8 +1251,8 @@ object Dedup {
     * 16-byte fingerprints. Per-doc results depend only on that doc and
     * the static index, so per-batch outputs union to the one-shot
     * result.
-    */
-  /** Same bucket-count choice as [[persistLshIndex]]: explicit wins,
+    *
+    * Same bucket-count choice as [[persistLshIndex]]: explicit wins,
     * then the advisor's sizing rule over the distinct-gram count, then
     * the session shuffle-partition default. The gram frame persists
     * around the advisor's count so the fingerprint pipeline runs once.
@@ -1623,24 +1621,6 @@ object Dedup {
       idCol, k)
   }
 
-  /** The ACTION half of [[duplicateSpans]]: rewrite each document with
-    * every duplicated k-token window removed EXCEPT at its corpus-
-    * canonical first site (minimum (doc, position)) — the exact-substring
-    * dedup apply step: later copies of a repeated passage are stripped
-    * and a verbatim duplicate document collapses to empty. The canonical
-    * occurrence survives unless a DIFFERENT duplicated window overlapping
-    * it is itself non-canonical (token removal is the union over
-    * non-canonical windows — the same overlap approximation every
-    * window-hash exact-substring dedup makes).
-    * Returns every input doc as (idCol, clean_text, n_removed).
-    *
-    * Scale shape: canonical-site election is a min(struct) aggregate on
-    * the window fingerprint (map-side combine — no per-gram window
-    * sort); removed positions explode k rows per non-canonical window;
-    * the rebuild is one per-document aggregate whose state is bounded by
-    * the document's own token count (the same bound as reading the doc).
-    * No global order anywhere.
-    */
   /** Shared (id, pos, fingerprint) window stream for the span family:
     * one codegen'd [[graft.functions.ShingleExpressions.wordShinglesAll]]
     * pass per row (position order, duplicates preserved — the same
@@ -1677,6 +1657,24 @@ object Dedup {
         unhex(md5(col("gram").cast("binary"))).as("g"))
       .filter(col("g").isNotNull)
 
+  /** The ACTION half of [[duplicateSpans]]: rewrite each document with
+    * every duplicated k-token window removed EXCEPT at its corpus-
+    * canonical first site (minimum (doc, position)) — the exact-substring
+    * dedup apply step: later copies of a repeated passage are stripped
+    * and a verbatim duplicate document collapses to empty. The canonical
+    * occurrence survives unless a DIFFERENT duplicated window overlapping
+    * it is itself non-canonical (token removal is the union over
+    * non-canonical windows — the same overlap approximation every
+    * window-hash exact-substring dedup makes).
+    * Returns every input doc as (idCol, clean_text, n_removed).
+    *
+    * Scale shape: canonical-site election is a min(struct) aggregate on
+    * the window fingerprint (map-side combine — no per-gram window
+    * sort); removed positions explode k rows per non-canonical window;
+    * the rebuild is one per-document aggregate whose state is bounded by
+    * the document's own token count (the same bound as reading the doc).
+    * No global order anywhere.
+    */
   def stripDuplicateSpans(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 8): DataFrame = {
     val toks = docs
@@ -1901,18 +1899,6 @@ object Dedup {
       routeCells = g.routeCells)
   }
 
-  /** Brute-force cosine near-dup pairs — the EXACT regime of a
-    * two-regime design whose scale path is [[cosineLshPairs]] (lexical
-    * family: [[minHashLshPairs]]; paraphrase family: [[semanticPairs]]).
-    * The plan is a deliberate O(n²) cross join, correct and fine for
-    * oracle fixtures and re-rank pools; `maxRows` is the loud size gate
-    * (mirroring `BlockMatrix.inverse`'s `maxN`) that refuses to silently
-    * attempt an n² plan on a corpus-sized input — at the default bound
-    * the pair count already reaches ~5×10⁹. The gate's count runs over
-    * an eagerly-materialized frame, so the (often derived) embedding
-    * input is evaluated once, not once for the count and once for the
-    * pair scan.
-    */
   /** Persist a standing SEMANTIC index over a corpus: the SemDeDup
     * codebook (sized by [[autoClusters]] unless pinned) trained once,
     * plus the assigned corpus vectors partitioned one directory per
@@ -1984,24 +1970,16 @@ object Dedup {
     * arriving embeddings joins the standing semantic index (assigned
     * under the frozen codebook, appended into its cell's directory).
     * Batching-invariant — a vector's cell depends only on (vector,
-    * codebook). The stream runs in the caller's session: with
-    * `spark.sql.artifact.isolation.enabled` on there, every stream query
-    * gets a fresh class loader and recompiles its generated code.
+    * codebook). Runs through [[startBatches]].
     */
   def streamAppendToSemanticIndex(
       stream: DataFrame, catalog: graft.storage.SetCatalog,
       db: String, name: String, idCol: String, vecCol: String,
-      rebuildIfDrifted: Boolean = false, driftFraction: Double = 0.5): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        appendToSemanticIndex(catalog, db, name, batch.toDF(), idCol, vecCol,
-          rebuildIfDrifted, driftFraction)
-        ()
-      }
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .start()
-    try q.processAllAvailable() finally q.stop()
-  }
+      rebuildIfDrifted: Boolean = false, driftFraction: Double = 0.5): Unit =
+    drainAndStop(startBatches(stream) { batch =>
+      appendToSemanticIndex(catalog, db, name, batch, idCol, vecCol,
+        rebuildIfDrifted, driftFraction)
+    })
 
   /** Fraction of the semantic index appended since its codebook was
     * trained — two sidecar reads, O(1), the ANN tiers' drift dial
@@ -2126,36 +2104,39 @@ object Dedup {
       semanticProbeFn(catalog, db, name, idCol, vecCol, threshold), sink)
 
   /** Per-batch probe closure of [[streamSemanticAgainstIndex]] — the
-    * re-resolution happens HERE, once per micro-batch. Package-visible
-    * so the mid-stream lifecycle specs can drive it through
-    * [[startProbe]] and interleave appends/rebuilds between batches.
+    * re-resolution happens HERE, once per micro-batch. The codebook
+    * comes from the catalog memo ([[SimilaritySearch.loadIndexCodebook]]):
+    * the O(k·d) centroid collect (~100 MB at a 200k-cell semantic
+    * codebook) runs once per codebook GENERATION, shared with the
+    * index's appends — which never change the codebook — and re-runs
+    * exactly when a rebuild swapped a new generation in
+    * (`catalog.memoDecodes` of the centroids set counts the collects).
+    * The VECTORS plan still re-resolves every batch: that is where
+    * appends land. Package-visible so the mid-stream lifecycle specs can
+    * drive it through [[startProbe]] and interleave appends/rebuilds
+    * between batches.
     */
   private[graft] def semanticProbeFn(
       catalog: graft.storage.SetCatalog, db: String, name: String,
       idCol: String, vecCol: String, threshold: Double): DataFrame => DataFrame =
-    semanticProbeFnCounted(catalog, db, name, idCol, vecCol, threshold)._1
+    batch => semanticBatchPairs(batch,
+      SimilaritySearch.loadIndexCodebook(batch.sparkSession, catalog, db, name),
+      catalog.scanSet(db, s"${name}_vectors"), idCol, vecCol, threshold)
 
-  /** [[semanticProbeFn]] plus its codebook-collect counter — the
-    * observable surface the cache spec pins. The codebook comes from the
-    * catalog memo ([[SimilaritySearch.loadIndexCodebook]]): the O(k·d)
-    * centroid collect (~100 MB at a 200k-cell semantic codebook) runs
-    * once per codebook GENERATION, shared with the index's appends —
-    * which never change the codebook — and re-runs exactly when a
-    * rebuild swapped a new generation in. The VECTORS plan still
-    * re-resolves every batch: that is where appends land. The counter
-    * is the memo's decode count for the index's centroids set.
+  /** Brute-force embedding cosine near-dup pairs — the EXACT regime of
+    * a two-regime design whose scale path is [[cosineLshPairs]]
+    * (hyperplane LSH) or [[SimilaritySearch.ivfTopK]]-style bucketing
+    * (lexical family: [[minHashLshPairs]]; paraphrase family:
+    * [[semanticPairs]]).
+    * The plan is a deliberate O(n²) cross join, correct and fine for
+    * oracle fixtures and re-rank pools; `maxRows` is the loud size gate
+    * (mirroring `BlockMatrix.inverse`'s `maxN`) that refuses to silently
+    * attempt an n² plan on a corpus-sized input — at the default bound
+    * the pair count already reaches ~5×10⁹. The gate's count runs over
+    * an eagerly-materialized frame, so the (often derived) embedding
+    * input is evaluated once, not once for the count and once for the
+    * pair scan.
     */
-  private[graft] def semanticProbeFnCounted(
-      catalog: graft.storage.SetCatalog, db: String, name: String,
-      idCol: String, vecCol: String, threshold: Double)
-      : (DataFrame => DataFrame, () => Int) = {
-    val fn = (batch: DataFrame) =>
-      semanticBatchPairs(batch,
-        SimilaritySearch.loadIndexCodebook(batch.sparkSession, catalog, db, name),
-        catalog.scanSet(db, s"${name}_vectors"), idCol, vecCol, threshold)
-    (fn, () => catalog.memoDecodes(db, s"${name}_centroids"))
-  }
-
   def cosinePairs(
       emb: DataFrame, idCol: String, vecCol: String,
       threshold: Double, maxRows: Long = 100000L): DataFrame = {

@@ -19,48 +19,33 @@ object MlWorkloads {
   /** PageRank over an edge list (src, dst). Dangling mass is redistributed
     * uniformly so ranks sum to n every iteration (the standard formulation).
     *
-    * Lineage control (`spark.graft.pagerank.materialize`):
-    *  - `eager` (default): `localCheckpoint(eager = true)` every
-    *    `checkpointEvery` iterations — one job per checkpoint, the same
-    *    job-per-iteration shape as the reference's client loop
-    *    (PageRank.cc re-submits per iteration). Measured fastest at
-    *    fixture scale: all A/B'd variants (lazy per-1/per-2, eager per-2,
-    *    none) were 12-47% slower because deferring materialization makes
-    *    the shared persisted invariants below materialize redundantly
-    *    inside one action.
-    *  - `lazy`: `localCheckpoint(eager = false)` — cuts lineage at plan
-    *    compile time without running a job per iteration; everything
-    *    executes inside the caller's single action.
-    *  - `none`: no truncation — only safe for small `iterations` (the rank
-    *    frame is referenced twice per iteration, so the plan DOUBLES each
-    *    unchecked iteration).
-    * localCheckpoint blocks are executor-local: on a cluster with executor
-    * churn, prefer `lazy`/`none` with few iterations or reliable
-    * checkpointing (same caveat as [[graft.operators.Dedup]]'s materialize
-    * gate).
+    * Lineage control: `localCheckpoint(eager = true)` every
+    * `checkpointEvery` iterations — one job per checkpoint, the same
+    * job-per-iteration shape as the reference's client loop
+    * (PageRank.cc re-submits per iteration). Measured fastest at fixture
+    * scale: lazy checkpoints (per 1 and per 2 iterations), eager per 2
+    * and no truncation were 12-47% slower, because deferring
+    * materialization makes the shared persisted invariants below
+    * materialize redundantly inside one action. localCheckpoint blocks
+    * are executor-local, so on a cluster with executor churn a lost
+    * executor fails the next action that reads them.
     */
   def pageRank(
       spark: SparkSession, edges: DataFrame, iterations: Int = 10,
       damping: Double = 0.85, checkpointEvery: Int = 1): DataFrame = {
-    val mode = spark.conf.get("spark.graft.pagerank.materialize", "eager")
     // loop invariants, persisted: every iteration references them, and an
     // unpersisted frame would re-execute its whole upstream plan per
-    // iteration per reference
-    // EAGER mode truncates the edge lineage outright (localCheckpoint):
-    // a live upstream plan (scan ⋈ scan → distinct) kept re-entering the
+    // iteration per reference. The edge lineage is truncated outright
+    // (localCheckpoint): a live
+    // upstream plan (scan ⋈ scan → distinct) kept re-entering the
     // per-iteration jobs through plan fragments the cache substitution
     // does not cover — profiled at sf0.1 as ~2.5× the loop's whole CPU.
-    // Lazy/none modes keep the persist-only, no-build-time-job contract.
-    val e =
-      if (mode == "eager")
-        edges.select(col("src"), col("dst")).localCheckpoint(eager = true)
-      else edges.select(col("src"), col("dst")).persist()
+    val e = edges.select(col("src"), col("dst")).localCheckpoint(eager = true)
     val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("out_deg")).persist()
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct().persist()
-    // node count as a 1-row frame, NOT a driver-side count(): the whole
-    // loop then compiles into the caller's single action — no build-time
-    // job materializes the caches eagerly
+    // node count as a 1-row frame, NOT a driver-side count(): n stays in
+    // the per-iteration plans as a broadcast scalar
     val nn = nodes.agg(count(lit(1)).cast("double").as("n"))
 
     // loop invariants hoisted and persisted: the edge⋈degree join and the
@@ -70,13 +55,12 @@ object MlWorkloads {
       .select(col("src"), col("dst"), col("out_deg")).persist()
     val sinks = nodes.join(outDeg.withColumnRenamed("src", "node"),
       Seq("node"), "left_anti").persist() // nodes with no outgoing edges
-    // EAGER mode pre-materializes the invariant caches with one action
-    // before the loop: iteration 1 otherwise computes them inside a
-    // multi-job step (the scalars broadcast build and the checkpoint
-    // job race into the same cold cache and each re-derive the
-    // uncached subtrees) — profiled at sf0.1 as ~3x the whole loop's
-    // CPU. Lazy/none modes keep the no-build-time-job contract.
-    if (mode == "eager") { sinks.count(); ew.count() }
+    // the invariant caches are materialized with one action before the
+    // loop: iteration 1 otherwise computes them inside a multi-job step
+    // (the scalars broadcast build and the checkpoint job race into the
+    // same cold cache and each re-derive the uncached subtrees) —
+    // profiled at sf0.1 as ~3x the whole loop's CPU
+    sinks.count(); ew.count()
     var ranks = nodes.withColumn("rank", lit(1.0))
     for (i <- 1 to iterations) {
       val contribs = ew
@@ -96,22 +80,17 @@ object MlWorkloads {
           (lit(1 - damping) + lit(damping) *
             (coalesce(col("in_sum"), lit(0.0)) +
               col("dangling_sum") / col("n"))).as("rank"))
-      if (i % checkpointEvery == 0 && mode != "none")
-        ranks = ranks.localCheckpoint(eager = mode == "eager")
-    }
-    // On the eager path the final ranks are materialized (checkpoint the
-    // tail iterations if the loop didn't land on a checkpoint boundary),
-    // so the loop invariants can be released here — repeated calls in one
-    // session (bench loops, notebooks) otherwise accumulate cached blocks
-    // until eviction pressure distorts the latencies being measured. In
-    // lazy/none modes nothing has executed yet — the invariants are still
-    // needed by the caller's action, so releasing them is the caller's
-    // contract (they opted into plan-compile-time semantics).
-    if (mode == "eager") {
-      if (iterations % checkpointEvery != 0)
+      if (i % checkpointEvery == 0)
         ranks = ranks.localCheckpoint(eager = true)
-      Seq(e, outDeg, nodes, ew, sinks).foreach(_.unpersist(blocking = false))
     }
+    // the final ranks are materialized (checkpoint the tail iterations if
+    // the loop didn't land on a checkpoint boundary), so the loop
+    // invariants can be released here — repeated calls in one session
+    // (bench loops, notebooks) otherwise accumulate cached blocks until
+    // eviction pressure distorts the latencies being measured
+    if (iterations % checkpointEvery != 0)
+      ranks = ranks.localCheckpoint(eager = true)
+    Seq(e, outDeg, nodes, ew, sinks).foreach(_.unpersist(blocking = false))
     ranks
   }
 

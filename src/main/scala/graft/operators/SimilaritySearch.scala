@@ -40,21 +40,6 @@ object SimilaritySearch {
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
   }
 
-  /** Train a coarse quantizer: k-means over a collected sample (the
-    * standard IVF recipe — the codebook is tiny and training data is a
-    * bounded sample, so driver-side iteration is the scalable design,
-    * mirroring how the reference runs iterative ML as client-side loops,
-    * e.g. reference: src/tests/source/TestKMeans.cc).
-    *
-    * The sample is the `sampleLimit` rows with the SMALLEST md5(id) —
-    * the same deterministic-hash kernel as [[Sampling.stratified]], so
-    * it is uniform over the corpus (an id-prefix sample is whatever the
-    * id assignment correlates with: crawl order, shard, tenant) yet
-    * rerun-stable and oracle-reproducible. The plan is a
-    * TakeOrderedAndProject (per-partition k-bounded heap + driver merge
-    * of k-row slices — never a global sort), so the cost at 100 TB is
-    * one scan of (id, vector), and the heap holds 10k rows.
-    */
   /** The shared deterministic training sample: the `sampleLimit` rows
     * with the smallest (md5(id), id), as raw double vectors — collected
     * ONCE and reusable by both the coarse quantizer and the PQ
@@ -167,6 +152,21 @@ object SimilaritySearch {
     */
   private[graft] val directSampleLimit = 65536
 
+  /** Train a coarse quantizer: k-means over a collected sample (the
+    * standard IVF recipe — the codebook is tiny and training data is a
+    * bounded sample, so driver-side iteration is the scalable design,
+    * mirroring how the reference runs iterative ML as client-side loops,
+    * e.g. reference: src/tests/source/TestKMeans.cc).
+    *
+    * The sample is the `sampleLimit` rows with the SMALLEST md5(id) —
+    * the same deterministic-hash kernel as [[Sampling.stratified]], so
+    * it is uniform over the corpus (an id-prefix sample is whatever the
+    * id assignment correlates with: crawl order, shard, tenant) yet
+    * rerun-stable and oracle-reproducible. The plan is a
+    * TakeOrderedAndProject (per-partition k-bounded heap + driver merge
+    * of k-row slices — never a global sort), so the cost at 100 TB is
+    * one scan of (id, vector), and the heap holds 10k rows.
+    */
   def trainCentroids(
       emb: DataFrame, nCentroids: Int, iters: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
@@ -551,17 +551,22 @@ object SimilaritySearch {
     val set = s"${name}_centroids"
     catalog.memoized(db, set, "index.codebook") {
       val df = catalog.scanSet(db, set)
-      // collected unordered and sorted here: buckets are 0..k-1, and an
-      // orderBy costs a sampling job plus a shuffle
-      val cents = df.select(col("bucket"), col("centroid")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-        .sortBy(_._1).map(_._2)
+      val cents = collectCentroids(df)
       val threshold =
         persistedRouteThreshold(df).getOrElse(sessionRouteThreshold(spark))
       Codebook.of(routeKernelFor(threshold, cents.length,
         df.columns.contains(TreeKernelMarker)), cents)
     }
   }
+
+  /** A persisted centroids set's vectors in bucket order. Collected
+    * unordered and sorted on the driver: buckets are 0..k-1, and an
+    * orderBy costs a sampling job plus a shuffle.
+    */
+  private def collectCentroids(centroidsDf: DataFrame): Array[Array[Double]] =
+    centroidsDf.select(col("bucket"), col("centroid")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+      .sortBy(_._1).map(_._2)
 
   /** Directory-fanout bound for the cell-partitioned vector set: one
     * directory PER CELL is the right layout at ANN-scale k (16-256
@@ -1039,8 +1044,8 @@ object SimilaritySearch {
     * remove+rename) — source and destination are the same set here (the
     * cells are the corpus layout), so an in-place overwrite would read
     * what it is deleting.
-    */
-  /** `nCentroids = 0` (the default) keeps the standing codebook's size;
+    *
+    * `nCentroids = 0` (the default) keeps the standing codebook's size;
     * a positive value RE-SIZES the codebook at rebuild — the semantic
     * tier's need, where k tracks corpus growth by the autoClusters rule
     * ([[graft.operators.Dedup.rebuildSemanticIndex]] computes it from
@@ -1094,9 +1099,7 @@ object SimilaritySearch {
     * end to end. Batching-invariant by construction (a vector's bucket
     * depends only on the vector and the codebook), so any batching of
     * the same arrivals produces the same index as one batch append.
-    * The stream runs in the caller's session: with
-    * `spark.sql.artifact.isolation.enabled` on there, every stream query
-    * gets a fresh class loader and recompiles its generated code.
+    * Runs through [[graft.operators.Dedup.startBatches]].
     */
   def streamAppendToIvfIndex(
       stream: DataFrame, catalog: graft.storage.SetCatalog,
@@ -1105,34 +1108,12 @@ object SimilaritySearch {
       rebuildIfDrifted: Boolean = false,
       driftFraction: Double = 0.5): Unit = {
     val spark = stream.sparkSession
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        appendToIvfIndex(spark, catalog, db, name, batch.toDF(), idCol, vecCol,
-          rebuildIfDrifted, driftFraction)
-        ()
-      }
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    Dedup.drainAndStop(Dedup.startBatches(stream) { batch =>
+      appendToIvfIndex(spark, catalog, db, name, batch, idCol, vecCol,
+        rebuildIfDrifted, driftFraction)
+    })
   }
 
-  /** Product-quantization codebooks: the vector's `m` disjoint dim-slices
-    * each get an independent k-means sub-codebook trained over the SAME
-    * deterministic-hash sample as [[trainCentroids]] (smallest md5(id)
-    * rows — uniform, rerun-stable, oracle-reproducible). Same Lloyd
-    * kernel per subspace: seed = first `kSub` sample slices, sequential
-    * diff² accumulation, first-min tiebreak, empty clusters keep their
-    * centroid. Returns codebooks(sub)(centroid)(dimInSub).
-    *
-    * Why PQ at 100 TB: a 64-float embedding is 256 B; its PQ code is `m`
-    * sub-centroid ids of log2(kSub) bits each — 8 B packed at the
-    * 16×16 defaults, a 32× smaller table to scan.
-    * ADC search reads ONLY the code table; full vectors are touched for
-    * the shortlist re-rank alone. The compressed scan is what makes
-    * corpus-wide candidate generation IO-feasible where the raw vectors
-    * would be 100 TB (PQ per Jégou et al., "Product Quantization for
-    * Nearest Neighbor Search", TPAMI 2011 — public method).
-    */
   /** Unit-normalize (sequential Σv² then sqrt — the oracle computes the
     * same sum); the zero vector stays zero. PQ here targets COSINE
     * ranking: over unit vectors ‖q−n‖² = 2 − 2·cos(q,n), so Euclidean
@@ -1162,6 +1143,23 @@ object SimilaritySearch {
     arr
   }
 
+  /** Product-quantization codebooks: the vector's `m` disjoint dim-slices
+    * each get an independent k-means sub-codebook trained over the SAME
+    * deterministic-hash sample as [[trainCentroids]] (smallest md5(id)
+    * rows — uniform, rerun-stable, oracle-reproducible). Same Lloyd
+    * kernel per subspace: seed = first `kSub` sample slices, sequential
+    * diff² accumulation, first-min tiebreak, empty clusters keep their
+    * centroid. Returns codebooks(sub)(centroid)(dimInSub).
+    *
+    * Why PQ at 100 TB: a 64-float embedding is 256 B; its PQ code is `m`
+    * sub-centroid ids of log2(kSub) bits each — 8 B packed at the
+    * 16×16 defaults, a 32× smaller table to scan.
+    * ADC search reads ONLY the code table; full vectors are touched for
+    * the shortlist re-rank alone. The compressed scan is what makes
+    * corpus-wide candidate generation IO-feasible where the raw vectors
+    * would be 100 TB (PQ per Jégou et al., "Product Quantization for
+    * Nearest Neighbor Search", TPAMI 2011 — public method).
+    */
   def trainPqCodebooks(
       emb: DataFrame, m: Int, kSub: Int, iters: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
@@ -1512,7 +1510,7 @@ object SimilaritySearch {
       idCol: String = "vec_id", vecCol: String = "embedding",
       rebuildIfDrifted: Boolean = false,
       driftFraction: Double = 0.5): Unit = {
-    val assign = Codebook.flat(loadIvfCentroids(catalog, db, name)).assignUdf
+    val assign = loadCoarseCodebook(catalog, db, name).assignUdf
     val encode = pqEncodeUdf(loadPqCodebooks(catalog, db, name))
     catalog.appendToPartitionedSet(db, s"${name}_codes",
       newEmb.select(col(idCol).as("neighbor_id"), encode(col(vecCol)).as("codes"),
@@ -1651,10 +1649,8 @@ object SimilaritySearch {
   }
 
   /** Streaming form of [[appendToIvfPqIndex]] — batching-invariant like
-    * its IVF and PQ siblings.
-    * The stream runs in the caller's session: with
-    * `spark.sql.artifact.isolation.enabled` on there, every stream query
-    * gets a fresh class loader and recompiles its generated code.
+    * its IVF and PQ siblings. Runs through
+    * [[graft.operators.Dedup.startBatches]].
     */
   def streamAppendToIvfPqIndex(
       stream: DataFrame, catalog: graft.storage.SetCatalog,
@@ -1663,15 +1659,10 @@ object SimilaritySearch {
       rebuildIfDrifted: Boolean = false,
       driftFraction: Double = 0.5): Unit = {
     val spark = stream.sparkSession
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        appendToIvfPqIndex(spark, catalog, db, name, batch.toDF(), idCol, vecCol,
-          rebuildIfDrifted, driftFraction)
-        ()
-      }
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    Dedup.drainAndStop(Dedup.startBatches(stream) { batch =>
+      appendToIvfPqIndex(spark, catalog, db, name, batch, idCol, vecCol,
+        rebuildIfDrifted, driftFraction)
+    })
   }
 
   /** Search a persisted IVF-PQ index: load both models (tiny), compute
@@ -1685,24 +1676,9 @@ object SimilaritySearch {
       spark: SparkSession, catalog: graft.storage.SetCatalog,
       db: String, name: String, queries: DataFrame, k: Int,
       nprobe: Int = 4, shortlist: Int = 10,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    searchIvfPqWithModels(catalog, db, name, queries, k, nprobe, shortlist,
-      idCol, vecCol, loadIvfCentroids(catalog, db, name),
-      loadPqCodebooks(catalog, db, name))
-
-  /** [[searchIvfPqIndex]] after its model loads — the per-batch body the
-    * streaming probe reuses with generation-cached models (the code and
-    * vector sets are re-planned HERE, once per call: that is where
-    * appends land).
-    */
-  private def searchIvfPqWithModels(
-      catalog: graft.storage.SetCatalog,
-      db: String, name: String, queries: DataFrame, k: Int,
-      nprobe: Int, shortlist: Int, idCol: String, vecCol: String,
-      centroids: Array[Array[Double]],
-      codebooks: Array[Array[Array[Double]]]): DataFrame = {
-    val probe = probeUdf(centroids, nprobe)
-    val lut = pqLutUdf(codebooks)
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    val probe = probeUdf(loadCoarseCodebook(catalog, db, name).centroids, nprobe)
+    val lut = pqLutUdf(loadPqCodebooks(catalog, db, name))
     val codes = catalog.scanSet(db, s"${name}_codes")
     val bucketType = codes.schema("bucket").dataType
     // static cell pruning on the bucket-partitioned code table — the
@@ -1765,27 +1741,40 @@ object SimilaritySearch {
     persistBuiltRows(spark, catalog, db, name)
   }
 
+  /** The PQ sub-codebooks of a PQ or IVF-PQ index, (sub, centroid)
+    * ordered, through the catalog memo: one collect per codebooks
+    * generation, shared by every append, search and stream batch (as
+    * [[loadIndexCodebook]] is for the IVF codebook). Collected unordered
+    * and sorted on the driver — an orderBy costs a sampling job plus a
+    * shuffle.
+    */
   private def loadPqCodebooks(
       catalog: graft.storage.SetCatalog, db: String,
-      name: String): Array[Array[Array[Double]]] =
-    catalog.scanSet(db, s"${name}_codebooks")
-      .orderBy(col("sub"), col("centroid")).collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](2).toArray))
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .map(_._2.map(_._2)).toArray
+      name: String): Array[Array[Array[Double]]] = {
+    val set = s"${name}_codebooks"
+    catalog.memoized(db, set, "pq.codebooks") {
+      catalog.scanSet(db, set)
+        .select(col("sub"), col("centroid"), col("components")).collect()
+        .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
+        .sortBy(r => (r._1, r._2))
+        .groupBy(_._1).toSeq.sortBy(_._1)
+        .map(_._2.map(_._3)).toArray
+    }
+  }
 
-  /** Bucket-ordered coarse-centroid collect of an IVF-PQ index — the
-    * model load shared by its append and search paths (IVF-PQ assigns
-    * with [[Codebook.flat]] at any k, so no routing witness is
-    * read here; the IVF and semantic indexes load through
-    * [[loadIndexCodebook]]).
+  /** The coarse codebook of an IVF-PQ index through the catalog memo,
+    * under its own key: IVF-PQ assigns with [[Codebook.flat]] at any k,
+    * so no routing witness is read here. The IVF and semantic indexes
+    * load through [[loadIndexCodebook]] instead, whose routing check
+    * would refuse a marker-less centroids set past the tree threshold.
     */
-  private def loadIvfCentroids(
-      catalog: graft.storage.SetCatalog, db: String,
-      name: String): Array[Array[Double]] =
-    catalog.scanSet(db, s"${name}_centroids")
-      .orderBy(col("bucket")).collect()
-      .map(_.getSeq[Double](1).toArray)
+  private def loadCoarseCodebook(
+      catalog: graft.storage.SetCatalog, db: String, name: String): Codebook = {
+    val set = s"${name}_centroids"
+    catalog.memoized(db, set, "ivfpq.codebook") {
+      Codebook.flat(collectCentroids(catalog.scanSet(db, set)))
+    }
+  }
 
   /** Incrementally extend a persisted PQ index: encode the NEW vectors
     * under the standing codebooks and append codes + vectors — no
@@ -1813,10 +1802,7 @@ object SimilaritySearch {
   /** Streaming form of [[appendToPqIndex]]: every micro-batch of
     * arriving embeddings is encoded under the standing codebooks and
     * appended. Batching-invariant by construction, like the IVF
-    * streaming append.
-    * The stream runs in the caller's session: with
-    * `spark.sql.artifact.isolation.enabled` on there, every stream query
-    * gets a fresh class loader and recompiles its generated code.
+    * streaming append. Runs through [[graft.operators.Dedup.startBatches]].
     */
   def streamAppendToPqIndex(
       stream: DataFrame, catalog: graft.storage.SetCatalog,
@@ -1825,15 +1811,10 @@ object SimilaritySearch {
       rebuildIfDrifted: Boolean = false,
       driftFraction: Double = 0.5): Unit = {
     val spark = stream.sparkSession
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        appendToPqIndex(spark, catalog, db, name, batch.toDF(), idCol, vecCol,
-          rebuildIfDrifted, driftFraction)
-        ()
-      }
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    Dedup.drainAndStop(Dedup.startBatches(stream) { batch =>
+      appendToPqIndex(spark, catalog, db, name, batch, idCol, vecCol,
+        rebuildIfDrifted, driftFraction)
+    })
   }
 
   /** Search a persisted PQ index: load the codebooks (tiny), ADC-scan
@@ -1846,20 +1827,8 @@ object SimilaritySearch {
       spark: SparkSession, catalog: graft.storage.SetCatalog,
       db: String, name: String, queries: DataFrame, k: Int,
       shortlist: Int = 10,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    searchPqWithModels(catalog, db, name, queries, k, shortlist, idCol,
-      vecCol, loadPqCodebooks(catalog, db, name))
-
-  /** [[searchPqIndex]] after its codebook load — the per-batch body the
-    * streaming probe reuses with generation-cached codebooks (the code
-    * and vector sets are re-planned HERE, once per call).
-    */
-  private def searchPqWithModels(
-      catalog: graft.storage.SetCatalog,
-      db: String, name: String, queries: DataFrame, k: Int,
-      shortlist: Int, idCol: String, vecCol: String,
-      codebooks: Array[Array[Array[Double]]]): DataFrame = {
-    val lut = pqLutUdf(codebooks)
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    val lut = pqLutUdf(loadPqCodebooks(catalog, db, name))
     val codes = catalog.scanSet(db, s"${name}_codes")
     val q = queries.select(col(idCol).as("query_id"), lut(col(vecCol)).as("lut"))
     val short = adcShortlist(codes.crossJoin(broadcast(q)), shortlist, k)
@@ -1878,20 +1847,9 @@ object SimilaritySearch {
       spark: SparkSession, catalog: graft.storage.SetCatalog,
       db: String, name: String, queries: DataFrame, k: Int,
       nprobe: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    searchIvfWithModels(catalog, db, name, queries, k, nprobe, idCol, vecCol,
-      loadIndexCodebook(spark, catalog, db, name).centroids)
-
-  /** [[searchIvfIndex]] after its codebook load — the per-batch body the
-    * streaming probe reuses with a generation-cached codebook (the
-    * vector set is re-planned HERE, once per call).
-    */
-  private def searchIvfWithModels(
-      catalog: graft.storage.SetCatalog,
-      db: String, name: String, queries: DataFrame, k: Int,
-      nprobe: Int, idCol: String, vecCol: String,
-      centroids: Array[Array[Double]]): DataFrame = {
-    val probe = probeUdf(centroids, nprobe)
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    val probe = probeUdf(loadIndexCodebook(spark, catalog, db, name).centroids,
+      nprobe)
     val vectors = catalog.scanSet(db, s"${name}_vectors")
     // partition-column type follows Hive directory inference (int), not
     // the written long — cast the probe side to whatever came back
@@ -1923,54 +1881,14 @@ object SimilaritySearch {
   // micro-batch of arriving QUERY vectors is searched against the
   // index's CURRENT generation — the LIVE-INDEX contract every stored-
   // index probe stream shares (see Dedup.streamSemanticAgainstIndex):
-  // the code/vector sets are re-planned inside the batch closure, so an
-  // append landing mid-stream is visible to every later batch and a
-  // rebuild swap is survived; the driver-side models (coarse centroids,
-  // PQ codebooks — O(k·d) collects) are generation-cached on the
-  // sidecars' explicit counters and re-collected exactly when a
+  // each batch runs the batch search itself, so the code/vector sets are
+  // re-planned per batch (an append landing mid-stream is visible to
+  // every later batch, a rebuild swap is survived), and the driver-side
+  // models (coarse centroids, PQ codebooks — O(k·d) collects) come from
+  // the catalog memo: decoded once per sidecar generation, shared with
+  // batch searches and appends, and re-decoded exactly when a
   // maintenance pass swapped a new generation in.
   // --------------------------------------------------------------------
-
-  /** Per-batch search closure of [[streamSearchIvfPqIndex]], plus its
-    * model-collect counter (the observable the cache spec pins). Models
-    * reload when EITHER sidecar generation moves — an IVF-PQ rebuild
-    * swaps centroids and codebooks as one marker group, but the cache
-    * must not trust that coupling.
-    */
-  private[graft] def ivfPqSearchProbeFnCounted(
-      catalog: graft.storage.SetCatalog, db: String, name: String,
-      k: Int, nprobe: Int = 4, shortlist: Int = 10,
-      idCol: String = "vec_id", vecCol: String = "embedding")
-      : (DataFrame => DataFrame, () => Int) = {
-    var cached: Option[(Long, Long,
-      Array[Array[Double]], Array[Array[Array[Double]]])] = None
-    var loadCount = 0
-    val fn = (batch: DataFrame) => {
-      val sc = catalog.metaStamp(db, s"${name}_centroids")
-      val sb = catalog.metaStamp(db, s"${name}_codebooks")
-      val (centroids, codebooks) = cached match {
-        case Some((c0, b0, ce, cb))
-            if c0 == sc && b0 == sb && sc != 0L && sb != 0L => (ce, cb)
-        case _ =>
-          val ce = loadIvfCentroids(catalog, db, name)
-          val cb = loadPqCodebooks(catalog, db, name)
-          cached = Some((sc, sb, ce, cb))
-          loadCount += 1
-          (ce, cb)
-      }
-      searchIvfPqWithModels(catalog, db, name, batch, k, nprobe, shortlist,
-        idCol, vecCol, centroids, codebooks)
-    }
-    (fn, () => loadCount)
-  }
-
-  private[graft] def ivfPqSearchProbeFn(
-      catalog: graft.storage.SetCatalog, db: String, name: String,
-      k: Int, nprobe: Int = 4, shortlist: Int = 10,
-      idCol: String = "vec_id", vecCol: String = "embedding")
-      : DataFrame => DataFrame =
-    ivfPqSearchProbeFnCounted(catalog, db, name, k, nprobe, shortlist,
-      idCol, vecCol)._1
 
   /** Streaming search of a persisted IVF-PQ index: every micro-batch of
     * arriving query vectors returns its top-k over the index's CURRENT
@@ -1986,25 +1904,8 @@ object SimilaritySearch {
       nprobe: Int = 4, shortlist: Int = 10,
       idCol: String = "vec_id", vecCol: String = "embedding",
       sink: Option[(graft.storage.SetCatalog, String, String)] = None): DataFrame =
-    graft.operators.Dedup.streamProbe(stream,
-      ivfPqSearchProbeFn(catalog, db, name, k, nprobe, shortlist,
-        idCol, vecCol), sink)
-
-  /** Per-batch search closure of [[streamSearchIvfIndex]] + its
-    * codebook-collect counter: the codebook comes from the catalog memo
-    * ([[loadIndexCodebook]]), so the counter is the memo's decode count
-    * for the index's centroids set.
-    */
-  private[graft] def ivfSearchProbeFnCounted(
-      catalog: graft.storage.SetCatalog, db: String, name: String,
-      k: Int, nprobe: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding")
-      : (DataFrame => DataFrame, () => Int) = {
-    val fn = (batch: DataFrame) =>
-      searchIvfWithModels(catalog, db, name, batch, k, nprobe, idCol,
-        vecCol, loadIndexCodebook(batch.sparkSession, catalog, db, name).centroids)
-    (fn, () => catalog.memoDecodes(db, s"${name}_centroids"))
-  }
+    Dedup.streamProbe(stream, batch => searchIvfPqIndex(batch.sparkSession,
+      catalog, db, name, batch, k, nprobe, shortlist, idCol, vecCol), sink)
 
   /** Streaming search of a persisted IVF index — [[searchIvfIndex]] per
     * micro-batch under the live-index contract.
@@ -2014,34 +1915,8 @@ object SimilaritySearch {
       db: String, name: String, k: Int, nprobe: Int = 4,
       idCol: String = "vec_id", vecCol: String = "embedding",
       sink: Option[(graft.storage.SetCatalog, String, String)] = None): DataFrame =
-    graft.operators.Dedup.streamProbe(stream,
-      ivfSearchProbeFnCounted(catalog, db, name, k, nprobe, idCol,
-        vecCol)._1, sink)
-
-  /** Per-batch search closure of [[streamSearchPqIndex]] + collect
-    * counter. */
-  private[graft] def pqSearchProbeFnCounted(
-      catalog: graft.storage.SetCatalog, db: String, name: String,
-      k: Int, shortlist: Int = 10,
-      idCol: String = "vec_id", vecCol: String = "embedding")
-      : (DataFrame => DataFrame, () => Int) = {
-    var cached: Option[(Long, Array[Array[Array[Double]]])] = None
-    var loadCount = 0
-    val fn = (batch: DataFrame) => {
-      val sb = catalog.metaStamp(db, s"${name}_codebooks")
-      val codebooks = cached match {
-        case Some((b0, cb)) if b0 == sb && sb != 0L => cb
-        case _ =>
-          val cb = loadPqCodebooks(catalog, db, name)
-          cached = Some((sb, cb))
-          loadCount += 1
-          cb
-      }
-      searchPqWithModels(catalog, db, name, batch, k, shortlist, idCol,
-        vecCol, codebooks)
-    }
-    (fn, () => loadCount)
-  }
+    Dedup.streamProbe(stream, batch => searchIvfIndex(batch.sparkSession,
+      catalog, db, name, batch, k, nprobe, idCol, vecCol), sink)
 
   /** Streaming search of a persisted PQ index — [[searchPqIndex]] per
     * micro-batch under the live-index contract.
@@ -2051,7 +1926,6 @@ object SimilaritySearch {
       db: String, name: String, k: Int, shortlist: Int = 10,
       idCol: String = "vec_id", vecCol: String = "embedding",
       sink: Option[(graft.storage.SetCatalog, String, String)] = None): DataFrame =
-    graft.operators.Dedup.streamProbe(stream,
-      pqSearchProbeFnCounted(catalog, db, name, k, shortlist, idCol,
-        vecCol)._1, sink)
+    Dedup.streamProbe(stream, batch => searchPqIndex(batch.sparkSession,
+      catalog, db, name, batch, k, shortlist, idCol, vecCol), sink)
 }

@@ -706,13 +706,6 @@ object PipelineQueries {
     SimilaritySearch.ivfTopK(spark, emb, emb.filter(col("vec_id") < 10), k = 5)
   }
 
-  /** Oracle for [[simIvf]]: the IVF search written out — 16-centroid
-    * coarse quantizer (3 unrolled Lloyd iterations, shared CTE
-    * generator), bucket assignment and 4-bucket probing both argmin with
-    * lowest-centroid tiebreak, then exact rounded-cosine top-5 within the
-    * probed buckets only (the oracle reproduces the ANN's bucket pruning,
-    * not a brute-force scan — results match the operator exactly).
-    */
   /** IVF probing + scoring tail shared by every IVF oracle: coarse
     * assignment of the WHOLE corpus under the trained codebook (`c3`),
     * 4-bucket probes for the query set, exact rounded cosine within the
@@ -756,6 +749,13 @@ object PipelineQueries {
 
   private val ivfSearchTailSql: String = ivfSearchTail(64)
 
+  /** Oracle for [[simIvf]]: the IVF search written out — 16-centroid
+    * coarse quantizer (3 unrolled Lloyd iterations, shared CTE
+    * generator), bucket assignment and 4-bucket probing both argmin with
+    * lowest-centroid tiebreak, then exact rounded-cosine top-5 within the
+    * probed buckets only (the oracle reproduces the ANN's bucket pruning,
+    * not a brute-force scan — results match the operator exactly).
+    */
   val simIvfSql: String =
     ExtendedQueries.lloydCtes(16, 3) + ",\n" + ivfSearchTailSql
 
@@ -910,12 +910,6 @@ object PipelineQueries {
     SimilaritySearch.ivfPqTopK(spark, emb, emb.filter(col("vec_id") < 10), k = 5)
   }
 
-  /** Oracle for [[simIvfPq]]: both kernel chains verbatim — the IVF
-    * coarse quantizer's Lloyd CTEs (c0..c3, raw vectors) and the PQ
-    * per-subspace chains (unit-normalized) — then coarse assignment +
-    * 4-bucket probes prune the candidate pairs, ADC ranks them, and the
-    * exact rounded-cosine re-rank scores the shortlist.
-    */
   /** `probeWhere` selects the QUERY rows (vec_id predicate over bdist);
     * `candWhere` restricts candidate (query, neighbor) pairs — the
     * two-generation predicate of the live-index streaming oracle, TRUE
@@ -982,6 +976,12 @@ object PipelineQueries {
          |  FROM scored) t WHERE rank <= 5""".stripMargin
   }
 
+  /** Oracle for [[simIvfPq]]: both kernel chains verbatim — the IVF
+    * coarse quantizer's Lloyd CTEs (c0..c3, raw vectors) and the PQ
+    * per-subspace chains (unit-normalized) — then coarse assignment +
+    * 4-bucket probes prune the candidate pairs, ADC ranks them, and the
+    * exact rounded-cosine re-rank scores the shortlist.
+    */
   val simIvfPqSql: String = ivfPqSearchSql("")
 
   /** Both models trained on the BUILT half only; assignment, encoding,

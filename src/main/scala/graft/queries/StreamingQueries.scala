@@ -446,25 +446,6 @@ object StreamingQueries {
       |FROM f LEFT JOIN cf ON cf.fp = f.fp
       |WHERE f.side = 1""".stripMargin
 
-  /** The streaming form of the cross-modal capstone
-    * ([[PipelineQueries.pipeAll]]): every micro-batch of arriving docs
-    * gets a full per-doc keep decision against THREE standing indexes
-    * built once over the corpus (docs < 250) — exact text hash, frame
-    * content, audio envelope — plus the stateless quality score,
-    * keep = quality ∧ ¬text-dup ∧ ¬frame-dup ∧ ¬audio-dup. This is the
-    * standing-ingest job shape a production multimodal pipeline runs:
-    * the corpus side never re-shuffles (all three indexes are bucketed
-    * on their fixed-width fingerprints), per-batch work is
-    * arrival-sized, and every decision depends only on the doc plus
-    * static state, so per-batch outputs union to the one-shot batch
-    * result. The quality gate is a FIXED threshold (0.36) by design:
-    * a corpus-median gate (pipe_all's batch form) is a global quantile
-    * no unbounded stream can compute exactly; a standing pipeline
-    * freezes the threshold from the corpus and re-derives it on
-    * re-index, which is what this models. q_score doubles are
-    * bit-identical across engines (txt_quality hash-proves it), so the
-    * threshold comparison is deterministic.
-    */
   /** The capstones' shared arrival stream: docs ≥ 250 plus the < 100
     * slice re-ingested under shifted ids (planted stream-side dups).
     */
@@ -547,6 +528,25 @@ object StreamingQueries {
       scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
   }
 
+  /** The streaming form of the cross-modal capstone
+    * ([[PipelineQueries.pipeAll]]): every micro-batch of arriving docs
+    * gets a full per-doc keep decision against THREE standing indexes
+    * built once over the corpus (docs < 250) — exact text hash, frame
+    * content, audio envelope — plus the stateless quality score,
+    * keep = quality ∧ ¬text-dup ∧ ¬frame-dup ∧ ¬audio-dup. This is the
+    * standing-ingest job shape a production multimodal pipeline runs:
+    * the corpus side never re-shuffles (all three indexes are bucketed
+    * on their fixed-width fingerprints), per-batch work is
+    * arrival-sized, and every decision depends only on the doc plus
+    * static state, so per-batch outputs union to the one-shot batch
+    * result. The quality gate is a FIXED threshold (0.36) by design:
+    * a corpus-median gate (pipe_all's batch form) is a global quantile
+    * no unbounded stream can compute exactly; a standing pipeline
+    * freezes the threshold from the corpus and re-derives it on
+    * re-index, which is what this models. q_score doubles are
+    * bit-identical across engines (txt_quality hash-proves it), so the
+    * threshold comparison is deterministic.
+    */
   def stPipeAll(spark0: SparkSession, d: String): DataFrame = {
     val spark = streamSession(spark0)
     val docs = graft.model.Tables.documents(spark, d)
@@ -1041,8 +1041,8 @@ object StreamingQueries {
       .MemoryStream[(Long, Seq[Float])]
     val (q, result) = graft.operators.Dedup.startProbe(
       input.toDS().toDF("vec_id", "embedding"),
-      graft.operators.SimilaritySearch.ivfPqSearchProbeFn(
-        cat, "idx", "emb", k = 5),
+      batch => graft.operators.SimilaritySearch.searchIvfPqIndex(spark,
+        cat, "idx", "emb", batch, k = 5),
       None)
     val hits = try {
       input.addData(slice(250, 255): _*)

@@ -13,23 +13,6 @@ import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** Spark SQL catalog plugin over the [[SetCatalog]] layout — the
-  * reference's (databaseName, setName) catalog surfaced as a first-class
-  * SQL namespace (reference: src/serverFunctionalities/headers/
-  * CatalogServer.h:59, CatalogClient.h — createDatabase/createSet/
-  * removeSet; clients address data as "db.set" strings). Register with
-  *
-  * {{{
-  *   spark.sql.catalog.graft      = graft.storage.GraftCatalog
-  *   spark.sql.catalog.graft.root = /path/to/sets
-  * }}}
-  *
-  * and every stored set is queryable as `graft.<db>.<set>` from plain SQL
-  * — SELECT, CTAS, DROP, SHOW TABLES — with scans planned by the native
-  * DSv2 parquet reader (full pushdown/pruning/vectorization; the catalog
-  * adds name resolution only, nothing sits between Catalyst and the
-  * files, so 100 TB scans plan identically to `spark.read.parquet`).
-  */
 /** Read-side delegate that hides a table's write capability — served for
   * bucketed sets, whose layout only [[SetCatalog.createBucketedSet]] may
   * produce (see [[GraftCatalog.loadTable]]).
@@ -48,6 +31,23 @@ private[storage] class ReadOnlyTable(delegate: Table)
       .newScanBuilder(options)
 }
 
+/** Spark SQL catalog plugin over the [[SetCatalog]] layout — the
+  * reference's (databaseName, setName) catalog surfaced as a first-class
+  * SQL namespace (reference: src/serverFunctionalities/headers/
+  * CatalogServer.h:59, CatalogClient.h — createDatabase/createSet/
+  * removeSet; clients address data as "db.set" strings). Register with
+  *
+  * {{{
+  *   spark.sql.catalog.graft      = graft.storage.GraftCatalog
+  *   spark.sql.catalog.graft.root = /path/to/sets
+  * }}}
+  *
+  * and every stored set is queryable as `graft.<db>.<set>` from plain SQL
+  * — SELECT, CTAS, DROP, SHOW TABLES — with scans planned by the native
+  * DSv2 parquet reader (full pushdown/pruning/vectorization; the catalog
+  * adds name resolution only, nothing sits between Catalyst and the
+  * files, so 100 TB scans plan identically to `spark.read.parquet`).
+  */
 class GraftCatalog extends TableCatalog with SupportsNamespaces {
   private var catalogName: String = _
   private var root: String = _

@@ -9,19 +9,6 @@ import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.DataSource
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
 
-/** Named-set storage — the reference's (databaseName, setName) catalog of
-  * paged sets (reference: src/builtInPDBObjects/headers/DistributedStorageAddSet.h,
-  * src/storage/headers/UserSet.h:38, catalog src/serverFunctionalities/
-  * headers/CatalogServer.h:59). Here: a root directory of parquet tables
-  * plus a sidecar metadata file recording the partition/bucket spec the
-  * advisor chose (the Lachesis decision — SURVEY.md §4.3).
-  *
-  * Scale note: a bucketed saved set is what makes later equi-joins on the
-  * bucket column shuffle-free (the reference's "local join" fast path,
-  * ScanUserSet.h:69-76) — Spark reads the bucket spec from the metastore;
-  * for path-based tables we record it and re-apply `repartition` on read so
-  * co-partitioned joins avoid one exchange side.
-  */
 /** `files` is the set's data-file count, maintained incrementally by the
   * writers (0 = unknown, for sidecars written before the field existed —
   * such sets report `needsCompaction = false` until their next write
@@ -30,8 +17,8 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType
   * the count is first-class set metadata: it is what
   * [[SetCatalog.needsCompaction]] and the auto-compaction valve read,
   * without listing anything.
-  */
-/** `staging` tags a set the catalog's OWN staged-rebuild machinery
+  *
+  * `staging` tags a set the catalog's OWN staged-rebuild machinery
   * created (`*_rebuild` / `*_recap` generations written by the index
   * lifecycles, via [[SetCatalog.markStaging]]): only tagged sets are
   * fair game for [[SetCatalog.recoverAll]]'s convention sweep — a
@@ -39,8 +26,8 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType
   * discarded or force-swapped at catalog open. The tag is cleared by
   * [[SetCatalog.renameSet]] when a staging set is adopted as the live
   * generation.
-  */
-/** `generation` is the sidecar's explicit rewrite witness: bumped by
+  *
+  * `generation` is the sidecar's explicit rewrite witness: bumped by
   * EVERY [[SetCatalog.writeMeta]], strictly increasing per sidecar
   * path, and drawn from the JVM monotonic clock so two DIFFERENT
   * sidecar files (a staging generation's sidecar renamed over the old
@@ -226,7 +213,20 @@ object SetCatalog {
   }
 }
 
-/** `recoverDbsOnOpen`: databases to run [[recoverAll]] over at
+/** Named-set storage — the reference's (databaseName, setName) catalog of
+  * paged sets (reference: src/builtInPDBObjects/headers/DistributedStorageAddSet.h,
+  * src/storage/headers/UserSet.h:38, catalog src/serverFunctionalities/
+  * headers/CatalogServer.h:59). Here: a root directory of parquet tables
+  * plus a sidecar metadata file recording the partition/bucket spec the
+  * advisor chose (the Lachesis decision — SURVEY.md §4.3).
+  *
+  * Scale note: a bucketed saved set is what makes later equi-joins on the
+  * bucket column shuffle-free (the reference's "local join" fast path,
+  * ScanUserSet.h:69-76) — Spark reads the bucket spec from the metastore;
+  * for path-based tables we record it and re-apply `repartition` on read so
+  * co-partitioned joins avoid one exchange side.
+  *
+  * `recoverDbsOnOpen`: databases to run [[recoverAll]] over at
   * construction — the standing-pipeline posture (every open closes any
   * crash-to-recovery serving window left by a dead session). OPT-IN
   * rather than default because recovery has a policy (pre-marker

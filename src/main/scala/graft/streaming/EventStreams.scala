@@ -161,11 +161,9 @@ object EventStreams {
     // sink mode needs no init: the first batch creates the set, a later
     // run finds it and keeps merging into it (restart semantics)
     var snapshot: Option[DataFrame] = None
-    val q = stream
-      .select(cols: _*)
-      .writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val compacted = latestPerKey(batch.toDF())
+    graft.operators.Dedup.drainAndStop(
+      graft.operators.Dedup.startBatches(stream.select(cols: _*)) { batch =>
+        val compacted = latestPerKey(batch)
         sink match {
           case Some((cat, db, set)) =>
             val prior =
@@ -184,11 +182,7 @@ object EventStreams {
               case None => compacted
             }).localCheckpoint(eager = true))
         }
-        ()
-      }
-      .outputMode(OutputMode.Append)
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      })
     sink match {
       case Some((cat, db, set)) =>
         if (cat.meta(db, set).exists(_.rows > 0)) cat.scanSet(db, set)

@@ -1,6 +1,7 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.advisor.PlacementAdvisor
 import graft.model.Tables
@@ -70,15 +71,25 @@ class AdvisorSpec extends GraftSpecBase {
 
   test("advisor history persists: a new session recommends from prior observations") {
     val path = Files.createTempDirectory("graft-adv").resolve("history.tsv").toString
+    // a history written by an older advisor: its probe-dial (D) and
+    // ingest-census (C) lines are unknown tags now and must load as
+    // nothing, next to the tags still read
+    Files.writeString(Paths.get(path),
+      "D\tidx\t4\t0.3\nC\ting\t100000\t2000\nS\tlineitem\t7\n")
     val li = Tables.lineitem(spark, sfDir)
     val o = Tables.orders(spark, sfDir)
     val a1 = new PlacementAdvisor(Some(path))
+    assert(a1.observedKeyUse.isEmpty)
     a1.observe(li.join(o, col("l_orderkey") === col("o_orderkey")), latencyMs = 42L)
     // fresh instance = new session; must recall the join key and partners
     val a2 = new PlacementAdvisor(Some(path))
     assert(a2.recommend("lineitem").contains("l_orderkey"))
     assert(a2.recommend("orders").contains("o_orderkey"))
     assert(a2.coPartitionGroup("lineitem") == Set("lineitem", "orders"))
+    // the rewrite on observe keeps the known lines and drops the old tags
+    val lines = Files.readAllLines(Paths.get(path)).asScala
+    assert(lines.contains("S\tlineitem\t7"))
+    assert(!lines.exists(l => l.startsWith("D\t") || l.startsWith("C\t")))
   }
 
   test("saveWithPlacement sizes co-partitioned sets to one bucket count; join stays exchange-free") {
@@ -378,50 +389,6 @@ class AdvisorSpec extends GraftSpecBase {
     cat.removeSet("db", "tgt")
   }
 
-  test("probe-width dial: conservative recommendation, extrapolation, persistence") {
-    val path = Files.createTempFile("graft-dial", ".tsv")
-    Files.delete(path)
-    val adv = new PlacementAdvisor(Some(path.toString))
-    assert(adv.recommendProbeWidth("idx", 0.5).isEmpty)
-    // the round-13 measured dial: nprobe 4 -> 0.30, nprobe 8 -> 0.66
-    adv.observeProbeRecall("idx", 4, 0.30)
-    adv.observeProbeRecall("idx", 8, 0.66)
-    // conservative: smallest MEASURED width meeting the target
-    assert(adv.recommendProbeWidth("idx", 0.30) === Some(4))
-    assert(adv.recommendProbeWidth("idx", 0.50) === Some(8))
-    assert(adv.recommendProbeWidth("idx", 0.66) === Some(8))
-    // beyond every measured recall: last-segment slope 0.09/probe ->
-    // 8 + ceil((0.90-0.66)/0.09) = 8 + 3
-    assert(adv.recommendProbeWidth("idx", 0.90) === Some(11))
-    assert(adv.recommendProbeWidth("idx", 0.90, maxProbe = 10) === Some(10))
-    // a flat tail slope caps immediately: wider probes stopped paying
-    adv.observeProbeRecall("idx", 16, 0.66)
-    assert(adv.recommendProbeWidth("idx", 0.90, maxProbe = 32) === Some(32))
-    // dial rows survive the sidecar round-trip like every other signal
-    val replay = new PlacementAdvisor(Some(path.toString))
-    assert(replay.recommendProbeWidth("idx", 0.50) === Some(8))
-    assert(replay.observedProbeDial === adv.observedProbeDial)
-    Files.deleteIfExists(path)
-  }
-
-  test("probe-width dial at four measured widths: every target answers from a measured point") {
-    // the widened soak dial (VERDICT r14 next #7): 4/8/16/32 measured —
-    // real segments end to end, so any reachable target resolves to the
-    // smallest MEASURED width meeting it, never an interpolated one
-    val adv = new PlacementAdvisor
-    val dial = Seq(4 -> 0.42, 8 -> 0.64, 16 -> 0.82, 32 -> 0.94)
-    dial.foreach { case (w, r) => adv.observeProbeRecall("soak.dial", w, r) }
-    assert(adv.recommendProbeWidth("soak.dial", 0.40) === Some(4))
-    assert(adv.recommendProbeWidth("soak.dial", 0.60) === Some(8))
-    assert(adv.recommendProbeWidth("soak.dial", 0.80) === Some(16))
-    assert(adv.recommendProbeWidth("soak.dial", 0.90) === Some(32))
-    assert(adv.recommendProbeWidth("soak.dial", 0.94) === Some(32))
-    // only past the whole measured dial does it extrapolate: last
-    // segment slope (0.94-0.82)/16 = 0.0075 -> 32 + ceil(0.04/0.0075)
-    assert(adv.recommendProbeWidth("soak.dial", 0.98, maxProbe = 64)
-      === Some(32 + math.ceil(0.04 / 0.0075).toInt))
-  }
-
   test("compaction trigger: amortized over the compacted tiling, floored for small sets") {
     val adv = new PlacementAdvisor
     assert(adv.recommendCompactionTrigger(layoutFiles = 32) === 128)
@@ -488,41 +455,5 @@ class AdvisorSpec extends GraftSpecBase {
     assert(spark.catalog.tableExists("dbx_bkt"))
     cat.removeSet("dbx", "bkt")
     assert(!spark.catalog.tableExists("dbx_bkt"))
-  }
-
-  test("recap dials: budget-derived cap; census trajectory sets the cadence") {
-    val adv = new PlacementAdvisor
-    // no history: static defaults — 4096-row budget / 32 bands = 128
-    // cap, growth 1.0 (the compaction amortization argument)
-    assert(adv.recommendRecapDials("ing") == ((128, 1.0)))
-    // the cap is a candidate budget divided by the band count, floored
-    assert(adv.recommendRecapDials("ing", bands = 16)._1 == 256)
-    assert(adv.recommendRecapDials("ing", bands = 32,
-      candidateBudget = 512)._1 == 64, "floor must hold under tiny budgets")
-    // HOT trajectory (the hotband corpus shape: worst bucket far above
-    // the cap): censuses must fire at the 0.1-growth floor, not wait
-    // for a doubling while batches go quadratic
-    adv.observeIngestCensus("ing", bandRows = 100000L, maxBucket = 2000L)
-    assert(adv.recommendRecapDials("ing")._2 == 0.1)
-    // CLEAN trajectory (worst bucket well under the cap): a lazy
-    // cadence — the projected overshoot point is 3x the set
-    // (1.5 * 128 / 64 - 1 = 2.0), so growth 2.0
-    adv.observeIngestCensus("ing2", bandRows = 100000L, maxBucket = 64L)
-    assert(adv.recommendRecapDials("ing2")._2 == 2.0)
-    // pristine corpus: clamped at maxGrowth, never unbounded
-    adv.observeIngestCensus("ing3", bandRows = 100000L, maxBucket = 2L)
-    assert(adv.recommendRecapDials("ing3")._2 == 4.0)
-  }
-
-  test("recap-dial census history survives an advisor restart") {
-    val path = Files.createTempDirectory("graft-adv-census")
-      .resolve("history.tsv").toString
-    val a1 = new PlacementAdvisor(Some(path))
-    a1.observeIngestCensus("ing", 50000L, 1500L)
-    a1.observeIngestCensus("ing", 100000L, 2000L)
-    val a2 = new PlacementAdvisor(Some(path))
-    assert(a2.observedIngestCensus("ing") ==
-      List((50000L, 1500L), (100000L, 2000L)))
-    assert(a2.recommendRecapDials("ing") == a1.recommendRecapDials("ing"))
   }
 }

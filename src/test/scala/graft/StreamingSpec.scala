@@ -754,8 +754,9 @@ class StreamingSpec extends GraftSpecBase {
     graft.operators.Dedup.persistSemanticIndex(cat, "t", "sem",
       corpus.toDF("vec_id", "embedding"), "vec_id", "embedding", nClusters = 4)
     val input = MemoryStream[(Long, Seq[Float])]
-    val (probeFn, loads) = graft.operators.Dedup.semanticProbeFnCounted(
+    val probeFn = graft.operators.Dedup.semanticProbeFn(
       cat, "t", "sem", "vec_id", "embedding", 0.4)
+    def loads() = cat.memoDecodes("t", "sem_centroids")
     val (q, result) = graft.operators.Dedup.startProbe(
       input.toDS().toDF("vec_id", "embedding"), probeFn,
       sink = Some((cat, "t", "sem_live_pairs")))
@@ -804,8 +805,9 @@ class StreamingSpec extends GraftSpecBase {
     graft.operators.Dedup.persistSemanticIndex(cat, "t", "sem",
       corpus.toDF("vec_id", "embedding"), "vec_id", "embedding", nClusters = 4)
     val input = MemoryStream[(Long, Seq[Float])]
-    val (probeFn, loads) = graft.operators.Dedup.semanticProbeFnCounted(
+    val probeFn = graft.operators.Dedup.semanticProbeFn(
       cat, "t", "sem", "vec_id", "embedding", 0.4)
+    def loads() = cat.memoDecodes("t", "sem_centroids")
     val (q, result) = graft.operators.Dedup.startProbe(
       input.toDS().toDF("vec_id", "embedding"), probeFn,
       sink = Some((cat, "t", "sem_swap_pairs")))
@@ -854,8 +856,9 @@ class StreamingSpec extends GraftSpecBase {
       corpus.toDF("vec_id", "embedding"), "vec_id", "embedding", nClusters = 4)
     val sidecar = java.nio.file.Paths.get(s"$root/t.sem_centroids.meta")
     val input = MemoryStream[(Long, Seq[Float])]
-    val (probeFn, loads) = graft.operators.Dedup.semanticProbeFnCounted(
+    val probeFn = graft.operators.Dedup.semanticProbeFn(
       cat, "t", "sem", "vec_id", "embedding", 0.4)
+    def loads() = cat.memoDecodes("t", "sem_centroids")
     val (q, result) = graft.operators.Dedup.startProbe(
       input.toDS().toDF("vec_id", "embedding"), probeFn,
       sink = Some((cat, "t", "sem_mtime_pairs")))
@@ -930,10 +933,14 @@ class StreamingSpec extends GraftSpecBase {
     graft.operators.SimilaritySearch.buildIvfPqIndex(spark, cat, "t", "ix",
       corpus.toDF("vec_id", "embedding"))
     val input = MemoryStream[(Long, Seq[Float])]
-    val (probeFn, loads) = graft.operators.SimilaritySearch
-      .ivfPqSearchProbeFnCounted(cat, "t", "ix", k = 3)
+    // the models' decode counts: stream batches, batch searches and
+    // appends all read the one generation memo of the catalog
+    def loads() = (cat.memoDecodes("t", "ix_centroids"),
+      cat.memoDecodes("t", "ix_codebooks"))
     val (q, result) = graft.operators.Dedup.startProbe(
-      input.toDS().toDF("vec_id", "embedding"), probeFn,
+      input.toDS().toDF("vec_id", "embedding"),
+      batch => graft.operators.SimilaritySearch.searchIvfPqIndex(spark, cat,
+        "t", "ix", batch, k = 3),
       sink = Some((cat, "t", "ix_hits")))
     try {
       // batch 1: a near-copy of corpus(5) must retrieve 5 at rank 1
@@ -941,6 +948,13 @@ class StreamingSpec extends GraftSpecBase {
       q.processAllAvailable()
       graft.operators.SimilaritySearch.appendToIvfPqIndex(spark, cat,
         "t", "ix", appended.toDF("vec_id", "embedding"))
+      // a batch search between stream batches shares the stream's models
+      val batchTop = graft.operators.SimilaritySearch.searchIvfPqIndex(spark,
+        cat, "t", "ix", Seq((1201L, near(appended(1)._2)))
+          .toDF("vec_id", "embedding"), k = 3)
+        .filter(col("rank") === 1).collect().map(_.getLong(2))
+      assert(batchTop.sameElements(Seq(201L)),
+        s"batch search after the append missed it: ${batchTop.toSeq}")
       // batch 2: a near-copy of an APPENDED vector — invisible under a
       // frozen-at-start plan (its codes are new files in the cell dirs)
       input.addData((1200L, near(appended.head._2)))
@@ -952,8 +966,8 @@ class StreamingSpec extends GraftSpecBase {
       // AND re-collect the swapped models
       input.addData((1006L, near(corpus(6)._2)))
       q.processAllAvailable()
-      assert(loadsBeforeRebuild == 1,
-        s"append must not re-collect the models, saw $loadsBeforeRebuild")
+      assert(loadsBeforeRebuild == ((1, 1)),
+        s"an append or a batch search re-decoded the models: $loadsBeforeRebuild")
     } finally q.stop()
     val top = result().filter(col("rank") === 1).collect()
       .map(r => r.getLong(0) -> r.getLong(2)).toMap
@@ -963,8 +977,8 @@ class StreamingSpec extends GraftSpecBase {
         s"the frozen-plan failure mode; got $top")
     assert(top.get(1006L).contains(6L),
       s"search after a mid-stream rebuild failed on the new generation: $top")
-    assert(loads() == 2,
-      s"rebuild should invalidate the model cache exactly once, saw ${loads()}")
+    assert(loads() == ((2, 2)),
+      s"rebuild should re-decode each model exactly once, saw ${loads()}")
     graft.storage.SetCatalog.deleteTree(root)
   }
 
@@ -981,10 +995,12 @@ class StreamingSpec extends GraftSpecBase {
     graft.operators.SimilaritySearch.buildIvfIndex(spark, cat, "t", "iv",
       corpus.toDF("vec_id", "embedding"))
     val input = MemoryStream[(Long, Seq[Float])]
-    val (probeFn, loads) = graft.operators.SimilaritySearch
-      .ivfSearchProbeFnCounted(cat, "t", "iv", k = 3)
+    def loads() = cat.memoDecodes("t", "iv_centroids")
     val (q, result) = graft.operators.Dedup.startProbe(
-      input.toDS().toDF("vec_id", "embedding"), probeFn, sink = None)
+      input.toDS().toDF("vec_id", "embedding"),
+      batch => graft.operators.SimilaritySearch.searchIvfIndex(spark, cat,
+        "t", "iv", batch, k = 3),
+      sink = None)
     val hits = try {
       input.addData((1007L, near(corpus(7)._2)))
       q.processAllAvailable()
@@ -1026,17 +1042,28 @@ class StreamingSpec extends GraftSpecBase {
     graft.operators.SimilaritySearch.buildPqIndex(spark, cat, "t", "pq",
       corpus.toDF("vec_id", "embedding"))
     val input = MemoryStream[(Long, Seq[Float])]
-    val (probeFn, loads) = graft.operators.SimilaritySearch
-      .pqSearchProbeFnCounted(cat, "t", "pq", k = 3)
+    def loads() = cat.memoDecodes("t", "pq_codebooks")
     val (q, result) = graft.operators.Dedup.startProbe(
-      input.toDS().toDF("vec_id", "embedding"), probeFn, sink = None)
+      input.toDS().toDF("vec_id", "embedding"),
+      batch => graft.operators.SimilaritySearch.searchPqIndex(spark, cat,
+        "t", "pq", batch, k = 3),
+      sink = None)
     val hits = try {
       input.addData((1009L, near(corpus(9)._2)))
       q.processAllAvailable()
       graft.operators.SimilaritySearch.appendToPqIndex(spark, cat,
         "t", "pq", appended.toDF("vec_id", "embedding"))
+      // a batch search between stream batches shares the stream's codebooks
+      val batchTop = graft.operators.SimilaritySearch.searchPqIndex(spark,
+        cat, "t", "pq", Seq((1401L, near(appended(1)._2)))
+          .toDF("vec_id", "embedding"), k = 3)
+        .filter(col("rank") === 1).collect().map(_.getLong(2))
+      assert(batchTop.sameElements(Seq(401L)),
+        s"batch search after the append missed it: ${batchTop.toSeq}")
       input.addData((1400L, near(appended.head._2)))
       q.processAllAvailable()
+      assert(loads() == 1,
+        s"an append or a batch search re-decoded the codebooks ${loads()}x")
       graft.operators.SimilaritySearch.rebuildPqIndex(spark, cat, "t", "pq")
       input.addData((1010L, near(corpus(10)._2)))
       q.processAllAvailable()
