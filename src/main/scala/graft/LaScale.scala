@@ -226,7 +226,6 @@ object LaScale {
       println(f"$name%-10s ${best}%.3f s  ${flops / best / 1e9}%.2f GFLOP/s  (sink $sink%.1f)")
     }
     bench("naive", 2) { Kernels.matmulNaive(a, b) }
-    bench("axpy", 4) { Kernels.matmulAxpy(a, b) }
     bench("regtile", 4) { Kernels.matmul(a, b) }
   }
 }

@@ -174,7 +174,7 @@ object SemScale {
       val nDirs = {
         import scala.jdk.CollectionConverters._
         val s = java.nio.file.Files.list(
-          java.nio.file.Paths.get(s"$root/ss.idx_vectors"))
+          java.nio.file.Paths.get(cat.dir("ss", "idx_vectors")))
         try s.iterator().asScala.count(p =>
           java.nio.file.Files.isDirectory(p))
         finally s.close()

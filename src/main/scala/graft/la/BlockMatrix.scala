@@ -50,19 +50,13 @@ object Kernels {
     catch { case _: LinkageError => false }
 
   /** The production block-matmul: the register-tiled SIMD micro-kernel
-    * (measured 2.0× the axpy SIMD form — 12.9 vs 6.6 GFLOP/s/thread on a
-    * loaded host, same ratio quiet; LaScale `kernel`), scalar fallback
-    * without the vector module. Results are bit-identical across all
-    * three forms on finite inputs (KernelsSpec).
+    * (12-13 GFLOP/s single-thread against the scalar kernel's 2.9 on a
+    * 1000³ block; LaScale `kernel` re-measures), scalar fallback without
+    * the vector module. Results are bit-identical to [[matmulNaive]] on
+    * finite inputs (KernelsSpec).
     */
   def matmul(a: MatrixBlock, b: MatrixBlock): Array[Double] =
     if (simdOk) SimdKernel.matmulRegTile(a, b) else matmulScalar(a, b)
-
-  /** The previous axpy-form SIMD kernel, kept for the LaScale kernel
-    * bench comparison row.
-    */
-  private[graft] def matmulAxpy(a: MatrixBlock, b: MatrixBlock): Array[Double] =
-    if (simdOk) SimdKernel.matmul(a, b) else matmulScalar(a, b)
 
   /** Cache-tiled matmul: k is chunked so the active panel of b
     * (KC rows ≈ 1 MB at n=1000) stays L2-resident across the whole
@@ -255,108 +249,6 @@ private object SimdKernel {
 
   def vectorLanes: Int = SP.length()
 
-  /** AVX-width matmul: k-chunked (128 b-rows ≈ 1 MB stay L2-resident
-    * across the i-sweep) with a 4-row i-block whose axpy loads each b
-    * vector once and feeds 4 independent update chains. The update is an
-    * explicit vector mul followed by a vector add (two roundings, exactly
-    * Java's `out += a*b`), lanes are distinct j's of the same output row,
-    * and k ascends — so every output element sees the same IEEE operation
-    * sequence as the scalar kernels, bit-identical on finite inputs (a
-    * zero a-element inside a partially-nonzero quad contributes an
-    * explicit +0.0 where the naive form skips it; indistinguishable
-    * outside NaN/Inf/signed-zero inputs, which the LA surface never
-    * produces). A register-tiled variant (accumulators held across the
-    * k-chunk) measured 6x SLOWER here — C2 does not keep >8 live vectors
-    * in registers — so the axpy form is the keeper.
-    */
-  def matmul(a: MatrixBlock, b: MatrixBlock): Array[Double] = {
-    require(a.cols == b.rows, s"inner dim ${a.cols} != ${b.rows}")
-    val m = a.rows
-    val kk = a.cols
-    val n = b.cols
-    val ad = a.data
-    val bd = b.data
-    val out = new Array[Double](m * n)
-    val KC = 128
-    val MI = 4
-    val vlen = SP.length()
-    val ub = SP.loopBound(n)
-    var k0 = 0
-    while (k0 < kk) {
-      val kEnd = math.min(k0 + KC, kk)
-      var i0 = 0
-      while (i0 < m) {
-        if (i0 + MI <= m) {
-          val ao0 = i0 * kk; val ao1 = ao0 + kk
-          val ao2 = ao1 + kk; val ao3 = ao2 + kk
-          val oo0 = i0 * n; val oo1 = oo0 + n
-          val oo2 = oo1 + n; val oo3 = oo2 + n
-          var k = k0
-          while (k < kEnd) {
-            val a0 = ad(ao0 + k); val a1 = ad(ao1 + k)
-            val a2 = ad(ao2 + k); val a3 = ad(ao3 + k)
-            if (a0 != 0.0 || a1 != 0.0 || a2 != 0.0 || a3 != 0.0) {
-              val bo = k * n
-              val va0 = DoubleVector.broadcast(SP, a0)
-              val va1 = DoubleVector.broadcast(SP, a1)
-              val va2 = DoubleVector.broadcast(SP, a2)
-              val va3 = DoubleVector.broadcast(SP, a3)
-              var j = 0
-              while (j < ub) {
-                val vb = DoubleVector.fromArray(SP, bd, bo + j)
-                DoubleVector.fromArray(SP, out, oo0 + j)
-                  .add(vb.mul(va0)).intoArray(out, oo0 + j)
-                DoubleVector.fromArray(SP, out, oo1 + j)
-                  .add(vb.mul(va1)).intoArray(out, oo1 + j)
-                DoubleVector.fromArray(SP, out, oo2 + j)
-                  .add(vb.mul(va2)).intoArray(out, oo2 + j)
-                DoubleVector.fromArray(SP, out, oo3 + j)
-                  .add(vb.mul(va3)).intoArray(out, oo3 + j)
-                j += vlen
-              }
-              while (j < n) {
-                val bv = bd(bo + j)
-                out(oo0 + j) += a0 * bv
-                out(oo1 + j) += a1 * bv
-                out(oo2 + j) += a2 * bv
-                out(oo3 + j) += a3 * bv
-                j += 1
-              }
-            }
-            k += 1
-          }
-        } else {
-          var i = i0
-          while (i < m) {
-            val ao = i * kk
-            val oo = i * n
-            var k = k0
-            while (k < kEnd) {
-              val av = ad(ao + k)
-              if (av != 0.0) {
-                val bo = k * n
-                val va = DoubleVector.broadcast(SP, av)
-                var j = 0
-                while (j < ub) {
-                  val vb = DoubleVector.fromArray(SP, bd, bo + j)
-                  DoubleVector.fromArray(SP, out, oo + j)
-                    .add(vb.mul(va)).intoArray(out, oo + j)
-                  j += vlen
-                }
-                while (j < n) { out(oo + j) += av * bd(bo + j); j += 1 }
-              }
-              k += 1
-            }
-            i += 1
-          }
-        }
-        i0 += MI
-      }
-      k0 += KC
-    }
-    out
-  }
-
   /** The 2-row × 4-vector micro-kernel body as its OWN method, on
     * purpose: called once per (i-pair, j-tile, k-chunk) — hundreds of
     * thousands of times per 1000³ block — it crosses C2's invocation
@@ -410,19 +302,21 @@ private object SimdKernel {
     acc13.intoArray(out, oo1j + 3 * vlen)
   }
 
-  /** Register-tiled micro-kernel experiment: 2 output rows × 4 j-vectors
-    * (8 live accumulator vectors — inside C2's register budget, where
-    * the earlier >8-accumulator tile spilled and ran 6× slower) held in
-    * registers across the whole k-chunk, so the per-k out-row
-    * load/store chain of the axpy form — its throughput ceiling —
-    * disappears: out is touched once per chunk per tile instead of once
-    * per k. Accumulation stays `acc.add(vb.mul(va))` (two roundings,
-    * exactly `out += a*b`) with k ascending per (i,j) across ascending
-    * chunks — the same IEEE sequence as [[Kernels.matmulNaive]], so
-    * KernelsSpec's bit-parity pin holds (the tile adds explicit +0.0 for
-    * zero a-elements like the axpy form; same finite-input caveat).
+  /** Register-tiled micro-kernel: 2 output rows × 4 j-vectors (8 live
+    * accumulator vectors — inside C2's register budget, where a
+    * >8-accumulator tile spilled and ran 6× slower) held in registers
+    * across the whole k-chunk (128 b-rows ≈ 1 MB, L2-resident across
+    * the i-sweep), so out is touched once per chunk per tile instead
+    * of once per k — the per-k out-row load/store chain of a plain
+    * axpy loop is its throughput ceiling. Accumulation stays
+    * `acc.add(vb.mul(va))` (two roundings, exactly `out += a*b`) with k
+    * ascending per (i,j) across ascending chunks — the same IEEE
+    * sequence as [[Kernels.matmulNaive]], so KernelsSpec's bit-parity
+    * pin holds (the tile adds an explicit +0.0 for a zero a-element
+    * where the naive form skips it; indistinguishable outside
+    * NaN/Inf/signed-zero inputs, which the LA surface never produces).
     * Edges (row remainder, j past the last full tile) fall through to
-    * the axpy update with identical ordering.
+    * a scalar axpy update with identical ordering.
     */
   def matmulRegTile(a: MatrixBlock, b: MatrixBlock): Array[Double] = {
     require(a.cols == b.rows, s"inner dim ${a.cols} != ${b.rows}")

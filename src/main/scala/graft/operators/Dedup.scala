@@ -262,13 +262,14 @@ object Dedup {
     * Session-survivable, unlike the in-memory index's executor-pinned
     * caches.
     *
-    * Bucket-count choice: an explicit `numBuckets` wins; otherwise an
-    * `advisor` applies the Lachesis sizing rule
+    * Bucket-count choice ([[indexBuckets]], sized from the band set,
+    * the index's larger side): an explicit `numBuckets` wins; otherwise
+    * an `advisor` applies the Lachesis sizing rule
     * ([[graft.advisor.PlacementAdvisor.recommendBuckets]] — power-of-two
-    * count keeping each bucket near `targetRowsPerBucket` rows, sized
-    * from the band set, the index's larger side) so standing indexes
-    * inherit the placement layer's decision automatically; with neither,
-    * the session's shuffle-partition count (the pre-round-8 behavior).
+    * count keeping each bucket near `targetRowsPerBucket` rows) so
+    * standing indexes inherit the placement layer's decision
+    * automatically; with neither, the same rule without the
+    * co-partition history ([[graft.advisor.PlacementAdvisor.bucketCountFor]]).
     */
   def persistLshIndex(
       catalog: graft.storage.SetCatalog, db: String, name: String,
@@ -280,17 +281,10 @@ object Dedup {
     val spark = corpus.sparkSession
     val (cSets, cBanded) =
       corpusLshIndex(corpus, idCol, textCol, k, bands, shingleN, maxBucket)
-    // no-advisor default sizes from the data too (bucketCountFor — the
-    // advisor's rule without the co-partition-group history): the old
-    // session-shuffle-partition fallback stamped a local-core-count
-    // constant into the stored layout. cBanded is persisted and already
-    // materialized, so the count is a cached-frame pass either way.
-    val n = if (numBuckets > 0) numBuckets
-      else advisor
-        .map(_.recommendBuckets(s"$db.${name}_bands", cBanded.count(),
-          targetRowsPerBucket))
-        .getOrElse(graft.advisor.PlacementAdvisor
-          .bucketCountFor(cBanded.count(), targetRowsPerBucket))
+    // cBanded is persisted and already materialized, so the count is a
+    // cached-frame pass
+    val n = indexBuckets(numBuckets, advisor, s"$db.${name}_bands",
+      cBanded.count(), targetRowsPerBucket)
     catalog.createBucketedSet(db, s"${name}_sets", cSets, "id", n)
     catalog.createBucketedSet(db, s"${name}_bands", cBanded,
       Seq("band", "bkey"), n)
@@ -1252,10 +1246,8 @@ object Dedup {
     * the static index, so per-batch outputs union to the one-shot
     * result.
     *
-    * Same bucket-count choice as [[persistLshIndex]]: explicit wins,
-    * then the advisor's sizing rule over the distinct-gram count, then
-    * the session shuffle-partition default. The gram frame persists
-    * around the advisor's count so the fingerprint pipeline runs once.
+    * Same bucket-count choice as [[persistLshIndex]] ([[indexBuckets]]),
+    * over the distinct-gram count.
     */
   def persistGramIndex(
       catalog: graft.storage.SetCatalog, db: String, name: String,
@@ -1263,25 +1255,58 @@ object Dedup {
       k: Int = 8, numBuckets: Int = 0,
       advisor: Option[graft.advisor.PlacementAdvisor] = None,
       targetRowsPerBucket: Long = 1L << 22): Unit = {
-    val grams = windowFingerprints(corpus, idCol, textCol, k)
-      .select(col("g")).distinct()
-    // both auto paths persist + count so the fingerprint pipeline runs
-    // once; the no-advisor default sizes from that count instead of the
-    // session's shuffle-partition constant (see bucketCountFor)
-    val n = if (numBuckets > 0) numBuckets
-      else {
-        grams.persist()
-        advisor match {
-          case Some(a) =>
-            a.recommendBuckets(s"$db.${name}_grams", grams.count(),
-              targetRowsPerBucket)
-          case None =>
-            graft.advisor.PlacementAdvisor
-              .bucketCountFor(grams.count(), targetRowsPerBucket)
-        }
-      }
-    catalog.createBucketedSet(db, s"${name}_grams", grams, "g", n)
-    if (numBuckets == 0) grams.unpersist(blocking = false)
+    persistKeyedSet(catalog, db, s"${name}_grams",
+      windowFingerprints(corpus, idCol, textCol, k).select(col("g")),
+      numBuckets, advisor, targetRowsPerBucket)
+  }
+
+  /** The index builders' bucket-count rule: an explicit `numBuckets`
+    * wins; else the advisor's sizing rule for `table` over `rows`; else
+    * the same rule without the co-partition history
+    * ([[graft.advisor.PlacementAdvisor.bucketCountFor]] — sized from
+    * the data, not from the session's shuffle-partition count, which
+    * would stamp the local core count into the stored layout). `rows`
+    * is evaluated only when no explicit count is given.
+    */
+  private[graft] def indexBuckets(numBuckets: Int,
+      advisor: Option[graft.advisor.PlacementAdvisor], table: String,
+      rows: => Long, targetRowsPerBucket: Long): Int =
+    if (numBuckets > 0) numBuckets
+    else advisor.map(_.recommendBuckets(table, rows, targetRowsPerBucket))
+      .getOrElse(graft.advisor.PlacementAdvisor
+        .bucketCountFor(rows, targetRowsPerBucket))
+
+  /** Persist the DISTINCT rows of the one-column frame `keys` as the
+    * bucketed set `db.set`, bucketed on that column and sized by
+    * [[indexBuckets]] over the distinct count: the body of the exact,
+    * fingerprint and gram index builders. Without an explicit count the
+    * distinct frame persists around its count, so the upstream
+    * pipeline runs once.
+    */
+  private def persistKeyedSet(catalog: graft.storage.SetCatalog,
+      db: String, set: String, keys: DataFrame, numBuckets: Int,
+      advisor: Option[graft.advisor.PlacementAdvisor],
+      targetRowsPerBucket: Long): Unit = {
+    val distinct = keys.distinct()
+    if (numBuckets == 0) distinct.persist()
+    val n = indexBuckets(numBuckets, advisor, s"$db.$set",
+      distinct.count(), targetRowsPerBucket)
+    catalog.createBucketedSet(db, set, distinct, keys.columns.head, n)
+    if (numBuckets == 0) distinct.unpersist(blocking = false)
+  }
+
+  /** Scan the keyed set `db.set`, failing FAST unless its `key` column
+    * is `expected`: a schema-drifted index would silently match
+    * nothing, so a loud rebuild demand (`drifted` words it from the
+    * stored type) is the only safe behavior.
+    */
+  private def scanKeyedSet(catalog: graft.storage.SetCatalog, db: String,
+      set: String, key: String, expected: org.apache.spark.sql.types.DataType)(
+      drifted: org.apache.spark.sql.types.DataType => String): DataFrame = {
+    val keys = catalog.scanBucketedSet(db, set)
+    val stored = keys.schema(key).dataType
+    require(stored == expected, drifted(stored))
+    keys
   }
 
   /** Persist an exact-content fingerprint index: one row per DISTINCT
@@ -1291,32 +1316,17 @@ object Dedup {
     * standing dedup structure a 100 TB ingest keeps warm (128-bit
     * fingerprints: collision odds are negligible at any corpus size,
     * unlike a 64-bit hash's birthday bound). Bucket-count choice matches
-    * the other index builders: explicit, else advisor, else session
-    * default.
+    * the other index builders ([[indexBuckets]]).
     */
   def persistExactIndex(
       catalog: graft.storage.SetCatalog, db: String, name: String,
       corpus: DataFrame, textCol: String, numBuckets: Int = 0,
       advisor: Option[graft.advisor.PlacementAdvisor] = None,
       targetRowsPerBucket: Long = 1L << 22): Unit = {
-    val hashes = corpus.filter(col(textCol).isNotNull)
-      .select(unhex(md5(col(textCol))).as("h")).distinct()
-    // same auto-sizing shape as persistGramIndex: persist + count once,
-    // size buckets from the data with or without an advisor
-    val n = if (numBuckets > 0) numBuckets
-      else {
-        hashes.persist()
-        advisor match {
-          case Some(a) =>
-            a.recommendBuckets(s"$db.${name}_hashes", hashes.count(),
-              targetRowsPerBucket)
-          case None =>
-            graft.advisor.PlacementAdvisor
-              .bucketCountFor(hashes.count(), targetRowsPerBucket)
-        }
-      }
-    catalog.createBucketedSet(db, s"${name}_hashes", hashes, "h", n)
-    if (numBuckets == 0) hashes.unpersist(blocking = false)
+    persistKeyedSet(catalog, db, s"${name}_hashes",
+      corpus.filter(col(textCol).isNotNull)
+        .select(unhex(md5(col(textCol))).as("h")),
+      numBuckets, advisor, targetRowsPerBucket)
   }
 
   /** Every arriving doc annotated with whether its EXACT content already
@@ -1333,18 +1343,14 @@ object Dedup {
       idCol, textCol)
 
   /** Scan a [[persistExactIndex]] set, failing FAST on a non-binary
-    * fingerprint column (same rationale as the gram-index guard: a
-    * schema-drifted index would silently match nothing).
+    * fingerprint column ([[scanKeyedSet]]).
     */
   private[graft] def scanExactIndex(
-      catalog: graft.storage.SetCatalog, db: String, name: String): DataFrame = {
-    val hashes = catalog.scanBucketedSet(db, s"${name}_hashes")
-    require(hashes.schema("h").dataType ==
-        org.apache.spark.sql.types.BinaryType,
-      s"exact index $db.${name}_hashes stores ${hashes.schema("h").dataType} " +
+      catalog: graft.storage.SetCatalog, db: String, name: String): DataFrame =
+    scanKeyedSet(catalog, db, s"${name}_hashes", "h",
+      org.apache.spark.sql.types.BinaryType)(t =>
+      s"exact index $db.${name}_hashes stores $t " +
         "fingerprints; rebuild it with persistExactIndex")
-    hashes
-  }
 
   /** In-memory form of [[exactAgainstStoredIndex]]: `corpusHashes` is any
     * frame exposing the 16-byte fingerprint column `h` — it need not be
@@ -1395,8 +1401,7 @@ object Dedup {
     * md5 of the bytes. One row per DISTINCT fingerprint, bucketed on it,
     * so later arrival batches probe with zero index-side exchange; an
     * 8-byte key shuffles even lighter than the 16-byte md5. Same
-    * bucket-count policy as the other index builders: explicit, else
-    * advisor, else session default.
+    * bucket-count policy as the other index builders ([[indexBuckets]]).
     */
   def persistFingerprintIndex(
       catalog: graft.storage.SetCatalog, db: String, name: String,
@@ -1407,39 +1412,20 @@ object Dedup {
         org.apache.spark.sql.types.LongType,
       s"fingerprint column $fpCol is ${fps.schema(fpCol).dataType}; " +
         "persistFingerprintIndex stores LONG fingerprints")
-    val distinct = fps.filter(col(fpCol).isNotNull)
-      .select(col(fpCol).as("fp")).distinct()
-    // same auto-sizing shape as persistGramIndex: persist + count once,
-    // size buckets from the data with or without an advisor
-    val n = if (numBuckets > 0) numBuckets
-      else {
-        distinct.persist()
-        advisor match {
-          case Some(a) =>
-            a.recommendBuckets(s"$db.${name}_fps", distinct.count(),
-              targetRowsPerBucket)
-          case None =>
-            graft.advisor.PlacementAdvisor
-              .bucketCountFor(distinct.count(), targetRowsPerBucket)
-        }
-      }
-    catalog.createBucketedSet(db, s"${name}_fps", distinct, "fp", n)
-    if (numBuckets == 0) distinct.unpersist(blocking = false)
+    persistKeyedSet(catalog, db, s"${name}_fps",
+      fps.filter(col(fpCol).isNotNull).select(col(fpCol).as("fp")),
+      numBuckets, advisor, targetRowsPerBucket)
   }
 
   /** Scan a [[persistFingerprintIndex]] set, failing FAST on a non-long
-    * fingerprint column (a schema-drifted index would silently match
-    * nothing — same guard as [[scanExactIndex]]).
+    * fingerprint column ([[scanKeyedSet]]).
     */
   private[graft] def scanFingerprintIndex(
-      catalog: graft.storage.SetCatalog, db: String, name: String): DataFrame = {
-    val fps = catalog.scanBucketedSet(db, s"${name}_fps")
-    require(fps.schema("fp").dataType ==
-        org.apache.spark.sql.types.LongType,
-      s"fingerprint index $db.${name}_fps stores ${fps.schema("fp").dataType} " +
+      catalog: graft.storage.SetCatalog, db: String, name: String): DataFrame =
+    scanKeyedSet(catalog, db, s"${name}_fps", "fp",
+      org.apache.spark.sql.types.LongType)(t =>
+      s"fingerprint index $db.${name}_fps stores $t " +
         "fingerprints; rebuild it with persistFingerprintIndex")
-    fps
-  }
 
   /** Rows annotated with whether their long fingerprint already exists in
     * `corpusFps` — the [[exactAgainstHashesKeyed]] analogue for
@@ -1594,20 +1580,16 @@ object Dedup {
       idCol, textCol, k)
 
   /** Scan a [[persistGramIndex]] set, failing FAST if the stored
-    * fingerprint column isn't 16-byte binary (an index persisted by a
-    * pre-binary-key build stores 32-char hex strings; joining binary
-    * probes against it would silently match nothing — a total recall
-    * collapse — so a loud rebuild demand is the only safe behavior).
+    * fingerprint column isn't 16-byte binary ([[scanKeyedSet]]; an
+    * index persisted by a pre-binary-key build stores 32-char hex
+    * strings, and binary probes against it would match nothing).
     */
   private def scanGramIndex(
-      catalog: graft.storage.SetCatalog, db: String, name: String): DataFrame = {
-    val grams = catalog.scanBucketedSet(db, s"${name}_grams")
-    require(grams.schema("g").dataType ==
-        org.apache.spark.sql.types.BinaryType,
-      s"gram index $db.${name}_grams stores ${grams.schema("g").dataType} " +
+      catalog: graft.storage.SetCatalog, db: String, name: String): DataFrame =
+    scanKeyedSet(catalog, db, s"${name}_grams", "g",
+      org.apache.spark.sql.types.BinaryType)(t =>
+      s"gram index $db.${name}_grams stores $t " +
         "fingerprints (pre-binary-key layout); rebuild it with persistGramIndex")
-    grams
-  }
 
   /** In-memory form of [[spansAgainstStoredIndex]]: `corpusGrams` is any
     * frame exposing the fingerprint column `g`.

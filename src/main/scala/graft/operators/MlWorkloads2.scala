@@ -281,12 +281,6 @@ object MlWorkloads2 {
     }
   }
 
-  private def normalizeRows(m: Array[Array[Double]]): Unit =
-    m.foreach { r =>
-      val s = r.sum
-      if (s > 0) { var t = 0; while (t < r.length) { r(t) /= s; t += 1 } }
-    }
-
   // ---------------- LSTM cell (inference kernel) ----------------
 
   final case class LstmWeights(

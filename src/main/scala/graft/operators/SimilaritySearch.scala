@@ -1459,26 +1459,15 @@ object SimilaritySearch {
         assign(col(vecCol)).as("bucket")),
       "bucket")
     // the vectors set is hash-placed on id and corpus-sized — its bucket
-    // count takes the same sizing rule as buildPqIndex's (explicit, else
-    // the advisor over the corpus rowcount, else the session default);
-    // the CODES layout needs no count: it is directory-partitioned by
-    // coarse cell, where nCentroids IS the layout. The advisor's rowcount
-    // comes off the just-written code set's sidecar (one code row per
-    // corpus vector, counted by its post-write footer pass) — NOT an
-    // extra emb.count() scan of the whole corpus.
-    // the no-advisor default sizes from the same sidecar rowcount the
-    // advisor reads (PlacementAdvisor.bucketCountFor) instead of the
-    // session's shuffle-partition constant — no extra corpus scan
-    val n = if (numBuckets > 0) numBuckets
-      else {
-        val rows = catalog.meta(db, s"${name}_codes").map(_.rows)
-          .getOrElse(emb.count())
-        advisor
-          .map(_.recommendBuckets(s"$db.${name}_vectors", rows,
-            targetRowsPerBucket))
-          .getOrElse(graft.advisor.PlacementAdvisor
-            .bucketCountFor(rows, targetRowsPerBucket))
-      }
+    // count takes the index builders' sizing rule (Dedup.indexBuckets)
+    // over the corpus rowcount; the CODES layout needs no count: it is
+    // directory-partitioned by coarse cell, where nCentroids IS the
+    // layout. The rowcount comes off the just-written code set's sidecar
+    // (one code row per corpus vector, counted by its post-write footer
+    // pass) — NOT an extra emb.count() scan of the whole corpus.
+    val n = Dedup.indexBuckets(numBuckets, advisor, s"$db.${name}_vectors",
+      catalog.meta(db, s"${name}_codes").map(_.rows).getOrElse(emb.count()),
+      targetRowsPerBucket)
     catalog.createSet(db, s"${name}_vectors",
       emb.select(col(idCol).as("neighbor_id"), col(vecCol).as("n_vec"),
         l2Norm(col(vecCol)).as("n_nrm")),
@@ -1712,24 +1701,16 @@ object SimilaritySearch {
     val codebooks = trainPqCodebooks(emb, m, kSub, iters, idCol, vecCol,
       knownRowCount = knownRowCount)
     persistCodebooks(spark, catalog, db, name, codebooks)
-    // partition-count choice follows the other index builders: explicit,
-    // else the advisor's sizing rule over the corpus rowcount, else the
-    // same rule without history (PlacementAdvisor.bucketCountFor — the
-    // shuffle-partition constant it replaces encoded the local core
-    // count into stored layouts). Pass knownRowCount when the caller
-    // already paid for a count (e.g. the corpus came off a catalog set
-    // whose sidecar carries it) — both auto paths otherwise cost one
-    // extra counting pass here, since BOTH output sets need the bucket
-    // count before their writes (a bare parquet count is footer-cheap).
-    val n = if (numBuckets > 0) numBuckets
-      else {
-        val rows = if (knownRowCount > 0) knownRowCount else emb.count()
-        advisor
-          .map(_.recommendBuckets(s"$db.${name}_codes", rows,
-            targetRowsPerBucket))
-          .getOrElse(graft.advisor.PlacementAdvisor
-            .bucketCountFor(rows, targetRowsPerBucket))
-      }
+    // partition-count choice follows the other index builders
+    // (Dedup.indexBuckets over the corpus rowcount). Pass knownRowCount
+    // when the caller already paid for a count (e.g. the corpus came off
+    // a catalog set whose sidecar carries it) — both auto paths
+    // otherwise cost one extra counting pass here, since BOTH output
+    // sets need the bucket count before their writes (a bare parquet
+    // count is footer-cheap).
+    val n = Dedup.indexBuckets(numBuckets, advisor, s"$db.${name}_codes",
+      if (knownRowCount > 0) knownRowCount else emb.count(),
+      targetRowsPerBucket)
     val encode = pqEncodeUdf(codebooks)
     catalog.createSet(db, s"${name}_codes",
       emb.select(col(idCol).as("neighbor_id"), encode(col(vecCol)).as("codes")),

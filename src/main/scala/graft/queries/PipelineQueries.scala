@@ -136,18 +136,13 @@ object PipelineQueries {
     */
   def ddCrossIndexed(spark: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(spark, d)
-    val root = java.nio.file.Files.createTempDirectory("graft-lshx")
-    val cat = new graft.storage.SetCatalog(spark, root.toString)
-    Dedup.persistLshIndex(cat, "ddx", "corpus",
-      docs.filter(col("doc_id") < 250), "doc_id", "text")
-    val pairs = Dedup.crossPairsAgainstStoredIndex(
-      docs.filter(col("doc_id") >= 250), cat, "ddx", "corpus",
-      "doc_id", "text", threshold = 0.8)
-      .localCheckpoint(true)
-    cat.removeSet("ddx", "corpus_sets")
-    cat.removeSet("ddx", "corpus_bands")
-    graft.storage.SetCatalog.deleteTree(root)
-    pairs
+    graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
+      Dedup.persistLshIndex(cat, db, "corpus",
+        docs.filter(col("doc_id") < 250), "doc_id", "text")
+      Dedup.crossPairsAgainstStoredIndex(
+        docs.filter(col("doc_id") >= 250), cat, db, "corpus",
+        "doc_id", "text", threshold = 0.8)
+    }
   }
 
   /** Memoized standing LSH index for the probe-only registry form: one
@@ -217,13 +212,12 @@ object PipelineQueries {
     * (see [[installReaper]]).
     */
   def ddCrossProbe(spark: SparkSession, d: String): DataFrame = {
-    // the db name must be unique per cache key: the throwaway queries
-    // (dd_cross_indexed) register-and-REMOVE session views under the
-    // shared "ddx" namespace, which would clobber a standing index that
-    // reused those view names (caught by the PlanSpec registry sweeps
-    // running both queries twice in one session). md5 over the full
-    // (sessionId, sfDir) key — unlike a 32-bit hashCode fold, two
-    // distinct sfDirs cannot silently rebind each other's views.
+    // the db name must be unique per cache key: bucketed sets register
+    // `${db}_$set` in the session catalog, whose names every caller in
+    // the JVM shares, so a fixed db would let one standing index rebind
+    // another's tables. md5 over the full (sessionId, sfDir) key —
+    // unlike a 32-bit hashCode fold, two distinct sfDirs cannot
+    // silently rebind each other's tables.
     val key = (sessionId(spark), d)
     val db = "ddp" + java.security.MessageDigest.getInstance("MD5")
       .digest(s"${key._1}|${key._2}".getBytes("UTF-8"))
@@ -264,16 +258,12 @@ object PipelineQueries {
       .select(col("doc_id"), col("text"))
       .union(docs.filter(col("doc_id") < 100)
         .select((col("doc_id") + 10000).as("doc_id"), col("text")))
-    val root = java.nio.file.Files.createTempDirectory("graft-exactx")
-    val cat = new graft.storage.SetCatalog(spark, root.toString)
-    Dedup.persistExactIndex(cat, "ddx", "corpus",
-      docs.filter(col("doc_id") < 250), "text")
-    val out = Dedup.exactAgainstStoredIndex(
-      arrivals, cat, "ddx", "corpus", "doc_id", "text")
-      .localCheckpoint(true)
-    cat.removeSet("ddx", "corpus_hashes")
-    graft.storage.SetCatalog.deleteTree(root)
-    out
+    graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
+      Dedup.persistExactIndex(cat, db, "corpus",
+        docs.filter(col("doc_id") < 250), "text")
+      Dedup.exactAgainstStoredIndex(
+        arrivals, cat, db, "corpus", "doc_id", "text")
+    }
   }
 
   val ddExactIndexedSql: String =
@@ -375,17 +365,13 @@ object PipelineQueries {
     */
   def ddSpanCross(spark: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(spark, d)
-    val root = java.nio.file.Files.createTempDirectory("graft-gramx")
-    val cat = new graft.storage.SetCatalog(spark, root.toString)
-    Dedup.persistGramIndex(cat, "ddx", "corpus",
-      docs.filter(col("doc_id") < 250), "doc_id", "text", k = 8)
-    val spans = Dedup.spansAgainstStoredIndex(
-      docs.filter(col("doc_id") >= 250), cat, "ddx", "corpus",
-      "doc_id", "text", k = 8)
-      .localCheckpoint(true)
-    cat.removeSet("ddx", "corpus_grams")
-    graft.storage.SetCatalog.deleteTree(root)
-    spans
+    graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
+      Dedup.persistGramIndex(cat, db, "corpus",
+        docs.filter(col("doc_id") < 250), "doc_id", "text", k = 8)
+      Dedup.spansAgainstStoredIndex(
+        docs.filter(col("doc_id") >= 250), cat, db, "corpus",
+        "doc_id", "text", k = 8)
+    }
   }
 
   val ddSpanCrossSql: String =
@@ -999,14 +985,11 @@ object PipelineQueries {
     */
   def simIvfPqIndexed(spark: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(spark, d)
-    val root = java.nio.file.Files.createTempDirectory("graft-ivfpq")
-    val cat = new graft.storage.SetCatalog(spark, root.toString)
-    SimilaritySearch.buildIvfPqIndex(spark, cat, "idx", "emb", emb)
-    val hits = SimilaritySearch.searchIvfPqIndex(spark, cat, "idx", "emb",
-      emb.filter(col("vec_id") < 10), k = 5)
-      .localCheckpoint(true)
-    graft.storage.SetCatalog.deleteTree(root)
-    hits
+    graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
+      SimilaritySearch.buildIvfPqIndex(spark, cat, db, "emb", emb)
+      SimilaritySearch.searchIvfPqIndex(spark, cat, db, "emb",
+        emb.filter(col("vec_id") < 10), k = 5)
+    }
   }
 
   /** Codebooks trained on the BUILT half only (vec_id < 250); encoding
@@ -1023,14 +1006,11 @@ object PipelineQueries {
     */
   def simPqIndexed(spark: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(spark, d)
-    val root = java.nio.file.Files.createTempDirectory("graft-pq")
-    val cat = new graft.storage.SetCatalog(spark, root.toString)
-    SimilaritySearch.buildPqIndex(spark, cat, "idx", "emb", emb)
-    val hits = SimilaritySearch.searchPqIndex(spark, cat, "idx", "emb",
-      emb.filter(col("vec_id") < 10), k = 5)
-      .localCheckpoint(true)
-    graft.storage.SetCatalog.deleteTree(root)
-    hits
+    graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
+      SimilaritySearch.buildPqIndex(spark, cat, db, "emb", emb)
+      SimilaritySearch.searchPqIndex(spark, cat, db, "emb",
+        emb.filter(col("vec_id") < 10), k = 5)
+    }
   }
 
   /** The persisted-index variant of [[simIvf]]: build the IVF index into a
@@ -1042,17 +1022,11 @@ object PipelineQueries {
     */
   def simIvfIndexed(spark: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(spark, d)
-    val root = java.nio.file.Files.createTempDirectory("graft-ivf")
-    val cat = new graft.storage.SetCatalog(spark, root.toString)
-    SimilaritySearch.buildIvfIndex(spark, cat, "idx", "emb", emb)
-    val hits = SimilaritySearch.searchIvfIndex(spark, cat, "idx", "emb",
-      emb.filter(col("vec_id") < 10), k = 5)
-      // k × queries rows — materialize eagerly so the throwaway index can
-      // be deleted NOW instead of accumulating one copy per invocation
-      // under /tmp (bench runs this query repeatedly per session)
-      .localCheckpoint(true)
-    graft.storage.SetCatalog.deleteTree(root)
-    hits
+    graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
+      SimilaritySearch.buildIvfIndex(spark, cat, db, "emb", emb)
+      SimilaritySearch.searchIvfIndex(spark, cat, db, "emb",
+        emb.filter(col("vec_id") < 10), k = 5)
+    }
   }
 
   /** Incremental-maintenance variant of [[simIvfIndexed]]: build the
@@ -1065,17 +1039,14 @@ object PipelineQueries {
     */
   def simIvfAppend(spark: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(spark, d)
-    val root = java.nio.file.Files.createTempDirectory("graft-ivfa")
-    val cat = new graft.storage.SetCatalog(spark, root.toString)
-    SimilaritySearch.buildIvfIndex(spark, cat, "idx", "emb",
-      emb.filter(col("vec_id") < 250))
-    SimilaritySearch.appendToIvfIndex(spark, cat, "idx", "emb",
-      emb.filter(col("vec_id") >= 250))
-    val hits = SimilaritySearch.searchIvfIndex(spark, cat, "idx", "emb",
-      emb.filter(col("vec_id") < 10), k = 5)
-      .localCheckpoint(true)
-    graft.storage.SetCatalog.deleteTree(root)
-    hits
+    graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
+      SimilaritySearch.buildIvfIndex(spark, cat, db, "emb",
+        emb.filter(col("vec_id") < 250))
+      SimilaritySearch.appendToIvfIndex(spark, cat, db, "emb",
+        emb.filter(col("vec_id") >= 250))
+      SimilaritySearch.searchIvfIndex(spark, cat, db, "emb",
+        emb.filter(col("vec_id") < 10), k = 5)
+    }
   }
 
   def txtLangId(spark: SparkSession, d: String): DataFrame =
@@ -1522,14 +1493,11 @@ object PipelineQueries {
       .toDF()
       .select(col("doc_id").as("vec_id"), col("feature").as("embedding"))
       .localCheckpoint(true)
-    val root = java.nio.file.Files.createTempDirectory("graft-mmivf")
-    val cat = new graft.storage.SetCatalog(spark, root.toString)
-    SimilaritySearch.buildIvfIndex(spark, cat, "idx", "img", feats)
-    val hits = SimilaritySearch.searchIvfIndex(spark, cat, "idx", "img",
-      feats.filter(col("vec_id") < 10), k = 5)
-      .localCheckpoint(true)
-    graft.storage.SetCatalog.deleteTree(root)
-    hits
+    graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
+      SimilaritySearch.buildIvfIndex(spark, cat, db, "img", feats)
+      SimilaritySearch.searchIvfIndex(spark, cat, db, "img",
+        feats.filter(col("vec_id") < 10), k = 5)
+    }
   }
 
   /** The image-feature CTE shadows `embeddings`, then the 16-centroid

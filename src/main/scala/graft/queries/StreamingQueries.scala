@@ -251,17 +251,13 @@ object StreamingQueries {
   def stSpan(spark0: SparkSession, d: String): DataFrame = {
     val spark = streamSession(spark0)
     val docs = graft.model.Tables.documents(spark, d)
-    val root = java.nio.file.Files.createTempDirectory("graft-stspan")
-    val cat = new graft.storage.SetCatalog(spark, root.toString)
-    graft.operators.Dedup.persistGramIndex(cat, "stx", "corpus",
-      docs.filter(col("doc_id") < 250), "doc_id", "text", k = 8)
-    val spans = graft.operators.Dedup.streamSpansAgainstStoredIndex(
-      readDocStream(spark, d).filter(col("doc_id") >= 250),
-      cat, "stx", "corpus", "doc_id", "text", k = 8)
-      .localCheckpoint(true)
-    cat.removeSet("stx", "corpus_grams")
-    graft.storage.SetCatalog.deleteTree(root)
-    spans
+    graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
+      graft.operators.Dedup.persistGramIndex(cat, db, "corpus",
+        docs.filter(col("doc_id") < 250), "doc_id", "text", k = 8)
+      graft.operators.Dedup.streamSpansAgainstStoredIndex(
+        readDocStream(spark, d).filter(col("doc_id") >= 250),
+        cat, db, "corpus", "doc_id", "text", k = 8)
+    }
   }
 
   val stSpanSql: String = PipelineQueries.ddSpanCrossSql
@@ -275,21 +271,13 @@ object StreamingQueries {
   def stExact(spark0: SparkSession, d: String): DataFrame = {
     val spark = streamSession(spark0)
     val docs = graft.model.Tables.documents(spark, d)
-    val root = java.nio.file.Files.createTempDirectory("graft-stexact")
-    val cat = new graft.storage.SetCatalog(spark, root.toString)
-    graft.operators.Dedup.persistExactIndex(cat, "stx", "corpus",
-      docs.filter(col("doc_id") < 250), "text")
-    val s = readDocStream(spark, d)
-    val arrivals = s.filter(col("doc_id") >= 250)
-      .select(col("doc_id"), col("text"))
-      .unionByName(s.filter(col("doc_id") < 100)
-        .select((col("doc_id") + 10000).as("doc_id"), col("text")))
-    val flags = graft.operators.Dedup.streamExactAgainstStoredIndex(
-      arrivals, cat, "stx", "corpus", "doc_id", "text")
-      .localCheckpoint(true)
-    cat.removeSet("stx", "corpus_hashes")
-    graft.storage.SetCatalog.deleteTree(root)
-    flags
+    val arrivals = stArrivals(readDocStream(spark, d))
+    graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
+      graft.operators.Dedup.persistExactIndex(cat, db, "corpus",
+        docs.filter(col("doc_id") < 250), "text")
+      graft.operators.Dedup.streamExactAgainstStoredIndex(
+        arrivals, cat, db, "corpus", "doc_id", "text")
+    }
   }
 
   val stExactSql: String = PipelineQueries.ddExactIndexedSql
@@ -307,23 +295,15 @@ object StreamingQueries {
   def stFrameDedup(spark0: SparkSession, d: String): DataFrame = {
     val spark = streamSession(spark0)
     val docs = graft.model.Tables.documents(spark, d)
-    val root = java.nio.file.Files.createTempDirectory("graft-stframe")
-    val cat = new graft.storage.SetCatalog(spark, root.toString)
-    graft.operators.Multimodal.persistFrameIndex(cat, "stx", "frames",
-      graft.operators.Multimodal.withPayload(
-        docs.filter(col("doc_id") < 250)))
-    val s = readDocStream(spark, d)
-    val arrivals = s.filter(col("doc_id") >= 250)
-      .select(col("doc_id"), col("text"))
-      .unionByName(s.filter(col("doc_id") < 100)
-        .select((col("doc_id") + 10000).as("doc_id"), col("text")))
-    val flags = graft.operators.Multimodal.streamFramesAgainstStoredIndex(
-      graft.operators.Multimodal.withPayload(arrivals),
-      cat, "stx", "frames")
-      .localCheckpoint(true)
-    cat.removeSet("stx", "frames_hashes")
-    graft.storage.SetCatalog.deleteTree(root)
-    flags
+    val arrivals = stArrivals(readDocStream(spark, d))
+    graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
+      graft.operators.Multimodal.persistFrameIndex(cat, db, "frames",
+        graft.operators.Multimodal.withPayload(
+          docs.filter(col("doc_id") < 250)))
+      graft.operators.Multimodal.streamFramesAgainstStoredIndex(
+        graft.operators.Multimodal.withPayload(arrivals),
+        cat, db, "frames")
+    }
   }
 
   /** Oracle: corpus frames (every 4th 64-byte chunk of docs < 250, the
@@ -373,23 +353,15 @@ object StreamingQueries {
   def stAudioDup(spark0: SparkSession, d: String): DataFrame = {
     val spark = streamSession(spark0)
     val docs = graft.model.Tables.documents(spark, d)
-    val root = java.nio.file.Files.createTempDirectory("graft-staudio")
-    val cat = new graft.storage.SetCatalog(spark, root.toString)
-    graft.operators.Multimodal.persistEnvelopeIndex(cat, "stx", "env",
-      graft.operators.Multimodal.withPayload(
-        docs.filter(col("doc_id") < 250)))
-    val s = readDocStream(spark, d)
-    val arrivals = s.filter(col("doc_id") >= 250)
-      .select(col("doc_id"), col("text"))
-      .unionByName(s.filter(col("doc_id") < 100)
-        .select((col("doc_id") + 10000).as("doc_id"), col("text")))
-    val flags = graft.operators.Multimodal.streamEnvelopesAgainstStoredIndex(
-      graft.operators.Multimodal.withPayload(arrivals),
-      cat, "stx", "env")
-      .localCheckpoint(true)
-    cat.removeSet("stx", "env_fps")
-    graft.storage.SetCatalog.deleteTree(root)
-    flags
+    val arrivals = stArrivals(readDocStream(spark, d))
+    graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
+      graft.operators.Multimodal.persistEnvelopeIndex(cat, db, "env",
+        graft.operators.Multimodal.withPayload(
+          docs.filter(col("doc_id") < 250)))
+      graft.operators.Multimodal.streamEnvelopesAgainstStoredIndex(
+        graft.operators.Multimodal.withPayload(arrivals),
+        cat, db, "env")
+    }
   }
 
   /** Oracle: the mm_audio_dup envelope chain (window 64 / hop 32 energy,
@@ -446,8 +418,9 @@ object StreamingQueries {
       |FROM f LEFT JOIN cf ON cf.fp = f.fp
       |WHERE f.side = 1""".stripMargin
 
-  /** The capstones' shared arrival stream: docs ≥ 250 plus the < 100
-    * slice re-ingested under shifted ids (planted stream-side dups).
+  /** The standing-index probes' shared arrival stream: docs ≥ 250 plus
+    * the < 100 slice re-ingested under shifted ids (planted stream-side
+    * dups).
     */
   private def stArrivals(s: DataFrame): DataFrame =
     s.filter(col("doc_id") >= 250)
@@ -498,10 +471,14 @@ object StreamingQueries {
     * build's stage tail back-fills the others' idle cores instead of
     * serializing three small write/commit chains (guide §2.6 — the
     * same overlap pipe_all's branch heads use). Results unchanged.
+    * Every build finishes before a failure is rethrown, so no build
+    * still writes into a catalog its caller is cleaning up. Returns
+    * the guarded scans (not raw scanBucketedSet): a schema-drifted
+    * index fails fast here instead of silently matching nothing —
+    * the same contract as the sibling streaming probes.
     */
-  private def buildPipeIndexes(
-      cat: graft.storage.SetCatalog, corpus: DataFrame,
-      txt: String, frm: String, env: String): Unit = {
+  private def buildPipeIndexes(cat: graft.storage.SetCatalog, db: String,
+      corpus: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.global
     // blocking{}: each build parks its fork-join thread on Spark
@@ -510,22 +487,25 @@ object StreamingQueries {
     Seq(
       scala.concurrent.Future {
         scala.concurrent.blocking {
-          graft.operators.Dedup.persistExactIndex(cat, "stx", txt, corpus, "text")
+          graft.operators.Dedup.persistExactIndex(cat, db, "txt", corpus, "text")
         }
       },
       scala.concurrent.Future {
         scala.concurrent.blocking {
-          graft.operators.Multimodal.persistFrameIndex(cat, "stx", frm,
+          graft.operators.Multimodal.persistFrameIndex(cat, db, "frm",
             graft.operators.Multimodal.withPayload(corpus))
         }
       },
       scala.concurrent.Future {
         scala.concurrent.blocking {
-          graft.operators.Multimodal.persistEnvelopeIndex(cat, "stx", env,
+          graft.operators.Multimodal.persistEnvelopeIndex(cat, db, "env",
             graft.operators.Multimodal.withPayload(corpus))
         }
-      }).foreach(f =>
-      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
+      }).map(f => scala.util.Try(scala.concurrent.Await.result(f,
+        scala.concurrent.duration.Duration.Inf))).foreach(_.get)
+    (graft.operators.Dedup.scanExactIndex(cat, db, "txt"),
+      graft.operators.Dedup.scanExactIndex(cat, db, "frm"),
+      graft.operators.Dedup.scanFingerprintIndex(cat, db, "env"))
   }
 
   /** The streaming form of the cross-modal capstone
@@ -551,25 +531,11 @@ object StreamingQueries {
     val spark = streamSession(spark0)
     val docs = graft.model.Tables.documents(spark, d)
     val corpus = docs.filter(col("doc_id") < 250)
-    val root = java.nio.file.Files.createTempDirectory("graft-stpipe")
-    val cat = new graft.storage.SetCatalog(spark, root.toString)
-    buildPipeIndexes(cat, corpus, "txt", "frm", "env")
-    // the guarded scans (not raw scanBucketedSet): a schema-drifted
-    // index fails fast here instead of silently matching nothing —
-    // the same contract as the sibling streaming probes
-    val txtHashes = graft.operators.Dedup.scanExactIndex(cat, "stx", "txt")
-    val frmHashes = graft.operators.Dedup.scanExactIndex(cat, "stx", "frm")
-    val envFps = graft.operators.Dedup.scanFingerprintIndex(cat, "stx", "env")
-    val s = readDocStream(spark, d)
-    val arrivals = stArrivals(s)
-    val flags = graft.operators.Dedup.streamProbe(arrivals,
-      pipeFlagsBatch(_, txtHashes, frmHashes, envFps),
-      None).localCheckpoint(true)
-    cat.removeSet("stx", "txt_hashes")
-    cat.removeSet("stx", "frm_hashes")
-    cat.removeSet("stx", "env_fps")
-    graft.storage.SetCatalog.deleteTree(root)
-    flags
+    graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
+      val (txtHashes, frmHashes, envFps) = buildPipeIndexes(cat, db, corpus)
+      graft.operators.Dedup.streamProbe(stArrivals(readDocStream(spark, d)),
+        pipeFlagsBatch(_, txtHashes, frmHashes, envFps), None)
+    }
   }
 
   /** Oracle: text dup by equality vs the corpus half, frame dup by any
@@ -726,18 +692,15 @@ object StreamingQueries {
   def stIvfAppend(spark0: SparkSession, d: String): DataFrame = {
     val spark = streamSession(spark0)
     val emb = graft.model.Tables.embeddings(spark, d)
-    val root = java.nio.file.Files.createTempDirectory("graft-ivfs")
-    val cat = new graft.storage.SetCatalog(spark, root.toString)
-    graft.operators.SimilaritySearch.buildIvfIndex(spark, cat, "idx", "emb",
-      emb.filter(col("vec_id") < 250))
-    graft.operators.SimilaritySearch.streamAppendToIvfIndex(
-      readEmbStream(spark, d).filter(col("vec_id") >= 250),
-      cat, "idx", "emb")
-    val hits = graft.operators.SimilaritySearch.searchIvfIndex(
-      spark, cat, "idx", "emb", emb.filter(col("vec_id") < 10), k = 5)
-      .localCheckpoint(true)
-    graft.storage.SetCatalog.deleteTree(root)
-    hits
+    graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
+      graft.operators.SimilaritySearch.buildIvfIndex(spark, cat, db, "emb",
+        emb.filter(col("vec_id") < 250))
+      graft.operators.SimilaritySearch.streamAppendToIvfIndex(
+        readEmbStream(spark, d).filter(col("vec_id") >= 250),
+        cat, db, "emb")
+      graft.operators.SimilaritySearch.searchIvfIndex(
+        spark, cat, db, "emb", emb.filter(col("vec_id") < 10), k = 5)
+    }
   }
 
   val stIvfAppendSql: String = PipelineQueries.simIvfAppendSql
@@ -754,18 +717,15 @@ object StreamingQueries {
   def stPqAppend(spark0: SparkSession, d: String): DataFrame = {
     val spark = streamSession(spark0)
     val emb = graft.model.Tables.embeddings(spark, d)
-    val root = java.nio.file.Files.createTempDirectory("graft-pqs")
-    val cat = new graft.storage.SetCatalog(spark, root.toString)
-    graft.operators.SimilaritySearch.buildPqIndex(spark, cat, "idx", "emb",
-      emb.filter(col("vec_id") < 250))
-    graft.operators.SimilaritySearch.streamAppendToPqIndex(
-      readEmbStream(spark, d).filter(col("vec_id") >= 250),
-      cat, "idx", "emb")
-    val hits = graft.operators.SimilaritySearch.searchPqIndex(
-      spark, cat, "idx", "emb", emb.filter(col("vec_id") < 10), k = 5)
-      .localCheckpoint(true)
-    graft.storage.SetCatalog.deleteTree(root)
-    hits
+    graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
+      graft.operators.SimilaritySearch.buildPqIndex(spark, cat, db, "emb",
+        emb.filter(col("vec_id") < 250))
+      graft.operators.SimilaritySearch.streamAppendToPqIndex(
+        readEmbStream(spark, d).filter(col("vec_id") >= 250),
+        cat, db, "emb")
+      graft.operators.SimilaritySearch.searchPqIndex(
+        spark, cat, db, "emb", emb.filter(col("vec_id") < 10), k = 5)
+    }
   }
 
   val stPqAppendSql: String = PipelineQueries.pqAppendSql
@@ -780,18 +740,15 @@ object StreamingQueries {
   def stIvfPqAppend(spark0: SparkSession, d: String): DataFrame = {
     val spark = streamSession(spark0)
     val emb = graft.model.Tables.embeddings(spark, d)
-    val root = java.nio.file.Files.createTempDirectory("graft-ivfpqs")
-    val cat = new graft.storage.SetCatalog(spark, root.toString)
-    graft.operators.SimilaritySearch.buildIvfPqIndex(spark, cat, "idx", "emb",
-      emb.filter(col("vec_id") < 250))
-    graft.operators.SimilaritySearch.streamAppendToIvfPqIndex(
-      readEmbStream(spark, d).filter(col("vec_id") >= 250),
-      cat, "idx", "emb")
-    val hits = graft.operators.SimilaritySearch.searchIvfPqIndex(
-      spark, cat, "idx", "emb", emb.filter(col("vec_id") < 10), k = 5)
-      .localCheckpoint(true)
-    graft.storage.SetCatalog.deleteTree(root)
-    hits
+    graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
+      graft.operators.SimilaritySearch.buildIvfPqIndex(spark, cat, db, "emb",
+        emb.filter(col("vec_id") < 250))
+      graft.operators.SimilaritySearch.streamAppendToIvfPqIndex(
+        readEmbStream(spark, d).filter(col("vec_id") >= 250),
+        cat, db, "emb")
+      graft.operators.SimilaritySearch.searchIvfPqIndex(
+        spark, cat, db, "emb", emb.filter(col("vec_id") < 10), k = 5)
+    }
   }
 
   val stIvfPqAppendSql: String = PipelineQueries.ivfPqAppendSql
@@ -812,18 +769,13 @@ object StreamingQueries {
   def stSemantic(spark0: SparkSession, d: String): DataFrame = {
     val spark = streamSession(spark0)
     val emb = graft.model.Tables.embeddings(spark, d)
-    val root = java.nio.file.Files.createTempDirectory("graft-stsem")
-    val cat = new graft.storage.SetCatalog(spark, root.toString)
-    graft.operators.Dedup.persistSemanticIndex(cat, "stx", "sem",
-      emb.filter(col("vec_id") < 250), "vec_id", "embedding")
-    val pairs = graft.operators.Dedup.streamSemanticAgainstIndex(
-      readEmbStream(spark, d).filter(col("vec_id") >= 250),
-      cat, "stx", "sem", "vec_id", "embedding", threshold = 0.4)
-      .localCheckpoint(true)
-    Seq("sem_centroids", "sem_vectors", "sem_built")
-      .foreach(cat.removeSet("stx", _))
-    graft.storage.SetCatalog.deleteTree(root)
-    pairs
+    graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
+      graft.operators.Dedup.persistSemanticIndex(cat, db, "sem",
+        emb.filter(col("vec_id") < 250), "vec_id", "embedding")
+      graft.operators.Dedup.streamSemanticAgainstIndex(
+        readEmbStream(spark, d).filter(col("vec_id") >= 250),
+        cat, db, "sem", "vec_id", "embedding", threshold = 0.4)
+    }
   }
 
   /** Oracle: the shared unrolled-Lloyd trainer restricted to the corpus
@@ -885,29 +837,24 @@ object StreamingQueries {
   def stSemanticLifecycle(spark0: SparkSession, d: String): DataFrame = {
     val spark = streamSession(spark0)
     val emb = graft.model.Tables.embeddings(spark, d)
-    val root = java.nio.file.Files.createTempDirectory("graft-stseml")
-    val cat = new graft.storage.SetCatalog(spark, root.toString)
-    graft.operators.Dedup.persistSemanticIndex(cat, "stx", "seml",
-      emb.filter(col("vec_id") < 150), "vec_id", "embedding")
-    graft.operators.Dedup.streamAppendToSemanticIndex(
-      readEmbStream(spark, d)
-        .filter(col("vec_id") >= 150 && col("vec_id") < 250),
-      cat, "stx", "seml", "vec_id", "embedding")
-    val drift = graft.operators.Dedup.semanticDriftFraction(cat, "stx", "seml")
-    require(drift >= 0.5,
-      f"semantic drift fraction $drift%.2f below the appended 100/150 — " +
-        "sidecar tracking broke")
-    graft.operators.Dedup.rebuildSemanticIndex(cat, "stx", "seml")
-    require(graft.operators.Dedup.semanticDriftFraction(cat, "stx", "seml") == 0.0,
-      "rebuild did not reset the semantic drift fraction")
-    val pairs = graft.operators.Dedup.streamSemanticAgainstIndex(
-      readEmbStream(spark, d).filter(col("vec_id") >= 250),
-      cat, "stx", "seml", "vec_id", "embedding", threshold = 0.4)
-      .localCheckpoint(true)
-    Seq("seml_centroids", "seml_vectors", "seml_built")
-      .foreach(cat.removeSet("stx", _))
-    graft.storage.SetCatalog.deleteTree(root)
-    pairs
+    graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
+      graft.operators.Dedup.persistSemanticIndex(cat, db, "seml",
+        emb.filter(col("vec_id") < 150), "vec_id", "embedding")
+      graft.operators.Dedup.streamAppendToSemanticIndex(
+        readEmbStream(spark, d)
+          .filter(col("vec_id") >= 150 && col("vec_id") < 250),
+        cat, db, "seml", "vec_id", "embedding")
+      val drift = graft.operators.Dedup.semanticDriftFraction(cat, db, "seml")
+      require(drift >= 0.5,
+        f"semantic drift fraction $drift%.2f below the appended 100/150 — " +
+          "sidecar tracking broke")
+      graft.operators.Dedup.rebuildSemanticIndex(cat, db, "seml")
+      require(graft.operators.Dedup.semanticDriftFraction(cat, db, "seml") == 0.0,
+        "rebuild did not reset the semantic drift fraction")
+      graft.operators.Dedup.streamSemanticAgainstIndex(
+        readEmbStream(spark, d).filter(col("vec_id") >= 250),
+        cat, db, "seml", "vec_id", "embedding", threshold = 0.4)
+    }
   }
 
   /** Oracle: EXACTLY [[stSemanticSql]] — the build-once index over
@@ -941,37 +888,48 @@ object StreamingQueries {
     */
   def stSemanticLive(spark0: SparkSession, d: String): DataFrame = {
     val spark = streamSession(spark0)
+    val emb = graft.model.Tables.embeddings(spark, d)
+    graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
+      graft.operators.Dedup.persistSemanticIndex(cat, db, "semlv",
+        emb.filter(col("vec_id") < 150), "vec_id", "embedding")
+      liveProbe(emb, (250L, 300L), (300L, 350L),
+        graft.operators.Dedup.semanticProbeFn(
+          cat, db, "semlv", "vec_id", "embedding", 0.4)) {
+        graft.operators.Dedup.appendToSemanticIndex(cat, db, "semlv",
+          emb.filter(col("vec_id") >= 150 && col("vec_id") < 250),
+          "vec_id", "embedding")
+      }
+    }
+  }
+
+  /** The mid-stream harness of the two live-index queries: a probe
+    * stream over `(vec_id, embedding)` arrivals drains the `first`
+    * window of `emb`, `append` grows the standing index, the same
+    * query object (no restart) drains the `second` window, and the
+    * accumulated `probe` output comes back. Windows are [lo, hi)
+    * vec_id ranges, collected to the driver as they are fed.
+    */
+  private def liveProbe(emb: DataFrame, first: (Long, Long),
+      second: (Long, Long), probe: DataFrame => DataFrame)(
+      append: => Unit): DataFrame = {
+    val spark = emb.sparkSession
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val emb = graft.model.Tables.embeddings(spark, d)
-    val root = java.nio.file.Files.createTempDirectory("graft-stsemlv")
-    val cat = new graft.storage.SetCatalog(spark, root.toString)
-    graft.operators.Dedup.persistSemanticIndex(cat, "stx", "semlv",
-      emb.filter(col("vec_id") < 150), "vec_id", "embedding")
-    def slice(lo: Long, hi: Long): Seq[(Long, Seq[Float])] =
-      emb.filter(col("vec_id") >= lo && col("vec_id") < hi)
+    def slice(w: (Long, Long)): Seq[(Long, Seq[Float])] =
+      emb.filter(col("vec_id") >= w._1 && col("vec_id") < w._2)
         .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Seq[Float])]
     val (q, result) = graft.operators.Dedup.startProbe(
-      input.toDS().toDF("vec_id", "embedding"),
-      graft.operators.Dedup.semanticProbeFn(
-        cat, "stx", "semlv", "vec_id", "embedding", 0.4),
-      None)
-    val pairs = try {
-      input.addData(slice(250, 300): _*)
+      input.toDS().toDF("vec_id", "embedding"), probe, None)
+    try {
+      input.addData(slice(first): _*)
       q.processAllAvailable()
-      graft.operators.Dedup.appendToSemanticIndex(cat, "stx", "semlv",
-        emb.filter(col("vec_id") >= 150 && col("vec_id") < 250),
-        "vec_id", "embedding")
-      input.addData(slice(300, 350): _*)
+      append
+      input.addData(slice(second): _*)
       q.processAllAvailable()
-      result().localCheckpoint(true)
+      result()
     } finally q.stop()
-    Seq("semlv_centroids", "semlv_vectors", "semlv_built")
-      .foreach(cat.removeSet("stx", _))
-    graft.storage.SetCatalog.deleteTree(root)
-    pairs
   }
 
   /** Oracle: codebook trained on vec_id < 150 (the build generation's —
@@ -1027,35 +985,18 @@ object StreamingQueries {
     */
   def stIvfPqLive(spark0: SparkSession, d: String): DataFrame = {
     val spark = streamSession(spark0)
-    import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val emb = graft.model.Tables.embeddings(spark, d)
-    val root = java.nio.file.Files.createTempDirectory("graft-stivfpqlv")
-    val cat = new graft.storage.SetCatalog(spark, root.toString)
-    graft.operators.SimilaritySearch.buildIvfPqIndex(spark, cat, "idx", "emb",
-      emb.filter(col("vec_id") < 150))
-    def slice(lo: Long, hi: Long): Seq[(Long, Seq[Float])] =
-      emb.filter(col("vec_id") >= lo && col("vec_id") < hi)
-        .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Seq[Float])]
-    val (q, result) = graft.operators.Dedup.startProbe(
-      input.toDS().toDF("vec_id", "embedding"),
-      batch => graft.operators.SimilaritySearch.searchIvfPqIndex(spark,
-        cat, "idx", "emb", batch, k = 5),
-      None)
-    val hits = try {
-      input.addData(slice(250, 255): _*)
-      q.processAllAvailable()
-      graft.operators.SimilaritySearch.appendToIvfPqIndex(spark, cat,
-        "idx", "emb",
-        emb.filter(col("vec_id") >= 150 && col("vec_id") < 250))
-      input.addData(slice(255, 260): _*)
-      q.processAllAvailable()
-      result().localCheckpoint(true)
-    } finally q.stop()
-    graft.storage.SetCatalog.deleteTree(root)
-    hits
+    graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
+      graft.operators.SimilaritySearch.buildIvfPqIndex(spark, cat, db, "emb",
+        emb.filter(col("vec_id") < 150))
+      liveProbe(emb, (250L, 255L), (255L, 260L),
+        batch => graft.operators.SimilaritySearch.searchIvfPqIndex(spark,
+          cat, db, "emb", batch, k = 5)) {
+        graft.operators.SimilaritySearch.appendToIvfPqIndex(spark, cat,
+          db, "emb",
+          emb.filter(col("vec_id") >= 150 && col("vec_id") < 250))
+      }
+    }
   }
 
   /** Oracle: both model chains trained on vec_id < 150 (the build
@@ -1209,64 +1150,56 @@ object StreamingQueries {
     val spark = streamSession(spark0)
     val docs = graft.model.Tables.documents(spark, d)
     val corpus = docs.filter(col("doc_id") < 250)
-    val root = java.nio.file.Files.createTempDirectory("graft-stlmb")
-    val cat = new graft.storage.SetCatalog(spark, root.toString)
-    buildPipeIndexes(cat, corpus, "txt", "frm", "env")
-    val txtHashes = graft.operators.Dedup.scanExactIndex(cat, "stx", "txt")
-    val frmHashes = graft.operators.Dedup.scanExactIndex(cat, "stx", "frm")
-    val envFps = graft.operators.Dedup.scanFingerprintIndex(cat, "stx", "env")
-    // frozen LM threshold, calibrated HELD-OUT: the model trains on the
-    // corpus slice's first half, the threshold is the top-half cut
-    // (quantileKeep's exact-rank min-score) of the SECOND half's scores
-    // under that model. Calibrating on the training slice itself would
-    // freeze an in-domain score level no out-of-model arrival reaches
-    // (measured: 1 of 121 survivors passed) — held-out calibration puts
-    // the cut on the same out-of-model score scale the arrivals land on,
-    // which is how CCNet derives its perplexity buckets.
-    val lmRef = corpus.filter(col("doc_id") < 125)
-    val calib = corpus.filter(col("doc_id") >= 125)
-    val calScored = graft.operators.TextAnalysis
-      .lmScore(calib, lmRef, "doc_id", "text")
-      .select(col("doc_id"), col("lm_score"))
-    // a fixture too small to have a held-out slice (sf0.001's corpus is
-    // 50 docs, all < 125) yields an empty calibration set and a NULL
-    // min — gate open (−∞) rather than NPE: with no data to calibrate
-    // on, admitting everything is the only defensible cut
-    val thrRow = graft.operators.Curation
-      .quantileKeep(calScored, "lm_score", fraction = 0.5)
-      .agg(min(col("lm_score"))).collect()(0)
-    val thr =
-      if (thrRow.isNullAt(0)) Double.NegativeInfinity else thrRow.getDouble(0)
-    // stage 2: gate arrivals per micro-batch, stage admitted docs
-    val arrivals = stArrivals(readDocStream(spark, d))
-    graft.operators.Dedup.streamProbe(arrivals, batch => {
-      val keepIds = pipeFlagsBatch(batch, txtHashes, frmHashes, envFps)
-        .filter(col("keep")).select(col("doc_id"))
-      val kept = batch.select(col("doc_id"), col("text"))
-        .join(keepIds, Seq("doc_id"))
-      val lmKeep = graft.operators.TextAnalysis
-        .lmScore(kept, lmRef, "doc_id", "text")
-        .filter(col("lm_score") >= thr).select(col("doc_id"))
-      kept.join(lmKeep, Seq("doc_id"))
-    }, Some((cat, "stx", "gated")))
-    // stage 3: the staged set arrives as a sequenced log (doc_id = the
-    // ingest offset) into the standing budget admission
-    val gatedSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    val gstream = spark.readStream.schema(gatedSchema)
-      .parquet(s"${root.toString}/stx.gated")
-    val out = graft.operators.Curation.streamTokenBudget(
-      gstream, "doc_id", "text", totalTokens = 30000L, nShards = 8)
-    val res = drainToTable(out, "st_pipe_lm_budget_sink", "append")
-      .select(col("doc_id"), col("shard"), col("n_tokens"), col("cum_tokens"))
-      .localCheckpoint(true)
-    Seq("txt_hashes", "frm_hashes", "env_fps", "gated")
-      .foreach(cat.removeSet("stx", _))
-    graft.storage.SetCatalog.deleteTree(root)
-    res
+    graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
+      val (txtHashes, frmHashes, envFps) = buildPipeIndexes(cat, db, corpus)
+      // frozen LM threshold, calibrated HELD-OUT: the model trains on the
+      // corpus slice's first half, the threshold is the top-half cut
+      // (quantileKeep's exact-rank min-score) of the SECOND half's scores
+      // under that model. Calibrating on the training slice itself would
+      // freeze an in-domain score level no out-of-model arrival reaches
+      // (measured: 1 of 121 survivors passed) — held-out calibration puts
+      // the cut on the same out-of-model score scale the arrivals land on,
+      // which is how CCNet derives its perplexity buckets.
+      val lmRef = corpus.filter(col("doc_id") < 125)
+      val calib = corpus.filter(col("doc_id") >= 125)
+      val calScored = graft.operators.TextAnalysis
+        .lmScore(calib, lmRef, "doc_id", "text")
+        .select(col("doc_id"), col("lm_score"))
+      // a fixture too small to have a held-out slice (sf0.001's corpus is
+      // 50 docs, all < 125) yields an empty calibration set and a NULL
+      // min — gate open (−∞) rather than NPE: with no data to calibrate
+      // on, admitting everything is the only defensible cut
+      val thrRow = graft.operators.Curation
+        .quantileKeep(calScored, "lm_score", fraction = 0.5)
+        .agg(min(col("lm_score"))).collect()(0)
+      val thr =
+        if (thrRow.isNullAt(0)) Double.NegativeInfinity else thrRow.getDouble(0)
+      // stage 2: gate arrivals per micro-batch, stage admitted docs
+      val arrivals = stArrivals(readDocStream(spark, d))
+      graft.operators.Dedup.streamProbe(arrivals, batch => {
+        val keepIds = pipeFlagsBatch(batch, txtHashes, frmHashes, envFps)
+          .filter(col("keep")).select(col("doc_id"))
+        val kept = batch.select(col("doc_id"), col("text"))
+          .join(keepIds, Seq("doc_id"))
+        val lmKeep = graft.operators.TextAnalysis
+          .lmScore(kept, lmRef, "doc_id", "text")
+          .filter(col("lm_score") >= thr).select(col("doc_id"))
+        kept.join(lmKeep, Seq("doc_id"))
+      }, Some((cat, db, "gated")))
+      // stage 3: the staged set arrives as a sequenced log (doc_id = the
+      // ingest offset) into the standing budget admission
+      val gatedSchema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("doc_id",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("text",
+          org.apache.spark.sql.types.StringType)))
+      val gstream = spark.readStream.schema(gatedSchema)
+        .parquet(cat.dir(db, "gated"))
+      val out = graft.operators.Curation.streamTokenBudget(
+        gstream, "doc_id", "text", totalTokens = 30000L, nShards = 8)
+      drainToTable(out, "st_pipe_lm_budget_sink", "append")
+        .select(col("doc_id"), col("shard"), col("n_tokens"), col("cum_tokens"))
+    }
   }
 
   /** Oracle: [[stPipeAllSql]]'s keep verdict as CTE `spa`, the LM model
@@ -1365,18 +1298,14 @@ object StreamingQueries {
     */
   def stIngestDedup(spark0: SparkSession, d: String): DataFrame = {
     val spark = streamSession(spark0)
-    val root = java.nio.file.Files.createTempDirectory("graft-sting")
-    val cat = new graft.storage.SetCatalog(spark, root.toString)
     val s = readDocStream(spark, d)
     val arrivals = s.select(col("doc_id"), col("text"))
       .unionByName(s.filter(col("doc_id") < 100)
         .select((col("doc_id") + 10000).as("doc_id"), col("text")))
-    val kept = graft.operators.Dedup.streamIngestExactDedup(
-      arrivals, cat, "stx", "ing", "doc_id", "text")
-      .localCheckpoint(true)
-    cat.removeSet("stx", "ing_hashes")
-    graft.storage.SetCatalog.deleteTree(root)
-    kept
+    graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
+      graft.operators.Dedup.streamIngestExactDedup(
+        arrivals, cat, db, "ing", "doc_id", "text")
+    }
   }
 
   /** Oracle: first-seen-wins == minimum id per distinct text over the
@@ -1402,15 +1331,11 @@ object StreamingQueries {
     */
   def stIngestNearDup(spark0: SparkSession, d: String): DataFrame = {
     val spark = streamSession(spark0)
-    val root = java.nio.file.Files.createTempDirectory("graft-stingnd")
-    val cat = new graft.storage.SetCatalog(spark, root.toString)
-    val pairs = graft.operators.Dedup.streamIngestNearDup(
-      readDocStream(spark, d), cat, "stx", "ind", "doc_id", "text",
-      threshold = 0.8)
-      .localCheckpoint(true)
-    Seq("ind_sets", "ind_bands").foreach(cat.removeSet("stx", _))
-    graft.storage.SetCatalog.deleteTree(root)
-    pairs
+    graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
+      graft.operators.Dedup.streamIngestNearDup(
+        readDocStream(spark, d), cat, db, "ind", "doc_id", "text",
+        threshold = 0.8)
+    }
   }
 
   /** The CCNet SAMPLING recipe's STREAMING form — pipe_quality_mix as a
@@ -1464,41 +1389,37 @@ object StreamingQueries {
         .agg(min(col("lm_score"))).collect()(0)
       if (r.isNullAt(0)) Double.NegativeInfinity else r.getDouble(0)
     }
-    val root = java.nio.file.Files.createTempDirectory("graft-stqmix")
-    val cat = new graft.storage.SetCatalog(spark, root.toString)
-    // stage 2: score + classify arrivals per micro-batch, stage tiers
-    val arrivals = readDocStream(spark, d).filter(col("doc_id") >= 250)
-      .select(col("doc_id"), col("text"))
-    graft.operators.Dedup.streamProbe(arrivals, batch => {
-      val tiers = graft.operators.TextAnalysis
-        .lmScore(batch, lmRef, "doc_id", "text")
-        .select(col("doc_id"),
-          when(col("lm_score") >= t1, lit("0"))
-            .when(col("lm_score") >= t2, lit("1"))
-            .otherwise(lit("2")).as("tier"))
-      batch.join(tiers, Seq("doc_id"))
-    }, Some((cat, "stx", "tiered")))
-    // stage 3: the staged tiered log feeds the standing mixture admission
-    val tieredSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("tier",
-        org.apache.spark.sql.types.StringType)))
-    val tstream = spark.readStream.schema(tieredSchema)
-      .parquet(s"${root.toString}/stx.tiered")
-    val out = graft.operators.Curation.streamDomainTokenBudget(
-      tstream, "doc_id", "text", "tier",
-      Map("0" -> 0.6, "1" -> 0.3, "2" -> 0.1),
-      totalTokens = 30000L, nShards = 8)
-    val res = drainToTable(out, "st_pipe_quality_mix_sink", "append")
-      .select(col("doc_id"), col("domain"), col("shard"),
-        col("n_tokens"), col("cum_tokens"))
-      .localCheckpoint(true)
-    cat.removeSet("stx", "tiered")
-    graft.storage.SetCatalog.deleteTree(root)
-    res
+    graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
+      // stage 2: score + classify arrivals per micro-batch, stage tiers
+      val arrivals = readDocStream(spark, d).filter(col("doc_id") >= 250)
+        .select(col("doc_id"), col("text"))
+      graft.operators.Dedup.streamProbe(arrivals, batch => {
+        val tiers = graft.operators.TextAnalysis
+          .lmScore(batch, lmRef, "doc_id", "text")
+          .select(col("doc_id"),
+            when(col("lm_score") >= t1, lit("0"))
+              .when(col("lm_score") >= t2, lit("1"))
+              .otherwise(lit("2")).as("tier"))
+        batch.join(tiers, Seq("doc_id"))
+      }, Some((cat, db, "tiered")))
+      // stage 3: the staged tiered log feeds the standing mixture admission
+      val tieredSchema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("doc_id",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("text",
+          org.apache.spark.sql.types.StringType),
+        org.apache.spark.sql.types.StructField("tier",
+          org.apache.spark.sql.types.StringType)))
+      val tstream = spark.readStream.schema(tieredSchema)
+        .parquet(cat.dir(db, "tiered"))
+      val out = graft.operators.Curation.streamDomainTokenBudget(
+        tstream, "doc_id", "text", "tier",
+        Map("0" -> 0.6, "1" -> 0.3, "2" -> 0.1),
+        totalTokens = 30000L, nShards = 8)
+      drainToTable(out, "st_pipe_quality_mix_sink", "append")
+        .select(col("doc_id"), col("domain"), col("shard"),
+          col("n_tokens"), col("cum_tokens"))
+    }
   }
 
   /** Oracle: the held-out model/calibration CTE shapes of

@@ -143,6 +143,37 @@ object SetCatalog {
     }
   }
 
+  /** Run `body` against a throwaway catalog and return its result
+    * materialized: the lifecycle of every query that builds an index
+    * only to answer itself. The body gets a catalog on a fresh temp
+    * root and a fresh db name, alphanumeric because a bucketed set
+    * registers `${db}_$set` in the session catalog, whose names are
+    * shared by every caller in the JVM; a fresh name per call keeps
+    * concurrent calls off each other's entries. The result is
+    * checkpointed once, while the sets it reads still exist. Then,
+    * whether the body returned or threw, every set under the root is
+    * removed (which drops its session-catalog entry) and the root
+    * deleted. A cleanup failure after a body failure is attached to
+    * the body's exception as suppressed.
+    */
+  def scratch(spark: SparkSession)(
+      body: (SetCatalog, String) => DataFrame): DataFrame = {
+    val root = Files.createTempDirectory("graft-scratch")
+    val cat = new SetCatalog(spark, root.toString)
+    val db = "s" + java.util.UUID.randomUUID().toString.replace("-", "")
+    var failure: Throwable = null
+    try body(cat, db).localCheckpoint(true)
+    catch { case t: Throwable => failure = t; throw t }
+    finally {
+      try {
+        try cat.listSets().foreach { case (d, s) => cat.removeSet(d, s) }
+        finally deleteTree(root)
+      } catch {
+        case c: Throwable if failure != null => failure.addSuppressed(c)
+      }
+    }
+  }
+
   /** Append `batch` as parquet under `path` (partitioned by
     * `partitionColumn` when given) and return the (rows, files) the
     * write job produced, read off the write command's own metrics. The
@@ -236,7 +267,7 @@ object SetCatalog {
 final class SetCatalog(spark: SparkSession, root: String,
     recoverDbsOnOpen: Seq[String] = Nil) {
 
-  private def dir(db: String, set: String) = s"$root/$db.$set"
+  private[graft] def dir(db: String, set: String) = s"$root/$db.$set"
   private def metaPath(db: String, set: String) = s"${dir(db, set)}.meta"
 
   /** What the catalog already knows about ONE generation of a set: its
@@ -1230,12 +1261,14 @@ final class SetCatalog(spark: SparkSession, root: String,
     if (!Files.exists(d)) Seq.empty
     else {
       import scala.jdk.CollectionConverters._
-      Files.list(d).iterator().asScala
+      val s = Files.list(d)
+      try s.iterator().asScala
         .filter(p => Files.isDirectory(p) && p.getFileName.toString.contains("."))
         .map { p =>
           val Array(db, set) = p.getFileName.toString.split("\\.", 2)
           (db, set)
-        }.toSeq.sorted
+        }.toList.sorted
+      finally s.close()
     }
   }
 }

@@ -680,4 +680,55 @@ class CatalogSpec extends GraftSpecBase {
     assert(!spark.sql("SHOW TABLES IN graft.scratch")
       .collect().map(_.getString(1)).toSet.contains("regions2"))
   }
+
+  test("scratch: a body that throws after a bucketed build leaves no root and no session-catalog table") {
+    import spark.implicits._
+    val boom = new IllegalStateException("body failed after its index build")
+    var root: java.nio.file.Path = null
+    var table: String = null
+    val thrown = intercept[IllegalStateException] {
+      SetCatalog.scratch(spark) { (cat, db) =>
+        graft.operators.Dedup.persistExactIndex(cat, db, "corpus",
+          Seq("a b c", "d e f").toDF("text"), "text")
+        root = java.nio.file.Paths.get(cat.dir(db, "corpus_hashes")).getParent
+        table = s"${db}_corpus_hashes"
+        require(spark.catalog.tableExists(table), s"$table was not registered")
+        throw boom
+      }
+    }
+    assert(thrown eq boom)
+    assert(!Files.exists(root), s"scratch root $root survived the failure")
+    assert(!spark.catalog.tableExists(table))
+  }
+
+  test("scratch: two concurrent calls each probe their own bucketed index") {
+    import spark.implicits._
+    val arrivals = Seq("alpha one", "alpha two", "beta one", "beta two")
+      .zipWithIndex.map { case (t, i) => (i.toLong, t) }
+    val built = new java.util.concurrent.CountDownLatch(2)
+    def flags(corpus: Seq[String]): Set[(Long, Boolean)] =
+      SetCatalog.scratch(spark) { (cat, db) =>
+        // both builds are done before either probe resolves its table
+        // (a failed build still releases the latch, so its error shows)
+        try graft.operators.Dedup.persistExactIndex(cat, db, "corpus",
+          corpus.toDF("text"), "text")
+        finally built.countDown()
+        require(built.await(2, java.util.concurrent.TimeUnit.MINUTES),
+          "the other build never finished")
+        graft.operators.Dedup.exactAgainstStoredIndex(
+          arrivals.toDF("doc_id", "text"), cat, db, "corpus", "doc_id", "text")
+      }.collect().map(r => (r.getLong(0), r.getBoolean(1))).toSet
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      implicit val ec: scala.concurrent.ExecutionContext =
+        scala.concurrent.ExecutionContext.fromExecutorService(pool)
+      val a = scala.concurrent.Future(flags(Seq("alpha one", "alpha two")))
+      val b = scala.concurrent.Future(flags(Seq("beta one", "beta two")))
+      val wait = scala.concurrent.duration.Duration(5, "min")
+      assert(scala.concurrent.Await.result(a, wait) ==
+        Set((0L, true), (1L, true), (2L, false), (3L, false)))
+      assert(scala.concurrent.Await.result(b, wait) ==
+        Set((0L, false), (1L, false), (2L, true), (3L, true)))
+    } finally pool.shutdown()
+  }
 }
