@@ -732,35 +732,21 @@ object Dedup {
     stampIngestCensusRows(catalog, db, name)
   }
 
-  /** Record "rows the band set held when its census was last known
-    * clean" — the ANN tiers' `_built` sidecar pattern applied to the
-    * recap policy, so [[ingestGrowthFraction]] is two O(1) sidecar
-    * reads, never a scan.
+  /** Stamp the rows the band set held when its census was last known
+    * clean as the one-row `<name>_censused` set — the ANN tiers' `_built`
+    * marker applied to the recap policy.
     */
   private def stampIngestCensusRows(
-      catalog: graft.storage.SetCatalog, db: String, name: String): Unit = {
-    val spark = catalog.scanSet(db, s"${name}_bands").sparkSession
-    import spark.implicits._
-    val rows = catalog.meta(db, s"${name}_bands").map(_.rows).getOrElse(0L)
-    catalog.createSet(db, s"${name}_censused",
-      Seq(rows).toDF("rows_at_census"), policy = "none")
-  }
+      catalog: graft.storage.SetCatalog, db: String, name: String): Unit =
+    catalog.stampRows(db, s"${name}_bands", s"${name}_censused")
 
   /** Fraction the standing band set has GROWN since its census was last
-    * known clean ((rows_now − rows_then)/rows_then) — two sidecar
-    * reads, O(1). 0.0 for indexes grown before the marker existed (they
-    * opt in at their first census/recap), ∞-ish growth reads large.
+    * known clean. 0.0 for indexes grown before the marker existed (they
+    * opt in at their first census/recap).
     */
   def ingestGrowthFraction(
-      catalog: graft.storage.SetCatalog, db: String, name: String): Double = {
-    val now = catalog.meta(db, s"${name}_bands").map(_.rows).getOrElse(0L)
-    if (catalog.meta(db, s"${name}_censused").isEmpty) 0.0
-    else {
-      val base = catalog.scanSet(db, s"${name}_censused")
-        .collect()(0).getLong(0)
-      if (base <= 0) 0.0 else (now - base).toDouble / base
-    }
-  }
+      catalog: graft.storage.SetCatalog, db: String, name: String): Double =
+    catalog.growthSinceStamp(db, s"${name}_bands", s"${name}_censused")
 
   /** The recap POLICY — "recap on census, not on a timer", as code: a
     * census is itself a full band-set scan, so it runs only once the
@@ -1928,10 +1914,10 @@ object Dedup {
     * depends only on (vector, codebook); build(A)+append(B) ≡ one-shot
     * assignment of A∪B under A's codebook).
     *
-    * Drift: the O(1) sidecar fraction ([[semanticDriftFraction]] —
-    * appended rows over rows-at-build, no corpus scan) triggers
-    * [[rebuildSemanticIndex]] when `rebuildIfDrifted` is set, the same
-    * policy knob the compressed ANN appends carry. A long-running
+    * Drift: the O(1) sidecar fraction
+    * ([[SimilaritySearch.appendedDriftFraction]] — appended rows over
+    * rows-at-build, no corpus scan) triggers [[rebuildSemanticIndex]]
+    * when `rebuildIfDrifted` is set. A long-running
     * semantic pipeline otherwise degrades silently as the corpus drifts
     * from the frozen codebook — the exact failure mode the ANN tiers'
     * rebuild exists to catch.
@@ -1943,8 +1929,8 @@ object Dedup {
       targetClusterSize: Int = 125, iters: Int = 3): Unit = {
     SimilaritySearch.appendToIvfIndex(newEmb.sparkSession, catalog, db, name,
       newEmb, idCol, vecCol)
-    if (rebuildIfDrifted &&
-        semanticDriftFraction(catalog, db, name) >= driftFraction)
+    if (rebuildIfDrifted && SimilaritySearch.appendedDriftFraction(
+        catalog, db, name) >= driftFraction)
       rebuildSemanticIndex(catalog, db, name, targetClusterSize, iters)
   }
 
@@ -1956,20 +1942,10 @@ object Dedup {
     */
   def streamAppendToSemanticIndex(
       stream: DataFrame, catalog: graft.storage.SetCatalog,
-      db: String, name: String, idCol: String, vecCol: String,
-      rebuildIfDrifted: Boolean = false, driftFraction: Double = 0.5): Unit =
+      db: String, name: String, idCol: String, vecCol: String): Unit =
     drainAndStop(startBatches(stream) { batch =>
-      appendToSemanticIndex(catalog, db, name, batch, idCol, vecCol,
-        rebuildIfDrifted, driftFraction)
+      appendToSemanticIndex(catalog, db, name, batch, idCol, vecCol)
     })
-
-  /** Fraction of the semantic index appended since its codebook was
-    * trained — two sidecar reads, O(1), the ANN tiers' drift dial
-    * applied to the semantic geometry.
-    */
-  def semanticDriftFraction(
-      catalog: graft.storage.SetCatalog, db: String, name: String): Double =
-    SimilaritySearch.appendedDriftFraction(catalog, db, name)
 
   /** Retrain a persisted semantic index from its OWN standing vectors
     * and re-partition the corpus under the new cells — the rebuild half

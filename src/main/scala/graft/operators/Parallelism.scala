@@ -49,14 +49,7 @@ object Parallelism {
       // its width is already set by the shuffle those operators performed
       // (conf.numShufflePartitions, or AQE's coalesced choice). The file
       // statistics probe below would misjudge such a plan, so pass it
-      // through untouched; the hard throw stays available behind a strict
-      // flag for callers who want the scan-only contract enforced.
-      if (df.sparkSession.conf
-          .get("spark.graft.parallelism.strict", "false").toBoolean)
-        throw new IllegalArgumentException(
-          "ensureWidth(strict): pass scans (or cheap projections/filters/" +
-            s"unions of scans), not a joined/aggregated plan — got:\n" +
-            plan.treeString)
+      // through untouched.
       log.warn("ensureWidth: derived (join/aggregate/window) input — " +
         "skipping the width probe; width is set by the upstream shuffle")
       return df

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.TextFunctions._
@@ -22,22 +22,57 @@ object SimilaritySearch {
       emb: DataFrame, queries: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     // norms precomputed per side — O((q+n)·d) instead of O(q·n·d) norm work
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"),
-      l2Norm(col(vecCol)).as("q_nrm"))
-    val n = emb.select(col(idCol).as("neighbor_id"), col(vecCol).as("n_vec"),
-      l2Norm(col(vecCol)).as("n_nrm"))
+    val q = queriesWithNorm(queries, idCol, vecCol)
+    val n = vectorsWithNorm(emb, idCol, vecCol)
       // spread the scan side so the broadcast probe runs wide (no-op when
       // the input is already wide)
       .transform(Parallelism.ensureWidth)
+    cosineTopK(n.crossJoin(broadcast(q))
+      .filter(col("query_id") =!= col("neighbor_id")), k)
+  }
+
+  /** The closing stage of every cosine search: score each (query,
+    * neighbor) pair by cosine rounded to 1e-6, rank per query by
+    * (cos desc, neighbor_id) and keep the first `k`. `pairs` carries
+    * the [[queriesWithNorm]] and [[vectorsWithNorm]] columns. Mirrored
+    * by every oracle's `scored` tail.
+    */
+  private def cosineTopK(pairs: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id"))
-    n.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
+    pairs
       .withColumn("cos",
         round(dot(col("q_vec"), col("n_vec")) / (col("q_nrm") * col("n_nrm")), 6))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
+  }
+
+  /** The (query_id, q_vec, q_nrm) query side of [[cosineTopK]], then
+    * `extra` columns.
+    */
+  private def queriesWithNorm(
+      queries: DataFrame, idCol: String, vecCol: String,
+      extra: Column*): DataFrame =
+    queries.select(Seq(col(idCol).as("query_id"), col(vecCol).as("q_vec"),
+      l2Norm(col(vecCol)).as("q_nrm")) ++ extra: _*)
+
+  /** The (neighbor_id, n_vec, n_nrm) neighbor side of [[cosineTopK]] —
+    * also the stored row of every index's vector set — then `extra`
+    * columns.
+    */
+  private def vectorsWithNorm(
+      emb: DataFrame, idCol: String, vecCol: String,
+      extra: Column*): DataFrame =
+    emb.select(Seq(col(idCol).as("neighbor_id"), col(vecCol).as("n_vec"),
+      l2Norm(col(vecCol)).as("n_nrm")) ++ extra: _*)
+
+  /** `v` as doubles: the one float-to-double copy of every UDF kernel. */
+  private def toDoubles(v: Seq[Float]): Array[Double] = {
+    val arr = new Array[Double](v.length)
+    var i = 0
+    while (i < arr.length) { arr(i) = v(i).toDouble; i += 1 }
+    arr
   }
 
   /** The shared deterministic training sample: the `sampleLimit` rows
@@ -195,24 +230,6 @@ object SimilaritySearch {
     centroids
   }
 
-  /** The `nprobe` nearest centroid ids for a query vector, ascending by
-    * (distance, bucket) — one distance pass, same ordering as the SQL
-    * oracle's array_sort over (d, b) structs.
-    */
-  def probeUdf(centroids: Array[Array[Double]], nprobe: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((v: Seq[Float]) => {
-      val arr = new Array[Double](v.length)
-      var i = 0
-      while (i < arr.length) { arr(i) = v(i).toDouble; i += 1 }
-      val dists = centroids.map { c =>
-        var d = 0.0
-        var j = 0
-        while (j < arr.length) { val diff = c(j) - arr(j); d += diff * diff; j += 1 }
-        d
-      }
-      dists.zipWithIndex.sortBy { case (d, b) => (d, b) }.take(nprobe).map(_._2.toLong).toSeq
-    })
-
   /** Coarse router over a FINE codebook: train a small coarse quantizer
     * over the k fine centroids THEMSELVES (the [[ivfPqTopK]] cell shape
     * applied to codebook assignment — the fix named by
@@ -356,12 +373,22 @@ object SimilaritySearch {
       * first-min tiebreak), so assignment parity is preserved.
       */
     def assignUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
+      udf((v: Seq[Float]) => nearest(toDoubles(v)).toLong)
+
+    /** The `nprobe` nearest centroid ids for a query vector, ascending by
+      * (distance, bucket) — one distance pass over EVERY centroid (the
+      * router is not consulted), same ordering as the SQL oracle's
+      * array_sort over (d, b) structs. Only the centroids ride in the
+      * closure.
+      */
+    def probeUdf(nprobe: Int): org.apache.spark.sql.expressions.UserDefinedFunction = {
+      val cs = centroids
       udf((v: Seq[Float]) => {
-        val arr = new Array[Double](v.length)
-        var i = 0
-        while (i < arr.length) { arr(i) = v(i).toDouble; i += 1 }
-        nearest(arr).toLong
+        val arr = toDoubles(v)
+        cs.map(sqDist(_, arr, 0)).zipWithIndex
+          .sortBy { case (d, b) => (d, b) }.take(nprobe).map(_._2.toLong).toSeq
       })
+    }
   }
 
   object Codebook {
@@ -401,16 +428,27 @@ object SimilaritySearch {
         else TwoLevelKernel, centroids)
   }
 
-  private def nearest(centroids: Array[Array[Double]], v: Array[Double]): Int = {
+  /** Squared distance from `c` to the slice of `v` starting at `off`:
+    * `diff = c − v`, `d += diff²` from 0.0 in index order — the op order
+    * every SQL oracle's distance mirrors.
+    */
+  private def sqDist(c: Array[Double], v: Array[Double], off: Int): Double = {
+    var d = 0.0
+    var i = 0
+    while (i < c.length) { val diff = c(i) - v(off + i); d += diff * diff; i += 1 }
+    d
+  }
+
+  /** Index of the centroid nearest the slice of `v` starting at `off`
+    * (a PQ subspace; the whole vector at 0), first strict minimum.
+    */
+  private def nearest(
+      centroids: Array[Array[Double]], v: Array[Double], off: Int = 0): Int = {
     var best = 0
     var bestD = Double.MaxValue
     var c = 0
     while (c < centroids.length) {
-      var d = 0.0
-      var i = 0
-      while (i < v.length) {
-        val diff = centroids(c)(i) - v(i); d += diff * diff; i += 1
-      }
+      val d = sqDist(centroids(c), v, off)
       if (d < bestD) { bestD = d; best = c }
       c += 1
     }
@@ -515,14 +553,22 @@ object SimilaritySearch {
     */
   private[graft] def codebookFrame(
       spark: SparkSession, centroids: Array[Array[Double]]): DataFrame = {
-    import spark.implicits._
-    val df = centroids.zipWithIndex
-      .map { case (v, b) => (b.toLong, v.toSeq) }.toSeq
-      .toDF("bucket", "centroid")
+    val df = centroidsFrame(spark, centroids)
       .withColumn(s"route_threshold_${sessionRouteThreshold(spark)}", lit(true))
     if (sessionKernel(spark, centroids.length) == TreeKernel)
       df.withColumn(TreeKernelMarker, lit(true))
     else df
+  }
+
+  /** The unmarked (bucket, centroid) rows of [[codebookFrame]] — as the
+    * IVF-PQ coarse codebook is stored: it assigns flat at any k.
+    */
+  private def centroidsFrame(
+      spark: SparkSession, centroids: Array[Array[Double]]): DataFrame = {
+    import spark.implicits._
+    centroids.zipWithIndex
+      .map { case (v, b) => (b.toLong, v.toSeq) }.toSeq
+      .toDF("bucket", "centroid")
   }
 
   /** Parse the persisted threshold back out of a centroids frame's
@@ -697,13 +743,10 @@ object SimilaritySearch {
       spark: SparkSession, emb: DataFrame, k: Int, iters: Int,
       idCol: String, vecCol: String,
       knownRowCount: Long = 0L): Array[Array[Double]] = {
-    val threshold = spark.conf
-      .get("spark.graft.ann.routeThreshold",
-        graft.operators.Dedup.routeThreshold.toString).toInt
     trainCentroidsRouted(
       sampleVectors(emb, idCol, vecCol, math.max(10000, 2 * k),
         knownRowCount),
-      k, iters, threshold)
+      k, iters, sessionRouteThreshold(spark))
   }
 
   /** Lloyd training with two-level routed assignment steps for LARGE k:
@@ -926,25 +969,14 @@ object SimilaritySearch {
       spark: SparkSession, emb: DataFrame, queries: DataFrame, k: Int,
       nCentroids: Int = 16, nprobe: Int = 4,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val centroids = trainCentroids(emb, nCentroids, iters = 3, idCol, vecCol)
-    val assign = Codebook.flat(centroids).assignUdf
-    val probe = probeUdf(centroids, nprobe)
-
-    val bucketed = emb.select(col(idCol).as("neighbor_id"),
-      col(vecCol).as("n_vec"), l2Norm(col(vecCol)).as("n_nrm"),
-      assign(col(vecCol)).as("bucket"))
-    val probes = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"),
-      l2Norm(col(vecCol)).as("q_nrm"),
-      explode(probe(col(vecCol))).as("bucket"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    bucketed.join(broadcast(probes), Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos",
-        round(dot(col("q_vec"), col("n_vec")) / (col("q_nrm") * col("n_nrm")), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
+    val codebook =
+      Codebook.flat(trainCentroids(emb, nCentroids, iters = 3, idCol, vecCol))
+    val bucketed = vectorsWithNorm(emb, idCol, vecCol,
+      codebook.assignUdf(col(vecCol)).as("bucket"))
+    val probes = queriesWithNorm(queries, idCol, vecCol,
+      explode(codebook.probeUdf(nprobe)(col(vecCol))).as("bucket"))
+    cosineTopK(bucketed.join(broadcast(probes), Seq("bucket"))
+      .filter(col("query_id") =!= col("neighbor_id")), k)
   }
 
   /** Persist an IVF index into the set catalog: the codebook as a tiny
@@ -980,11 +1012,10 @@ object SimilaritySearch {
     val assign =
       Codebook.of(sessionKernel(spark, centroids.length), centroids).assignUdf
     val (partCol, laidOut) = cellLayout(spark,
-      emb.select(col(idCol).as("neighbor_id"), col(vecCol).as("n_vec"),
-        l2Norm(col(vecCol)).as("n_nrm"), assign(col(vecCol)).as("bucket")),
+      vectorsWithNorm(emb, idCol, vecCol, assign(col(vecCol)).as("bucket")),
       centroids.length)
     catalog.createPartitionedSet(db, s"${name}_vectors", laidOut, partCol)
-    persistBuiltRows(spark, catalog, db, name)
+    persistBuiltRows(catalog, db, name)
   }
 
   /** Incrementally extend a persisted IVF index: assign the NEW vectors
@@ -992,15 +1023,9 @@ object SimilaritySearch {
     * bucket-partitioned vector set — no retrain, no rewrite of standing
     * data, one scan of the batch. This is how a standing ANN index keeps
     * up with a continuously-embedding ingest pipeline; the codebook only
-    * needs retraining when the corpus distribution drifts enough that
-    * cell sizes skew. `rebuildIfDrifted` makes that policy decision
-    * automatic, like the PQ/IVF-PQ appends' — but note the cost
-    * asymmetry: an IVF rebuild rewrites the WHOLE bucket-partitioned
-    * vector set (the cells ARE the corpus layout), where the compressed
-    * tiers rewrite only codes. Measured at sf0.1 under rotation drift,
-    * append-only IVF recall also stayed within 0.1 of the retrained
-    * codebook's, so the default here stays manual; enable the trigger
-    * when cell-size skew, not recall, is the concern.
+    * needs retraining ([[rebuildIvfIndex]], which rewrites the WHOLE
+    * vector set — the cells are the corpus layout) when the corpus
+    * distribution drifts enough that cell sizes skew.
     * Search results over build(A)+append(B) are IDENTICAL to an index
     * whose vectors were all assigned under A's codebook in one pass —
     * assignment depends only on (vector, codebook).
@@ -1008,9 +1033,7 @@ object SimilaritySearch {
   def appendToIvfIndex(
       spark: SparkSession, catalog: graft.storage.SetCatalog,
       db: String, name: String, newEmb: DataFrame,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      rebuildIfDrifted: Boolean = false,
-      driftFraction: Double = 0.5): Unit = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     // the standing schemas are the witness for BOTH regimes: arrivals
     // assign with the kernel the persisted codebook witnesses (never the
     // session conf), and grouped sets append into their group
@@ -1024,15 +1047,10 @@ object SimilaritySearch {
     // column infers int), so the appended columns read back exactly as
     // the memoized schema and the memo carries over the append
     catalog.appendToPartitionedSet(db, s"${name}_vectors",
-      withCellGroup(standing,
-        newEmb.select(col(idCol).as("neighbor_id"), col(vecCol).as("n_vec"),
-          l2Norm(col(vecCol)).as("n_nrm"),
-          assign(col(vecCol)).cast(standing.schema("bucket").dataType)
-            .as("bucket"))),
+      withCellGroup(standing, vectorsWithNorm(newEmb, idCol, vecCol,
+        assign(col(vecCol)).cast(standing.schema("bucket").dataType)
+          .as("bucket"))),
       partCol)
-    if (rebuildIfDrifted &&
-        appendedDriftFraction(catalog, db, name) >= driftFraction)
-      rebuildIvfIndex(spark, catalog, db, name)
   }
 
   /** IVF form of [[rebuildPqIndex]]: retrain the coarse codebook from
@@ -1054,8 +1072,9 @@ object SimilaritySearch {
   def rebuildIvfIndex(
       spark: SparkSession, catalog: graft.storage.SetCatalog,
       db: String, name: String, iters: Int = 3, nCentroids0: Int = 0): Unit = {
-    recoverStagedSwaps(catalog, db, Seq("vectors", "centroids")
-      .map(s => s"${name}_$s"))
+    val swaps = Seq("vectors", "centroids")
+      .map(s => s"${name}_${s}_rebuild" -> s"${name}_$s")
+    catalog.recoverSwapGroup(db, swaps)
     val nCentroids = if (nCentroids0 > 0) nCentroids0
       else catalog.scanSet(db, s"${name}_centroids").count().toInt
     val vecs = catalog.scanSet(db, s"${name}_vectors")
@@ -1088,9 +1107,8 @@ object SimilaritySearch {
     catalog.createSet(db, s"${name}_centroids_rebuild",
       codebookFrame(spark, centroids), policy = "none")
     catalog.markStaging(db, s"${name}_centroids_rebuild")
-    swapInStaged(catalog, db,
-      Seq(s"${name}_vectors", s"${name}_centroids"))
-    persistBuiltRows(spark, catalog, db, name)
+    catalog.swapSetGroup(db, swaps)
+    persistBuiltRows(catalog, db, name)
   }
 
   /** Streaming form of [[appendToIvfIndex]]: every micro-batch of
@@ -1104,34 +1122,21 @@ object SimilaritySearch {
   def streamAppendToIvfIndex(
       stream: DataFrame, catalog: graft.storage.SetCatalog,
       db: String, name: String,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      rebuildIfDrifted: Boolean = false,
-      driftFraction: Double = 0.5): Unit = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     val spark = stream.sparkSession
     Dedup.drainAndStop(Dedup.startBatches(stream) { batch =>
-      appendToIvfIndex(spark, catalog, db, name, batch, idCol, vecCol,
-        rebuildIfDrifted, driftFraction)
+      appendToIvfIndex(spark, catalog, db, name, batch, idCol, vecCol)
     })
   }
 
-  /** Unit-normalize (sequential Σv² then sqrt — the oracle computes the
-    * same sum); the zero vector stays zero. PQ here targets COSINE
-    * ranking: over unit vectors ‖q−n‖² = 2 − 2·cos(q,n), so Euclidean
-    * ADC over normalized codes orders candidates by cosine — without
-    * this, ADC ranks by raw Euclidean distance, which disagrees with
-    * cosine whenever magnitudes vary (measured: shortlist recall drops
-    * from ~0.9 to ~0.2 on the fixture).
-    */
-  private def unitNormalize(v: Seq[Float]): Array[Double] = {
-    val arr = new Array[Double](v.length)
-    var i = 0
-    while (i < arr.length) { arr(i) = v(i).toDouble; i += 1 }
-    unitNormalized(arr)
-  }
-
-  /** Same kernel over an already-converted double vector (the shared
-    * training sample); `v` is not mutated. Sequential Σv² in index
-    * order, identical to the Seq[Float] path bit for bit.
+  /** Unit-normalize (sequential Σv² in index order, then sqrt — the
+    * oracle computes the same sum); the zero vector stays zero and `v`
+    * is not mutated. PQ here targets COSINE ranking: over unit vectors
+    * ‖q−n‖² = 2 − 2·cos(q,n), so Euclidean ADC over normalized codes
+    * orders candidates by cosine — without this, ADC ranks by raw
+    * Euclidean distance, which disagrees with cosine whenever
+    * magnitudes vary (measured: shortlist recall drops from ~0.9 to
+    * ~0.2 on the fixture).
     */
   private def unitNormalized(v: Array[Double]): Array[Double] = {
     val arr = new Array[Double](v.length)
@@ -1146,10 +1151,11 @@ object SimilaritySearch {
   /** Product-quantization codebooks: the vector's `m` disjoint dim-slices
     * each get an independent k-means sub-codebook trained over the SAME
     * deterministic-hash sample as [[trainCentroids]] (smallest md5(id)
-    * rows — uniform, rerun-stable, oracle-reproducible). Same Lloyd
-    * kernel per subspace: seed = first `kSub` sample slices, sequential
-    * diff² accumulation, first-min tiebreak, empty clusters keep their
-    * centroid. Returns codebooks(sub)(centroid)(dimInSub).
+    * rows — uniform, rerun-stable, oracle-reproducible). Each subspace
+    * trains with [[trainCentroidsFromSample]] over its unit-normalized
+    * slices: seed = first `kSub` slices, sequential diff² accumulation,
+    * first-min tiebreak, empty clusters keep their centroid. Returns
+    * codebooks(sub)(centroid)(dimInSub).
     *
     * Why PQ at 100 TB: a 64-float embedding is 256 B; its PQ code is `m`
     * sub-centroid ids of log2(kSub) bits each — 8 B packed at the
@@ -1179,28 +1185,14 @@ object SimilaritySearch {
     val dsub = dim / m
     Array.tabulate(m) { j =>
       val lo = j * dsub
-      val slices = sample.map(v => java.util.Arrays.copyOfRange(v, lo, lo + dsub))
-      var centroids = slices.take(kSub).map(_.clone())
-      for (_ <- 1 to iters) {
-        val sums = Array.fill(centroids.length)(new Array[Double](dsub))
-        val counts = new Array[Long](centroids.length)
-        slices.foreach { v =>
-          val c = nearest(centroids, v)
-          counts(c) += 1
-          var i = 0
-          while (i < dsub) { sums(c)(i) += v(i); i += 1 }
-        }
-        centroids = centroids.indices.map { c =>
-          if (counts(c) == 0) centroids(c)
-          else sums(c).map(_ / counts(c))
-        }.toArray
-      }
-      centroids
+      trainCentroidsFromSample(
+        sample.map(v => java.util.Arrays.copyOfRange(v, lo, lo + dsub)),
+        kSub, iters)
     }
   }
 
   /** Encode a vector as its `m` sub-centroid ids — one tight JVM pass,
-    * same argmin as [[Codebook.flat]] per subspace. The code column
+    * the [[nearest]] argmin per subspace. The code column
     * IS the compressed index.
     */
   def pqEncodeUdf(codebooks: Array[Array[Array[Double]]]): org.apache.spark.sql.expressions.UserDefinedFunction = {
@@ -1213,28 +1205,8 @@ object SimilaritySearch {
       // trailing dims when the vector is longer than the codebooks)
       require(v.length == m * dsub,
         s"PQ encode: vector dim ${v.length} != m*dsub = ${m * dsub}")
-      val nv = unitNormalize(v)
-      val out = new Array[Int](m)
-      var j = 0
-      while (j < m) {
-        val cb = codebooks(j)
-        val lo = j * dsub
-        var best = 0
-        var bestD = Double.MaxValue
-        var c = 0
-        while (c < cb.length) {
-          var d = 0.0
-          var i = 0
-          while (i < dsub) {
-            val diff = cb(c)(i) - nv(lo + i); d += diff * diff; i += 1
-          }
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
-        out(j) = best
-        j += 1
-      }
-      out.toSeq
+      val nv = unitNormalized(toDoubles(v))
+      Array.tabulate(m)(j => nearest(codebooks(j), nv, j * dsub)).toSeq
     })
   }
 
@@ -1249,18 +1221,10 @@ object SimilaritySearch {
       val dsub = codebooks(0)(0).length
       require(v.length == m * dsub,
         s"PQ LUT: query dim ${v.length} != m*dsub = ${m * dsub}")
-      val nv = unitNormalize(v)
+      val nv = unitNormalized(toDoubles(v))
       Seq.tabulate(m) { j =>
         val cb = codebooks(j)
-        val lo = j * dsub
-        Seq.tabulate(cb.length) { c =>
-          var d = 0.0
-          var i = 0
-          while (i < dsub) {
-            val diff = cb(c)(i) - nv(lo + i); d += diff * diff; i += 1
-          }
-          d
-        }
+        Seq.tabulate(cb.length)(c => sqDist(cb(c), nv, j * dsub))
       }
     })
 
@@ -1285,30 +1249,16 @@ object SimilaritySearch {
   }
 
   /** Exact rounded-cosine re-rank of a (query_id, neighbor_id) shortlist
-    * against a (neighbor_id, n_vec, n_nrm) vector frame — the shared
-    * closing stage of every PQ search form (id-equi joins only; the
-    * query side broadcasts). Mirrored by every oracle's `scored` tail.
+    * against a [[vectorsWithNorm]] vector frame — the shared closing
+    * stage of every PQ search form (id-equi joins only; the query side
+    * broadcasts).
     */
   private def rerankExact(
       short: DataFrame, vectors: DataFrame, queries: DataFrame, k: Int,
-      idCol: String, vecCol: String): DataFrame = {
-    val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"),
-      l2Norm(col(vecCol)).as("q_nrm"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    short.join(vectors, Seq("neighbor_id"))
-      .join(broadcast(qv), Seq("query_id"))
-      .withColumn("cos",
-        round(dot(col("q_vec"), col("n_vec")) / (col("q_nrm") * col("n_nrm")), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
-  }
-
-  /** (neighbor_id, n_vec, n_nrm) projection for [[rerankExact]]. */
-  private def vectorsWithNorm(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
-    emb.select(col(idCol).as("neighbor_id"), col(vecCol).as("n_vec"),
-      l2Norm(col(vecCol)).as("n_nrm"))
+      idCol: String, vecCol: String): DataFrame =
+    cosineTopK(short.join(vectors, Seq("neighbor_id"))
+      .join(broadcast(queriesWithNorm(queries, idCol, vecCol)),
+        Seq("query_id")), k)
 
   /** Persist PQ sub-codebooks as the tiny `<name>_codebooks` set (one
     * row per (sub, centroid), components as an array) — shared by the
@@ -1329,33 +1279,6 @@ object SimilaritySearch {
     // exists, so recoverAll's convention sweep may resolve it
     if (suffix.nonEmpty) catalog.markStaging(db, s"${name}_codebooks$suffix")
   }
-
-  /** Crash-recovery preamble for the rebuilds' staged swaps — delegates
-    * to [[graft.storage.SetCatalog.recoverSwapGroup]], whose GROUP
-    * intent marker decides authority for all of a rebuild's sets at
-    * once: a crash between two member swaps no longer leaves a
-    * mixed-generation live index (new codes under old codebooks) for
-    * the next rebuild run to discover — recovery finishes every member.
-    * The earlier sidecar-inference version had a destructive hole on
-    * top: `removeSet` deletes the data tree BEFORE its sidecar, so a
-    * crash inside the target's remove left a live-LOOKING target (stale
-    * sidecar, no data) next to the finished staging set, and the
-    * inference discarded the staging set — the only copy.
-    */
-  private def recoverStagedSwaps(
-      catalog: graft.storage.SetCatalog, db: String,
-      targets: Seq[String]): Unit =
-    catalog.recoverSwapGroup(db, targets.map(t => s"${t}_rebuild" -> t))
-
-  /** The swap step itself: [[graft.storage.SetCatalog.swapSetGroup]] —
-    * one marker for the whole set group, then remove+rename per member,
-    * then marker clear. A crash anywhere in the sequence (including
-    * BETWEEN members) converges under [[recoverStagedSwaps]].
-    */
-  private def swapInStaged(
-      catalog: graft.storage.SetCatalog, db: String,
-      targets: Seq[String]): Unit =
-    catalog.swapSetGroup(db, targets.map(t => s"${t}_rebuild" -> t))
 
   /** Asymmetric-distance top-k with exact re-rank: encode the corpus once
     * (the compressed code table), broadcast the queries WITH their LUTs,
@@ -1409,8 +1332,9 @@ object SimilaritySearch {
     val sample = sampleVectors(emb, idCol, vecCol, 10000)
     val centroids = trainCentroidsFromSample(sample, nCentroids, iters = 3)
     val codebooks = trainPqCodebooksFromSample(sample, m, kSub, iters)
-    val assign = Codebook.flat(centroids).assignUdf
-    val probe = probeUdf(centroids, nprobe)
+    val codebook = Codebook.flat(centroids)
+    val assign = codebook.assignUdf
+    val probe = codebook.probeUdf(nprobe)
     val encode = pqEncodeUdf(codebooks)
     val lut = pqLutUdf(codebooks)
     val codes = emb.select(col(idCol).as("neighbor_id"),
@@ -1445,12 +1369,8 @@ object SimilaritySearch {
     val sample = sampleVectors(emb, idCol, vecCol, 10000)
     val centroids = trainCentroidsFromSample(sample, nCentroids, iters = 3)
     val codebooks = trainPqCodebooksFromSample(sample, m, kSub, iters)
-    import spark.implicits._
     catalog.createSet(db, s"${name}_centroids",
-      centroids.zipWithIndex
-        .map { case (v, b) => (b.toLong, v.toSeq) }.toSeq
-        .toDF("bucket", "centroid"),
-      policy = "none")
+      centroidsFrame(spark, centroids), policy = "none")
     persistCodebooks(spark, catalog, db, name, codebooks)
     val assign = Codebook.flat(centroids).assignUdf
     val encode = pqEncodeUdf(codebooks)
@@ -1469,10 +1389,9 @@ object SimilaritySearch {
       catalog.meta(db, s"${name}_codes").map(_.rows).getOrElse(emb.count()),
       targetRowsPerBucket)
     catalog.createSet(db, s"${name}_vectors",
-      emb.select(col(idCol).as("neighbor_id"), col(vecCol).as("n_vec"),
-        l2Norm(col(vecCol)).as("n_nrm")),
+      vectorsWithNorm(emb, idCol, vecCol),
       partitionColumn = Some("neighbor_id"), numPartitions = n)
-    persistBuiltRows(spark, catalog, db, name)
+    persistBuiltRows(catalog, db, name)
   }
 
   /** Incrementally extend a persisted IVF-PQ index: assign + encode the
@@ -1480,25 +1399,15 @@ object SimilaritySearch {
     * append into the bucket-partitioned code set and the vector set. No
     * retrain, no rewrite; build(A)+append(B) ≡ one-pass under A's
     * models, since both assignment and encoding depend only on
-    * (vector, model).
-    *
-    * `rebuildIfDrifted = true` adds the production rebuild policy the
-    * append-under-drift measurements motivated (at sf0.1, append-only
-    * IVF-PQ recall sank to 0.34 at 16 rotated replicas — stale
-    * models code drifted vectors badly, and append-only operation never
-    * recovers): when the appended fraction since the last (re)train
-    * reaches `driftFraction`, [[rebuildIvfPqIndex]] retrains both models
-    * from the standing vectors set and re-encodes the code set in place.
-    * The trigger reads two sidecar rowcounts — no corpus scan; the
-    * rebuild itself costs one scan of the vectors set, amortized over
-    * `driftFraction·n` appended rows.
+    * (vector, model). Stale models code drifted vectors badly (at
+    * sf0.1, append-only IVF-PQ recall sank to 0.34 at 16 rotated
+    * replicas), so a standing pipeline calls [[rebuildIvfPqIndex]] once
+    * [[appendedDriftFraction]] grows large.
     */
   def appendToIvfPqIndex(
       spark: SparkSession, catalog: graft.storage.SetCatalog,
       db: String, name: String, newEmb: DataFrame,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      rebuildIfDrifted: Boolean = false,
-      driftFraction: Double = 0.5): Unit = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     val assign = loadCoarseCodebook(catalog, db, name).assignUdf
     val encode = pqEncodeUdf(loadPqCodebooks(catalog, db, name))
     catalog.appendToPartitionedSet(db, s"${name}_codes",
@@ -1506,44 +1415,24 @@ object SimilaritySearch {
         assign(col(vecCol)).as("bucket")),
       "bucket")
     catalog.appendToSet(db, s"${name}_vectors",
-      newEmb.select(col(idCol).as("neighbor_id"), col(vecCol).as("n_vec"),
-        l2Norm(col(vecCol)).as("n_nrm")))
-    if (rebuildIfDrifted &&
-        appendedDriftFraction(catalog, db, name) >= driftFraction)
-      rebuildIvfPqIndex(spark, catalog, db, name)
+      vectorsWithNorm(newEmb, idCol, vecCol))
   }
 
-  /** Rows the standing models were last trained over, persisted as the
+  /** Stamp the rows the standing models were trained over as the
     * one-row `<name>_built` set at build/rebuild time — the denominator
-    * of [[appendedDriftFraction]]. The rowcount comes from the vectors
-    * set's sidecar (already computed by its post-write count), so this
-    * costs one tiny parquet write and zero corpus scans.
+    * of [[appendedDriftFraction]].
     */
   private def persistBuiltRows(
-      spark: SparkSession, catalog: graft.storage.SetCatalog,
-      db: String, name: String): Unit = {
-    import spark.implicits._
-    val rows = catalog.meta(db, s"${name}_vectors").map(_.rows).getOrElse(0L)
-    catalog.createSet(db, s"${name}_built",
-      Seq(rows).toDF("rows_at_build"), policy = "none")
-  }
+      catalog: graft.storage.SetCatalog, db: String, name: String): Unit =
+    catalog.stampRows(db, s"${name}_vectors", s"${name}_built")
 
   /** Fraction of the index appended since its models were last
-    * (re)trained: (rows_now - rows_at_build) / rows_at_build. Both
-    * numbers are sidecar reads — O(1), no corpus scan. 0.0 for indexes
-    * built before the `<name>_built` marker existed (they opt into the
-    * rebuild policy at their first rebuild).
+    * (re)trained. 0.0 for indexes built before the `<name>_built`
+    * marker existed (they opt in at their first rebuild).
     */
   def appendedDriftFraction(
-      catalog: graft.storage.SetCatalog, db: String, name: String): Double = {
-    val total = catalog.meta(db, s"${name}_vectors").map(_.rows).getOrElse(0L)
-    if (catalog.meta(db, s"${name}_built").isEmpty) 0.0
-    else {
-      val base = catalog.scanSet(db, s"${name}_built")
-        .collect()(0).getLong(0)
-      if (base <= 0) 0.0 else (total - base).toDouble / base
-    }
-  }
+      catalog: graft.storage.SetCatalog, db: String, name: String): Double =
+    catalog.growthSinceStamp(db, s"${name}_vectors", s"${name}_built")
 
   /** Retrain a persisted PQ index's codebooks from its OWN standing
     * vectors set and re-encode the code set in place — the rebuild the
@@ -1559,8 +1448,9 @@ object SimilaritySearch {
   def rebuildPqIndex(
       spark: SparkSession, catalog: graft.storage.SetCatalog,
       db: String, name: String, iters: Int = 2): Unit = {
-    recoverStagedSwaps(catalog, db, Seq("codes", "codebooks")
-      .map(s => s"${name}_$s"))
+    val swaps = Seq("codes", "codebooks")
+      .map(s => s"${name}_${s}_rebuild" -> s"${name}_$s")
+    catalog.recoverSwapGroup(db, swaps)
     val old = loadPqCodebooks(catalog, db, name)
     val m = old.length
     val kSub = old(0).length
@@ -1584,9 +1474,8 @@ object SimilaritySearch {
       partitionColumn = cm.partitionColumn, numPartitions = cm.numPartitions)
     catalog.markStaging(db, s"${name}_codes_rebuild")
     persistCodebooks(spark, catalog, db, name, codebooks, suffix = "_rebuild")
-    swapInStaged(catalog, db,
-      Seq(s"${name}_codes", s"${name}_codebooks"))
-    persistBuiltRows(spark, catalog, db, name)
+    catalog.swapSetGroup(db, swaps)
+    persistBuiltRows(catalog, db, name)
   }
 
   /** IVF-PQ form of [[rebuildPqIndex]]: retrain BOTH standing models
@@ -1599,8 +1488,9 @@ object SimilaritySearch {
   def rebuildIvfPqIndex(
       spark: SparkSession, catalog: graft.storage.SetCatalog,
       db: String, name: String, iters: Int = 2): Unit = {
-    recoverStagedSwaps(catalog, db, Seq("codes", "centroids", "codebooks")
-      .map(s => s"${name}_$s"))
+    val swaps = Seq("codes", "centroids", "codebooks")
+      .map(s => s"${name}_${s}_rebuild" -> s"${name}_$s")
+    catalog.recoverSwapGroup(db, swaps)
     val nCentroids = catalog.scanSet(db, s"${name}_centroids").count().toInt
     val old = loadPqCodebooks(catalog, db, name)
     val m = old.length
@@ -1609,7 +1499,6 @@ object SimilaritySearch {
     val sample = sampleVectors(vecs, "neighbor_id", "n_vec", 10000)
     val centroids = trainCentroidsFromSample(sample, nCentroids, iters = 3)
     val codebooks = trainPqCodebooksFromSample(sample, m, kSub, iters)
-    import spark.implicits._
     val assign = Codebook.flat(centroids).assignUdf
     val encode = pqEncodeUdf(codebooks)
     // Stage the data rewrite AND both model writes before touching live
@@ -1626,15 +1515,11 @@ object SimilaritySearch {
       "bucket")
     catalog.markStaging(db, s"${name}_codes_rebuild")
     catalog.createSet(db, s"${name}_centroids_rebuild",
-      centroids.zipWithIndex
-        .map { case (v, b) => (b.toLong, v.toSeq) }.toSeq
-        .toDF("bucket", "centroid"),
-      policy = "none")
+      centroidsFrame(spark, centroids), policy = "none")
     catalog.markStaging(db, s"${name}_centroids_rebuild")
     persistCodebooks(spark, catalog, db, name, codebooks, suffix = "_rebuild")
-    swapInStaged(catalog, db, Seq(s"${name}_codes",
-      s"${name}_centroids", s"${name}_codebooks"))
-    persistBuiltRows(spark, catalog, db, name)
+    catalog.swapSetGroup(db, swaps)
+    persistBuiltRows(catalog, db, name)
   }
 
   /** Streaming form of [[appendToIvfPqIndex]] — batching-invariant like
@@ -1644,13 +1529,10 @@ object SimilaritySearch {
   def streamAppendToIvfPqIndex(
       stream: DataFrame, catalog: graft.storage.SetCatalog,
       db: String, name: String,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      rebuildIfDrifted: Boolean = false,
-      driftFraction: Double = 0.5): Unit = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     val spark = stream.sparkSession
     Dedup.drainAndStop(Dedup.startBatches(stream) { batch =>
-      appendToIvfPqIndex(spark, catalog, db, name, batch, idCol, vecCol,
-        rebuildIfDrifted, driftFraction)
+      appendToIvfPqIndex(spark, catalog, db, name, batch, idCol, vecCol)
     })
   }
 
@@ -1666,7 +1548,7 @@ object SimilaritySearch {
       db: String, name: String, queries: DataFrame, k: Int,
       nprobe: Int = 4, shortlist: Int = 10,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val probe = probeUdf(loadCoarseCodebook(catalog, db, name).centroids, nprobe)
+    val probe = loadCoarseCodebook(catalog, db, name).probeUdf(nprobe)
     val lut = pqLutUdf(loadPqCodebooks(catalog, db, name))
     val codes = catalog.scanSet(db, s"${name}_codes")
     val bucketType = codes.schema("bucket").dataType
@@ -1716,10 +1598,9 @@ object SimilaritySearch {
       emb.select(col(idCol).as("neighbor_id"), encode(col(vecCol)).as("codes")),
       partitionColumn = Some("neighbor_id"), numPartitions = n)
     catalog.createSet(db, s"${name}_vectors",
-      emb.select(col(idCol).as("neighbor_id"), col(vecCol).as("n_vec"),
-        l2Norm(col(vecCol)).as("n_nrm")),
+      vectorsWithNorm(emb, idCol, vecCol),
       partitionColumn = Some("neighbor_id"), numPartitions = n)
-    persistBuiltRows(spark, catalog, db, name)
+    persistBuiltRows(catalog, db, name)
   }
 
   /** The PQ sub-codebooks of a PQ or IVF-PQ index, (sub, centroid)
@@ -1766,18 +1647,12 @@ object SimilaritySearch {
   def appendToPqIndex(
       spark: SparkSession, catalog: graft.storage.SetCatalog,
       db: String, name: String, newEmb: DataFrame,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      rebuildIfDrifted: Boolean = false,
-      driftFraction: Double = 0.5): Unit = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     val encode = pqEncodeUdf(loadPqCodebooks(catalog, db, name))
     catalog.appendToSet(db, s"${name}_codes",
       newEmb.select(col(idCol).as("neighbor_id"), encode(col(vecCol)).as("codes")))
     catalog.appendToSet(db, s"${name}_vectors",
-      newEmb.select(col(idCol).as("neighbor_id"), col(vecCol).as("n_vec"),
-        l2Norm(col(vecCol)).as("n_nrm")))
-    if (rebuildIfDrifted &&
-        appendedDriftFraction(catalog, db, name) >= driftFraction)
-      rebuildPqIndex(spark, catalog, db, name)
+      vectorsWithNorm(newEmb, idCol, vecCol))
   }
 
   /** Streaming form of [[appendToPqIndex]]: every micro-batch of
@@ -1788,13 +1663,10 @@ object SimilaritySearch {
   def streamAppendToPqIndex(
       stream: DataFrame, catalog: graft.storage.SetCatalog,
       db: String, name: String,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      rebuildIfDrifted: Boolean = false,
-      driftFraction: Double = 0.5): Unit = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     val spark = stream.sparkSession
     Dedup.drainAndStop(Dedup.startBatches(stream) { batch =>
-      appendToPqIndex(spark, catalog, db, name, batch, idCol, vecCol,
-        rebuildIfDrifted, driftFraction)
+      appendToPqIndex(spark, catalog, db, name, batch, idCol, vecCol)
     })
   }
 
@@ -1829,8 +1701,7 @@ object SimilaritySearch {
       db: String, name: String, queries: DataFrame, k: Int,
       nprobe: Int = 4,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val probe = probeUdf(loadIndexCodebook(spark, catalog, db, name).centroids,
-      nprobe)
+    val probe = loadIndexCodebook(spark, catalog, db, name).probeUdf(nprobe)
     val vectors = catalog.scanSet(db, s"${name}_vectors")
     // partition-column type follows Hive directory inference (int), not
     // the written long — cast the probe side to whatever came back
@@ -1839,74 +1710,10 @@ object SimilaritySearch {
     // pruning for any query-frame shape — DPP declines on
     // local/RDD-backed query frames and is redundant after this
     val (pruned, probes) = localProbe(vectors, withCellGroup(vectors,
-      queries.select(col(idCol).as("query_id"),
-        col(vecCol).as("q_vec"), l2Norm(col(vecCol)).as("q_nrm"),
+      queriesWithNorm(queries, idCol, vecCol,
         explode(probe(col(vecCol))).as("bucket"))
         .withColumn("bucket", col("bucket").cast(bucketType))))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    pruned.join(probes, cellJoinKeys(vectors))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos",
-        round(dot(col("q_vec"), col("n_vec")) / (col("q_nrm") * col("n_nrm")), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
+    cosineTopK(pruned.join(probes, cellJoinKeys(vectors))
+      .filter(col("query_id") =!= col("neighbor_id")), k)
   }
-
-  // --------------------------------------------------------------------
-  // Streaming SEARCH of the persisted index family — the production
-  // retrieval shape: a standing pipeline continuously querying a
-  // maintained ANN index (reference analogue: the standing top-k
-  // similarity workloads, src/tpchBench/headers/TopJaccard.h:17). Each
-  // micro-batch of arriving QUERY vectors is searched against the
-  // index's CURRENT generation — the LIVE-INDEX contract every stored-
-  // index probe stream shares (see Dedup.streamSemanticAgainstIndex):
-  // each batch runs the batch search itself, so the code/vector sets are
-  // re-planned per batch (an append landing mid-stream is visible to
-  // every later batch, a rebuild swap is survived), and the driver-side
-  // models (coarse centroids, PQ codebooks — O(k·d) collects) come from
-  // the catalog memo: decoded once per sidecar generation, shared with
-  // batch searches and appends, and re-decoded exactly when a
-  // maintenance pass swapped a new generation in.
-  // --------------------------------------------------------------------
-
-  /** Streaming search of a persisted IVF-PQ index: every micro-batch of
-    * arriving query vectors returns its top-k over the index's CURRENT
-    * generation — identical per batch to [[searchIvfPqIndex]] at that
-    * generation (batching-invariant: a query's result depends only on
-    * (query, index generation)). With `sink`, per-batch hits APPEND to a
-    * stored set (the production form); without, the accumulated hits
-    * return when the stream drains (the oracle-query form).
-    */
-  def streamSearchIvfPqIndex(
-      stream: DataFrame, catalog: graft.storage.SetCatalog,
-      db: String, name: String, k: Int,
-      nprobe: Int = 4, shortlist: Int = 10,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      sink: Option[(graft.storage.SetCatalog, String, String)] = None): DataFrame =
-    Dedup.streamProbe(stream, batch => searchIvfPqIndex(batch.sparkSession,
-      catalog, db, name, batch, k, nprobe, shortlist, idCol, vecCol), sink)
-
-  /** Streaming search of a persisted IVF index — [[searchIvfIndex]] per
-    * micro-batch under the live-index contract.
-    */
-  def streamSearchIvfIndex(
-      stream: DataFrame, catalog: graft.storage.SetCatalog,
-      db: String, name: String, k: Int, nprobe: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      sink: Option[(graft.storage.SetCatalog, String, String)] = None): DataFrame =
-    Dedup.streamProbe(stream, batch => searchIvfIndex(batch.sparkSession,
-      catalog, db, name, batch, k, nprobe, idCol, vecCol), sink)
-
-  /** Streaming search of a persisted PQ index — [[searchPqIndex]] per
-    * micro-batch under the live-index contract.
-    */
-  def streamSearchPqIndex(
-      stream: DataFrame, catalog: graft.storage.SetCatalog,
-      db: String, name: String, k: Int, shortlist: Int = 10,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      sink: Option[(graft.storage.SetCatalog, String, String)] = None): DataFrame =
-    Dedup.streamProbe(stream, batch => searchPqIndex(batch.sparkSession,
-      catalog, db, name, batch, k, shortlist, idCol, vecCol), sink)
 }

@@ -780,7 +780,7 @@ object PipelineQueries {
     val dsub = dim / m
     // Unit-normalized components throughout: PQ targets cosine ranking,
     // so codebooks/codes/LUTs all live on the unit sphere (the operator's
-    // unitNormalize). The zero vector divides by 1, matching the Scala
+    // unitNormalized). The zero vector divides by 1, matching the Scala
     // guard. `ne` carries (vec_id, normalized component i).
     val se =
       s"""nrm AS (

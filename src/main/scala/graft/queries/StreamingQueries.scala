@@ -844,12 +844,14 @@ object StreamingQueries {
         readEmbStream(spark, d)
           .filter(col("vec_id") >= 150 && col("vec_id") < 250),
         cat, db, "seml", "vec_id", "embedding")
-      val drift = graft.operators.Dedup.semanticDriftFraction(cat, db, "seml")
+      val drift =
+        graft.operators.SimilaritySearch.appendedDriftFraction(cat, db, "seml")
       require(drift >= 0.5,
         f"semantic drift fraction $drift%.2f below the appended 100/150 — " +
           "sidecar tracking broke")
       graft.operators.Dedup.rebuildSemanticIndex(cat, db, "seml")
-      require(graft.operators.Dedup.semanticDriftFraction(cat, db, "seml") == 0.0,
+      require(graft.operators.SimilaritySearch
+        .appendedDriftFraction(cat, db, "seml") == 0.0,
         "rebuild did not reset the semantic drift fraction")
       graft.operators.Dedup.streamSemanticAgainstIndex(
         readEmbStream(spark, d).filter(col("vec_id") >= 250),
@@ -972,10 +974,10 @@ object StreamingQueries {
 
   /** The LIVE-INDEX contract on the retrieval side (VERDICT r16 next
     * #2): a standing pipeline continuously SEARCHING a maintained
-    * IVF-PQ index — [[graft.operators.SimilaritySearch
-    * .streamSearchIvfPqIndex]], the production retrieval shape the
-    * search family lacked a streaming form of (the dedup probes all had
-    * one). Build the full compressed index over vec_id < 150; query
+    * IVF-PQ index — each query micro-batch runs
+    * [[graft.operators.SimilaritySearch.searchIvfPqIndex]] through the
+    * shared probe harness ([[liveProbe]]), so the index is re-resolved
+    * per batch. Build the full compressed index over vec_id < 150; query
     * micro-batch 1 ([250, 255)) searches the build generation; the
     * second corpus slice ([150, 250)) APPENDS mid-stream (assigned +
     * encoded under the frozen models); query micro-batch 2 ([255, 260))

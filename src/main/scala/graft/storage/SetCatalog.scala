@@ -709,6 +709,33 @@ final class SetCatalog(spark: SparkSession, root: String,
     }
   }
 
+  /** Record `source`'s sidecar row count in the one-row set `marker`:
+    * the "rows at last maintenance" stamp of a standing index (an ANN
+    * index's `_built`, an ingest index's `_censused`). One tiny write,
+    * no scan of `source`.
+    */
+  def stampRows(db: String, source: String, marker: String): Unit = {
+    import spark.implicits._
+    createSet(db, marker,
+      Seq(meta(db, source).map(_.rows).getOrElse(0L)).toDF("rows_at_stamp"),
+      policy = "none")
+  }
+
+  /** Fraction `source` has grown since [[stampRows]] last stamped
+    * `marker`: (rows now − rows then) / rows then, from the sidecar and
+    * the one-row marker — never a scan of `source`. 0.0 when `marker`
+    * does not exist or holds 0. The stamp is read by column position,
+    * so markers written under an earlier column name still open.
+    */
+  def growthSinceStamp(db: String, source: String, marker: String): Double = {
+    val now = meta(db, source).map(_.rows).getOrElse(0L)
+    if (meta(db, marker).isEmpty) 0.0
+    else {
+      val base = scanSet(db, marker).collect()(0).getLong(0)
+      if (base <= 0) 0.0 else (now - base).toDouble / base
+    }
+  }
+
   /** Tag `set` as a catalog-owned staging generation (see [[SetMeta]]).
     * The staged-rebuild creators call this right after writing a
     * `*_rebuild`/`*_recap` set; a crash between the create and the tag
@@ -1054,10 +1081,6 @@ final class SetCatalog(spark: SparkSession, root: String,
       Files.deleteIfExists(marker)
     }
 
-  /** [[swapSetGroup]] for a single pair. */
-  def swapSet(db: String, staging: String, target: String): Unit =
-    swapSetGroup(db, Seq(staging -> target))
-
   /** Heal an interrupted [[swapSetGroup]]; call with the SAME pairs
     * before starting a new staged rebuild. Marker PRESENT: the prior
     * group committed — every staging set is authoritative, so finish
@@ -1122,10 +1145,6 @@ final class SetCatalog(spark: SparkSession, root: String,
       }
     }
   }
-
-  /** [[recoverSwapGroup]] for a single pair. */
-  def recoverSwap(db: String, staging: String, target: String): Unit =
-    recoverSwapGroup(db, Seq(staging -> target))
 
   /** Catalog-wide crash recovery (VERDICT r14 next #6): heal EVERY
     * interrupted staged swap under `db`, whoever started it — the entry

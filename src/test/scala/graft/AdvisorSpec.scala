@@ -23,7 +23,7 @@ class AdvisorSpec extends GraftSpecBase {
   }
 
   test("set catalog: create / scan / meta / list / remove round-trip") {
-    val root = Files.createTempDirectory("graft-sets").toString
+    val root = tempRoot("graft-sets").toString
     val cat = new SetCatalog(spark, root)
     val df = Tables.nation(spark, sfDir)
     cat.createSet("db1", "nations", df, Some("n_regionkey"), 4)
@@ -36,7 +36,7 @@ class AdvisorSpec extends GraftSpecBase {
   }
 
   test("co-bucketed sets join with no shuffle exchange (the Lachesis local-join payoff)") {
-    val root = Files.createTempDirectory("graft-buckets").toString
+    val root = tempRoot("graft-buckets").toString
     val cat = new SetCatalog(spark, root)
     val li = Tables.lineitem(spark, sfDir)
     val o = Tables.orders(spark, sfDir)
@@ -57,7 +57,7 @@ class AdvisorSpec extends GraftSpecBase {
   }
 
   test("advisor placement applied on save co-partitions the set") {
-    val root = Files.createTempDirectory("graft-sets2").toString
+    val root = tempRoot("graft-sets2").toString
     val cat = new SetCatalog(spark, root)
     val adv = new PlacementAdvisor
     val li = Tables.lineitem(spark, sfDir)
@@ -70,7 +70,7 @@ class AdvisorSpec extends GraftSpecBase {
   }
 
   test("advisor history persists: a new session recommends from prior observations") {
-    val path = Files.createTempDirectory("graft-adv").resolve("history.tsv").toString
+    val path = tempRoot("graft-adv").resolve("history.tsv").toString
     // a history written by an older advisor: its probe-dial (D) and
     // ingest-census (C) lines are unknown tags now and must load as
     // nothing, next to the tags still read
@@ -93,7 +93,7 @@ class AdvisorSpec extends GraftSpecBase {
   }
 
   test("saveWithPlacement sizes co-partitioned sets to one bucket count; join stays exchange-free") {
-    val root = Files.createTempDirectory("graft-sets3").toString
+    val root = tempRoot("graft-sets3").toString
     val cat = new SetCatalog(spark, root)
     val adv = new PlacementAdvisor
     val li = Tables.lineitem(spark, sfDir)
@@ -124,7 +124,7 @@ class AdvisorSpec extends GraftSpecBase {
   test("advisor sizing rule lands on persistLshIndex/persistGramIndex sets") {
     val adv = new PlacementAdvisor
     val docs = Tables.documents(spark, sfDir).filter(col("doc_id") < 100)
-    val root = Files.createTempDirectory("graft-advidx").toString
+    val root = tempRoot("graft-advidx").toString
     val cat = new SetCatalog(spark, root)
     // target 512 rows/bucket so the rule yields a real (>1) count at
     // fixture scale; both bucketed sets must carry the SAME advised count
@@ -219,7 +219,6 @@ class AdvisorSpec extends GraftSpecBase {
         "pq_codebooks", "pq_codes", "pq_vectors",
         "ivfpq_centroids", "ivfpq_codebooks", "ivfpq_codes", "ivfpq_vectors")
       .foreach(cat.removeSet("adv", _))
-    SetCatalog.deleteTree(java.nio.file.Paths.get(root))
   }
 
   test("reward-driven recommendation favors the key of the expensive workload") {
@@ -265,7 +264,7 @@ class AdvisorSpec extends GraftSpecBase {
   }
 
   test("advisor persist is atomic and caps replayed history") {
-    val path = Files.createTempDirectory("graft-adv").resolve("hist.tsv").toString
+    val path = tempRoot("graft-adv").resolve("hist.tsv").toString
     val adv = new PlacementAdvisor(Some(path))
     val li = Tables.lineitem(spark, sfDir)
     for (_ <- 1 to 3) adv.observe(li.groupBy(col("l_partkey")).count(), latencyMs = 5L)
@@ -284,7 +283,7 @@ class AdvisorSpec extends GraftSpecBase {
   }
 
   test("fair dispatcher policy: write slots proportional to node capacity") {
-    val root = Files.createTempDirectory("graft-sets4").toString
+    val root = tempRoot("graft-sets4").toString
     val cat = new SetCatalog(spark, root)
     val nat = Tables.nation(spark, sfDir)
     cat.createSet("db4", "nations_fair", nat, None, numPartitions = 8,
@@ -300,7 +299,7 @@ class AdvisorSpec extends GraftSpecBase {
   test("compactSet collapses appended small files, preserving data and layout") {
     import spark.implicits._
     import scala.jdk.CollectionConverters._
-    val root = Files.createTempDirectory("graft-compact").toString
+    val root = tempRoot("graft-compact").toString
     val cat = new SetCatalog(spark, root)
     val base = (1L to 100L).map(i => (i, s"v$i")).toDF("k", "v")
     cat.createSet("db", "log", base.limit(0), policy = "none")
@@ -338,7 +337,7 @@ class AdvisorSpec extends GraftSpecBase {
 
   test("compactSet recovers a crash between the two swap renames") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-compact-crash").toString
+    val root = tempRoot("graft-compact-crash").toString
     val cat = new SetCatalog(spark, root)
     val base = (1L to 50L).map(i => (i, s"v$i")).toDF("k", "v")
     cat.createSet("db", "log", base, policy = "none")
@@ -359,7 +358,7 @@ class AdvisorSpec extends GraftSpecBase {
 
   test("renameSet swaps a staged set over the original; bucketed sets refuse") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-rename").toString
+    val root = tempRoot("graft-rename").toString
     val cat = new SetCatalog(spark, root)
     val base = (1L to 20L).map(i => (i, s"v$i")).toDF("k", "v")
     cat.createPartitionedSet("db", "tgt", base.withColumn("b", $"k" % 2), "b")
@@ -437,7 +436,7 @@ class AdvisorSpec extends GraftSpecBase {
 
   test("removeSet drops the session-catalog entry only for bucketed sets") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-remove").toString
+    val root = tempRoot("graft-remove").toString
     val cat = new SetCatalog(spark, root)
     val base = (1L to 10L).map(i => (i, s"v$i")).toDF("k", "v")
     // an UNRELATED session-catalog table that happens to share the

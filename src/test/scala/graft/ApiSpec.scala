@@ -112,7 +112,7 @@ class ApiSpec extends GraftSpecBase {
   test("classic deprecated Query/Selection/Join API matches the Computation results") {
     import spark.implicits._
     import graft.api.classic
-    val root = java.nio.file.Files.createTempDirectory("graft-classic").toString
+    val root = tempRoot("graft-classic").toString
     val client = new classic.QueryClient(spark, root)
     client.createSet("db", "customer",
       Tables.customer(spark, sfDir).as[Customer])
@@ -139,7 +139,7 @@ class ApiSpec extends GraftSpecBase {
   }
 
   test("multi-sink query graph: one submission, two outputs, shared scan persisted") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-multisink").toString
+    val tmp = tempRoot("graft-multisink").toString
     val shared = Tables.lineitem(spark, sfDir)
       .join(Tables.orders(spark, sfDir), col("l_orderkey") === col("o_orderkey"))
     val sink1 = shared.groupBy(col("o_orderpriority")).agg(count(lit(1)).as("n"))

@@ -8,7 +8,7 @@ import graft.storage.SetCatalog
 class CatalogSpec extends GraftSpecBase {
 
   private lazy val root = {
-    val r = Files.createTempDirectory("graft-cat").toString
+    val r = tempRoot("graft-cat").toString
     spark.conf.set("spark.sql.catalog.graft", "graft.storage.GraftCatalog")
     spark.conf.set("spark.sql.catalog.graft.root", r)
     r
@@ -123,7 +123,7 @@ class CatalogSpec extends GraftSpecBase {
   }
 
   test("renameSet heals a half-moved rename on retry (crash between moves)") {
-    val r = Files.createTempDirectory("graft-ren").toString
+    val r = tempRoot("graft-ren").toString
     val sets = new SetCatalog(spark, r)
     sets.createSet("db", "a", Tables.nation(spark, sfDir), policy = "none")
     val rows = sets.scanSet("db", "a").count()
@@ -140,18 +140,17 @@ class CatalogSpec extends GraftSpecBase {
     // and the healed set is fully functional, not just scannable
     sets.appendToSet("db", "b", Tables.nation(spark, sfDir))
     assert(sets.meta("db", "b").get.rows == 2 * rows)
-    SetCatalog.deleteTree(java.nio.file.Paths.get(r))
   }
 
   test("swapSet replaces the target; recoverSwap survives the interrupted-remove window") {
     import java.nio.file.Paths
-    val r = Files.createTempDirectory("graft-swap").toString
+    val r = tempRoot("graft-swap").toString
     val sets = new SetCatalog(spark, r)
     def mk(name: String, n: Int) = sets.createSet("db", name,
       Tables.nation(spark, sfDir).limit(n), policy = "none")
     // happy path: target's 25 rows replaced by staging's 5
     mk("t", 25); mk("t_rebuild", 5)
-    sets.swapSet("db", "t_rebuild", "t")
+    sets.swapSetGroup("db", Seq("t_rebuild" -> "t"))
     assert(sets.scanSet("db", "t").count() == 5L)
     assert(sets.meta("db", "t_rebuild").isEmpty)
     assert(!Files.exists(Paths.get(s"$r/db.t.swapin")))
@@ -164,22 +163,21 @@ class CatalogSpec extends GraftSpecBase {
     Files.writeString(Paths.get(s"$r/db.u.swapin"), "u_rebuild")
     SetCatalog.deleteTree(Paths.get(s"$r/db.u")) // tree gone, sidecar kept
     assert(sets.meta("db", "u").isDefined, "fixture needs the stale sidecar")
-    sets.recoverSwap("db", "u_rebuild", "u")
+    sets.recoverSwapGroup("db", Seq("u_rebuild" -> "u"))
     assert(sets.scanSet("db", "u").count() == 5L,
       "staging copy must survive the interrupted remove and become live")
     assert(!Files.exists(Paths.get(s"$r/db.u.swapin")))
     // pre-swap abort (no marker): the live target is authoritative and
     // the staging leftover is discarded — the old behavior, preserved
     mk("v", 25); mk("v_rebuild", 5)
-    sets.recoverSwap("db", "v_rebuild", "v")
+    sets.recoverSwapGroup("db", Seq("v_rebuild" -> "v"))
     assert(sets.scanSet("db", "v").count() == 25L)
     assert(sets.meta("db", "v_rebuild").isEmpty)
-    SetCatalog.deleteTree(Paths.get(r))
   }
 
   test("sidecar file count: tracked across appends, compaction resets it, needsCompaction dials") {
     import java.nio.file.Paths
-    val r = Files.createTempDirectory("graft-files").toString
+    val r = tempRoot("graft-files").toString
     val sets = new SetCatalog(spark, r)
     sets.createSet("db", "f", Tables.nation(spark, sfDir),
       partitionColumn = Some("n_nationkey"), numPartitions = 4)
@@ -223,12 +221,11 @@ class CatalogSpec extends GraftSpecBase {
       assert(sets.scanSet("db", "f").count() == rows + 36L,
         "auto-compaction lost rows")
     } finally spark.conf.unset("spark.graft.catalog.autoCompact.files")
-    SetCatalog.deleteTree(Paths.get(r))
   }
 
   test("recoverAll heals a stranger's interrupted swaps at catalog open") {
     import java.nio.file.Paths
-    val r = Files.createTempDirectory("graft-recall").toString
+    val r = tempRoot("graft-recall").toString
     val sets = new SetCatalog(spark, r)
     def mk(name: String, n: Int) = sets.createSet("db", name,
       Tables.nation(spark, sfDir).limit(n), policy = "none")
@@ -285,13 +282,12 @@ class CatalogSpec extends GraftSpecBase {
     assert(auto.meta("db", "p_recap").isEmpty &&
       auto.scanSet("db", "p").count() == 3L,
       "recoverDbsOnOpen did not heal at construction")
-    SetCatalog.deleteTree(Paths.get(r))
   }
 
   test("production entry points heal interrupted swaps at open; opt-out respected") {
     import java.nio.file.Paths
     import scala.jdk.CollectionConverters._
-    val r = Files.createTempDirectory("graft-entryheal").toString
+    val r = tempRoot("graft-entryheal").toString
     val sets = new SetCatalog(spark, r)
     def mk(name: String, n: Int) = sets.createSet("db", name,
       Tables.nation(spark, sfDir).limit(n), policy = "none")
@@ -324,7 +320,6 @@ class CatalogSpec extends GraftSpecBase {
     new graft.api.classic.QueryClient(spark, r, recoverOnOpen = false)
     assert(Files.exists(Paths.get(s"$r/db.z.swapin")),
       "opt-out entry point healed anyway")
-    SetCatalog.deleteTree(Paths.get(r))
   }
 
   test("QueryClient open is reader-safe: markers replay, staging sweep is opt-in") {
@@ -334,7 +329,7 @@ class CatalogSpec extends GraftSpecBase {
     // finishes a committed swap) — the destructive convention sweep
     // needs the owning pipeline's explicit opt-in.
     import java.nio.file.Paths
-    val r = Files.createTempDirectory("graft-readeropen").toString
+    val r = tempRoot("graft-readeropen").toString
     val sets = new SetCatalog(spark, r)
     def mk(name: String, n: Int) = sets.createSet("db", name,
       Tables.nation(spark, sfDir).limit(n), policy = "none")
@@ -356,7 +351,6 @@ class CatalogSpec extends GraftSpecBase {
     assert(sets.meta("db", "w_rebuild").isEmpty &&
       sets.scanSet("db", "w").count() == 25L,
       "owner open with sweepStagingOnOpen did not resolve the leftover")
-    SetCatalog.deleteTree(Paths.get(r))
   }
 
   test("maintenance lease: a live second writer fails loudly, a dead holder is broken") {
@@ -364,7 +358,7 @@ class CatalogSpec extends GraftSpecBase {
     // only — two sessions interleaving inside swapSetGroup's window
     // corrupted silently. The advisory lease makes it loud.
     import java.nio.file.Paths
-    val r = Files.createTempDirectory("graft-lease").toString
+    val r = tempRoot("graft-lease").toString
     val sets = new SetCatalog(spark, r)
     sets.createSet("db", "t", Tables.nation(spark, sfDir).limit(5),
       policy = "none")
@@ -391,7 +385,6 @@ class CatalogSpec extends GraftSpecBase {
       "stale lease must be broken, not block the owning swap")
     assert(!Files.exists(Paths.get(s"$r/db.maintlease")),
       "lease must be released after the swap")
-    SetCatalog.deleteTree(Paths.get(r))
   }
 
   test("maintenance lease is host-aware: a foreign host's lease is never broken on local pid evidence") {
@@ -402,7 +395,7 @@ class CatalogSpec extends GraftSpecBase {
     // interleave inside swapSetGroup's window, the exact silent
     // corruption the lease exists to make loud.
     import java.nio.file.Paths
-    val r = Files.createTempDirectory("graft-lease-host").toString
+    val r = tempRoot("graft-lease-host").toString
     val sets = new SetCatalog(spark, r)
     sets.createSet("db", "t", Tables.nation(spark, sfDir).limit(5),
       policy = "none")
@@ -496,7 +489,6 @@ class CatalogSpec extends GraftSpecBase {
     sets.swapSetGroup("db", Seq("t_rebuild" -> "t"))
     assert(sets.scanSet("db", "t").count() == 7L,
       "same-host dead holder must be broken as before")
-    SetCatalog.deleteTree(Paths.get(r))
   }
 
   test("lease break is tombstone-arbitrated: a breaker that loses the race restores the winner's lease and throws naming it") {
@@ -508,7 +500,7 @@ class CatalogSpec extends GraftSpecBase {
     // deterministically via the test seam between staleness-read and
     // rename.
     import java.nio.file.Paths
-    val r = Files.createTempDirectory("graft-lease-race").toString
+    val r = tempRoot("graft-lease-race").toString
     val sets = new SetCatalog(spark, r)
     sets.createSet("db", "t", Tables.nation(spark, sfDir).limit(5),
       policy = "none")
@@ -561,7 +553,6 @@ class CatalogSpec extends GraftSpecBase {
         s"a vanished stale lease must lose loudly: ${eB.getMessage}")
       assert(tombstones().isEmpty, "no tombstone on the lost-rename path")
     } finally SetCatalog.leaseBreakTestHook = () => ()
-    SetCatalog.deleteTree(Paths.get(r))
   }
 
   test("two concurrent breakers of the same stale lease: exactly one wins, the loser throws") {
@@ -572,7 +563,7 @@ class CatalogSpec extends GraftSpecBase {
     // the tombstone rename. ATOMIC_MOVE guarantees exactly one wins the
     // observed file; the loser must throw, never silently proceed.
     import java.nio.file.Paths
-    val r = Files.createTempDirectory("graft-lease-2brk").toString
+    val r = tempRoot("graft-lease-2brk").toString
     val sets = new SetCatalog(spark, r)
     sets.createSet("db", "t", Tables.nation(spark, sfDir).limit(5),
       policy = "none")
@@ -611,12 +602,11 @@ class CatalogSpec extends GraftSpecBase {
       SetCatalog.leaseBreakTestHook = () => ()
       SetCatalog.leaseIdentityOverride.remove()
     }
-    SetCatalog.deleteTree(Paths.get(r))
   }
 
   test("auto-compaction trigger re-seeds a drifted file count instead of trusting it") {
     import java.nio.file.Paths
-    val r = Files.createTempDirectory("graft-reseed").toString
+    val r = tempRoot("graft-reseed").toString
     val sets = new SetCatalog(spark, r)
     sets.createSet("db", "f", Tables.nation(spark, sfDir).limit(20),
       numPartitions = 4, policy = "roundrobin")
@@ -651,7 +641,6 @@ class CatalogSpec extends GraftSpecBase {
       assert(sets.meta("db", "f").get.files == real,
         s"sidecar not re-seeded: ${sets.meta("db", "f").get.files} vs $real")
     } finally spark.conf.unset("spark.graft.catalog.autoCompact.files")
-    SetCatalog.deleteTree(Paths.get(r))
   }
 
   test("SHOW NAMESPACES IN an existing leaf namespace returns no children") {

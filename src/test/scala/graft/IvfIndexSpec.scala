@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.model.Tables
 import graft.operators.SimilaritySearch
@@ -9,7 +8,7 @@ import graft.storage.SetCatalog
 class IvfIndexSpec extends GraftSpecBase {
 
   private lazy val (cat, built) = {
-    val root = Files.createTempDirectory("graft-ivf-spec").toString
+    val root = tempRoot("graft-ivf-spec").toString
     val c = new SetCatalog(spark, root)
     SimilaritySearch.buildIvfIndex(spark, c, "idx", "emb",
       Tables.embeddings(spark, sfDir))
@@ -51,7 +50,7 @@ class IvfIndexSpec extends GraftSpecBase {
     val b = emb.filter(col("vec_id") % 2 === 1)
     val queries = emb.filter(col("vec_id") < 10)
 
-    val rootApp = Files.createTempDirectory("graft-ivf-app").toString
+    val rootApp = tempRoot("graft-ivf-app").toString
     val capp = new SetCatalog(spark, rootApp)
     SimilaritySearch.buildIvfIndex(spark, capp, "idx", "emb", a)
     SimilaritySearch.appendToIvfIndex(spark, capp, "idx", "emb", b)
@@ -61,7 +60,7 @@ class IvfIndexSpec extends GraftSpecBase {
 
     // reference: same codebook (trained on A), the WHOLE corpus assigned
     // in one pass — rebuilt by hand from the public kernels
-    val rootRef = Files.createTempDirectory("graft-ivf-ref").toString
+    val rootRef = tempRoot("graft-ivf-ref").toString
     val cref = new SetCatalog(spark, rootRef)
     SimilaritySearch.buildIvfIndex(spark, cref, "idx", "emb", a)
     val centroids = cref.scanSet("idx", "emb_centroids")
@@ -85,7 +84,7 @@ class IvfIndexSpec extends GraftSpecBase {
   test("rebuild discards a stale staging leftover and converges") {
     val emb = Tables.embeddings(spark, sfDir)
     val queries = emb.filter(col("vec_id") < 5)
-    val root = Files.createTempDirectory("graft-ivf-stale").toString
+    val root = tempRoot("graft-ivf-stale").toString
     val c = new SetCatalog(spark, root)
     SimilaritySearch.buildIvfIndex(spark, c, "idx", "emb", emb)
     // simulate a rebuild aborted BEFORE its swaps: a finished (here,
@@ -102,13 +101,12 @@ class IvfIndexSpec extends GraftSpecBase {
     val hits = SimilaritySearch
       .searchIvfIndex(spark, c, "idx", "emb", queries, k = 5)
     assert(hits.count() == 5 * queries.count())
-    SetCatalog.deleteTree(java.nio.file.Paths.get(root))
   }
 
   test("rebuild heals a crash between removeSet and the staged rename") {
     val emb = Tables.embeddings(spark, sfDir)
     val queries = emb.filter(col("vec_id") < 5)
-    val root = Files.createTempDirectory("graft-ivf-crash").toString
+    val root = tempRoot("graft-ivf-crash").toString
     val c = new SetCatalog(spark, root)
     SimilaritySearch.buildIvfIndex(spark, c, "idx", "emb", emb)
     val expect = SimilaritySearch
@@ -131,7 +129,6 @@ class IvfIndexSpec extends GraftSpecBase {
     // retraining over the identical corpus under the md5-ordered sample
     // reproduces the same codebook, hence the same search results
     assert(got == expect)
-    SetCatalog.deleteTree(java.nio.file.Paths.get(root))
   }
 
   test("the vector set is laid out as one directory per bucket") {
@@ -149,18 +146,18 @@ class IvfIndexSpec extends GraftSpecBase {
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val emb = Tables.embeddings(spark, sfDir)
-    val root = Files.createTempDirectory("graft-sem-life").toString
+    val root = tempRoot("graft-sem-life").toString
     val c = new SetCatalog(spark, root)
     graft.operators.Dedup.persistSemanticIndex(c, "idx", "sem",
       emb.filter(col("vec_id") < 150), "vec_id", "embedding")
     val kBuilt = c.scanSet("idx", "sem_centroids").count()
     assert(kBuilt == graft.operators.Dedup.autoClusters(150).toLong)
-    assert(graft.operators.Dedup.semanticDriftFraction(c, "idx", "sem") == 0.0)
+    assert(SimilaritySearch.appendedDriftFraction(c, "idx", "sem") == 0.0)
     // append the second slice under the FROZEN codebook
     graft.operators.Dedup.appendToSemanticIndex(c, "idx", "sem",
       emb.filter(col("vec_id") >= 150 && col("vec_id") < 250),
       "vec_id", "embedding")
-    val drift = graft.operators.Dedup.semanticDriftFraction(c, "idx", "sem")
+    val drift = SimilaritySearch.appendedDriftFraction(c, "idx", "sem")
     assert(math.abs(drift - 100.0 / 150.0) < 1e-9, s"drift=$drift")
     // appended vectors are live standing state: a probe of a vector's
     // own value must pair with it (cos = 1 within its cell)
@@ -185,22 +182,20 @@ class IvfIndexSpec extends GraftSpecBase {
       targetClusterSize = 25)
     assert(c.scanSet("idx", "sem_centroids").count() ==
       graft.operators.Dedup.autoClusters(250, 25).toLong)
-    assert(graft.operators.Dedup.semanticDriftFraction(c, "idx", "sem") == 0.0)
+    assert(SimilaritySearch.appendedDriftFraction(c, "idx", "sem") == 0.0)
     val hitsAfter = probe(id => id >= 150 && id < 160)
     assert((150L until 160L).forall(i => hitsAfter.contains((i, i + 1000L))),
       s"rebuild lost appended vectors: $hitsAfter")
     // the rebuild equals a from-scratch build over the same standing
     // rows (same md5-ordered trainer sample, same k): within-cell pairs
     // at a loose threshold depend on every cell boundary, and match
-    val root2 = Files.createTempDirectory("graft-sem-scratch").toString
+    val root2 = tempRoot("graft-sem-scratch").toString
     val c2 = new SetCatalog(spark, root2)
     graft.operators.Dedup.persistSemanticIndex(c2, "idx", "sem",
       emb.filter(col("vec_id") < 250), "vec_id", "embedding",
       targetClusterSize = 25)
     val rebuilt = probe(id => id < 20, threshold = 0.4)
     assert(rebuilt.size > 20 && rebuilt == probe(id => id < 20, c2, 0.4))
-    SetCatalog.deleteTree(java.nio.file.Paths.get(root2))
-    SetCatalog.deleteTree(java.nio.file.Paths.get(root))
   }
 
   test("routed index lifecycle: build/append/probe/rebuild share the assignment kernel above the threshold") {
@@ -214,7 +209,7 @@ class IvfIndexSpec extends GraftSpecBase {
     // routing is found by a routed probe of its own value (same cell by
     // construction), through a re-sized rebuild too
     val emb = Tables.embeddings(spark, sfDir)
-    val root = Files.createTempDirectory("graft-sem-route").toString
+    val root = tempRoot("graft-sem-route").toString
     val c = new SetCatalog(spark, root)
     spark.conf.set("spark.graft.ann.routeThreshold", "4")
     try {
@@ -248,13 +243,12 @@ class IvfIndexSpec extends GraftSpecBase {
       assert((150L until 160L).forall(i => hitsAfter.contains((i, i + 1000L))),
         s"routed rebuild broke probe consistency: $hitsAfter")
     } finally spark.conf.unset("spark.graft.ann.routeThreshold")
-    SetCatalog.deleteTree(java.nio.file.Paths.get(root))
   }
 
   test("grouped cell directories above the fanout bound: same results, bounded fanout, pruned scans") {
     val emb = Tables.embeddings(spark, sfDir)
     val queries = emb.filter(col("vec_id") < 10)
-    val root = Files.createTempDirectory("graft-ivf-grp").toString
+    val root = tempRoot("graft-ivf-grp").toString
     val c = new SetCatalog(spark, root)
     spark.conf.set("spark.graft.ann.maxCellDirs", "3")
     try {
@@ -302,7 +296,6 @@ class IvfIndexSpec extends GraftSpecBase {
           pairs.contains((i, i + 1000L)) && pairs.contains((i + 2000L, i + 1000L))),
         s"grouped semantic probe lost built or appended identity pairs: $pairs")
     } finally spark.conf.unset("spark.graft.ann.maxCellDirs")
-    SetCatalog.deleteTree(java.nio.file.Paths.get(root))
   }
 
   test("pruneToTouchedCells is row-EXACT on grouped layouts (no cross-product slack)") {
@@ -314,7 +307,7 @@ class IvfIndexSpec extends GraftSpecBase {
     // touched cells' rows. Pinned here: rows sharing a touched GROUP
     // but holding an untouched bucket must not flow.
     val emb = Tables.embeddings(spark, sfDir).filter(col("vec_id") < 80)
-    val root = Files.createTempDirectory("graft-ivf-exact").toString
+    val root = tempRoot("graft-ivf-exact").toString
     val c = new SetCatalog(spark, root)
     spark.conf.set("spark.graft.ann.maxCellDirs", "3")
     try {
@@ -341,12 +334,11 @@ class IvfIndexSpec extends GraftSpecBase {
         s"pruned rows must cover exactly the touched cells ${touched.toSet}, " +
           s"got $pruned (same-group untouched: ${untouchedSameGroup.toSet})")
     } finally spark.conf.unset("spark.graft.ann.maxCellDirs")
-    SetCatalog.deleteTree(java.nio.file.Paths.get(root))
   }
 
   test("routing threshold is persisted with the index, not read from session conf") {
     val emb = Tables.embeddings(spark, sfDir).filter(col("vec_id") < 60)
-    val root = Files.createTempDirectory("graft-route-persist").toString
+    val root = tempRoot("graft-route-persist").toString
     val c = new SetCatalog(spark, root)
     // build in a session whose threshold (4) routes at k = 9
     spark.conf.set("spark.graft.ann.routeThreshold", "4")
@@ -387,12 +379,11 @@ class IvfIndexSpec extends GraftSpecBase {
     assert(SimilaritySearch
       .persistedRouteThreshold(c.scanSet("idx", "rt_centroids"))
       .contains(graft.operators.Dedup.routeThreshold))
-    SetCatalog.deleteTree(java.nio.file.Paths.get(root))
   }
 
   test("appendToSemanticIndex rebuildIfDrifted triggers the re-sized rebuild") {
     val emb = Tables.embeddings(spark, sfDir)
-    val root = Files.createTempDirectory("graft-sem-drift").toString
+    val root = tempRoot("graft-sem-drift").toString
     val c = new SetCatalog(spark, root)
     graft.operators.Dedup.persistSemanticIndex(c, "idx", "sem",
       emb.filter(col("vec_id") < 100), "vec_id", "embedding",
@@ -408,8 +399,7 @@ class IvfIndexSpec extends GraftSpecBase {
     assert(c.scanSet("idx", "sem_centroids").count() ==
       graft.operators.Dedup.autoClusters(250, 25).toLong,
       "drift trigger did not re-size the codebook")
-    assert(graft.operators.Dedup.semanticDriftFraction(c, "idx", "sem") == 0.0)
-    SetCatalog.deleteTree(java.nio.file.Paths.get(root))
+    assert(SimilaritySearch.appendedDriftFraction(c, "idx", "sem") == 0.0)
   }
 
   test("wide training sample: prefiltered top-k equals the direct plan") {

@@ -1,7 +1,7 @@
 package graft
 
 import java.net.URI
-import java.nio.file.{Files, Path => JPath, Paths}
+import java.nio.file.{Files, Path => JPath}
 import java.nio.file.attribute.PosixFilePermissions
 
 import scala.jdk.CollectionConverters._
@@ -48,7 +48,7 @@ class LocalFsSpec extends GraftSpecBase {
 
   test("a parquet write, an st_* query and an index append start no process") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-localfs").toString
+    val root = tempRoot("graft-localfs").toString
     val rnd = new scala.util.Random(5)
     (0L until 300L).map(i => (i, Seq.fill(16)(rnd.nextGaussian().toFloat)))
       .toDF("vec_id", "embedding").write.parquet(s"$root/corpus")
@@ -77,11 +77,10 @@ class LocalFsSpec extends GraftSpecBase {
         .isInstanceOf[InProcessLocalFs])
     }
     assert(cat.meta("j", "sem_vectors").get.rows == 300L)
-    SetCatalog.deleteTree(Paths.get(root))
   }
 
   test("files and directories get the stock permissions") {
-    val root = Files.createTempDirectory("graft-perms")
+    val root = tempRoot("graft-perms")
     spark.range(10).repartition(2).write.parquet(s"$root/out")
     val w = Files.walk(root.resolve("out"))
     val (dirs, files) = try w.iterator().asScala.toSeq.partition(Files.isDirectory(_))
@@ -100,11 +99,10 @@ class LocalFsSpec extends GraftSpecBase {
       stock.setPermission(new Path(b.toString), p)
       assert(perms(a) == mode && perms(b) == mode)
     }
-    SetCatalog.deleteTree(root)
   }
 
   test("a link status equals the stock one, on links and on plain files") {
-    val root = Files.createTempDirectory("graft-links")
+    val root = tempRoot("graft-links")
     val target = Files.write(root.resolve("target"), "x".getBytes)
     val link = Files.createSymbolicLink(root.resolve("link"), target)
     val ours = rawFs(new InProcessRawLocalFileSystem)
@@ -118,7 +116,6 @@ class LocalFsSpec extends GraftSpecBase {
     assert(stock.getFileLinkStatus(new Path(link.toString)).isSymlink)
     assertThrows[java.io.FileNotFoundException](
       ours.getFileLinkStatus(new Path(root.resolve("missing").toString)))
-    SetCatalog.deleteTree(root)
   }
 
   test("a user's own file-scheme classes are left alone") {

@@ -99,7 +99,7 @@ class PipelineSpec extends GraftSpecBase {
     val oneShot = Dedup.crossPairs(arriving, corpus, "doc_id", "text")
       .collect().map(_.toSeq).toSet
 
-    val root = java.nio.file.Files.createTempDirectory("graft-lsh-spec").toString
+    val root = tempRoot("graft-lsh-spec").toString
     val cat = new graft.storage.SetCatalog(spark, root)
     Dedup.persistLshIndex(cat, "ddx", "c", corpus, "doc_id", "text")
     val stored = Dedup.crossPairsAgainstStoredIndex(
@@ -548,10 +548,6 @@ class PipelineSpec extends GraftSpecBase {
     assert(ensureWidth(agg) eq agg)
     val joined = docs.join(docs.select(col("doc_id")), Seq("doc_id"))
     assert(ensureWidth(joined) eq joined)
-    // the scan-only contract stays enforceable behind the strict flag
-    spark.conf.set("spark.graft.parallelism.strict", "true")
-    try intercept[IllegalArgumentException] { ensureWidth(agg) }
-    finally spark.conf.unset("spark.graft.parallelism.strict")
   }
 
   test("duplicateSpans merges overlapping duplicated windows into maximal spans") {
@@ -617,7 +613,7 @@ class PipelineSpec extends GraftSpecBase {
       .select(col("doc_id"), col("text"))
       .unionByName(corpus.filter(col("doc_id") % 5 === 0)
         .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-    val root = java.nio.file.Files.createTempDirectory("graft-exact-spec").toString
+    val root = tempRoot("graft-exact-spec").toString
     val cat = new graft.storage.SetCatalog(spark, root)
     Dedup.persistExactIndex(cat, "ddx", "c", corpus, "text", numBuckets = 4)
     val stored = Dedup.exactAgainstStoredIndex(
@@ -656,7 +652,7 @@ class PipelineSpec extends GraftSpecBase {
       Seq((1L, mk('a')), (2L, mk('b'))).toDF("doc_id", "text"))
     val arrivals = graft.operators.Multimodal.withPayload(Seq(
       (10L, mk('a')), (11L, mk('b')), (12L, mk('z'))).toDF("doc_id", "text"))
-    val root = java.nio.file.Files.createTempDirectory("graft-frame-spec").toString
+    val root = tempRoot("graft-frame-spec").toString
     val cat = new graft.storage.SetCatalog(spark, root)
     graft.operators.Multimodal.persistFrameIndex(
       cat, "ddx", "f", corpus, numBuckets = 2)
@@ -704,7 +700,7 @@ class PipelineSpec extends GraftSpecBase {
       (11L, "!!zz!!zz!!zz!!zz"),   // replays doc 2's envelope → true
       (12L, "zzzz!!!!zzzz!!!!"),   // novel envelope → false
       (13L, "zz")))                // 1 window < minWindows → no row
-    val root = java.nio.file.Files.createTempDirectory("graft-env-spec").toString
+    val root = tempRoot("graft-env-spec").toString
     val cat = new graft.storage.SetCatalog(spark, root)
     graft.operators.Multimodal.persistEnvelopeIndex(
       cat, "ddx", "env", corpus, window = 2, hop = 2, minWindows = 2,
@@ -845,13 +841,12 @@ class PipelineSpec extends GraftSpecBase {
     assert(bucketCountFor(Long.MaxValue / 4) == 65536)
     // and the no-advisor default path applies it: a tiny corpus lands
     // in ONE bucket, not the session's shuffle-partition count
-    val root = java.nio.file.Files.createTempDirectory("graft-bucketdef")
+    val root = tempRoot("graft-bucketdef")
     val cat = new graft.storage.SetCatalog(spark, root.toString)
     val corpus = (1L to 100L).map(i => (i, s"doc $i body")).toDF("id", "text")
     graft.operators.Dedup.persistExactIndex(cat, "bt", "tiny", corpus, "text")
     assert(cat.meta("bt", "tiny_hashes").exists(_.numPartitions == 1))
     cat.removeSet("bt", "tiny_hashes")
-    graft.storage.SetCatalog.deleteTree(root)
   }
 
   test("autoClusters sizes the SemDeDup codebook linearly with the corpus") {

@@ -169,7 +169,7 @@ class PlanSpec extends GraftSpecBase {
     // set ONCE (verify join); the replay guard's extra read is
     // column-pruned to the 8-byte id — at 100 TB that is the difference
     // between arrival-bound and corpus-IO-bound ingest
-    val root = java.nio.file.Files.createTempDirectory("graft-plan-ind")
+    val root = tempRoot("graft-plan-ind")
     val cat = new graft.storage.SetCatalog(spark, root.toString)
     val corpus = (0L until 20L)
       .map(i => (i, (0 until 25).map(j => s"w${i}_$j").mkString(" ")))
@@ -221,7 +221,6 @@ class PlanSpec extends GraftSpecBase {
     assert(guardSchemas == Seq("ReadSchema: struct<id:bigint>"),
       s"guard read of the standing set should prune to the id column: $guardSchemas")
     nSets.unpersist(); nBanded.unpersist()
-    graft.storage.SetCatalog.deleteTree(root)
   }
 
   test("per-batch probe plans carry STATIC literal cell pruning (semantic / IVF / IVF-PQ)") {
@@ -237,7 +236,7 @@ class PlanSpec extends GraftSpecBase {
     // which is why round 16 moved off it. Losing the literals would make
     // every micro-batch pay corpus IO, the exact failure the partitioned
     // layout exists to prevent.
-    val root = java.nio.file.Files.createTempDirectory("graft-plan-sem")
+    val root = tempRoot("graft-plan-sem")
     val cat = new graft.storage.SetCatalog(spark, root.toString)
     val rnd = new scala.util.Random(5)
     val corpus = (0L until 40L)
@@ -273,7 +272,6 @@ class PlanSpec extends GraftSpecBase {
       .queryExecution.executedPlan.toString
     assert(prunedLiterals(pqPlan),
       s"searchIvfPqIndex lost static cell pruning on a local query frame:\n$pqPlan")
-    graft.storage.SetCatalog.deleteTree(root)
   }
 
   test("README's stated query count matches the live registry") {

@@ -36,7 +36,7 @@ class PqSpec extends GraftSpecBase {
   }
 
   test("searching the persisted PQ index equals the in-memory pqTopK") {
-    val root = java.nio.file.Files.createTempDirectory("graft-pq-spec")
+    val root = tempRoot("graft-pq-spec")
     val cat = new graft.storage.SetCatalog(spark, root.toString)
     SimilaritySearch.buildPqIndex(spark, cat, "idx", "emb", emb)
     val queries = emb.filter(col("vec_id") < 10)
@@ -45,7 +45,6 @@ class PqSpec extends GraftSpecBase {
       .collect().map(_.toSeq).toSet
     val inMemory = SimilaritySearch.pqTopK(spark, emb, queries, k = 5)
       .collect().map(_.toSeq).toSet
-    graft.storage.SetCatalog.deleteTree(root)
     assert(fromIndex == inMemory && fromIndex.nonEmpty)
   }
 
@@ -53,7 +52,7 @@ class PqSpec extends GraftSpecBase {
     // a code depends only on (vector, codebooks), so the appended index's
     // code table must be byte-identical to encoding the whole corpus
     // in one pass under the codebooks trained on the built half
-    val root = java.nio.file.Files.createTempDirectory("graft-pq-a")
+    val root = tempRoot("graft-pq-a")
     val cat = new graft.storage.SetCatalog(spark, root.toString)
     val half = emb.filter(col("vec_id") < 100)
     SimilaritySearch.buildPqIndex(spark, cat, "idx", "emb", half)
@@ -67,7 +66,6 @@ class PqSpec extends GraftSpecBase {
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     // the sidecar drift dial reads appended over built rows
     val drift = SimilaritySearch.appendedDriftFraction(cat, "idx", "emb")
-    graft.storage.SetCatalog.deleteTree(root)
     assert(drift == (emb.count() - half.count()).toDouble / half.count(),
       s"drift=$drift")
     assert(codesIdx == codesOne,
@@ -75,7 +73,7 @@ class PqSpec extends GraftSpecBase {
   }
 
   test("persisted IVF-PQ index equals in-memory ivfPqTopK and prunes code partitions") {
-    val root = java.nio.file.Files.createTempDirectory("graft-ivfpq-spec")
+    val root = tempRoot("graft-ivfpq-spec")
     val cat = new graft.storage.SetCatalog(spark, root.toString)
     SimilaritySearch.buildIvfPqIndex(spark, cat, "idx", "emb", emb)
     val queries = emb.filter(col("vec_id") < 10)
@@ -85,7 +83,6 @@ class PqSpec extends GraftSpecBase {
       .collect().map(_.toSeq).toSet
     // the probe join must prune the bucket-partitioned CODE set
     val plan = search.queryExecution.executedPlan.toString
-    graft.storage.SetCatalog.deleteTree(root)
     assert(fromIndex == inMemory && fromIndex.nonEmpty)
     // round 16: static literal pruning (see IvfIndexSpec's note)
     assert(plan.matches(
@@ -143,7 +140,7 @@ class PqSpec extends GraftSpecBase {
   }
 
   private lazy val cat = {
-    val root = java.nio.file.Files.createTempDirectory("graft-pq-rb").toString
+    val root = tempRoot("graft-pq-rb").toString
     new graft.storage.SetCatalog(spark, root)
   }
 }

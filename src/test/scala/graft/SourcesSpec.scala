@@ -11,7 +11,7 @@ import graft.sources.Sources
 class SourcesSpec extends GraftSpecBase {
 
   test(".tbl (dbgen pipe-delimited) round-trip preserves content") {
-    val tmp = Files.createTempDirectory("graft-tbl").toString
+    val tmp = tempRoot("graft-tbl").toString
     val nation = Tables.nation(spark, sfDir)
     Sources.writeTbl(nation, s"$tmp/nation.tbl")
     val schema = StructType(Seq(
@@ -25,7 +25,7 @@ class SourcesSpec extends GraftSpecBase {
   }
 
   test("json-lines round-trip preserves content") {
-    val tmp = Files.createTempDirectory("graft-json").toString
+    val tmp = tempRoot("graft-json").toString
     val docs = Tables.documents(spark, sfDir).limit(50)
     Sources.writeJsonLines(docs, s"$tmp/docs.json")
     val back = Sources.readJsonLines(spark, s"$tmp/docs.json")
@@ -59,7 +59,7 @@ class SourcesSpec extends GraftSpecBase {
   }
 
   test("binaryFile source ingests raw payloads with glob pruning") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bin")
+    val dir = tempRoot("graft-bin")
     java.nio.file.Files.write(dir.resolve("a.img"), Array[Byte](1, 2, 3))
     java.nio.file.Files.write(dir.resolve("b.img"), Array[Byte](4, 5))
     java.nio.file.Files.write(dir.resolve("skip.txt"), Array[Byte](9))

@@ -52,7 +52,7 @@ class StandingIndexSpec extends GraftSpecBase {
   }
 
   test("a warm standing-index append runs in <= 2 jobs and a probe in <= 3") {
-    val root = Files.createTempDirectory("graft-jobs").toString
+    val root = tempRoot("graft-jobs").toString
     val cat = new SetCatalog(spark, s"$root/sets")
     val corpus = vectorCorpus(s"$root/corpus", 600)
     Dedup.persistSemanticIndex(cat, "j", "sem",
@@ -83,11 +83,10 @@ class StandingIndexSpec extends GraftSpecBase {
       arrivals(ids), k = 1).collect()
     assert(cat.memoDecodes("j", "sem_centroids") == 1)
     assert(cat.meta("j", "sem_vectors").get.rows == 600L)
-    SetCatalog.deleteTree(Paths.get(root))
   }
 
   test("sidecar rows and files equal the set's real ones after appends, maxRecordsPerFile included") {
-    val root = Files.createTempDirectory("graft-sidecar").toString
+    val root = tempRoot("graft-sidecar").toString
     val cat = new SetCatalog(spark, root)
     val nation = Tables.nation(spark, sfDir)
     try for (mrf <- Seq("0", "1")) {
@@ -107,12 +106,11 @@ class StandingIndexSpec extends GraftSpecBase {
         assert(m.files == listedFiles(root, s"db.$set"), s"$set files (mrf=$mrf)")
       }
     } finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
-    SetCatalog.deleteTree(Paths.get(root))
   }
 
   test("the schema memo carries over an equal-column append and drops on a widening one") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-memo").toString
+    val root = tempRoot("graft-memo").toString
     val cat = new SetCatalog(spark, root)
     cat.createSet("db", "s", Seq((1L, "a"), (2L, "b")).toDF("k", "v"),
       policy = "none")
@@ -135,11 +133,10 @@ class StandingIndexSpec extends GraftSpecBase {
     val p = cat.scanSet("db", "p")
     assert(p.schema == spark.read.parquet(s"$root/db.p").schema)
     assert(p.where(col("cell") === 5000000000L).count() == 1L)
-    SetCatalog.deleteTree(Paths.get(root))
   }
 
   test("legacy sidecars still scan and append") {
-    val root = Files.createTempDirectory("graft-legacy").toString
+    val root = tempRoot("graft-legacy").toString
     val nation = Tables.nation(spark, sfDir)
     new SetCatalog(spark, root).createSet("db", "g8", nation, policy = "none")
     new SetCatalog(spark, root).createSet("db", "g7", nation, policy = "none")
@@ -158,7 +155,6 @@ class StandingIndexSpec extends GraftSpecBase {
       assert(m.rows == 30L && m.files == listedFiles(root, s"db.$set"))
       assert(cat.scanSet("db", set).count() == 30L)
     }
-    SetCatalog.deleteTree(Paths.get(root))
   }
 
   test("assignment-kernel dispatch is a pure function of the persisted witness") {
@@ -185,7 +181,7 @@ class StandingIndexSpec extends GraftSpecBase {
   test("a marker-less index past the tree threshold fails at load and writes nothing") {
     import SimilaritySearch._
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-kernel").toString
+    val root = tempRoot("graft-kernel").toString
     val cat = new SetCatalog(spark, root)
     val big = Array.tabulate(treeRouteThreshold + 1)(i => Array(i.toDouble, 0.0))
     // the footprint of a tree-sized index built before the witness
@@ -209,11 +205,10 @@ class StandingIndexSpec extends GraftSpecBase {
     assert(cb.kernel == TreeKernel &&
       persistedRouteThreshold(cat.scanSet("db", "new_centroids")).contains(2048) &&
       cb.centroids.length == big.length && cb.centroids(7).toSeq == Seq(7.0, 0.0))
-    SetCatalog.deleteTree(Paths.get(root))
   }
 
   test("a routed index codebook builds its router once per generation") {
-    val root = Files.createTempDirectory("graft-router").toString
+    val root = tempRoot("graft-router").toString
     val cat = new SetCatalog(spark, s"$root/sets")
     val corpus = vectorCorpus(s"$root/corpus", 200)
     // k = 9 routes two-level under threshold 4 (build and rebuild alike)
@@ -234,6 +229,5 @@ class StandingIndexSpec extends GraftSpecBase {
         !(rebuilt.router eq built.router),
         "a rebuild's new generation builds a new router")
     } finally spark.conf.unset("spark.graft.ann.routeThreshold")
-    SetCatalog.deleteTree(Paths.get(root))
   }
 }

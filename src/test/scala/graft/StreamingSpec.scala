@@ -89,7 +89,7 @@ class StreamingSpec extends GraftSpecBase {
   test("sink-backed upsert snapshot == in-memory snapshot, and survives restart") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft-upsert").toString
+    val root = tempRoot("graft-upsert").toString
     val cat = new graft.storage.SetCatalog(spark, root)
     def key(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getAs[Long]("user_id") ->
@@ -176,7 +176,7 @@ class StreamingSpec extends GraftSpecBase {
         .collect().map(_.toSeq).toSet
     }
 
-    val root = java.nio.file.Files.createTempDirectory("graft-pairlog").toString
+    val root = tempRoot("graft-pairlog").toString
     val cat = new graft.storage.SetCatalog(spark, root)
     val sinkMode = runStream(Some((cat, "logs", "pairs")))
     val memMode = runStream(None)
@@ -195,7 +195,7 @@ class StreamingSpec extends GraftSpecBase {
     val arriving = docs.filter(col("doc_id") >= 25).unionByName(
       corpus.filter(col("doc_id") % 5 === 0)
         .withColumn("doc_id", col("doc_id") + 1000000L))
-    val root = java.nio.file.Files.createTempDirectory("graft-spanlog").toString
+    val root = tempRoot("graft-spanlog").toString
     val cat = new graft.storage.SetCatalog(spark, root)
     graft.operators.Dedup.persistGramIndex(
       cat, "stx", "c", corpus, "doc_id", "text", k = 8)
@@ -284,7 +284,7 @@ class StreamingSpec extends GraftSpecBase {
       corpus.take(5).map { case (i, v) =>
         (1000L + i, v.map(x => x + 0.001f * rnd.nextGaussian().toFloat))
       }
-    val root = java.nio.file.Files.createTempDirectory("graft-stsem-spec")
+    val root = tempRoot("graft-stsem-spec")
     val cat = new graft.storage.SetCatalog(spark, root.toString)
     graft.operators.Dedup.persistSemanticIndex(cat, "t", "sem",
       corpus.toDF("vec_id", "embedding"), "vec_id", "embedding",
@@ -311,7 +311,6 @@ class StreamingSpec extends GraftSpecBase {
     // pairs are cross-corpus only: id_a is standing, id_b is arriving
     assert(oneShot.forall(s => s(0).asInstanceOf[Long] < 40L &&
       s(1).asInstanceOf[Long] >= 100L))
-    graft.storage.SetCatalog.deleteTree(root)
   }
 
   test("self-growing ingest dedup: first-seen wins within and across batches; index grows") {
@@ -332,14 +331,14 @@ class StreamingSpec extends GraftSpecBase {
         "doc_id", "text")
         .collect().map(_.getLong(0)).toSet
     }
-    val rootA = java.nio.file.Files.createTempDirectory("graft-sting-a")
+    val rootA = tempRoot("graft-sting-a")
     val catA = new graft.storage.SetCatalog(spark, rootA.toString)
     assert(runOnce(catA, b1 ++ b2) == Set(1L, 2L, 12L))
     // split delivery against a persistent catalog — TWO separate stream
     // runs, so the second genuinely probes the index the first grew
     // (this also pins restart survival: the state is the catalog set,
     // not anything held by the stopped query)
-    val rootB = java.nio.file.Files.createTempDirectory("graft-sting-b")
+    val rootB = tempRoot("graft-sting-b")
     val catB = new graft.storage.SetCatalog(spark, rootB.toString)
     assert(runOnce(catB, b1) == Set(1L, 2L))
     assert(runOnce(catB, b2) == Set(12L),
@@ -354,8 +353,6 @@ class StreamingSpec extends GraftSpecBase {
     assert(runOnce(catB, b2) == Set(12L),
       "replayed batch lost its own first-seen admissions")
     assert(catB.scanSet("t", "ing_hashes").count() == 3L)
-    graft.storage.SetCatalog.deleteTree(rootA)
-    graft.storage.SetCatalog.deleteTree(rootB)
   }
 
   test("ingest dedup standing sets survive compaction mid-stream") {
@@ -364,7 +361,7 @@ class StreamingSpec extends GraftSpecBase {
     // the growing sets accumulate one file per micro-batch; compactSet
     // is the documented maintenance valve — probes after a compaction
     // must behave exactly as before it
-    val root = java.nio.file.Files.createTempDirectory("graft-sting-cpt")
+    val root = tempRoot("graft-sting-cpt")
     val cat = new graft.storage.SetCatalog(spark, root.toString)
     def runExact(rows: Seq[(Long, String)]): Set[Long] = {
       val input = MemoryStream[(Long, String)]
@@ -383,7 +380,6 @@ class StreamingSpec extends GraftSpecBase {
     assert(runExact(Seq((11L, "aaa"), (12L, "ccc"), (13L, "ddd"))) ==
       Set(13L))
     assert(cat.scanSet("t", "ing_hashes").count() == 4L)
-    graft.storage.SetCatalog.deleteTree(root)
   }
 
   test("self-growing ingest near-dup: cross-run pairs found via the grown index") {
@@ -409,12 +405,12 @@ class StreamingSpec extends GraftSpecBase {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     }
     // one-shot: the intra-batch self-join path finds the pair
-    val rootA = java.nio.file.Files.createTempDirectory("graft-stind-a")
+    val rootA = tempRoot("graft-stind-a")
     val catA = new graft.storage.SetCatalog(spark, rootA.toString)
     assert(runOnce(catA, b1 ++ b2) == Set((1L, 21L)))
     // split across two stream RUNS: the pair's elements never share a
     // batch, so finding it requires the standing index the first run grew
-    val rootB = java.nio.file.Files.createTempDirectory("graft-stind-b")
+    val rootB = tempRoot("graft-stind-b")
     val catB = new graft.storage.SetCatalog(spark, rootB.toString)
     assert(runOnce(catB, b1).isEmpty)
     assert(runOnce(catB, b2) == Set((1L, 21L)),
@@ -438,7 +434,7 @@ class StreamingSpec extends GraftSpecBase {
     // batches (doc_id mod 4) through the batch kernel accumulates exactly
     // the one-shot self-join's pairs, each once
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
-    val rootC = java.nio.file.Files.createTempDirectory("graft-stind-c")
+    val rootC = tempRoot("graft-stind-c")
     val catC = new graft.storage.SetCatalog(spark, rootC.toString)
     val accumulated = (0 until 4).flatMap { i =>
       graft.operators.Dedup.ingestNearDupBatch(
@@ -450,9 +446,6 @@ class StreamingSpec extends GraftSpecBase {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(oneShot.nonEmpty && accumulated.size == oneShot.size &&
       accumulated.toSet == oneShot)
-    graft.storage.SetCatalog.deleteTree(rootA)
-    graft.storage.SetCatalog.deleteTree(rootB)
-    graft.storage.SetCatalog.deleteTree(rootC)
   }
 
   test("streaming quality mix: frozen tercile cuts == lmQualityBuckets on the calibration slice") {
@@ -547,7 +540,7 @@ class StreamingSpec extends GraftSpecBase {
         "doc_id", "text")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     }
-    val root = java.nio.file.Files.createTempDirectory("graft-stind-recap")
+    val root = tempRoot("graft-stind-recap")
     val cat = new graft.storage.SetCatalog(spark, root.toString)
     assert(runOnce(cat, Seq((1L, t1), (2L, other))).isEmpty)
     val preBands = cat.scanSet("t", "ind_bands").count()
@@ -565,7 +558,6 @@ class StreamingSpec extends GraftSpecBase {
       "recapped index failed the cross-run probe")
     assert(cat.scanSet("t", "ind_sets").count() == 4L,
       "recapped index stopped accepting appends")
-    graft.storage.SetCatalog.deleteTree(root)
   }
 
   test("ingest near-dup recap: hot-bucket cap demonstrably bounds the candidate blowup") {
@@ -580,7 +572,7 @@ class StreamingSpec extends GraftSpecBase {
     def doc(i: Long) = (i,
       boiler + " " + (0 until 14).map(j => s"u${i}_$j").mkString(" "))
     val docs = (0L until 24L).map(doc)
-    val root = java.nio.file.Files.createTempDirectory("graft-stind-hot")
+    val root = tempRoot("graft-stind-hot")
     val cat = new graft.storage.SetCatalog(spark, root.toString)
     val input = MemoryStream[(Long, String)]
     input.addData(docs: _*)
@@ -628,7 +620,6 @@ class StreamingSpec extends GraftSpecBase {
     val uncapped = candidates(Int.MaxValue)
     val capped = candidates(5)
     assert(capped < uncapped, s"cap 5 kept $capped of $uncapped candidates")
-    graft.storage.SetCatalog.deleteTree(root)
   }
 
   test("ingest near-dup under INTERLEAVED delivery: pair found when the standing id is larger") {
@@ -651,14 +642,13 @@ class StreamingSpec extends GraftSpecBase {
         "doc_id", "text")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     }
-    val root = java.nio.file.Files.createTempDirectory("graft-stind-ile")
+    val root = tempRoot("graft-stind-ile")
     val cat = new graft.storage.SetCatalog(spark, root.toString)
     // doc 21 arrives FIRST (grows the index), its near-dup doc 1 arrives
     // later with a smaller id — the pair must still emit, canonically
     assert(runOnce(cat, Seq((21L, t21), (22L, other))).isEmpty)
     assert(runOnce(cat, Seq((1L, t1))) == Set((1L, 21L)),
       "interleaved-id cross pair dropped or flipped")
-    graft.storage.SetCatalog.deleteTree(root)
   }
 
   test("auto-recap policy: growth-gated census, census-gated recap, census stays bounded") {
@@ -671,7 +661,7 @@ class StreamingSpec extends GraftSpecBase {
     def docs(lo: Long, hi: Long) = (lo until hi).map(i => (i,
       boiler + " " + (0 until 14).map(j => s"u${i}_$j").mkString(" ")))
       .toDF("doc_id", "text")
-    val root = java.nio.file.Files.createTempDirectory("graft-autorecap")
+    val root = tempRoot("graft-autorecap")
     val cat = new graft.storage.SetCatalog(spark, root.toString)
     spark.conf.set("spark.graft.dedup.ingest.autoRecap.growth", "0.5")
     spark.conf.set("spark.graft.dedup.ingest.autoRecap.maxBucket", "10")
@@ -694,7 +684,6 @@ class StreamingSpec extends GraftSpecBase {
       spark.conf.unset("spark.graft.dedup.ingest.autoRecap.growth")
       spark.conf.unset("spark.graft.dedup.ingest.autoRecap.maxBucket")
     }
-    graft.storage.SetCatalog.deleteTree(root)
   }
 
   test("ingest exact dedup under UNORDERED delivery: one representative per content") {
@@ -702,7 +691,7 @@ class StreamingSpec extends GraftSpecBase {
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     // batches arrive with ids out of order (the scaladoc's weaker
     // invariant: one representative per content — NOT minimum id)
-    val root = java.nio.file.Files.createTempDirectory("graft-sting-uno")
+    val root = tempRoot("graft-sting-uno")
     val cat = new graft.storage.SetCatalog(spark, root.toString)
     def runOnce(rows: Seq[(Long, String)]): Set[Long] = {
       val input = MemoryStream[(Long, String)]
@@ -722,7 +711,6 @@ class StreamingSpec extends GraftSpecBase {
     // index holds exactly one claim per content
     assert((first ++ second).size == 3)
     assert(cat.scanSet("t", "uno_hashes").count() == 3L)
-    graft.storage.SetCatalog.deleteTree(root)
   }
 
   test("ingest near-dup lookup prefers the arrival copy deterministically on id reuse") {
@@ -749,7 +737,7 @@ class StreamingSpec extends GraftSpecBase {
     def near(v: Seq[Float]) = v.map(x => x + 0.001f * rnd.nextGaussian().toFloat)
     val corpus = (0L until 30L).map(i => (i, vec()))
     val appended = (200L until 205L).map(i => (i, vec()))
-    val root = java.nio.file.Files.createTempDirectory("graft-stsemlive")
+    val root = tempRoot("graft-stsemlive")
     val cat = new graft.storage.SetCatalog(spark, root.toString)
     graft.operators.Dedup.persistSemanticIndex(cat, "t", "sem",
       corpus.toDF("vec_id", "embedding"), "vec_id", "embedding", nClusters = 4)
@@ -790,7 +778,6 @@ class StreamingSpec extends GraftSpecBase {
     // the appended pair was still found through the re-planned vectors
     assert(loads() == 1,
       s"append-only maintenance re-collected the codebook ${loads()}x")
-    graft.storage.SetCatalog.deleteTree(root)
   }
 
   test("semantic probe stream survives a mid-stream rebuild (new generation, no missing files)") {
@@ -800,7 +787,7 @@ class StreamingSpec extends GraftSpecBase {
     def vec() = Seq.fill(64)(rnd.nextGaussian().toFloat)
     def near(v: Seq[Float]) = v.map(x => x + 0.001f * rnd.nextGaussian().toFloat)
     val corpus = (0L until 30L).map(i => (i, vec()))
-    val root = java.nio.file.Files.createTempDirectory("graft-stsemswap")
+    val root = tempRoot("graft-stsemswap")
     val cat = new graft.storage.SetCatalog(spark, root.toString)
     graft.operators.Dedup.persistSemanticIndex(cat, "t", "sem",
       corpus.toDF("vec_id", "embedding"), "vec_id", "embedding", nClusters = 4)
@@ -831,7 +818,6 @@ class StreamingSpec extends GraftSpecBase {
     // stamp changed, so the cache re-collected exactly once more
     assert(loads() == 2,
       s"rebuild should invalidate the codebook cache once, saw ${loads()}")
-    graft.storage.SetCatalog.deleteTree(root)
   }
 
   test("codebook cache reloads across a rebuild even when the sidecar mtime is pinned equal") {
@@ -850,7 +836,7 @@ class StreamingSpec extends GraftSpecBase {
     def vec() = Seq.fill(64)(rnd.nextGaussian().toFloat)
     def near(v: Seq[Float]) = v.map(x => x + 0.001f * rnd.nextGaussian().toFloat)
     val corpus = (0L until 30L).map(i => (i, vec()))
-    val root = java.nio.file.Files.createTempDirectory("graft-stsemmtime")
+    val root = tempRoot("graft-stsemmtime")
     val cat = new graft.storage.SetCatalog(spark, root.toString)
     graft.operators.Dedup.persistSemanticIndex(cat, "t", "sem",
       corpus.toDF("vec_id", "embedding"), "vec_id", "embedding", nClusters = 4)
@@ -882,13 +868,12 @@ class StreamingSpec extends GraftSpecBase {
     assert(loads() == 2,
       "mtime-pinned rebuild did not invalidate the codebook cache — " +
         s"the stale-generation hole is back (loads=${loads()})")
-    graft.storage.SetCatalog.deleteTree(root)
   }
 
   test("exact probe stream picks up a re-persisted index generation mid-stream") {
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft-stexlive")
+    val root = tempRoot("graft-stexlive")
     val cat = new graft.storage.SetCatalog(spark, root.toString)
     graft.operators.Dedup.persistExactIndex(cat, "t", "ex",
       Seq("aaa", "bbb").toDF("txt"), "txt", numBuckets = 2)
@@ -910,7 +895,6 @@ class StreamingSpec extends GraftSpecBase {
       .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     assert(flags == Map(1L -> false, 2L -> true),
       s"per-batch index re-resolution broken: $flags")
-    graft.storage.SetCatalog.deleteTree(root)
   }
 
   test("IVF-PQ search stream sees a mid-stream append and survives a mid-stream rebuild") {
@@ -928,7 +912,7 @@ class StreamingSpec extends GraftSpecBase {
     def near(v: Seq[Float]) = v.map(x => x + 0.001f * rnd.nextGaussian().toFloat)
     val corpus = (0L until 40L).map(i => (i, vec()))
     val appended = (200L until 210L).map(i => (i, vec()))
-    val root = java.nio.file.Files.createTempDirectory("graft-stivfpqsearch")
+    val root = tempRoot("graft-stivfpqsearch")
     val cat = new graft.storage.SetCatalog(spark, root.toString)
     graft.operators.SimilaritySearch.buildIvfPqIndex(spark, cat, "t", "ix",
       corpus.toDF("vec_id", "embedding"))
@@ -979,7 +963,6 @@ class StreamingSpec extends GraftSpecBase {
       s"search after a mid-stream rebuild failed on the new generation: $top")
     assert(loads() == ((2, 2)),
       s"rebuild should re-decode each model exactly once, saw ${loads()}")
-    graft.storage.SetCatalog.deleteTree(root)
   }
 
   test("IVF search stream: mid-stream append visible, rebuild survived") {
@@ -990,7 +973,7 @@ class StreamingSpec extends GraftSpecBase {
     def near(v: Seq[Float]) = v.map(x => x + 0.001f * rnd.nextGaussian().toFloat)
     val corpus = (0L until 40L).map(i => (i, vec()))
     val appended = (300L until 305L).map(i => (i, vec()))
-    val root = java.nio.file.Files.createTempDirectory("graft-stivfsearch")
+    val root = tempRoot("graft-stivfsearch")
     val cat = new graft.storage.SetCatalog(spark, root.toString)
     graft.operators.SimilaritySearch.buildIvfIndex(spark, cat, "t", "iv",
       corpus.toDF("vec_id", "embedding"))
@@ -1022,7 +1005,6 @@ class StreamingSpec extends GraftSpecBase {
       s"IVF search after a mid-stream rebuild broke: $top")
     assert(loads() == 2,
       s"expected one build-time collect + one rebuild re-collect, saw ${loads()}")
-    graft.storage.SetCatalog.deleteTree(root)
   }
 
   test("PQ search stream: mid-stream append visible, rebuild re-collects") {
@@ -1037,7 +1019,7 @@ class StreamingSpec extends GraftSpecBase {
     def near(v: Seq[Float]) = v.map(x => x + 0.001f * rnd.nextGaussian().toFloat)
     val corpus = (0L until 40L).map(i => (i, vec()))
     val appended = (400L until 405L).map(i => (i, vec()))
-    val root = java.nio.file.Files.createTempDirectory("graft-stpqsearch")
+    val root = tempRoot("graft-stpqsearch")
     val cat = new graft.storage.SetCatalog(spark, root.toString)
     graft.operators.SimilaritySearch.buildPqIndex(spark, cat, "t", "pq",
       corpus.toDF("vec_id", "embedding"))
@@ -1078,7 +1060,6 @@ class StreamingSpec extends GraftSpecBase {
       s"PQ search after a mid-stream rebuild broke: $top")
     assert(loads() == 2,
       s"expected one build-time collect + one rebuild re-collect, saw ${loads()}")
-    graft.storage.SetCatalog.deleteTree(root)
   }
 
   test("stream-stream interval join == batch interval join") {
