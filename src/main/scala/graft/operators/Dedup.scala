@@ -260,7 +260,9 @@ object Dedup {
     * demands the full match), the CORPUS side — the side that dwarfs
     * every arriving batch at 100 TB — re-shuffles in neither.
     * Session-survivable, unlike the in-memory index's executor-pinned
-    * caches.
+    * caches: the sets live in the catalog's root alone (files plus
+    * sidecar), so the next application opening the same root probes
+    * the same index.
     *
     * Bucket-count choice ([[indexBuckets]], sized from the band set,
     * the index's larger side): an explicit `numBuckets` wins; otherwise
@@ -302,8 +304,8 @@ object Dedup {
       threshold: Double = 0.8, k: Int = 128, bands: Int = 32,
       shingleN: Int = 2): DataFrame =
     crossPairsAgainstIndex(newDocs,
-      catalog.scanBucketedSet(db, s"${name}_sets"),
-      catalog.scanBucketedSet(db, s"${name}_bands"),
+      catalog.scanSet(db, s"${name}_sets"),
+      catalog.scanSet(db, s"${name}_bands"),
       idCol, textCol, threshold, k, bands, shingleN)
 
   /** Near-dup pairs of `newDocs` AGAINST a [[corpusLshIndex]] — the
@@ -1289,7 +1291,7 @@ object Dedup {
   private def scanKeyedSet(catalog: graft.storage.SetCatalog, db: String,
       set: String, key: String, expected: org.apache.spark.sql.types.DataType)(
       drifted: org.apache.spark.sql.types.DataType => String): DataFrame = {
-    val keys = catalog.scanBucketedSet(db, set)
+    val keys = catalog.scanSet(db, set)
     val stored = keys.schema(key).dataType
     require(stored == expected, drifted(stored))
     keys

@@ -1,14 +1,13 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.catalyst.expressions.{Alias, NamedExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, V2WriteCommand}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
-import graft.storage.GraftCatalog
+import graft.storage.{GraftCatalog, SetCatalog}
 
 /** Analyzer rule restoring the co-partitioned "local join" fast path for
   * sets reached THROUGH THE SQL CATALOG (`graft.<db>.<set>`).
@@ -23,16 +22,20 @@ import graft.storage.GraftCatalog
   * without this rule `graft.db.a ⋈ graft.db.b` re-shuffles both sides.
   *
   * The rule rewrites each READ of a bucketed set (recorded in the set's
-  * sidecar meta) into the classic bucket-aware file-source relation — the
-  * same physical path `SetCatalog.scanBucketedSet` uses — carrying
-  * `BucketSpec(n, key, key)`. The file-source planner then derives
+  * sidecar) into the bucket-aware file-source relation
+  * [[graft.storage.SetCatalog.scanSet]] reads — the same
+  * [[graft.storage.SetCatalog.fileRelation]], given the DSv2 relation's
+  * declared schema so the two can never diverge in types or
+  * nullability. The file-source planner then derives
   * `HashPartitioning(key, n)` from the bucket ids baked into the file
   * names, and `EnsureRequirements` elides both exchanges of a same-key
-  * same-n join. Non-bucketed sets keep the native DSv2 scan (its
-  * pushdown/pruning is asserted by CatalogSpec); write commands are left
-  * untouched — bucketed sets are written by `createBucketedSet`, not SQL
-  * INSERT. Pushdown survives the rewrite because v1 file-source pruning
-  * and filter pushdown happen at physical planning, after this rule.
+  * same-n join. The relation is built per analysis, so its file listing
+  * is always the sidecar's current generation. Non-bucketed sets keep
+  * the native DSv2 scan (its pushdown/pruning is asserted by
+  * CatalogSpec); write commands are left untouched — bucketed sets are
+  * written by `createBucketedSet`, not SQL INSERT. Pushdown survives the
+  * rewrite because v1 file-source pruning and filter pushdown happen at
+  * physical planning, after this rule.
   */
 case class BucketedSetReads(spark: SparkSession) extends Rule[LogicalPlan] {
 
@@ -44,73 +47,25 @@ case class BucketedSetReads(spark: SparkSession) extends Rule[LogicalPlan] {
       case r: DataSourceV2Relation if !writeTargets.contains(r) =>
         (r.catalog, r.identifier) match {
           case (Some(cat: GraftCatalog), Some(ident)) =>
-            cat.bucketLayoutOf(ident)
-              .flatMap { case (path, bcols, n) => rewrite(r, path, bcols, n) }
+            cat.bucketedSet(ident)
+              .flatMap { case (path, m) => rewrite(r, LogicalRelation(
+                SetCatalog.fileRelation(spark, path, Some(m), Some(r.schema)))) }
               .getOrElse(r)
           case _ => r
         }
     }
   }
 
-  // The v1 bucket-aware relation is expensive to build — a file listing
-  // per analysis pass, and this rule fires for every query touching a
-  // bucketed set — so cache it per layout, ONE entry per (path, cols,
-  // n): a superseded generation is replaced, not retained, so a
-  // standing pipeline that rebuilds its set does not accumulate a file
-  // index per generation. Each use takes a fresh instance (new
-  // attribute ids) so self-joins deduplicate normally. The DSv2
-  // relation's DECLARED schema is passed to the v1 read, so schema
-  // inference can never diverge (types/nullability) from the relation
-  // being replaced. Freshness check: the directory's mtime at NANOSECOND
-  // resolution (file create/delete/rename inside it bumps it) — one
-  // stat call per analysis instead of a full listing; on a filesystem
-  // with coarse mtime granularity two overwrites inside one tick could
-  // still alias, the residual risk of any stamp scheme short of
-  // re-listing.
-  private val relationCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Seq[String], Int), (Long, LogicalRelation)]()
-
-  // Assumes the local flat layout createBucketedSet writes (all bucket
-  // files direct children of `path`, no scheme prefix): a nested or
-  // partitioned layout would need a Hadoop FileSystem stat per leaf dir.
-  // NonFatal (not just IOException) because Paths.get throws
-  // InvalidPathException — a RuntimeException — on scheme-qualified
-  // paths (hdfs://, s3a://); -1 means "unknown", forcing a rebuild.
-  private def dirStamp(path: String): Long =
-    try java.nio.file.Files.getLastModifiedTime(
-      java.nio.file.Paths.get(path)).to(java.util.concurrent.TimeUnit.NANOSECONDS)
-    catch { case scala.util.control.NonFatal(_) => -1L }
-
   private def rewrite(
-      r: DataSourceV2Relation, path: String, bucketCols: Seq[String],
-      numBuckets: Int): Option[LogicalPlan] = {
-    val key = (path, bucketCols, numBuckets)
-    val stamp = dirStamp(path)
-    val template = Option(relationCache.get(key))
-      .collect { case (s, rel) if s == stamp => rel }
-      .orElse {
-        val built = spark.read.schema(r.schema).parquet(path)
-          .queryExecution.analyzed.collectFirst {
-            case lr: LogicalRelation
-                if lr.relation.isInstanceOf[HadoopFsRelation] =>
-              val fs = lr.relation.asInstanceOf[HadoopFsRelation]
-              lr.copy(relation = fs.copy(bucketSpec =
-                Some(BucketSpec(numBuckets, bucketCols, bucketCols)))(spark))
-          }
-        built.foreach(rel => relationCache.put(key, (stamp, rel)))
-        built
-      }
-    template.flatMap { cached =>
-      val newRel = cached.newInstance()
-      val resolver = spark.sessionState.conf.resolver
-      // re-expose the DSv2 relation's attribute ids so references above
-      // the rewritten scan stay bound
-      val proj: Seq[Option[NamedExpression]] = r.output.map { o =>
-        newRel.output.find(a => resolver(a.name, o.name))
-          .map(a => Alias(a, o.name)(exprId = o.exprId, qualifier = o.qualifier))
-      }
-      if (proj.exists(_.isEmpty)) None
-      else Some(Project(proj.flatten, newRel))
+      r: DataSourceV2Relation, newRel: LogicalRelation): Option[LogicalPlan] = {
+    val resolver = spark.sessionState.conf.resolver
+    // re-expose the DSv2 relation's attribute ids so references above
+    // the rewritten scan stay bound
+    val proj: Seq[Option[NamedExpression]] = r.output.map { o =>
+      newRel.output.find(a => resolver(a.name, o.name))
+        .map(a => Alias(a, o.name)(exprId = o.exprId, qualifier = o.qualifier))
     }
+    if (proj.exists(_.isEmpty)) None
+    else Some(Project(proj.flatten, newRel))
   }
 }

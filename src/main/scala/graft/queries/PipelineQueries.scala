@@ -146,24 +146,23 @@ object PipelineQueries {
   }
 
   /** Memoized standing LSH index for the probe-only registry form: one
-    * build per (session, sfDir), so [[ddCrossProbe]]'s second bench pass
-    * (the per-query MIN under the min-of-2 convention) times the pure
-    * probe — the amortized production path, where the index build is
-    * one-time by design. Keyed by session identity too: a catalog scan
-    * can only join frames from the session that opened it.
+    * build per sfDir, so [[ddCrossProbe]]'s second bench pass (the
+    * per-query MIN under the min-of-2 convention) times the pure probe
+    * — the amortized production path, where the index build is
+    * one-time by design. Each entry is (root, building session, its
+    * catalog): the building session probes through that catalog, whose
+    * schema memo spares every probe a footer-inference job per stored
+    * set; the index is files and sidecars under the root alone, so
+    * another session reads it through a catalog of its own. The reaper
+    * drops the entries, and with them the session, when the
+    * application ends.
     */
-  private val crossIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (String, String), String]()
+  private val crossIndexCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (String, SparkSession, graft.storage.SetCatalog)]()
 
   /** One listener per SparkContext reaps the cache when the application
-    * ends: entries and their temp-dir catalogs are deleted, so a stopped
-    * context pins nothing for the rest of the JVM. The cache itself
-    * holds only STRINGS (sessionId, sfDir) → root path — never a
-    * SetCatalog or SparkSession — so even before the listener fires,
-    * a stopped session is reclaimable by the GC through the weak
-    * [[sessionIds]] map (the round-10 leak: a cached catalog strongly
-    * referenced its session, defeating the weak map).
+    * ends: entries and their temp-dir catalogs are deleted, so a
+    * stopped context leaves no temp root for the rest of the JVM.
     */
   private val reaperInstalled =
     java.util.Collections.newSetFromMap(
@@ -177,7 +176,7 @@ object PipelineQueries {
               end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
             val it = crossIndexCache.entrySet().iterator()
             while (it.hasNext) {
-              val root = it.next().getValue
+              val root = it.next().getValue._1
               it.remove()
               try graft.storage.SetCatalog.deleteTree(java.nio.file.Paths.get(root))
               catch { case _: Exception => () }
@@ -186,59 +185,30 @@ object PipelineQueries {
         })
     }
 
-  /** Collision-free session identity for the cache key: a generated
-    * UUID per live session OBJECT (SparkSession keeps reference
-    * equality, so the weak map keys by identity — identityHashCode
-    * alone can collide across sessions in one JVM, and the session's
-    * own UUID is private[sql]). Weak keys let a stopped session's
-    * entry vanish with the session.
-    */
-  private val sessionIds =
-    new java.util.WeakHashMap[SparkSession, String]()
-  private def sessionId(spark: SparkSession): String =
-    sessionIds.synchronized {
-      sessionIds.computeIfAbsent(
-        spark, _ => java.util.UUID.randomUUID().toString)
-    }
-
   /** The PROBE-ONLY split of [[ddCrossIndexed]]: identical match (same
     * kernels, same oracle), but the standing index builds once per
-    * session and every subsequent call only pays the arrival-side probe
+    * sfDir and every subsequent call only pays the arrival-side probe
     * — registering the two halves separately keeps the artifact's most
     * expensive dedup number from conflating a one-time build with the
     * per-batch cost a production ingest actually pays. Cache entries
-    * live for the session (that is the point of a standing index) and
-    * are reaped — entry and temp dir both — when the application ends
-    * (see [[installReaper]]).
+    * live for the application (that is the point of a standing index)
+    * and are reaped — entry and temp dir both — when it ends (see
+    * [[installReaper]]).
     */
   def ddCrossProbe(spark: SparkSession, d: String): DataFrame = {
-    // the db name must be unique per cache key: bucketed sets register
-    // `${db}_$set` in the session catalog, whose names every caller in
-    // the JVM shares, so a fixed db would let one standing index rebind
-    // another's tables. md5 over the full (sessionId, sfDir) key —
-    // unlike a 32-bit hashCode fold, two distinct sfDirs cannot
-    // silently rebind each other's tables.
-    val key = (sessionId(spark), d)
-    val db = "ddp" + java.security.MessageDigest.getInstance("MD5")
-      .digest(s"${key._1}|${key._2}".getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
     installReaper(spark)
-    val root = crossIndexCache.computeIfAbsent(key, _ => {
-      val r = java.nio.file.Files.createTempDirectory("graft-lshp")
-      Dedup.persistLshIndex(new graft.storage.SetCatalog(spark, r.toString),
-        db, "corpus",
+    val (root, owner, built) = crossIndexCache.computeIfAbsent(d, _ => {
+      val r = java.nio.file.Files.createTempDirectory("graft-lshp").toString
+      val cat = new graft.storage.SetCatalog(spark, r)
+      Dedup.persistLshIndex(cat, "ddp", "corpus",
         Tables.documents(spark, d).filter(col("doc_id") < 250),
         "doc_id", "text")
-      r.toString
+      (r, spark, cat)
     })
-    // a SetCatalog is a stateless handle (session + root path); rebuilding
-    // it per call keeps the cache free of session references — the index
-    // state that matters lives on disk and in the session catalog's
-    // bucketed-table entries, both addressed by (root, db) alone
-    val cat = new graft.storage.SetCatalog(spark, root)
+    val cat = if (owner eq spark) built else new graft.storage.SetCatalog(spark, root)
     Dedup.crossPairsAgainstStoredIndex(
       Tables.documents(spark, d).filter(col("doc_id") >= 250),
-      cat, db, "corpus", "doc_id", "text", threshold = 0.8)
+      cat, "ddp", "corpus", "doc_id", "text", threshold = 0.8)
   }
 
   /** Ingest-time EXACT dedup against a catalog-persisted content-hash

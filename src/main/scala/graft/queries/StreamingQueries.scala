@@ -473,7 +473,7 @@ object StreamingQueries {
     * same overlap pipe_all's branch heads use). Results unchanged.
     * Every build finishes before a failure is rethrown, so no build
     * still writes into a catalog its caller is cleaning up. Returns
-    * the guarded scans (not raw scanBucketedSet): a schema-drifted
+    * the guarded scans (not raw scanSet): a schema-drifted
     * index fails fast here instead of silently matching nothing —
     * the same contract as the sibling streaming probes.
     */

@@ -51,12 +51,14 @@ private[storage] class ReadOnlyTable(delegate: Table)
 class GraftCatalog extends TableCatalog with SupportsNamespaces {
   private var catalogName: String = _
   private var root: String = _
+  /** The one owner of the root's set directories and sidecars. */
+  private var sets: SetCatalog = _
 
   override def initialize(name: String, options: CaseInsensitiveStringMap): Unit = {
     catalogName = name
     root = Option(options.get("root"))
       .getOrElse(sys.props("java.io.tmpdir") + "/graft-sets")
-    Files.createDirectories(Paths.get(root))
+    sets = new SetCatalog(spark, root)
     // Standing-pipeline posture by DEFAULT (VERDICT r15 next #8): this
     // catalog OWNS its root — every set under it was created by graft's
     // own DDL or lifecycle machinery — so a driver restart closes any
@@ -67,7 +69,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     // (e.g. a read-only inspector of a live pipeline's root —
     // single-writer contract in SetCatalog.recoverAll's scaladoc).
     if (Option(options.get("recoverOnOpen")).forall(_.toBoolean)) {
-      val healed = new SetCatalog(spark, root).recoverAllDbs()
+      val healed = sets.recoverAllDbs()
       if (healed.nonEmpty)
         System.err.println(
           s"[graft] catalog $name healed at open: ${healed.mkString(", ")}")
@@ -84,40 +86,28 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     ident.namespace()(0)
   }
   private def dir(ident: Identifier): java.nio.file.Path =
-    Paths.get(root, s"${db(ident)}.${ident.name()}")
-  private def metaPath(ident: Identifier): java.nio.file.Path =
-    Paths.get(root, s"${db(ident)}.${ident.name()}.meta")
+    Paths.get(sets.dir(db(ident), ident.name()))
   private def schemaPath(ident: Identifier): java.nio.file.Path =
-    Paths.get(root, s"${db(ident)}.${ident.name()}.schema")
+    Paths.get(s"${sets.dir(db(ident), ident.name())}.schema")
 
-  /** Bucket layout recorded by [[SetCatalog.createBucketedSet]]'s sidecar
-    * meta, surfaced so the analyzer rule (graft.plans.BucketedSetReads)
-    * can re-plan SQL reads of `graft.<db>.<set>` with the bucket spec —
-    * without it, two co-bucketed sets joined through the SQL catalog
-    * would re-shuffle, losing the engine's local-join payoff (reference:
-    * src/builtInPDBObjects/headers/ScanUserSet.h:69-76). Returns
-    * (data path, bucket columns, bucket count) for bucketed sets only —
-    * composite bucket keys are recorded comma-joined in the sidecar.
+  /** The data path and sidecar of `ident` when it is a bucketed set —
+    * what the analyzer rule (graft.plans.BucketedSetReads) re-plans SQL
+    * reads of `graft.<db>.<set>` with, so two co-bucketed sets joined
+    * through the SQL catalog keep the engine's local-join payoff
+    * (reference: src/builtInPDBObjects/headers/ScanUserSet.h:69-76).
     */
-  def bucketLayoutOf(ident: Identifier): Option[(String, Seq[String], Int)] = {
-    if (ident.namespace().length != 1) return None
-    val p = metaPath(ident)
-    if (!Files.exists(p)) return None
-    val lines = Files.readString(p).split("\n", -1)
-    if (lines.length > 3 && lines(3) == "bucket" && lines(0).nonEmpty)
-      Some((dir(ident).toString, lines(0).split(",").toSeq, lines(1).toInt))
-    else None
-  }
+  private[graft] def bucketedSet(ident: Identifier): Option[(String, SetMeta)] =
+    if (ident.namespace().length != 1) None
+    else sets.meta(db(ident), ident.name()).filter(_.policy == "bucket")
+      .map(m => (dir(ident).toString, m))
 
   // -- tables ---------------------------------------------------------
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     if (namespace.length != 1) throw new NoSuchNamespaceException(namespace)
-    val prefix = namespace(0) + "."
-    Files.list(Paths.get(root)).iterator().asScala
-      .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith(prefix))
-      .map(p => Identifier.of(namespace, p.getFileName.toString.stripPrefix(prefix)))
-      .toArray
+    sets.listSets().collect {
+      case (d, set) if d == namespace(0) => Identifier.of(namespace, set)
+    }.toArray
   }
 
   override def loadTable(ident: Identifier): Table = {
@@ -144,7 +134,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     // sets are read-only through SQL; rewrites go through
     // SetCatalog.createBucketedSet (the reference's dispatcher likewise
     // owns placement — data enters a partitioned set only through it).
-    if (bucketLayoutOf(ident).isDefined) new ReadOnlyTable(table) else table
+    if (bucketedSet(ident).isDefined) new ReadOnlyTable(table) else table
   }
 
   override def createTable(
@@ -155,9 +145,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
       "graft catalog: partition transforms are chosen by the placement " +
         "advisor at write time, not declared in DDL")
     Files.createDirectories(dir(ident))
-    // sidecar meta mirrors SetCatalog.createSet defaults; rows filled by
-    // the first write (CTAS) are unknown at DDL time
-    Files.writeString(metaPath(ident), "\n0\n0\nnone\n\n")
+    // rows filled by the first write (CTAS) are unknown at DDL time
+    sets.writeMeta(db(ident), ident.name(), SetMeta(None, 0, 0L, "none"))
     Files.writeString(schemaPath(ident), schema.json)
     ParquetTable(
       s"$catalogName.${db(ident)}.${ident.name()}", spark,
@@ -172,8 +161,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
   override def dropTable(ident: Identifier): Boolean = {
     val path = dir(ident)
     if (!Files.isDirectory(path)) return false
-    SetCatalog.deleteTree(path)
-    Files.deleteIfExists(metaPath(ident))
+    sets.removeSet(db(ident), ident.name())
     Files.deleteIfExists(schemaPath(ident))
     true
   }
@@ -182,8 +170,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     if (!Files.isDirectory(dir(oldIdent))) throw new NoSuchTableException(oldIdent)
     if (Files.isDirectory(dir(newIdent))) throw new TableAlreadyExistsException(newIdent)
     Files.move(dir(oldIdent), dir(newIdent))
-    if (Files.exists(metaPath(oldIdent)))
-      Files.move(metaPath(oldIdent), metaPath(newIdent))
+    val metaOf = (i: Identifier) => Paths.get(sets.metaPath(db(i), i.name()))
+    if (Files.exists(metaOf(oldIdent))) Files.move(metaOf(oldIdent), metaOf(newIdent))
     if (Files.exists(schemaPath(oldIdent)))
       Files.move(schemaPath(oldIdent), schemaPath(newIdent))
   }

@@ -2,11 +2,13 @@ package graft.storage
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.catalyst.plans.logical.CommandResult
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.DataSource
+import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
 
 /** `files` is the set's data-file count, maintained incrementally by the
@@ -146,47 +148,43 @@ object SetCatalog {
   /** Run `body` against a throwaway catalog and return its result
     * materialized: the lifecycle of every query that builds an index
     * only to answer itself. The body gets a catalog on a fresh temp
-    * root and a fresh db name, alphanumeric because a bucketed set
-    * registers `${db}_$set` in the session catalog, whose names are
-    * shared by every caller in the JVM; a fresh name per call keeps
-    * concurrent calls off each other's entries. The result is
-    * checkpointed once, while the sets it reads still exist. Then,
-    * whether the body returned or threw, every set under the root is
-    * removed (which drops its session-catalog entry) and the root
-    * deleted. A cleanup failure after a body failure is attached to
-    * the body's exception as suppressed.
+    * root and the db name to store under; every set lives in that root
+    * alone, so concurrent calls never see each other's sets. The
+    * result is checkpointed once, while the sets it reads still exist.
+    * Then, whether the body returned or threw, the root is deleted. A
+    * cleanup failure after a body failure is attached to the body's
+    * exception as suppressed.
     */
   def scratch(spark: SparkSession)(
       body: (SetCatalog, String) => DataFrame): DataFrame = {
     val root = Files.createTempDirectory("graft-scratch")
-    val cat = new SetCatalog(spark, root.toString)
-    val db = "s" + java.util.UUID.randomUUID().toString.replace("-", "")
     var failure: Throwable = null
-    try body(cat, db).localCheckpoint(true)
+    try body(new SetCatalog(spark, root.toString), "scratch").localCheckpoint(true)
     catch { case t: Throwable => failure = t; throw t }
     finally {
-      try {
-        try cat.listSets().foreach { case (d, s) => cat.removeSet(d, s) }
-        finally deleteTree(root)
-      } catch {
+      try deleteTree(root)
+      catch {
         case c: Throwable if failure != null => failure.addSuppressed(c)
       }
     }
   }
 
-  /** Append `batch` as parquet under `path` (partitioned by
-    * `partitionColumn` when given) and return the (rows, files) the
-    * write job produced, read off the write command's own metrics. The
-    * command is planned as `DataFrameWriter.save` plans it; running it
-    * through a QueryExecution kept here is what makes its executed
-    * plan, and so its metrics, reachable.
+  /** Write `batch` as parquet under `path` with `mode` (partitioned by
+    * `partitionColumn`, or bucketed by `bucketSpec`, when given) and
+    * return the (rows, files) the write job produced, read off the
+    * write command's own metrics. The command is planned as
+    * `DataFrameWriter.save` plans it; running it through a
+    * QueryExecution kept here is what makes its executed plan, and so
+    * its metrics, reachable.
     */
-  private[storage] def appendCounted(spark: SparkSession, batch: DataFrame,
-      path: String, partitionColumn: Option[String]): (Long, Long) = {
+  private[storage] def writeCounted(spark: SparkSession, batch: DataFrame,
+      path: String, mode: SaveMode, partitionColumn: Option[String] = None,
+      bucketSpec: Option[BucketSpec] = None): (Long, Long) = {
     val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val write = DataSource(session, "parquet",
-      partitionColumns = partitionColumn.toSeq, options = Map("path" -> path))
-      .planForWriting(SaveMode.Append, batch.queryExecution.analyzed)
+      partitionColumns = partitionColumn.toSeq, bucketSpec = bucketSpec,
+      options = Map("path" -> path))
+      .planForWriting(mode, batch.queryExecution.analyzed)
     val qe = session.sessionState.executePlan(write)
     qe.assertCommandExecuted()
     val metrics = qe.commandExecuted match {
@@ -195,7 +193,28 @@ object SetCatalog {
     }
     metrics.map(m => (m("numOutputRows").value, m("numFiles").value))
       .getOrElse(throw new IllegalStateException(
-        s"append to $path ran no file-writing command"))
+        s"write to $path ran no file-writing command"))
+  }
+
+  /** The parquet relation over the set files at `path`, read under
+    * `schema` when given (else inferred from the footers). When the
+    * sidecar `m` says `bucket`, the relation carries the recorded
+    * `BucketSpec(n, cols, cols)`: the planner then derives
+    * `HashPartitioning(cols, n)` from the bucket ids in the file names,
+    * so an equi-join on exactly those columns against a set bucketed
+    * the same way plans with no exchange on either side. The one read
+    * route of [[SetCatalog.scanSet]] and of the SQL catalog's bucketed
+    * reads ([[graft.plans.BucketedSetReads]]).
+    */
+  private[graft] def fileRelation(spark: SparkSession, path: String,
+      m: Option[SetMeta], schema: Option[StructType]): BaseRelation = {
+    val bucketSpec = m.filter(_.policy == "bucket").map { b =>
+      val cols = b.partitionColumn.toSeq.flatMap(_.split(","))
+      BucketSpec(b.numPartitions, cols, cols)
+    }
+    DataSource(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      "parquet", userSpecifiedSchema = schema, bucketSpec = bucketSpec,
+      options = Map("path" -> path)).resolveRelation()
   }
 
   private final case class Memo(
@@ -253,9 +272,8 @@ object SetCatalog {
   *
   * Scale note: a bucketed saved set is what makes later equi-joins on the
   * bucket column shuffle-free (the reference's "local join" fast path,
-  * ScanUserSet.h:69-76) — Spark reads the bucket spec from the metastore;
-  * for path-based tables we record it and re-apply `repartition` on read so
-  * co-partitioned joins avoid one exchange side.
+  * ScanUserSet.h:69-76). Its bucket spec lives in the sidecar like every
+  * other layout, and [[scanSet]] attaches it to the read.
   *
   * `recoverDbsOnOpen`: databases to run [[recoverAll]] over at
   * construction — the standing-pipeline posture (every open closes any
@@ -268,7 +286,7 @@ final class SetCatalog(spark: SparkSession, root: String,
     recoverDbsOnOpen: Seq[String] = Nil) {
 
   private[graft] def dir(db: String, set: String) = s"$root/$db.$set"
-  private def metaPath(db: String, set: String) = s"${dir(db, set)}.meta"
+  private[storage] def metaPath(db: String, set: String) = s"${dir(db, set)}.meta"
 
   /** What the catalog already knows about ONE generation of a set: its
     * read schema (so [[scanSet]] skips the parquet footer-inference
@@ -329,14 +347,16 @@ final class SetCatalog(spark: SparkSession, root: String,
     memo.synchronized(decodes.getOrElse((db, set), 0))
 
   /** The written set's read schema, seeded into the memo for the
-    * generation a create just wrote (its row count read inferred it).
+    * generation a create just wrote (its row count read inferred it,
+    * or, for a bucketed set, the frame it wrote carries it).
     */
   private def seedSchema(db: String, set: String, written: DataFrame): Unit =
     remember(db, set, metaStamp(db, set), Some(written.schema), Map.empty)
 
-  private[storage] def writeMeta(db: String, set: String, col: Option[String],
-      n: Int, rows: Long, policy: String, shares: Seq[Int] = Nil,
-      files: Long = 0L, staging: Boolean = false): Unit = {
+  /** Write `m` as the sidecar of `db.set`; `m.generation` is ignored
+    * and replaced by the next generation.
+    */
+  private[storage] def writeMeta(db: String, set: String, m: SetMeta): Unit = {
     // Explicit generation witness (see SetMeta): strictly above the
     // sidecar's previous value (per-path monotone, whatever the clock
     // does across sessions) AND at least the JVM monotonic clock — so
@@ -348,8 +368,9 @@ final class SetCatalog(spark: SparkSession, root: String,
     val gen = math.max(
       meta(db, set).map(_.generation).getOrElse(0L) + 1L, System.nanoTime())
     Files.writeString(Paths.get(metaPath(db, set)),
-      s"${col.getOrElse("")}\n$n\n$rows\n$policy\n${shares.mkString(",")}\n" +
-        s"$files\n${if (staging) "staging" else ""}\n$gen\n")
+      s"${m.partitionColumn.getOrElse("")}\n${m.numPartitions}\n${m.rows}\n" +
+        s"${m.policy}\n${m.nodeShares.mkString(",")}\n${m.files}\n" +
+        s"${if (m.staging) "staging" else ""}\n$gen\n")
   }
 
   /** Count a set directory's data files — used by the CREATE paths to
@@ -393,26 +414,27 @@ final class SetCatalog(spark: SparkSession, root: String,
     forget(db, set)
     out.write.mode(SaveMode.Overwrite).parquet(dir(db, set))
     val written = spark.read.parquet(dir(db, set))
-    writeMeta(db, set, partitionColumn,
+    writeMeta(db, set, SetMeta(partitionColumn,
       if (policy == "fair") shares.sum else n, written.count(), policy,
-      shares, countDataFiles(db, set))
+      shares, countDataFiles(db, set)))
     seedSchema(db, set, written)
   }
 
   /** The set's current files, read under the memoized schema of its
     * sidecar generation when the catalog has one (no inference job),
     * else with plain parquet inference, whose result is then memoized.
-    * Sidecar-less directories are never memoized.
+    * A bucketed set's read carries its sidecar's bucket spec
+    * ([[SetCatalog.fileRelation]]). One sidecar read per call;
+    * sidecar-less directories are never memoized.
     */
   def scanSet(db: String, set: String): DataFrame = {
-    val gen = metaStamp(db, set)
-    memoAt(db, set, gen).flatMap(_.schema) match {
-      case Some(s) => spark.read.schema(s).parquet(dir(db, set))
-      case None =>
-        val df = spark.read.parquet(dir(db, set))
-        remember(db, set, gen, Some(df.schema), Map.empty)
-        df
-    }
+    val m = meta(db, set)
+    val gen = stampOf(db, set, m)
+    val known = memoAt(db, set, gen).flatMap(_.schema)
+    val df = spark.baseRelationToDataFrame(
+      SetCatalog.fileRelation(spark, dir(db, set), m, known))
+    if (known.isEmpty) remember(db, set, gen, Some(df.schema), Map.empty)
+    df
   }
 
   /** [[scanSet]] with parquet schema merging — for sets whose schema
@@ -457,12 +479,11 @@ final class SetCatalog(spark: SparkSession, root: String,
       batch: DataFrame, partitionColumn: Option[String]): Unit = {
     val prior = memoAt(db, set, metaStamp(db, set)).flatMap(_.schema)
     forget(db, set)
-    val (rows, newFiles) =
-      SetCatalog.appendCounted(spark, batch, dir(db, set), partitionColumn)
+    val (rows, newFiles) = SetCatalog.writeCounted(spark, batch, dir(db, set),
+      SaveMode.Append, partitionColumn)
     val files = if (m.files > 0) m.files + newFiles
       else countDataFiles(db, set)
-    writeMeta(db, set, m.partitionColumn, m.numPartitions, m.rows + rows,
-      m.policy, m.nodeShares, files, m.staging)
+    writeMeta(db, set, m.copy(rows = m.rows + rows, files = files))
     prior.filter(SetCatalog.readsAs(batch.schema, _, partitionColumn))
       .foreach(s => remember(db, set, metaStamp(db, set), Some(s), Map.empty))
     maybeAutoCompact(db, set, files)
@@ -490,9 +511,8 @@ final class SetCatalog(spark: SparkSession, root: String,
       // itself is about to pay anyway; between crossings the counter
       // stays listing-free.
       val actual = countDataFiles(db, set)
-      if (actual != files) meta(db, set).foreach(m =>
-        writeMeta(db, set, m.partitionColumn, m.numPartitions, m.rows,
-          m.policy, m.nodeShares, actual, m.staging))
+      if (actual != files)
+        meta(db, set).foreach(m => writeMeta(db, set, m.copy(files = actual)))
       if (actual > trigger) compactSet(db, set)
     }
   }
@@ -569,8 +589,7 @@ final class SetCatalog(spark: SparkSession, root: String,
     Files.move(tmp, src)
     rmTree(old)
     // layout and row count are preserved; only the file tiling changed
-    writeMeta(db, set, m.partitionColumn, m.numPartitions, m.rows,
-      m.policy, m.nodeShares, countDataFiles(db, set), m.staging)
+    writeMeta(db, set, m.copy(files = countDataFiles(db, set)))
   }
 
   /** Directory-partitioned set: one subdirectory per distinct value of
@@ -588,8 +607,8 @@ final class SetCatalog(spark: SparkSession, root: String,
       .partitionBy(partitionColumn)
       .parquet(dir(db, set))
     val written = spark.read.parquet(dir(db, set))
-    writeMeta(db, set, Some(partitionColumn), 0, written.count(), "dirpart",
-      files = countDataFiles(db, set))
+    writeMeta(db, set, SetMeta(Some(partitionColumn), 0, written.count(),
+      "dirpart", files = countDataFiles(db, set)))
     seedSchema(db, set, written)
   }
 
@@ -620,14 +639,17 @@ final class SetCatalog(spark: SparkSession, root: String,
       Some(partitionColumn))
   }
 
-  /** Bucketed set via the session catalog: `bucketBy` + `sortBy` on the
-    * key, so a later equi-join between two sets bucketed on the same key
-    * with the same bucket count plans with NO shuffle exchange on either
-    * side — the reference's co-partitioned "local join" fast path, which
-    * is the point of the Lachesis placement layer (reference:
+  /** Bucketed set: `bucketBy` + `sortBy` on the key, written by path
+    * like every other set, with the bucket spec recorded in the sidecar
+    * and re-attached by [[scanSet]]. A later equi-join between two sets
+    * bucketed on the same key with the same bucket count plans with NO
+    * shuffle exchange on either side — the reference's co-partitioned
+    * "local join" fast path, which is the point of the Lachesis
+    * placement layer (reference:
     * src/builtInPDBObjects/headers/ScanUserSet.h:69-76
     * isFollowedByLocalJoin → PartitionedVectorTupleSetIterator;
-    * SURVEY.md §4.2).
+    * SURVEY.md §4.2). Nothing outside the root knows the set: it reads
+    * the same from another catalog on the root, or after a restart.
     */
   def createBucketedSet(db: String, set: String, df: DataFrame,
       bucketColumn: String, numBuckets: Int): Unit =
@@ -638,12 +660,12 @@ final class SetCatalog(spark: SparkSession, root: String,
     * join key set to match the bucket columns
     * (`spark.sql.requireAllClusterKeysForCoPartition` default), so a set
     * joined on a composite key — e.g. the LSH band set's (band, bkey) —
-    * must be bucketed on the composite, not a subset.
+    * must be bucketed on the composite, not a subset. Rows and files
+    * come from the write command's own metrics.
     */
   def createBucketedSet(db: String, set: String, df: DataFrame,
       bucketColumns: Seq[String], numBuckets: Int): Unit = {
     require(bucketColumns.nonEmpty, "need at least one bucket column")
-    val tableName = s"${db}_$set"
     // Cluster rows by bucket BEFORE the write: a bucketed write from an
     // unclustered frame has every task emit a file for every bucket it
     // sees — O(tasks × buckets) small files, the classic bucketed-write
@@ -654,20 +676,13 @@ final class SetCatalog(spark: SparkSession, root: String,
     val clustered =
       df.repartition(numBuckets, bucketColumns.map(df(_)): _*)
     forget(db, set)
-    clustered.write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, bucketColumns.head, bucketColumns.tail: _*)
-      .sortBy(bucketColumns.head, bucketColumns.tail: _*)
-      .option("path", dir(db, set))
-      .format("parquet")
-      .saveAsTable(tableName)
-    writeMeta(db, set, Some(bucketColumns.mkString(",")), numBuckets,
-      spark.table(tableName).count(), "bucket",
-      files = countDataFiles(db, set))
+    val (rows, files) = SetCatalog.writeCounted(spark, clustered, dir(db, set),
+      SaveMode.Overwrite,
+      bucketSpec = Some(BucketSpec(numBuckets, bucketColumns, bucketColumns)))
+    writeMeta(db, set, SetMeta(Some(bucketColumns.mkString(",")), numBuckets,
+      rows, "bucket", files = files))
+    seedSchema(db, set, clustered)
   }
-
-  /** scan a bucketed set through the catalog (bucket-spec aware) */
-  def scanBucketedSet(db: String, set: String): DataFrame =
-    spark.table(s"${db}_$set")
 
   /** The set's sidecar GENERATION, 0 when absent: every create, append,
     * compaction, swap adoption, and tag change rewrites the sidecar and
@@ -685,12 +700,15 @@ final class SetCatalog(spark: SparkSession, root: String,
     * Legacy sidecars (written before the generation line existed) fall
     * back to mtime — their next rewrite adopts the counter.
     */
-  def metaStamp(db: String, set: String): Long = {
-    val p = Paths.get(metaPath(db, set))
-    if (!Files.exists(p)) 0L
-    else meta(db, set).map(_.generation).filter(_ != 0L)
-      .getOrElse(Files.getLastModifiedTime(p).toMillis)
-  }
+  def metaStamp(db: String, set: String): Long =
+    stampOf(db, set, meta(db, set))
+
+  /** [[metaStamp]] of the sidecar `m` just read for `db.set`. */
+  private def stampOf(db: String, set: String, m: Option[SetMeta]): Long =
+    m.fold(0L)(_.generation match {
+      case 0L => Files.getLastModifiedTime(Paths.get(metaPath(db, set))).toMillis
+      case g => g
+    })
 
   def meta(db: String, set: String): Option[SetMeta] = {
     val p = Paths.get(metaPath(db, set))
@@ -745,47 +763,23 @@ final class SetCatalog(spark: SparkSession, root: String,
     * user set).
     */
   def markStaging(db: String, set: String): Unit =
-    meta(db, set).foreach(m => writeMeta(db, set, m.partitionColumn,
-      m.numPartitions, m.rows, m.policy, m.nodeShares, m.files,
-      staging = true))
+    meta(db, set).foreach(m => writeMeta(db, set, m.copy(staging = true)))
 
+  /** Delete the set's files and then its sidecar: the set is gone
+    * from every catalog on the root, and nothing else holds it.
+    */
   def removeSet(db: String, set: String): Unit = {
-    // Read the sidecar BEFORE deleting it: only bucketed sets register a
-    // session-catalog entry (createBucketedSet → saveAsTable), and
-    // session-catalog names are global while catalog roots are
-    // per-directory — dropping unconditionally could take down an
-    // unrelated table that happens to share the db_set name. When the
-    // sidecar is GONE (a prior remove crashed between the file delete
-    // and the drop, or the meta was lost), fall back to a location
-    // check: an entry whose storage location is THIS set's directory is
-    // ours and must not dangle over the deleted files — this also keeps
-    // a removeSet retry self-healing.
-    val wasBucketed = meta(db, set).exists(_.policy == "bucket")
-    val ownsEntry = wasBucketed || {
-      try {
-        val cat = spark.sessionState.catalog
-        val id = org.apache.spark.sql.catalyst.TableIdentifier(s"${db}_$set")
-        cat.tableExists(id) && {
-          val loc = Paths.get(cat.getTableMetadata(id).location)
-            .toAbsolutePath.normalize
-          loc == Paths.get(dir(db, set)).toAbsolutePath.normalize
-        }
-      } catch { case _: Exception => false }
-    }
     forget(db, set)
     SetCatalog.deleteTree(Paths.get(dir(db, set)))
     Files.deleteIfExists(Paths.get(metaPath(db, set)))
-    if (ownsEntry)
-      spark.sql(s"DROP TABLE IF EXISTS `${db}_$set`")
   }
 
-  /** Rename a non-bucketed set in place: two directory-level moves (data
-    * dir, then sidecar), no data rewrite — the swap step a staged
-    * rebuild needs (write the new layout to a staging set, remove the
-    * old, rename the stage over it; the IVF index rebuild does exactly
-    * this). Bucketed sets are refused: their identity includes a
-    * session-catalog entry and file-name-embedded bucket ids, so a
-    * rename would have to rewrite both — recreate instead. Crash
+  /** Rename a set in place: two directory-level moves (data dir, then
+    * sidecar), no data rewrite — the swap step a staged rebuild needs
+    * (write the new layout to a staging set, remove the old, rename the
+    * stage over it; the IVF index rebuild does exactly this). A
+    * bucketed set keeps its layout: the bucket ids sit in its file
+    * names, which the move keeps, and the spec in its sidecar. Crash
     * between the two moves leaves data under the NEW name with the
     * OLD name's sidecar still present — a state where `meta(to)` is
     * empty (scans of `to` work, appends/compacts misbehave) and a
@@ -807,11 +801,8 @@ final class SetCatalog(spark: SparkSession, root: String,
       clearStaging(db, to)
       return
     }
-    val m = meta(db, from).getOrElse(throw new IllegalArgumentException(
-      s"renameSet: set $db.$from does not exist"))
-    require(m.policy != "bucket",
-      s"renameSet: $db.$from is bucketed — its session-catalog entry and " +
-        "bucket-id file names cannot be renamed; recreate instead")
+    require(meta(db, from).isDefined,
+      s"renameSet: set $db.$from does not exist")
     require(meta(db, to).isEmpty && !Files.exists(Paths.get(dir(db, to))),
       s"renameSet: target $db.$to already exists")
     Files.move(Paths.get(dir(db, from)), Paths.get(dir(db, to)))
@@ -825,9 +816,8 @@ final class SetCatalog(spark: SparkSession, root: String,
     * leftover and discard it.
     */
   private def clearStaging(db: String, set: String): Unit =
-    meta(db, set).filter(_.staging).foreach(m =>
-      writeMeta(db, set, m.partitionColumn, m.numPartitions, m.rows,
-        m.policy, m.nodeShares, m.files, staging = false))
+    meta(db, set).filter(_.staging)
+      .foreach(m => writeMeta(db, set, m.copy(staging = false)))
 
   /** One marker per swap GROUP, named by the sorted target list — the
     * rebuild that owns a group always knows its exact member sets, so

@@ -42,8 +42,8 @@ class AdvisorSpec extends GraftSpecBase {
     val o = Tables.orders(spark, sfDir)
     cat.createBucketedSet("bk", "lineitem", li, "l_orderkey", 4)
     cat.createBucketedSet("bk", "orders", o, "o_orderkey", 4)
-    val joined = cat.scanBucketedSet("bk", "lineitem")
-      .join(cat.scanBucketedSet("bk", "orders"),
+    val joined = cat.scanSet("bk", "lineitem")
+      .join(cat.scanSet("bk", "orders"),
         col("l_orderkey") === col("o_orderkey"))
     // disable broadcast so the join strategy must exploit bucketing
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -109,8 +109,8 @@ class AdvisorSpec extends GraftSpecBase {
     assert(mLi.numPartitions == mO.numPartitions,
       s"group must share a bucket count: ${mLi.numPartitions} vs ${mO.numPartitions}")
     assert(mLi.numPartitions > 1, "target 1024 rows must yield multiple buckets")
-    val joined = cat.scanBucketedSet("db3", "li")
-      .join(cat.scanBucketedSet("db3", "o"), col("l_orderkey") === col("o_orderkey"))
+    val joined = cat.scanSet("db3", "li")
+      .join(cat.scanSet("db3", "o"), col("l_orderkey") === col("o_orderkey"))
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -356,7 +356,7 @@ class AdvisorSpec extends GraftSpecBase {
     assert(cat.scanSet("db", "log").collect().map(_.toSeq).toSet == want)
   }
 
-  test("renameSet swaps a staged set over the original; bucketed sets refuse") {
+  test("renameSet swaps a staged set over the original; bucketed sets keep their buckets") {
     import spark.implicits._
     val root = tempRoot("graft-rename").toString
     val cat = new SetCatalog(spark, root)
@@ -379,12 +379,23 @@ class AdvisorSpec extends GraftSpecBase {
     assert(cat.meta("db", "tgt").exists(m =>
       m.policy == "dirpart" && m.rows == 20L))
     assert(cat.meta("db", "tgt_stage").isEmpty)
-    // bucketed identity includes a session-catalog entry — refuse
+    // a bucketed set is its files (bucket ids in their names) plus its
+    // sidecar (the spec): the move keeps both, so the renamed set still
+    // self-joins on its key with no exchange
     cat.createBucketedSet("db", "bkt", base, "k", 2)
-    intercept[IllegalArgumentException] {
-      cat.renameSet("db", "bkt", "bkt2")
-    }
-    cat.removeSet("db", "bkt")
+    cat.renameSet("db", "bkt", "bkt2")
+    assert(cat.meta("db", "bkt").isEmpty)
+    val renamed = cat.scanSet("db", "bkt2")
+    val self = renamed.join(renamed.select($"k", $"v".as("v2")), "k")
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val plan = self.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange"),
+        s"renamed bucketed set re-shuffles on its own bucket key:\n$plan")
+      assert(self.count() == 20L)
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    cat.removeSet("db", "bkt2")
     cat.removeSet("db", "tgt")
   }
 
@@ -434,7 +445,7 @@ class AdvisorSpec extends GraftSpecBase {
       s"advisor forgot the observed corpus: $replay != $first")
   }
 
-  test("removeSet drops the session-catalog entry only for bucketed sets") {
+  test("bucketed sets register no session-catalog table; removeSet leaves a same-named unrelated table alone") {
     import spark.implicits._
     val root = tempRoot("graft-remove").toString
     val cat = new SetCatalog(spark, root)
@@ -448,11 +459,19 @@ class AdvisorSpec extends GraftSpecBase {
     cat.removeSet("dbx", "plain")
     assert(spark.catalog.tableExists("dbx_plain"),
       "removing a non-bucketed set must not drop a same-named table")
-    spark.sql("DROP TABLE dbx_plain")
-    // bucketed sets DO own their session-catalog entry — it must go
+    // a bucketed set lives in the root alone: creating it registers
+    // nothing, and removing it leaves the same-named table standing
+    spark.sql("DROP TABLE IF EXISTS dbx_bkt")
+    base.write.mode("overwrite")
+      .option("path", s"$root/unrelated_bkt").saveAsTable("dbx_bkt")
+    cat.createBucketedSet("dbx", "bkt2", base, "k", 2)
+    assert(!spark.catalog.tableExists("dbx_bkt2"))
     cat.createBucketedSet("dbx", "bkt", base, "k", 2)
-    assert(spark.catalog.tableExists("dbx_bkt"))
     cat.removeSet("dbx", "bkt")
-    assert(!spark.catalog.tableExists("dbx_bkt"))
+    assert(spark.catalog.tableExists("dbx_bkt") &&
+      spark.table("dbx_bkt").count() == 10L,
+      "removing a bucketed set must not drop a same-named table")
+    spark.sql("DROP TABLE dbx_plain")
+    spark.sql("DROP TABLE dbx_bkt")
   }
 }

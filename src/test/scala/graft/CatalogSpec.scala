@@ -14,6 +14,14 @@ class CatalogSpec extends GraftSpecBase {
     r
   }
 
+  /** The bucket count `df`'s file relation reads its files under. */
+  private def bucketsOf(df: org.apache.spark.sql.DataFrame): Option[Int] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    df.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.bucketSpec
+    }.flatten.map(_.numBuckets)
+  }
+
   test("sets stored by SetCatalog are queryable as graft.<db>.<set> SQL tables") {
     val sets = new SetCatalog(spark, root)
     sets.createSet("tpch", "nation", Tables.nation(spark, sfDir))
@@ -120,6 +128,70 @@ class CatalogSpec extends GraftSpecBase {
     }
     assert(spark.sql("SELECT COUNT(*) FROM graft.bk2.nation")
       .head().getLong(0) == 25L, "reads must survive the write guard")
+  }
+
+  test("two catalogs on different roots each read their own bucketed set") {
+    import spark.implicits._
+    val rootA = tempRoot("graft-bka").toString
+    val a = new SetCatalog(spark, rootA)
+    val b = new SetCatalog(spark, tempRoot("graft-bkb").toString)
+    a.createBucketedSet("bk", "t", Seq(1L, 2L, 3L).toDF("k"), "k", 2)
+    b.createBucketedSet("bk", "t", Seq(100L, 101L).toDF("k"), "k", 2)
+    // each read is the bucket-aware one, over that catalog's own files
+    def ks(c: SetCatalog) = {
+      val t = c.scanSet("bk", "t")
+      assert(bucketsOf(t).contains(2), s"not a bucketed read:\n${t.queryExecution.analyzed}")
+      t.as[Long].collect().toSet
+    }
+    assert(ks(a) == Set(1L, 2L, 3L) && ks(b) == Set(100L, 101L))
+    b.removeSet("bk", "t")
+    assert(ks(a) == Set(1L, 2L, 3L), "removing B's set must leave A's readable")
+    assert(ks(new SetCatalog(spark, rootA)) == Set(1L, 2L, 3L),
+      "a second catalog on A's root reads A's set")
+  }
+
+  test("createBucketedSet registers no session-catalog table") {
+    import spark.implicits._
+    val before = spark.catalog.listTables().collect().map(_.name).toSet
+    val sets = new SetCatalog(spark, tempRoot("graft-bknt").toString)
+    sets.createBucketedSet("bknt", "t", Seq(1L, 2L).toDF("k"), "k", 2)
+    graft.operators.Dedup.persistExactIndex(sets, "bknt", "ix",
+      Seq("a b c", "d e f").toDF("text"), "text")
+    assert(spark.catalog.listTables().collect().map(_.name).toSet == before)
+  }
+
+  test("bucketed files from the saveAsTable writer read through scanSet after their table is gone") {
+    import spark.implicits._
+    val r = tempRoot("graft-bkup").toString
+    val sets = new SetCatalog(spark, r)
+    val rows = (1L to 40L).map(i => (i, s"v$i")).toDF("k", "v")
+    // the earlier writer: clustered, bucketed and sorted on k, saved as
+    // a session-catalog table at the set's directory, with the sidecar
+    // it wrote next to it
+    spark.sql("DROP TABLE IF EXISTS bkup_t")
+    rows.repartition(4, $"k").write.mode("overwrite")
+      .bucketBy(4, "k").sortBy("k").option("path", sets.dir("bkup", "t"))
+      .format("parquet").saveAsTable("bkup_t")
+    val files = {
+      val listing = Files.list(java.nio.file.Paths.get(sets.dir("bkup", "t")))
+      try listing.filter(_.toString.endsWith(".parquet")).count()
+      finally listing.close()
+    }
+    Files.writeString(java.nio.file.Paths.get(sets.dir("bkup", "t") + ".meta"),
+      s"k\n4\n40\nbucket\n\n$files\n\n1\n")
+    // a new application has no such table; the files stay
+    spark.sql("DROP TABLE bkup_t")
+    val t = new SetCatalog(spark, r).scanSet("bkup", "t")
+    assert(t.collect().map(_.toSeq).toSet == rows.collect().map(_.toSeq).toSet)
+    val self = t.join(t.select($"k", $"v".as("v2")), "k")
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val plan = self.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange"),
+        s"upgraded bucketed set re-shuffles on its own bucket key:\n$plan")
+      assert(self.count() == 40L)
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
   test("renameSet heals a half-moved rename on retry (crash between moves)") {
@@ -681,7 +753,7 @@ class CatalogSpec extends GraftSpecBase {
           Seq("a b c", "d e f").toDF("text"), "text")
         root = java.nio.file.Paths.get(cat.dir(db, "corpus_hashes")).getParent
         table = s"${db}_corpus_hashes"
-        require(spark.catalog.tableExists(table), s"$table was not registered")
+        assert(!spark.catalog.tableExists(table), s"$table was registered")
         throw boom
       }
     }

@@ -3,22 +3,39 @@ package graft
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source-level guard on Scaladoc placement. */
+/** Source-level guards: Scaladoc placement, and one storage namespace. */
 class DocCommentSpec extends AnyFunSuite {
+
+  private def mainSources: List[java.nio.file.Path] = {
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
 
   test("no doc comment sits directly on top of another in src/main") {
     // Scaladoc attaches only the doc comment nearest a definition: a
     // `/** */` block directly above another documents nothing
-    val stacked = java.nio.file.Files
-      .walk(java.nio.file.Paths.get("src/main")).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toList
-      .flatMap { p =>
-        java.nio.file.Files.readAllLines(p).asScala.toSeq.sliding(2)
-          .zipWithIndex.collect {
-            case (Seq(a, b), i) if a.trim.endsWith("*/") &&
-                b.trim.startsWith("/**") => s"$p:${i + 2}"
-          }
-      }
+    val stacked = mainSources.flatMap { p =>
+      java.nio.file.Files.readAllLines(p).asScala.toSeq.sliding(2)
+        .zipWithIndex.collect {
+          case (Seq(a, b), i) if a.trim.endsWith("*/") &&
+              b.trim.startsWith("/**") => s"$p:${i + 2}"
+        }
+    }
     assert(stacked.isEmpty, s"stacked doc comments at: $stacked")
+  }
+
+  test("src/main keeps stored sets out of the session catalog") {
+    // every stored set is files plus a sidecar under its catalog's root;
+    // a session-catalog table would be a second namespace that neither
+    // survives a restart nor tells two roots apart
+    val banned = java.util.regex.Pattern.compile(
+      "saveAsTable|sessionState\\.catalog|DROP TABLE")
+    val hits = mainSources.flatMap { p =>
+      java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (line, i) if banned.matcher(line).find() => s"$p:${i + 1}"
+      }
+    }
+    assert(hits.isEmpty, s"session-catalog use in src/main at: $hits")
   }
 }

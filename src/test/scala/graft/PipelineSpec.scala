@@ -110,7 +110,7 @@ class PipelineSpec extends GraftSpecBase {
     // the placement payoff the stored index exists for: the band set is
     // bucketed on the composite (band, bkey), so a join ON exactly the
     // candidate keys needs no exchange on the stored side
-    val bands = cat.scanBucketedSet("ddx", "c_bands")
+    val bands = cat.scanSet("ddx", "c_bands")
     val j = bands.join(
       bands.select(col("band"), col("bkey"), col("id").as("id2")),
       Seq("band", "bkey"))
@@ -656,7 +656,7 @@ class PipelineSpec extends GraftSpecBase {
     val cat = new graft.storage.SetCatalog(spark, root)
     graft.operators.Multimodal.persistFrameIndex(
       cat, "ddx", "f", corpus, numBuckets = 2)
-    val hashes = cat.scanBucketedSet("ddx", "f_hashes")
+    val hashes = cat.scanSet("ddx", "f_hashes")
     def probe(batch: org.apache.spark.sql.DataFrame) =
       graft.operators.Dedup.exactAgainstHashesKeyed(
         graft.operators.Multimodal.sampleFrames(spark, batch),
@@ -705,7 +705,7 @@ class PipelineSpec extends GraftSpecBase {
     graft.operators.Multimodal.persistEnvelopeIndex(
       cat, "ddx", "env", corpus, window = 2, hop = 2, minWindows = 2,
       numBuckets = 2)
-    val fps = cat.scanBucketedSet("ddx", "env_fps")
+    val fps = cat.scanSet("ddx", "env_fps")
     def probe(batch: org.apache.spark.sql.DataFrame) =
       graft.operators.Dedup.fingerprintsAgainstFps(
         graft.operators.Multimodal.envelopeFingerprint(
