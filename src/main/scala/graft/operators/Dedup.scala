@@ -185,11 +185,7 @@ object Dedup {
       docs: DataFrame, idCol: String, shingleExpr: Column,
       k: Int, bands: Int, maxBucket: Int = 200): (DataFrame, DataFrame, DataFrame) = {
     val (withSets, banded) = bandFrames(docs, idCol, shingleExpr, k, bands)
-    val hot = banded.groupBy(col("band"), col("bkey"))
-      .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") > maxBucket)
-      .select(col("band"), col("bkey"))
-    val pruned = banded.join(broadcast(hot), Seq("band", "bkey"), "left_anti")
+    val pruned = pruneHotBuckets(banded, maxBucket)
     val a = pruned.select(col("band"), col("bkey"), col("id").as("id_a"))
     val b = pruned.select(col("band"), col("bkey"), col("id").as("id_b"))
     // require ≥2 matching bands: a background pair collides in ~1 band
@@ -203,6 +199,17 @@ object Dedup {
       .filter(col("n_bands") >= 2)
       .select(col("id_a"), col("id_b"))
     (withSets, banded, candidates)
+  }
+
+  /** `banded` without its hot buckets: every (band, bkey) bucket
+    * holding more than `maxBucket` band rows is dropped.
+    */
+  private def pruneHotBuckets(banded: DataFrame, maxBucket: Int): DataFrame = {
+    val hot = banded.groupBy(col("band"), col("bkey"))
+      .agg(count(lit(1)).as("bucket_n"))
+      .filter(col("bucket_n") > maxBucket)
+      .select(col("band"), col("bkey"))
+    banded.join(broadcast(hot), Seq("band", "bkey"), "left_anti")
   }
 
   /** N-gram (word shingle) jaccard near-dup pairs — order-sensitive variant.
@@ -239,12 +246,7 @@ object Dedup {
       maxBucket: Int = 200): (DataFrame, DataFrame) = {
     val (cSets, cBanded) =
       bandFrames(corpus, idCol, wordShingles(col(textCol), shingleN), k, bands)
-    val hot = cBanded.groupBy(col("band"), col("bkey"))
-      .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") > maxBucket)
-      .select(col("band"), col("bkey"))
-    val pruned = cBanded.join(broadcast(hot), Seq("band", "bkey"), "left_anti")
-      .persist()
+    val pruned = pruneHotBuckets(cBanded, maxBucket).persist()
     pruned.count() // materialize while the base band cache is still hot
     cBanded.unpersist(blocking = false)
     (cSets, pruned)
@@ -414,8 +416,8 @@ object Dedup {
     * [[recapIngestNearDupIndex]] periodically compacts the growing sets
     * into a fresh generation with the static forms' hot-bucket census
     * re-applied (crash-committed via
-    * [[graft.storage.SetCatalog.swapSetGroup]], the ANN rebuild
-    * machinery), after which the sets keep ingesting —
+    * [[graft.storage.SetCatalog.replaceSets]], the ANN rebuild
+    * route), after which the sets keep ingesting —
     * [[ingestBandCensus]] is the dial that says when.
     *
     * Scale shape: the standing sets are hash-layout catalog sets
@@ -498,10 +500,9 @@ object Dedup {
     // generation instead would be silently discarded when the swap is
     // eventually finished (the recap's own preamble only runs when the
     // recap policy re-fires, which a conf change can prevent forever).
-    // Cost on the overwhelmingly common clean path: one marker
-    // Files.exists plus two staging-sidecar existence checks.
-    catalog.recoverSwapGroup(db, Seq(s"${setsName}_recap" -> setsName,
-      s"${bandsName}_recap" -> bandsName))
+    // Cost on the overwhelmingly common clean path: the lease, one
+    // marker Files.exists and two staging-sidecar existence checks.
+    catalog.recoverSets(db, Seq(setsName, bandsName))
     val (nSets, nBanded) = bandFrames(batch, idCol,
       wordShingles(col(textCol), shingleN), k, bands)
     val exists = catalog.meta(db, bandsName).nonEmpty
@@ -676,17 +677,16 @@ object Dedup {
     * (the sf0.01 oracle equality over the capped static form is the
     * standing evidence).
     *
-    * The new generation is STAGED ([[graft.storage.SetCatalog
-    * .createSet]] into `*_recap` sets, the same hash layouts the live
-    * sets carry) and committed as one crash-atomic
-    * [[graft.storage.SetCatalog.swapSetGroup]] — a crash anywhere
-    * leaves either the old generation or the new, never a mix, and the
-    * recovery preamble here (plus [[graft.storage.SetCatalog
-    * .recoverAll]] at catalog open) heals an interrupted recap before
-    * the next one runs. Post-swap the sets keep their appendable hash
-    * policy, so ingest continues against the recapped generation
-    * unchanged — unlike a [[persistLshIndex]] rebuild, whose write-once
-    * bucketed output could never ingest again.
+    * The new generation is STAGED and swapped in as one crash-atomic
+    * group by [[graft.storage.SetCatalog.replaceSets]] (each set
+    * written by [[graft.storage.SetCatalog.createSet]] under the same
+    * hash layout the live set carries) — a crash anywhere leaves either
+    * the old generation or the new, never a mix, and the next recap,
+    * the next ingest batch, or [[graft.storage.SetCatalog.recoverAll]]
+    * at catalog open heals an interrupted recap. Post-swap the sets
+    * keep their appendable hash policy, so ingest continues against
+    * the recapped generation unchanged — unlike a [[persistLshIndex]]
+    * rebuild, whose write-once bucketed output could never ingest again.
     *
     * The rewrite also dedups band rows (healing any duplicate rows a
     * crashed append left — harmless to correctness under the
@@ -707,30 +707,25 @@ object Dedup {
       maxBucket: Int = 200): Unit = {
     val setsName = s"${name}_sets"
     val bandsName = s"${name}_bands"
-    val pairs = Seq(s"${setsName}_recap" -> setsName,
-      s"${bandsName}_recap" -> bandsName)
-    catalog.recoverSwapGroup(db, pairs)
-    val setsMeta = catalog.meta(db, setsName).getOrElse(
-      throw new IllegalArgumentException(
-        s"recapIngestNearDupIndex: no ingest index $db.$name"))
-    val hot = catalog.scanSet(db, bandsName)
-      .groupBy(col("band"), col("bkey"))
-      .agg(count_distinct(col("id")).as("bucket_n"))
-      .filter(col("bucket_n") > maxBucket)
-      .select(col("band"), col("bkey"))
-    val capped = catalog.scanSet(db, bandsName)
-      .join(broadcast(hot), Seq("band", "bkey"), "left_anti")
-      .distinct()
-    // stage the new generation (reads run against the still-live old
-    // directories; createSet writes to the separate *_recap paths)
-    catalog.createSet(db, s"${setsName}_recap",
-      catalog.scanSet(db, setsName),
-      partitionColumn = setsMeta.partitionColumn)
-    catalog.markStaging(db, s"${setsName}_recap")
-    catalog.createSet(db, s"${bandsName}_recap", capped,
-      partitionColumn = catalog.meta(db, bandsName).flatMap(_.partitionColumn))
-    catalog.markStaging(db, s"${bandsName}_recap")
-    catalog.swapSetGroup(db, pairs)
+    catalog.replaceSets(db, Seq(setsName, bandsName)) { staged =>
+      val setsMeta = catalog.meta(db, setsName).getOrElse(
+        throw new IllegalArgumentException(
+          s"recapIngestNearDupIndex: no ingest index $db.$name"))
+      val hot = catalog.scanSet(db, bandsName)
+        .groupBy(col("band"), col("bkey"))
+        .agg(count_distinct(col("id")).as("bucket_n"))
+        .filter(col("bucket_n") > maxBucket)
+        .select(col("band"), col("bkey"))
+      val capped = catalog.scanSet(db, bandsName)
+        .join(broadcast(hot), Seq("band", "bkey"), "left_anti")
+        .distinct()
+      // reads run against the still-live old directories; the new
+      // generation is written under the staged names
+      catalog.createSet(db, staged(setsName), catalog.scanSet(db, setsName),
+        partitionColumn = setsMeta.partitionColumn)
+      catalog.createSet(db, staged(bandsName), capped,
+        partitionColumn = catalog.meta(db, bandsName).flatMap(_.partitionColumn))
+    }
     stampIngestCensusRows(catalog, db, name)
   }
 
@@ -1936,19 +1931,6 @@ object Dedup {
       rebuildSemanticIndex(catalog, db, name, targetClusterSize, iters)
   }
 
-  /** Streaming form of [[appendToSemanticIndex]]: every micro-batch of
-    * arriving embeddings joins the standing semantic index (assigned
-    * under the frozen codebook, appended into its cell's directory).
-    * Batching-invariant — a vector's cell depends only on (vector,
-    * codebook). Runs through [[startBatches]].
-    */
-  def streamAppendToSemanticIndex(
-      stream: DataFrame, catalog: graft.storage.SetCatalog,
-      db: String, name: String, idCol: String, vecCol: String): Unit =
-    drainAndStop(startBatches(stream) { batch =>
-      appendToSemanticIndex(catalog, db, name, batch, idCol, vecCol)
-    })
-
   /** Retrain a persisted semantic index from its OWN standing vectors
     * and re-partition the corpus under the new cells — the rebuild half
     * of the lifecycle. Unlike the ANN rebuild (which keeps its codebook
@@ -1961,7 +1943,7 @@ object Dedup {
     * sample), so a rebuild equals a from-scratch build over the standing
     * corpus — the registry's lifecycle oracle pins that equality
     * end-to-end. Staged + swapped via
-    * [[graft.storage.SetCatalog.swapSetGroup]]; the drift fraction
+    * [[graft.storage.SetCatalog.replaceSets]]; the drift fraction
     * resets to 0.
     */
   def rebuildSemanticIndex(

@@ -1057,8 +1057,8 @@ object SimilaritySearch {
     * the standing vectors set (same md5-ordered sample a from-scratch
     * [[ivfTopK]] trains on, so post-rebuild recall equals the retrained
     * line exactly) and re-partition the corpus under the new cells. The
-    * rewrite goes to a STAGING set and swaps in via
-    * [[graft.storage.SetCatalog.swapSetGroup]] (marker-committed
+    * rewrite is staged and swapped in by
+    * [[graft.storage.SetCatalog.replaceSets]] (marker-committed
     * remove+rename) — source and destination are the same set here (the
     * cells are the corpus layout), so an in-place overwrite would read
     * what it is deleting.
@@ -1072,61 +1072,35 @@ object SimilaritySearch {
   def rebuildIvfIndex(
       spark: SparkSession, catalog: graft.storage.SetCatalog,
       db: String, name: String, iters: Int = 3, nCentroids0: Int = 0): Unit = {
-    val swaps = Seq("vectors", "centroids")
-      .map(s => s"${name}_${s}_rebuild" -> s"${name}_$s")
-    catalog.recoverSwapGroup(db, swaps)
-    val nCentroids = if (nCentroids0 > 0) nCentroids0
-      else catalog.scanSet(db, s"${name}_centroids").count().toInt
-    val vecs = catalog.scanSet(db, s"${name}_vectors")
-      .select(col("neighbor_id"), col("n_vec"), col("n_nrm"))
-    // the standing corpus's sidecar already carries its rowcount —
-    // seed the wide-sample prefilter from it (ADVICE r17)
-    val centroids = indexTrainCentroids(spark, vecs, nCentroids, iters,
-      "neighbor_id", "n_vec",
-      catalog.meta(db, s"${name}_vectors").map(_.rows).getOrElse(0L))
-    val assign =
-      Codebook.of(sessionKernel(spark, centroids.length), centroids).assignUdf
+    val vectors = s"${name}_vectors"
+    val cents = s"${name}_centroids"
     // Stage the re-partitioned corpus AND the new codebook before
     // touching live state — the whole-corpus rewrite (the expensive
     // part; the cells ARE the corpus layout here) runs while searches
-    // still see the consistent old (centroids, vectors) pair, and a
-    // crash before the swaps leaves the live index untouched. The two
-    // swaps commit as ONE marker group (swapSetGroup): a crash between
-    // them (new vectors under the old codebook) or inside either
-    // remove→rename window is FINISHED — not discarded — by the next
-    // rebuild's recoverSwapGroup preamble or by SetCatalog.recoverAll
-    // at catalog open, so a mixed-generation index can serve only
-    // inside the crash-to-recovery window, never past it.
-    val (partCol, laidOut) = cellLayout(spark,
-      vecs.select(col("neighbor_id"), col("n_vec"), col("n_nrm"),
-        assign(col("n_vec")).as("bucket")),
-      centroids.length)
-    catalog.createPartitionedSet(db, s"${name}_vectors_rebuild", laidOut,
-      partCol)
-    catalog.markStaging(db, s"${name}_vectors_rebuild")
-    catalog.createSet(db, s"${name}_centroids_rebuild",
-      codebookFrame(spark, centroids), policy = "none")
-    catalog.markStaging(db, s"${name}_centroids_rebuild")
-    catalog.swapSetGroup(db, swaps)
+    // still see the consistent old (centroids, vectors) pair. The two
+    // sets swap in as ONE group: a crash between them (new vectors
+    // under the old codebook) is FINISHED, not discarded, by the next
+    // replaceSets on them or by SetCatalog.recoverAll at catalog open.
+    catalog.replaceSets(db, Seq(vectors, cents)) { staged =>
+      val nCentroids = if (nCentroids0 > 0) nCentroids0
+        else catalog.scanSet(db, cents).count().toInt
+      val vecs = catalog.scanSet(db, vectors)
+        .select(col("neighbor_id"), col("n_vec"), col("n_nrm"))
+      // the standing corpus's sidecar already carries its rowcount —
+      // seed the wide-sample prefilter from it (ADVICE r17)
+      val centroids = indexTrainCentroids(spark, vecs, nCentroids, iters,
+        "neighbor_id", "n_vec", catalog.meta(db, vectors).map(_.rows).getOrElse(0L))
+      val assign =
+        Codebook.of(sessionKernel(spark, centroids.length), centroids).assignUdf
+      val (partCol, laidOut) = cellLayout(spark,
+        vecs.select(col("neighbor_id"), col("n_vec"), col("n_nrm"),
+          assign(col("n_vec")).as("bucket")),
+        centroids.length)
+      catalog.createPartitionedSet(db, staged(vectors), laidOut, partCol)
+      catalog.createSet(db, staged(cents), codebookFrame(spark, centroids),
+        policy = "none")
+    }
     persistBuiltRows(catalog, db, name)
-  }
-
-  /** Streaming form of [[appendToIvfIndex]]: every micro-batch of
-    * arriving embeddings is assigned under the standing codebook and
-    * appended to the index — the continuously-embedding ingest pipeline
-    * end to end. Batching-invariant by construction (a vector's bucket
-    * depends only on the vector and the codebook), so any batching of
-    * the same arrivals produces the same index as one batch append.
-    * Runs through [[graft.operators.Dedup.startBatches]].
-    */
-  def streamAppendToIvfIndex(
-      stream: DataFrame, catalog: graft.storage.SetCatalog,
-      db: String, name: String,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val spark = stream.sparkSession
-    Dedup.drainAndStop(Dedup.startBatches(stream) { batch =>
-      appendToIvfIndex(spark, catalog, db, name, batch, idCol, vecCol)
-    })
   }
 
   /** Unit-normalize (sequential Σv² in index order, then sqrt — the
@@ -1260,24 +1234,20 @@ object SimilaritySearch {
       .join(broadcast(queriesWithNorm(queries, idCol, vecCol)),
         Seq("query_id")), k)
 
-  /** Persist PQ sub-codebooks as the tiny `<name>_codebooks` set (one
-    * row per (sub, centroid), components as an array) — shared by the
-    * PQ and IVF-PQ builders.
+  /** Persist PQ sub-codebooks as the tiny set `set` (one row per
+    * (sub, centroid), components as an array) — shared by the PQ and
+    * IVF-PQ builds and rebuilds.
     */
   private def persistCodebooks(
       spark: SparkSession, catalog: graft.storage.SetCatalog,
-      db: String, name: String,
-      codebooks: Array[Array[Array[Double]]],
-      suffix: String = ""): Unit = {
+      db: String, set: String,
+      codebooks: Array[Array[Array[Double]]]): Unit = {
     import spark.implicits._
-    catalog.createSet(db, s"${name}_codebooks$suffix",
+    catalog.createSet(db, set,
       codebooks.zipWithIndex.flatMap { case (cb, j) =>
         cb.zipWithIndex.map { case (v, c) => (j, c.toLong, v.toSeq) }
       }.toSeq.toDF("sub", "centroid", "components"),
       policy = "none")
-    // a staged generation is tagged as catalog-owned the moment it
-    // exists, so recoverAll's convention sweep may resolve it
-    if (suffix.nonEmpty) catalog.markStaging(db, s"${name}_codebooks$suffix")
   }
 
   /** Asymmetric-distance top-k with exact re-rank: encode the corpus once
@@ -1371,7 +1341,7 @@ object SimilaritySearch {
     val codebooks = trainPqCodebooksFromSample(sample, m, kSub, iters)
     catalog.createSet(db, s"${name}_centroids",
       centroidsFrame(spark, centroids), policy = "none")
-    persistCodebooks(spark, catalog, db, name, codebooks)
+    persistCodebooks(spark, catalog, db, s"${name}_codebooks", codebooks)
     val assign = Codebook.flat(centroids).assignUdf
     val encode = pqEncodeUdf(codebooks)
     catalog.createPartitionedSet(db, s"${name}_codes",
@@ -1448,33 +1418,27 @@ object SimilaritySearch {
   def rebuildPqIndex(
       spark: SparkSession, catalog: graft.storage.SetCatalog,
       db: String, name: String, iters: Int = 2): Unit = {
-    val swaps = Seq("codes", "codebooks")
-      .map(s => s"${name}_${s}_rebuild" -> s"${name}_$s")
-    catalog.recoverSwapGroup(db, swaps)
-    val old = loadPqCodebooks(catalog, db, name)
-    val m = old.length
-    val kSub = old(0).length
-    val vecs = catalog.scanSet(db, s"${name}_vectors")
-    val codebooks = trainPqCodebooks(vecs, m, kSub, iters, "neighbor_id",
-      "n_vec", knownRowCount =
-        catalog.meta(db, s"${name}_vectors").map(_.rows).getOrElse(0L))
-    val cm = catalog.meta(db, s"${name}_codes").getOrElse(
-      throw new IllegalArgumentException(s"rebuildPqIndex: no codes set for $db.$name"))
-    val encode = pqEncodeUdf(codebooks)
+    val codes = s"${name}_codes"
+    val books = s"${name}_codebooks"
     // Stage BOTH the data rewrite and the model write before touching
     // live state: searches keep reading the consistent old
-    // (codebooks, codes) pair for the whole expensive part, and a crash
-    // anywhere before the swaps leaves the live index untouched. The
-    // swaps then commit as ONE marker group (swapSetGroup): a crash
-    // between them no longer leaves new codes under old codebooks — the
-    // next rebuild's recoverSwapGroup preamble finishes the whole group
-    // before anything else runs.
-    catalog.createSet(db, s"${name}_codes_rebuild",
-      vecs.select(col("neighbor_id"), encode(col("n_vec")).as("codes")),
-      partitionColumn = cm.partitionColumn, numPartitions = cm.numPartitions)
-    catalog.markStaging(db, s"${name}_codes_rebuild")
-    persistCodebooks(spark, catalog, db, name, codebooks, suffix = "_rebuild")
-    catalog.swapSetGroup(db, swaps)
+    // (codebooks, codes) pair for the whole expensive part, and the
+    // two swap in as ONE group, so a crash between them never leaves
+    // new codes under old codebooks.
+    catalog.replaceSets(db, Seq(codes, books)) { staged =>
+      val old = loadPqCodebooks(catalog, db, name)
+      val vecs = catalog.scanSet(db, s"${name}_vectors")
+      val codebooks = trainPqCodebooks(vecs, old.length, old(0).length, iters,
+        "neighbor_id", "n_vec", knownRowCount =
+          catalog.meta(db, s"${name}_vectors").map(_.rows).getOrElse(0L))
+      val cm = catalog.meta(db, codes).getOrElse(throw new IllegalArgumentException(
+        s"rebuildPqIndex: no codes set for $db.$name"))
+      val encode = pqEncodeUdf(codebooks)
+      catalog.createSet(db, staged(codes),
+        vecs.select(col("neighbor_id"), encode(col("n_vec")).as("codes")),
+        partitionColumn = cm.partitionColumn, numPartitions = cm.numPartitions)
+      persistCodebooks(spark, catalog, db, staged(books), codebooks)
+    }
     persistBuiltRows(catalog, db, name)
   }
 
@@ -1488,52 +1452,33 @@ object SimilaritySearch {
   def rebuildIvfPqIndex(
       spark: SparkSession, catalog: graft.storage.SetCatalog,
       db: String, name: String, iters: Int = 2): Unit = {
-    val swaps = Seq("codes", "centroids", "codebooks")
-      .map(s => s"${name}_${s}_rebuild" -> s"${name}_$s")
-    catalog.recoverSwapGroup(db, swaps)
-    val nCentroids = catalog.scanSet(db, s"${name}_centroids").count().toInt
-    val old = loadPqCodebooks(catalog, db, name)
-    val m = old.length
-    val kSub = old(0).length
-    val vecs = catalog.scanSet(db, s"${name}_vectors")
-    val sample = sampleVectors(vecs, "neighbor_id", "n_vec", 10000)
-    val centroids = trainCentroidsFromSample(sample, nCentroids, iters = 3)
-    val codebooks = trainPqCodebooksFromSample(sample, m, kSub, iters)
-    val assign = Codebook.flat(centroids).assignUdf
-    val encode = pqEncodeUdf(codebooks)
+    val codes = s"${name}_codes"
+    val cents = s"${name}_centroids"
+    val books = s"${name}_codebooks"
     // Stage the data rewrite AND both model writes before touching live
     // state (rebuildPqIndex's ordering rationale): the expensive
     // re-encode scan runs while searches still see the consistent old
-    // (centroids, codebooks, codes) triple; the three swaps then commit
-    // as ONE marker group (swapSetGroup), and a crash between any two of
-    // them is FINISHED by the next rebuild's recoverSwapGroup preamble
-    // (no mixed-generation window; everything staged re-derives
-    // from the untouched vectors set).
-    catalog.createPartitionedSet(db, s"${name}_codes_rebuild",
-      vecs.select(col("neighbor_id"), encode(col("n_vec")).as("codes"),
-        assign(col("n_vec")).as("bucket")),
-      "bucket")
-    catalog.markStaging(db, s"${name}_codes_rebuild")
-    catalog.createSet(db, s"${name}_centroids_rebuild",
-      centroidsFrame(spark, centroids), policy = "none")
-    catalog.markStaging(db, s"${name}_centroids_rebuild")
-    persistCodebooks(spark, catalog, db, name, codebooks, suffix = "_rebuild")
-    catalog.swapSetGroup(db, swaps)
+    // (centroids, codebooks, codes) triple, and the three swap in as ONE
+    // group (everything staged re-derives from the untouched vectors set).
+    catalog.replaceSets(db, Seq(codes, cents, books)) { staged =>
+      val nCentroids = catalog.scanSet(db, cents).count().toInt
+      val old = loadPqCodebooks(catalog, db, name)
+      val vecs = catalog.scanSet(db, s"${name}_vectors")
+      val sample = sampleVectors(vecs, "neighbor_id", "n_vec", 10000)
+      val centroids = trainCentroidsFromSample(sample, nCentroids, iters = 3)
+      val codebooks =
+        trainPqCodebooksFromSample(sample, old.length, old(0).length, iters)
+      val assign = Codebook.flat(centroids).assignUdf
+      val encode = pqEncodeUdf(codebooks)
+      catalog.createPartitionedSet(db, staged(codes),
+        vecs.select(col("neighbor_id"), encode(col("n_vec")).as("codes"),
+          assign(col("n_vec")).as("bucket")),
+        "bucket")
+      catalog.createSet(db, staged(cents), centroidsFrame(spark, centroids),
+        policy = "none")
+      persistCodebooks(spark, catalog, db, staged(books), codebooks)
+    }
     persistBuiltRows(catalog, db, name)
-  }
-
-  /** Streaming form of [[appendToIvfPqIndex]] — batching-invariant like
-    * its IVF and PQ siblings. Runs through
-    * [[graft.operators.Dedup.startBatches]].
-    */
-  def streamAppendToIvfPqIndex(
-      stream: DataFrame, catalog: graft.storage.SetCatalog,
-      db: String, name: String,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val spark = stream.sparkSession
-    Dedup.drainAndStop(Dedup.startBatches(stream) { batch =>
-      appendToIvfPqIndex(spark, catalog, db, name, batch, idCol, vecCol)
-    })
   }
 
   /** Search a persisted IVF-PQ index: load both models (tiny), compute
@@ -1582,7 +1527,7 @@ object SimilaritySearch {
       knownRowCount: Long = 0L): Unit = {
     val codebooks = trainPqCodebooks(emb, m, kSub, iters, idCol, vecCol,
       knownRowCount = knownRowCount)
-    persistCodebooks(spark, catalog, db, name, codebooks)
+    persistCodebooks(spark, catalog, db, s"${name}_codebooks", codebooks)
     // partition-count choice follows the other index builders
     // (Dedup.indexBuckets over the corpus rowcount). Pass knownRowCount
     // when the caller already paid for a count (e.g. the corpus came off
@@ -1653,21 +1598,6 @@ object SimilaritySearch {
       newEmb.select(col(idCol).as("neighbor_id"), encode(col(vecCol)).as("codes")))
     catalog.appendToSet(db, s"${name}_vectors",
       vectorsWithNorm(newEmb, idCol, vecCol))
-  }
-
-  /** Streaming form of [[appendToPqIndex]]: every micro-batch of
-    * arriving embeddings is encoded under the standing codebooks and
-    * appended. Batching-invariant by construction, like the IVF
-    * streaming append. Runs through [[graft.operators.Dedup.startBatches]].
-    */
-  def streamAppendToPqIndex(
-      stream: DataFrame, catalog: graft.storage.SetCatalog,
-      db: String, name: String,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val spark = stream.sparkSession
-    Dedup.drainAndStop(Dedup.startBatches(stream) { batch =>
-      appendToPqIndex(spark, catalog, db, name, batch, idCol, vecCol)
-    })
   }
 
   /** Search a persisted PQ index: load the codebooks (tiny), ADC-scan

@@ -685,7 +685,7 @@ object StreamingQueries {
   /** streaming IVF maintenance: the index is built on the first half of
     * the corpus, the second half ARRIVES as a stream and is appended per
     * micro-batch under the standing codebook
-    * ([[graft.operators.SimilaritySearch.streamAppendToIvfIndex]]), then
+    * ([[graft.operators.SimilaritySearch.appendToIvfIndex]] per batch), then
     * the index is searched — ≡ the one-shot batch append, so the oracle
     * is sim_ivf_append's unchanged
     */
@@ -695,9 +695,10 @@ object StreamingQueries {
     graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
       graft.operators.SimilaritySearch.buildIvfIndex(spark, cat, db, "emb",
         emb.filter(col("vec_id") < 250))
-      graft.operators.SimilaritySearch.streamAppendToIvfIndex(
-        readEmbStream(spark, d).filter(col("vec_id") >= 250),
-        cat, db, "emb")
+      graft.operators.Dedup.drainAndStop(graft.operators.Dedup.startBatches(
+        readEmbStream(spark, d).filter(col("vec_id") >= 250)) { batch =>
+        graft.operators.SimilaritySearch.appendToIvfIndex(spark, cat, db, "emb", batch)
+      })
       graft.operators.SimilaritySearch.searchIvfIndex(
         spark, cat, db, "emb", emb.filter(col("vec_id") < 10), k = 5)
     }
@@ -720,9 +721,10 @@ object StreamingQueries {
     graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
       graft.operators.SimilaritySearch.buildPqIndex(spark, cat, db, "emb",
         emb.filter(col("vec_id") < 250))
-      graft.operators.SimilaritySearch.streamAppendToPqIndex(
-        readEmbStream(spark, d).filter(col("vec_id") >= 250),
-        cat, db, "emb")
+      graft.operators.Dedup.drainAndStop(graft.operators.Dedup.startBatches(
+        readEmbStream(spark, d).filter(col("vec_id") >= 250)) { batch =>
+        graft.operators.SimilaritySearch.appendToPqIndex(spark, cat, db, "emb", batch)
+      })
       graft.operators.SimilaritySearch.searchPqIndex(
         spark, cat, db, "emb", emb.filter(col("vec_id") < 10), k = 5)
     }
@@ -743,9 +745,10 @@ object StreamingQueries {
     graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
       graft.operators.SimilaritySearch.buildIvfPqIndex(spark, cat, db, "emb",
         emb.filter(col("vec_id") < 250))
-      graft.operators.SimilaritySearch.streamAppendToIvfPqIndex(
-        readEmbStream(spark, d).filter(col("vec_id") >= 250),
-        cat, db, "emb")
+      graft.operators.Dedup.drainAndStop(graft.operators.Dedup.startBatches(
+        readEmbStream(spark, d).filter(col("vec_id") >= 250)) { batch =>
+        graft.operators.SimilaritySearch.appendToIvfPqIndex(spark, cat, db, "emb", batch)
+      })
       graft.operators.SimilaritySearch.searchIvfPqIndex(
         spark, cat, db, "emb", emb.filter(col("vec_id") < 10), k = 5)
     }
@@ -818,8 +821,8 @@ object StreamingQueries {
     * symmetry, now on the semantic geometry): the codebook + cell-
     * partitioned vectors persist over the FIRST corpus slice
     * (vec_id < 150), the second slice ([150, 250)) STREAM-APPENDS under
-    * that frozen codebook ([[graft.operators.Dedup
-    * .streamAppendToSemanticIndex]]) — at which point the sidecar drift
+    * that frozen codebook ([[graft.operators.Dedup.appendToSemanticIndex]]
+    * per micro-batch) — at which point the sidecar drift
     * fraction reads ≥ 0.5 — then [[graft.operators.Dedup
     * .rebuildSemanticIndex]] retrains the codebook from the standing
     * vectors with k re-sized by the autoClusters rule, and the arrival
@@ -840,10 +843,12 @@ object StreamingQueries {
     graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
       graft.operators.Dedup.persistSemanticIndex(cat, db, "seml",
         emb.filter(col("vec_id") < 150), "vec_id", "embedding")
-      graft.operators.Dedup.streamAppendToSemanticIndex(
+      graft.operators.Dedup.drainAndStop(graft.operators.Dedup.startBatches(
         readEmbStream(spark, d)
-          .filter(col("vec_id") >= 150 && col("vec_id") < 250),
-        cat, db, "seml", "vec_id", "embedding")
+          .filter(col("vec_id") >= 150 && col("vec_id") < 250)) { batch =>
+        graft.operators.Dedup.appendToSemanticIndex(cat, db, "seml", batch,
+          "vec_id", "embedding")
+      })
       val drift =
         graft.operators.SimilaritySearch.appendedDriftFraction(cat, db, "seml")
       require(drift >= 0.5,

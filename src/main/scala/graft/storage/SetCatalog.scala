@@ -20,12 +20,12 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType
   * [[SetCatalog.needsCompaction]] and the auto-compaction valve read,
   * without listing anything.
   *
-  * `staging` tags a set the catalog's OWN staged-rebuild machinery
-  * created (`*_rebuild` / `*_recap` generations written by the index
-  * lifecycles, via [[SetCatalog.markStaging]]): only tagged sets are
-  * fair game for [[SetCatalog.recoverAll]]'s convention sweep — a
-  * genuine USER set that happens to end in `_rebuild` is never
-  * discarded or force-swapped at catalog open. The tag is cleared by
+  * `staging` tags a generation the catalog's own
+  * [[SetCatalog.replaceSets]] staged (a `*_rebuild` set; recaps
+  * written by earlier versions staged under `*_recap`): only tagged
+  * sets are fair game for [[SetCatalog.recoverAll]]'s convention
+  * sweep — a genuine USER set that happens to end in `_rebuild` is
+  * never discarded or force-swapped at catalog open. The tag is cleared by
   * [[SetCatalog.renameSet]] when a staging set is adopted as the live
   * generation.
   *
@@ -172,7 +172,9 @@ object SetCatalog {
   /** Write `batch` as parquet under `path` with `mode` (partitioned by
     * `partitionColumn`, or bucketed by `bucketSpec`, when given) and
     * return the (rows, files) the write job produced, read off the
-    * write command's own metrics. The command is planned as
+    * write command's own metrics. The one write route of every create,
+    * append and compaction: no set is re-read, counted or listed to
+    * learn what its write produced. The command is planned as
     * `DataFrameWriter.save` plans it; running it through a
     * QueryExecution kept here is what makes its executed plan, and so
     * its metrics, reachable.
@@ -347,8 +349,11 @@ final class SetCatalog(spark: SparkSession, root: String,
     memo.synchronized(decodes.getOrElse((db, set), 0))
 
   /** The written set's read schema, seeded into the memo for the
-    * generation a create just wrote (its row count read inferred it,
-    * or, for a bucketed set, the frame it wrote carries it).
+    * generation a create just wrote: the frame it wrote carries it
+    * (file reads come back nullable whatever the frame declared). A
+    * directory-partitioned set is not seeded: which type partition
+    * inference gives its column (a long `bucket` reads back as int) is
+    * only known from a read, so its first [[scanSet]] infers.
     */
   private def seedSchema(db: String, set: String, written: DataFrame): Unit =
     remember(db, set, metaStamp(db, set), Some(written.schema), Map.empty)
@@ -373,23 +378,28 @@ final class SetCatalog(spark: SparkSession, root: String,
         s"${if (m.staging) "staging" else ""}\n$gen\n")
   }
 
-  /** Count a set directory's data files — used by the CREATE paths to
-    * seed the sidecar's file count (appends advance it by the files
-    * their write job reports, never by re-listing; see [[appendBatch]]).
-    * One listing per create is the same bill the create's own row-count
-    * read just paid.
+  /** The parquet data files under `p`, listed by one walk that is
+    * closed before returning.
     */
-  private def countDataFiles(db: String, set: String): Long = {
+  private def parquetFiles(p: java.nio.file.Path): List[java.nio.file.Path] = {
     import scala.jdk.CollectionConverters._
-    val p = Paths.get(dir(db, set))
-    if (!Files.exists(p)) 0L
+    if (!Files.exists(p)) Nil
     else {
       val walk = Files.walk(p)
-      try walk.iterator().asScala.count(q => Files.isRegularFile(q) &&
-        q.getFileName.toString.endsWith(".parquet")).toLong
+      try walk.iterator().asScala.filter(q => Files.isRegularFile(q) &&
+        q.getFileName.toString.endsWith(".parquet")).toList
       finally walk.close()
     }
   }
+
+  /** Count a set directory's data files by listing them. Writes never
+    * need this: every write takes its file count from its own command
+    * ([[SetCatalog.writeCounted]]). Only a sidecar whose count is
+    * unknown (a legacy `files = 0`) or may have drifted (the
+    * auto-compaction check) is re-seeded from the listing.
+    */
+  private def countDataFiles(db: String, set: String): Long =
+    parquetFiles(Paths.get(dir(db, set))).size.toLong
 
   /** `policy`: "hash" (partition by `partitionColumn` — the dispatcher's
     * hash-by-lambda placement), "roundrobin" (reference RoundRobinPolicy),
@@ -412,12 +422,11 @@ final class SetCatalog(spark: SparkSession, root: String,
       case _ => df
     }
     forget(db, set)
-    out.write.mode(SaveMode.Overwrite).parquet(dir(db, set))
-    val written = spark.read.parquet(dir(db, set))
+    val (rows, files) =
+      SetCatalog.writeCounted(spark, out, dir(db, set), SaveMode.Overwrite)
     writeMeta(db, set, SetMeta(partitionColumn,
-      if (policy == "fair") shares.sum else n, written.count(), policy,
-      shares, countDataFiles(db, set)))
-    seedSchema(db, set, written)
+      if (policy == "fair") shares.sum else n, rows, policy, shares, files))
+    seedSchema(db, set, out)
   }
 
   /** The set's current files, read under the memoized schema of its
@@ -568,28 +577,25 @@ final class SetCatalog(spark: SparkSession, root: String,
     rmTree(tmp); rmTree(old)
     forget(db, set)
     val df = spark.read.parquet(src.toString)
-    val out = (m.policy, m.partitionColumn) match {
+    val (out, partitionColumn) = (m.policy, m.partitionColumn) match {
       case ("dirpart", Some(c)) =>
         // one task (→ one file) per partition value; hash collisions
         // merging two small directories into one task are fine
-        df.repartition(df(c)).write.partitionBy(c)
+        (df.repartition(df(c)), Some(c))
       case ("hash", Some(c)) =>
-        df.repartition(m.numPartitions, df(c)).write
+        (df.repartition(m.numPartitions, df(c)), None)
       case _ =>
-        import scala.jdk.CollectionConverters._
-        val bytes = Files.walk(src).iterator().asScala
-          .filter(p => Files.isRegularFile(p) &&
-            p.getFileName.toString.endsWith(".parquet"))
-          .map(Files.size).sum
+        val bytes = parquetFiles(src).map(Files.size).sum
         val n = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
-        df.repartition(n.toInt).write
+        (df.repartition(n.toInt), None)
     }
-    out.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    val (_, files) = SetCatalog.writeCounted(spark, out, tmp.toString,
+      SaveMode.Overwrite, partitionColumn)
     Files.move(src, old)
     Files.move(tmp, src)
     rmTree(old)
     // layout and row count are preserved; only the file tiling changed
-    writeMeta(db, set, m.copy(files = countDataFiles(db, set)))
+    writeMeta(db, set, m.copy(files = files))
   }
 
   /** Directory-partitioned set: one subdirectory per distinct value of
@@ -603,13 +609,10 @@ final class SetCatalog(spark: SparkSession, root: String,
   def createPartitionedSet(db: String, set: String, df: DataFrame,
       partitionColumn: String): Unit = {
     forget(db, set)
-    df.write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionColumn)
-      .parquet(dir(db, set))
-    val written = spark.read.parquet(dir(db, set))
-    writeMeta(db, set, SetMeta(Some(partitionColumn), 0, written.count(),
-      "dirpart", files = countDataFiles(db, set)))
-    seedSchema(db, set, written)
+    val (rows, files) = SetCatalog.writeCounted(spark, df, dir(db, set),
+      SaveMode.Overwrite, Some(partitionColumn))
+    writeMeta(db, set, SetMeta(Some(partitionColumn), 0, rows, "dirpart",
+      files = files))
   }
 
   /** Append rows to an existing directory-partitioned set: new files land
@@ -755,14 +758,13 @@ final class SetCatalog(spark: SparkSession, root: String,
   }
 
   /** Tag `set` as a catalog-owned staging generation (see [[SetMeta]]).
-    * The staged-rebuild creators call this right after writing a
-    * `*_rebuild`/`*_recap` set; a crash between the create and the tag
-    * leaves an UNTAGGED leftover, which [[recoverAll]]'s convention
-    * sweep then ignores — the safe direction (a leak, healed by the
-    * next same-pairs rebuild's recovery preamble, never a discarded
-    * user set).
+    * [[replaceSets]] tags each `*_rebuild` set once its body has written
+    * them all; a crash before the tag leaves an UNTAGGED leftover,
+    * which [[recoverAll]]'s convention sweep then ignores — the safe
+    * direction (a leak, healed by the next [[replaceSets]] or
+    * [[recoverSets]] on the same targets, never a discarded user set).
     */
-  def markStaging(db: String, set: String): Unit =
+  private[graft] def markStaging(db: String, set: String): Unit =
     meta(db, set).foreach(m => writeMeta(db, set, m.copy(staging = true)))
 
   /** Delete the set's files and then its sidecar: the set is gone
@@ -1039,8 +1041,9 @@ final class SetCatalog(spark: SparkSession, root: String,
     * two member swaps. Crash-atomic means no swap state is ever LOST —
     * not that the window is invisible: between a crash inside the group
     * and the recovery run, a reader can still see a missing or
-    * mixed-generation target. Recovery runs as the next same-pairs
-    * rebuild's preamble AND catalog-wide at open via [[recoverAll]], so
+    * mixed-generation target. Recovery runs first in the next
+    * [[replaceSets]] or [[recoverSets]] on the same targets AND
+    * catalog-wide at open via [[recoverAll]], so
     * the window closes without waiting for the original pipeline to
     * rebuild again. Per-set markers could not give that: a crash
     * between a completed vectors swap and the pending centroids swap
@@ -1053,7 +1056,7 @@ final class SetCatalog(spark: SparkSession, root: String,
     * inside the remove presented a live-LOOKING target next to the
     * staging set, and the inference discarded the only copy.)
     */
-  def swapSetGroup(db: String, pairs: Seq[(String, String)]): Unit =
+  private[graft] def swapSetGroup(db: String, pairs: Seq[(String, String)]): Unit =
     withMaintenanceLease(db) {
       pairs.foreach { case (staging, _) =>
         require(meta(db, staging).isDefined,
@@ -1071,8 +1074,8 @@ final class SetCatalog(spark: SparkSession, root: String,
       Files.deleteIfExists(marker)
     }
 
-  /** Heal an interrupted [[swapSetGroup]]; call with the SAME pairs
-    * before starting a new staged rebuild. Marker PRESENT: the prior
+  /** Heal an interrupted [[swapSetGroup]] of exactly `pairs` (callers
+    * outside the catalog go through [[recoverSets]]). Marker PRESENT: the prior
     * group committed — every staging set is authoritative, so finish
     * each member's remove+rename (whatever partial state the crash
     * left: an un-removed or half-deleted target, a completed member, or
@@ -1084,8 +1087,57 @@ final class SetCatalog(spark: SparkSession, root: String,
     * footprint of a pre-marker-generation crash: adopt the staging copy
     * rather than guess destructively.
     */
-  def recoverSwapGroup(db: String, pairs: Seq[(String, String)]): Unit =
+  private[graft] def recoverSwapGroup(db: String, pairs: Seq[(String, String)]): Unit =
     withMaintenanceLease(db) { recoverSwapGroupLocked(db, pairs) }
+
+  /** Each target paired with the name [[replaceSets]] stages it under. */
+  private def stagingPairs(targets: Seq[String]): Seq[(String, String)] =
+    targets.map(t => s"${t}_rebuild" -> t)
+
+  /** The `staging -> target` pairs a swap marker records; empty when
+    * the marker is absent or records none.
+    */
+  private def markerPairs(marker: java.nio.file.Path): Seq[(String, String)] =
+    if (!Files.exists(marker)) Nil
+    else Files.readString(marker).split("\n").toSeq
+      .filter(_.contains(" -> "))
+      .map { line => val Array(s, t) = line.split(" -> ", 2); (s.trim, t.trim) }
+
+  /** Heal the group `targets` left by an interrupted [[replaceSets]]:
+    * the step [[replaceSets]] runs first, and the one a writer that
+    * appends to such a group runs before it reads. When the group's
+    * marker exists, the pairs it RECORDS are replayed, whatever staging
+    * names they carry (an older recap staged under `*_recap`); without
+    * one, leftovers under the staging names are resolved by
+    * [[recoverSwapGroup]]'s no-marker rules. Cost on the clean path:
+    * the lease, one marker check and the staging-sidecar checks.
+    */
+  def recoverSets(db: String, targets: Seq[String]): Unit =
+    withMaintenanceLease(db) {
+      val recorded = markerPairs(swapMarker(db, targets))
+      recoverSwapGroupLocked(db,
+        if (recorded.nonEmpty) recorded else stagingPairs(targets))
+    }
+
+  /** Replace every set in `targets` with a new generation, as one
+    * crash-atomic group — the one route of every index rebuild and
+    * recap. The group is recovered first ([[recoverSets]]). Then
+    * `stage` runs while readers still see the live generation: it
+    * writes each new generation, through any create call, under the
+    * staging name the function it is handed returns for that target.
+    * Then every staged set is tagged ([[markStaging]]) and the group is
+    * swapped in ([[swapSetGroup]]). When `stage` throws, the live
+    * targets are untouched, and the next call on the same targets
+    * discards what it left.
+    */
+  def replaceSets(db: String, targets: Seq[String])(
+      stage: (String => String) => Unit): Unit = {
+    val pairs = stagingPairs(targets)
+    recoverSets(db, targets)
+    stage(pairs.map(_.swap).toMap)
+    pairs.foreach { case (staging, _) => markStaging(db, staging) }
+    swapSetGroup(db, pairs)
+  }
 
   private def recoverSwapGroupLocked(
       db: String, pairs: Seq[(String, String)]): Unit = {
@@ -1138,8 +1190,8 @@ final class SetCatalog(spark: SparkSession, root: String,
 
   /** Catalog-wide crash recovery (VERDICT r14 next #6): heal EVERY
     * interrupted staged swap under `db`, whoever started it — the entry
-    * point a session runs at catalog open. [[recoverSwapGroup]] heals
-    * only when the SAME rebuild re-runs with the same pairs; an orphaned
+    * point a session runs at catalog open. [[recoverSets]] heals only
+    * the group its caller names, when that caller runs again; an orphaned
     * marker from a pipeline that never rebuilds again was healed by
     * nobody, and until then searches could see a missing or
     * mixed-generation target (the serving window ADVICE r14 #3 named).
@@ -1150,17 +1202,18 @@ final class SetCatalog(spark: SparkSession, root: String,
     *     — the marker body IS the recovery plan, so a stranger needs no
     *     knowledge of which rebuild wrote it;
     *  2. every leftover set named by the staging convention
-    *     (`*_rebuild`, `*_recap`) AND carrying the [[SetMeta.staging]]
-    *     tag — i.e. provably written by the catalog's own staged-rebuild
-    *     machinery, never a user set that merely shares the suffix — is
+    *     (`*_rebuild`, or `*_recap`, which recaps of earlier versions
+    *     staged under) AND carrying the [[SetMeta.staging]]
+    *     tag — i.e. provably written by [[replaceSets]], never a user
+    *     set that merely shares the suffix — is
     *     resolved against its implied target by [[recoverSwapGroup]]'s
     *     no-marker rules: discarded when the target is live (staged sets
     *     re-derive deterministically), adopted when the target is gone
     *     or half-moved. An untagged conventional name (a user set, or
     *     the footprint of a crash between a staging create and its
     *     [[markStaging]]) is left alone — the safe direction; a true
-    *     untagged leftover is healed by the next same-pairs rebuild's
-    *     recovery preamble instead.
+    *     untagged leftover is healed by the next [[replaceSets]] or
+    *     [[recoverSets]] on the same targets instead.
     *
     * SINGLE-WRITER assumption (all maintenance, not just recovery): one
     * session owns a catalog root's rebuilds at a time. `recoverDbsOnOpen`
@@ -1210,12 +1263,7 @@ final class SetCatalog(spark: SparkSession, root: String,
     val healed = scala.collection.mutable.Buffer[String]()
     entries.filter(e => e.startsWith(prefix) && e.endsWith(".swapin"))
       .foreach { markerName =>
-        val marker = Paths.get(s"$root/$markerName")
-        val pairs = Files.readString(marker).split("\n")
-          .filter(_.contains(" -> "))
-          .map { line =>
-            val Array(s, t) = line.split(" -> ", 2); (s.trim, t.trim)
-          }.toSeq
+        val pairs = markerPairs(Paths.get(s"$root/$markerName"))
         if (pairs.nonEmpty) {
           recoverSwapGroupLocked(db, pairs)
           healed += s"marker:$markerName"

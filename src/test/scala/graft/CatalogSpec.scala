@@ -792,4 +792,83 @@ class CatalogSpec extends GraftSpecBase {
         Set((0L, false), (1L, false), (2L, true), (3L, true)))
     } finally pool.shutdown()
   }
+
+  test("createSet, createPartitionedSet and stampRows each run one Spark job") {
+    val sets = new SetCatalog(spark, tempRoot("graft-onejob").toString)
+    val rows = spark.range(20000).select(col("id"), (col("id") % 7).as("g"))
+    // the write is the only job: rows and files come from its command,
+    // and nothing re-reads, counts or lists the set
+    assert(jobsOf(sets.createSet("db", "plain", rows, policy = "none")) == 1)
+    assert(jobsOf(sets.createPartitionedSet("db", "part", rows, "g")) == 1)
+    assert(jobsOf(sets.stampRows("db", "plain", "plain_stamp")) == 1)
+    assert(sets.meta("db", "plain").get.rows == 20000L &&
+      sets.meta("db", "part").get.rows == 20000L)
+    assert(sets.growthSinceStamp("db", "plain", "plain_stamp") == 0.0)
+  }
+
+  test("every layout's sidecar rows and files equal a count and a listing") {
+    val r = tempRoot("graft-layouts").toString
+    val sets = new SetCatalog(spark, r)
+    val nation = Tables.nation(spark, sfDir)
+    sets.createSet("db", "none", nation, policy = "none")
+    sets.createSet("db", "hash", nation,
+      partitionColumn = Some("n_regionkey"), numPartitions = 3)
+    sets.createSet("db", "roundrobin", nation, numPartitions = 3,
+      policy = "roundrobin")
+    sets.createSet("db", "fair", nation, policy = "fair",
+      nodeWeights = Seq(2.0, 1.0))
+    sets.createPartitionedSet("db", "dirpart", nation, "n_regionkey")
+    sets.createBucketedSet("db", "bucket", nation, "n_nationkey", 4)
+    for (set <- Seq("none", "hash", "roundrobin", "fair", "dirpart", "bucket")) {
+      val m = sets.meta("db", set).get
+      assert(m.policy == set)
+      assert(m.rows == spark.read.parquet(s"$r/db.$set").count(), s"$set rows")
+      assert(m.files == listedFiles(s"$r/db.$set"), s"$set files")
+    }
+  }
+
+  test("a null appended into a set created from a non-null frame reads back as null") {
+    import spark.implicits._
+    val sets = new SetCatalog(spark, tempRoot("graft-null").toString)
+    val created = Seq((1L, 10L), (2L, 20L)).toDF("k", "v")
+    assert(!created.schema("v").nullable, "fixture needs a non-null column")
+    sets.createSet("db", "t", created, policy = "none")
+    sets.appendToSet("db", "t", Seq((3L, Option.empty[Long])).toDF("k", "v"))
+    val t = sets.scanSet("db", "t")
+    assert(t.schema("v").nullable)
+    // a non-null read schema would let the optimizer fold this to 0
+    assert(t.where(col("v").isNull).select("k").as[Long].collect().toSeq == Seq(3L))
+  }
+
+  test("replaceSets: a body that throws leaves the live sets; the next call discards its leftovers") {
+    import java.nio.file.Paths
+    val r = tempRoot("graft-replace").toString
+    val sets = new SetCatalog(spark, r)
+    val nation = Tables.nation(spark, sfDir)
+    sets.createSet("db", "a", nation, policy = "none")
+    sets.createSet("db", "b", nation.limit(10), policy = "none")
+    def names = sets.listSets().collect { case ("db", s) => s }.toSet
+    val boom = new IllegalStateException("stage failed")
+    val thrown = intercept[IllegalStateException] {
+      sets.replaceSets("db", Seq("a", "b")) { staged =>
+        sets.createSet("db", staged("a"), nation.limit(3), policy = "none")
+        throw boom
+      }
+    }
+    assert(thrown eq boom)
+    assert(sets.scanSet("db", "a").count() == 25L &&
+      sets.scanSet("db", "b").count() == 10L, "a failed stage touched a live set")
+    assert(names.size == 3, s"the failed stage left no staged set: $names")
+    sets.replaceSets("db", Seq("a", "b")) { staged =>
+      assert(sets.meta("db", staged("a")).isEmpty,
+        "the leftover was not discarded before the body ran")
+      sets.createSet("db", staged("a"), nation.limit(5), policy = "none")
+      sets.createSet("db", staged("b"), nation.limit(7), policy = "none")
+    }
+    assert(sets.scanSet("db", "a").count() == 5L &&
+      sets.scanSet("db", "b").count() == 7L)
+    assert(names == Set("a", "b"))
+    assert(Seq("a", "b").forall(t => sets.meta("db", t).exists(!_.staging)))
+    assert(!Files.exists(Paths.get(s"$r/db.a+b.swapin")))
+  }
 }

@@ -38,4 +38,26 @@ class DocCommentSpec extends AnyFunSuite {
     }
     assert(hits.isEmpty, s"session-catalog use in src/main at: $hits")
   }
+
+  test("src/main stages and writes sets only inside graft/storage") {
+    // one write route (SetCatalog.writeCounted) and one staged-replace
+    // route (SetCatalog.replaceSets): the swap steps and the staging
+    // names stay inside the storage package
+    val swap = java.util.regex.Pattern.compile(
+      "markStaging|swapSetGroup|recoverSwapGroup|_rebuild\"|_recap")
+    val hits = mainSources.filterNot(_.toString.contains("graft/storage/"))
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if swap.matcher(line).find() => s"$p:${i + 1}"
+        }
+      }
+    assert(hits.isEmpty, s"staging protocol outside graft/storage at: $hits")
+    val catalog = mainSources.filter(_.endsWith("storage/SetCatalog.scala"))
+    assert(catalog.size == 1)
+    // a DataFrameWriter (`.write`), not writeCounted or writeMeta
+    val writer = java.util.regex.Pattern.compile("\\.write\\b")
+    val writes = java.nio.file.Files.readAllLines(catalog.head).asScala
+      .zipWithIndex.collect { case (line, i) if writer.matcher(line).find() => i + 1 }
+    assert(writes.isEmpty, s"SetCatalog.scala writes outside writeCounted at lines $writes")
+  }
 }

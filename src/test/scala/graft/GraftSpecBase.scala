@@ -1,6 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -20,6 +23,30 @@ trait GraftSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     val p = Files.createTempDirectory(prefix)
     tempRoots.add(p)
     p
+  }
+
+  /** Spark jobs started while `body` runs (listener bus drained on both
+    * sides, so no event of `body` is missed or leaks in).
+    */
+  def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    ListenerBusDrain(sc)
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try { body; ListenerBusDrain(sc) } finally sc.removeSparkListener(l)
+    n.get
+  }
+
+  /** The parquet data files under `dir`, counted by a listing. */
+  def listedFiles(dir: String): Long = {
+    import scala.jdk.CollectionConverters._
+    val w = Files.walk(java.nio.file.Paths.get(dir))
+    try w.iterator().asScala.count(p => Files.isRegularFile(p) &&
+      p.getFileName.toString.endsWith(".parquet")).toLong
+    finally w.close()
   }
 
   override def afterAll(): Unit =

@@ -1,9 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.model.Tables
@@ -16,29 +13,6 @@ import graft.storage.SetCatalog
   * persisted assignment-kernel witness.
   */
 class StandingIndexSpec extends GraftSpecBase {
-
-  /** Spark jobs started while `body` runs (listener bus drained on both
-    * sides, so no event of `body` is missed or leaks in).
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    ListenerBusDrain(sc)
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    try { body; ListenerBusDrain(sc) } finally sc.removeSparkListener(l)
-    n.get
-  }
-
-  private def listedFiles(root: String, set: String): Long = {
-    import scala.jdk.CollectionConverters._
-    val w = Files.walk(Paths.get(s"$root/$set"))
-    try w.iterator().asScala.count(p => Files.isRegularFile(p) &&
-      p.getFileName.toString.endsWith(".parquet")).toLong
-    finally w.close()
-  }
 
   /** A seeded dim-16 corpus written as parquet, so slices and arrivals
     * are file scans like a standing pipeline's inputs.
@@ -103,7 +77,7 @@ class StandingIndexSpec extends GraftSpecBase {
       for (set <- Seq(s"plain$mrf", s"part$mrf")) {
         val m = cat.meta("db", set).get
         assert(m.rows == cat.scanSet("db", set).count(), s"$set rows (mrf=$mrf)")
-        assert(m.files == listedFiles(root, s"db.$set"), s"$set files (mrf=$mrf)")
+        assert(m.files == listedFiles(s"$root/db.$set"), s"$set files (mrf=$mrf)")
       }
     } finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
   }
@@ -152,7 +126,7 @@ class StandingIndexSpec extends GraftSpecBase {
       assert(cat.scanSet("db", set).count() == 25L)
       cat.appendToSet("db", set, nation.limit(5))
       val m = cat.meta("db", set).get
-      assert(m.rows == 30L && m.files == listedFiles(root, s"db.$set"))
+      assert(m.rows == 30L && m.files == listedFiles(s"$root/db.$set"))
       assert(cat.scanSet("db", set).count() == 30L)
     }
   }

@@ -1092,4 +1092,40 @@ class StreamingSpec extends GraftSpecBase {
     assert(graft.queries.StreamingQueries.streamSession(spark).conf
       .get("spark.sql.shuffle.partitions") == slots.toString)
   }
+
+  test("an ingest batch finishes a recap swap recorded under the earlier _recap names") {
+    import java.nio.file.{Files, Paths}
+    import spark.implicits._
+    def docs(ids: Long*) = ids.map(i =>
+      (i, (0 until 30).map(j => s"d${i}_$j").mkString(" "))).toDF("doc_id", "text")
+    val root = tempRoot("graft-recap-upgrade").toString
+    val cat = new graft.storage.SetCatalog(spark, root)
+    graft.operators.Dedup.ingestNearDupBatch(docs(1L, 2L, 3L), cat, "t", "up",
+      "doc_id", "text").count()
+    // an earlier recap's footprint: both new generations staged and
+    // tagged under `_recap` (the new bands drop band 0), the group
+    // marker recording those names, and the crash after the first
+    // member (the sets) swapped in
+    for ((set, rows) <- Seq("up_sets" -> cat.scanSet("t", "up_sets"),
+        "up_bands" -> cat.scanSet("t", "up_bands").where(col("band") =!= 0))) {
+      cat.createSet("t", s"${set}_recap", rows,
+        partitionColumn = cat.meta("t", set).flatMap(_.partitionColumn))
+      cat.markStaging("t", s"${set}_recap")
+    }
+    val marker = Paths.get(s"$root/t.up_bands+up_sets.swapin")
+    Files.writeString(marker, "up_sets_recap -> up_sets\nup_bands_recap -> up_bands")
+    cat.removeSet("t", "up_sets")
+    cat.renameSet("t", "up_sets_recap", "up_sets")
+    graft.operators.Dedup.ingestNearDupBatch(docs(4L), cat, "t", "up",
+      "doc_id", "text").count()
+    assert(!Files.exists(marker) && cat.meta("t", "up_bands_recap").isEmpty,
+      "the recorded swap was not finished")
+    val bands = cat.scanSet("t", "up_bands")
+    assert(bands.where(col("band") === 0 && col("id") < 4L).count() == 0L,
+      "the old bands generation is still live")
+    assert(bands.where(col("id") === 4L).count() ==
+      bands.where(col("id") === 1L).count() + 1L,
+      "the batch did not ingest into the new generation")
+    assert(cat.scanSet("t", "up_sets").count() == 4L)
+  }
 }
