@@ -14,14 +14,15 @@ import graft.functions.TextFunctions._
   *    [[ngramJaccardPairs]] / [[simhashPairs]] → [[dupClusters]] → keep
   *    list), plus the ingest-time forms ([[crossPairs]],
   *    [[persistLshIndex]], [[streamNearDupPairs]], and the exact-match
-  *    standing index [[persistExactIndex]] / [[exactAgainstStoredIndex]]
-  *    / [[streamExactAgainstStoredIndex]]);
+  *    standing index [[persistExactIndex]] / [[exactAgainstStoredIndex]]);
   *  - passage-level exact ([[duplicateSpans]] → [[stripDuplicateSpans]],
-  *    ingest-time [[persistGramIndex]] / [[spansAgainstStoredIndex]] /
-  *    [[streamSpansAgainstStoredIndex]]);
+  *    ingest-time [[persistGramIndex]] / [[spansAgainstStoredIndex]]);
   *  - embedding near-dup ([[cosinePairs]] brute baseline,
   *    [[cosineLshPairs]] hyperplane LSH);
   *  - semantic / paraphrase-level ([[semanticPairs]], kmeans-bucketed).
+  *
+  * A stream over any standing index is [[streamProbe]] over that index's
+  * batch probe.
   *
   * Scale design: every op is a shuffle-on-key plan. Exact dedup shuffles on
   * the content hash; MinHash/SimHash shuffle on band keys (candidate pairs
@@ -358,22 +359,10 @@ object Dedup {
 
   /** Streaming ingest dedup: match an arriving document stream against the
     * static corpus index, one [[crossPairsAgainstIndex]] per micro-batch
-    * (foreachBatch — the batch kernels run unchanged on each batch, the
-    * same pattern as [[graft.streaming.EventStreams.upsertSnapshot]]).
-    * Output is batching-invariant by construction: the hot-bucket cap
-    * lives in the index, and each arriving doc's pairs depend only on that
-    * doc plus the index — so any batching unions to the one-shot batch
-    * result.
-    *
-    * Two accumulation modes for the pair log. With `sink` set to
-    * `(catalog, db, set)`, each batch's pairs APPEND to that stored set
-    * and the returned frame scans it — the production form: the log
-    * lives in reliable storage, nothing driver-anchored grows with the
-    * stream, and a restarted pipeline keeps appending to the same set.
-    * Without a sink (the oracle-query form) the log accumulates as
-    * per-batch driver-held checkpoints and is returned when the stream
-    * drains — fine at fixture scale, but the checkpoint chain is pinned
-    * to this session's executors.
+    * through [[streamProbe]] (batching-invariant: the hot-bucket cap
+    * lives in the index, so each arriving doc's pairs depend only on that
+    * doc plus the index). The in-memory corpus index is built here and
+    * released when the stream stops, also when a batch fails.
     */
   def streamNearDupPairs(
       stream: DataFrame, corpus: DataFrame, idCol: String, textCol: String,
@@ -382,110 +371,82 @@ object Dedup {
       sink: Option[(graft.storage.SetCatalog, String, String)] = None): DataFrame = {
     val (cSets, cBanded) =
       corpusLshIndex(corpus, idCol, textCol, k, bands, shingleN, maxBucket)
-    val out = streamProbe(stream,
+    try streamProbe(stream,
       batch => crossPairsAgainstIndex(batch, cSets, cBanded,
         idCol, textCol, threshold, k, bands, shingleN),
       sink)
-    cSets.unpersist(blocking = false)
-    cBanded.unpersist(blocking = false)
-    out
+    finally { cSets.unpersist(blocking = false); cBanded.unpersist(blocking = false) }
   }
 
-  /** SELF-GROWING streaming near-dup — the MinHash analogue of
-    * [[streamIngestExactDedup]]: arrivals pair against everything that
-    * arrived BEFORE them, not against a frozen corpus. Each micro-batch
-    * (1) self-joins its own band keys for intra-batch candidate pairs
-    * (id_a < id_b), (2) joins them against the STANDING band set for
-    * cross-batch candidates, (3) verifies both with exact shingle
-    * jaccard, and (4) appends the batch's shingle sets + band keys to
-    * the standing sets so every later batch pairs against this one.
-    * Under ANY batching of the arrivals — ordered or interleaved ids
-    * alike — the accumulated pair log is EXACTLY the one-shot self-join
-    * pair set ([[minhashPairs]]' canonical output, which the
-    * exact-jaccard oracle pins): each true pair is found once, by
-    * whichever batch arrives later (candidates are canonicalized to
-    * id_a < id_b, not orientation-filtered — [[ingestNearDupCandidates]]).
-    * The verified frame is localCheckpointed BEFORE the appends
-    * ([[streamIngestExactDedup]]'s reason: a lazy recompute after the
-    * append would find each arrival's own bands in the standing set).
+  /** One micro-batch of SELF-GROWING near-dup ingest — the MinHash
+    * analogue of [[ingestExactDedupBatch]]: arrivals pair against
+    * everything that arrived BEFORE them, not against a frozen corpus.
+    * The stream form is `streamProbe(stream, ingestNearDupBatch(_, …))`;
+    * a caller can also drive successive batches directly and time each
+    * one against the growing standing set. Each batch (1) self-joins its
+    * own band keys for intra-batch candidate pairs, (2) joins them
+    * against the STANDING band set for cross-batch candidates, (3)
+    * verifies both with exact shingle jaccard, and (4) appends its
+    * shingle sets + band keys to the standing sets so every later batch
+    * pairs against this one. Under ANY batching of the arrivals —
+    * ordered or interleaved ids alike — the accumulated pair log is
+    * EXACTLY the one-shot self-join pair set ([[minhashPairs]]'
+    * canonical output, which the exact-jaccard oracle pins): each true
+    * pair is found once, by whichever batch arrives later. The verified
+    * frame is localCheckpointed BEFORE the appends: a lazy recompute
+    * after them would find each arrival's own bands in the standing set.
     *
     * No PER-BATCH hot-bucket cap, unlike the static-index forms: a
     * growing index cannot compute a batching-invariant global bucket
     * census mid-stream. The ≥2-band candidate rule bounds background
-    * collisions between recaps, and the maintenance valve IS code:
-    * [[recapIngestNearDupIndex]] periodically compacts the growing sets
-    * into a fresh generation with the static forms' hot-bucket census
-    * re-applied (crash-committed via
-    * [[graft.storage.SetCatalog.replaceSets]], the ANN rebuild
-    * route), after which the sets keep ingesting —
-    * [[ingestBandCensus]] is the dial that says when.
+    * collisions between recaps, and [[recapIngestNearDupIndex]]
+    * compacts the growing sets into a fresh generation with the static
+    * forms' hot-bucket census re-applied (crash-committed via
+    * [[graft.storage.SetCatalog.replaceSets]]), after which the sets
+    * keep ingesting; [[ingestBandCensus]] is the dial that says when,
+    * and `spark.graft.dedup.ingest.autoRecap.growth` runs that policy
+    * ([[maybeRecapIngestNearDupIndex]]) after every batch.
     *
     * Scale shape: the standing sets are hash-layout catalog sets
-    * (APPENDABLE — the growth is the point; the write-once bucketed
-    * layout of [[persistLshIndex]] refuses appends), with
-    * [[recapIngestNearDupIndex]] as the combined compaction +
-    * re-cap maintenance pass. Each batch costs one arrival-sized
-    * shingle/signature pass, ONE full scan of each standing set plus a
-    * column-pruned id read (see [[ingestNearDupBatch]]), and a
-    * candidate-sized verify; the sets grow with corpus size exactly
-    * like the static index's build side.
-    *
-    * Replay-safe under foreachBatch's at-least-once contract: emitted
-    * pairs are canonical (id_a < id_b) and candidate-deduped, so a
-    * re-executed micro-batch emits exactly its first attempt's pairs;
-    * the appends are guarded by standing-set membership, so it grows
-    * nothing twice and every crash window between or inside the two
-    * appends heals on replay ([[ingestNearDupBatch]] enumerates them).
-    */
-  def streamIngestNearDup(
-      stream: DataFrame, catalog: graft.storage.SetCatalog,
-      db: String, name: String, idCol: String, textCol: String,
-      threshold: Double = 0.8, k: Int = 128, bands: Int = 32,
-      shingleN: Int = 2,
-      sink: Option[(graft.storage.SetCatalog, String, String)] = None): DataFrame =
-    streamProbe(stream, batch => ingestNearDupBatch(batch, catalog, db, name,
-      idCol, textCol, threshold, k, bands, shingleN), sink)
-
-  /** One micro-batch of [[streamIngestNearDup]]: probe + grow. Public as
-    * the batch kernel so a caller can drive successive batches directly
-    * and time each one against the growing standing set.
-    *
-    * Standing-set IO per batch — ONE full scan of each standing set
+    * (APPENDABLE — the write-once bucketed layout of [[persistLshIndex]]
+    * refuses appends), and each batch costs one arrival-sized
+    * shingle/signature pass, ONE full scan of each standing set
     * (VERDICT r14 next #2; the r14 shape re-scanned both sets for the
-    * append anti-joins, 3× standing bytes per batch): the band set is
-    * read once by the candidate join, the shingle set once by the
-    * verify join, and the replay/append guard below reads only the
-    * shingle set's ID COLUMN (a column-pruned parquet read — at 100 TB
-    * the shingle payload dwarfs the 8-byte id column, so guard bytes
-    * are ~0 of set bytes; PlanSpec pins both the scan counts and the
-    * guard's pruned ReadSchema).
+    * append anti-joins, 3× standing bytes per batch) and a
+    * candidate-sized verify: the band set is read once by the candidate
+    * join, the shingle set once by the verify join, and the replay/append
+    * guard below reads only the shingle set's ID COLUMN (a column-pruned
+    * parquet read — at 100 TB the shingle payload dwarfs the 8-byte id
+    * column, so guard bytes are ~0 of set bytes; PlanSpec pins both the
+    * scan counts and the guard's pruned ReadSchema).
     *
     * Replay-safe under foreachBatch's at-least-once contract WITHOUT
     * excluding the batch's ids from the standing side (the r14
     * mechanism, which is what forced the extra scans): candidate pairs
     * are canonicalized to id_a < id_b via least/greatest BEFORE
-    * aggregation, so a replayed batch's standing copies produce only
-    * (a) self-pairs, dropped by the strict inequality, and (b) copies
-    * of the batch's own intra pairs, collapsed by the distinct() on the
-    * candidate union — a re-executed micro-batch emits exactly its
-    * first attempt's pairs. Canonicalization (not an orientation
-    * filter) makes pair discovery DELIVERY-ORDER INDEPENDENT: a
-    * standing id larger than the arrival's still pairs (ids may arrive
-    * interleaved, as modulo batching delivers them), and emitted
-    * orientation can never flip (the oracle-side concern ADVICE r14 #4
-    * raised). The verify side therefore resolves BOTH pair columns
-    * through one candidate-id shingle lookup ([[ingestNearDupLookup]]).
+    * aggregation ([[ingestNearDupCandidates]]), so a replayed batch's
+    * standing copies produce only (a) self-pairs, dropped by the strict
+    * inequality, and (b) copies of the batch's own intra pairs,
+    * collapsed by the distinct() on the candidate union — a re-executed
+    * micro-batch emits exactly its first attempt's pairs.
+    * Canonicalization (not an orientation filter) makes pair discovery
+    * DELIVERY-ORDER INDEPENDENT: a standing id larger than the arrival's
+    * still pairs (ids may arrive interleaved, as modulo batching
+    * delivers them), and emitted orientation can never flip (the
+    * oracle-side concern ADVICE r14 #4 raised). The verify side
+    * therefore resolves BOTH pair columns through one candidate-id
+    * shingle lookup ([[ingestNearDupLookup]]).
     *
     * Both appends are guarded by one tiny `replayed` frame (batch ids
     * already present in the standing SHINGLE set, the LAST set the
-    * append sequence writes), so every crash window heals on replay:
-    * a crash before/inside the bands append re-appends that id's full
-    * band rows (duplicates are harmless — the candidate aggregate
-    * counts DISTINCT bands, so a healed duplicate can never inflate
-    * the ≥2-band rule, closing ADVICE r14 #2's partial-band-append
-    * hole); a crash inside the sets append re-appends only the missing
-    * ids. Only after BOTH appends land does the guard see the id and
-    * skip it.
+    * append sequence writes), so the batch grows nothing twice and every
+    * crash window heals on replay: a crash before/inside the bands
+    * append re-appends that id's full band rows (duplicates are
+    * harmless — the candidate aggregate counts DISTINCT bands, so a
+    * healed duplicate can never inflate the ≥2-band rule, closing ADVICE
+    * r14 #2's partial-band-append hole); a crash inside the sets append
+    * re-appends only the missing ids. Only after BOTH appends land does
+    * the guard see the id and skip it.
     */
   def ingestNearDupBatch(
       batch: DataFrame, catalog: graft.storage.SetCatalog,
@@ -646,7 +607,7 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
-  /** Band-bucket census of a [[streamIngestNearDup]] standing index:
+  /** Band-bucket census of an [[ingestNearDupBatch]] standing index:
     * (band, bkey, bucket_n) with bucket_n = DISTINCT standing ids in the
     * bucket (duplicates from healed crash windows don't inflate it).
     * This is the dial that says when to run
@@ -777,18 +738,41 @@ object Dedup {
     }
   }
 
-  /** Shared per-micro-batch probe harness for the streaming ingest-dedup
-    * forms: run `perBatch` on every micro-batch, appending results to the
-    * catalog `sink` when given (the production form — the log set is
-    * created if missing and APPENDED to if present, the restart
-    * semantics a standing pipeline needs), else accumulating
-    * driver-side localCheckpoints (the oracle-harness convenience). The
-    * sink/restart/empty-stream semantics live HERE once, so the three
-    * streaming families cannot drift apart.
+  /** The one stream form for every standing index: run `perBatch` — the
+    * family's batch probe, e.g. `exactAgainstStoredIndex(_, catalog, db,
+    * name, idCol, textCol)` — on every micro-batch of `stream` and return
+    * its accumulated output once the stream has drained.
+    *
+    * Batching invariance: when a row's output depends only on that row
+    * and the standing state, any split of the arrivals into micro-batches
+    * unions to the one-shot batch probe. The self-growing ingest kernels
+    * ([[ingestExactDedupBatch]], [[ingestNearDupBatch]]) grow their own
+    * state and state their own invariants.
+    *
+    * LIVE-INDEX: `perBatch` runs once per micro-batch, so a probe that
+    * scans its index inside its body (every `*AgainstStoredIndex` probe
+    * and [[semanticProbeFn]] do) sees each new generation: an append or
+    * re-persist landing between batches is what the next batch probes,
+    * and a rebuild swap, which deletes the old generation's directories,
+    * is survived. A plan captured once at stream start would pin the
+    * original file listing for the stream's whole life. Maintenance runs
+    * between batches of the owning pipeline (single writer), so one batch
+    * reads one generation.
+    *
+    * Sink, restart and empty stream: with `sink = Some((catalog, db,
+    * set))` each batch's output APPENDS to that stored set, created if
+    * missing, and the returned frame scans it — the production form:
+    * the log lives in reliable storage, nothing driver-anchored grows
+    * with the stream, and a restarted pipeline keeps appending to the
+    * same set. Without a sink (the oracle-query form) the output
+    * accumulates as driver-held localCheckpoints, pinned to this
+    * session's executors. An empty stream returns `perBatch` run on an
+    * empty input, so the schema holds either way. The stream is stopped
+    * also when a batch fails.
     */
-  private[graft] def streamProbe(
+  def streamProbe(
       stream: DataFrame, perBatch: DataFrame => DataFrame,
-      sink: Option[(graft.storage.SetCatalog, String, String)]): DataFrame = {
+      sink: Option[(graft.storage.SetCatalog, String, String)] = None): DataFrame = {
     val (q, result) = startProbe(stream, perBatch, sink)
     drainAndStop(q)
     result()
@@ -856,43 +840,6 @@ object Dedup {
   private[graft] def drainAndStop(
       q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
     try q.processAllAvailable() finally q.stop()
-
-  /** Streaming form of [[spansAgainstStoredIndex]] — per-micro-batch
-    * probe of the CATALOG-PERSISTED gram index, completing streaming
-    * parity for the span family (the whole-doc analogue is
-    * [[streamNearDupPairs]]). Batching-invariant by construction: each
-    * arriving doc's spans depend only on that doc plus the static index
-    * (the span epilogue's gaps-and-islands window partitions by doc), so
-    * any batching unions to the one-shot result. Same two accumulation
-    * modes as [[streamNearDupPairs]]: with `sink`, per-batch spans APPEND
-    * to a stored set (the production form); without, the log accumulates
-    * as driver-held checkpoints and returns when the stream drains (the
-    * oracle-query form).
-    *
-    * LIVE-INDEX contract (shared by every stored-index probe stream —
-    * see [[streamSemanticAgainstIndex]] for the full statement): the
-    * gram index is re-resolved INSIDE the batch closure, so an index
-    * re-persisted or swapped between micro-batches is what the next
-    * batch probes — a plan captured at stream start would pin the
-    * original file listing for the stream's whole life.
-    */
-  def streamSpansAgainstStoredIndex(
-      stream: DataFrame, catalog: graft.storage.SetCatalog,
-      db: String, name: String, idCol: String, textCol: String,
-      k: Int = 8,
-      sink: Option[(graft.storage.SetCatalog, String, String)] = None): DataFrame =
-    streamProbe(stream, spansProbeFn(catalog, db, name, idCol, textCol, k),
-      sink)
-
-  /** Per-batch probe closure of [[streamSpansAgainstStoredIndex]],
-    * package-visible so the mid-stream lifecycle specs can drive it
-    * through [[startProbe]].
-    */
-  private[graft] def spansProbeFn(
-      catalog: graft.storage.SetCatalog, db: String, name: String,
-      idCol: String, textCol: String, k: Int): DataFrame => DataFrame =
-    batch => spansAgainstGrams(batch, scanGramIndex(catalog, db, name),
-      idCol, textCol, k)
 
   /** Diagnostic: passes the last distributed [[dupClusters]] run took to
     * converge (−1 when the driver union-find regime answered instead).
@@ -1425,44 +1372,19 @@ object Dedup {
       newRows.select(keyCols.map(col) :+ col(fpCol).as("fp"): _*),
       corpusFps, keyCols, "fp")
 
-  /** Streaming form of [[exactAgainstStoredIndex]]: each micro-batch of
-    * the ingest stream probes the persisted hash index and its
-    * flags are appended (to `sink` when given, else a driver-side
-    * accumulation for the test harness — same convenience/production
-    * split as [[streamNearDupPairs]]). Batching-invariant by
-    * construction: is_dup depends only on the doc itself and the index
-    * generation current at its batch, so per-batch outputs union to the
-    * one-shot batch result no matter how arrivals are split.
-    *
-    * LIVE-INDEX contract: the hash index is re-resolved INSIDE the
-    * batch closure (see [[streamSemanticAgainstIndex]]), so a
-    * re-persisted index generation is what the next micro-batch probes.
-    */
-  def streamExactAgainstStoredIndex(
-      stream: DataFrame, catalog: graft.storage.SetCatalog,
-      db: String, name: String, idCol: String, textCol: String,
-      sink: Option[(graft.storage.SetCatalog, String, String)] = None): DataFrame =
-    streamProbe(stream, exactProbeFn(catalog, db, name, idCol, textCol), sink)
-
-  /** Per-batch probe closure of [[streamExactAgainstStoredIndex]],
-    * package-visible for the mid-stream lifecycle specs.
-    */
-  private[graft] def exactProbeFn(
-      catalog: graft.storage.SetCatalog, db: String, name: String,
-      idCol: String, textCol: String): DataFrame => DataFrame =
-    batch => exactAgainstHashes(batch, scanExactIndex(catalog, db, name),
-      idCol, textCol)
-
-  /** SELF-GROWING streaming ingest dedup — first-seen-wins over the
-    * arrival stream ITSELF, not against a frozen corpus: each micro-batch
-    * keeps one representative per exact content (the minimum-id arrival,
+  /** One micro-batch of SELF-GROWING exact ingest dedup —
+    * first-seen-wins over the arrival stream ITSELF, not against a frozen
+    * corpus. The stream form is `streamProbe(stream,
+    * ingestExactDedupBatch(_, …))`; a caller can also drive successive
+    * batches directly and run maintenance between them. Each batch keeps
+    * one representative per exact content (the minimum-id arrival,
     * intra-batch), drops everything whose fingerprint the STANDING set
     * has already admitted (cross-batch), and appends the survivors'
     * fingerprints so every later batch dedups against everything that
-    * came before. This is the ingest-pipeline semantics the static-index
-    * forms can't express: [[streamExactAgainstStoredIndex]] flags
-    * arrivals against a fixed corpus and two identical arrivals BOTH
-    * pass; here the second is dropped because the first grew the index.
+    * came before. This is the ingest semantics the static-index probe
+    * can't express: [[exactAgainstStoredIndex]] flags arrivals against a
+    * fixed corpus and two identical arrivals BOTH pass; here the second
+    * is dropped because the first grew the index.
     *
     * Equivalence contract: under ordered delivery (the ingest-log
     * contract [[graft.operators.Curation.streamTokenBudget]] documents —
@@ -1489,20 +1411,6 @@ object Dedup {
     * re-emitted (same output as the first attempt) instead of
     * anti-joined away, and only unclaimed fingerprints append (the
     * append is idempotent).
-    */
-  def streamIngestExactDedup(
-      stream: DataFrame, catalog: graft.storage.SetCatalog,
-      db: String, name: String, idCol: String, textCol: String,
-      sink: Option[(graft.storage.SetCatalog, String, String)] = None): DataFrame =
-    streamProbe(stream,
-      batch => ingestExactDedupBatch(batch, catalog, db, name, idCol,
-        textCol),
-      sink)
-
-  /** One micro-batch of [[streamIngestExactDedup]]: probe + grow. Public
-    * as the batch kernel (like [[ingestNearDupBatch]]) so a caller can
-    * drive successive batches directly and run maintenance between
-    * them.
     */
   def ingestExactDedupBatch(
       batch: DataFrame, catalog: graft.storage.SetCatalog,
@@ -1554,6 +1462,9 @@ object Dedup {
 
   /** Spans of `newDocs` whose windows already occur in the stored gram
     * index: (idCol, span_start, span_end, span_tokens) per arriving doc.
+    * Each doc's spans depend only on that doc and the index (the span
+    * epilogue's window partitions by doc), so per-batch outputs union
+    * to the one-shot result.
     */
   def spansAgainstStoredIndex(
       newDocs: DataFrame, catalog: graft.storage.SetCatalog,
@@ -1871,7 +1782,7 @@ object Dedup {
     * semantic geometry, because the SemDeDup cluster IS an IVF cell:
     * the layout that makes the within-cluster verify a pruned join is
     * the same layout that makes ANN probes cheap. Build once; every
-    * later [[streamSemanticAgainstIndex]] micro-batch reads only the
+    * later [[semanticProbeFn]] micro-batch reads only the
     * cells its arrivals assign to.
     */
   def persistSemanticIndex(
@@ -1902,7 +1813,7 @@ object Dedup {
     * with the ANN tiers — VERDICT r14 next #3, closing the build-once
     * asymmetry): arrivals are assigned under the index's FROZEN codebook
     * and appended into the cluster-partitioned standing vectors, so
-    * every later [[streamSemanticAgainstIndex]] probe pairs against them
+    * every later [[semanticProbeFn]] probe pairs against them
     * too — including the later micro-batches of a probe stream ALREADY
     * RUNNING when the append lands (the probe re-resolves the index per
     * batch; its LIVE-INDEX contract) — the index IS
@@ -1957,7 +1868,7 @@ object Dedup {
       nCentroids0 = autoClusters(rows, targetClusterSize))
   }
 
-  /** One micro-batch of [[streamSemanticAgainstIndex]]: assign each
+  /** One micro-batch of [[semanticProbeFn]]: assign each
     * arrival under the STANDING codebook (the same assignment kernel
     * the corpus was assigned with — flat below the routing threshold,
     * √k-routed above it), then verify cosine against the standing
@@ -1998,65 +1909,32 @@ object Dedup {
         col("bucket").cast("long").as("cluster"), col("cos"))
   }
 
-  /** Streaming SEMANTIC dedup — the standing-index form of
-    * [[semanticPairs]], completing streaming parity for the last dedup
-    * family without one (exact/minhash/span/frame/audio all have `st_*`
-    * forms): arrivals are assigned per micro-batch under the standing
-    * codebook persisted by [[persistSemanticIndex]] and verified against
-    * the standing corpus vectors WITHIN their assigned cell only —
+  /** The batch probe of the standing SEMANTIC index — the
+    * standing-index form of [[semanticPairs]], curried so that
+    * `streamProbe(stream, semanticProbeFn(…))` is its stream form:
+    * arrivals are assigned under the codebook persisted by
+    * [[persistSemanticIndex]] and verified against the standing corpus
+    * vectors WITHIN their assigned cell only ([[semanticBatchPairs]]) —
     * paraphrase-level near-dup detection at ingest, the regime text LSH
     * cannot reach. Emits (id_a = corpus id, id_b = arrival id, cluster,
-    * cos ≥ threshold) — the cross-corpus contract of
+    * cos ≥ threshold), the cross-corpus contract of
     * [[streamNearDupPairs]]; arrival-vs-arrival pairs are the batch
-    * operator's job at the next re-index.
-    *
-    * Batching-invariant by construction: an arrival's cell depends only
+    * operator's job at the next re-index. An arrival's cell depends only
     * on (vector, codebook) — the [[SimilaritySearch.appendToIvfIndex]]
-    * argument — and its pairs only on (arrival, standing cell), so any
-    * batching of the same arrivals unions to the one-shot batch probe.
+    * argument — and its pairs only on (arrival, standing cell), so the
+    * stream form is batching-invariant.
     *
-    * Scale shape: per batch, one broadcast of the arrivals and a
-    * partition-pruned read of only their cells; nothing re-shuffles the
-    * corpus, no state store at all (the standing index IS the state).
-    *
-    * LIVE-INDEX contract (VERDICT r15 next #1): the standing index is
-    * re-resolved INSIDE the batch closure — the codebook re-checked
-    * against its sidecar generation (re-collected only when a rebuild
-    * swapped it) and the vector set re-planned (one file listing) per
-    * micro-batch — NOT captured once at stream start. Two consequences
-    * a standing pipeline needs: (a) an [[appendToSemanticIndex]]
-    * landing mid-stream is visible to every LATER micro-batch of a
-    * live probe stream (a frozen plan would pin the file listing of
-    * stream start for the stream's whole life); (b) a
-    * [[rebuildSemanticIndex]] swap mid-stream — which DELETES the old
-    * generation's directories — is survived: the next batch probes the
-    * new generation instead of failing on the renamed-away files.
-    * Within one batch, the centroid collect and the vector scan read
-    * one generation because maintenance runs between batches of the
-    * owning pipeline (the single-writer contract every lifecycle op
-    * documents); the crash-atomic swap marker covers the remaining
-    * two-rename window.
-    */
-  def streamSemanticAgainstIndex(
-      stream: DataFrame, catalog: graft.storage.SetCatalog,
-      db: String, name: String, idCol: String, vecCol: String,
-      threshold: Double = 0.4,
-      sink: Option[(graft.storage.SetCatalog, String, String)] = None): DataFrame =
-    streamProbe(stream,
-      semanticProbeFn(catalog, db, name, idCol, vecCol, threshold), sink)
-
-  /** Per-batch probe closure of [[streamSemanticAgainstIndex]] — the
-    * re-resolution happens HERE, once per micro-batch. The codebook
-    * comes from the catalog memo ([[SimilaritySearch.loadIndexCodebook]]):
-    * the O(k·d) centroid collect (~100 MB at a 200k-cell semantic
-    * codebook) runs once per codebook GENERATION, shared with the
-    * index's appends — which never change the codebook — and re-runs
-    * exactly when a rebuild swapped a new generation in
-    * (`catalog.memoDecodes` of the centroids set counts the collects).
-    * The VECTORS plan still re-resolves every batch: that is where
-    * appends land. Package-visible so the mid-stream lifecycle specs can
-    * drive it through [[startProbe]] and interleave appends/rebuilds
-    * between batches.
+    * The index is re-resolved HERE, once per call (the LIVE-INDEX
+    * contract of [[streamProbe]]). The codebook comes from the catalog
+    * memo ([[SimilaritySearch.loadIndexCodebook]]): the O(k·d) centroid
+    * collect (~100 MB at a 200k-cell semantic codebook) runs once per
+    * codebook GENERATION, shared with the index's appends — which never
+    * change the codebook — and re-runs exactly when a rebuild swapped a
+    * new generation in (`catalog.memoDecodes` of the centroids set
+    * counts the collects). The VECTORS plan re-resolves every call: that
+    * is where [[appendToSemanticIndex]] lands. The mid-stream lifecycle
+    * specs drive it through [[startProbe]] and interleave appends and
+    * rebuilds between batches.
     */
   private[graft] def semanticProbeFn(
       catalog: graft.storage.SetCatalog, db: String, name: String,

@@ -371,34 +371,19 @@ object Multimodal {
       sampleFrames(media.sparkSession, media, chunk, stride), "frame",
       numBuckets, advisor)
 
-  /** Streaming frame dedup against a [[persistFrameIndex]] set: each
-    * micro-batch of arriving media rows (`doc_id`, `payload`) is frame-
-    * sampled and every frame flagged with whether its exact content
-    * already exists in the stored corpus index —
-    * (doc_id, frame_no, is_dup). Batching-invariant by construction
-    * (each frame's flag depends only on its own bytes plus the static
-    * index), so per-batch outputs union to the one-shot batch result —
-    * the same contract as [[Dedup.streamExactAgainstStoredIndex]], which
-    * this shares its probe and sink harness with — including the
-    * LIVE-INDEX contract: the frame index is re-resolved INSIDE the
-    * batch closure, so a re-persisted generation is what the next
-    * micro-batch probes (see [[Dedup.streamSemanticAgainstIndex]]).
+  /** Frame dedup against a [[persistFrameIndex]] set: the media rows
+    * (`doc_id`, `payload`) are frame-sampled and every frame flagged with
+    * whether its exact content already exists in the stored corpus
+    * index — (doc_id, frame_no, is_dup). Each frame's flag depends only
+    * on its own bytes plus the index, so
+    * `Dedup.streamProbe(stream, framesAgainstStoredIndex(_, …))` is the
+    * batching-invariant stream form, and the index is scanned per call.
     */
-  def streamFramesAgainstStoredIndex(
-      stream: DataFrame, catalog: graft.storage.SetCatalog,
-      db: String, name: String, chunk: Int = 64, stride: Int = 4,
-      sink: Option[(graft.storage.SetCatalog, String, String)] = None): DataFrame =
-    Dedup.streamProbe(stream, framesProbeFn(catalog, db, name, chunk, stride),
-      sink)
-
-  /** Per-batch probe closure of [[streamFramesAgainstStoredIndex]],
-    * package-visible for the mid-stream lifecycle specs.
-    */
-  private[graft] def framesProbeFn(
-      catalog: graft.storage.SetCatalog, db: String, name: String,
-      chunk: Int, stride: Int): DataFrame => DataFrame =
-    batch => Dedup.exactAgainstHashesKeyed(
-      sampleFrames(batch.sparkSession, batch, chunk, stride),
+  def framesAgainstStoredIndex(
+      media: DataFrame, catalog: graft.storage.SetCatalog,
+      db: String, name: String, chunk: Int = 64, stride: Int = 4): DataFrame =
+    Dedup.exactAgainstHashesKeyed(
+      sampleFrames(media.sparkSession, media, chunk, stride),
       Dedup.scanExactIndex(catalog, db, name),
       Seq("doc_id", "frame_no"), "frame")
 
@@ -421,34 +406,22 @@ object Multimodal {
       envelopeFingerprint(media, window, hop, minWindows), "fp",
       numBuckets, advisor, targetRowsPerBucket)
 
-  /** Streaming envelope dedup against a [[persistEnvelopeIndex]] set:
-    * each micro-batch of arriving media rows (`doc_id`, `payload`) is
-    * envelope-fingerprinted and flagged with whether that envelope
-    * already exists in the stored corpus index — (doc_id, is_dup). Docs
-    * too short for a discriminative envelope (< minWindows windows) emit
-    * no row, exactly like the batch operator. Batching-invariant by
-    * construction (each doc's flag depends only on its own bytes plus
-    * the static index), the same contract as
-    * [[streamFramesAgainstStoredIndex]], whose probe/sink harness this
-    * shares — including the LIVE-INDEX contract (the envelope index is
-    * re-resolved inside the batch closure, per micro-batch).
+  /** Envelope dedup against a [[persistEnvelopeIndex]] set: the media
+    * rows (`doc_id`, `payload`) are envelope-fingerprinted and flagged
+    * with whether that envelope already exists in the stored corpus
+    * index — (doc_id, is_dup). Docs too short for a discriminative
+    * envelope (< minWindows windows) emit no row, exactly like the batch
+    * operator. Each doc's flag depends only on its own bytes plus the
+    * index, so `Dedup.streamProbe(stream, envelopesAgainstStoredIndex(_,
+    * …))` is the batching-invariant stream form, and the index is
+    * scanned per call.
     */
-  def streamEnvelopesAgainstStoredIndex(
-      stream: DataFrame, catalog: graft.storage.SetCatalog,
+  def envelopesAgainstStoredIndex(
+      media: DataFrame, catalog: graft.storage.SetCatalog,
       db: String, name: String, window: Int = 64, hop: Int = 32,
-      minWindows: Int = 8,
-      sink: Option[(graft.storage.SetCatalog, String, String)] = None): DataFrame =
-    Dedup.streamProbe(stream,
-      envelopesProbeFn(catalog, db, name, window, hop, minWindows), sink)
-
-  /** Per-batch probe closure of [[streamEnvelopesAgainstStoredIndex]],
-    * package-visible for the mid-stream lifecycle specs.
-    */
-  private[graft] def envelopesProbeFn(
-      catalog: graft.storage.SetCatalog, db: String, name: String,
-      window: Int, hop: Int, minWindows: Int): DataFrame => DataFrame =
-    batch => Dedup.fingerprintsAgainstFps(
-      envelopeFingerprint(batch, window, hop, minWindows),
+      minWindows: Int = 8): DataFrame =
+    Dedup.fingerprintsAgainstFps(
+      envelopeFingerprint(media, window, hop, minWindows),
       Dedup.scanFingerprintIndex(catalog, db, name),
       Seq("doc_id"), "fp")
 

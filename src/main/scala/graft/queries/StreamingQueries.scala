@@ -54,9 +54,8 @@ object StreamingQueries {
     */
   private def drainToTable(ds: Dataset[_], sink: String,
       mode: String): DataFrame = {
-    val q = ds.writeStream.format("memory").queryName(sink)
-      .outputMode(mode).start()
-    try q.processAllAvailable() finally q.stop()
+    graft.operators.Dedup.drainAndStop(
+      ds.writeStream.format("memory").queryName(sink).outputMode(mode).start())
     ds.sparkSession.table(sink)
   }
 
@@ -254,9 +253,10 @@ object StreamingQueries {
     graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
       graft.operators.Dedup.persistGramIndex(cat, db, "corpus",
         docs.filter(col("doc_id") < 250), "doc_id", "text", k = 8)
-      graft.operators.Dedup.streamSpansAgainstStoredIndex(
+      graft.operators.Dedup.streamProbe(
         readDocStream(spark, d).filter(col("doc_id") >= 250),
-        cat, db, "corpus", "doc_id", "text", k = 8)
+        graft.operators.Dedup.spansAgainstStoredIndex(_, cat, db, "corpus",
+          "doc_id", "text", k = 8))
     }
   }
 
@@ -275,8 +275,9 @@ object StreamingQueries {
     graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
       graft.operators.Dedup.persistExactIndex(cat, db, "corpus",
         docs.filter(col("doc_id") < 250), "text")
-      graft.operators.Dedup.streamExactAgainstStoredIndex(
-        arrivals, cat, db, "corpus", "doc_id", "text")
+      graft.operators.Dedup.streamProbe(arrivals,
+        graft.operators.Dedup.exactAgainstStoredIndex(_, cat, db, "corpus",
+          "doc_id", "text"))
     }
   }
 
@@ -300,9 +301,9 @@ object StreamingQueries {
       graft.operators.Multimodal.persistFrameIndex(cat, db, "frames",
         graft.operators.Multimodal.withPayload(
           docs.filter(col("doc_id") < 250)))
-      graft.operators.Multimodal.streamFramesAgainstStoredIndex(
+      graft.operators.Dedup.streamProbe(
         graft.operators.Multimodal.withPayload(arrivals),
-        cat, db, "frames")
+        graft.operators.Multimodal.framesAgainstStoredIndex(_, cat, db, "frames"))
     }
   }
 
@@ -358,9 +359,9 @@ object StreamingQueries {
       graft.operators.Multimodal.persistEnvelopeIndex(cat, db, "env",
         graft.operators.Multimodal.withPayload(
           docs.filter(col("doc_id") < 250)))
-      graft.operators.Multimodal.streamEnvelopesAgainstStoredIndex(
+      graft.operators.Dedup.streamProbe(
         graft.operators.Multimodal.withPayload(arrivals),
-        cat, db, "env")
+        graft.operators.Multimodal.envelopesAgainstStoredIndex(_, cat, db, "env"))
     }
   }
 
@@ -534,7 +535,7 @@ object StreamingQueries {
     graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
       val (txtHashes, frmHashes, envFps) = buildPipeIndexes(cat, db, corpus)
       graft.operators.Dedup.streamProbe(stArrivals(readDocStream(spark, d)),
-        pipeFlagsBatch(_, txtHashes, frmHashes, envFps), None)
+        pipeFlagsBatch(_, txtHashes, frmHashes, envFps))
     }
   }
 
@@ -765,7 +766,7 @@ object StreamingQueries {
     * arrival stream (vec_id ≥ 250) is assigned per micro-batch under
     * the STANDING codebook and cosine-verified against the standing
     * vectors of its cell only
-    * ([[graft.operators.Dedup.streamSemanticAgainstIndex]]) ≡ the
+    * ([[graft.operators.Dedup.semanticProbeFn]]) ≡ the
     * one-shot batch probe, because an arrival's cell depends only on
     * (vector, codebook) and its pairs only on (arrival, standing cell).
     */
@@ -775,9 +776,10 @@ object StreamingQueries {
     graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
       graft.operators.Dedup.persistSemanticIndex(cat, db, "sem",
         emb.filter(col("vec_id") < 250), "vec_id", "embedding")
-      graft.operators.Dedup.streamSemanticAgainstIndex(
+      graft.operators.Dedup.streamProbe(
         readEmbStream(spark, d).filter(col("vec_id") >= 250),
-        cat, db, "sem", "vec_id", "embedding", threshold = 0.4)
+        graft.operators.Dedup.semanticProbeFn(cat, db, "sem", "vec_id",
+          "embedding", threshold = 0.4))
     }
   }
 
@@ -858,9 +860,10 @@ object StreamingQueries {
       require(graft.operators.SimilaritySearch
         .appendedDriftFraction(cat, db, "seml") == 0.0,
         "rebuild did not reset the semantic drift fraction")
-      graft.operators.Dedup.streamSemanticAgainstIndex(
+      graft.operators.Dedup.streamProbe(
         readEmbStream(spark, d).filter(col("vec_id") >= 250),
-        cat, db, "seml", "vec_id", "embedding", threshold = 0.4)
+        graft.operators.Dedup.semanticProbeFn(cat, db, "seml", "vec_id",
+          "embedding", threshold = 0.4))
     }
   }
 
@@ -1053,9 +1056,8 @@ object StreamingQueries {
       .filter(col("doc_id") < 250)
     val arrivals = readDocStream(spark, d).filter(col("doc_id") >= 250)
       .select(col("doc_id"), col("text"))
-    graft.operators.Dedup.streamProbe(arrivals, batch =>
-      graft.operators.TextAnalysis.lmScore(batch, ref, "doc_id", "text"),
-      None)
+    graft.operators.Dedup.streamProbe(arrivals,
+      graft.operators.TextAnalysis.lmScore(_, ref, "doc_id", "text"))
   }
 
   val stLmScoreSql: String =
@@ -1294,7 +1296,7 @@ object StreamingQueries {
        |SELECT doc_id, shard, n_tokens, cum_tokens FROM bc
        |WHERE cum_tokens <= 3750""".stripMargin
 
-  /** Self-growing ingest dedup ([[graft.operators.Dedup.streamIngestExactDedup]])
+  /** Self-growing ingest dedup ([[graft.operators.Dedup.ingestExactDedupBatch]])
     * — where [[stExact]] FLAGS arrivals against a frozen corpus index,
     * this admits first-seen content and GROWS the index with every
     * admission, so the re-crawl replay (docs < 100 re-arriving under
@@ -1310,8 +1312,9 @@ object StreamingQueries {
       .unionByName(s.filter(col("doc_id") < 100)
         .select((col("doc_id") + 10000).as("doc_id"), col("text")))
     graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
-      graft.operators.Dedup.streamIngestExactDedup(
-        arrivals, cat, db, "ing", "doc_id", "text")
+      graft.operators.Dedup.streamProbe(arrivals,
+        graft.operators.Dedup.ingestExactDedupBatch(_, cat, db, "ing",
+          "doc_id", "text"))
     }
   }
 
@@ -1328,7 +1331,7 @@ object StreamingQueries {
       |WHERE text IS NOT NULL GROUP BY text""".stripMargin
 
   /** Self-growing ingest NEAR-dup
-    * ([[graft.operators.Dedup.streamIngestNearDup]]) — the MinHash
+    * ([[graft.operators.Dedup.ingestNearDupBatch]]) — the MinHash
     * analogue of [[stIngestDedup]]: the whole corpus arrives as a
     * stream, each micro-batch pairs against its own arrivals AND the
     * standing band/shingle sets grown by every earlier batch. The
@@ -1339,9 +1342,9 @@ object StreamingQueries {
   def stIngestNearDup(spark0: SparkSession, d: String): DataFrame = {
     val spark = streamSession(spark0)
     graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
-      graft.operators.Dedup.streamIngestNearDup(
-        readDocStream(spark, d), cat, db, "ind", "doc_id", "text",
-        threshold = 0.8)
+      graft.operators.Dedup.streamProbe(readDocStream(spark, d),
+        graft.operators.Dedup.ingestNearDupBatch(_, cat, db, "ind",
+          "doc_id", "text", threshold = 0.8))
     }
   }
 

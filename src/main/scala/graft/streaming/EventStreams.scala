@@ -160,9 +160,10 @@ object EventStreams {
       col("event_type"), col("value"))
     // sink mode needs no init: the first batch creates the set, a later
     // run finds it and keeps merging into it (restart semantics)
+    val changes = stream.select(cols: _*)
     var snapshot: Option[DataFrame] = None
     graft.operators.Dedup.drainAndStop(
-      graft.operators.Dedup.startBatches(stream.select(cols: _*)) { batch =>
+      graft.operators.Dedup.startBatches(changes) { batch =>
         val compacted = latestPerKey(batch)
         sink match {
           case Some((cat, db, set)) =>
@@ -183,11 +184,15 @@ object EventStreams {
             }).localCheckpoint(eager = true))
         }
       })
+    // no batch arrived: the empty snapshot, with the snapshot columns
+    def empty = latestPerKey(stream.sparkSession.createDataFrame(
+      stream.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      changes.schema))
     sink match {
       case Some((cat, db, set)) =>
         if (cat.meta(db, set).exists(_.rows > 0)) cat.scanSet(db, set)
-        else stream.sparkSession.emptyDataFrame
-      case None => snapshot.getOrElse(stream.sparkSession.emptyDataFrame)
+        else empty
+      case None => snapshot.getOrElse(empty)
     }
   }
 

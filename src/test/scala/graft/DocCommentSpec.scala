@@ -3,7 +3,9 @@ package graft
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source-level guards: Scaladoc placement, and one storage namespace. */
+/** Source-level guards: Scaladoc placement, one storage namespace and
+  * one stream start.
+  */
 class DocCommentSpec extends AnyFunSuite {
 
   private def mainSources: List[java.nio.file.Path] = {
@@ -37,6 +39,31 @@ class DocCommentSpec extends AnyFunSuite {
       }
     }
     assert(hits.isEmpty, s"session-catalog use in src/main at: $hits")
+  }
+
+  test("src/main starts micro-batch streams in Dedup.startBatches alone") {
+    // one stream lifecycle: every foreachBatch stream starts in
+    // startBatches; the only other writeStreams are the memory-sink drain
+    // and the parquet sink
+    def sites(pattern: String): List[String] = {
+      val hit = java.util.regex.Pattern.compile(pattern)
+      val defn = java.util.regex.Pattern.compile("\\bdef (\\w+)")
+      mainSources.flatMap { p =>
+        val lines = java.nio.file.Files.readAllLines(p).asScala.toList
+        val owners = lines.scanLeft("?") { (owner, line) =>
+          val m = defn.matcher(line)
+          if (m.find()) m.group(1) else owner
+        }.tail
+        lines.zip(owners).collect {
+          case (line, owner) if hit.matcher(line).find() => s"${p.getFileName}:$owner"
+        }
+      }
+    }
+    assert(sites("\\.foreachBatch\\b") == List("Dedup.scala:startBatches"))
+    val writeStreams = sites("\\.writeStream\\b")
+    assert(writeStreams.toSet.subsetOf(Set("Dedup.scala:startBatches",
+      "StreamingQueries.scala:drainToTable", "EventStreams.scala:writeToParquetSet")),
+      s"writeStream outside the three stream starts: $writeStreams")
   }
 
   test("src/main stages and writes sets only inside graft/storage") {

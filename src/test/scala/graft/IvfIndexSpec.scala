@@ -167,9 +167,9 @@ class IvfIndexSpec extends GraftSpecBase {
       input.addData(emb.filter(ids(col("vec_id")))
         .select((col("vec_id") + 1000L).as("vec_id"), col("embedding"))
         .as[(Long, Seq[Float])].collect().toSeq: _*)
-      graft.operators.Dedup.streamSemanticAgainstIndex(
-        input.toDS().toDF("vec_id", "embedding"), index, "idx", "sem",
-        "vec_id", "embedding", threshold = threshold)
+      graft.operators.Dedup.streamProbe(input.toDS().toDF("vec_id", "embedding"),
+        graft.operators.Dedup.semanticProbeFn(index, "idx", "sem",
+          "vec_id", "embedding", threshold = threshold))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     }
     val hits = probe(id => id >= 150 && id < 160)
@@ -227,9 +227,9 @@ class IvfIndexSpec extends GraftSpecBase {
           .filter(col("vec_id") >= 150 && col("vec_id") < 160)
           .select((col("vec_id") + 1000L).as("vec_id"), col("embedding"))
           .as[(Long, Seq[Float])].collect().toSeq: _*)
-        graft.operators.Dedup.streamSemanticAgainstIndex(
-          input.toDS().toDF("vec_id", "embedding"), c, "idx", "rsem",
-          "vec_id", "embedding", threshold = 0.999)
+        graft.operators.Dedup.streamProbe(input.toDS().toDF("vec_id", "embedding"),
+          graft.operators.Dedup.semanticProbeFn(c, "idx", "rsem",
+            "vec_id", "embedding", threshold = 0.999))
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       }
       val hits = probe()

@@ -117,6 +117,20 @@ class StreamingSpec extends GraftSpecBase {
     assert(snap2(8L) == ((4L, "click")), s"user 8 got ${snap2(8L)}")
   }
 
+  test("an upsert stream with no data returns the empty snapshot, in both sink modes") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val cat = new graft.storage.SetCatalog(spark, tempRoot("graft-upsert-empty").toString)
+    for (sink <- Seq(None, Some((cat, "state", "none_yet")))) {
+      val snap = EventStreams.upsertSnapshot(MemoryStream[Event].toDS().toDF(), sink)
+      assert(snap.columns.toSeq == Seq("user_id", "ts", "event_id", "event_type", "value"),
+        s"sink $sink")
+      // st_upsert's projection resolves on the empty snapshot
+      assert(snap.select(col("user_id"), col("event_id").as("last_event_id"))
+        .collect().isEmpty)
+    }
+  }
+
   test("streaming parquet sink lands exactly the filtered rows") {
     val out = "/tmp/graft-test-stream-sink"
     val ckpt = "/tmp/graft-test-stream-ckpt"
@@ -186,6 +200,21 @@ class StreamingSpec extends GraftSpecBase {
     assert(cat.meta("logs", "pairs").exists(_.rows == oneShot.size))
   }
 
+  test("a near-dup stream whose batch fails releases its corpus index caches") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val corpus = Tables.documents(spark, sfDir).filter(col("doc_id") < 25)
+    spark.catalog.clearCache()
+    val input = MemoryStream[(Long, String)]
+    input.addData((1L, "one two three four"))
+    // no `text` column: the first micro-batch fails analysis
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      graft.operators.Dedup.streamNearDupPairs(
+        input.toDS().toDF("doc_id", "body"), corpus, "doc_id", "text")
+    }
+    assert(spark.sharedState.cacheManager.isEmpty, "corpus index caches leaked")
+  }
+
   test("sink-backed streaming span log == in-memory mode == one-shot batch") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -211,9 +240,9 @@ class StreamingSpec extends GraftSpecBase {
       val input = MemoryStream[(Long, String)]
       input.addData(rows.take(rows.length / 2))
       input.addData(rows.drop(rows.length / 2))
-      graft.operators.Dedup.streamSpansAgainstStoredIndex(
-        input.toDS().toDF("doc_id", "text"), cat, "stx", "c",
-        "doc_id", "text", k = 8, sink = sink)
+      graft.operators.Dedup.streamProbe(input.toDS().toDF("doc_id", "text"),
+        graft.operators.Dedup.spansAgainstStoredIndex(_, cat, "stx", "c",
+          "doc_id", "text", k = 8), sink)
         .collect().map(_.toSeq).toSet
     }
     val sinkMode = runStream(Some((cat, "logs", "spans")))
@@ -292,9 +321,9 @@ class StreamingSpec extends GraftSpecBase {
     def run(batches: Seq[Seq[(Long, Seq[Float])]]): Set[Seq[Any]] = {
       val input = MemoryStream[(Long, Seq[Float])]
       batches.foreach(b => input.addData(b: _*))
-      graft.operators.Dedup.streamSemanticAgainstIndex(
-        input.toDS().toDF("vec_id", "embedding"),
-        cat, "t", "sem", "vec_id", "embedding", threshold = 0.4)
+      graft.operators.Dedup.streamProbe(input.toDS().toDF("vec_id", "embedding"),
+        graft.operators.Dedup.semanticProbeFn(cat, "t", "sem", "vec_id",
+          "embedding", threshold = 0.4))
         .collect().map(_.toSeq).toSet
     }
     val oneShot = run(Seq(arrivals))
@@ -326,9 +355,9 @@ class StreamingSpec extends GraftSpecBase {
         rows: Seq[(Long, String)]): Set[Long] = {
       val input = MemoryStream[(Long, String)]
       input.addData(rows: _*)
-      graft.operators.Dedup.streamIngestExactDedup(
-        input.toDS().toDF("doc_id", "text"), cat, "t", "ing",
-        "doc_id", "text")
+      graft.operators.Dedup.streamProbe(input.toDS().toDF("doc_id", "text"),
+        graft.operators.Dedup.ingestExactDedupBatch(_, cat, "t", "ing",
+          "doc_id", "text"))
         .collect().map(_.getLong(0)).toSet
     }
     val rootA = tempRoot("graft-sting-a")
@@ -366,9 +395,9 @@ class StreamingSpec extends GraftSpecBase {
     def runExact(rows: Seq[(Long, String)]): Set[Long] = {
       val input = MemoryStream[(Long, String)]
       input.addData(rows: _*)
-      graft.operators.Dedup.streamIngestExactDedup(
-        input.toDS().toDF("doc_id", "text"), cat, "t", "ing",
-        "doc_id", "text")
+      graft.operators.Dedup.streamProbe(input.toDS().toDF("doc_id", "text"),
+        graft.operators.Dedup.ingestExactDedupBatch(_, cat, "t", "ing",
+          "doc_id", "text"))
         .collect().map(_.getLong(0)).toSet
     }
     assert(runExact(Seq((1L, "aaa"), (2L, "bbb"))) == Set(1L, 2L))
@@ -399,9 +428,9 @@ class StreamingSpec extends GraftSpecBase {
         rows: Seq[(Long, String)]): Set[(Long, Long)] = {
       val input = MemoryStream[(Long, String)]
       input.addData(rows: _*)
-      graft.operators.Dedup.streamIngestNearDup(
-        input.toDS().toDF("doc_id", "text"), cat, "t", "ind",
-        "doc_id", "text")
+      graft.operators.Dedup.streamProbe(input.toDS().toDF("doc_id", "text"),
+        graft.operators.Dedup.ingestNearDupBatch(_, cat, "t", "ind",
+          "doc_id", "text"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     }
     // one-shot: the intra-batch self-join path finds the pair
@@ -535,9 +564,9 @@ class StreamingSpec extends GraftSpecBase {
         rows: Seq[(Long, String)]): Set[(Long, Long)] = {
       val input = MemoryStream[(Long, String)]
       input.addData(rows: _*)
-      graft.operators.Dedup.streamIngestNearDup(
-        input.toDS().toDF("doc_id", "text"), cat, "t", "ind",
-        "doc_id", "text")
+      graft.operators.Dedup.streamProbe(input.toDS().toDF("doc_id", "text"),
+        graft.operators.Dedup.ingestNearDupBatch(_, cat, "t", "ind",
+          "doc_id", "text"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     }
     val root = tempRoot("graft-stind-recap")
@@ -576,9 +605,9 @@ class StreamingSpec extends GraftSpecBase {
     val cat = new graft.storage.SetCatalog(spark, root.toString)
     val input = MemoryStream[(Long, String)]
     input.addData(docs: _*)
-    val pairs = graft.operators.Dedup.streamIngestNearDup(
-      input.toDS().toDF("doc_id", "text"), cat, "t", "hot",
-      "doc_id", "text")
+    val pairs = graft.operators.Dedup.streamProbe(input.toDS().toDF("doc_id", "text"),
+      graft.operators.Dedup.ingestNearDupBatch(_, cat, "t", "hot",
+        "doc_id", "text"))
       .collect()
     assert(pairs.isEmpty, s"boilerplate docs are not true near-dups: ${pairs.toSeq}")
     val preMax = graft.operators.Dedup.ingestBandCensus(cat, "t", "hot")
@@ -637,9 +666,9 @@ class StreamingSpec extends GraftSpecBase {
         rows: Seq[(Long, String)]): Set[(Long, Long)] = {
       val input = MemoryStream[(Long, String)]
       input.addData(rows: _*)
-      graft.operators.Dedup.streamIngestNearDup(
-        input.toDS().toDF("doc_id", "text"), cat, "t", "ile",
-        "doc_id", "text")
+      graft.operators.Dedup.streamProbe(input.toDS().toDF("doc_id", "text"),
+        graft.operators.Dedup.ingestNearDupBatch(_, cat, "t", "ile",
+          "doc_id", "text"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     }
     val root = tempRoot("graft-stind-ile")
@@ -696,9 +725,9 @@ class StreamingSpec extends GraftSpecBase {
     def runOnce(rows: Seq[(Long, String)]): Set[Long] = {
       val input = MemoryStream[(Long, String)]
       input.addData(rows: _*)
-      graft.operators.Dedup.streamIngestExactDedup(
-        input.toDS().toDF("doc_id", "text"), cat, "t", "uno",
-        "doc_id", "text")
+      graft.operators.Dedup.streamProbe(input.toDS().toDF("doc_id", "text"),
+        graft.operators.Dedup.ingestExactDedupBatch(_, cat, "t", "uno",
+          "doc_id", "text"))
         .collect().map(_.getLong(0)).toSet
     }
     val first = runOnce(Seq((11L, "aaa"), (12L, "bbb")))
@@ -880,7 +909,7 @@ class StreamingSpec extends GraftSpecBase {
     val input = MemoryStream[(Long, String)]
     val (q, result) = graft.operators.Dedup.startProbe(
       input.toDS().toDF("doc_id", "txt"),
-      graft.operators.Dedup.exactProbeFn(cat, "t", "ex", "doc_id", "txt"),
+      graft.operators.Dedup.exactAgainstStoredIndex(_, cat, "t", "ex", "doc_id", "txt"),
       sink = Some((cat, "t", "ex_live_flags")))
     try {
       input.addData((1L, "ccc"))
