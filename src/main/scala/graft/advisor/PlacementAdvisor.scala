@@ -303,8 +303,6 @@ final class PlacementAdvisor(historyPath: Option[String] = None) {
 
   def observedKeyUse: Map[(String, String), Long] = keyUse.toMap
 
-  def observedKeyReward: Map[(String, String), Long] = keyReward.toMap
-
   /** Save with the learned placement applied (the load-path hook — EP3 in
     * SURVEY.md §3, DispatcherServer + partition policy): bucketed by the
     * recommended column with the group-consistent bucket count when a

@@ -40,24 +40,6 @@ object TextAnalysis {
     scored.withColumn("pred_lang", pred)
   }
 
-  /** SQL mirror of [[languageId]] for the DuckDB oracle */
-  val languageIdSql: String = {
-    val langs = stopwords.map(_._1)
-    val scoreDefs = stopwords.map { case (lang, ws) =>
-      val list = ws.map(w => s"'$w'").mkString(", ")
-      s"len(list_filter(string_split(text, ' '), w -> w IN ($list))) AS s_$lang"
-    }.mkString(",\n  ")
-    val predCases = langs.dropRight(1).map { lang =>
-      val conds = langs.filter(_ != lang).map(o => s"s_$lang >= s_$o").mkString(" AND ")
-      s"WHEN $conds THEN '$lang'"
-    }.mkString("\n    ")
-    s"""SELECT doc_id, ${langs.map(l => s"s_$l").mkString(", ")},
-       |  CASE $predCases ELSE '${langs.last}' END AS pred_lang
-       |FROM (SELECT doc_id AS doc_id,
-       |  $scoreDefs
-       |  FROM documents) t""".stripMargin
-  }
-
   /** Quality scoring: token count, mean token length, digit ratio,
     * stopword ratio, and a linear quality score. All ratios are int/int
     * divisions in double — bit-deterministic.
@@ -80,27 +62,6 @@ object TextAnalysis {
         .as("q_score"))
   }
 
-  val qualityScoreSql: String = qualityScoreSqlFrom("documents")
-
-  /** The same oracle over any relation exposing (doc_id, text) — lets
-    * pipeline-composition oracles score an upstream CTE's output.
-    */
-  def qualityScoreSqlFrom(rel: String): String = {
-    val stopList = stopwords.head._2.map(w => s"'$w'").mkString(", ")
-    s"""SELECT doc_id,
-       | len(string_split(text,' ')) AS n_tokens,
-       | CAST(length(replace(text,' ','')) AS DOUBLE)/len(string_split(text,' ')) AS mean_tok_len,
-       | CAST(length(regexp_replace(text,'[^0-9]','','g')) AS DOUBLE)/length(text) AS digit_ratio,
-       | CAST(len(list_filter(string_split(text,' '), w -> w IN ($stopList))) AS DOUBLE)
-       |   /len(string_split(text,' ')) AS stop_ratio,
-       | 0.5 * (CAST(len(list_filter(string_split(text,' '), w -> w IN ($stopList))) AS DOUBLE)
-       |        /len(string_split(text,' '))) +
-       | 0.3 * least(CAST(length(replace(text,' ','')) AS DOUBLE)/len(string_split(text,' '))/10.0, 1.0) +
-       | 0.2 * (1.0 - CAST(length(regexp_replace(text,'[^0-9]','','g')) AS DOUBLE)/length(text))
-       |   AS q_score
-       |FROM $rel""".stripMargin
-  }
-
   /** Corpus token statistics: per-word occurrence and document frequency —
     * explode + two-level aggregation, shuffles once on the word.
     */
@@ -110,11 +71,6 @@ object TextAnalysis {
       .groupBy(col("word"))
       .agg(count(lit(1)).as("n_occurrences"),
         countDistinct(col("doc_id")).as("n_docs"))
-
-  val tokenStatsSql: String =
-    """SELECT word, COUNT(*) AS n_occurrences, COUNT(DISTINCT doc_id) AS n_docs
-      |FROM (SELECT doc_id, unnest(string_split(text,' ')) AS word FROM documents) t
-      |GROUP BY word""".stripMargin
 
   /** TF-IDF weights per (doc, word): tf · ln(N / df). One explode + two
     * aggregations (doc-word term counts, then word document frequencies —
@@ -135,17 +91,6 @@ object TextAnalysis {
       .select(col("doc_id"), col("word"),
         round(col("tf") * log(col("n") / col("df")), 6).as("tfidf"))
   }
-
-  val tfidfSql: String =
-    """WITH tf AS (
-      |  SELECT doc_id, word, COUNT(*) AS tf FROM (
-      |    SELECT doc_id, unnest(string_split(text,' ')) AS word FROM documents) t
-      |  GROUP BY 1, 2),
-      |dfreq AS (SELECT word, COUNT(*) AS df FROM tf GROUP BY 1),
-      |nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM documents)
-      |SELECT tf.doc_id, tf.word,
-      |  round(tf.tf * ln((SELECT n FROM nn) / dfreq.df), 6) AS tfidf
-      |FROM tf JOIN dfreq USING (word)""".stripMargin
 
   /** N-gram LM quality score (the CCNet recipe, public: Wenzek et al.,
     * "CCNet: Extracting High Quality Monolingual Datasets from Web Crawl
@@ -230,103 +175,6 @@ object TextAnalysis {
     scored.withColumn("bucket", bucket)
   }
 
-  /** Oracle for [[lmScore]] with the reference slice `doc_id < 250`;
-    * `scoreWhere` restricts the SCORED side (the streaming form scores
-    * arrivals only — the model side stays the full reference slice).
-    */
-  def lmScoreSqlWhere(scoreWhere: String): String = {
-    val out = lmScoreSql
-      .replace("      AS bg\n  FROM documents)",
-        s"      AS bg\n  FROM documents $scoreWhere)")
-    // the replace is whitespace-exact against lmScoreSql's text; a silent
-    // no-op here would hand back the UNRESTRICTED oracle and surface as a
-    // confusing st_lm_score hash mismatch instead of a loud failure
-    require(out != lmScoreSql,
-      "lmScoreSqlWhere: scored-side WHERE splice did not apply — " +
-        "lmScoreSql's formatting changed out from under the replace anchor")
-    out
-  }
-
-  /** Oracle for [[lmQualityBuckets]] at the default head/middle/tail
-    * terciles (reference slice < 250): the lmScore CTE chain, exact-rank
-    * thresholds t1/t2 = min score among the top ceil(i/3·n) by
-    * (score desc, id), then the ties-to-the-better-tier CASE. The
-    * (i·1.0/3)·n double math matches quantileKeep's
-    * `ceil(fraction · n)` op-for-op.
-    */
-  val lmBucketsSql: String =
-    """WITH rb AS MATERIALIZED (
-      |  SELECT bg, COUNT(*) AS cb FROM (
-      |    SELECT unnest(list_transform(range(1, len(string_split(text, ' '))),
-      |      i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]))
-      |      AS bg
-      |    FROM documents WHERE doc_id < 250) z GROUP BY 1),
-      |ru AS MATERIALIZED (
-      |  SELECT w1, COUNT(*) AS cu FROM (
-      |    SELECT unnest(string_split(text, ' ')) AS w1
-      |    FROM documents WHERE doc_id < 250) z GROUP BY 1),
-      |vv AS (SELECT CAST(COUNT(*) AS DOUBLE) AS v FROM ru),
-      |db AS (
-      |  SELECT doc_id,
-      |    unnest(list_transform(range(1, len(string_split(text, ' '))),
-      |      i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]))
-      |      AS bg
-      |  FROM documents),
-      |s AS (
-      |  SELECT db.doc_id,
-      |    ln(CAST(COALESCE(rb.cb, 0) + 1 AS DOUBLE) /
-      |       (COALESCE(ru.cu, 0) + (SELECT v FROM vv))) AS lp
-      |  FROM db
-      |  LEFT JOIN rb USING (bg)
-      |  LEFT JOIN ru ON ru.w1 = string_split(db.bg, ' ')[1]),
-      |lsc AS MATERIALIZED (
-      |  SELECT doc_id, round(AVG(lp), 6) AS lm_score FROM s GROUP BY 1),
-      |rk AS (
-      |  SELECT doc_id, lm_score,
-      |    ROW_NUMBER() OVER (ORDER BY lm_score DESC, doc_id) AS r FROM lsc),
-      |nn AS (SELECT COUNT(*) AS n FROM lsc),
-      |t1 AS (
-      |  SELECT MIN(lm_score) AS t FROM rk
-      |  WHERE r <= GREATEST(1,
-      |    CAST(ceil((1.0/3) * (SELECT n FROM nn)) AS BIGINT))),
-      |t2 AS (
-      |  SELECT MIN(lm_score) AS t FROM rk
-      |  WHERE r <= GREATEST(1,
-      |    CAST(ceil((2.0/3) * (SELECT n FROM nn)) AS BIGINT)))
-      |SELECT doc_id, lm_score,
-      |  CASE WHEN lm_score >= (SELECT t FROM t1) THEN 0
-      |       WHEN lm_score >= (SELECT t FROM t2) THEN 1
-      |       ELSE 2 END AS bucket
-      |FROM lsc""".stripMargin
-
-  val lmScoreSql: String =
-    """WITH rb AS (
-      |  SELECT bg, COUNT(*) AS cb FROM (
-      |    SELECT unnest(list_transform(range(1, len(string_split(text, ' '))),
-      |      i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]))
-      |      AS bg
-      |    FROM documents WHERE doc_id < 250) z GROUP BY 1),
-      |ru AS (
-      |  SELECT w1, COUNT(*) AS cu FROM (
-      |    SELECT unnest(string_split(text, ' ')) AS w1
-      |    FROM documents WHERE doc_id < 250) z GROUP BY 1),
-      |vv AS (SELECT CAST(COUNT(*) AS DOUBLE) AS v FROM ru),
-      |db AS (
-      |  SELECT doc_id,
-      |    unnest(list_transform(range(1, len(string_split(text, ' '))),
-      |      i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]))
-      |      AS bg
-      |  FROM documents),
-      |s AS (
-      |  SELECT db.doc_id,
-      |    ln(CAST(COALESCE(rb.cb, 0) + 1 AS DOUBLE) /
-      |       (COALESCE(ru.cu, 0) + (SELECT v FROM vv))) AS lp
-      |  FROM db
-      |  LEFT JOIN rb USING (bg)
-      |  LEFT JOIN ru ON ru.w1 = string_split(db.bg, ' ')[1])
-      |SELECT doc_id, COUNT(*) AS n_bigrams, round(AVG(lp), 6) AS lm_score
-      |FROM s GROUP BY 1""".stripMargin
-
   /** Repetition quality signals (the Gopher-rules family): per document,
     * the duplicate-word fraction (1 − distinct/total) and the fraction of
     * all word bigrams taken by the single most frequent bigram. High values
@@ -360,28 +208,6 @@ object TextAnalysis {
         round(col("top_c").cast("double") / col("n_bigrams"), 6)
           .as("top_bigram_frac"))
   }
-
-  val repetitionStatsSql: String =
-    """WITH words AS (
-      |  SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents),
-      |wstats AS (
-      |  SELECT doc_id, COUNT(*) AS n_words,
-      |         COUNT(DISTINCT word) AS n_distinct_words
-      |  FROM words GROUP BY 1),
-      |bigrams AS (
-      |  SELECT doc_id,
-      |    unnest(list_transform(range(1, len(string_split(text, ' '))),
-      |      i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]))
-      |      AS bigram
-      |  FROM documents),
-      |bstats AS (
-      |  SELECT doc_id, MAX(c) AS top_c, SUM(c) AS n_bigrams FROM (
-      |    SELECT doc_id, bigram, COUNT(*) AS c FROM bigrams GROUP BY 1, 2) t
-      |  GROUP BY 1)
-      |SELECT w.doc_id, n_words, n_distinct_words,
-      |  round(1.0 - CAST(n_distinct_words AS DOUBLE) / n_words, 6) AS dup_word_frac,
-      |  round(CAST(top_c AS DOUBLE) / n_bigrams, 6) AS top_bigram_frac
-      |FROM wstats w JOIN bstats b ON w.doc_id = b.doc_id""".stripMargin
 
   /** Document fingerprint: rolling polynomial hash over the character
     * stream, mod 2^61-1 (Rabin-Karp). A native codegen'd expression

@@ -31,17 +31,12 @@ object CurationQueries {
       "doc_id", "text", n = 3)
   }
 
-  private val gramsSql =
-    """list_distinct(list_transform(
-      |    generate_series(1, greatest(len(string_split(text,' '))-2, 0)),
-      |    i -> array_to_string(string_split(text,' ')[i:i+2], ' ')))""".stripMargin
-
   val decontaminateSql: String =
     s"""WITH bench AS (
-       |  SELECT DISTINCT unnest($gramsSql) AS gram
+       |  SELECT DISTINCT unnest(${OracleSql.shinglesSql(3)}) AS gram
        |  FROM documents WHERE doc_id < 20),
        |train AS (
-       |  SELECT doc_id, unnest($gramsSql) AS gram
+       |  SELECT doc_id, unnest(${OracleSql.shinglesSql(3)}) AS gram
        |  FROM documents WHERE doc_id >= 20)
        |SELECT doc_id, COUNT(*) AS n_contaminated_grams
        |FROM train JOIN bench USING (gram)
@@ -67,10 +62,7 @@ object CurationQueries {
     Curation.piiScan(aug, "doc_id", "text")
   }
 
-  val piiScanSql: String = {
-    val email = Curation.emailRe.replace("'", "''")
-    val ip = Curation.ipv4Re
-    val phone = Curation.phoneRe
+  val piiScanSql: String =
     s"""WITH aug AS (
        |  SELECT doc_id, text ||
        |    CASE WHEN doc_id % 5 = 0
@@ -80,15 +72,7 @@ object CurationQueries {
        |    CASE WHEN doc_id % 11 = 0
        |      THEN ' call 555-123-4567 today' ELSE '' END AS text
        |  FROM documents)
-       |SELECT doc_id,
-       |  len(regexp_extract_all(text, '$email')) AS n_emails,
-       |  len(regexp_extract_all(text, '$ip')) AS n_ips,
-       |  len(regexp_extract_all(text, '$phone')) AS n_phones,
-       |  regexp_replace(regexp_replace(regexp_replace(text,
-       |    '$email', '[EMAIL]', 'g'), '$ip', '[IP]', 'g'),
-       |    '$phone', '[PHONE]', 'g') AS redacted
-       |FROM aug""".stripMargin
-  }
+       |${OracleSql.piiScanSql("aug")}""".stripMargin
 
   /** Canonical text normalization (case/punctuation/whitespace). */
   def normalize(spark: SparkSession, d: String): DataFrame =
@@ -106,7 +90,7 @@ object CurationQueries {
     Curation.gopherFilter(Tables.documents(spark, d), "doc_id", "text")
 
   val docFilterSql: String =
-    s"""WITH rep AS (${graft.operators.TextAnalysis.repetitionStatsSql}),
+    s"""WITH rep AS (${PipelineQueries.txtRepetitionSql}),
        |proj AS (
        |  SELECT doc_id,
        |    CAST(length(replace(text, ' ', '')) AS DOUBLE) /
@@ -202,13 +186,8 @@ object CurationQueries {
     */
   val quantileFilterSql: String =
     s"""WITH s AS (
-       |  SELECT doc_id, q_score FROM (${TextAnalysis.qualityScoreSql}) qs),
-       |ranked AS (
-       |  SELECT doc_id, q_score,
-       |    ROW_NUMBER() OVER (ORDER BY q_score DESC, doc_id) AS rk FROM s),
-       |thr AS (
-       |  SELECT MIN(q_score) AS t FROM ranked
-       |  WHERE rk <= CAST(ceil(0.25 * (SELECT COUNT(*) FROM s)) AS BIGINT))
+       |  SELECT doc_id, q_score FROM (${OracleSql.qualityScoreSql("documents")}) qs),
+       |thr AS (${OracleSql.rankCutSql("s", "q_score", "0.25")})
        |SELECT s.doc_id, s.q_score FROM s, thr WHERE s.q_score >= thr.t"""
       .stripMargin
 
@@ -230,25 +209,7 @@ object CurationQueries {
       totalTokens = 30000L, nShards = 8)
 
   val tokenBudgetSql: String =
-    """WITH h AS (
-      |  SELECT doc_id,
-      |    CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-      |      AS BIGINT) % 8 AS shard,
-      |    md5(CAST(doc_id AS VARCHAR)) AS mh,
-      |    len(string_split(text, ' ')) AS n_tokens
-      |  FROM documents),
-      |r AS (
-      |  SELECT doc_id, shard, n_tokens,
-      |    ROW_NUMBER() OVER (PARTITION BY shard ORDER BY mh, doc_id) - 1 AS pos
-      |  FROM h),
-      |c AS (
-      |  SELECT doc_id, shard, pos, n_tokens,
-      |    CAST(SUM(n_tokens) OVER (PARTITION BY shard ORDER BY pos
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-      |      AS cum_tokens
-      |  FROM r)
-      |SELECT doc_id, shard, pos, n_tokens, cum_tokens
-      |FROM c WHERE cum_tokens <= 3750""".stripMargin
+    "WITH " + OracleSql.tokenBudgetSql("documents", 8, "3750")
 
   /** Domain-weighted mixture budget over the `lang` column: en gets
     * half the 30k-token budget, fr and de a fifth each, es/zh are
@@ -265,43 +226,24 @@ object CurationQueries {
     * (both engines evaluate (total·w)/nShards in IEEE doubles — the
     * weights are CAST AS DOUBLE so DuckDB does not infer DECIMAL).
     */
-  val domainBudgetSql: String =
-    """WITH wts(domain, w) AS (
-      |  VALUES ('en', CAST(0.5 AS DOUBLE)), ('fr', CAST(0.2 AS DOUBLE)),
-      |         ('de', CAST(0.2 AS DOUBLE))),
-      |h AS (
-      |  SELECT doc_id, lang AS domain, w,
-      |    CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-      |      AS BIGINT) % 8 AS shard,
-      |    md5(CAST(doc_id AS VARCHAR)) AS mh,
-      |    len(string_split(text, ' ')) AS n_tokens
-      |  FROM documents JOIN wts ON wts.domain = documents.lang
-      |  WHERE text IS NOT NULL),
-      |r AS (
-      |  SELECT doc_id, domain, w, shard, n_tokens,
-      |    ROW_NUMBER() OVER (PARTITION BY domain, shard ORDER BY mh, doc_id) - 1
-      |      AS pos
-      |  FROM h),
-      |c AS (
-      |  SELECT doc_id, domain, w, shard, pos, n_tokens,
-      |    CAST(SUM(n_tokens) OVER (PARTITION BY domain, shard ORDER BY pos
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-      |      AS cum_tokens
-      |  FROM r)
-      |SELECT doc_id, domain, shard, pos, n_tokens, cum_tokens
-      |FROM c WHERE cum_tokens <= CAST(FLOOR(30000.0 * w / 8) AS BIGINT)"""
-      .stripMargin
+  val domainBudgetSql: String = domainBudgetSqlOver(shuffled = true)
+
+  /** The lang-weighted mixture budget over the documents; `shuffled`
+    * budgets the stored mix, otherwise the doc_id-ordered ingest log.
+    */
+  private[queries] def domainBudgetSqlOver(shuffled: Boolean): String =
+    s"WITH ${OracleSql.weightsCte("en" -> 0.5, "fr" -> 0.2, "de" -> 0.2)},\n" +
+      OracleSql.tokenBudgetSql(
+        "documents JOIN wts ON wts.domain = documents.lang WHERE text IS NOT NULL",
+        8, "CAST(FLOOR(30000.0 * w / 8) AS BIGINT)", shuffled, byDomain = true)
 
   val globalShuffleSql: String =
-    """WITH h AS (
-      |  SELECT doc_id,
-      |    CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-      |      AS BIGINT) AS hv
-      |  FROM documents)
-      |SELECT doc_id, hv % 8 AS shard,
-      |  ROW_NUMBER() OVER (PARTITION BY hv % 8
-      |    ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) - 1 AS pos
-      |FROM h""".stripMargin
+    s"""WITH h AS (
+       |  SELECT doc_id, ${OracleSql.shardSql(8)} AS shard FROM documents)
+       |SELECT doc_id, shard,
+       |  ROW_NUMBER() OVER (PARTITION BY shard
+       |    ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) - 1 AS pos
+       |FROM h""".stripMargin
 
   /** The capstone composition — the round-7 operators chained the way a
     * real curation job runs them: strip duplicated passages, drop
@@ -341,36 +283,13 @@ object CurationQueries {
        |  WHERE clean_text <> ''),
        |s AS (
        |  SELECT doc_id, q_score FROM (
-       |    ${TextAnalysis.qualityScoreSqlFrom("stripped")}) qs),
-       |ranked AS (
-       |  SELECT doc_id, q_score,
-       |    ROW_NUMBER() OVER (ORDER BY q_score DESC, doc_id) AS rk FROM s),
-       |thr AS (
-       |  SELECT MIN(q_score) AS t FROM ranked
-       |  WHERE rk <= CAST(ceil(0.5 * (SELECT COUNT(*) FROM s)) AS BIGINT)),
+       |    ${OracleSql.qualityScoreSql("stripped")}) qs),
+       |thr AS (${OracleSql.rankCutSql("s", "q_score", "0.5")}),
        |kt AS (
        |  SELECT st.doc_id, st.text FROM stripped st
        |  JOIN s USING (doc_id) CROSS JOIN thr
        |  WHERE s.q_score >= thr.t),
-       |h AS (
-       |  SELECT doc_id,
-       |    CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-       |      AS BIGINT) % 4 AS shard,
-       |    md5(CAST(doc_id AS VARCHAR)) AS mh,
-       |    len(string_split(text, ' ')) AS n_tokens
-       |  FROM kt),
-       |r AS (
-       |  SELECT doc_id, shard, n_tokens,
-       |    ROW_NUMBER() OVER (PARTITION BY shard ORDER BY mh, doc_id) - 1 AS pos
-       |  FROM h),
-       |c AS (
-       |  SELECT doc_id, shard, pos, n_tokens,
-       |    CAST(SUM(n_tokens) OVER (PARTITION BY shard ORDER BY pos
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-       |      AS cum_tokens
-       |  FROM r)
-       |SELECT doc_id, shard, pos, n_tokens, cum_tokens
-       |FROM c WHERE cum_tokens <= 5000""".stripMargin
+       |${OracleSql.tokenBudgetSql("kt", 4, "5000")}""".stripMargin
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dd_decontaminate" -> decontaminate,

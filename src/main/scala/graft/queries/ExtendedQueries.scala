@@ -282,102 +282,13 @@ object ExtendedQueries {
       .groupBy(col("cluster")).agg(count(lit(1)).as("n"))
   }
 
-  /** Unrolled Lloyd-iteration CTE chain shared by the kmeans and IVF
-    * oracles. Produces `c0..c<iters>` (centroid k, dim i, value v) plus
-    * the per-iteration assignment CTEs. Init = the first `k` vectors
-    * (the trainer's deterministic seed); assignment = argmin squared
-    * distance with lowest-cluster tiebreak; update = per-dimension mean
-    * with empty clusters keeping their old centroid.
-    */
-  def lloydCtes(k: Int, iters: Int, sourceWhere: String = "",
-      dim: Int = 64, prelude: String = ""): String =
-    lloydCtes(k.toString, iters, sourceWhere, dim, prelude)
-
-  /** The corpus-sized codebook expression mirroring
-    * [[graft.operators.Dedup.autoClusters]]: DuckDB `//` is integer
-    * division, so `(COUNT(*) + target-1) // target` is the SAME integer
-    * ceil the Scala side computes — no float rounding to diverge on.
-    * The count reads `embeddings`, which inside a prelude-shadowed
-    * chain resolves to the derived-feature CTE of that name, i.e.
-    * exactly the vector set the Scala operator counts.
-    */
-  def autoKExpr(targetClusterSize: Int = 125): String =
-    s"(SELECT LEAST(GREATEST(4, (COUNT(*) + ${targetClusterSize - 1}) " +
-      s"// $targetClusterSize), 200000) FROM embeddings)"
-
-  /** String-k form: `kExpr` may be any SQL integer expression — e.g.
-    * [[autoKExpr]]'s scalar subquery sizing the codebook from the
-    * corpus — evaluated inside the seed CTE's `srk <= kExpr` filter.
-    */
-  def lloydCtes(kExpr: String, iters: Int, sourceWhere: String,
-      dim: Int, prelude: String): String = {
-    // The trainer iterates over a bounded deterministic-hash sample —
-    // the 10000 rows with the smallest (md5(vec_id), vec_id), the same
-    // kernel as op_stratified_sample — so the training CTEs read the
-    // same subset (`se`), with `srk` carrying each row's rank in hash
-    // order; only the FINAL assignment (authored by callers) scans the
-    // full table. Seeds are the first $k sample rows and centroid labels
-    // are their 0-based sample ranks, matching the trainer's array
-    // indices (the argmin tiebreak orders by that label).
-    // `sourceWhere` restricts the TRAINING corpus (e.g. the already-built
-    // half of an incrementally-appended index); assignment CTEs authored
-    // by callers still scan whatever corpus they choose.
-    // `prelude` prepends caller CTEs ahead of the trainer chain — e.g. a
-    // derived-feature CTE named `embeddings`, which then SHADOWS the base
-    // table of the same name for the whole chain (mm_neardup's image
-    // features train through the identical unrolled-Lloyd text).
-    // `se` is read by every trainer step (2 CTEs per iteration) — left
-    // to DuckDB's default inlining the hash-ranked sample re-sorts per
-    // reference; MATERIALIZED pins one evaluation (round-13 oracle-cost
-    // work: the same hint family cut pipe_all's oracle 26.9 s -> 0.9 s)
-    val pre = if (prelude.isEmpty) "" else prelude + ",\n"
-    val base =
-      s"""WITH ${pre}se AS MATERIALIZED (
-         |  SELECT * FROM (
-         |    SELECT e.*, ROW_NUMBER() OVER (
-         |      ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS srk
-         |    FROM embeddings e $sourceWhere) z WHERE srk <= 10000),
-         |c0 AS (
-         |  SELECT srk - 1 AS k, g.i - 1 AS i, CAST(embedding[g.i] AS DOUBLE) AS v
-         |  FROM se, generate_series(1, $dim) g(i) WHERE srk <= $kExpr)""".stripMargin
-    val steps = (1 to iters).map { t =>
-      s"""d$t AS (
-         |  SELECT e.vec_id AS r, c.k,
-         |    SUM((CAST(e.embedding[c.i + 1] AS DOUBLE) - c.v) *
-         |        (CAST(e.embedding[c.i + 1] AS DOUBLE) - c.v)) AS dist
-         |  FROM se e, c${t - 1} c GROUP BY 1, 2),
-         |a$t AS (
-         |  SELECT r, k FROM (
-         |    SELECT r, k, ROW_NUMBER() OVER (PARTITION BY r ORDER BY dist, k) AS rk
-         |    FROM d$t) z WHERE rk = 1),
-         |m$t AS (
-         |  SELECT a.k, g.i - 1 AS i, AVG(CAST(e.embedding[g.i] AS DOUBLE)) AS v
-         |  FROM a$t a JOIN se e ON a.r = e.vec_id,
-         |       generate_series(1, $dim) g(i)
-         |  GROUP BY 1, 2),
-         |c$t AS (
-         |  SELECT p.k, p.i, COALESCE(m.v, p.v) AS v
-         |  FROM c${t - 1} p LEFT JOIN m$t m ON p.k = m.k AND p.i = m.i)""".stripMargin
-    }
-    (Seq(base) ++ steps).mkString(",\n")
-  }
-
   /** Oracle for [[kmeans]]: cluster sizes of the final relational
-    * assignment after the 3 unrolled Lloyd iterations. */
-  val kmeansSql: String = {
-    val iters = 3
-    lloydCtes(4, iters) + ",\n" +
-      s"""fd AS (
-         |  SELECT e.vec_id AS r, c.k,
-         |    SUM((CAST(e.embedding[c.i + 1] AS DOUBLE) - c.v) *
-         |        (CAST(e.embedding[c.i + 1] AS DOUBLE) - c.v)) AS dist
-         |  FROM embeddings e, c$iters c GROUP BY 1, 2),
-         |fa AS (
-         |  SELECT r, k FROM (
-         |    SELECT r, k, ROW_NUMBER() OVER (PARTITION BY r ORDER BY dist, k) AS rk
-         |    FROM fd) z WHERE rk = 1)
-         |SELECT k AS cluster, COUNT(*) AS n FROM fa GROUP BY 1""".stripMargin
-  }
+    * assignment after 3 unrolled Lloyd iterations
+    * ([[OracleSql.lloydCtes]]).
+    */
+  val kmeansSql: String =
+    OracleSql.lloydCtes("4", 3) + ",\n" + OracleSql.assignCtes() +
+      "\nSELECT k AS cluster, COUNT(*) AS n FROM fa GROUP BY 1"
 
   /** CDC merge/upsert: apply a deterministic change batch (updates on
     * keys ≡0 mod 10, deletes on ≡1, inserts on ≡2 re-keyed +10M) to the

@@ -32,16 +32,24 @@ object PipelineQueries {
     * (see Dedup.minhashPairs).
     */
   val ddMinhashSql: String =
-    """WITH w AS MATERIALIZED (SELECT doc_id, list_distinct(list_transform(
-      |    generate_series(1, greatest(len(string_split(text,' '))-1, 0)),
-      |    i -> array_to_string(string_split(text,' ')[i:i+1], ' '))) AS ws
-      |  FROM documents)
-      |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-      |  CAST(len(list_intersect(a.ws,b.ws)) AS DOUBLE) /
-      |  (len(a.ws)+len(b.ws)-len(list_intersect(a.ws,b.ws))) AS jaccard
-      |FROM w a JOIN w b ON a.doc_id < b.doc_id
-      |WHERE CAST(len(list_intersect(a.ws,b.ws)) AS DOUBLE) /
-      |  (len(a.ws)+len(b.ws)-len(list_intersect(a.ws,b.ws))) >= 0.8""".stripMargin
+    jaccardPairsSql(2, "a.doc_id AS id_a, b.doc_id AS id_b", "a.doc_id < b.doc_id", 0.8)
+
+  /** Exact jaccard over each doc's distinct word `n`-grams: the pairs of
+    * sides a and b joined `on`, projected as `ids`, at or above
+    * `threshold`.
+    */
+  private def jaccardPairsSql(n: Int, ids: String, on: String,
+      threshold: Double): String = {
+    val j = "CAST(len(list_intersect(a.sh,b.sh)) AS DOUBLE) /\n" +
+      "  (len(a.sh)+len(b.sh)-len(list_intersect(a.sh,b.sh)))"
+    s"""WITH s AS MATERIALIZED (
+       |  SELECT doc_id, ${OracleSql.shinglesSql(n)} AS sh
+       |  FROM documents)
+       |SELECT $ids,
+       |  $j AS jaccard
+       |FROM s a JOIN s b ON $on
+       |WHERE $j >= $threshold""".stripMargin
+  }
 
   /** near-dup clusters: connected components over the minhash pair graph —
     * each clustered doc labeled with its component's smallest doc id
@@ -51,18 +59,25 @@ object PipelineQueries {
       Dedup.minhashPairs(Tables.documents(spark, d), "doc_id", "text",
         threshold = 0.8))
 
+  /** Connected components of the `pairs` (id_a, id_b) graph: its
+    * symmetric closure `e`, and `reach` (id, r) for every id reachable
+    * from r.
+    */
+  private val componentCtes: String =
+    """e AS (SELECT id_a AS a, id_b AS b FROM pairs
+      |      UNION SELECT id_b, id_a FROM pairs),
+      |reach(id, r) AS (
+      |  SELECT a, a FROM (SELECT DISTINCT a FROM e) n
+      |  UNION
+      |  SELECT e.b, reach.r FROM reach JOIN e ON e.a = reach.id)""".stripMargin
+
   /** Oracle for [[ddClusters]]: the exact pair set (same as
     * [[ddMinhashSql]]) symmetrized, then min-reachable-id per node via a
     * recursive transitive closure.
     */
   val ddClustersSql: String =
     s"""WITH RECURSIVE pairs AS MATERIALIZED ($ddMinhashSql),
-       |e AS (SELECT id_a AS a, id_b AS b FROM pairs
-       |      UNION SELECT id_b, id_a FROM pairs),
-       |reach(id, r) AS (
-       |  SELECT a, a FROM (SELECT DISTINCT a FROM e) n
-       |  UNION
-       |  SELECT e.b, reach.r FROM reach JOIN e ON e.a = reach.id)
+       |$componentCtes
        |SELECT id AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY id""".stripMargin
 
   /** The dedup pipeline's terminal action: pairs → clusters → drop list.
@@ -87,17 +102,7 @@ object PipelineQueries {
       n = 3, threshold = 0.5)
 
   val ddNgramSql: String =
-    """WITH s AS MATERIALIZED (
-      |  SELECT doc_id, list_distinct(list_transform(
-      |    generate_series(1, greatest(len(string_split(text,' '))-2, 0)),
-      |    i -> array_to_string(string_split(text,' ')[i:i+2], ' '))) AS sh
-      |  FROM documents)
-      |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-      |  CAST(len(list_intersect(a.sh,b.sh)) AS DOUBLE) /
-      |  (len(a.sh)+len(b.sh)-len(list_intersect(a.sh,b.sh))) AS jaccard
-      |FROM s a JOIN s b ON a.doc_id < b.doc_id
-      |WHERE CAST(len(list_intersect(a.sh,b.sh)) AS DOUBLE) /
-      |  (len(a.sh)+len(b.sh)-len(list_intersect(a.sh,b.sh))) >= 0.5""".stripMargin
+    jaccardPairsSql(3, "a.doc_id AS id_a, b.doc_id AS id_b", "a.doc_id < b.doc_id", 0.5)
 
   /** Ingest-time cross-corpus dedup: docs ≥250 play the arriving batch,
     * docs <250 the already-ingested corpus; near-dup pairs between the two
@@ -113,17 +118,9 @@ object PipelineQueries {
   /** exact O(n·m) cross jaccard — LSH equality holds for the same reason
     * as [[ddMinhashSql]] (banding miss prob ~1e-28 at j≥0.8)
     */
-  val ddCrossSql: String =
-    """WITH w AS MATERIALIZED (SELECT doc_id, list_distinct(list_transform(
-      |    generate_series(1, greatest(len(string_split(text,' '))-1, 0)),
-      |    i -> array_to_string(string_split(text,' ')[i:i+1], ' '))) AS ws
-      |  FROM documents)
-      |SELECT n.doc_id AS new_id, c.doc_id AS corpus_id,
-      |  CAST(len(list_intersect(n.ws,c.ws)) AS DOUBLE) /
-      |  (len(n.ws)+len(c.ws)-len(list_intersect(n.ws,c.ws))) AS jaccard
-      |FROM w n JOIN w c ON n.doc_id >= 250 AND c.doc_id < 250
-      |WHERE CAST(len(list_intersect(n.ws,c.ws)) AS DOUBLE) /
-      |  (len(n.ws)+len(c.ws)-len(list_intersect(n.ws,c.ws))) >= 0.8""".stripMargin
+  val ddCrossSql: String = jaccardPairsSql(2,
+    "a.doc_id AS new_id, b.doc_id AS corpus_id",
+    "a.doc_id >= 250 AND b.doc_id < 250", 0.8)
 
   /** [[ddCross]] through a CATALOG-PERSISTED index
     * ([[Dedup.persistLshIndex]]: shingle sets bucketed on id, pruned
@@ -224,10 +221,7 @@ object PipelineQueries {
     */
   def ddExactIndexed(spark: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(spark, d)
-    val arrivals = docs.filter(col("doc_id") >= 250)
-      .select(col("doc_id"), col("text"))
-      .union(docs.filter(col("doc_id") < 100)
-        .select((col("doc_id") + 10000).as("doc_id"), col("text")))
+    val arrivals = OracleSql.arrivals(docs)
     graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
       Dedup.persistExactIndex(cat, db, "corpus",
         docs.filter(col("doc_id") < 250), "text")
@@ -237,15 +231,12 @@ object PipelineQueries {
   }
 
   val ddExactIndexedSql: String =
-    """WITH arriv AS (
-      |  SELECT doc_id, text FROM documents WHERE doc_id >= 250
-      |  UNION ALL
-      |  SELECT doc_id + 10000 AS doc_id, text FROM documents
-      |  WHERE doc_id < 100)
-      |SELECT a.doc_id,
-      |  EXISTS(SELECT 1 FROM documents c
-      |         WHERE c.doc_id < 250 AND c.text = a.text) AS is_dup
-      |FROM arriv a""".stripMargin
+    s"""WITH arriv AS (
+       |  ${OracleSql.arrivalsSql})
+       |SELECT a.doc_id,
+       |  EXISTS(SELECT 1 FROM documents c
+       |         WHERE c.doc_id < 250 AND c.text = a.text) AS is_dup
+       |FROM arriv a""".stripMargin
 
   def ddSimhash(spark: SparkSession, d: String): DataFrame =
     Dedup.simhashPairs(Tables.documents(spark, d), "doc_id", "text")
@@ -307,27 +298,36 @@ object PipelineQueries {
   def ddSpan(spark: SparkSession, d: String): DataFrame =
     Dedup.duplicateSpans(Tables.documents(spark, d), "doc_id", "text", k = 8)
 
-  /** Oracle: identical window/fingerprint/island construction in SQL.
-    * `unnest(range(...))` replaces the lateral generate_series DuckDB
-    * refuses; `range` is empty when the doc is shorter than the window,
-    * matching the Spark side's size guard.
+  /** Every 8-token window of the docs in `from`: `<p>toks` (doc_id,
+    * tokens t), `<p>posn` and `<p>wins` (doc_id, pos, g = the window's
+    * md5). `unnest(range(...))` replaces the lateral generate_series
+    * DuckDB refuses; it is empty for a doc shorter than the window, like
+    * the Spark side's size guard.
     */
-  val ddSpanSql: String =
-    """WITH toks AS (
-      |  SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-      |posn AS (
-      |  SELECT doc_id, t, unnest(range(0, len(t) - 7)) AS pos FROM toks),
-      |wins AS (
-      |  SELECT doc_id, pos, md5(array_to_string(t[pos + 1 : pos + 8], ' ')) AS g
-      |  FROM posn),
-      |dup AS (SELECT g FROM wins GROUP BY g HAVING COUNT(*) >= 2),
-      |hits AS (SELECT w.doc_id, w.pos FROM wins w JOIN dup d USING (g)),
-      |isl AS (SELECT doc_id, pos,
+  private def spanWindowCtes(from: String, p: String = ""): String =
+    s"""${p}toks AS (
+       |  SELECT doc_id, string_split(text, ' ') AS t FROM $from),
+       |${p}posn AS (
+       |  SELECT doc_id, t, unnest(range(0, len(t) - 7)) AS pos FROM ${p}toks),
+       |${p}wins AS (
+       |  SELECT doc_id, pos, md5(array_to_string(t[pos + 1 : pos + 8], ' ')) AS g
+       |  FROM ${p}posn)""".stripMargin
+
+  /** Matched windows `hits` (doc_id, pos) merged into maximal runs. */
+  private val spanIslandsSql: String =
+    """isl AS (SELECT doc_id, pos,
       |  pos - ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) AS grp
       |  FROM hits)
       |SELECT doc_id, MIN(pos) AS span_start, MAX(pos) + 7 AS span_end,
       |  MAX(pos) - MIN(pos) + 8 AS span_tokens
       |FROM isl GROUP BY doc_id, grp""".stripMargin
+
+  /** Oracle: identical window/fingerprint/island construction in SQL. */
+  val ddSpanSql: String =
+    s"""WITH ${spanWindowCtes("documents")},
+       |dup AS (SELECT g FROM wins GROUP BY g HAVING COUNT(*) >= 2),
+       |hits AS (SELECT w.doc_id, w.pos FROM wins w JOIN dup d USING (g)),
+       |$spanIslandsSql""".stripMargin
 
   /** Ingest-time span dedup against a CATALOG-PERSISTED gram index
     * (corpus = docs < 250 indexed once; arrivals = the rest probe it) —
@@ -345,29 +345,11 @@ object PipelineQueries {
   }
 
   val ddSpanCrossSql: String =
-    """WITH ctoks AS (
-      |  SELECT doc_id, string_split(text, ' ') AS t FROM documents
-      |  WHERE doc_id < 250),
-      |cpos AS (
-      |  SELECT doc_id, t, unnest(range(0, len(t) - 7)) AS pos FROM ctoks),
-      |cg AS (
-      |  SELECT DISTINCT md5(array_to_string(t[pos + 1 : pos + 8], ' ')) AS g
-      |  FROM cpos),
-      |atoks AS (
-      |  SELECT doc_id, string_split(text, ' ') AS t FROM documents
-      |  WHERE doc_id >= 250),
-      |apos AS (
-      |  SELECT doc_id, t, unnest(range(0, len(t) - 7)) AS pos FROM atoks),
-      |wins AS (
-      |  SELECT doc_id, pos, md5(array_to_string(t[pos + 1 : pos + 8], ' ')) AS g
-      |  FROM apos),
-      |hits AS (SELECT w.doc_id, w.pos FROM wins w JOIN cg USING (g)),
-      |isl AS (SELECT doc_id, pos,
-      |  pos - ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) AS grp
-      |  FROM hits)
-      |SELECT doc_id, MIN(pos) AS span_start, MAX(pos) + 7 AS span_end,
-      |  MAX(pos) - MIN(pos) + 8 AS span_tokens
-      |FROM isl GROUP BY doc_id, grp""".stripMargin
+    s"""WITH ${spanWindowCtes("documents WHERE doc_id < 250", "c")},
+       |cg AS (SELECT DISTINCT g FROM cwins),
+       |${spanWindowCtes("documents WHERE doc_id >= 250")},
+       |hits AS (SELECT w.doc_id, w.pos FROM wins w JOIN cg USING (g)),
+       |$spanIslandsSql""".stripMargin
 
   /** Exact-substring dedup APPLY: every duplicated 8-token window
     * stripped except at its corpus-canonical first site
@@ -383,41 +365,42 @@ object PipelineQueries {
     * awkward; the unique-site argument makes rn=1 ≡ min(struct)).
     */
   val ddSpanStripSql: String =
-    """WITH toks AS (
-      |  SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-      |posn AS (
-      |  SELECT doc_id, t, unnest(range(0, len(t) - 7)) AS pos FROM toks),
-      |wins AS (
-      |  SELECT doc_id, pos, md5(array_to_string(t[pos + 1 : pos + 8], ' ')) AS g
-      |  FROM posn),
-      |dup AS (SELECT g FROM wins GROUP BY g HAVING COUNT(*) >= 2),
-      |sites AS (
-      |  SELECT w.doc_id, w.pos,
-      |    ROW_NUMBER() OVER (PARTITION BY w.g ORDER BY w.doc_id, w.pos) AS rn
-      |  FROM wins w JOIN dup d USING (g)),
-      |rem AS (
-      |  SELECT DISTINCT doc_id, pos + i.i AS tp
-      |  FROM sites, generate_series(0, 7) i(i) WHERE rn > 1),
-      |tokpos AS (
-      |  SELECT doc_id, t[pos + 1] AS tok, pos AS tp
-      |  FROM (SELECT doc_id, t, unnest(range(0, len(t))) AS pos FROM toks)),
-      |keep AS (
-      |  SELECT k.doc_id, k.tp, k.tok FROM tokpos k
-      |  LEFT JOIN rem r ON k.doc_id = r.doc_id AND k.tp = r.tp
-      |  WHERE r.doc_id IS NULL),
-      |rebuilt AS (
-      |  SELECT doc_id, array_to_string(list(tok ORDER BY tp), ' ') AS clean_text,
-      |    COUNT(*) AS n_kept
-      |  FROM keep GROUP BY doc_id)
-      |SELECT t.doc_id, COALESCE(r.clean_text, '') AS clean_text,
-      |  len(t.t) - COALESCE(r.n_kept, 0) AS n_removed
-      |FROM toks t LEFT JOIN rebuilt r ON t.doc_id = r.doc_id""".stripMargin
+    s"""WITH ${spanStripCtes("documents")}
+       |SELECT t.doc_id, COALESCE(r.clean_text, '') AS clean_text,
+       |  len(t.t) - COALESCE(r.n_kept, 0) AS n_removed
+       |FROM toks t LEFT JOIN rebuilt r ON t.doc_id = r.doc_id""".stripMargin
+
+  /** [[spanWindowCtes]] plus the strip of every duplicated window
+    * except its first (doc, pos) site: `<p>rebuilt` (doc_id, clean_text,
+    * n_kept) for docs with a kept token.
+    */
+  private def spanStripCtes(from: String, p: String = ""): String =
+    spanWindowCtes(from, p) + ",\n" +
+      s"""${p}dup AS (SELECT g FROM ${p}wins GROUP BY g HAVING COUNT(*) >= 2),
+         |${p}sites AS (
+         |  SELECT w.doc_id, w.pos,
+         |    ROW_NUMBER() OVER (PARTITION BY w.g ORDER BY w.doc_id, w.pos) AS rn
+         |  FROM ${p}wins w JOIN ${p}dup d USING (g)),
+         |${p}rem AS (
+         |  SELECT DISTINCT doc_id, pos + i.i AS tp
+         |  FROM ${p}sites, generate_series(0, 7) i(i) WHERE rn > 1),
+         |${p}tokpos AS (
+         |  SELECT doc_id, t[pos + 1] AS tok, pos AS tp
+         |  FROM (SELECT doc_id, t, unnest(range(0, len(t))) AS pos FROM ${p}toks)),
+         |${p}keep AS (
+         |  SELECT k.doc_id, k.tp, k.tok FROM ${p}tokpos k
+         |  LEFT JOIN ${p}rem r ON k.doc_id = r.doc_id AND k.tp = r.tp
+         |  WHERE r.doc_id IS NULL),
+         |${p}rebuilt AS (
+         |  SELECT doc_id, array_to_string(list(tok ORDER BY tp), ' ') AS clean_text,
+         |    COUNT(*) AS n_kept
+         |  FROM ${p}keep GROUP BY doc_id)""".stripMargin
 
   /** SemDeDup pairs over embeddings: kmeans-bucketed cosine verify
     * ([[Dedup.semanticPairs]]), same trainer geometry as ml_kmeans but
     * with the codebook CORPUS-SIZED ([[Dedup.autoClusters]]) — k grows
     * with the vector count so Σ|cluster|² stays linear; the oracle
-    * computes the identical k via [[ExtendedQueries.autoKExpr]].
+    * computes the identical k via [[OracleSql.autoKExpr]].
     */
   def ddSemantic(spark: SparkSession, d: String): DataFrame =
     Dedup.semanticPairs(Tables.embeddings(spark, d), "vec_id", "embedding",
@@ -456,12 +439,7 @@ object PipelineQueries {
   lazy val ddSemanticKeepSql: String =
     s"""WITH RECURSIVE p0 AS ($ddSemanticSql),
        |pairs AS (SELECT id_a, id_b FROM p0),
-       |e AS (SELECT id_a AS a, id_b AS b FROM pairs
-       |      UNION SELECT id_b, id_a FROM pairs),
-       |reach(id, r) AS (
-       |  SELECT a, a FROM (SELECT DISTINCT a FROM e) n
-       |  UNION
-       |  SELECT e.b, reach.r FROM reach JOIN e ON e.a = reach.id),
+       |$componentCtes,
        |cl AS (SELECT id, MIN(r) AS rep FROM reach GROUP BY id)
        |SELECT id AS drop_id, rep AS keep_id FROM cl WHERE id <> rep"""
       .stripMargin
@@ -483,7 +461,7 @@ object PipelineQueries {
     Dedup.semanticPairs(Tables.embeddings(spark, d), "vec_id", "embedding",
       nClusters = 8, iters = 3, threshold = 0.4, routeCells = 3)
 
-  /** Oracle for [[ddSemanticRoute]]: [[ExtendedQueries.lloydCtes]] (the
+  /** Oracle for [[ddSemanticRoute]]: [[OracleSql.lloydCtes]] (the
     * fine trainer, k=8, unchanged) + a second unrolled-Lloyd chain over
     * the FINE CENTROIDS as rows (g0→g2 — seeds are fine centroids 0..2,
     * mirroring the routed trainer's "sample = the codebook" recipe) +
@@ -493,14 +471,15 @@ object PipelineQueries {
     * (dist, label) at every level, like both Scala kernels.
     */
   val ddSemanticRouteSql: String = {
+    // centroid-to-centroid squared distance, f = the fine c3 centroids
+    def coarseDist(g: String) =
+      s"""SELECT f.k AS r, g.ck, SUM((f.v - g.v) * (f.v - g.v)) AS dist
+         |  FROM c3 f JOIN $g g ON f.i = g.i GROUP BY 1, 2""".stripMargin
     val coarseSteps = (1 to 2).map { t =>
       s"""gd$t AS (
-         |  SELECT f.k AS r, g.ck, SUM((f.v - g.v) * (f.v - g.v)) AS dist
-         |  FROM c3 f JOIN g${t - 1} g ON f.i = g.i GROUP BY 1, 2),
+         |  ${coarseDist(s"g${t - 1}")}),
          |ga$t AS (
-         |  SELECT r, ck FROM (
-         |    SELECT r, ck, ROW_NUMBER() OVER (PARTITION BY r ORDER BY dist, ck) AS rk
-         |    FROM gd$t) z WHERE rk = 1),
+         |  ${OracleSql.nearestSql(s"gd$t", "r, ck", "ck")}),
          |gm$t AS (
          |  SELECT a.ck, f.i, AVG(f.v) AS v
          |  FROM ga$t a JOIN c3 f ON a.r = f.k GROUP BY 1, 2),
@@ -508,97 +487,44 @@ object PipelineQueries {
          |  SELECT p.ck, p.i, COALESCE(m.v, p.v) AS v
          |  FROM g${t - 1} p LEFT JOIN gm$t m ON p.ck = m.ck AND p.i = m.i)""".stripMargin
     }.mkString(",\n")
-    ExtendedQueries.lloydCtes(8, 3) + ",\n" +
-      """g0 AS (SELECT k AS ck, i, v FROM c3 WHERE k < 3),""" + "\n" +
+    OracleSql.lloydCtes("8", 3) + ",\n" +
+      "g0 AS (SELECT k AS ck, i, v FROM c3 WHERE k < 3),\n" +
       coarseSteps + ",\n" +
-      """md AS (
-        |  SELECT f.k AS r, g.ck, SUM((f.v - g.v) * (f.v - g.v)) AS dist
-        |  FROM c3 f JOIN g2 g ON f.i = g.i GROUP BY 1, 2),
-        |mem AS MATERIALIZED (
-        |  SELECT r AS k, ck FROM (
-        |    SELECT r, ck, ROW_NUMBER() OVER (PARTITION BY r ORDER BY dist, ck) AS rk
-        |    FROM md) z WHERE rk = 1),
-        |gne AS MATERIALIZED (
-        |  SELECT g2.ck, g2.i, g2.v FROM g2
-        |  JOIN (SELECT DISTINCT ck FROM mem) ne ON ne.ck = g2.ck),
-        |rd AS (
-        |  SELECT e.vec_id AS r, g.ck,
-        |    SUM((CAST(e.embedding[g.i + 1] AS DOUBLE) - g.v) *
-        |        (CAST(e.embedding[g.i + 1] AS DOUBLE) - g.v)) AS dist
-        |  FROM embeddings e, gne g GROUP BY 1, 2),
-        |rr AS MATERIALIZED (
-        |  SELECT r, ck FROM (
-        |    SELECT r, ck, ROW_NUMBER() OVER (PARTITION BY r ORDER BY dist, ck) AS rk
-        |    FROM rd) z WHERE rk = 1),
-        |fd AS (
-        |  SELECT e.vec_id AS r, c.k,
-        |    SUM((CAST(e.embedding[c.i + 1] AS DOUBLE) - c.v) *
-        |        (CAST(e.embedding[c.i + 1] AS DOUBLE) - c.v)) AS dist
-        |  FROM embeddings e
-        |  JOIN rr ON rr.r = e.vec_id
-        |  JOIN mem ON mem.ck = rr.ck
-        |  JOIN c3 c ON c.k = mem.k
-        |  GROUP BY 1, 2),
-        |fa AS MATERIALIZED (
-        |  SELECT r, k FROM (
-        |    SELECT r, k, ROW_NUMBER() OVER (PARTITION BY r ORDER BY dist, k) AS rk
-        |    FROM fd) z WHERE rk = 1),
-        |v AS MATERIALIZED (
-        |  SELECT e.vec_id, e.embedding, a.k
-        |  FROM embeddings e JOIN fa a ON e.vec_id = a.r),
-        |p AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.k AS cluster,
-        |    round((SELECT SUM(CAST(a.embedding[i] AS DOUBLE)*CAST(b.embedding[i] AS DOUBLE))
-        |     FROM generate_series(1, 64) g(i)) /
-        |    (sqrt((SELECT SUM(CAST(a.embedding[i] AS DOUBLE)*CAST(a.embedding[i] AS DOUBLE))
-        |           FROM generate_series(1, 64) g(i))) *
-        |     sqrt((SELECT SUM(CAST(b.embedding[i] AS DOUBLE)*CAST(b.embedding[i] AS DOUBLE))
-        |           FROM generate_series(1, 64) g(i)))), 6) AS cos
-        |  FROM v a JOIN v b ON a.k = b.k AND a.vec_id < b.vec_id)
-        |SELECT id_a, id_b, cluster, cos FROM p WHERE cos >= 0.4""".stripMargin
+      s"""md AS (
+         |  ${coarseDist("g2")}),
+         |mem AS MATERIALIZED (
+         |  ${OracleSql.nearestSql("md", "r AS k, ck", "ck")}),
+         |gne AS MATERIALIZED (
+         |  SELECT g2.ck, g2.i, g2.v FROM g2
+         |  JOIN (SELECT DISTINCT ck FROM mem) ne ON ne.ck = g2.ck),
+         |rd AS (
+         |  ${OracleSql.centroidDistSql("embeddings e, gne g", "g", "ck")}),
+         |rr AS MATERIALIZED (
+         |  ${OracleSql.nearestSql("rd", "r, ck", "ck")}),
+         |""".stripMargin +
+      OracleSql.semanticPairsSql(64, 0.4,
+        assignFrom = "embeddings e\n  JOIN rr ON rr.r = e.vec_id\n" +
+          "  JOIN mem ON mem.ck = rr.ck\n  JOIN c3 c ON c.k = mem.k",
+        assignMaterialized = true, cellsMaterialized = true)
   }
 
   /** Oracle: the shared unrolled-Lloyd CTE chain (the ml_kmeans oracle's
-    * trainer, [[ExtendedQueries.lloydCtes]]) for the assignment, then the
+    * trainer, [[OracleSql.lloydCtes]]) for the assignment, then the
     * ddCosineSql verify restricted to same-cluster pairs.
     */
   val ddSemanticSql: String =
-    ExtendedQueries.lloydCtes(
-      ExtendedQueries.autoKExpr(), 3, "", 64, "") + ",\n" +
-      """fd AS (
-        |  SELECT e.vec_id AS r, c.k,
-        |    SUM((CAST(e.embedding[c.i + 1] AS DOUBLE) - c.v) *
-        |        (CAST(e.embedding[c.i + 1] AS DOUBLE) - c.v)) AS dist
-        |  FROM embeddings e, c3 c GROUP BY 1, 2),
-        |fa AS (
-        |  SELECT r, k FROM (
-        |    SELECT r, k, ROW_NUMBER() OVER (PARTITION BY r ORDER BY dist, k) AS rk
-        |    FROM fd) z WHERE rk = 1),
-        |v AS (
-        |  SELECT e.vec_id, e.embedding, a.k
-        |  FROM embeddings e JOIN fa a ON e.vec_id = a.r),
-        |p AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.k AS cluster,
-        |    round((SELECT SUM(CAST(a.embedding[i] AS DOUBLE)*CAST(b.embedding[i] AS DOUBLE))
-        |     FROM generate_series(1, 64) g(i)) /
-        |    (sqrt((SELECT SUM(CAST(a.embedding[i] AS DOUBLE)*CAST(a.embedding[i] AS DOUBLE))
-        |           FROM generate_series(1, 64) g(i))) *
-        |     sqrt((SELECT SUM(CAST(b.embedding[i] AS DOUBLE)*CAST(b.embedding[i] AS DOUBLE))
-        |           FROM generate_series(1, 64) g(i)))), 6) AS cos
-        |  FROM v a JOIN v b ON a.k = b.k AND a.vec_id < b.vec_id)
-        |SELECT id_a, id_b, cluster, cos FROM p WHERE cos >= 0.4""".stripMargin
+    OracleSql.lloydCtes(OracleSql.autoKExpr(), 3) + ",\n" +
+      OracleSql.semanticPairsSql(64, 0.4)
 
-  val ddCosineSql: String =
-    """WITH c AS (
-      |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-      |    round((SELECT SUM(CAST(a.embedding[i] AS DOUBLE)*CAST(b.embedding[i] AS DOUBLE))
-      |     FROM generate_series(1, 64) g(i)) /
-      |    (sqrt((SELECT SUM(CAST(a.embedding[i] AS DOUBLE)*CAST(a.embedding[i] AS DOUBLE))
-      |           FROM generate_series(1, 64) g(i))) *
-      |     sqrt((SELECT SUM(CAST(b.embedding[i] AS DOUBLE)*CAST(b.embedding[i] AS DOUBLE))
-      |           FROM generate_series(1, 64) g(i)))), 6) AS cos
-      |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id)
-      |SELECT id_a, id_b, cos FROM c WHERE cos >= 0.4""".stripMargin
+  val ddCosineSql: String = "WITH " + cosinePairsSql("embeddings", 0.4)
+
+  /** Every pair of `rel`'s vectors at or above `threshold` cosine. */
+  private def cosinePairsSql(rel: String, threshold: Double): String =
+    s"""c AS (
+       |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+       |    ${OracleSql.cosSql("a", "b", 64)} AS cos
+       |  FROM $rel a JOIN $rel b ON a.vec_id < b.vec_id)
+       |SELECT id_a, id_b, cos FROM c WHERE cos >= $threshold""".stripMargin
 
   /** Hyperplane-LSH cosine near-dup at production geometry (512 bits,
     * 16-bit bands, threshold 0.95). The fixture's random vectors have no
@@ -621,20 +547,11 @@ object PipelineQueries {
   }
 
   val ddCosineLshSql: String =
-    """WITH aug AS (
-      |  SELECT vec_id, embedding FROM embeddings
-      |  UNION ALL
-      |  SELECT vec_id + 10000000 AS vec_id, embedding FROM embeddings WHERE vec_id < 10),
-      |c AS (
-      |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-      |    round((SELECT SUM(CAST(a.embedding[i] AS DOUBLE)*CAST(b.embedding[i] AS DOUBLE))
-      |     FROM generate_series(1, 64) g(i)) /
-      |    (sqrt((SELECT SUM(CAST(a.embedding[i] AS DOUBLE)*CAST(a.embedding[i] AS DOUBLE))
-      |           FROM generate_series(1, 64) g(i))) *
-      |     sqrt((SELECT SUM(CAST(b.embedding[i] AS DOUBLE)*CAST(b.embedding[i] AS DOUBLE))
-      |           FROM generate_series(1, 64) g(i)))), 6) AS cos
-      |  FROM aug a JOIN aug b ON a.vec_id < b.vec_id)
-      |SELECT id_a, id_b, cos FROM c WHERE cos >= 0.95""".stripMargin
+    s"""WITH aug AS (
+       |  SELECT vec_id, embedding FROM embeddings
+       |  UNION ALL
+       |  SELECT vec_id + 10000000 AS vec_id, embedding FROM embeddings WHERE vec_id < 10),
+       |${cosinePairsSql("aug", 0.95)}""".stripMargin
 
   def simTopK(spark: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(spark, d)
@@ -642,20 +559,10 @@ object PipelineQueries {
   }
 
   val simTopKSql: String =
-    """WITH c AS (
-      |  SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-      |    round((SELECT SUM(CAST(q.embedding[i] AS DOUBLE)*CAST(n.embedding[i] AS DOUBLE))
-      |     FROM generate_series(1, 64) g(i)) /
-      |    (sqrt((SELECT SUM(CAST(q.embedding[i] AS DOUBLE)*CAST(q.embedding[i] AS DOUBLE))
-      |           FROM generate_series(1, 64) g(i))) *
-      |     sqrt((SELECT SUM(CAST(n.embedding[i] AS DOUBLE)*CAST(n.embedding[i] AS DOUBLE))
-      |           FROM generate_series(1, 64) g(i)))), 6) AS cos
-      |  FROM embeddings q JOIN embeddings n ON q.vec_id < 10 AND q.vec_id <> n.vec_id)
-      |SELECT query_id, rank, neighbor_id, cos FROM (
-      |  SELECT query_id, neighbor_id, cos,
-      |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-      |         ORDER BY cos DESC, neighbor_id) AS INT) AS rank
-      |  FROM c) t WHERE rank <= 5""".stripMargin
+    s"""WITH c AS (
+       |  SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id
+       |  FROM embeddings q JOIN embeddings n ON q.vec_id < 10 AND q.vec_id <> n.vec_id),
+       |${OracleSql.topKSql("c")}""".stripMargin
 
   def simIvf(spark: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(spark, d)
@@ -669,39 +576,27 @@ object PipelineQueries {
     * caller's choice via lloydCtes' sourceWhere.
     */
   private def ivfSearchTail(dim: Int): String =
+    s"""${probeCtes("r < 10")},
+       |cand AS (
+       |  SELECT DISTINCT p.query_id, b.r AS neighbor_id
+       |  FROM probes p JOIN bassign b ON p.bucket = b.bucket
+       |  WHERE b.r <> p.query_id),
+       |${OracleSql.topKSql("cand", dim)}""".stripMargin
+
+  /** IVF bucketing under the trained `c3`: every row's distance to each
+    * centroid (`bdist`), its bucket (`bassign`) and the 4 nearest buckets
+    * of the query rows `probeWhere` selects (`probes`).
+    */
+  private def probeCtes(probeWhere: String): String = {
+    val probes = OracleSql.nearestSql(s"bdist WHERE $probeWhere",
+      "r AS query_id, k AS bucket", keep = "rk <= 4")
     s"""bdist AS (
-        |  SELECT e.vec_id AS r, c.k,
-        |    SUM((CAST(e.embedding[c.i + 1] AS DOUBLE) - c.v) *
-        |        (CAST(e.embedding[c.i + 1] AS DOUBLE) - c.v)) AS dist
-        |  FROM embeddings e, c3 c GROUP BY 1, 2),
-        |bassign AS (
-        |  SELECT r, k AS bucket FROM (
-        |    SELECT r, k, ROW_NUMBER() OVER (PARTITION BY r ORDER BY dist, k) AS rk
-        |    FROM bdist) z WHERE rk = 1),
-        |probes AS (
-        |  SELECT r AS query_id, k AS bucket FROM (
-        |    SELECT r, k, ROW_NUMBER() OVER (PARTITION BY r ORDER BY dist, k) AS rk
-        |    FROM bdist WHERE r < 10) z WHERE rk <= 4),
-        |cand AS (
-        |  SELECT DISTINCT p.query_id, b.r AS neighbor_id
-        |  FROM probes p JOIN bassign b ON p.bucket = b.bucket
-        |  WHERE b.r <> p.query_id),
-        |scored AS (
-        |  SELECT c.query_id, c.neighbor_id,
-        |    round((SELECT SUM(CAST(q.embedding[i] AS DOUBLE)*CAST(n.embedding[i] AS DOUBLE))
-        |     FROM generate_series(1, $dim) g(i)) /
-        |    (sqrt((SELECT SUM(CAST(q.embedding[i] AS DOUBLE)*CAST(q.embedding[i] AS DOUBLE))
-        |           FROM generate_series(1, $dim) g(i))) *
-        |     sqrt((SELECT SUM(CAST(n.embedding[i] AS DOUBLE)*CAST(n.embedding[i] AS DOUBLE))
-        |           FROM generate_series(1, $dim) g(i)))), 6) AS cos
-        |  FROM cand c
-        |  JOIN embeddings q ON q.vec_id = c.query_id
-        |  JOIN embeddings n ON n.vec_id = c.neighbor_id)
-        |SELECT query_id, rank, neighbor_id, cos FROM (
-        |  SELECT query_id, neighbor_id, cos,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-        |         ORDER BY cos DESC, neighbor_id) AS INT) AS rank
-        |  FROM scored) t WHERE rank <= 5""".stripMargin
+       |  ${OracleSql.centroidDistSql("embeddings e, c3 c")}),
+       |bassign AS (
+       |  ${OracleSql.nearestSql("bdist", "r, k AS bucket")}),
+       |probes AS (
+       |  $probes)""".stripMargin
+  }
 
   private val ivfSearchTailSql: String = ivfSearchTail(64)
 
@@ -713,14 +608,14 @@ object PipelineQueries {
     * not a brute-force scan — results match the operator exactly).
     */
   val simIvfSql: String =
-    ExtendedQueries.lloydCtes(16, 3) + ",\n" + ivfSearchTailSql
+    OracleSql.lloydCtes("16", 3) + ",\n" + ivfSearchTailSql
 
   /** Codebook trained on the BUILT half only (vec_id < 250); assignment
     * in the shared tail still covers the whole corpus — exactly what
     * build(A) + append(B) produces.
     */
   val simIvfAppendSql: String =
-    ExtendedQueries.lloydCtes(16, 3, "WHERE vec_id < 250") + ",\n" +
+    OracleSql.lloydCtes("16", 3, "WHERE vec_id < 250") + ",\n" +
       ivfSearchTailSql
 
   /** Product-quantization ANN: unit-normalize (ADC then orders by
@@ -769,6 +664,10 @@ object PipelineQueries {
          |    SELECT e.vec_id, ROW_NUMBER() OVER (
          |      ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS srk
          |    FROM embeddings e $sourceWhere) z WHERE srk <= 10000)""".stripMargin
+    // squared distance of normalized components e to sub-centroids c
+    def compDist(from: String) =
+      s"""SELECT e.vec_id AS r, c.k, SUM((e.v - c.v) * (e.v - c.v)) AS dist
+         |  FROM $from ON c.i = e.i GROUP BY 1, 2""".stripMargin
     val subs = (0 until m).map { j =>
       val lo = j * dsub + 1
       val hi = (j + 1) * dsub
@@ -779,13 +678,9 @@ object PipelineQueries {
            |  WHERE s.srk <= $kSub AND e.i BETWEEN $lo AND $hi)""".stripMargin
       val steps = (1 to iters).map { t =>
         s"""s${j}d$t AS (
-           |  SELECT e.vec_id AS r, c.k, SUM((e.v - c.v) * (e.v - c.v)) AS dist
-           |  FROM pse s JOIN ne e ON e.vec_id = s.vec_id
-           |  JOIN s${j}c${t - 1} c ON c.i = e.i GROUP BY 1, 2),
+           |  ${compDist(s"pse s JOIN ne e ON e.vec_id = s.vec_id\n  JOIN s${j}c${t - 1} c")}),
            |s${j}a$t AS (
-           |  SELECT r, k FROM (
-           |    SELECT r, k, ROW_NUMBER() OVER (PARTITION BY r ORDER BY dist, k) AS rk
-           |    FROM s${j}d$t) z WHERE rk = 1),
+           |  ${OracleSql.nearestSql(s"s${j}d$t")}),
            |s${j}m$t AS (
            |  SELECT a.k, e.i, AVG(e.v) AS v
            |  FROM s${j}a$t a JOIN ne e ON a.r = e.vec_id
@@ -798,12 +693,9 @@ object PipelineQueries {
       }
       val enc =
         s"""e${j}d AS (
-           |  SELECT e.vec_id AS r, c.k, SUM((e.v - c.v) * (e.v - c.v)) AS dist
-           |  FROM ne e JOIN s${j}c$iters c ON c.i = e.i GROUP BY 1, 2),
+           |  ${compDist(s"ne e JOIN s${j}c$iters c")}),
            |enc$j AS (
-           |  SELECT r, k AS code FROM (
-           |    SELECT r, k, ROW_NUMBER() OVER (PARTITION BY r ORDER BY dist, k) AS rk
-           |    FROM e${j}d) z WHERE rk = 1)""".stripMargin
+           |  ${OracleSql.nearestSql(s"e${j}d", "r, k AS code")})""".stripMargin
       (Seq(seed) ++ steps ++ Seq(enc)).mkString(",\n")
     }
     "WITH " + (Seq(se) ++ subs).mkString(",\n")
@@ -811,50 +703,44 @@ object PipelineQueries {
 
   /** `sourceWhere` restricts the TRAINING corpus (the already-built
     * half of an incrementally-appended index), exactly like
-    * [[ExtendedQueries.lloydCtes]]'s parameter; encoding and the ADC
+    * [[OracleSql.lloydCtes]]'s parameter; encoding and the ADC
     * scan always cover the whole corpus — which is what
     * build(A) + append(B) contains.
     */
-  private def pqSearchSql(sourceWhere: String): String = {
+  private def pqSearchSql(sourceWhere: String): String =
+    pqCtes(16, kSub = 16, iters = 2, dim = 64, sourceWhere) + ",\n" +
+      adcTopKSql("l0.r AS query_id, c0.r AS neighbor_id", "enc0 c0",
+        "l0.r < 10 AND l0.k = c0.code", "\n  WHERE c0.r <> l0.r")
+
+  /** The ADC scan over the 16 PQ subspaces' codes (`enc<j>`) and the
+    * query rows' distance tables (`e<j>d`): `adc` sums each candidate's
+    * subspace distances (rounded to 1e-6) from the `from` clause joined
+    * with the codes; `short` keeps each query's 50 nearest by (adc,
+    * neighbor_id); [[OracleSql.topKSql]] re-ranks them exactly.
+    */
+  private def adcTopKSql(ids: String, from: String, lutOn: String,
+      where: String): String = {
     val m = 16
-    val iters = 2
     val encJoins = (1 until m)
       .map(j => s"  JOIN enc$j c$j ON c$j.r = c0.r").mkString("\n")
     val lutJoins = (1 until m)
       .map(j => s"  JOIN e${j}d l$j ON l$j.r = l0.r AND l$j.k = c$j.code")
       .mkString("\n")
     val adcSum = (0 until m).map(j => s"l$j.dist").mkString(" + ")
-    pqCtes(m, kSub = 16, iters = iters, dim = 64, sourceWhere) + ",\n" +
-      s"""adc AS (
-         |  SELECT l0.r AS query_id, c0.r AS neighbor_id,
-         |    round($adcSum, 6) AS adc
-         |  FROM enc0 c0
-         |$encJoins
-         |  JOIN e0d l0 ON l0.r < 10 AND l0.k = c0.code
-         |$lutJoins
-         |  WHERE c0.r <> l0.r),
-         |short AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id,
-         |      ROW_NUMBER() OVER (PARTITION BY query_id
-         |        ORDER BY adc, neighbor_id) AS rk
-         |    FROM adc) z WHERE rk <= 50),
-         |scored AS (
-         |  SELECT s.query_id, s.neighbor_id,
-         |    round((SELECT SUM(CAST(q.embedding[i] AS DOUBLE)*CAST(n.embedding[i] AS DOUBLE))
-         |     FROM generate_series(1, 64) g(i)) /
-         |    (sqrt((SELECT SUM(CAST(q.embedding[i] AS DOUBLE)*CAST(q.embedding[i] AS DOUBLE))
-         |           FROM generate_series(1, 64) g(i))) *
-         |     sqrt((SELECT SUM(CAST(n.embedding[i] AS DOUBLE)*CAST(n.embedding[i] AS DOUBLE))
-         |           FROM generate_series(1, 64) g(i)))), 6) AS cos
-         |  FROM short s
-         |  JOIN embeddings q ON q.vec_id = s.query_id
-         |  JOIN embeddings n ON n.vec_id = s.neighbor_id)
-         |SELECT query_id, rank, neighbor_id, cos FROM (
-         |  SELECT query_id, neighbor_id, cos,
-         |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-         |         ORDER BY cos DESC, neighbor_id) AS INT) AS rank
-         |  FROM scored) t WHERE rank <= 5""".stripMargin
+    s"""adc AS (
+       |  SELECT $ids,
+       |    round($adcSum, 6) AS adc
+       |  FROM $from
+       |$encJoins
+       |  JOIN e0d l0 ON $lutOn
+       |$lutJoins$where),
+       |short AS (
+       |  SELECT query_id, neighbor_id FROM (
+       |    SELECT query_id, neighbor_id,
+       |      ROW_NUMBER() OVER (PARTITION BY query_id
+       |        ORDER BY adc, neighbor_id) AS rk
+       |    FROM adc) z WHERE rk <= 50),
+       |${OracleSql.topKSql("short")}""".stripMargin
   }
 
   val simPqSql: String = pqSearchSql("")
@@ -872,65 +758,19 @@ object PipelineQueries {
     * for the one-generation searches.
     */
   private[queries] def ivfPqSearchSql(sourceWhere: String,
-      probeWhere: String = "r < 10", candWhere: String = "TRUE"): String = {
-    val m = 16
-    val encJoins = (1 until m)
-      .map(j => s"  JOIN enc$j c$j ON c$j.r = c0.r").mkString("\n")
-    val lutJoins = (1 until m)
-      .map(j => s"  JOIN e${j}d l$j ON l$j.r = l0.r AND l$j.k = c$j.code")
-      .mkString("\n")
-    val adcSum = (0 until m).map(j => s"l$j.dist").mkString(" + ")
-    ExtendedQueries.lloydCtes(16, 3, sourceWhere) + ",\n" +
-      pqCtes(m, kSub = 16, iters = 2, dim = 64, sourceWhere)
+      probeWhere: String = "r < 10", candWhere: String = "TRUE"): String =
+    OracleSql.lloydCtes("16", 3, sourceWhere) + ",\n" +
+      pqCtes(16, kSub = 16, iters = 2, dim = 64, sourceWhere)
         .stripPrefix("WITH ") + ",\n" +
-      s"""bdist AS (
-         |  SELECT e.vec_id AS r, c.k,
-         |    SUM((CAST(e.embedding[c.i + 1] AS DOUBLE) - c.v) *
-         |        (CAST(e.embedding[c.i + 1] AS DOUBLE) - c.v)) AS dist
-         |  FROM embeddings e, c3 c GROUP BY 1, 2),
-         |bassign AS (
-         |  SELECT r, k AS bucket FROM (
-         |    SELECT r, k, ROW_NUMBER() OVER (PARTITION BY r ORDER BY dist, k) AS rk
-         |    FROM bdist) z WHERE rk = 1),
-         |probes AS (
-         |  SELECT r AS query_id, k AS bucket FROM (
-         |    SELECT r, k, ROW_NUMBER() OVER (PARTITION BY r ORDER BY dist, k) AS rk
-         |    FROM bdist WHERE $probeWhere) z WHERE rk <= 4),
+      s"""${probeCtes(probeWhere)},
          |cand AS (
          |  SELECT p.query_id, b.r AS neighbor_id
          |  FROM probes p JOIN bassign b ON p.bucket = b.bucket
          |  WHERE b.r <> p.query_id AND ($candWhere)),
-         |adc AS (
-         |  SELECT ca.query_id, ca.neighbor_id,
-         |    round($adcSum, 6) AS adc
-         |  FROM cand ca
-         |  JOIN enc0 c0 ON c0.r = ca.neighbor_id
-         |$encJoins
-         |  JOIN e0d l0 ON l0.r = ca.query_id AND l0.k = c0.code
-         |$lutJoins),
-         |short AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id,
-         |      ROW_NUMBER() OVER (PARTITION BY query_id
-         |        ORDER BY adc, neighbor_id) AS rk
-         |    FROM adc) z WHERE rk <= 50),
-         |scored AS (
-         |  SELECT s.query_id, s.neighbor_id,
-         |    round((SELECT SUM(CAST(q.embedding[i] AS DOUBLE)*CAST(n.embedding[i] AS DOUBLE))
-         |     FROM generate_series(1, 64) g(i)) /
-         |    (sqrt((SELECT SUM(CAST(q.embedding[i] AS DOUBLE)*CAST(q.embedding[i] AS DOUBLE))
-         |           FROM generate_series(1, 64) g(i))) *
-         |     sqrt((SELECT SUM(CAST(n.embedding[i] AS DOUBLE)*CAST(n.embedding[i] AS DOUBLE))
-         |           FROM generate_series(1, 64) g(i)))), 6) AS cos
-         |  FROM short s
-         |  JOIN embeddings q ON q.vec_id = s.query_id
-         |  JOIN embeddings n ON n.vec_id = s.neighbor_id)
-         |SELECT query_id, rank, neighbor_id, cos FROM (
-         |  SELECT query_id, neighbor_id, cos,
-         |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-         |         ORDER BY cos DESC, neighbor_id) AS INT) AS rank
-         |  FROM scored) t WHERE rank <= 5""".stripMargin
-  }
+         |""".stripMargin +
+      adcTopKSql("ca.query_id, ca.neighbor_id",
+        "cand ca\n  JOIN enc0 c0 ON c0.r = ca.neighbor_id",
+        "l0.r = ca.query_id AND l0.k = c0.code", "")
 
   /** Oracle for [[simIvfPq]]: both kernel chains verbatim — the IVF
     * coarse quantizer's Lloyd CTEs (c0..c3, raw vectors) and the PQ
@@ -1031,6 +871,91 @@ object PipelineQueries {
   def txtFingerprint(spark: SparkSession, d: String): DataFrame =
     TextAnalysis.fingerprints(Tables.documents(spark, d), "doc_id", "text")
 
+  /** Oracle for [[txtLangId]]: per-language stopword counts, argmax in
+    * the list's priority order on ties.
+    */
+  val txtLangIdSql: String = {
+    val langs = TextAnalysis.stopwords.map(_._1)
+    val scoreDefs = TextAnalysis.stopwords.map { case (lang, ws) =>
+      val list = ws.map(w => s"'$w'").mkString(", ")
+      s"len(list_filter(string_split(text, ' '), w -> w IN ($list))) AS s_$lang"
+    }.mkString(",\n  ")
+    val predCases = langs.dropRight(1).map { lang =>
+      val conds = langs.filter(_ != lang).map(o => s"s_$lang >= s_$o").mkString(" AND ")
+      s"WHEN $conds THEN '$lang'"
+    }.mkString("\n    ")
+    s"""SELECT doc_id, ${langs.map(l => s"s_$l").mkString(", ")},
+       |  CASE $predCases ELSE '${langs.last}' END AS pred_lang
+       |FROM (SELECT doc_id AS doc_id,
+       |  $scoreDefs
+       |  FROM documents) t""".stripMargin
+  }
+
+  val txtQualitySql: String = OracleSql.qualityScoreSql("documents")
+
+  val txtTokensSql: String =
+    """SELECT word, COUNT(*) AS n_occurrences, COUNT(DISTINCT doc_id) AS n_docs
+      |FROM (SELECT doc_id, unnest(string_split(text,' ')) AS word FROM documents) t
+      |GROUP BY word""".stripMargin
+
+  val txtTfidfSql: String =
+    """WITH tf AS (
+      |  SELECT doc_id, word, COUNT(*) AS tf FROM (
+      |    SELECT doc_id, unnest(string_split(text,' ')) AS word FROM documents) t
+      |  GROUP BY 1, 2),
+      |dfreq AS (SELECT word, COUNT(*) AS df FROM tf GROUP BY 1),
+      |nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM documents)
+      |SELECT tf.doc_id, tf.word,
+      |  round(tf.tf * ln((SELECT n FROM nn) / dfreq.df), 6) AS tfidf
+      |FROM tf JOIN dfreq USING (word)""".stripMargin
+
+  /** Oracle for [[TextAnalysis.lmScore]] with the reference slice
+    * doc_id < 250, scoring every document.
+    */
+  val txtLmScoreSql: String = lmScoreSqlOver("documents")
+
+  /** [[txtLmScoreSql]] scoring only the (doc_id, text) rows of `scored`
+    * (the streaming form scores the arrivals); the model side stays the
+    * reference slice.
+    */
+  private[queries] def lmScoreSqlOver(scored: String): String =
+    s"""WITH ${OracleSql.lmModelCtes("WHERE doc_id < 250")},
+       |${OracleSql.lmScoreCtes("s", scored)}
+       |SELECT doc_id, n_bigrams, lm_score FROM s""".stripMargin
+
+  /** Oracle for [[TextAnalysis.lmQualityBuckets]] at the default
+    * head/middle/tail terciles: the lm-score chain, the exact-rank cuts,
+    * then ties to the better tier.
+    */
+  val txtLmBucketsSql: String =
+    s"""WITH ${OracleSql.lmModelCtes("WHERE doc_id < 250", materialized = true)},
+       |${OracleSql.lmScoreCtes("lsc", "documents", materialized = true)},
+       |${OracleSql.tercileCutCtes("lsc")}
+       |SELECT doc_id, lm_score,
+       |  CASE WHEN lm_score >= (SELECT t FROM t1) THEN 0
+       |       WHEN lm_score >= (SELECT t FROM t2) THEN 1
+       |       ELSE 2 END AS bucket
+       |FROM lsc""".stripMargin
+
+  val txtRepetitionSql: String =
+    s"""WITH words AS (
+       |  SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents),
+       |wstats AS (
+       |  SELECT doc_id, COUNT(*) AS n_words,
+       |         COUNT(DISTINCT word) AS n_distinct_words
+       |  FROM words GROUP BY 1),
+       |bigrams AS (
+       |  SELECT doc_id, ${OracleSql.bigramsSql} AS bigram
+       |  FROM documents),
+       |bstats AS (
+       |  SELECT doc_id, MAX(c) AS top_c, SUM(c) AS n_bigrams FROM (
+       |    SELECT doc_id, bigram, COUNT(*) AS c FROM bigrams GROUP BY 1, 2) t
+       |  GROUP BY 1)
+       |SELECT w.doc_id, n_words, n_distinct_words,
+       |  round(1.0 - CAST(n_distinct_words AS DOUBLE) / n_words, 6) AS dup_word_frac,
+       |  round(CAST(top_c AS DOUBLE) / n_bigrams, 6) AS top_bigram_frac
+       |FROM wstats w JOIN bstats b ON w.doc_id = b.doc_id""".stripMargin
+
   /** Rolling-hash mirror: list_reduce seeds with the first element, which
     * equals the Scala loop's state after its first character (h₀=0). */
   val txtFingerprintSql: String =
@@ -1082,21 +1007,16 @@ object PipelineQueries {
     * never binds for x<32); each of the 16 slots sums exactly 2 pixels.
     */
   val mmResizeSql: String =
-    """WITH mt AS (
-      |  SELECT doc_id, hex(encode(text)) AS hx,
-      |    octet_length(encode(text)) AS len
-      |  FROM documents WHERE strlen(text) > 0),
-      |mp AS (SELECT doc_id, hx, len, unnest(generate_series(0, 31)) AS x
-      |       FROM mt),
-      |pv AS (SELECT doc_id, x % 16 AS slot,
-      |    (strpos('0123456789ABCDEF',
-      |       substring(hx, ((x * len) // 32) * 2 + 1, 1)) - 1) * 16
-      |    + strpos('0123456789ABCDEF',
-      |        substring(hx, ((x * len) // 32) * 2 + 2, 1)) - 1 AS lum
-      |  FROM mp)
-      |SELECT doc_id, CAST(slot AS INT) AS slot,
-      |  CAST(SUM(lum) AS BIGINT) AS lum_sum
-      |FROM pv GROUP BY 1, 2""".stripMargin
+    s"""WITH mt AS (
+       |  ${OracleSql.hexPayloadSql("documents WHERE strlen(text) > 0")}),
+       |mp AS (SELECT doc_id, hx, len, unnest(generate_series(0, 31)) AS x
+       |       FROM mt),
+       |pv AS (SELECT doc_id, x % 16 AS slot,
+       |    ${OracleSql.byteAtSql("hx", "((x * len) // 32)")} AS lum
+       |  FROM mp)
+       |SELECT doc_id, CAST(slot AS INT) AS slot,
+       |  CAST(SUM(lum) AS BIGINT) AS lum_sum
+       |FROM pv GROUP BY 1, 2""".stripMargin
 
   /** Image near-dup — the multimodal composition of the dedup stack:
     * documents render as REAL PNGs ([[Multimodal.toPngPayload]], len×1
@@ -1134,50 +1054,32 @@ object PipelineQueries {
     * unrolled-Lloyd trainer chain.
     */
   private val mmEmbPrelude: String =
-    """mt AS (
-      |  SELECT doc_id, hex(encode(text)) AS hx,
-      |    octet_length(encode(text)) AS len
-      |  FROM documents WHERE strlen(text) > 0),
-      |mp AS (SELECT doc_id, hx, unnest(generate_series(0, len - 1)) AS i
-      |       FROM mt),
-      |ma AS (SELECT doc_id, i % 16 AS j,
-      |         SUM((strpos('0123456789ABCDEF', substring(hx, i * 2 + 1, 1)) - 1) * 16
-      |           + strpos('0123456789ABCDEF', substring(hx, i * 2 + 2, 1)) - 1) AS s
-      |       FROM mp GROUP BY 1, 2),
-      |mb AS (SELECT t.doc_id, g.j
-      |       FROM (SELECT doc_id FROM mt) t
-      |       CROSS JOIN (SELECT unnest(range(0, 16)) AS j) g),
-      |embeddings AS (
-      |  SELECT mb.doc_id AS vec_id,
-      |    list(CAST(COALESCE(ma.s, 0) AS FLOAT) ORDER BY mb.j) AS embedding
-      |  FROM mb LEFT JOIN ma ON ma.doc_id = mb.doc_id AND ma.j = mb.j
-      |  GROUP BY mb.doc_id)""".stripMargin
+    s"""mt AS (
+       |  ${OracleSql.hexPayloadSql("documents WHERE strlen(text) > 0")}),
+       |${byteFoldCtes("mt", "hx", "len")}""".stripMargin
+
+  /** The image features of the hex payloads in `src` (doc_id, `hx`,
+    * `len`) as the CTE `embeddings` (vec_id, embedding): f[j] = Σ byte
+    * values at byte positions ≡ j (mod 16), via `mp`, `ma` and `mb`.
+    */
+  private def byteFoldCtes(src: String, hx: String, len: String): String =
+    s"""mp AS (SELECT doc_id, $hx, unnest(generate_series(0, $len - 1)) AS i
+       |       FROM $src),
+       |ma AS (SELECT doc_id, i % 16 AS j,
+       |         SUM(${OracleSql.byteAtSql(hx, "i")}) AS sm
+       |       FROM mp GROUP BY 1, 2),
+       |mb AS (SELECT t.doc_id, g.j
+       |       FROM (SELECT doc_id FROM $src) t
+       |       CROSS JOIN (SELECT unnest(range(0, 16)) AS j) g),
+       |embeddings AS (
+       |  SELECT mb.doc_id AS vec_id,
+       |    list(CAST(COALESCE(ma.sm, 0) AS FLOAT) ORDER BY mb.j) AS embedding
+       |  FROM mb LEFT JOIN ma ON ma.doc_id = mb.doc_id AND ma.j = mb.j
+       |  GROUP BY mb.doc_id)""".stripMargin
 
   val mmNearDupSql: String =
-    ExtendedQueries.lloydCtes(
-      ExtendedQueries.autoKExpr(), 3, "", 16, mmEmbPrelude) + ",\n" +
-      """fd AS (
-        |  SELECT e.vec_id AS r, c.k,
-        |    SUM((CAST(e.embedding[c.i + 1] AS DOUBLE) - c.v) *
-        |        (CAST(e.embedding[c.i + 1] AS DOUBLE) - c.v)) AS dist
-        |  FROM embeddings e, c3 c GROUP BY 1, 2),
-        |fa AS (
-        |  SELECT r, k FROM (
-        |    SELECT r, k, ROW_NUMBER() OVER (PARTITION BY r ORDER BY dist, k) AS rk
-        |    FROM fd) z WHERE rk = 1),
-        |v AS (
-        |  SELECT e.vec_id, e.embedding, a.k
-        |  FROM embeddings e JOIN fa a ON e.vec_id = a.r),
-        |p AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.k AS cluster,
-        |    round((SELECT SUM(CAST(a.embedding[i] AS DOUBLE)*CAST(b.embedding[i] AS DOUBLE))
-        |     FROM generate_series(1, 16) g(i)) /
-        |    (sqrt((SELECT SUM(CAST(a.embedding[i] AS DOUBLE)*CAST(a.embedding[i] AS DOUBLE))
-        |           FROM generate_series(1, 16) g(i))) *
-        |     sqrt((SELECT SUM(CAST(b.embedding[i] AS DOUBLE)*CAST(b.embedding[i] AS DOUBLE))
-        |           FROM generate_series(1, 16) g(i)))), 6) AS cos
-        |  FROM v a JOIN v b ON a.k = b.k AND a.vec_id < b.vec_id)
-        |SELECT id_a, id_b, cluster, cos FROM p WHERE cos >= 0.999""".stripMargin
+    OracleSql.lloydCtes(OracleSql.autoKExpr(), 3, "", 16, mmEmbPrelude) + ",\n" +
+      OracleSql.semanticPairsSql(16, 0.999)
 
   /** Frame sampling over the video-like payload ([[Multimodal.sampleFrames]]:
     * every 4th 64-byte chunk as a frame row). Content is checked
@@ -1193,17 +1095,9 @@ object PipelineQueries {
   }
 
   val mmFramesSql: String =
-    """WITH m AS (
-      |  SELECT doc_id, hex(encode(text)) AS hx,
-      |    octet_length(encode(text)) AS len
-      |  FROM documents WHERE text IS NOT NULL),
-      |f AS (
-      |  SELECT doc_id, hx,
-      |    unnest(generate_series(0, greatest(len // 64 - 1, 0), 4)) AS frame_no
-      |  FROM m)
-      |SELECT doc_id, CAST(frame_no AS INT) AS frame_no,
-      |  substring(hx, frame_no * 128 + 1, 128) AS frame_hex
-      |FROM f""".stripMargin
+    s"""WITH m AS (
+       |  ${OracleSql.hexPayloadSql("documents WHERE text IS NOT NULL")})
+       |${OracleSql.framesSql("m")}""".stripMargin
 
   /** Windowed audio energy ([[Multimodal.audioEnergy]]): payload bytes as
     * unsigned 8-bit PCM, window 256 / hop 128, exact integer Σ (b−128)²
@@ -1217,30 +1111,13 @@ object PipelineQueries {
   }
 
   val mmAudioEnergySql: String =
-    """WITH m AS (
-      |  SELECT doc_id, hex(encode(text)) AS hx,
-      |    octet_length(encode(text)) AS len
-      |  FROM documents
-      |  WHERE text IS NOT NULL AND octet_length(encode(text)) > 0),
-      |w AS (
-      |  SELECT doc_id, hx, len,
-      |    unnest(generate_series(0, (len - 1) // 128)) AS wno
-      |  FROM m),
-      |b AS (
-      |  SELECT doc_id, wno, len, hx,
-      |    unnest(generate_series(wno * 128,
-      |      least(wno * 128 + 256, len) - 1)) AS pos
-      |  FROM w),
-      |v AS (
-      |  SELECT doc_id, wno, len,
-      |    (strpos('0123456789ABCDEF', substring(hx, pos * 2 + 1, 1)) - 1) * 16
-      |      + strpos('0123456789ABCDEF', substring(hx, pos * 2 + 2, 1)) - 1
-      |      AS byte
-      |  FROM b)
-      |SELECT doc_id, CAST(wno AS INT) AS window_no,
-      |  CAST(least(256, len - wno * 128) AS INT) AS n_samples,
-      |  CAST(SUM((byte - 128) * (byte - 128)) AS BIGINT) AS energy
-      |FROM v GROUP BY doc_id, wno, len""".stripMargin
+    s"""WITH m AS (
+       |  ${OracleSql.hexPayloadSql("documents WHERE text IS NOT NULL")}),
+       |${OracleSql.energyCtes("m", 256, 128)}
+       |SELECT doc_id, CAST(wno AS INT) AS window_no,
+       |  CAST(least(256, len - wno * 128) AS INT) AS n_samples,
+       |  CAST(energy AS BIGINT) AS energy
+       |FROM e JOIN m USING (doc_id)""".stripMargin
 
   /** Cross-document repeated-frame detection ([[Multimodal.frameDedup]]):
     * the documents fixture plus a replay of docs < 100 under offset ids
@@ -1251,42 +1128,35 @@ object PipelineQueries {
     */
   def mmFrameDedup(spark: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(spark, d)
-    val replayed = docs.select(col("doc_id"), col("text"))
-      .unionByName(docs.filter(col("doc_id") < 100)
-        .select((col("doc_id") + 10000).as("doc_id"), col("text")))
+    val replayed = OracleSql.replayed(docs)
     val frames = Multimodal.sampleFrames(spark, Multimodal.withPayload(replayed))
     Multimodal.frameDedup(frames)
   }
 
-  val mmFrameDedupSql: String =
-    """WITH u AS (
-      |  SELECT doc_id, text FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 10000 AS doc_id, text FROM documents
-      |  WHERE doc_id < 100),
-      |m AS (
-      |  SELECT doc_id, hex(encode(text)) AS hx,
-      |    octet_length(encode(text)) AS len
-      |  FROM u WHERE text IS NOT NULL),
-      |fr AS (
-      |  SELECT doc_id,
-      |    CAST(unnest(generate_series(0, greatest(len // 64 - 1, 0), 4)) AS INT)
-      |      AS frame_no, hx
-      |  FROM m),
-      |fx AS (
-      |  SELECT doc_id, frame_no,
-      |    substring(hx, frame_no * 128 + 1, 128) AS frame_hex
-      |  FROM fr),
-      |c AS (
+  /** Repeated frames among the frames `fx` (doc_id, frame_no,
+    * frame_hex): `dupc` (frame_hex, n_copies) for every frame seen more
+    * than once, `dupk` ranking each frame's sites by (doc_id, frame_no).
+    */
+  private val frameDupCtes: String =
+    """dupc AS (
       |  SELECT frame_hex, COUNT(*) AS n_copies FROM fx
       |  GROUP BY frame_hex HAVING COUNT(*) > 1),
-      |k AS (
+      |dupk AS (
       |  SELECT frame_hex, doc_id AS keep_doc_id, frame_no AS keep_frame_no,
       |    ROW_NUMBER() OVER (PARTITION BY frame_hex
       |                       ORDER BY doc_id, frame_no) AS rn
-      |  FROM fx)
-      |SELECT c.frame_hex, k.keep_doc_id, k.keep_frame_no, c.n_copies
-      |FROM c JOIN k USING (frame_hex) WHERE k.rn = 1""".stripMargin
+      |  FROM fx)""".stripMargin
+
+  val mmFrameDedupSql: String =
+    s"""WITH u AS (
+       |  ${OracleSql.replaySql()}),
+       |m AS (
+       |  ${OracleSql.hexPayloadSql("u WHERE text IS NOT NULL")}),
+       |fx AS (
+       |  ${OracleSql.framesSql("m")}),
+       |$frameDupCtes
+       |SELECT c.frame_hex, k.keep_doc_id, k.keep_frame_no, c.n_copies
+       |FROM dupc c JOIN dupk k USING (frame_hex) WHERE k.rn = 1""".stripMargin
 
   /** Low-energy audio segmentation ([[Multimodal.silenceSegments]]):
     * energy windows at or under the threshold merged into maximal
@@ -1300,38 +1170,16 @@ object PipelineQueries {
   }
 
   val mmSilenceSql: String =
-    """WITH m AS (
-      |  SELECT doc_id, hex(encode(text)) AS hx,
-      |    octet_length(encode(text)) AS len
-      |  FROM documents
-      |  WHERE text IS NOT NULL AND octet_length(encode(text)) > 0),
-      |w AS (
-      |  SELECT doc_id, hx, len,
-      |    unnest(generate_series(0, (len - 1) // 128)) AS wno
-      |  FROM m),
-      |b AS (
-      |  SELECT doc_id, wno, len, hx,
-      |    unnest(generate_series(wno * 128,
-      |      least(wno * 128 + 256, len) - 1)) AS pos
-      |  FROM w),
-      |v AS (
-      |  SELECT doc_id, wno,
-      |    (strpos('0123456789ABCDEF', substring(hx, pos * 2 + 1, 1)) - 1) * 16
-      |      + strpos('0123456789ABCDEF', substring(hx, pos * 2 + 2, 1)) - 1
-      |      AS byte
-      |  FROM b),
-      |e AS (
-      |  SELECT doc_id, CAST(wno AS INT) AS window_no,
-      |    SUM((byte - 128) * (byte - 128)) AS energy
-      |  FROM v GROUP BY doc_id, wno),
-      |s AS (
-      |  SELECT doc_id, window_no,
-      |    window_no - ROW_NUMBER() OVER (PARTITION BY doc_id
-      |                                   ORDER BY window_no) AS grp
-      |  FROM e WHERE energy <= 500000)
-      |SELECT doc_id, MIN(window_no) AS seg_start, MAX(window_no) AS seg_end,
-      |  COUNT(*) AS n_windows
-      |FROM s GROUP BY doc_id, grp""".stripMargin
+    s"""WITH m AS (
+       |  ${OracleSql.hexPayloadSql("documents WHERE text IS NOT NULL")}),
+       |${OracleSql.energyCtes("m", 256, 128)},
+       |s AS (
+       |  SELECT doc_id, CAST(wno AS INT) AS window_no,
+       |    wno - ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY wno) AS grp
+       |  FROM e WHERE energy <= 500000)
+       |SELECT doc_id, MIN(window_no) AS seg_start, MAX(window_no) AS seg_end,
+       |  COUNT(*) AS n_windows
+       |FROM s GROUP BY doc_id, grp""".stripMargin
 
   /** Silence strip ([[Multimodal.stripSilence]], the act form of
     * mm_silence): payloads rebuilt from their above-threshold
@@ -1346,42 +1194,30 @@ object PipelineQueries {
   }
 
   val mmSilenceStripSql: String =
-    """WITH m AS (
-      |  SELECT doc_id, hex(encode(text)) AS hx,
-      |    octet_length(encode(text)) AS len
-      |  FROM documents WHERE text IS NOT NULL),
-      |w AS (
-      |  SELECT doc_id, hx, len,
-      |    unnest(generate_series(0, (len - 1) // 256)) AS wno
-      |  FROM m WHERE len > 0),
-      |b AS (
-      |  SELECT doc_id, wno, hx,
-      |    unnest(generate_series(wno * 256,
-      |      least(wno * 256 + 256, len) - 1)) AS pos
-      |  FROM w),
-      |v AS (
-      |  SELECT doc_id, wno, hx,
-      |    (strpos('0123456789ABCDEF', substring(hx, pos * 2 + 1, 1)) - 1) * 16
-      |      + strpos('0123456789ABCDEF', substring(hx, pos * 2 + 2, 1)) - 1
-      |      AS byte
-      |  FROM b),
-      |e AS (
-      |  SELECT doc_id, wno, hx,
-      |    SUM((byte - 128) * (byte - 128)) AS energy
-      |  FROM v GROUP BY doc_id, wno, hx),
-      |kept AS (
-      |  SELECT doc_id,
-      |    string_agg(substring(hx, wno * 512 + 1, 512), '' ORDER BY wno)
-      |      AS payload_hex
-      |  FROM e WHERE energy > 500000 GROUP BY doc_id),
-      |removed AS (
-      |  SELECT doc_id, COUNT(*) AS n_removed FROM e
-      |  WHERE energy <= 500000 GROUP BY doc_id)
-      |SELECT m.doc_id, COALESCE(k.payload_hex, '') AS payload_hex,
-      |  CAST(COALESCE(r.n_removed, 0) AS INT) AS n_removed
-      |FROM m
-      |LEFT JOIN kept k ON k.doc_id = m.doc_id
-      |LEFT JOIN removed r ON r.doc_id = m.doc_id""".stripMargin
+    s"""WITH m AS (
+       |  ${OracleSql.hexPayloadSql("documents WHERE text IS NOT NULL")}),
+       |${silenceStripCtes(materialized = false)}
+       |SELECT m.doc_id, COALESCE(k.payload_hex, '') AS payload_hex,
+       |  CAST(COALESCE(r.n_removed, 0) AS INT) AS n_removed
+       |FROM m
+       |LEFT JOIN kept k ON k.doc_id = m.doc_id
+       |LEFT JOIN removed r ON r.doc_id = m.doc_id""".stripMargin
+
+  /** The silence strip of [[Multimodal.stripSilence]] over the hex
+    * payloads in `m`: energy over non-overlapping 256-byte windows,
+    * `kept` (doc_id, payload_hex) rebuilt from the windows above the
+    * threshold, `removed` (doc_id, n_removed) counting the others.
+    */
+  private def silenceStripCtes(materialized: Boolean): String =
+    OracleSql.energyCtes("m", 256, 256, materialized = materialized) + ",\n" +
+      s"""${OracleSql.cte("kept", materialized)} (
+         |  SELECT doc_id,
+         |    string_agg(substring(hx, wno * 512 + 1, 512), '' ORDER BY wno)
+         |      AS payload_hex
+         |  FROM e JOIN m USING (doc_id) WHERE energy > 500000 GROUP BY doc_id),
+         |removed AS (
+         |  SELECT doc_id, COUNT(*) AS n_removed FROM e
+         |  WHERE energy <= 500000 GROUP BY doc_id)""".stripMargin
 
   /** Audio envelope dedup ([[Multimodal.envelopeDedup]]): the documents
     * fixture plus the docs < 100 replay plant, payload bytes as PCM at
@@ -1394,54 +1230,19 @@ object PipelineQueries {
     */
   def mmAudioDup(spark: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(spark, d)
-    val replayed = docs.select(col("doc_id"), col("text"))
-      .unionByName(docs.filter(col("doc_id") < 100)
-        .select((col("doc_id") + 10000).as("doc_id"), col("text")))
+    val replayed = OracleSql.replayed(docs)
     Multimodal.envelopeDedup(Multimodal.withPayload(replayed))
   }
 
   val mmAudioDupSql: String =
-    """WITH u AS (
-      |  SELECT doc_id, text FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 10000 AS doc_id, text FROM documents
-      |  WHERE doc_id < 100),
-      |m AS (
-      |  SELECT doc_id, hex(encode(text)) AS hx,
-      |    octet_length(encode(text)) AS len
-      |  FROM u
-      |  WHERE text IS NOT NULL AND octet_length(encode(text)) > 0),
-      |w AS (
-      |  SELECT doc_id, hx, len,
-      |    unnest(generate_series(0, (len - 1) // 32)) AS wno
-      |  FROM m),
-      |b AS (
-      |  SELECT doc_id, wno, hx,
-      |    unnest(generate_series(wno * 32,
-      |      least(wno * 32 + 64, len) - 1)) AS pos
-      |  FROM w),
-      |v AS (
-      |  SELECT doc_id, wno,
-      |    (strpos('0123456789ABCDEF', substring(hx, pos * 2 + 1, 1)) - 1) * 16
-      |      + strpos('0123456789ABCDEF', substring(hx, pos * 2 + 2, 1)) - 1
-      |      AS byte
-      |  FROM b),
-      |e AS (
-      |  SELECT doc_id, wno, SUM((byte - 128) * (byte - 128)) AS energy
-      |  FROM v GROUP BY doc_id, wno),
-      |n AS (SELECT doc_id, COUNT(*) AS nw FROM e GROUP BY doc_id),
-      |d AS (
-      |  SELECT a.doc_id,
-      |    CASE WHEN b.energy > a.energy
-      |         THEN (1::BIGINT << CAST(a.wno AS INT)) ELSE 0::BIGINT END AS bit
-      |  FROM e a JOIN e b ON a.doc_id = b.doc_id AND b.wno = a.wno + 1
-      |  WHERE a.wno <= 62),
-      |f AS (
-      |  SELECT d.doc_id, CAST(SUM(bit) AS BIGINT) AS fp
-      |  FROM d JOIN n ON d.doc_id = n.doc_id
-      |  WHERE n.nw >= 8 GROUP BY d.doc_id)
-      |SELECT fp, MIN(doc_id) AS keep_doc_id, COUNT(*) AS n_copies
-      |FROM f GROUP BY fp HAVING COUNT(*) > 1""".stripMargin
+    s"""WITH u AS (
+       |  ${OracleSql.replaySql()}),
+       |m AS (
+       |  ${OracleSql.hexPayloadSql("u WHERE text IS NOT NULL")}),
+       |${OracleSql.energyCtes("m", 64, 32)},
+       |${OracleSql.envelopeCtes()}
+       |SELECT fp, MIN(doc_id) AS keep_doc_id, COUNT(*) AS n_copies
+       |FROM f GROUP BY fp HAVING COUNT(*) > 1""".stripMargin
 
   /** Persisted image-ANN — the multimodal composition of the IVF index
     * lifecycle ([[simIvfIndexed]] with image features instead of the
@@ -1475,7 +1276,7 @@ object PipelineQueries {
     * composition as [[simIvfSql]] at dim 16.
     */
   val mmIvfSql: String =
-    ExtendedQueries.lloydCtes(16, 3, dim = 16, prelude = mmEmbPrelude) +
+    OracleSql.lloydCtes("16", 3, dim = 16, prelude = mmEmbPrelude) +
       ",\n" + ivfSearchTail(16)
 
   /** The media capstone composition — the media operators chained the
@@ -1493,9 +1294,7 @@ object PipelineQueries {
     */
   def pipeMedia(spark: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(spark, d)
-    val replayed = docs.select(col("doc_id"), col("text"))
-      .unionByName(docs.filter(col("doc_id") < 100)
-        .select((col("doc_id") + 10000).as("doc_id"), col("text")))
+    val replayed = OracleSql.replayed(docs)
     // one strip pass feeds three consumers (frames, PNG decode, and the
     // output join) — materialize it once, the pipe_curate trade
     val stripped = Multimodal.stripSilence(Multimodal.withPayload(replayed))
@@ -1541,120 +1340,49 @@ object PipelineQueries {
     * the stage oracles it composes.
     */
   private val pipeMediaPrelude: String =
-    """u AS (
-      |  SELECT doc_id, text FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 10000 AS doc_id, text FROM documents
-      |  WHERE doc_id < 100),
-      |m AS MATERIALIZED (
-      |  SELECT doc_id, hex(encode(text)) AS hx,
-      |    octet_length(encode(text)) AS len
-      |  FROM u WHERE text IS NOT NULL),
-      |w AS MATERIALIZED (
-      |  SELECT doc_id, hx, len,
-      |    unnest(generate_series(0, (len - 1) // 256)) AS wno
-      |  FROM m WHERE len > 0),
-      |b AS MATERIALIZED (
-      |  SELECT doc_id, wno, hx,
-      |    unnest(generate_series(wno * 256,
-      |      least(wno * 256 + 256, len) - 1)) AS pos
-      |  FROM w),
-      |v AS MATERIALIZED (
-      |  SELECT doc_id, wno, hx,
-      |    (strpos('0123456789ABCDEF', substring(hx, pos * 2 + 1, 1)) - 1) * 16
-      |      + strpos('0123456789ABCDEF', substring(hx, pos * 2 + 2, 1)) - 1
-      |      AS byte
-      |  FROM b),
-      |e AS MATERIALIZED (
-      |  SELECT doc_id, wno, hx,
-      |    SUM((byte - 128) * (byte - 128)) AS energy
-      |  FROM v GROUP BY doc_id, wno, hx),
-      |kept AS MATERIALIZED (
-      |  SELECT doc_id,
-      |    string_agg(substring(hx, wno * 512 + 1, 512), '' ORDER BY wno)
-      |      AS shx
-      |  FROM e WHERE energy > 500000 GROUP BY doc_id),
-      |removed AS (
-      |  SELECT doc_id, COUNT(*) AS n_removed FROM e
-      |  WHERE energy <= 500000 GROUP BY doc_id),
-      |s AS MATERIALIZED (
-      |  SELECT m.doc_id, k.shx, strlen(k.shx) // 2 AS slen,
-      |    CAST(COALESCE(r.n_removed, 0) AS INT) AS n_removed
-      |  FROM m
-      |  JOIN kept k ON k.doc_id = m.doc_id
-      |  LEFT JOIN removed r ON r.doc_id = m.doc_id),
-      |fr AS (
-      |  SELECT doc_id,
-      |    CAST(unnest(generate_series(0, greatest(slen // 64 - 1, 0), 4)) AS INT)
-      |      AS frame_no, shx
-      |  FROM s),
-      |fx AS (
-      |  SELECT doc_id, frame_no,
-      |    substring(shx, frame_no * 128 + 1, 128) AS frame_hex
-      |  FROM fr),
-      |dupc AS (
-      |  SELECT frame_hex FROM fx GROUP BY frame_hex HAVING COUNT(*) > 1),
-      |dupk AS (
-      |  SELECT frame_hex, doc_id AS keep_doc_id, frame_no AS keep_frame_no,
-      |    ROW_NUMBER() OVER (PARTITION BY frame_hex
-      |                       ORDER BY doc_id, frame_no) AS rn
-      |  FROM fx),
-      |fdup AS (
-      |  SELECT f.doc_id, COUNT(*) AS n_dup_frames
-      |  FROM fx f
-      |  JOIN dupc USING (frame_hex)
-      |  JOIN dupk k ON k.frame_hex = f.frame_hex AND k.rn = 1
-      |  WHERE NOT (f.doc_id = k.keep_doc_id AND f.frame_no = k.keep_frame_no)
-      |  GROUP BY f.doc_id),
-      |mp AS (SELECT doc_id, shx, unnest(generate_series(0, slen - 1)) AS i
-      |       FROM s),
-      |ma AS (SELECT doc_id, i % 16 AS j,
-      |         SUM((strpos('0123456789ABCDEF', substring(shx, i * 2 + 1, 1)) - 1) * 16
-      |           + strpos('0123456789ABCDEF', substring(shx, i * 2 + 2, 1)) - 1) AS sm
-      |       FROM mp GROUP BY 1, 2),
-      |mb AS (SELECT t.doc_id, g.j
-      |       FROM (SELECT doc_id FROM s) t
-      |       CROSS JOIN (SELECT unnest(range(0, 16)) AS j) g),
-      |embeddings AS (
-      |  SELECT mb.doc_id AS vec_id,
-      |    list(CAST(COALESCE(ma.sm, 0) AS FLOAT) ORDER BY mb.j) AS embedding
-      |  FROM mb LEFT JOIN ma ON ma.doc_id = mb.doc_id AND ma.j = mb.j
-      |  GROUP BY mb.doc_id)""".stripMargin
+    s"""u AS (
+       |  ${OracleSql.replaySql()}),
+       |m AS MATERIALIZED (
+       |  ${OracleSql.hexPayloadSql("u WHERE text IS NOT NULL")}),
+       |${silenceStripCtes(materialized = true)},
+       |s AS MATERIALIZED (
+       |  SELECT m.doc_id, k.payload_hex AS shx, strlen(k.payload_hex) // 2 AS slen,
+       |    CAST(COALESCE(r.n_removed, 0) AS INT) AS n_removed
+       |  FROM m
+       |  JOIN kept k ON k.doc_id = m.doc_id
+       |  LEFT JOIN removed r ON r.doc_id = m.doc_id),
+       |fx AS (
+       |  ${OracleSql.framesSql("s", "shx", "slen")}),
+       |$frameDupCtes,
+       |fdup AS (
+       |  SELECT f.doc_id, COUNT(*) AS n_dup_frames
+       |  FROM fx f
+       |  JOIN dupc USING (frame_hex)
+       |  JOIN dupk k ON k.frame_hex = f.frame_hex AND k.rn = 1
+       |  WHERE NOT (f.doc_id = k.keep_doc_id AND f.frame_no = k.keep_frame_no)
+       |  GROUP BY f.doc_id),
+       |${byteFoldCtes("s", "shx", "slen")}""".stripMargin
 
   lazy val pipeMediaSql: String =
-    ExtendedQueries.lloydCtes(
-      ExtendedQueries.autoKExpr(), 3, "", 16, pipeMediaPrelude) +
-      ",\n" +
-      """fd AS (
-        |  SELECT e.vec_id AS r, c.k,
-        |    SUM((CAST(e.embedding[c.i + 1] AS DOUBLE) - c.v) *
-        |        (CAST(e.embedding[c.i + 1] AS DOUBLE) - c.v)) AS dist
-        |  FROM embeddings e, c3 c GROUP BY 1, 2),
-        |fa AS (
-        |  SELECT r, k FROM (
-        |    SELECT r, k, ROW_NUMBER() OVER (PARTITION BY r ORDER BY dist, k) AS rk
-        |    FROM fd) z WHERE rk = 1),
-        |vv AS (
-        |  SELECT e.vec_id, e.embedding, a.k
-        |  FROM embeddings e JOIN fa a ON e.vec_id = a.r),
-        |p AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |    round((SELECT SUM(CAST(a.embedding[i] AS DOUBLE)*CAST(b.embedding[i] AS DOUBLE))
-        |     FROM generate_series(1, 16) g(i)) /
-        |    (sqrt((SELECT SUM(CAST(a.embedding[i] AS DOUBLE)*CAST(a.embedding[i] AS DOUBLE))
-        |           FROM generate_series(1, 16) g(i))) *
-        |     sqrt((SELECT SUM(CAST(b.embedding[i] AS DOUBLE)*CAST(b.embedding[i] AS DOUBLE))
-        |           FROM generate_series(1, 16) g(i)))), 6) AS cos
-        |  FROM vv a JOIN vv b ON a.k = b.k AND a.vec_id < b.vec_id),
-        |imgdup AS (
-        |  SELECT DISTINCT id_b AS doc_id FROM p WHERE cos >= 0.999)
-        |SELECT s.doc_id, s.n_removed,
+    OracleSql.lloydCtes(OracleSql.autoKExpr(), 3, "", 16, pipeMediaPrelude) +
+      ",\n" + imageDupCtes + "\n" +
+      """SELECT s.doc_id, s.n_removed,
         |  COALESCE(f.n_dup_frames, 0) AS n_dup_frames,
         |  (i.doc_id IS NOT NULL) AS is_image_dup,
         |  (COALESCE(f.n_dup_frames, 0) = 0 AND i.doc_id IS NULL) AS keep
         |FROM s
         |LEFT JOIN fdup f ON f.doc_id = s.doc_id
         |LEFT JOIN imgdup i ON i.doc_id = s.doc_id""".stripMargin
+
+  /** The image branch after the Lloyd chain: SemDeDup over the stripped
+    * payloads' features (the cell CTE is `vv`, since the prelude's byte
+    * CTE holds `v`), and `imgdup` = the larger id of each ≥ 0.999 pair.
+    */
+  private lazy val imageDupCtes: String =
+    OracleSql.assignCtes() + ",\n" + OracleSql.cellPairCtes(16, v = "vv") +
+      """,
+        |imgdup AS (
+        |  SELECT DISTINCT id_b AS doc_id FROM p WHERE cos >= 0.999)""".stripMargin
 
   /** The cross-modal capstone — [[CurationQueries.pipeCurate]]'s text
     * decision stages and [[pipeMedia]]'s media decision stages composed
@@ -1676,10 +1404,7 @@ object PipelineQueries {
     */
   def pipeAll(spark: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(spark, d)
-    val corpus = docs.select(col("doc_id"), col("text"))
-      .unionByName(docs.filter(col("doc_id") < 100)
-        .select((col("doc_id") + 10000).as("doc_id"), col("text")))
-      .filter(col("text").isNotNull)
+    val corpus = OracleSql.replayed(docs).filter(col("text").isNotNull)
     // TEXT branch — pipe_curate's stages over THIS corpus: the replayed
     // docs are verbatim copies, so span-strip collapses them to empty.
     // The two branch HEADS (span-strip and silence-strip) are
@@ -1757,84 +1482,30 @@ object PipelineQueries {
         col("not_text_dup") && col("quality_keep") && col("media_keep"))
   }
 
-  /** The media prelude (u/…/embeddings over the replayed corpus) plus a
-    * t-prefixed copy of the dd_span_strip + quality-median chains scoped
-    * to the same `u` — both modality chains share one corpus CTE, like
-    * the Spark plan shares one corpus frame.
+  /** The media prelude (u/…/embeddings over the replayed corpus) plus
+    * dd_span_strip's chain ([[spanStripCtes]], t-prefixed) and the
+    * quality-median gate over the same `u` — both modality chains share
+    * one corpus CTE, like the Spark plan shares one corpus frame.
     */
   private lazy val pipeAllPrelude: String =
-    pipeMediaPrelude + ",\n" +
-      s"""ttoks AS (
-         |  SELECT doc_id, string_split(text, ' ') AS t FROM u
-         |  WHERE text IS NOT NULL),
-         |tposn AS (
-         |  SELECT doc_id, t, unnest(range(0, len(t) - 7)) AS pos FROM ttoks),
-         |twins AS (
-         |  SELECT doc_id, pos, md5(array_to_string(t[pos + 1 : pos + 8], ' ')) AS g
-         |  FROM tposn),
-         |tdup AS (SELECT g FROM twins GROUP BY g HAVING COUNT(*) >= 2),
-         |tsites AS (
-         |  SELECT w.doc_id, w.pos,
-         |    ROW_NUMBER() OVER (PARTITION BY w.g ORDER BY w.doc_id, w.pos) AS rn
-         |  FROM twins w JOIN tdup d USING (g)),
-         |trem AS (
-         |  SELECT DISTINCT doc_id, pos + i.i AS tp
-         |  FROM tsites, generate_series(0, 7) i(i) WHERE rn > 1),
-         |ttokpos AS (
-         |  SELECT doc_id, t[pos + 1] AS tok, pos AS tp
-         |  FROM (SELECT doc_id, t, unnest(range(0, len(t))) AS pos FROM ttoks)),
-         |tkeep AS (
-         |  SELECT k.doc_id, k.tp, k.tok FROM ttokpos k
-         |  LEFT JOIN trem r ON k.doc_id = r.doc_id AND k.tp = r.tp
-         |  WHERE r.doc_id IS NULL),
-         |trebuilt AS (
-         |  SELECT doc_id, array_to_string(list(tok ORDER BY tp), ' ') AS clean_text
-         |  FROM tkeep GROUP BY doc_id),
+    pipeMediaPrelude + ",\n" + spanStripCtes("u WHERE text IS NOT NULL", "t") +
+      s""",
          |tstrip AS MATERIALIZED (
          |  SELECT t.doc_id, COALESCE(r.clean_text, '') AS clean_text
          |  FROM ttoks t LEFT JOIN trebuilt r ON t.doc_id = r.doc_id),
          |tsurv AS (SELECT doc_id, clean_text AS text FROM tstrip
          |          WHERE clean_text <> ''),
          |tq AS MATERIALIZED (SELECT doc_id, q_score FROM (
-         |  ${graft.operators.TextAnalysis.qualityScoreSqlFrom("tsurv")}) z),
-         |tranked AS (
-         |  SELECT doc_id, q_score,
-         |    ROW_NUMBER() OVER (ORDER BY q_score DESC, doc_id) AS rk FROM tq),
-         |tthr AS (
-         |  SELECT MIN(q_score) AS t FROM tranked
-         |  WHERE rk <= CAST(ceil(0.5 * (SELECT COUNT(*) FROM tq)) AS BIGINT)),
+         |  ${OracleSql.qualityScoreSql("tsurv")}) z),
+         |tthr AS (${OracleSql.rankCutSql("tq", "q_score", "0.5")}),
          |tqkeep AS (
          |  SELECT tq.doc_id FROM tq CROSS JOIN tthr
          |  WHERE tq.q_score >= tthr.t)""".stripMargin
 
   lazy val pipeAllSql: String =
-    ExtendedQueries.lloydCtes(
-      ExtendedQueries.autoKExpr(), 3, "", 16, pipeAllPrelude) +
-      ",\n" +
-      """fd AS (
-        |  SELECT e.vec_id AS r, c.k,
-        |    SUM((CAST(e.embedding[c.i + 1] AS DOUBLE) - c.v) *
-        |        (CAST(e.embedding[c.i + 1] AS DOUBLE) - c.v)) AS dist
-        |  FROM embeddings e, c3 c GROUP BY 1, 2),
-        |fa AS (
-        |  SELECT r, k FROM (
-        |    SELECT r, k, ROW_NUMBER() OVER (PARTITION BY r ORDER BY dist, k) AS rk
-        |    FROM fd) z WHERE rk = 1),
-        |vv AS (
-        |  SELECT e.vec_id, e.embedding, a.k
-        |  FROM embeddings e JOIN fa a ON e.vec_id = a.r),
-        |p AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |    round((SELECT SUM(CAST(a.embedding[i] AS DOUBLE)*CAST(b.embedding[i] AS DOUBLE))
-        |     FROM generate_series(1, 16) g(i)) /
-        |    (sqrt((SELECT SUM(CAST(a.embedding[i] AS DOUBLE)*CAST(a.embedding[i] AS DOUBLE))
-        |           FROM generate_series(1, 16) g(i))) *
-        |     sqrt((SELECT SUM(CAST(b.embedding[i] AS DOUBLE)*CAST(b.embedding[i] AS DOUBLE))
-        |           FROM generate_series(1, 16) g(i)))), 6) AS cos
-        |  FROM vv a JOIN vv b ON a.k = b.k AND a.vec_id < b.vec_id),
-        |imgdup AS (
-        |  SELECT DISTINCT id_b AS doc_id FROM p WHERE cos >= 0.999)
-        |SELECT mm.doc_id,
+    OracleSql.lloydCtes(OracleSql.autoKExpr(), 3, "", 16, pipeAllPrelude) +
+      ",\n" + imageDupCtes + "\n" +
+      """SELECT mm.doc_id,
         |  (ts.clean_text <> '') AS not_text_dup,
         |  (qk.doc_id IS NOT NULL) AS quality_keep,
         |  (sv.doc_id IS NOT NULL AND COALESCE(f.n_dup_frames, 0) = 0
@@ -1859,10 +1530,7 @@ object PipelineQueries {
     */
   def pipeAllBudget(spark: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(spark, d)
-    val corpus = docs.select(col("doc_id"), col("text"))
-      .unionByName(docs.filter(col("doc_id") < 100)
-        .select((col("doc_id") + 10000).as("doc_id"), col("text")))
-      .filter(col("text").isNotNull)
+    val corpus = OracleSql.replayed(docs).filter(col("text").isNotNull)
     val keep = pipeAll(spark, d).filter(col("keep")).select(col("doc_id"))
     graft.operators.Curation.tokenBudgetSubset(
       corpus.join(keep, Seq("doc_id")),
@@ -1873,37 +1541,22 @@ object PipelineQueries {
     * shard/position/cumsum CTEs scoped to the keep=true survivors.
     */
   lazy val pipeAllBudgetSql: String =
-    s"""WITH pa AS (
-       |${pipeAllSql}
+    pipeAllKeptCtes(materialized = false) + ",\n" +
+      OracleSql.tokenBudgetSql("kept", 8, "3750")
+
+  /** pipe_all's oracle as CTE `pa` and its keep=true docs of the
+    * replayed corpus as `kept` (doc_id, text).
+    */
+  private def pipeAllKeptCtes(materialized: Boolean): String =
+    s"""WITH ${OracleSql.cte("pa", materialized)} (
+       |$pipeAllSql
        |),
        |u2 AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL
-       |  SELECT doc_id + 10000 AS doc_id, text FROM documents
-       |  WHERE doc_id < 100),
-       |kept AS (
+       |  ${OracleSql.replaySql()}),
+       |${OracleSql.cte("kept", materialized)} (
        |  SELECT u2.doc_id, u2.text FROM u2
        |  JOIN pa ON pa.doc_id = u2.doc_id AND pa.keep
-       |  WHERE u2.text IS NOT NULL),
-       |bh AS (
-       |  SELECT doc_id,
-       |    CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-       |      AS BIGINT) % 8 AS shard,
-       |    md5(CAST(doc_id AS VARCHAR)) AS mh,
-       |    len(string_split(text, ' ')) AS n_tokens
-       |  FROM kept),
-       |br AS (
-       |  SELECT doc_id, shard, n_tokens,
-       |    ROW_NUMBER() OVER (PARTITION BY shard ORDER BY mh, doc_id) - 1 AS pos
-       |  FROM bh),
-       |bc AS (
-       |  SELECT doc_id, shard, pos, n_tokens,
-       |    CAST(SUM(n_tokens) OVER (PARTITION BY shard ORDER BY pos
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-       |      AS cum_tokens
-       |  FROM br)
-       |SELECT doc_id, shard, pos, n_tokens, cum_tokens
-       |FROM bc WHERE cum_tokens <= 3750""".stripMargin
+       |  WHERE u2.text IS NOT NULL)""".stripMargin
 
   /** The LM-gated production curation chain — [[pipeAllBudget]] with the
     * model-based quality gate a real pipeline filters on composed in:
@@ -1923,10 +1576,7 @@ object PipelineQueries {
     */
   def pipeLmBudget(spark: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(spark, d)
-    val corpus = docs.select(col("doc_id"), col("text"))
-      .unionByName(docs.filter(col("doc_id") < 100)
-        .select((col("doc_id") + 10000).as("doc_id"), col("text")))
-      .filter(col("text").isNotNull)
+    val corpus = OracleSql.replayed(docs).filter(col("text").isNotNull)
     // the keep set feeds TWO consumers (the LM-score branch and the
     // final gated join) — materialize it eagerly or the whole pipe_all
     // DAG executes twice (measured: 9.1 s -> ~7 s at sf0.1). Same
@@ -1956,80 +1606,21 @@ object PipelineQueries {
     * inlines CTEs by default, and `kept` (6 refs, dragging the whole
     * `pa` = pipe_all chain behind it) inlined multiplicatively cost
     * ~10 min / >6 GB at sf0.01 — which killed the round-12 driver
-    * compare and zeroed CORRECTNESS_r12.json. With pa/kept/lrb/lru/
-    * ldb/lsc materialized the same oracle runs in ~20 s (measured,
+    * compare and zeroed CORRECTNESS_r12.json. With pa, kept, the LM
+    * model and the score CTEs materialized it runs in ~20 s (measured,
     * DuckDB 1.0.0). Oracles must fit the harness budget: OracleCostSpec
     * pins the ceiling against the committed ORACLE_COST artifact.
     */
   lazy val pipeLmBudgetSql: String =
-    s"""WITH pa AS MATERIALIZED (
-       |${pipeAllSql}
-       |),
-       |u2 AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL
-       |  SELECT doc_id + 10000 AS doc_id, text FROM documents
-       |  WHERE doc_id < 100),
-       |kept AS MATERIALIZED (
-       |  SELECT u2.doc_id, u2.text FROM u2
-       |  JOIN pa ON pa.doc_id = u2.doc_id AND pa.keep
-       |  WHERE u2.text IS NOT NULL),
-       |lrb AS MATERIALIZED (
-       |  SELECT bg, COUNT(*) AS cb FROM (
-       |    SELECT unnest(list_transform(range(1, len(string_split(text, ' '))),
-       |      i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]))
-       |      AS bg
-       |    FROM documents WHERE doc_id < 250) z GROUP BY 1),
-       |lru AS MATERIALIZED (
-       |  SELECT w1, COUNT(*) AS cu FROM (
-       |    SELECT unnest(string_split(text, ' ')) AS w1
-       |    FROM documents WHERE doc_id < 250) z GROUP BY 1),
-       |lvv AS (SELECT CAST(COUNT(*) AS DOUBLE) AS v FROM lru),
-       |ldb AS MATERIALIZED (
-       |  SELECT doc_id,
-       |    unnest(list_transform(range(1, len(string_split(text, ' '))),
-       |      i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]))
-       |      AS bg
-       |  FROM kept),
-       |ls AS (
-       |  SELECT ldb.doc_id,
-       |    ln(CAST(COALESCE(lrb.cb, 0) + 1 AS DOUBLE) /
-       |       (COALESCE(lru.cu, 0) + (SELECT v FROM lvv))) AS lp
-       |  FROM ldb
-       |  LEFT JOIN lrb USING (bg)
-       |  LEFT JOIN lru ON lru.w1 = string_split(ldb.bg, ' ')[1]),
-       |lsc AS MATERIALIZED (
-       |  SELECT doc_id, round(AVG(lp), 6) AS lm_score FROM ls GROUP BY 1),
-       |lranked AS (
-       |  SELECT doc_id, lm_score,
-       |    ROW_NUMBER() OVER (ORDER BY lm_score DESC, doc_id) AS rk FROM lsc),
-       |lthr AS (
-       |  SELECT MIN(lm_score) AS t FROM lranked
-       |  WHERE rk <= CAST(ceil(0.5 * (SELECT COUNT(*) FROM lsc)) AS BIGINT)),
-       |lkeep AS (
-       |  SELECT lsc.doc_id FROM lsc CROSS JOIN lthr
-       |  WHERE lsc.lm_score >= lthr.t),
-       |gated AS (
-       |  SELECT kept.doc_id, kept.text FROM kept JOIN lkeep USING (doc_id)),
-       |bh AS (
-       |  SELECT doc_id,
-       |    CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-       |      AS BIGINT) % 8 AS shard,
-       |    md5(CAST(doc_id AS VARCHAR)) AS mh,
-       |    len(string_split(text, ' ')) AS n_tokens
-       |  FROM gated),
-       |br AS (
-       |  SELECT doc_id, shard, n_tokens,
-       |    ROW_NUMBER() OVER (PARTITION BY shard ORDER BY mh, doc_id) - 1 AS pos
-       |  FROM bh),
-       |bc AS (
-       |  SELECT doc_id, shard, pos, n_tokens,
-       |    CAST(SUM(n_tokens) OVER (PARTITION BY shard ORDER BY pos
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-       |      AS cum_tokens
-       |  FROM br)
-       |SELECT doc_id, shard, pos, n_tokens, cum_tokens
-       |FROM bc WHERE cum_tokens <= 3750""".stripMargin
+    pipeAllKeptCtes(materialized = true) + ",\n" +
+      s"""${OracleSql.lmModelCtes("WHERE doc_id < 250", materialized = true)},
+         |${OracleSql.lmScoreCtes("lsc", "kept", materialized = true)},
+         |lthr AS (${OracleSql.rankCutSql("lsc", "lm_score", "0.5")}),
+         |gated AS (
+         |  SELECT kept.doc_id, kept.text FROM kept
+         |  JOIN lsc USING (doc_id) CROSS JOIN lthr
+         |  WHERE lsc.lm_score >= lthr.t),
+         |${OracleSql.tokenBudgetSql("gated", 8, "3750")}""".stripMargin
 
   /** The CCNet SAMPLING recipe end-to-end, as a pure composition of the
     * round-13 operators: score the corpus under the reference LM, cut it
@@ -2061,42 +1652,21 @@ object PipelineQueries {
       totalTokens = 30000L, nShards = 8)
   }
 
-  /** [[TextAnalysis.lmBucketsSql]]'s chain as CTE `bkt`, then the
+  /** [[txtLmBucketsSql]]'s chain as CTE `bkt`, then the
     * domain-budget CTEs with the tier (bucket cast to VARCHAR) as the
     * mixture domain and the head/middle/tail weights in the VALUES
     * table. Same op-matched double math as both component oracles.
     */
   lazy val pipeQualityMixSql: String =
     s"""WITH bkt AS MATERIALIZED (
-       |${graft.operators.TextAnalysis.lmBucketsSql}
+       |$txtLmBucketsSql
        |),
-       |wts(domain, w) AS (
-       |  VALUES ('0', CAST(0.6 AS DOUBLE)), ('1', CAST(0.3 AS DOUBLE)),
-       |         ('2', CAST(0.1 AS DOUBLE))),
-       |mh0 AS (
-       |  SELECT d.doc_id, CAST(b.bucket AS VARCHAR) AS domain, w,
-       |    CAST(concat('0x', substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15))
-       |      AS BIGINT) % 8 AS shard,
-       |    md5(CAST(d.doc_id AS VARCHAR)) AS mh,
-       |    len(string_split(d.text, ' ')) AS n_tokens
-       |  FROM documents d
-       |  JOIN bkt b ON b.doc_id = d.doc_id
-       |  JOIN wts ON wts.domain = CAST(b.bucket AS VARCHAR)
-       |  WHERE d.text IS NOT NULL),
-       |mr AS (
-       |  SELECT doc_id, domain, w, shard, n_tokens,
-       |    ROW_NUMBER() OVER (PARTITION BY domain, shard ORDER BY mh, doc_id) - 1
-       |      AS pos
-       |  FROM mh0),
-       |mc AS (
-       |  SELECT doc_id, domain, w, shard, pos, n_tokens,
-       |    CAST(SUM(n_tokens) OVER (PARTITION BY domain, shard ORDER BY pos
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-       |      AS cum_tokens
-       |  FROM mr)
-       |SELECT doc_id, domain, shard, pos, n_tokens, cum_tokens
-       |FROM mc WHERE cum_tokens <= CAST(FLOOR(30000.0 * w / 8) AS BIGINT)"""
-      .stripMargin
+       |${OracleSql.weightsCte("0" -> 0.6, "1" -> 0.3, "2" -> 0.1)},
+       |""".stripMargin + OracleSql.tokenBudgetSql(
+      "documents JOIN bkt USING (doc_id)\n" +
+        "  JOIN wts ON wts.domain = CAST(bkt.bucket AS VARCHAR)\n" +
+        "  WHERE text IS NOT NULL",
+      8, "CAST(FLOOR(30000.0 * w / 8) AS BIGINT)", byDomain = true)
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dd_exact" -> ddExact,
@@ -2185,14 +1755,14 @@ object PipelineQueries {
     "sim_pq_indexed" -> simPqSql,
     "sim_ivfpq_topk" -> simIvfPqSql,
     "sim_ivfpq_indexed" -> simIvfPqSql,
-    "txt_langid" -> TextAnalysis.languageIdSql,
-    "txt_quality" -> TextAnalysis.qualityScoreSql,
-    "txt_tokens" -> TextAnalysis.tokenStatsSql,
+    "txt_langid" -> txtLangIdSql,
+    "txt_quality" -> txtQualitySql,
+    "txt_tokens" -> txtTokensSql,
     "txt_fingerprint" -> txtFingerprintSql,
-    "txt_tfidf" -> TextAnalysis.tfidfSql,
-    "txt_lm_score" -> TextAnalysis.lmScoreSql,
-    "txt_lm_buckets" -> TextAnalysis.lmBucketsSql,
-    "txt_repetition" -> TextAnalysis.repetitionStatsSql,
+    "txt_tfidf" -> txtTfidfSql,
+    "txt_lm_score" -> txtLmScoreSql,
+    "txt_lm_buckets" -> txtLmBucketsSql,
+    "txt_repetition" -> txtRepetitionSql,
     "mm_features" -> mmFeaturesSql,
     "mm_resize" -> mmResizeSql,
     "mm_neardup" -> mmNearDupSql,

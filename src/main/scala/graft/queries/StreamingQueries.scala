@@ -106,19 +106,11 @@ object StreamingQueries {
       .agg(max(col("session_seq")).as("n_sessions"))
   }
 
+  /** Oracle: each user's last session number in op_sessionize's oracle. */
   val stSessionsSql: String =
-    """SELECT user_id, CAST(max(session_seq) AS BIGINT) AS n_sessions FROM (
-      |  SELECT user_id, CAST(SUM(new_sess) OVER (PARTITION BY user_id
-      |      ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
-      |  FROM (
-      |    SELECT user_id, ts, event_id,
-      |      CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-      |             OR CAST(floor(epoch(ts)) AS BIGINT) -
-      |                CAST(floor(epoch(lag(ts) OVER (PARTITION BY user_id
-      |                     ORDER BY ts, event_id))) AS BIGINT) > 1800
-      |           THEN 1 ELSE 0 END AS new_sess
-      |    FROM events) g) s
-      |GROUP BY user_id""".stripMargin
+    s"""SELECT user_id, CAST(max(session_seq) AS BIGINT) AS n_sessions FROM (
+       |${OperatorQueries.sessionizeSql}) s
+       |GROUP BY user_id""".stripMargin
 
   /** streaming incremental upsert: per-user latest event state maintained
     * across micro-batches (foreachBatch MERGE loop) ≡ batch last-row-per-key
@@ -271,7 +263,7 @@ object StreamingQueries {
   def stExact(spark0: SparkSession, d: String): DataFrame = {
     val spark = streamSession(spark0)
     val docs = graft.model.Tables.documents(spark, d)
-    val arrivals = stArrivals(readDocStream(spark, d))
+    val arrivals = OracleSql.arrivals(readDocStream(spark, d))
     graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
       graft.operators.Dedup.persistExactIndex(cat, db, "corpus",
         docs.filter(col("doc_id") < 250), "text")
@@ -296,7 +288,7 @@ object StreamingQueries {
   def stFrameDedup(spark0: SparkSession, d: String): DataFrame = {
     val spark = streamSession(spark0)
     val docs = graft.model.Tables.documents(spark, d)
-    val arrivals = stArrivals(readDocStream(spark, d))
+    val arrivals = OracleSql.arrivals(readDocStream(spark, d))
     graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
       graft.operators.Multimodal.persistFrameIndex(cat, db, "frames",
         graft.operators.Multimodal.withPayload(
@@ -312,32 +304,18 @@ object StreamingQueries {
     * flagged by exact frame-content equality.
     */
   val stFrameDedupSql: String =
-    """WITH c AS (
-      |  SELECT hex(encode(text)) AS hx, octet_length(encode(text)) AS len
-      |  FROM documents WHERE doc_id < 250 AND text IS NOT NULL),
-      |cf AS (
-      |  SELECT DISTINCT substring(hx, fno * 128 + 1, 128) AS frame_hex
-      |  FROM (SELECT hx,
-      |          unnest(generate_series(0, greatest(len // 64 - 1, 0), 4)) AS fno
-      |        FROM c)),
-      |arr AS (
-      |  SELECT doc_id, text FROM documents WHERE doc_id >= 250
-      |  UNION ALL
-      |  SELECT doc_id + 10000 AS doc_id, text FROM documents
-      |  WHERE doc_id < 100),
-      |a AS (
-      |  SELECT doc_id, hex(encode(text)) AS hx,
-      |    octet_length(encode(text)) AS len
-      |  FROM arr WHERE text IS NOT NULL),
-      |af AS (
-      |  SELECT doc_id, CAST(fno AS INT) AS frame_no,
-      |    substring(hx, fno * 128 + 1, 128) AS frame_hex
-      |  FROM (SELECT doc_id, hx,
-      |          unnest(generate_series(0, greatest(len // 64 - 1, 0), 4)) AS fno
-      |        FROM a))
-      |SELECT af.doc_id, af.frame_no,
-      |  (cf.frame_hex IS NOT NULL) AS is_dup
-      |FROM af LEFT JOIN cf ON cf.frame_hex = af.frame_hex""".stripMargin
+    s"""WITH c AS (
+       |  ${OracleSql.hexPayloadSql("documents WHERE doc_id < 250 AND text IS NOT NULL")}),
+       |cf AS (SELECT DISTINCT frame_hex FROM (${OracleSql.framesSql("c")})),
+       |arr AS (
+       |  ${OracleSql.arrivalsSql}),
+       |a AS (
+       |  ${OracleSql.hexPayloadSql("arr WHERE text IS NOT NULL")}),
+       |af AS (
+       |  ${OracleSql.framesSql("a")})
+       |SELECT af.doc_id, af.frame_no,
+       |  (cf.frame_hex IS NOT NULL) AS is_dup
+       |FROM af LEFT JOIN cf ON cf.frame_hex = af.frame_hex""".stripMargin
 
   /** streaming AUDIO ingest dedup — the envelope analogue of
     * [[stFrameDedup]], completing streaming parity for every media dedup
@@ -354,7 +332,7 @@ object StreamingQueries {
   def stAudioDup(spark0: SparkSession, d: String): DataFrame = {
     val spark = streamSession(spark0)
     val docs = graft.model.Tables.documents(spark, d)
-    val arrivals = stArrivals(readDocStream(spark, d))
+    val arrivals = OracleSql.arrivals(readDocStream(spark, d))
     graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
       graft.operators.Multimodal.persistEnvelopeIndex(cat, db, "env",
         graft.operators.Multimodal.withPayload(
@@ -372,62 +350,18 @@ object StreamingQueries {
     * fingerprint equality.
     */
   val stAudioDupSql: String =
-    """WITH base AS (
-      |  SELECT doc_id, text, 0 AS side FROM documents WHERE doc_id < 250
-      |  UNION ALL
-      |  SELECT doc_id, text, 1 AS side FROM documents WHERE doc_id >= 250
-      |  UNION ALL
-      |  SELECT doc_id + 10000 AS doc_id, text, 1 AS side FROM documents
-      |  WHERE doc_id < 100),
-      |m AS (
-      |  SELECT side, doc_id, hex(encode(text)) AS hx,
-      |    octet_length(encode(text)) AS len
-      |  FROM base
-      |  WHERE text IS NOT NULL AND octet_length(encode(text)) > 0),
-      |w AS (
-      |  SELECT side, doc_id, hx, len,
-      |    unnest(generate_series(0, (len - 1) // 32)) AS wno
-      |  FROM m),
-      |b AS (
-      |  SELECT side, doc_id, wno, hx,
-      |    unnest(generate_series(wno * 32,
-      |      least(wno * 32 + 64, len) - 1)) AS pos
-      |  FROM w),
-      |v AS (
-      |  SELECT side, doc_id, wno,
-      |    (strpos('0123456789ABCDEF', substring(hx, pos * 2 + 1, 1)) - 1) * 16
-      |      + strpos('0123456789ABCDEF', substring(hx, pos * 2 + 2, 1)) - 1
-      |      AS byte
-      |  FROM b),
-      |e AS (
-      |  SELECT side, doc_id, wno, SUM((byte - 128) * (byte - 128)) AS energy
-      |  FROM v GROUP BY side, doc_id, wno),
-      |n AS (SELECT side, doc_id, COUNT(*) AS nw FROM e GROUP BY side, doc_id),
-      |d AS (
-      |  SELECT a.side, a.doc_id,
-      |    CASE WHEN b.energy > a.energy
-      |         THEN (1::BIGINT << CAST(a.wno AS INT)) ELSE 0::BIGINT END AS bit
-      |  FROM e a JOIN e b ON a.side = b.side AND a.doc_id = b.doc_id
-      |    AND b.wno = a.wno + 1
-      |  WHERE a.wno <= 62),
-      |f AS (
-      |  SELECT d.side, d.doc_id, CAST(SUM(bit) AS BIGINT) AS fp
-      |  FROM d JOIN n ON d.side = n.side AND d.doc_id = n.doc_id
-      |  WHERE n.nw >= 8 GROUP BY d.side, d.doc_id),
-      |cf AS (SELECT DISTINCT fp FROM f WHERE side = 0)
-      |SELECT f.doc_id, (cf.fp IS NOT NULL) AS is_dup
-      |FROM f LEFT JOIN cf ON cf.fp = f.fp
-      |WHERE f.side = 1""".stripMargin
-
-  /** The standing-index probes' shared arrival stream: docs ≥ 250 plus
-    * the < 100 slice re-ingested under shifted ids (planted stream-side
-    * dups).
-    */
-  private def stArrivals(s: DataFrame): DataFrame =
-    s.filter(col("doc_id") >= 250)
-      .select(col("doc_id"), col("text"))
-      .unionByName(s.filter(col("doc_id") < 100)
-        .select((col("doc_id") + 10000).as("doc_id"), col("text")))
+    s"""WITH base AS (
+       |  SELECT doc_id, text, 0 AS side FROM documents WHERE doc_id < 250
+       |  UNION ALL
+       |  SELECT doc_id, text, 1 AS side FROM (${OracleSql.arrivalsSql})),
+       |m AS (
+       |  ${OracleSql.hexPayloadSql("base WHERE text IS NOT NULL", "side, doc_id")}),
+       |${OracleSql.energyCtes("m", 64, 32, key = "side")},
+       |${OracleSql.envelopeCtes(key = "side")},
+       |cf AS (SELECT DISTINCT fp FROM f WHERE side = 0)
+       |SELECT f.doc_id, (cf.fp IS NOT NULL) AS is_dup
+       |FROM f LEFT JOIN cf ON cf.fp = f.fp
+       |WHERE f.side = 1""".stripMargin
 
   /** One micro-batch's cross-modal keep decision against the three
     * standing indexes — the per-batch kernel [[stPipeAll]] accumulates
@@ -534,95 +468,27 @@ object StreamingQueries {
     val corpus = docs.filter(col("doc_id") < 250)
     graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
       val (txtHashes, frmHashes, envFps) = buildPipeIndexes(cat, db, corpus)
-      graft.operators.Dedup.streamProbe(stArrivals(readDocStream(spark, d)),
+      graft.operators.Dedup.streamProbe(OracleSql.arrivals(readDocStream(spark, d)),
         pipeFlagsBatch(_, txtHashes, frmHashes, envFps))
     }
   }
 
-  /** Oracle: text dup by equality vs the corpus half, frame dup by any
-    * arrival frame in the corpus frame set (mm_frames hex arithmetic),
-    * audio dup by envelope-fingerprint membership (the st_audio_dup
-    * chain with e-prefixed CTEs), quality from the shared score SQL at
-    * the frozen 0.36 threshold.
+  /** Oracle: the three stage oracles composed — text dup from
+    * dd_exact_indexed's, frame dup = any flagged frame of
+    * [[stFrameDedupSql]], audio dup from [[stAudioDupSql]] — plus the
+    * shared quality score at the frozen 0.36 threshold.
     */
   lazy val stPipeAllSql: String =
     s"""WITH arr AS (
-       |  SELECT doc_id, text FROM documents WHERE doc_id >= 250
-       |  UNION ALL
-       |  SELECT doc_id + 10000 AS doc_id, text FROM documents
-       |  WHERE doc_id < 100),
-       |tdup AS (
-       |  SELECT a.doc_id,
-       |    EXISTS(SELECT 1 FROM documents c
-       |           WHERE c.doc_id < 250 AND c.text = a.text) AS text_dup
-       |  FROM arr a),
-       |fcr AS (
-       |  SELECT hex(encode(text)) AS hx, octet_length(encode(text)) AS len
-       |  FROM documents WHERE doc_id < 250 AND text IS NOT NULL),
-       |fcf AS (
-       |  SELECT DISTINCT substring(hx, fno * 128 + 1, 128) AS frame_hex
-       |  FROM (SELECT hx,
-       |          unnest(generate_series(0, greatest(len // 64 - 1, 0), 4)) AS fno
-       |        FROM fcr)),
-       |far AS (
-       |  SELECT doc_id, hex(encode(text)) AS hx,
-       |    octet_length(encode(text)) AS len
-       |  FROM arr WHERE text IS NOT NULL),
-       |faf AS (
-       |  SELECT doc_id, substring(hx, fno * 128 + 1, 128) AS frame_hex
-       |  FROM (SELECT doc_id, hx,
-       |          unnest(generate_series(0, greatest(len // 64 - 1, 0), 4)) AS fno
-       |        FROM far)),
-       |fdup AS (
-       |  SELECT f.doc_id, bool_or(cf.frame_hex IS NOT NULL) AS frame_dup
-       |  FROM faf f LEFT JOIN fcf cf ON cf.frame_hex = f.frame_hex
-       |  GROUP BY f.doc_id),
-       |eb AS (
-       |  SELECT doc_id, text, 0 AS side FROM documents WHERE doc_id < 250
-       |  UNION ALL
-       |  SELECT doc_id, text, 1 AS side FROM arr),
-       |em AS (
-       |  SELECT side, doc_id, hex(encode(text)) AS hx,
-       |    octet_length(encode(text)) AS len
-       |  FROM eb
-       |  WHERE text IS NOT NULL AND octet_length(encode(text)) > 0),
-       |ew AS (
-       |  SELECT side, doc_id, hx, len,
-       |    unnest(generate_series(0, (len - 1) // 32)) AS wno
-       |  FROM em),
-       |ebb AS (
-       |  SELECT side, doc_id, wno, hx,
-       |    unnest(generate_series(wno * 32,
-       |      least(wno * 32 + 64, len) - 1)) AS pos
-       |  FROM ew),
-       |ev AS (
-       |  SELECT side, doc_id, wno,
-       |    (strpos('0123456789ABCDEF', substring(hx, pos * 2 + 1, 1)) - 1) * 16
-       |      + strpos('0123456789ABCDEF', substring(hx, pos * 2 + 2, 1)) - 1
-       |      AS byte
-       |  FROM ebb),
-       |ee AS (
-       |  SELECT side, doc_id, wno, SUM((byte - 128) * (byte - 128)) AS energy
-       |  FROM ev GROUP BY side, doc_id, wno),
-       |en AS (SELECT side, doc_id, COUNT(*) AS nw FROM ee GROUP BY side, doc_id),
-       |ed AS (
-       |  SELECT a.side, a.doc_id,
-       |    CASE WHEN b.energy > a.energy
-       |         THEN (1::BIGINT << CAST(a.wno AS INT)) ELSE 0::BIGINT END AS bit
-       |  FROM ee a JOIN ee b ON a.side = b.side AND a.doc_id = b.doc_id
-       |    AND b.wno = a.wno + 1
-       |  WHERE a.wno <= 62),
-       |ef AS (
-       |  SELECT ed.side, ed.doc_id, CAST(SUM(bit) AS BIGINT) AS fp
-       |  FROM ed JOIN en ON ed.side = en.side AND ed.doc_id = en.doc_id
-       |  WHERE en.nw >= 8 GROUP BY ed.side, ed.doc_id),
-       |ecf AS (SELECT DISTINCT fp FROM ef WHERE side = 0),
-       |edup AS (
-       |  SELECT ef.doc_id, (ecf.fp IS NOT NULL) AS audio_dup
-       |  FROM ef LEFT JOIN ecf ON ecf.fp = ef.fp
-       |  WHERE ef.side = 1),
+       |  ${OracleSql.arrivalsSql}),
+       |tdup AS (SELECT doc_id, is_dup AS text_dup FROM (
+       |${PipelineQueries.ddExactIndexedSql})),
+       |fdup AS (SELECT doc_id, bool_or(is_dup) AS frame_dup FROM (
+       |$stFrameDedupSql) GROUP BY doc_id),
+       |edup AS (SELECT doc_id, is_dup AS audio_dup FROM (
+       |$stAudioDupSql)),
        |q AS (SELECT doc_id, q_score FROM (
-       |  ${graft.operators.TextAnalysis.qualityScoreSqlFrom("arr")}) z)
+       |  ${OracleSql.qualityScoreSql("arr")}) z)
        |SELECT a.doc_id,
        |  t.text_dup,
        |  COALESCE(f.frame_dup, FALSE) AS frame_dup,
@@ -653,19 +519,7 @@ object StreamingQueries {
   /** Oracle: the batch PII scan over the same fixture rows (txt_pii's
     * SELECT without its synthetic PII augmentation).
     */
-  val stCurateSql: String = {
-    val email = graft.operators.Curation.emailRe.replace("'", "''")
-    val ip = graft.operators.Curation.ipv4Re
-    val phone = graft.operators.Curation.phoneRe
-    s"""SELECT doc_id,
-       |  len(regexp_extract_all(text, '$email')) AS n_emails,
-       |  len(regexp_extract_all(text, '$ip')) AS n_ips,
-       |  len(regexp_extract_all(text, '$phone')) AS n_phones,
-       |  regexp_replace(regexp_replace(regexp_replace(text,
-       |    '$email', '[EMAIL]', 'g'), '$ip', '[IP]', 'g'),
-       |    '$phone', '[PHONE]', 'g') AS redacted
-       |FROM documents""".stripMargin
-  }
+  val stCurateSql: String = OracleSql.piiScanSql("documents")
 
   /** file-source streaming read of the embeddings fixture */
   private def readEmbStream(spark: SparkSession, d: String): DataFrame = {
@@ -790,33 +644,12 @@ object StreamingQueries {
     * table and the within-cell cosine verify restricted to
     * corpus × arrival pairs.
     */
-  val stSemanticSql: String = {
-    val kExpr = "(SELECT LEAST(GREATEST(4, (COUNT(*) + 124) // 125), " +
-      "200000) FROM embeddings WHERE vec_id < 250)"
-    ExtendedQueries.lloydCtes(kExpr, 3, "WHERE vec_id < 250", 64, "") + ",\n" +
-      """fd AS (
-        |  SELECT e.vec_id AS r, c.k,
-        |    SUM((CAST(e.embedding[c.i + 1] AS DOUBLE) - c.v) *
-        |        (CAST(e.embedding[c.i + 1] AS DOUBLE) - c.v)) AS dist
-        |  FROM embeddings e, c3 c GROUP BY 1, 2),
-        |fa AS (
-        |  SELECT r, k FROM (
-        |    SELECT r, k, ROW_NUMBER() OVER (PARTITION BY r ORDER BY dist, k) AS rk
-        |    FROM fd) z WHERE rk = 1),
-        |v AS MATERIALIZED (
-        |  SELECT e.vec_id, e.embedding, a.k
-        |  FROM embeddings e JOIN fa a ON e.vec_id = a.r),
-        |p AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.k AS cluster,
-        |    round((SELECT SUM(CAST(a.embedding[i] AS DOUBLE)*CAST(b.embedding[i] AS DOUBLE))
-        |     FROM generate_series(1, 64) g(i)) /
-        |    (sqrt((SELECT SUM(CAST(a.embedding[i] AS DOUBLE)*CAST(a.embedding[i] AS DOUBLE))
-        |           FROM generate_series(1, 64) g(i))) *
-        |     sqrt((SELECT SUM(CAST(b.embedding[i] AS DOUBLE)*CAST(b.embedding[i] AS DOUBLE))
-        |           FROM generate_series(1, 64) g(i)))), 6) AS cos
-        |  FROM v a JOIN v b ON a.k = b.k AND a.vec_id < 250 AND b.vec_id >= 250)
-        |SELECT id_a, id_b, cluster, cos FROM p WHERE cos >= 0.4""".stripMargin
-  }
+  val stSemanticSql: String =
+    OracleSql.lloydCtes(OracleSql.autoKExpr(" WHERE vec_id < 250"), 3,
+      "WHERE vec_id < 250") + ",\n" +
+      OracleSql.semanticPairsSql(64, 0.4,
+        pairs = "AND a.vec_id < 250 AND b.vec_id >= 250",
+        cellsMaterialized = true)
 
   /** The semantic index's FULL lifecycle in one standing pipeline
     * (VERDICT r14 next #3 — the ANN tiers' build/append/drift/rebuild
@@ -950,35 +783,14 @@ object StreamingQueries {
     * (batch 2 seeing only < 150) or an eagerly-visible append (batch 1
     * seeing [150, 250)) both fail the hash compare.
     */
-  val stSemanticLiveSql: String = {
-    val kExpr = "(SELECT LEAST(GREATEST(4, (COUNT(*) + 124) // 125), " +
-      "200000) FROM embeddings WHERE vec_id < 150)"
-    ExtendedQueries.lloydCtes(kExpr, 3, "WHERE vec_id < 150", 64, "") + ",\n" +
-      """fd AS (
-        |  SELECT e.vec_id AS r, c.k,
-        |    SUM((CAST(e.embedding[c.i + 1] AS DOUBLE) - c.v) *
-        |        (CAST(e.embedding[c.i + 1] AS DOUBLE) - c.v)) AS dist
-        |  FROM embeddings e, c3 c WHERE e.vec_id < 350 GROUP BY 1, 2),
-        |fa AS (
-        |  SELECT r, k FROM (
-        |    SELECT r, k, ROW_NUMBER() OVER (PARTITION BY r ORDER BY dist, k) AS rk
-        |    FROM fd) z WHERE rk = 1),
-        |v AS MATERIALIZED (
-        |  SELECT e.vec_id, e.embedding, a.k
-        |  FROM embeddings e JOIN fa a ON e.vec_id = a.r),
-        |p AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.k AS cluster,
-        |    round((SELECT SUM(CAST(a.embedding[i] AS DOUBLE)*CAST(b.embedding[i] AS DOUBLE))
-        |     FROM generate_series(1, 64) g(i)) /
-        |    (sqrt((SELECT SUM(CAST(a.embedding[i] AS DOUBLE)*CAST(a.embedding[i] AS DOUBLE))
-        |           FROM generate_series(1, 64) g(i))) *
-        |     sqrt((SELECT SUM(CAST(b.embedding[i] AS DOUBLE)*CAST(b.embedding[i] AS DOUBLE))
-        |           FROM generate_series(1, 64) g(i)))), 6) AS cos
-        |  FROM v a JOIN v b ON a.k = b.k
-        |  WHERE (b.vec_id >= 250 AND b.vec_id < 300 AND a.vec_id < 150)
-        |     OR (b.vec_id >= 300 AND b.vec_id < 350 AND a.vec_id < 250))
-        |SELECT id_a, id_b, cluster, cos FROM p WHERE cos >= 0.4""".stripMargin
-  }
+  val stSemanticLiveSql: String =
+    OracleSql.lloydCtes(OracleSql.autoKExpr(" WHERE vec_id < 150"), 3,
+      "WHERE vec_id < 150") + ",\n" +
+      OracleSql.semanticPairsSql(64, 0.4,
+        assignFrom = "embeddings e, c3 c WHERE e.vec_id < 350",
+        pairs = "\n  WHERE (b.vec_id >= 250 AND b.vec_id < 300 AND a.vec_id < 150)" +
+          "\n     OR (b.vec_id >= 300 AND b.vec_id < 350 AND a.vec_id < 250)",
+        cellsMaterialized = true)
 
   /** The LIVE-INDEX contract on the retrieval side (VERDICT r16 next
     * #2): a standing pipeline continuously SEARCHING a maintained
@@ -1061,23 +873,10 @@ object StreamingQueries {
   }
 
   val stLmScoreSql: String =
-    graft.operators.TextAnalysis.lmScoreSqlWhere("WHERE doc_id >= 250")
+    PipelineQueries.lmScoreSqlOver("documents WHERE doc_id >= 250")
 
   val stBudgetSql: String =
-    """WITH h AS (
-      |  SELECT doc_id,
-      |    CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-      |      AS BIGINT) % 8 AS shard,
-      |    len(string_split(text, ' ')) AS n_tokens
-      |  FROM documents),
-      |c AS (
-      |  SELECT doc_id, shard, n_tokens,
-      |    CAST(SUM(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-      |      AS cum_tokens
-      |  FROM h)
-      |SELECT doc_id, shard, n_tokens, cum_tokens FROM c
-      |WHERE cum_tokens <= 3750""".stripMargin
+    "WITH " + OracleSql.tokenBudgetSql("documents", 8, "3750", shuffled = false)
 
   /** Streaming domain-weighted mixture admission
     * ([[graft.operators.Curation.streamDomainTokenBudget]]) — the
@@ -1105,24 +904,7 @@ object StreamingQueries {
     * FLOOR(30000.0·w/8) matches the operator's IEEE-double op order.
     */
   val stDomainBudgetSql: String =
-    """WITH wts(domain, w) AS (
-      |  VALUES ('en', CAST(0.5 AS DOUBLE)), ('fr', CAST(0.2 AS DOUBLE)),
-      |         ('de', CAST(0.2 AS DOUBLE))),
-      |h AS (
-      |  SELECT doc_id, lang AS domain, w,
-      |    CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-      |      AS BIGINT) % 8 AS shard,
-      |    len(string_split(text, ' ')) AS n_tokens
-      |  FROM documents JOIN wts ON wts.domain = documents.lang
-      |  WHERE text IS NOT NULL),
-      |c AS (
-      |  SELECT doc_id, domain, w, shard, n_tokens,
-      |    CAST(SUM(n_tokens) OVER (PARTITION BY domain, shard ORDER BY doc_id
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-      |      AS cum_tokens
-      |  FROM h)
-      |SELECT doc_id, domain, shard, n_tokens, cum_tokens FROM c
-      |WHERE cum_tokens <= CAST(FLOOR(30000.0 * w / 8) AS BIGINT)""".stripMargin
+    CurationQueries.domainBudgetSqlOver(shuffled = false)
 
   /** The LM-gated curation capstone's STREAMING form — the composition
     * of [[stPipeAll]] (cross-modal keep vs three standing indexes),
@@ -1184,7 +966,7 @@ object StreamingQueries {
       val thr =
         if (thrRow.isNullAt(0)) Double.NegativeInfinity else thrRow.getDouble(0)
       // stage 2: gate arrivals per micro-batch, stage admitted docs
-      val arrivals = stArrivals(readDocStream(spark, d))
+      val arrivals = OracleSql.arrivals(readDocStream(spark, d))
       graft.operators.Dedup.streamProbe(arrivals, batch => {
         val keepIds = pipeFlagsBatch(batch, txtHashes, frmHashes, envFps)
           .filter(col("keep")).select(col("doc_id"))
@@ -1225,76 +1007,27 @@ object StreamingQueries {
        |${stPipeAllSql}
        |),
        |arr2 AS (
-       |  SELECT doc_id, text FROM documents WHERE doc_id >= 250
-       |  UNION ALL
-       |  SELECT doc_id + 10000 AS doc_id, text FROM documents
-       |  WHERE doc_id < 100),
+       |  ${OracleSql.arrivalsSql}),
        |kept2 AS MATERIALIZED (
        |  SELECT arr2.doc_id, arr2.text FROM arr2
        |  JOIN spa ON spa.doc_id = arr2.doc_id AND spa.keep),
-       |lrb AS MATERIALIZED (
-       |  SELECT bg, COUNT(*) AS cb FROM (
-       |    SELECT unnest(list_transform(range(1, len(string_split(text, ' '))),
-       |      i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]))
-       |      AS bg
-       |    FROM documents WHERE doc_id < 125) z GROUP BY 1),
-       |lru AS MATERIALIZED (
-       |  SELECT w1, COUNT(*) AS cu FROM (
-       |    SELECT unnest(string_split(text, ' ')) AS w1
-       |    FROM documents WHERE doc_id < 125) z GROUP BY 1),
-       |lvv AS (SELECT CAST(COUNT(*) AS DOUBLE) AS v FROM lru),
-       |ldc AS (
-       |  SELECT doc_id,
-       |    unnest(list_transform(range(1, len(string_split(text, ' '))),
-       |      i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]))
-       |      AS bg
-       |  FROM documents WHERE doc_id >= 125 AND doc_id < 250),
-       |lscc AS MATERIALIZED (
-       |  SELECT ldc.doc_id, round(AVG(
-       |    ln(CAST(COALESCE(lrb.cb, 0) + 1 AS DOUBLE) /
-       |       (COALESCE(lru.cu, 0) + (SELECT v FROM lvv)))), 6) AS lm_score
-       |  FROM ldc
-       |  LEFT JOIN lrb USING (bg)
-       |  LEFT JOIN lru ON lru.w1 = string_split(ldc.bg, ' ')[1]
-       |  GROUP BY 1),
-       |lthr AS (
-       |  SELECT MIN(lm_score) AS t FROM (
-       |    SELECT lm_score,
-       |      ROW_NUMBER() OVER (ORDER BY lm_score DESC, doc_id) AS rk
-       |    FROM lscc) z
-       |  WHERE rk <= CAST(ceil(0.5 * (SELECT COUNT(*) FROM lscc)) AS BIGINT)),
-       |lda AS (
-       |  SELECT doc_id,
-       |    unnest(list_transform(range(1, len(string_split(text, ' '))),
-       |      i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]))
-       |      AS bg
-       |  FROM kept2),
-       |lsa AS MATERIALIZED (
-       |  SELECT lda.doc_id, round(AVG(
-       |    ln(CAST(COALESCE(lrb.cb, 0) + 1 AS DOUBLE) /
-       |       (COALESCE(lru.cu, 0) + (SELECT v FROM lvv)))), 6) AS lm_score
-       |  FROM lda
-       |  LEFT JOIN lrb USING (bg)
-       |  LEFT JOIN lru ON lru.w1 = string_split(lda.bg, ' ')[1]
-       |  GROUP BY 1),
+       |${heldOutLmCtes},
+       |lthr AS (${OracleSql.rankCutSql("lscc", "lm_score", "0.5")}),
+       |${OracleSql.lmScoreCtes("lsa", "kept2", materialized = true)},
        |gated AS (
        |  SELECT kept2.doc_id, kept2.text FROM kept2
        |  JOIN lsa USING (doc_id) CROSS JOIN lthr
        |  WHERE lsa.lm_score >= lthr.t),
-       |bh AS (
-       |  SELECT doc_id,
-       |    CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-       |      AS BIGINT) % 8 AS shard,
-       |    len(string_split(text, ' ')) AS n_tokens
-       |  FROM gated),
-       |bc AS (
-       |  SELECT doc_id, shard, n_tokens,
-       |    CAST(SUM(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-       |      AS cum_tokens
-       |  FROM bh)
-       |SELECT doc_id, shard, n_tokens, cum_tokens FROM bc
-       |WHERE cum_tokens <= 3750""".stripMargin
+       |${OracleSql.tokenBudgetSql("gated", 8, "3750", shuffled = false)}""".stripMargin
+
+  /** The held-out LM state of the streaming capstones: the model on the
+    * corpus slice's first half (doc_id < 125) and its second half scored
+    * under it (`lscc`), the calibration set of the frozen cuts.
+    */
+  private lazy val heldOutLmCtes: String =
+    OracleSql.lmModelCtes("WHERE doc_id < 125", materialized = true) + ",\n" +
+      OracleSql.lmScoreCtes("lscc",
+        "documents WHERE doc_id >= 125 AND doc_id < 250", materialized = true)
 
   /** Self-growing ingest dedup ([[graft.operators.Dedup.ingestExactDedupBatch]])
     * — where [[stExact]] FLAGS arrivals against a frozen corpus index,
@@ -1307,10 +1040,7 @@ object StreamingQueries {
     */
   def stIngestDedup(spark0: SparkSession, d: String): DataFrame = {
     val spark = streamSession(spark0)
-    val s = readDocStream(spark, d)
-    val arrivals = s.select(col("doc_id"), col("text"))
-      .unionByName(s.filter(col("doc_id") < 100)
-        .select((col("doc_id") + 10000).as("doc_id"), col("text")))
+    val arrivals = OracleSql.replayed(readDocStream(spark, d))
     graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
       graft.operators.Dedup.streamProbe(arrivals,
         graft.operators.Dedup.ingestExactDedupBatch(_, cat, db, "ing",
@@ -1322,13 +1052,10 @@ object StreamingQueries {
     * full arrival log (originals + the offset-id re-crawl replay).
     */
   val stIngestDedupSql: String =
-    """WITH arr AS (
-      |  SELECT doc_id, text FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 10000 AS doc_id, text FROM documents
-      |  WHERE doc_id < 100)
-      |SELECT MIN(doc_id) AS doc_id FROM arr
-      |WHERE text IS NOT NULL GROUP BY text""".stripMargin
+    s"""WITH arr AS (
+       |  ${OracleSql.replaySql()})
+       |SELECT MIN(doc_id) AS doc_id FROM arr
+       |WHERE text IS NOT NULL GROUP BY text""".stripMargin
 
   /** Self-growing ingest NEAR-dup
     * ([[graft.operators.Dedup.ingestNearDupBatch]]) — the MinHash
@@ -1434,7 +1161,7 @@ object StreamingQueries {
 
   /** Oracle: the held-out model/calibration CTE shapes of
     * [[stPipeLmBudgetSql]] (train < 125, calibrate 125..249), TWO
-    * exact-rank tercile cuts with [[TextAnalysis.lmBucketsSql]]'s
+    * exact-rank tercile cuts with [[PipelineQueries.txtLmBucketsSql]]'s
     * GREATEST(1, ceil(i/3·n)) double math, arrival (≥ 250) scores under
     * the same model, the ties-to-the-better-tier CASE, then
     * [[stDomainBudgetSql]]'s per-(tier, shard) prefix sum in sequence
@@ -1445,86 +1172,24 @@ object StreamingQueries {
     * NULL-falls-through-to-tail.
     */
   val stPipeQualityMixSql: String =
-    """WITH lrb AS MATERIALIZED (
-      |  SELECT bg, COUNT(*) AS cb FROM (
-      |    SELECT unnest(list_transform(range(1, len(string_split(text, ' '))),
-      |      i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]))
-      |      AS bg
-      |    FROM documents WHERE doc_id < 125) z GROUP BY 1),
-      |lru AS MATERIALIZED (
-      |  SELECT w1, COUNT(*) AS cu FROM (
-      |    SELECT unnest(string_split(text, ' ')) AS w1
-      |    FROM documents WHERE doc_id < 125) z GROUP BY 1),
-      |lvv AS (SELECT CAST(COUNT(*) AS DOUBLE) AS v FROM lru),
-      |ldc AS (
-      |  SELECT doc_id,
-      |    unnest(list_transform(range(1, len(string_split(text, ' '))),
-      |      i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]))
-      |      AS bg
-      |  FROM documents WHERE doc_id >= 125 AND doc_id < 250),
-      |lscc AS MATERIALIZED (
-      |  SELECT ldc.doc_id, round(AVG(
-      |    ln(CAST(COALESCE(lrb.cb, 0) + 1 AS DOUBLE) /
-      |       (COALESCE(lru.cu, 0) + (SELECT v FROM lvv)))), 6) AS lm_score
-      |  FROM ldc
-      |  LEFT JOIN lrb USING (bg)
-      |  LEFT JOIN lru ON lru.w1 = string_split(ldc.bg, ' ')[1]
-      |  GROUP BY 1),
-      |crk AS MATERIALIZED (
-      |  SELECT lm_score,
-      |    ROW_NUMBER() OVER (ORDER BY lm_score DESC, doc_id) AS r
-      |  FROM lscc),
-      |cnn AS (SELECT COUNT(*) AS n FROM lscc),
-      |t1 AS (
-      |  SELECT MIN(lm_score) AS t FROM crk
-      |  WHERE r <= GREATEST(1,
-      |    CAST(ceil((1.0/3) * (SELECT n FROM cnn)) AS BIGINT))),
-      |t2 AS (
-      |  SELECT MIN(lm_score) AS t FROM crk
-      |  WHERE r <= GREATEST(1,
-      |    CAST(ceil((2.0/3) * (SELECT n FROM cnn)) AS BIGINT))),
-      |lda AS (
-      |  SELECT doc_id,
-      |    unnest(list_transform(range(1, len(string_split(text, ' '))),
-      |      i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]))
-      |      AS bg
-      |  FROM documents WHERE doc_id >= 250),
-      |lsa AS MATERIALIZED (
-      |  SELECT lda.doc_id, round(AVG(
-      |    ln(CAST(COALESCE(lrb.cb, 0) + 1 AS DOUBLE) /
-      |       (COALESCE(lru.cu, 0) + (SELECT v FROM lvv)))), 6) AS lm_score
-      |  FROM lda
-      |  LEFT JOIN lrb USING (bg)
-      |  LEFT JOIN lru ON lru.w1 = string_split(lda.bg, ' ')[1]
-      |  GROUP BY 1),
-      |tiered AS (
-      |  SELECT d.doc_id, d.text,
-      |    CASE WHEN lsa.lm_score >=
-      |           COALESCE((SELECT t FROM t1), CAST('-infinity' AS DOUBLE))
-      |         THEN '0'
-      |         WHEN lsa.lm_score >=
-      |           COALESCE((SELECT t FROM t2), CAST('-infinity' AS DOUBLE))
-      |         THEN '1'
-      |         ELSE '2' END AS tier
-      |  FROM documents d JOIN lsa ON lsa.doc_id = d.doc_id),
-      |wts(domain, w) AS (
-      |  VALUES ('0', CAST(0.6 AS DOUBLE)), ('1', CAST(0.3 AS DOUBLE)),
-      |         ('2', CAST(0.1 AS DOUBLE))),
-      |h AS (
-      |  SELECT doc_id, tier AS domain, w,
-      |    CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-      |      AS BIGINT) % 8 AS shard,
-      |    len(string_split(text, ' ')) AS n_tokens
-      |  FROM tiered JOIN wts ON wts.domain = tiered.tier
-      |  WHERE text IS NOT NULL),
-      |c AS (
-      |  SELECT doc_id, domain, w, shard, n_tokens,
-      |    CAST(SUM(n_tokens) OVER (PARTITION BY domain, shard ORDER BY doc_id
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-      |      AS cum_tokens
-      |  FROM h)
-      |SELECT doc_id, domain, shard, n_tokens, cum_tokens FROM c
-      |WHERE cum_tokens <= CAST(FLOOR(30000.0 * w / 8) AS BIGINT)""".stripMargin
+    s"""WITH $heldOutLmCtes,
+       |${OracleSql.tercileCutCtes("lscc", materialized = true)},
+       |${OracleSql.lmScoreCtes("lsa", "documents WHERE doc_id >= 250", materialized = true)},
+       |tiered AS (
+       |  SELECT d.doc_id, d.text,
+       |    CASE WHEN lsa.lm_score >=
+       |           COALESCE((SELECT t FROM t1), CAST('-infinity' AS DOUBLE))
+       |         THEN '0'
+       |         WHEN lsa.lm_score >=
+       |           COALESCE((SELECT t FROM t2), CAST('-infinity' AS DOUBLE))
+       |         THEN '1'
+       |         ELSE '2' END AS tier
+       |  FROM documents d JOIN lsa ON lsa.doc_id = d.doc_id),
+       |${OracleSql.weightsCte("0" -> 0.6, "1" -> 0.3, "2" -> 0.1)},
+       |""".stripMargin + OracleSql.tokenBudgetSql(
+      "tiered JOIN wts ON wts.domain = tiered.tier WHERE text IS NOT NULL",
+      8, "CAST(FLOOR(30000.0 * w / 8) AS BIGINT)",
+      shuffled = false, byDomain = true)
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     "st_hourly" -> stHourly,

@@ -214,7 +214,7 @@ class CatalogSpec extends GraftSpecBase {
     assert(sets.meta("db", "b").get.rows == 2 * rows)
   }
 
-  test("swapSet replaces the target; recoverSwap survives the interrupted-remove window") {
+  test("swapSetGroup replaces the target; recoverSwapGroup survives an interrupted remove") {
     import java.nio.file.Paths
     val r = tempRoot("graft-swap").toString
     val sets = new SetCatalog(spark, r)

@@ -3,8 +3,8 @@ package graft
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source-level guards: Scaladoc placement, one storage namespace and
-  * one stream start.
+/** Source-level guards: Scaladoc placement, one storage namespace, oracle
+  * text in graft.queries and one stream start.
   */
 class DocCommentSpec extends AnyFunSuite {
 
@@ -39,6 +39,19 @@ class DocCommentSpec extends AnyFunSuite {
       }
     }
     assert(hits.isEmpty, s"session-catalog use in src/main at: $hits")
+  }
+
+  test("src/main keeps DuckDB oracle text out of graft/operators") {
+    // every oracle is assembled in graft.queries from OracleSql's
+    // fragments; an operator carries no SQL-text member for one
+    val member = java.util.regex.Pattern.compile("\\b(?:val|def)\\s+\\w+Sql\\b")
+    val hits = mainSources.filter(_.toString.contains("graft/operators/"))
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if member.matcher(line).find() => s"$p:${i + 1}"
+        }
+      }
+    assert(hits.isEmpty, s"oracle SQL members under graft/operators at: $hits")
   }
 
   test("src/main starts micro-batch streams in Dedup.startBatches alone") {
