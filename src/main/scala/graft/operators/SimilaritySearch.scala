@@ -553,22 +553,14 @@ object SimilaritySearch {
     */
   private[graft] def codebookFrame(
       spark: SparkSession, centroids: Array[Array[Double]]): DataFrame = {
-    val df = centroidsFrame(spark, centroids)
+    import spark.implicits._
+    val df = centroids.zipWithIndex
+      .map { case (v, b) => (b.toLong, v.toSeq) }.toSeq
+      .toDF("bucket", "centroid")
       .withColumn(s"route_threshold_${sessionRouteThreshold(spark)}", lit(true))
     if (sessionKernel(spark, centroids.length) == TreeKernel)
       df.withColumn(TreeKernelMarker, lit(true))
     else df
-  }
-
-  /** The unmarked (bucket, centroid) rows of [[codebookFrame]] — as the
-    * IVF-PQ coarse codebook is stored: it assigns flat at any k.
-    */
-  private def centroidsFrame(
-      spark: SparkSession, centroids: Array[Array[Double]]): DataFrame = {
-    import spark.implicits._
-    centroids.zipWithIndex
-      .map { case (v, b) => (b.toLong, v.toSeq) }.toSeq
-      .toDF("bucket", "centroid")
   }
 
   /** Parse the persisted threshold back out of a centroids frame's
@@ -598,8 +590,20 @@ object SimilaritySearch {
     catalog.memoized(db, set, "index.codebook") {
       val df = catalog.scanSet(db, set)
       val cents = collectCentroids(df)
-      val threshold =
-        persistedRouteThreshold(df).getOrElse(sessionRouteThreshold(spark))
+      val threshold = persistedRouteThreshold(df).getOrElse {
+        // an unmarked IVF-PQ coarse codebook (next to its `_codebooks`)
+        // was assigned flat at any k, which the session threshold
+        // reproduces only up to itself
+        val session = sessionRouteThreshold(spark)
+        if (cents.length > session &&
+            catalog.meta(db, s"${name}_codebooks").isDefined)
+          throw new IndexRebuildRequiredException(
+            s"IVF-PQ index $db.$name: its ${cents.length}-cell coarse " +
+              "codebook carries no route_threshold marker and was assigned " +
+              s"flat, which this session's threshold $session would route " +
+              "— rebuild the index")
+        session
+      }
       Codebook.of(routeKernelFor(threshold, cents.length,
         df.columns.contains(TreeKernelMarker)), cents)
     }
@@ -727,26 +731,6 @@ object SimilaritySearch {
         df.filter(col(keys(i)).isin(touched.map(_(i)).distinct.toIndexedSeq: _*))
       }
     (pruned, broadcast(local))
-  }
-
-  /** Codebook trainer for the persisted-index build/rebuild paths,
-    * large-k-safe: seeds are sample rows, so the md5-ordered sample
-    * widens to 2k once k outgrows the default limit (a 200k-cell
-    * semantic codebook would otherwise silently cap at the 10000-row
-    * sample), and past the routing threshold the Lloyd steps route
-    * ([[trainCentroidsRouted]] — O(sample·√k·d) per iter, not
-    * O(sample·k·d)). At ANN-scale k (≤ threshold, sample ≤ default)
-    * this IS [[trainCentroids]] bit for bit — the regime every
-    * index oracle pins.
-    */
-  private[graft] def indexTrainCentroids(
-      spark: SparkSession, emb: DataFrame, k: Int, iters: Int,
-      idCol: String, vecCol: String,
-      knownRowCount: Long = 0L): Array[Array[Double]] = {
-    trainCentroidsRouted(
-      sampleVectors(emb, idCol, vecCol, math.max(10000, 2 * k),
-        knownRowCount),
-      k, iters, sessionRouteThreshold(spark))
   }
 
   /** Lloyd training with two-level routed assignment steps for LARGE k:
@@ -979,130 +963,6 @@ object SimilaritySearch {
       .filter(col("query_id") =!= col("neighbor_id")), k)
   }
 
-  /** Persist an IVF index into the set catalog: the codebook as a tiny
-    * `<name>_centroids` set and the assigned vectors (id, vector, norm,
-    * bucket) as `<name>_vectors` PARTITIONED BY bucket — one directory per
-    * coarse cell. Build once, search many times: the corpus is scanned
-    * once here, and every later search reads only the probed buckets'
-    * directories (partition pruning at the file listing, dynamic at run
-    * time via the broadcast probe join), never the whole index. This is
-    * the placement thesis applied to ANN: the layout, not the operator,
-    * makes the query cheap.
-    */
-  def buildIvfIndex(
-      spark: SparkSession, catalog: graft.storage.SetCatalog,
-      db: String, name: String, emb: DataFrame,
-      nCentroids: Int = 16, iters: Int = 3,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      knownRowCount: Long = 0L): Unit = {
-    // knownRowCount seeds the trainer's wide-sample prefilter when the
-    // caller already paid for a count (persistSemanticIndex's auto
-    // path, a catalog set's sidecar) — at semantic k the sample is 2k
-    // rows and an unseeded prefilter can pay extra relax scans of the
-    // whole corpus (ADVICE r17 / VERDICT r18 next #4)
-    val centroids = indexTrainCentroids(spark, emb, nCentroids, iters,
-      idCol, vecCol, knownRowCount)
-    catalog.createSet(db, s"${name}_centroids",
-      codebookFrame(spark, centroids), policy = "none")
-    // routed above the threshold (semantic-scale codebooks) — the SAME
-    // rule every later append/probe derives FROM THE PERSISTED MARKER,
-    // so assignments never mix even across sessions with different
-    // conf; grouped directories above the fanout bound, likewise
-    // schema-witnessed
-    val assign =
-      Codebook.of(sessionKernel(spark, centroids.length), centroids).assignUdf
-    val (partCol, laidOut) = cellLayout(spark,
-      vectorsWithNorm(emb, idCol, vecCol, assign(col(vecCol)).as("bucket")),
-      centroids.length)
-    catalog.createPartitionedSet(db, s"${name}_vectors", laidOut, partCol)
-    persistBuiltRows(catalog, db, name)
-  }
-
-  /** Incrementally extend a persisted IVF index: assign the NEW vectors
-    * with the index's EXISTING codebook and append them into the
-    * bucket-partitioned vector set — no retrain, no rewrite of standing
-    * data, one scan of the batch. This is how a standing ANN index keeps
-    * up with a continuously-embedding ingest pipeline; the codebook only
-    * needs retraining ([[rebuildIvfIndex]], which rewrites the WHOLE
-    * vector set — the cells are the corpus layout) when the corpus
-    * distribution drifts enough that cell sizes skew.
-    * Search results over build(A)+append(B) are IDENTICAL to an index
-    * whose vectors were all assigned under A's codebook in one pass —
-    * assignment depends only on (vector, codebook).
-    */
-  def appendToIvfIndex(
-      spark: SparkSession, catalog: graft.storage.SetCatalog,
-      db: String, name: String, newEmb: DataFrame,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    // the standing schemas are the witness for BOTH regimes: arrivals
-    // assign with the kernel the persisted codebook witnesses (never the
-    // session conf), and grouped sets append into their group
-    // directories under the modulus the build wrote — each parsed from
-    // column names, atomic with the data. Both come from the catalog
-    // memo: no codebook collect, no schema inference.
-    val assign = loadIndexCodebook(spark, catalog, db, name).assignUdf
-    val standing = catalog.scanSet(db, s"${name}_vectors")
-    val partCol = cellGroupColOf(standing).map(_._1).getOrElse("bucket")
-    // the cell id takes the standing read type (a directory-partition
-    // column infers int), so the appended columns read back exactly as
-    // the memoized schema and the memo carries over the append
-    catalog.appendToPartitionedSet(db, s"${name}_vectors",
-      withCellGroup(standing, vectorsWithNorm(newEmb, idCol, vecCol,
-        assign(col(vecCol)).cast(standing.schema("bucket").dataType)
-          .as("bucket"))),
-      partCol)
-  }
-
-  /** IVF form of [[rebuildPqIndex]]: retrain the coarse codebook from
-    * the standing vectors set (same md5-ordered sample a from-scratch
-    * [[ivfTopK]] trains on, so post-rebuild recall equals the retrained
-    * line exactly) and re-partition the corpus under the new cells. The
-    * rewrite is staged and swapped in by
-    * [[graft.storage.SetCatalog.replaceSets]] (marker-committed
-    * remove+rename) — source and destination are the same set here (the
-    * cells are the corpus layout), so an in-place overwrite would read
-    * what it is deleting.
-    *
-    * `nCentroids = 0` (the default) keeps the standing codebook's size;
-    * a positive value RE-SIZES the codebook at rebuild — the semantic
-    * tier's need, where k tracks corpus growth by the autoClusters rule
-    * ([[graft.operators.Dedup.rebuildSemanticIndex]] computes it from
-    * the sidecar row count and passes it here).
-    */
-  def rebuildIvfIndex(
-      spark: SparkSession, catalog: graft.storage.SetCatalog,
-      db: String, name: String, iters: Int = 3, nCentroids0: Int = 0): Unit = {
-    val vectors = s"${name}_vectors"
-    val cents = s"${name}_centroids"
-    // Stage the re-partitioned corpus AND the new codebook before
-    // touching live state — the whole-corpus rewrite (the expensive
-    // part; the cells ARE the corpus layout here) runs while searches
-    // still see the consistent old (centroids, vectors) pair. The two
-    // sets swap in as ONE group: a crash between them (new vectors
-    // under the old codebook) is FINISHED, not discarded, by the next
-    // replaceSets on them or by SetCatalog.recoverAll at catalog open.
-    catalog.replaceSets(db, Seq(vectors, cents)) { staged =>
-      val nCentroids = if (nCentroids0 > 0) nCentroids0
-        else catalog.scanSet(db, cents).count().toInt
-      val vecs = catalog.scanSet(db, vectors)
-        .select(col("neighbor_id"), col("n_vec"), col("n_nrm"))
-      // the standing corpus's sidecar already carries its rowcount —
-      // seed the wide-sample prefilter from it (ADVICE r17)
-      val centroids = indexTrainCentroids(spark, vecs, nCentroids, iters,
-        "neighbor_id", "n_vec", catalog.meta(db, vectors).map(_.rows).getOrElse(0L))
-      val assign =
-        Codebook.of(sessionKernel(spark, centroids.length), centroids).assignUdf
-      val (partCol, laidOut) = cellLayout(spark,
-        vecs.select(col("neighbor_id"), col("n_vec"), col("n_nrm"),
-          assign(col("n_vec")).as("bucket")),
-        centroids.length)
-      catalog.createPartitionedSet(db, staged(vectors), laidOut, partCol)
-      catalog.createSet(db, staged(cents), codebookFrame(spark, centroids),
-        policy = "none")
-    }
-    persistBuiltRows(catalog, db, name)
-  }
-
   /** Unit-normalize (sequential Σv² in index order, then sqrt — the
     * oracle computes the same sum); the zero vector stays zero and `v`
     * is not mutated. PQ here targets COSINE ranking: over unit vectors
@@ -1234,22 +1094,6 @@ object SimilaritySearch {
       .join(broadcast(queriesWithNorm(queries, idCol, vecCol)),
         Seq("query_id")), k)
 
-  /** Persist PQ sub-codebooks as the tiny set `set` (one row per
-    * (sub, centroid), components as an array) — shared by the PQ and
-    * IVF-PQ builds and rebuilds.
-    */
-  private def persistCodebooks(
-      spark: SparkSession, catalog: graft.storage.SetCatalog,
-      db: String, set: String,
-      codebooks: Array[Array[Array[Double]]]): Unit = {
-    import spark.implicits._
-    catalog.createSet(db, set,
-      codebooks.zipWithIndex.flatMap { case (cb, j) =>
-        cb.zipWithIndex.map { case (v, c) => (j, c.toLong, v.toSeq) }
-      }.toSeq.toDF("sub", "centroid", "components"),
-      policy = "none")
-  }
-
   /** Asymmetric-distance top-k with exact re-rank: encode the corpus once
     * (the compressed code table), broadcast the queries WITH their LUTs,
     * shortlist the `shortlist`·k best codes per query by ADC (sum of `m`
@@ -1318,74 +1162,211 @@ object SimilaritySearch {
     rerankExact(short, vectorsWithNorm(emb, idCol, vecCol), queries, k, idCol, vecCol)
   }
 
-  /** Persist an IVF-PQ index — the full production ANN layout at corpus
-    * scale: coarse centroids + PQ sub-codebooks (both tiny), the
-    * compressed codes PARTITIONED BY coarse bucket (one directory per
-    * cell — searches list only probed cells, and each cell's bytes are
-    * the CODES, not the vectors), and the full vectors hash-placed on id
-    * for the shortlist re-rank only. Probing an index of 100 TB of raw
-    * vectors reads nprobe/nCentroids of a ~1.5 TB code table plus
-    * shortlist·k·|queries| vector rows.
+  /** Lloyd iterations of a standing index's coarse codebook. */
+  private val coarseIters = 3
+
+  /** Lloyd iterations of a standing index's PQ sub-codebooks. */
+  private val pqIters = 2
+
+  /** The models of a standing index: a coarse codebook (IVF cells), PQ
+    * sub-codebooks, or both (IVF-PQ). Which ones an index has is which
+    * of `<name>_centroids` and `<name>_codebooks` exist; the rest of the
+    * lifecycle follows from that.
     */
-  def buildIvfPqIndex(
+  private final case class IndexModels(
+      coarse: Option[Codebook], books: Option[Array[Array[Array[Double]]]]) {
+
+    /** The set holding each vector's model output: its PQ codes under
+      * sub-codebooks, else its assigned vector.
+      */
+    def outputSet(name: String): String =
+      if (books.isDefined) s"${name}_codes" else s"${name}_vectors"
+
+    /** `emb` as [[outputSet]] rows: (neighbor_id, codes) under PQ
+      * sub-codebooks, else the [[vectorsWithNorm]] row; then the coarse
+      * `bucket`. A row depends only on (vector, models), so build(A) +
+      * append(B) is byte-identical to one pass over A∪B under A's models.
+      */
+    def output(emb: DataFrame, idCol: String, vecCol: String): DataFrame = {
+      val bucket = coarse.map(_.assignUdf(col(vecCol)).as("bucket")).toSeq
+      books.fold(vectorsWithNorm(emb, idCol, vecCol, bucket: _*)) { cb =>
+        emb.select(Seq(col(idCol).as("neighbor_id"),
+          pqEncodeUdf(cb)(col(vecCol)).as("codes")) ++ bucket: _*)
+      }
+    }
+  }
+
+  /** Train a standing index's models over ONE md5-ordered sample
+    * ([[sampleVectors]]): the coarse codebook when `nCentroids > 0`, PQ
+    * sub-codebooks when `m > 0`. The sample holds max(10000, 2k) rows —
+    * coarse seeds are sample rows, so it widens once k outgrows the
+    * default (a 200k-cell semantic codebook would otherwise cap at the
+    * 10000-row sample) — and past the routing threshold the coarse Lloyd
+    * steps route ([[trainCentroidsRouted]]: O(sample·√k·d) per
+    * iteration, not O(sample·k·d)). The coarse codebook assigns with the
+    * session's kernel, which [[codebookFrame]]'s markers witness. At
+    * ANN-scale k (≤ the threshold, sample ≤ the default) this IS
+    * [[trainCentroids]] and [[trainPqCodebooks]] bit for bit — the
+    * regime every index oracle pins. `knownRowCount` seeds the wide
+    * sample's prefilter when the caller already paid for a count.
+    */
+  private def trainIndexModels(
+      spark: SparkSession, emb: DataFrame, idCol: String, vecCol: String,
+      knownRowCount: Long, nCentroids: Int, m: Int, kSub: Int): IndexModels = {
+    val sample = sampleVectors(emb, idCol, vecCol,
+      math.max(10000, 2 * nCentroids), knownRowCount)
+    IndexModels(
+      Option.when(nCentroids > 0) {
+        val centroids = trainCentroidsRouted(sample, nCentroids, coarseIters,
+          sessionRouteThreshold(spark))
+        Codebook.of(sessionKernel(spark, centroids.length), centroids)
+      },
+      Option.when(m > 0)(trainPqCodebooksFromSample(sample, m, kSub, pqIters)))
+  }
+
+  /** The standing models of index `name`, each through the catalog memo
+    * ([[loadIndexCodebook]], [[loadPqCodebooks]]) when its set exists.
+    */
+  private def loadIndexModels(
+      spark: SparkSession, catalog: graft.storage.SetCatalog,
+      db: String, name: String): IndexModels = {
+    val models = IndexModels(
+      Option.when(catalog.meta(db, s"${name}_centroids").isDefined)(
+        loadIndexCodebook(spark, catalog, db, name)),
+      Option.when(catalog.meta(db, s"${name}_codebooks").isDefined)(
+        loadPqCodebooks(catalog, db, name)))
+    require(models.coarse.isDefined || models.books.isDefined,
+      s"no standing index $db.$name")
+    models
+  }
+
+  /** Write one generation of an index: `out` as the output set — in the
+    * cell layout ([[cellLayout]]) under a coarse codebook, else
+    * hash-placed on id over `buckets` partitions — then the models, the
+    * PQ sub-codebooks as one (sub, centroid, components) row each. Every
+    * set is written under the name `set` gives it (its staging name in
+    * a rebuild).
+    */
+  private def writeGeneration(
+      spark: SparkSession, catalog: graft.storage.SetCatalog,
+      db: String, name: String, models: IndexModels, out: DataFrame,
+      buckets: => Int, set: String => String): Unit = {
+    import spark.implicits._
+    val output = set(models.outputSet(name))
+    models.coarse match {
+      case Some(cb) =>
+        val (partCol, laidOut) = cellLayout(spark, out, cb.centroids.length)
+        catalog.createPartitionedSet(db, output, laidOut, partCol)
+      case None =>
+        catalog.createSet(db, output, out,
+          partitionColumn = Some("neighbor_id"), numPartitions = buckets)
+    }
+    models.coarse.foreach(cb => catalog.createSet(db, set(s"${name}_centroids"),
+      codebookFrame(spark, cb.centroids), policy = "none"))
+    models.books.foreach(cb => catalog.createSet(db, set(s"${name}_codebooks"),
+      cb.zipWithIndex.flatMap { case (sub, j) =>
+        sub.zipWithIndex.map { case (v, c) => (j, c.toLong, v.toSeq) }
+      }.toSeq.toDF("sub", "centroid", "components"),
+      policy = "none"))
+  }
+
+  /** Persist a standing ANN index into the set catalog — build once,
+    * search many times; the corpus is scanned here, and every later
+    * search reads only what its models select. The index trains a coarse
+    * codebook of `nCentroids` cells (IVF), `m` PQ sub-codebooks of
+    * `kSub` centroids (PQ), or both (IVF-PQ), each a tiny set
+    * (`<name>_centroids`, `<name>_codebooks`). Each vector's model
+    * output lands in one set:
+    *  - IVF: the assigned vectors (id, vector, norm, bucket) as
+    *    `<name>_vectors`;
+    *  - PQ and IVF-PQ: the codes as `<name>_codes` (the compressed scan
+    *    table — at 100 TB of vectors the ~1.5 TB ADC actually reads,
+    *    per Jégou et al., TPAMI 2011), next to the full vectors as
+    *    `<name>_vectors`, hash-placed on id and touched only by the
+    *    shortlist re-rank.
+    * Under a coarse codebook the output set is PARTITIONED BY cell
+    * ([[cellLayout]]) — a probe lists only its cells' directories, the
+    * placement thesis applied to ANN: the layout, not the operator, makes
+    * the query cheap. Otherwise it is hash-placed on id, and every
+    * hash-placed set takes one bucket count — [[Dedup.indexBuckets]]
+    * (the advisor's sizing when one is given) over the corpus rowcount.
+    * Pass `knownRowCount` when the caller already paid for a count; it
+    * also seeds the trainer's wide-sample prefilter.
+    */
+  def buildIndex(
       spark: SparkSession, catalog: graft.storage.SetCatalog,
       db: String, name: String, emb: DataFrame,
-      nCentroids: Int = 16, m: Int = 16, kSub: Int = 16, iters: Int = 2,
+      nCentroids: Int = 0, m: Int = 0, kSub: Int = 16,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      numBuckets: Int = 0,
       advisor: Option[graft.advisor.PlacementAdvisor] = None,
-      targetRowsPerBucket: Long = 1L << 22): Unit = {
-    // ONE sample scan feeds both trainers (see sampleVectors)
-    val sample = sampleVectors(emb, idCol, vecCol, 10000)
-    val centroids = trainCentroidsFromSample(sample, nCentroids, iters = 3)
-    val codebooks = trainPqCodebooksFromSample(sample, m, kSub, iters)
-    catalog.createSet(db, s"${name}_centroids",
-      centroidsFrame(spark, centroids), policy = "none")
-    persistCodebooks(spark, catalog, db, s"${name}_codebooks", codebooks)
-    val assign = Codebook.flat(centroids).assignUdf
-    val encode = pqEncodeUdf(codebooks)
-    catalog.createPartitionedSet(db, s"${name}_codes",
-      emb.select(col(idCol).as("neighbor_id"), encode(col(vecCol)).as("codes"),
-        assign(col(vecCol)).as("bucket")),
-      "bucket")
-    // the vectors set is hash-placed on id and corpus-sized — its bucket
-    // count takes the index builders' sizing rule (Dedup.indexBuckets)
-    // over the corpus rowcount; the CODES layout needs no count: it is
-    // directory-partitioned by coarse cell, where nCentroids IS the
-    // layout. The rowcount comes off the just-written code set's sidecar
-    // (one code row per corpus vector, counted by its post-write footer
-    // pass) — NOT an extra emb.count() scan of the whole corpus.
-    val n = Dedup.indexBuckets(numBuckets, advisor, s"$db.${name}_vectors",
-      catalog.meta(db, s"${name}_codes").map(_.rows).getOrElse(emb.count()),
+      targetRowsPerBucket: Long = 1L << 22,
+      knownRowCount: Long = 0L): Unit = {
+    require(nCentroids > 0 || m > 0,
+      "an index trains a coarse codebook (nCentroids), PQ sub-codebooks (m) or both")
+    val models = trainIndexModels(spark, emb, idCol, vecCol, knownRowCount,
+      nCentroids, m, kSub)
+    val out = models.outputSet(name)
+    val vectors = s"${name}_vectors"
+    // sized under the first hash-placed set's name; a cell-laid-out code
+    // set is written first, and its sidecar carries the corpus rowcount
+    // (one code row per vector) — no extra count of the corpus
+    lazy val buckets = Dedup.indexBuckets(0, advisor,
+      s"$db.${if (models.coarse.isDefined) vectors else out}",
+      if (knownRowCount > 0) knownRowCount
+      else if (models.coarse.isDefined) catalog.meta(db, out).get.rows
+      else emb.count(),
       targetRowsPerBucket)
-    catalog.createSet(db, s"${name}_vectors",
-      vectorsWithNorm(emb, idCol, vecCol),
-      partitionColumn = Some("neighbor_id"), numPartitions = n)
+    writeGeneration(spark, catalog, db, name, models,
+      models.output(emb, idCol, vecCol), buckets, identity)
+    if (out != vectors)
+      catalog.createSet(db, vectors, vectorsWithNorm(emb, idCol, vecCol),
+        partitionColumn = Some("neighbor_id"), numPartitions = buckets)
     persistBuiltRows(catalog, db, name)
   }
 
-  /** Incrementally extend a persisted IVF-PQ index: assign + encode the
-    * NEW vectors under the STANDING coarse centroids and codebooks,
-    * append into the bucket-partitioned code set and the vector set. No
-    * retrain, no rewrite; build(A)+append(B) ≡ one-pass under A's
-    * models, since both assignment and encoding depend only on
-    * (vector, model). Stale models code drifted vectors badly (at
-    * sf0.1, append-only IVF-PQ recall sank to 0.34 at 16 rotated
-    * replicas), so a standing pipeline calls [[rebuildIvfPqIndex]] once
+  /** An append side in the cell layout of a set partitioned by `partCol`
+    * (`bucket`, or `cell_group_N` above [[maxCellDirs]] — the sidecar
+    * names it): the group column on a grouped layout, and the partition
+    * column cast to int, the type directory inference reads it back as,
+    * so the set's schema memo carries over the append.
+    */
+  private def inCellLayout(partCol: String, df: DataFrame): DataFrame = {
+    val groups = partCol.stripPrefix("cell_group_")
+    val laidOut =
+      if (groups == partCol) df
+      else df.withColumn(partCol, pmod(col("bucket"), lit(groups.toLong)))
+    laidOut.withColumn(partCol, col(partCol).cast("int"))
+  }
+
+  /** Incrementally extend a persisted index: the NEW vectors take their
+    * model output under the STANDING models ([[IndexModels.output]]) and
+    * are appended — into their cell directories under a coarse codebook,
+    * with the full vectors beside PQ codes. No retrain, no rewrite of
+    * standing data, one scan of the batch: how a standing index keeps up
+    * with a continuously-embedding ingest pipeline. Arrivals assign with
+    * the kernel the persisted codebook witnesses, never the session
+    * conf. Stale models serve drifted vectors badly (at sf0.1,
+    * append-only IVF-PQ recall sank to 0.34 at 16 rotated replicas), so
+    * a standing pipeline calls [[rebuildIndex]] once
     * [[appendedDriftFraction]] grows large.
     */
-  def appendToIvfPqIndex(
+  def appendToIndex(
       spark: SparkSession, catalog: graft.storage.SetCatalog,
       db: String, name: String, newEmb: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val assign = loadCoarseCodebook(catalog, db, name).assignUdf
-    val encode = pqEncodeUdf(loadPqCodebooks(catalog, db, name))
-    catalog.appendToPartitionedSet(db, s"${name}_codes",
-      newEmb.select(col(idCol).as("neighbor_id"), encode(col(vecCol)).as("codes"),
-        assign(col(vecCol)).as("bucket")),
-      "bucket")
-    catalog.appendToSet(db, s"${name}_vectors",
-      vectorsWithNorm(newEmb, idCol, vecCol))
+    val models = loadIndexModels(spark, catalog, db, name)
+    val out = models.outputSet(name)
+    val rows = models.output(newEmb, idCol, vecCol)
+    if (models.coarse.isEmpty) catalog.appendToSet(db, out, rows)
+    else {
+      val partCol =
+        catalog.meta(db, out).flatMap(_.partitionColumn).getOrElse("bucket")
+      catalog.appendToPartitionedSet(db, out, inCellLayout(partCol, rows),
+        partCol)
+    }
+    if (models.books.isDefined)
+      catalog.appendToSet(db, s"${name}_vectors",
+        vectorsWithNorm(newEmb, idCol, vecCol))
   }
 
   /** Stamp the rows the standing models were trained over as the
@@ -1404,156 +1385,105 @@ object SimilaritySearch {
       catalog: graft.storage.SetCatalog, db: String, name: String): Double =
     catalog.growthSinceStamp(db, s"${name}_vectors", s"${name}_built")
 
-  /** Retrain a persisted PQ index's codebooks from its OWN standing
-    * vectors set and re-encode the code set in place — the rebuild the
-    * appendTo* scaladocs name as the answer once drift bites. Hyperparams
-    * (m, kSub) are read off the standing codebooks, layout off the codes
-    * sidecar, so the call needs nothing but the index name. Because
-    * [[sampleVectors]] orders by md5(id) — not physical row order — the
-    * retrain sample over the vectors set is IDENTICAL to a from-scratch
-    * [[pqTopK]] train over the same corpus, so post-rebuild recall equals
-    * the retrained line exactly (PqSpec pins the rebuild against the
-    * standing build).
+  /** Retrain a persisted index's models from its OWN standing vectors set
+    * and rewrite its output set under them — the answer once drift
+    * bites. The models an index has, PQ's (m, kSub) and the output set's
+    * hash layout are read off the standing sets, so the call needs
+    * nothing but the index name. Because [[sampleVectors]] orders by
+    * md5(id), not physical row order, the retrain sample equals a
+    * from-scratch build's over the same corpus, so a rebuild of an
+    * unchanged corpus reproduces its models exactly.
+    *
+    * Exactly the models and the output set are rewritten — for IVF that
+    * is the whole vector set, since the cells ARE the corpus layout; the
+    * vectors beside PQ codes are untouched. They are staged while
+    * searches still read the consistent old generation and swap in as
+    * ONE [[graft.storage.SetCatalog.replaceSets]] group, so a crash
+    * between them never leaves new output under old models. A swap an
+    * interrupted rebuild committed is finished first, so the sets present
+    * say which models the index has.
+    *
+    * `nCentroids = 0` (the default) keeps the standing codebook's size,
+    * read off its sidecar; a positive value RE-SIZES the coarse codebook
+    * — the semantic index's need, where k tracks corpus growth
+    * ([[graft.operators.Dedup.rebuildSemanticIndex]]).
     */
-  def rebuildPqIndex(
+  def rebuildIndex(
       spark: SparkSession, catalog: graft.storage.SetCatalog,
-      db: String, name: String, iters: Int = 2): Unit = {
-    val codes = s"${name}_codes"
-    val books = s"${name}_codebooks"
-    // Stage BOTH the data rewrite and the model write before touching
-    // live state: searches keep reading the consistent old
-    // (codebooks, codes) pair for the whole expensive part, and the
-    // two swap in as ONE group, so a crash between them never leaves
-    // new codes under old codebooks.
-    catalog.replaceSets(db, Seq(codes, books)) { staged =>
-      val old = loadPqCodebooks(catalog, db, name)
-      val vecs = catalog.scanSet(db, s"${name}_vectors")
-      val codebooks = trainPqCodebooks(vecs, old.length, old(0).length, iters,
-        "neighbor_id", "n_vec", knownRowCount =
-          catalog.meta(db, s"${name}_vectors").map(_.rows).getOrElse(0L))
-      val cm = catalog.meta(db, codes).getOrElse(throw new IllegalArgumentException(
-        s"rebuildPqIndex: no codes set for $db.$name"))
-      val encode = pqEncodeUdf(codebooks)
-      catalog.createSet(db, staged(codes),
-        vecs.select(col("neighbor_id"), encode(col("n_vec")).as("codes")),
-        partitionColumn = cm.partitionColumn, numPartitions = cm.numPartitions)
-      persistCodebooks(spark, catalog, db, staged(books), codebooks)
+      db: String, name: String, nCentroids: Int = 0): Unit = {
+    catalog.recoverAll(db, conventionSweep = false)
+    val vectors = s"${name}_vectors"
+    val cents = catalog.meta(db, s"${name}_centroids")
+    val books = catalog.meta(db, s"${name}_codebooks")
+    val out = if (books.isDefined) s"${name}_codes" else vectors
+    val modelSets = cents.map(_ => s"${name}_centroids").toSeq ++
+      books.map(_ => s"${name}_codebooks")
+    require(modelSets.nonEmpty, s"rebuildIndex: no standing index $db.$name")
+    catalog.replaceSets(db, out +: modelSets) { staged =>
+      val old = books.map(_ => loadPqCodebooks(catalog, db, name))
+      val vecs = catalog.scanSet(db, vectors)
+        .select(col("neighbor_id"), col("n_vec"))
+      val models = trainIndexModels(spark, vecs, "neighbor_id", "n_vec",
+        catalog.meta(db, vectors).map(_.rows).getOrElse(0L),
+        cents.fold(0)(c => if (nCentroids > 0) nCentroids else c.rows.toInt),
+        old.fold(0)(_.length), old.fold(0)(_(0).length))
+      writeGeneration(spark, catalog, db, name, models,
+        models.output(vecs, "neighbor_id", "n_vec"),
+        catalog.meta(db, out).get.numPartitions, staged)
     }
     persistBuiltRows(catalog, db, name)
   }
 
-  /** IVF-PQ form of [[rebuildPqIndex]]: retrain BOTH standing models
-    * (coarse centroids + sub-codebooks, one shared md5-ordered sample —
-    * the same sample [[ivfPqTopK]] trains on over this corpus), replace
-    * them, and rewrite the bucket-partitioned code set with fresh
-    * assignments + codes. One scan of the vectors set; the vectors set
-    * itself (hash-placed on id for the re-rank) is untouched.
+  /** Search a persisted index: load its models (tiny, through the catalog
+    * memo), pick candidates, then rank them.
+    *  - Candidates: under a coarse codebook, each query's `nprobe`
+    *    nearest cells, joined against the cell-partitioned output set
+    *    with STATIC pruning ([[localProbe]]: deterministic listing-level
+    *    pruning for any query-frame shape — DPP declines on local or
+    *    RDD-backed query frames); otherwise a broadcast cross join with
+    *    the whole code table.
+    *  - Ranking: under PQ sub-codebooks, the ADC shortlist of
+    *    `shortlist`·k codes per query ([[adcShortlist]]) re-ranked by
+    *    exact cosine against the vector set ([[rerankExact]]); otherwise
+    *    exact cosine over the candidates.
+    * Results equal [[ivfTopK]], [[pqTopK]] and [[ivfPqTopK]] over the
+    * same corpus: training, assignment, encoding, probing and scoring
+    * share the same deterministic kernels.
     */
-  def rebuildIvfPqIndex(
-      spark: SparkSession, catalog: graft.storage.SetCatalog,
-      db: String, name: String, iters: Int = 2): Unit = {
-    val codes = s"${name}_codes"
-    val cents = s"${name}_centroids"
-    val books = s"${name}_codebooks"
-    // Stage the data rewrite AND both model writes before touching live
-    // state (rebuildPqIndex's ordering rationale): the expensive
-    // re-encode scan runs while searches still see the consistent old
-    // (centroids, codebooks, codes) triple, and the three swap in as ONE
-    // group (everything staged re-derives from the untouched vectors set).
-    catalog.replaceSets(db, Seq(codes, cents, books)) { staged =>
-      val nCentroids = catalog.scanSet(db, cents).count().toInt
-      val old = loadPqCodebooks(catalog, db, name)
-      val vecs = catalog.scanSet(db, s"${name}_vectors")
-      val sample = sampleVectors(vecs, "neighbor_id", "n_vec", 10000)
-      val centroids = trainCentroidsFromSample(sample, nCentroids, iters = 3)
-      val codebooks =
-        trainPqCodebooksFromSample(sample, old.length, old(0).length, iters)
-      val assign = Codebook.flat(centroids).assignUdf
-      val encode = pqEncodeUdf(codebooks)
-      catalog.createPartitionedSet(db, staged(codes),
-        vecs.select(col("neighbor_id"), encode(col("n_vec")).as("codes"),
-          assign(col("n_vec")).as("bucket")),
-        "bucket")
-      catalog.createSet(db, staged(cents), centroidsFrame(spark, centroids),
-        policy = "none")
-      persistCodebooks(spark, catalog, db, staged(books), codebooks)
-    }
-    persistBuiltRows(catalog, db, name)
-  }
-
-  /** Search a persisted IVF-PQ index: load both models (tiny), compute
-    * each query's probe buckets and LUTs, join the broadcast probes
-    * against the bucket-partitioned CODE set (partition pruning at the
-    * directory listing — only probed cells are read, and what is read is
-    * codes), ADC-shortlist, then re-rank exactly against the vector set.
-    * Identical results to [[ivfPqTopK]] over the same corpus.
-    */
-  def searchIvfPqIndex(
+  def searchIndex(
       spark: SparkSession, catalog: graft.storage.SetCatalog,
       db: String, name: String, queries: DataFrame, k: Int,
       nprobe: Int = 4, shortlist: Int = 10,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val probe = loadCoarseCodebook(catalog, db, name).probeUdf(nprobe)
-    val lut = pqLutUdf(loadPqCodebooks(catalog, db, name))
-    val codes = catalog.scanSet(db, s"${name}_codes")
-    val bucketType = codes.schema("bucket").dataType
-    // static cell pruning on the bucket-partitioned code table — the
-    // probed cells as literals, deterministic at any query-frame shape
-    val (pruned, probes) = localProbe(codes,
-      queries.select(col(idCol).as("query_id"),
-        explode(probe(col(vecCol))).as("bucket"), lut(col(vecCol)).as("lut"))
-        .withColumn("bucket", col("bucket").cast(bucketType)))
-    val short = adcShortlist(pruned.join(probes, Seq("bucket")), shortlist, k)
-    rerankExact(short, catalog.scanSet(db, s"${name}_vectors"), queries, k, idCol, vecCol)
+    val models = loadIndexModels(spark, catalog, db, name)
+    val out = catalog.scanSet(db, models.outputSet(name))
+    val probe = models.coarse
+      .map(cb => explode(cb.probeUdf(nprobe)(col(vecCol))).as("bucket")).toSeq
+    val lut = models.books.map(cb => pqLutUdf(cb)(col(vecCol)).as("lut")).toSeq
+    val side =
+      if (models.books.isDefined)
+        queries.select(col(idCol).as("query_id") +: (probe ++ lut): _*)
+      else queriesWithNorm(queries, idCol, vecCol, probe: _*)
+    val pairs =
+      if (models.coarse.isEmpty) out.crossJoin(broadcast(side))
+      else {
+        // a directory-partition column reads back as inference types it
+        // (int), not as written (long): the probe side takes its type
+        val (pruned, probes) = localProbe(out, withCellGroup(out,
+          side.withColumn("bucket", col("bucket").cast(out.schema("bucket").dataType))))
+        pruned.join(probes, cellJoinKeys(out))
+      }
+    if (models.books.isEmpty)
+      cosineTopK(pairs.filter(col("query_id") =!= col("neighbor_id")), k)
+    else rerankExact(adcShortlist(pairs, shortlist, k),
+      catalog.scanSet(db, s"${name}_vectors"), queries, k, idCol, vecCol)
   }
 
-  /** Persist a PQ index into the set catalog: the sub-codebooks as a tiny
-    * `<name>_codebooks` set, the 64-bit codes as `<name>_codes` (the
-    * compressed scan table — at 100 TB of vectors this is the ~1.5 TB
-    * table ADC actually reads), and the full vectors as `<name>_vectors`
-    * hash-placed on id (touched only for the shortlist re-rank, an
-    * id-equi join). Build once, search many times — the codebooks are
-    * retrained only on distribution drift, like the IVF coarse
-    * quantizer.
-    */
-  def buildPqIndex(
-      spark: SparkSession, catalog: graft.storage.SetCatalog,
-      db: String, name: String, emb: DataFrame,
-      m: Int = 16, kSub: Int = 16, iters: Int = 2,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      numBuckets: Int = 0,
-      advisor: Option[graft.advisor.PlacementAdvisor] = None,
-      targetRowsPerBucket: Long = 1L << 22,
-      knownRowCount: Long = 0L): Unit = {
-    val codebooks = trainPqCodebooks(emb, m, kSub, iters, idCol, vecCol,
-      knownRowCount = knownRowCount)
-    persistCodebooks(spark, catalog, db, s"${name}_codebooks", codebooks)
-    // partition-count choice follows the other index builders
-    // (Dedup.indexBuckets over the corpus rowcount). Pass knownRowCount
-    // when the caller already paid for a count (e.g. the corpus came off
-    // a catalog set whose sidecar carries it) — both auto paths
-    // otherwise cost one extra counting pass here, since BOTH output
-    // sets need the bucket count before their writes (a bare parquet
-    // count is footer-cheap).
-    val n = Dedup.indexBuckets(numBuckets, advisor, s"$db.${name}_codes",
-      if (knownRowCount > 0) knownRowCount else emb.count(),
-      targetRowsPerBucket)
-    val encode = pqEncodeUdf(codebooks)
-    catalog.createSet(db, s"${name}_codes",
-      emb.select(col(idCol).as("neighbor_id"), encode(col(vecCol)).as("codes")),
-      partitionColumn = Some("neighbor_id"), numPartitions = n)
-    catalog.createSet(db, s"${name}_vectors",
-      vectorsWithNorm(emb, idCol, vecCol),
-      partitionColumn = Some("neighbor_id"), numPartitions = n)
-    persistBuiltRows(catalog, db, name)
-  }
-
-  /** The PQ sub-codebooks of a PQ or IVF-PQ index, (sub, centroid)
-    * ordered, through the catalog memo: one collect per codebooks
-    * generation, shared by every append, search and stream batch (as
-    * [[loadIndexCodebook]] is for the IVF codebook). Collected unordered
-    * and sorted on the driver — an orderBy costs a sampling job plus a
-    * shuffle.
+  /** The PQ sub-codebooks of an index, (sub, centroid) ordered, through
+    * the catalog memo: one collect per codebooks generation, shared by
+    * every append, search and stream batch (as [[loadIndexCodebook]] is
+    * for the coarse codebook). Collected unordered and sorted on the
+    * driver — an orderBy costs a sampling job plus a shuffle.
     */
   private def loadPqCodebooks(
       catalog: graft.storage.SetCatalog, db: String,
@@ -1567,83 +1497,5 @@ object SimilaritySearch {
         .groupBy(_._1).toSeq.sortBy(_._1)
         .map(_._2.map(_._3)).toArray
     }
-  }
-
-  /** The coarse codebook of an IVF-PQ index through the catalog memo,
-    * under its own key: IVF-PQ assigns with [[Codebook.flat]] at any k,
-    * so no routing witness is read here. The IVF and semantic indexes
-    * load through [[loadIndexCodebook]] instead, whose routing check
-    * would refuse a marker-less centroids set past the tree threshold.
-    */
-  private def loadCoarseCodebook(
-      catalog: graft.storage.SetCatalog, db: String, name: String): Codebook = {
-    val set = s"${name}_centroids"
-    catalog.memoized(db, set, "ivfpq.codebook") {
-      Codebook.flat(collectCentroids(catalog.scanSet(db, set)))
-    }
-  }
-
-  /** Incrementally extend a persisted PQ index: encode the NEW vectors
-    * under the standing codebooks and append codes + vectors — no
-    * retrain, no rewrite, one scan of the batch. A code depends only on
-    * (vector, codebooks), so build(A) + append(B) is byte-identical to a
-    * one-pass encode under A's codebooks — the continuous-ingest path.
-    */
-  def appendToPqIndex(
-      spark: SparkSession, catalog: graft.storage.SetCatalog,
-      db: String, name: String, newEmb: DataFrame,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val encode = pqEncodeUdf(loadPqCodebooks(catalog, db, name))
-    catalog.appendToSet(db, s"${name}_codes",
-      newEmb.select(col(idCol).as("neighbor_id"), encode(col(vecCol)).as("codes")))
-    catalog.appendToSet(db, s"${name}_vectors",
-      vectorsWithNorm(newEmb, idCol, vecCol))
-  }
-
-  /** Search a persisted PQ index: load the codebooks (tiny), ADC-scan
-    * the standing code table against the broadcast query LUTs, re-rank
-    * the shortlist by exact rounded cosine against the vectors set.
-    * Identical results to [[pqTopK]] over the same corpus — training,
-    * encoding, ADC, and scoring share the same deterministic kernels.
-    */
-  def searchPqIndex(
-      spark: SparkSession, catalog: graft.storage.SetCatalog,
-      db: String, name: String, queries: DataFrame, k: Int,
-      shortlist: Int = 10,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val lut = pqLutUdf(loadPqCodebooks(catalog, db, name))
-    val codes = catalog.scanSet(db, s"${name}_codes")
-    val q = queries.select(col(idCol).as("query_id"), lut(col(vecCol)).as("lut"))
-    val short = adcShortlist(codes.crossJoin(broadcast(q)), shortlist, k)
-    rerankExact(short, catalog.scanSet(db, s"${name}_vectors"), queries, k, idCol, vecCol)
-  }
-
-  /** Search a persisted IVF index: load the codebook (tiny), compute each
-    * query's `nprobe` buckets, and join the broadcast probes against the
-    * partitioned vector set — the bucket is the partition directory, so
-    * the scan lists only probed buckets (dynamic partition pruning from
-    * the broadcast). Results are identical to [[ivfTopK]] over the same
-    * corpus because codebook training, assignment, probing, and scoring
-    * share the same deterministic kernels.
-    */
-  def searchIvfIndex(
-      spark: SparkSession, catalog: graft.storage.SetCatalog,
-      db: String, name: String, queries: DataFrame, k: Int,
-      nprobe: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val probe = loadIndexCodebook(spark, catalog, db, name).probeUdf(nprobe)
-    val vectors = catalog.scanSet(db, s"${name}_vectors")
-    // partition-column type follows Hive directory inference (int), not
-    // the written long — cast the probe side to whatever came back
-    val bucketType = vectors.schema("bucket").dataType
-    // STATIC cell pruning (see localProbe): deterministic listing-level
-    // pruning for any query-frame shape — DPP declines on
-    // local/RDD-backed query frames and is redundant after this
-    val (pruned, probes) = localProbe(vectors, withCellGroup(vectors,
-      queriesWithNorm(queries, idCol, vecCol,
-        explode(probe(col(vecCol))).as("bucket"))
-        .withColumn("bucket", col("bucket").cast(bucketType))))
-    cosineTopK(pruned.join(probes, cellJoinKeys(vectors))
-      .filter(col("query_id") =!= col("neighbor_id")), k)
   }
 }

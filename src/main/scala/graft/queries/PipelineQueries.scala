@@ -796,8 +796,8 @@ object PipelineQueries {
   def simIvfPqIndexed(spark: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(spark, d)
     graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
-      SimilaritySearch.buildIvfPqIndex(spark, cat, db, "emb", emb)
-      SimilaritySearch.searchIvfPqIndex(spark, cat, db, "emb",
+      SimilaritySearch.buildIndex(spark, cat, db, "emb", emb, nCentroids = 16, m = 16)
+      SimilaritySearch.searchIndex(spark, cat, db, "emb",
         emb.filter(col("vec_id") < 10), k = 5)
     }
   }
@@ -817,8 +817,8 @@ object PipelineQueries {
   def simPqIndexed(spark: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(spark, d)
     graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
-      SimilaritySearch.buildPqIndex(spark, cat, db, "emb", emb)
-      SimilaritySearch.searchPqIndex(spark, cat, db, "emb",
+      SimilaritySearch.buildIndex(spark, cat, db, "emb", emb, m = 16)
+      SimilaritySearch.searchIndex(spark, cat, db, "emb",
         emb.filter(col("vec_id") < 10), k = 5)
     }
   }
@@ -833,15 +833,15 @@ object PipelineQueries {
   def simIvfIndexed(spark: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(spark, d)
     graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
-      SimilaritySearch.buildIvfIndex(spark, cat, db, "emb", emb)
-      SimilaritySearch.searchIvfIndex(spark, cat, db, "emb",
+      SimilaritySearch.buildIndex(spark, cat, db, "emb", emb, nCentroids = 16)
+      SimilaritySearch.searchIndex(spark, cat, db, "emb",
         emb.filter(col("vec_id") < 10), k = 5)
     }
   }
 
   /** Incremental-maintenance variant of [[simIvfIndexed]]: build the
     * index on the first half of the corpus, APPEND the second half with
-    * the standing codebook ([[SimilaritySearch.appendToIvfIndex]] — the
+    * the standing codebook ([[SimilaritySearch.appendToIndex]] — the
     * continuous-ingest path: no retrain, no rewrite), then search. The
     * oracle trains its Lloyd CTEs on the built half only and assigns the
     * whole corpus with that codebook, which is exactly what the appended
@@ -850,11 +850,11 @@ object PipelineQueries {
   def simIvfAppend(spark: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(spark, d)
     graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
-      SimilaritySearch.buildIvfIndex(spark, cat, db, "emb",
-        emb.filter(col("vec_id") < 250))
-      SimilaritySearch.appendToIvfIndex(spark, cat, db, "emb",
+      SimilaritySearch.buildIndex(spark, cat, db, "emb",
+        emb.filter(col("vec_id") < 250), nCentroids = 16)
+      SimilaritySearch.appendToIndex(spark, cat, db, "emb",
         emb.filter(col("vec_id") >= 250))
-      SimilaritySearch.searchIvfIndex(spark, cat, db, "emb",
+      SimilaritySearch.searchIndex(spark, cat, db, "emb",
         emb.filter(col("vec_id") < 10), k = 5)
     }
   }
@@ -1265,8 +1265,8 @@ object PipelineQueries {
       .select(col("doc_id").as("vec_id"), col("feature").as("embedding"))
       .localCheckpoint(true)
     graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
-      SimilaritySearch.buildIvfIndex(spark, cat, db, "img", feats)
-      SimilaritySearch.searchIvfIndex(spark, cat, db, "img",
+      SimilaritySearch.buildIndex(spark, cat, db, "img", feats, nCentroids = 16)
+      SimilaritySearch.searchIndex(spark, cat, db, "img",
         feats.filter(col("vec_id") < 10), k = 5)
     }
   }

@@ -540,7 +540,7 @@ object StreamingQueries {
   /** streaming IVF maintenance: the index is built on the first half of
     * the corpus, the second half ARRIVES as a stream and is appended per
     * micro-batch under the standing codebook
-    * ([[graft.operators.SimilaritySearch.appendToIvfIndex]] per batch), then
+    * ([[graft.operators.SimilaritySearch.appendToIndex]] per batch), then
     * the index is searched — ≡ the one-shot batch append, so the oracle
     * is sim_ivf_append's unchanged
     */
@@ -548,13 +548,13 @@ object StreamingQueries {
     val spark = streamSession(spark0)
     val emb = graft.model.Tables.embeddings(spark, d)
     graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
-      graft.operators.SimilaritySearch.buildIvfIndex(spark, cat, db, "emb",
-        emb.filter(col("vec_id") < 250))
+      graft.operators.SimilaritySearch.buildIndex(spark, cat, db, "emb",
+        emb.filter(col("vec_id") < 250), nCentroids = 16)
       graft.operators.Dedup.drainAndStop(graft.operators.Dedup.startBatches(
         readEmbStream(spark, d).filter(col("vec_id") >= 250)) { batch =>
-        graft.operators.SimilaritySearch.appendToIvfIndex(spark, cat, db, "emb", batch)
+        graft.operators.SimilaritySearch.appendToIndex(spark, cat, db, "emb", batch)
       })
-      graft.operators.SimilaritySearch.searchIvfIndex(
+      graft.operators.SimilaritySearch.searchIndex(
         spark, cat, db, "emb", emb.filter(col("vec_id") < 10), k = 5)
     }
   }
@@ -574,13 +574,13 @@ object StreamingQueries {
     val spark = streamSession(spark0)
     val emb = graft.model.Tables.embeddings(spark, d)
     graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
-      graft.operators.SimilaritySearch.buildPqIndex(spark, cat, db, "emb",
-        emb.filter(col("vec_id") < 250))
+      graft.operators.SimilaritySearch.buildIndex(spark, cat, db, "emb",
+        emb.filter(col("vec_id") < 250), m = 16)
       graft.operators.Dedup.drainAndStop(graft.operators.Dedup.startBatches(
         readEmbStream(spark, d).filter(col("vec_id") >= 250)) { batch =>
-        graft.operators.SimilaritySearch.appendToPqIndex(spark, cat, db, "emb", batch)
+        graft.operators.SimilaritySearch.appendToIndex(spark, cat, db, "emb", batch)
       })
-      graft.operators.SimilaritySearch.searchPqIndex(
+      graft.operators.SimilaritySearch.searchIndex(
         spark, cat, db, "emb", emb.filter(col("vec_id") < 10), k = 5)
     }
   }
@@ -598,13 +598,13 @@ object StreamingQueries {
     val spark = streamSession(spark0)
     val emb = graft.model.Tables.embeddings(spark, d)
     graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
-      graft.operators.SimilaritySearch.buildIvfPqIndex(spark, cat, db, "emb",
-        emb.filter(col("vec_id") < 250))
+      graft.operators.SimilaritySearch.buildIndex(spark, cat, db, "emb",
+        emb.filter(col("vec_id") < 250), nCentroids = 16, m = 16)
       graft.operators.Dedup.drainAndStop(graft.operators.Dedup.startBatches(
         readEmbStream(spark, d).filter(col("vec_id") >= 250)) { batch =>
-        graft.operators.SimilaritySearch.appendToIvfPqIndex(spark, cat, db, "emb", batch)
+        graft.operators.SimilaritySearch.appendToIndex(spark, cat, db, "emb", batch)
       })
-      graft.operators.SimilaritySearch.searchIvfPqIndex(
+      graft.operators.SimilaritySearch.searchIndex(
         spark, cat, db, "emb", emb.filter(col("vec_id") < 10), k = 5)
     }
   }
@@ -795,7 +795,7 @@ object StreamingQueries {
   /** The LIVE-INDEX contract on the retrieval side (VERDICT r16 next
     * #2): a standing pipeline continuously SEARCHING a maintained
     * IVF-PQ index — each query micro-batch runs
-    * [[graft.operators.SimilaritySearch.searchIvfPqIndex]] through the
+    * [[graft.operators.SimilaritySearch.searchIndex]] through the
     * shared probe harness ([[liveProbe]]), so the index is re-resolved
     * per batch. Build the full compressed index over vec_id < 150; query
     * micro-batch 1 ([250, 255)) searches the build generation; the
@@ -809,12 +809,12 @@ object StreamingQueries {
     val spark = streamSession(spark0)
     val emb = graft.model.Tables.embeddings(spark, d)
     graft.storage.SetCatalog.scratch(spark) { (cat, db) =>
-      graft.operators.SimilaritySearch.buildIvfPqIndex(spark, cat, db, "emb",
-        emb.filter(col("vec_id") < 150))
+      graft.operators.SimilaritySearch.buildIndex(spark, cat, db, "emb",
+        emb.filter(col("vec_id") < 150), nCentroids = 16, m = 16)
       liveProbe(emb, (250L, 255L), (255L, 260L),
-        batch => graft.operators.SimilaritySearch.searchIvfPqIndex(spark,
+        batch => graft.operators.SimilaritySearch.searchIndex(spark,
           cat, db, "emb", batch, k = 5)) {
-        graft.operators.SimilaritySearch.appendToIvfPqIndex(spark, cat,
+        graft.operators.SimilaritySearch.appendToIndex(spark, cat,
           db, "emb",
           emb.filter(col("vec_id") >= 150 && col("vec_id") < 250))
       }

@@ -177,8 +177,8 @@ class AdvisorSpec extends GraftSpecBase {
     // vectors sets of an advisor-built compressed index must both carry
     // recommendBuckets' count for the corpus rowcount
     val emb = Tables.embeddings(spark, sfDir)
-    graft.operators.SimilaritySearch.buildPqIndex(spark, cat, "adv", "pq",
-      emb, advisor = Some(adv), targetRowsPerBucket = 16)
+    graft.operators.SimilaritySearch.buildIndex(spark, cat, "adv", "pq",
+      emb, m = 16, advisor = Some(adv), targetRowsPerBucket = 16)
     val codesMeta = cat.meta("adv", "pq_codes").get
     val expCodes = adv.recommendBuckets("adv.pq_codes", codesMeta.rows, 16)
     assert(expCodes > 1, s"fixture should need >1 code bucket, got $expCodes")
@@ -187,15 +187,16 @@ class AdvisorSpec extends GraftSpecBase {
     assert(cat.meta("adv", "pq_vectors").get.numPartitions == expCodes,
       "codes/vectors partition counts diverged")
     // the advised layout still serves the search
-    val pqHits = graft.operators.SimilaritySearch.searchPqIndex(
+    val pqHits = graft.operators.SimilaritySearch.searchIndex(
       spark, cat, "adv", "pq", emb.filter(col("vec_id") < 3), k = 3)
     assert(pqHits.count() > 0, "search over the advised PQ index was empty")
 
     // IVF-PQ parity: the hash-placed VECTORS set takes the same advised
     // sizing (the codes set needs none — it is directory-partitioned by
     // coarse cell, where nCentroids is the layout)
-    graft.operators.SimilaritySearch.buildIvfPqIndex(spark, cat, "adv",
-      "ivfpq", emb, advisor = Some(adv), targetRowsPerBucket = 16)
+    graft.operators.SimilaritySearch.buildIndex(spark, cat, "adv",
+      "ivfpq", emb, nCentroids = 16, m = 16, advisor = Some(adv),
+      targetRowsPerBucket = 16)
     val ivfpqVec = cat.meta("adv", "ivfpq_vectors").get
     val expIvfpqVec = adv.recommendBuckets("adv.ivfpq_vectors", ivfpqVec.rows, 16)
     assert(expIvfpqVec > 1,
@@ -206,7 +207,7 @@ class AdvisorSpec extends GraftSpecBase {
     assert((expIvfpqVec & (expIvfpqVec - 1)) == 0)
     assert(cat.meta("adv", "ivfpq_codes").get.policy == "dirpart",
       "ivfpq codes set must stay directory-partitioned by coarse cell")
-    val ivfpqHits = graft.operators.SimilaritySearch.searchIvfPqIndex(
+    val ivfpqHits = graft.operators.SimilaritySearch.searchIndex(
       spark, cat, "adv", "ivfpq", emb.filter(col("vec_id") < 3), k = 3)
     assert(ivfpqHits.count() > 0,
       "search over the advised IVF-PQ index was empty")
@@ -363,7 +364,7 @@ class AdvisorSpec extends GraftSpecBase {
     val base = (1L to 20L).map(i => (i, s"v$i")).toDF("k", "v")
     cat.createPartitionedSet("db", "tgt", base.withColumn("b", $"k" % 2), "b")
     // the staged-rebuild swap: the stage holds the SAME logical rows
-    // under a NEW partitioning (rebuildIvfIndex's sequence: stage,
+    // under a NEW partitioning (an IVF rebuildIndex's sequence: stage,
     // remove original, rename over it)
     val want = cat.scanSet("db", "tgt")
       .select($"k", $"v").collect().map(_.toSeq).toSet

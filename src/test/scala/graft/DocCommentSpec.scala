@@ -54,23 +54,28 @@ class DocCommentSpec extends AnyFunSuite {
     assert(hits.isEmpty, s"oracle SQL members under graft/operators at: $hits")
   }
 
+  /** Each src/main line with the file and the `def` it sits under:
+    * the last `def` opened above it.
+    */
+  private lazy val ownedLines: List[(String, String)] = {
+    val defn = java.util.regex.Pattern.compile("\\bdef (\\w+)")
+    mainSources.flatMap { p =>
+      val lines = java.nio.file.Files.readAllLines(p).asScala.toList
+      val owners = lines.scanLeft("?") { (owner, line) =>
+        val m = defn.matcher(line)
+        if (m.find()) m.group(1) else owner
+      }.tail
+      lines.zip(owners.map(o => s"${p.getFileName}:$o"))
+    }
+  }
+
   test("src/main starts micro-batch streams in Dedup.startBatches alone") {
     // one stream lifecycle: every foreachBatch stream starts in
     // startBatches; the only other writeStreams are the memory-sink drain
     // and the parquet sink
     def sites(pattern: String): List[String] = {
       val hit = java.util.regex.Pattern.compile(pattern)
-      val defn = java.util.regex.Pattern.compile("\\bdef (\\w+)")
-      mainSources.flatMap { p =>
-        val lines = java.nio.file.Files.readAllLines(p).asScala.toList
-        val owners = lines.scanLeft("?") { (owner, line) =>
-          val m = defn.matcher(line)
-          if (m.find()) m.group(1) else owner
-        }.tail
-        lines.zip(owners).collect {
-          case (line, owner) if hit.matcher(line).find() => s"${p.getFileName}:$owner"
-        }
-      }
+      ownedLines.collect { case (line, owner) if hit.matcher(line).find() => owner }
     }
     assert(sites("\\.foreachBatch\\b") == List("Dedup.scala:startBatches"))
     val writeStreams = sites("\\.writeStream\\b")
@@ -99,5 +104,25 @@ class DocCommentSpec extends AnyFunSuite {
     val writes = java.nio.file.Files.readAllLines(catalog.head).asScala
       .zipWithIndex.collect { case (line, i) if writer.matcher(line).find() => i + 1 }
     assert(writes.isEmpty, s"SetCatalog.scala writes outside writeCounted at lines $writes")
+  }
+
+  test("src/main has one standing-index lifecycle and one coarse-codebook load") {
+    // buildIndex, appendToIndex, rebuildIndex and searchIndex serve every
+    // index kind; a kind-named copy would be a second lifecycle to keep
+    // in step
+    val kindNamed = java.util.regex.Pattern.compile(
+      "\\bdef (build|appendTo|rebuild|search)(Ivf|Pq|IvfPq)Index\\b")
+    val copies = ownedLines.collect {
+      case (line, owner) if kindNamed.matcher(line).find() => owner
+    }
+    assert(copies.isEmpty, s"kind-named lifecycle functions: $copies")
+    // a `_centroids` set decodes through loadIndexCodebook's memo alone:
+    // a second memoized load would skip its kernel and format checks
+    val centroidLoads = ownedLines.groupBy(_._2).collect {
+      case (owner, body) if body.exists(_._1.contains(".memoized(")) &&
+          body.exists(_._1.contains("_centroids")) => owner
+    }.toList
+    assert(centroidLoads == List("SimilaritySearch.scala:loadIndexCodebook"),
+      s"memoized `_centroids` loads: $centroidLoads")
   }
 }

@@ -10,8 +10,8 @@ class IvfIndexSpec extends GraftSpecBase {
   private lazy val (cat, built) = {
     val root = tempRoot("graft-ivf-spec").toString
     val c = new SetCatalog(spark, root)
-    SimilaritySearch.buildIvfIndex(spark, c, "idx", "emb",
-      Tables.embeddings(spark, sfDir))
+    SimilaritySearch.buildIndex(spark, c, "idx", "emb",
+      Tables.embeddings(spark, sfDir), nCentroids = 16)
     (c, true)
   }
 
@@ -20,7 +20,7 @@ class IvfIndexSpec extends GraftSpecBase {
     val emb = Tables.embeddings(spark, sfDir)
     val queries = emb.filter(col("vec_id") < 10)
     val fromIndex = SimilaritySearch
-      .searchIvfIndex(spark, cat, "idx", "emb", queries, k = 5)
+      .searchIndex(spark, cat, "idx", "emb", queries, k = 5)
       .collect().map(_.toSeq).toSet
     val inMemory = SimilaritySearch
       .ivfTopK(spark, emb, queries, k = 5)
@@ -34,7 +34,7 @@ class IvfIndexSpec extends GraftSpecBase {
     assert(built)
     val queries = Tables.embeddings(spark, sfDir).filter(col("vec_id") < 2)
     val plan = SimilaritySearch
-      .searchIvfIndex(spark, cat, "idx", "emb", queries, k = 5)
+      .searchIndex(spark, cat, "idx", "emb", queries, k = 5)
       .queryExecution.executedPlan.toString
     // round 16: pruning is STATIC (touched cells as literal partition
     // filters — deterministic for any query-frame shape, where DPP's
@@ -52,17 +52,17 @@ class IvfIndexSpec extends GraftSpecBase {
 
     val rootApp = tempRoot("graft-ivf-app").toString
     val capp = new SetCatalog(spark, rootApp)
-    SimilaritySearch.buildIvfIndex(spark, capp, "idx", "emb", a)
-    SimilaritySearch.appendToIvfIndex(spark, capp, "idx", "emb", b)
+    SimilaritySearch.buildIndex(spark, capp, "idx", "emb", a, nCentroids = 16)
+    SimilaritySearch.appendToIndex(spark, capp, "idx", "emb", b)
     val appended = SimilaritySearch
-      .searchIvfIndex(spark, capp, "idx", "emb", queries, k = 5)
+      .searchIndex(spark, capp, "idx", "emb", queries, k = 5)
       .collect().map(_.toSeq).toSet
 
     // reference: same codebook (trained on A), the WHOLE corpus assigned
     // in one pass — rebuilt by hand from the public kernels
     val rootRef = tempRoot("graft-ivf-ref").toString
     val cref = new SetCatalog(spark, rootRef)
-    SimilaritySearch.buildIvfIndex(spark, cref, "idx", "emb", a)
+    SimilaritySearch.buildIndex(spark, cref, "idx", "emb", a, nCentroids = 16)
     val centroids = cref.scanSet("idx", "emb_centroids")
       .orderBy(col("bucket")).collect().map(_.getSeq[Double](1).toArray)
     val assign = SimilaritySearch.Codebook.flat(centroids).assignUdf
@@ -73,7 +73,7 @@ class IvfIndexSpec extends GraftSpecBase {
         assign(col("embedding")).as("bucket")),
       "bucket")
     val onePass = SimilaritySearch
-      .searchIvfIndex(spark, cref, "idx", "emb", queries, k = 5)
+      .searchIndex(spark, cref, "idx", "emb", queries, k = 5)
       .collect().map(_.toSeq).toSet
 
     assert(appended == onePass && appended.nonEmpty)
@@ -86,12 +86,12 @@ class IvfIndexSpec extends GraftSpecBase {
     val queries = emb.filter(col("vec_id") < 5)
     val root = tempRoot("graft-ivf-stale").toString
     val c = new SetCatalog(spark, root)
-    SimilaritySearch.buildIvfIndex(spark, c, "idx", "emb", emb)
+    SimilaritySearch.buildIndex(spark, c, "idx", "emb", emb, nCentroids = 16)
     // simulate a rebuild aborted BEFORE its swaps: a finished (here,
     // garbage) staging set sits next to the live one
     c.createSet("idx", "emb_centroids_rebuild",
       emb.limit(1).select(col("vec_id").as("junk")), policy = "none")
-    SimilaritySearch.rebuildIvfIndex(spark, c, "idx", "emb")
+    SimilaritySearch.rebuildIndex(spark, c, "idx", "emb")
     // staging was discarded and re-derived, not swapped in as-is
     assert(c.meta("idx", "emb_centroids_rebuild").isEmpty &&
       c.meta("idx", "emb_vectors_rebuild").isEmpty)
@@ -99,7 +99,7 @@ class IvfIndexSpec extends GraftSpecBase {
       Seq("bucket", "centroid",
         s"route_threshold_${graft.operators.Dedup.routeThreshold}"))
     val hits = SimilaritySearch
-      .searchIvfIndex(spark, c, "idx", "emb", queries, k = 5)
+      .searchIndex(spark, c, "idx", "emb", queries, k = 5)
     assert(hits.count() == 5 * queries.count())
   }
 
@@ -108,9 +108,9 @@ class IvfIndexSpec extends GraftSpecBase {
     val queries = emb.filter(col("vec_id") < 5)
     val root = tempRoot("graft-ivf-crash").toString
     val c = new SetCatalog(spark, root)
-    SimilaritySearch.buildIvfIndex(spark, c, "idx", "emb", emb)
+    SimilaritySearch.buildIndex(spark, c, "idx", "emb", emb, nCentroids = 16)
     val expect = SimilaritySearch
-      .searchIvfIndex(spark, c, "idx", "emb", queries, k = 5)
+      .searchIndex(spark, c, "idx", "emb", queries, k = 5)
       .collect().map(_.toSeq).toSet
     // simulate the swap's crash window: the finished staging set is the
     // ONLY copy of the vectors (live set already removed, rename not run)
@@ -120,11 +120,11 @@ class IvfIndexSpec extends GraftSpecBase {
     assert(c.meta("idx", "emb_vectors").isEmpty)
     // re-running the rebuild must first complete the interrupted swap,
     // then converge to a consistent, searchable index
-    SimilaritySearch.rebuildIvfIndex(spark, c, "idx", "emb")
+    SimilaritySearch.rebuildIndex(spark, c, "idx", "emb")
     assert(c.meta("idx", "emb_vectors").isDefined &&
       c.meta("idx", "emb_vectors_rebuild").isEmpty)
     val got = SimilaritySearch
-      .searchIvfIndex(spark, c, "idx", "emb", queries, k = 5)
+      .searchIndex(spark, c, "idx", "emb", queries, k = 5)
       .collect().map(_.toSeq).toSet
     // retraining over the identical corpus under the md5-ordered sample
     // reproduces the same codebook, hence the same search results
@@ -253,7 +253,7 @@ class IvfIndexSpec extends GraftSpecBase {
     spark.conf.set("spark.graft.ann.maxCellDirs", "3")
     try {
       // k = 16 cells > 3 dirs -> grouped layout (bucket mod 3)
-      SimilaritySearch.buildIvfIndex(spark, c, "idx", "grp", emb)
+      SimilaritySearch.buildIndex(spark, c, "idx", "grp", emb, nCentroids = 16)
       // fanout is the bound, not k: exactly <= 3 partition directories
       import scala.jdk.CollectionConverters._
       val dirs = java.nio.file.Files.list(
@@ -264,7 +264,7 @@ class IvfIndexSpec extends GraftSpecBase {
       // identical results to the in-memory IVF over the same corpus:
       // grouping changes STORAGE, never assignment or scoring
       val fromIndex = SimilaritySearch
-        .searchIvfIndex(spark, c, "idx", "grp", queries, k = 5)
+        .searchIndex(spark, c, "idx", "grp", queries, k = 5)
         .collect().map(_.toSeq).toSet
       val inMemory = SimilaritySearch
         .ivfTopK(spark, emb, queries, k = 5)
@@ -273,7 +273,7 @@ class IvfIndexSpec extends GraftSpecBase {
       // the probe still prunes at the listing, now on the group
       // directory — as static literals (round 16)
       val plan = SimilaritySearch
-        .searchIvfIndex(spark, c, "idx", "grp", queries, k = 5)
+        .searchIndex(spark, c, "idx", "grp", queries, k = 5)
         .queryExecution.executedPlan.toString
       assert(plan.matches(
           "(?s).*PartitionFilters: \\[[^\\]]*cell_group_3[^\\]]* IN(SET)?[ (].*"),
@@ -282,7 +282,7 @@ class IvfIndexSpec extends GraftSpecBase {
       // witness is the schema, not session state) and the semantic
       // probe path shares it: a probe of an appended vector's value
       // finds it at cos 1
-      SimilaritySearch.appendToIvfIndex(spark, c, "idx", "grp",
+      SimilaritySearch.appendToIndex(spark, c, "idx", "grp",
         emb.filter(col("vec_id") < 5)
           .select((col("vec_id") + 2000L).as("vec_id"), col("embedding")))
       val pairs = graft.operators.Dedup.semanticBatchPairs(
@@ -311,7 +311,7 @@ class IvfIndexSpec extends GraftSpecBase {
     val c = new SetCatalog(spark, root)
     spark.conf.set("spark.graft.ann.maxCellDirs", "3")
     try {
-      SimilaritySearch.buildIvfIndex(spark, c, "idx", "ex", emb)
+      SimilaritySearch.buildIndex(spark, c, "idx", "ex", emb, nCentroids = 16)
       val standing = c.scanSet("idx", "ex_vectors")
       // pick two real cells that SHARE a group residue with cells they
       // must not admit: buckets b and b+3 share cell_group_3
@@ -342,7 +342,7 @@ class IvfIndexSpec extends GraftSpecBase {
     val c = new SetCatalog(spark, root)
     // build in a session whose threshold (4) routes at k = 9
     spark.conf.set("spark.graft.ann.routeThreshold", "4")
-    try SimilaritySearch.buildIvfIndex(spark, c, "idx", "rt", emb,
+    try SimilaritySearch.buildIndex(spark, c, "idx", "rt", emb,
       nCentroids = 9)
     finally spark.conf.unset("spark.graft.ann.routeThreshold")
     // the build threshold travels with the codebook as a schema witness;
@@ -362,7 +362,7 @@ class IvfIndexSpec extends GraftSpecBase {
     // lifecycle in the conf-less session: appended vectors assign under
     // the index's OWN threshold, so identity probes find both the built
     // and the appended copies
-    SimilaritySearch.appendToIvfIndex(spark, c, "idx", "rt",
+    SimilaritySearch.appendToIndex(spark, c, "idx", "rt",
       emb.filter(col("vec_id") < 5)
         .select((col("vec_id") + 2000L).as("vec_id"), col("embedding")))
     val probe = graft.operators.Dedup.semanticProbeFn(
@@ -375,7 +375,7 @@ class IvfIndexSpec extends GraftSpecBase {
       s"cross-session probe lost identity pairs: $got")
     // a rebuild is a new generation: it persists the REBUILD session's
     // threshold (the default here) with the new codebook
-    SimilaritySearch.rebuildIvfIndex(spark, c, "idx", "rt")
+    SimilaritySearch.rebuildIndex(spark, c, "idx", "rt")
     assert(SimilaritySearch
       .persistedRouteThreshold(c.scanSet("idx", "rt_centroids"))
       .contains(graft.operators.Dedup.routeThreshold))

@@ -38,10 +38,10 @@ class PqSpec extends GraftSpecBase {
   test("searching the persisted PQ index equals the in-memory pqTopK") {
     val root = tempRoot("graft-pq-spec")
     val cat = new graft.storage.SetCatalog(spark, root.toString)
-    SimilaritySearch.buildPqIndex(spark, cat, "idx", "emb", emb)
+    SimilaritySearch.buildIndex(spark, cat, "idx", "emb", emb, m = 16)
     val queries = emb.filter(col("vec_id") < 10)
     val fromIndex = SimilaritySearch
-      .searchPqIndex(spark, cat, "idx", "emb", queries, k = 5)
+      .searchIndex(spark, cat, "idx", "emb", queries, k = 5)
       .collect().map(_.toSeq).toSet
     val inMemory = SimilaritySearch.pqTopK(spark, emb, queries, k = 5)
       .collect().map(_.toSeq).toSet
@@ -55,8 +55,8 @@ class PqSpec extends GraftSpecBase {
     val root = tempRoot("graft-pq-a")
     val cat = new graft.storage.SetCatalog(spark, root.toString)
     val half = emb.filter(col("vec_id") < 100)
-    SimilaritySearch.buildPqIndex(spark, cat, "idx", "emb", half)
-    SimilaritySearch.appendToPqIndex(spark, cat, "idx", "emb",
+    SimilaritySearch.buildIndex(spark, cat, "idx", "emb", half, m = 16)
+    SimilaritySearch.appendToIndex(spark, cat, "idx", "emb",
       emb.filter(col("vec_id") >= 100))
     val cbA = SimilaritySearch.trainPqCodebooks(half, m = 16, kSub = 16, iters = 2)
     val codesIdx = cat.scanSet("idx", "emb_codes")
@@ -75,9 +75,9 @@ class PqSpec extends GraftSpecBase {
   test("persisted IVF-PQ index equals in-memory ivfPqTopK and prunes code partitions") {
     val root = tempRoot("graft-ivfpq-spec")
     val cat = new graft.storage.SetCatalog(spark, root.toString)
-    SimilaritySearch.buildIvfPqIndex(spark, cat, "idx", "emb", emb)
+    SimilaritySearch.buildIndex(spark, cat, "idx", "emb", emb, nCentroids = 16, m = 16)
     val queries = emb.filter(col("vec_id") < 10)
-    val search = SimilaritySearch.searchIvfPqIndex(spark, cat, "idx", "emb", queries, k = 5)
+    val search = SimilaritySearch.searchIndex(spark, cat, "idx", "emb", queries, k = 5)
     val fromIndex = search.collect().map(_.toSeq).toSet
     val inMemory = SimilaritySearch.ivfPqTopK(spark, emb, queries, k = 5)
       .collect().map(_.toSeq).toSet
@@ -116,26 +116,19 @@ class PqSpec extends GraftSpecBase {
     // models exactly — search results must be identical, and every
     // `_rebuild` staging set must be gone after the swap
     val queries = emb.filter(col("vec_id") < 5)
-    for ((family, build, rebuild, search, stages) <- Seq(
-      ("pq",
-        () => SimilaritySearch.buildPqIndex(spark, cat, "idx", "p", emb),
-        () => SimilaritySearch.rebuildPqIndex(spark, cat, "idx", "p"),
-        () => SimilaritySearch.searchPqIndex(spark, cat, "idx", "p", queries, 5),
-        Seq("p_codes", "p_codebooks")),
-      ("ivfpq",
-        () => SimilaritySearch.buildIvfPqIndex(spark, cat, "idx", "q", emb),
-        () => SimilaritySearch.rebuildIvfPqIndex(spark, cat, "idx", "q"),
-        () => SimilaritySearch.searchIvfPqIndex(spark, cat, "idx", "q", queries, 5),
-        Seq("q_codes", "q_centroids", "q_codebooks")))) {
-      build()
+    for ((family, name, nCentroids, stages) <- Seq(
+      ("pq", "p", 0, Seq("p_codes", "p_codebooks")),
+      ("ivfpq", "q", 16, Seq("q_codes", "q_centroids", "q_codebooks")))) {
+      def search() = SimilaritySearch.searchIndex(spark, cat, "idx", name, queries, 5)
+      SimilaritySearch.buildIndex(spark, cat, "idx", name, emb,
+        nCentroids = nCentroids, m = 16)
       val expect = search().collect().map(_.toSeq).toSet
-      rebuild()
+      SimilaritySearch.rebuildIndex(spark, cat, "idx", name)
       stages.foreach(s => assert(cat.meta("idx", s + "_rebuild").isEmpty,
         s"$family rebuild left staging set ${s}_rebuild"))
       val got = search().collect().map(_.toSeq).toSet
       assert(got == expect && got.nonEmpty, s"$family rebuild diverged")
-      assert(SimilaritySearch.appendedDriftFraction(cat, "idx", stages.head
-        .stripSuffix("_codes")) == 0.0)
+      assert(SimilaritySearch.appendedDriftFraction(cat, "idx", name) == 0.0)
     }
   }
 

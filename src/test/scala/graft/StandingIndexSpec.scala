@@ -53,7 +53,7 @@ class StandingIndexSpec extends GraftSpecBase {
     // the budget bought no wrong answers: every identity arrival pairs
     assert(ids.forall(i => pairs.contains((i, i + 100000L))), s"pairs: $pairs")
     // append, probe and IVF search shared ONE codebook collect
-    SimilaritySearch.searchIvfIndex(spark, cat, "j", "sem",
+    SimilaritySearch.searchIndex(spark, cat, "j", "sem",
       arrivals(ids), k = 1).collect()
     assert(cat.memoDecodes("j", "sem_centroids") == 1)
     assert(cat.meta("j", "sem_vectors").get.rows == 600L)
@@ -168,7 +168,7 @@ class StandingIndexSpec extends GraftSpecBase {
       loadIndexCodebook(spark, cat, "db", "old"))
     val arrivals = Seq((9L, Seq(1f, 0f))).toDF("vec_id", "embedding")
     intercept[IndexRebuildRequiredException](
-      appendToIvfIndex(spark, cat, "db", "old", arrivals))
+      appendToIndex(spark, cat, "db", "old", arrivals))
     assert(cat.meta("db", "old_vectors").get.rows == 1L &&
       cat.scanSet("db", "old_vectors").count() == 1L,
       "a refused append must not write rows under either kernel")
@@ -188,20 +188,140 @@ class StandingIndexSpec extends GraftSpecBase {
     // k = 9 routes two-level under threshold 4 (build and rebuild alike)
     spark.conf.set("spark.graft.ann.routeThreshold", "4")
     try {
-      SimilaritySearch.buildIvfIndex(spark, cat, "r", "ivf",
+      SimilaritySearch.buildIndex(spark, cat, "r", "ivf",
         corpus.where(col("vec_id") < 150), nCentroids = 9)
       val built = SimilaritySearch.loadIndexCodebook(spark, cat, "r", "ivf")
       assert(built.kernel == SimilaritySearch.TwoLevelKernel)
-      SimilaritySearch.appendToIvfIndex(spark, cat, "r", "ivf",
+      SimilaritySearch.appendToIndex(spark, cat, "r", "ivf",
         corpus.where(col("vec_id") >= 150))
       assert(SimilaritySearch.loadIndexCodebook(spark, cat, "r", "ivf")
         .router eq built.router,
         "appends and probes of one codebook generation share its router")
-      SimilaritySearch.rebuildIvfIndex(spark, cat, "r", "ivf")
+      SimilaritySearch.rebuildIndex(spark, cat, "r", "ivf")
       val rebuilt = SimilaritySearch.loadIndexCodebook(spark, cat, "r", "ivf")
       assert(rebuilt.kernel == SimilaritySearch.TwoLevelKernel &&
         !(rebuilt.router eq built.router),
         "a rebuild's new generation builds a new router")
     } finally spark.conf.unset("spark.graft.ann.routeThreshold")
+  }
+
+  /** One index of each kind: (name, nCentroids, m). */
+  private val kinds = Seq(("ivf", 16, 0), ("pq", 0, 16), ("ivfpq", 16, 16))
+
+  test("each index kind's lifecycle stays within its job budget") {
+    // build, search, append, search again and rebuild, in that order.
+    // The budgets are the counts each kind ran when it had its own four
+    // functions, except the rebuild's: it reads k off the centroids
+    // sidecar, where it ran a count (two jobs under AQE) — PQ has no k
+    val root = tempRoot("graft-lifecycle-jobs").toString
+    val corpus = vectorCorpus(s"$root/corpus", 600)
+    val budgets = Map(
+      "ivf" -> Seq(4, 6, 2, 4, 6 - 2),
+      "pq" -> Seq(9, 6, 2, 5, 5),
+      "ivfpq" -> Seq(7, 9, 3, 7, 7 - 2))
+    for ((kind, nCentroids, m) <- kinds) {
+      val cat = new SetCatalog(spark, s"$root/$kind")
+      def search() = SimilaritySearch.searchIndex(spark, cat, "j", kind,
+        corpus.where(col("vec_id") < 5), k = 5).collect()
+      val jobs = Seq(
+        jobsOf(SimilaritySearch.buildIndex(spark, cat, "j", kind,
+          corpus.where(col("vec_id") < 400), nCentroids = nCentroids, m = m)),
+        jobsOf(search()),
+        jobsOf(SimilaritySearch.appendToIndex(spark, cat, "j", kind,
+          corpus.where(col("vec_id") >= 400 && col("vec_id") < 500))),
+        jobsOf(search()),
+        jobsOf(SimilaritySearch.rebuildIndex(spark, cat, "j", kind)))
+      assert(jobs.zip(budgets(kind)).forall { case (j, b) => j <= b },
+        s"$kind lifecycle ran $jobs jobs, budget ${budgets(kind)}")
+    }
+  }
+
+  test("an IVF-PQ index with an unmarked coarse codebook appends and searches like a fresh build") {
+    import SimilaritySearch._
+    val root = tempRoot("graft-upgrade").toString
+    val cat = new SetCatalog(spark, s"$root/sets")
+    val corpus = vectorCorpus(s"$root/corpus", 600)
+    for (name <- Seq("fresh", "old"))
+      buildIndex(spark, cat, "u", name, corpus.where(col("vec_id") < 400),
+        nCentroids = 16, m = 16)
+    // the earlier layout: a coarse codebook without route markers, next
+    // to codes partitioned by bucket
+    val cents = cat.scanSet("u", "old_centroids").select("bucket", "centroid")
+    val rows = cents.collect()
+    cat.createSet("u", "old_centroids", spark.createDataFrame(
+      java.util.Arrays.asList(rows: _*), cents.schema), policy = "none")
+    assert(persistedRouteThreshold(cat.scanSet("u", "old_centroids")).isEmpty)
+    assert(cat.meta("u", "old_codes").get.partitionColumn.contains("bucket"))
+    val queries = corpus.where(col("vec_id") < 5)
+    def state(name: String) = Seq(s"${name}_codes", s"${name}_vectors")
+      .map(set => cat.scanSet("u", set).collect().map(_.toString).sorted.toSeq) :+
+      searchIndex(spark, cat, "u", name, queries, k = 5)
+        .collect().map(_.toString).sorted.toSeq
+    for (name <- Seq("fresh", "old"))
+      appendToIndex(spark, cat, "u", name,
+        corpus.where(col("vec_id") >= 400 && col("vec_id") < 500))
+    assert(state("old") == state("fresh"))
+
+    // past this session's routing threshold the unmarked codebook, which
+    // was assigned flat, would be routed: refused before any write
+    spark.conf.set("spark.graft.ann.routeThreshold", "4")
+    try {
+      val later = new SetCatalog(spark, s"$root/sets")
+      val rowsOf = Seq("old_codes", "old_vectors").map(later.meta("u", _).get.rows)
+      intercept[IndexRebuildRequiredException](appendToIndex(spark, later,
+        "u", "old", corpus.where(col("vec_id") >= 500)))
+      intercept[IndexRebuildRequiredException](
+        searchIndex(spark, later, "u", "old", queries, k = 5))
+      assert(Seq("old_codes", "old_vectors").map(later.meta("u", _).get.rows) ==
+        rowsOf, "a refused append must not write rows")
+      // the rebuild writes the markers, after which the index serves
+      rebuildIndex(spark, later, "u", "old")
+      assert(persistedRouteThreshold(later.scanSet("u", "old_centroids")).contains(4))
+      appendToIndex(spark, later, "u", "old", corpus.where(col("vec_id") >= 500))
+      assert(later.meta("u", "old_vectors").get.rows == 600L)
+    } finally spark.conf.unset("spark.graft.ann.routeThreshold")
+  }
+
+  test("rebuildIndex heals a swap an interrupted rebuild of each kind committed") {
+    import SimilaritySearch._
+    val root = tempRoot("graft-heal").toString
+    val cat = new SetCatalog(spark, s"$root/sets")
+    val corpus = vectorCorpus(s"$root/corpus", 400)
+    val queries = corpus.where(col("vec_id") < 5)
+    for ((kind, nCentroids, m) <- kinds) {
+      def build(name: String) = buildIndex(spark, cat, "h", name, corpus,
+        nCentroids = nCentroids, m = m)
+      def search(name: String) = searchIndex(spark, cat, "h", name, queries, k = 5)
+        .collect().map(_.toString).sorted.toSeq
+      build(kind)
+      val expect = search(kind)
+      // a rebuild's group as it was swapped: its output set, then models
+      val group =
+        Seq(if (m > 0) s"${kind}_codes" else s"${kind}_vectors") ++
+          (if (nCentroids > 0) Seq(s"${kind}_centroids") else Nil) ++
+          (if (m > 0) Seq(s"${kind}_codebooks") else Nil)
+      // its staged generation, committed by the marker; the crash came
+      // after the last member's target was removed, before its rename
+      build("staged")
+      group.foreach { t =>
+        cat.renameSet("h", t.replace(kind, "staged"), s"${t}_rebuild")
+        cat.markStaging("h", s"${t}_rebuild")
+      }
+      val marker = Paths.get(s"$root/sets/h.${group.sorted.mkString("+")}.swapin")
+      Files.writeString(marker,
+        group.map(t => s"${t}_rebuild -> $t").mkString("\n"))
+      group.init.foreach { t =>
+        cat.removeSet("h", t)
+        cat.renameSet("h", s"${t}_rebuild", t)
+      }
+      cat.removeSet("h", group.last)
+      rebuildIndex(spark, cat, "h", kind)
+      assert(!Files.exists(marker), s"$kind: the committed swap was not finished")
+      assert(group.forall(t =>
+          cat.meta("h", s"${t}_rebuild").isEmpty && cat.meta("h", t).isDefined),
+        s"$kind: staging left behind or a member missing")
+      assert(search(kind) == expect && expect.nonEmpty,
+        s"$kind: healed index diverged")
+    }
   }
 }

@@ -943,8 +943,8 @@ class StreamingSpec extends GraftSpecBase {
     val appended = (200L until 210L).map(i => (i, vec()))
     val root = tempRoot("graft-stivfpqsearch")
     val cat = new graft.storage.SetCatalog(spark, root.toString)
-    graft.operators.SimilaritySearch.buildIvfPqIndex(spark, cat, "t", "ix",
-      corpus.toDF("vec_id", "embedding"))
+    graft.operators.SimilaritySearch.buildIndex(spark, cat, "t", "ix",
+      corpus.toDF("vec_id", "embedding"), nCentroids = 16, m = 16)
     val input = MemoryStream[(Long, Seq[Float])]
     // the models' decode counts: stream batches, batch searches and
     // appends all read the one generation memo of the catalog
@@ -952,17 +952,17 @@ class StreamingSpec extends GraftSpecBase {
       cat.memoDecodes("t", "ix_codebooks"))
     val (q, result) = graft.operators.Dedup.startProbe(
       input.toDS().toDF("vec_id", "embedding"),
-      batch => graft.operators.SimilaritySearch.searchIvfPqIndex(spark, cat,
+      batch => graft.operators.SimilaritySearch.searchIndex(spark, cat,
         "t", "ix", batch, k = 3),
       sink = Some((cat, "t", "ix_hits")))
     try {
       // batch 1: a near-copy of corpus(5) must retrieve 5 at rank 1
       input.addData((1005L, near(corpus(5)._2)))
       q.processAllAvailable()
-      graft.operators.SimilaritySearch.appendToIvfPqIndex(spark, cat,
+      graft.operators.SimilaritySearch.appendToIndex(spark, cat,
         "t", "ix", appended.toDF("vec_id", "embedding"))
       // a batch search between stream batches shares the stream's models
-      val batchTop = graft.operators.SimilaritySearch.searchIvfPqIndex(spark,
+      val batchTop = graft.operators.SimilaritySearch.searchIndex(spark,
         cat, "t", "ix", Seq((1201L, near(appended(1)._2)))
           .toDF("vec_id", "embedding"), k = 3)
         .filter(col("rank") === 1).collect().map(_.getLong(2))
@@ -973,7 +973,7 @@ class StreamingSpec extends GraftSpecBase {
       input.addData((1200L, near(appended.head._2)))
       q.processAllAvailable()
       val loadsBeforeRebuild = loads()
-      graft.operators.SimilaritySearch.rebuildIvfPqIndex(spark, cat, "t", "ix")
+      graft.operators.SimilaritySearch.rebuildIndex(spark, cat, "t", "ix")
       // batch 3: the old generation's directories are renamed away —
       // a frozen plan fails on missing files; the probe must re-plan
       // AND re-collect the swapped models
@@ -1004,23 +1004,23 @@ class StreamingSpec extends GraftSpecBase {
     val appended = (300L until 305L).map(i => (i, vec()))
     val root = tempRoot("graft-stivfsearch")
     val cat = new graft.storage.SetCatalog(spark, root.toString)
-    graft.operators.SimilaritySearch.buildIvfIndex(spark, cat, "t", "iv",
-      corpus.toDF("vec_id", "embedding"))
+    graft.operators.SimilaritySearch.buildIndex(spark, cat, "t", "iv",
+      corpus.toDF("vec_id", "embedding"), nCentroids = 16)
     val input = MemoryStream[(Long, Seq[Float])]
     def loads() = cat.memoDecodes("t", "iv_centroids")
     val (q, result) = graft.operators.Dedup.startProbe(
       input.toDS().toDF("vec_id", "embedding"),
-      batch => graft.operators.SimilaritySearch.searchIvfIndex(spark, cat,
+      batch => graft.operators.SimilaritySearch.searchIndex(spark, cat,
         "t", "iv", batch, k = 3),
       sink = None)
     val hits = try {
       input.addData((1007L, near(corpus(7)._2)))
       q.processAllAvailable()
-      graft.operators.SimilaritySearch.appendToIvfIndex(spark, cat,
+      graft.operators.SimilaritySearch.appendToIndex(spark, cat,
         "t", "iv", appended.toDF("vec_id", "embedding"))
       input.addData((1300L, near(appended.head._2)))
       q.processAllAvailable()
-      graft.operators.SimilaritySearch.rebuildIvfIndex(spark, cat, "t", "iv")
+      graft.operators.SimilaritySearch.rebuildIndex(spark, cat, "t", "iv")
       input.addData((1008L, near(corpus(8)._2)))
       q.processAllAvailable()
       result().localCheckpoint(true)
@@ -1050,22 +1050,22 @@ class StreamingSpec extends GraftSpecBase {
     val appended = (400L until 405L).map(i => (i, vec()))
     val root = tempRoot("graft-stpqsearch")
     val cat = new graft.storage.SetCatalog(spark, root.toString)
-    graft.operators.SimilaritySearch.buildPqIndex(spark, cat, "t", "pq",
-      corpus.toDF("vec_id", "embedding"))
+    graft.operators.SimilaritySearch.buildIndex(spark, cat, "t", "pq",
+      corpus.toDF("vec_id", "embedding"), m = 16)
     val input = MemoryStream[(Long, Seq[Float])]
     def loads() = cat.memoDecodes("t", "pq_codebooks")
     val (q, result) = graft.operators.Dedup.startProbe(
       input.toDS().toDF("vec_id", "embedding"),
-      batch => graft.operators.SimilaritySearch.searchPqIndex(spark, cat,
+      batch => graft.operators.SimilaritySearch.searchIndex(spark, cat,
         "t", "pq", batch, k = 3),
       sink = None)
     val hits = try {
       input.addData((1009L, near(corpus(9)._2)))
       q.processAllAvailable()
-      graft.operators.SimilaritySearch.appendToPqIndex(spark, cat,
+      graft.operators.SimilaritySearch.appendToIndex(spark, cat,
         "t", "pq", appended.toDF("vec_id", "embedding"))
       // a batch search between stream batches shares the stream's codebooks
-      val batchTop = graft.operators.SimilaritySearch.searchPqIndex(spark,
+      val batchTop = graft.operators.SimilaritySearch.searchIndex(spark,
         cat, "t", "pq", Seq((1401L, near(appended(1)._2)))
           .toDF("vec_id", "embedding"), k = 3)
         .filter(col("rank") === 1).collect().map(_.getLong(2))
@@ -1075,7 +1075,7 @@ class StreamingSpec extends GraftSpecBase {
       q.processAllAvailable()
       assert(loads() == 1,
         s"an append or a batch search re-decoded the codebooks ${loads()}x")
-      graft.operators.SimilaritySearch.rebuildPqIndex(spark, cat, "t", "pq")
+      graft.operators.SimilaritySearch.rebuildIndex(spark, cat, "t", "pq")
       input.addData((1010L, near(corpus(10)._2)))
       q.processAllAvailable()
       result().localCheckpoint(true)
