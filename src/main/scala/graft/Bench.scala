@@ -54,7 +54,7 @@ object Bench {
     j.write.format("noop").mode("overwrite").save()
     val tmp = java.nio.file.Files.createTempDirectory("graft-warm").toString
     w.limit(1000).write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp).filter(col("k") > 3).select(col("s"))
+    graft.storage.ParquetPaths.read(spark, tmp).filter(col("k") > 3).select(col("s"))
       .write.format("noop").mode("overwrite").save()
     graft.storage.SetCatalog.deleteTree(java.nio.file.Paths.get(tmp))
   }

@@ -27,9 +27,13 @@ final class GraftSession(val spark: SparkSession) {
     * (reference: src/builtInPDBObjects/headers/ScanUserSet.h:23).
     */
   def scan[T: Encoder](path: String): TypedComp[T] =
-    TypedComp(spark.read.parquet(path).as[T](implicitly[Encoder[T]]))
+    TypedComp(scanDf(path).df.as[T](implicitly[Encoder[T]]))
 
-  def scanDf(path: String): ColComp = ColComp(spark.read.parquet(path))
+  /** The stored set at `path`, read under its remembered schema
+    * ([[graft.storage.ParquetPaths]]).
+    */
+  def scanDf(path: String): ColComp =
+    ColComp(graft.storage.ParquetPaths.read(spark, path))
 
   /** executeComputations(sink1, sink2, ...) — a query *graph* with several
     * sinks sharing scans (reference:

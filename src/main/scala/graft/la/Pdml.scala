@@ -207,7 +207,7 @@ object Pdml {
     def evalUncached(e: Expr): BlockMatrix = e match {
       case Load(r, c, br, bc, path) =>
         import spark.implicits._
-        val rows = spark.read.parquet(path).map { row =>
+        val rows = graft.storage.ParquetPaths.read(spark, path).map { row =>
           (row.getLong(0), row.getSeq[Any](1).map {
             case f: Float => f.toDouble
             case d: Double => d

@@ -65,11 +65,15 @@ final case class Document(
 final case class Embedding(vec_id: Long, embedding: Array[Float], label: Int)
 
 /** Loaders: one parquet file per "set" (reference set = (db, setName) pair of
-  * pages, src/storage/headers/UserSet.h:38 — here a parquet path).
+  * pages, src/storage/headers/UserSet.h:38 — here a parquet path). Every
+  * table is read through [[graft.storage.ParquetPaths]], so its schema is
+  * inferred once per file and the later reads of an unchanged file run
+  * no inference job: the reference's table types are registered once,
+  * not re-derived per query.
   */
 object Tables {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    graft.storage.ParquetPaths.read(spark, s"$sfDir/$name.parquet")
 
   def region(spark: SparkSession, d: String): DataFrame = table(spark, d, "region")
   def nation(spark: SparkSession, d: String): DataFrame = table(spark, d, "nation")
@@ -79,19 +83,26 @@ object Tables {
   def orders(spark: SparkSession, d: String): DataFrame = table(spark, d, "orders")
   def lineitem(spark: SparkSession, d: String): DataFrame = table(spark, d, "lineitem")
 
+  /** The events table, read nanos-as-long with `ts` normalized
+    * ([[normalizeTs]]).
+    */
+  def events(spark: SparkSession, d: String): DataFrame = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    normalizeTs(table(spark, d, "events"))
+  }
+
   /** The events fixture's `ts` physical type has varied across driver
     * generations: TIMESTAMP(NANOS) (which Spark 4 rejects with
     * [PARQUET_TYPE_ILLEGAL] unless read nanos-as-long), and TIMESTAMP(MICROS)
     * with isAdjustedToUTC=false (read as TIMESTAMP_NTZ). Normalize both to
     * session-local TimestampType — the session timezone is pinned to UTC, so
     * wall values are identical either way. The nanos path uses integer
-    * division (a double division would lose precision at ~1e18 ns).
+    * division (a double division would lose precision at ~1e18 ns). The
+    * one `ts` normalization of the batch table and the event stream.
     */
-  def events(spark: SparkSession, d: String): DataFrame = {
+  def normalizeTs(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types.{LongType, TimestampType}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = table(spark, d, "events")
     df.schema("ts").dataType match {
       case LongType => df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case TimestampType => df

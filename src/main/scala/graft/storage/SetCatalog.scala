@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.DataSource
 import org.apache.spark.sql.sources.BaseRelation
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 /** `files` is the set's data-file count, maintained incrementally by the
   * writers (0 = unknown, for sidecars written before the field existed —
@@ -300,7 +300,8 @@ final class SetCatalog(spark: SparkSession, root: String,
     * never applies one generation's schema to another generation's
     * files; the catalog's own appends then carry the schema (never the
     * decoded values) forward to the generation they wrote, and only
-    * when the appended columns equal the memoized ones.
+    * when the appended columns equal the memoized ones. A staging-tag
+    * rewrite and a rename move no file, so they carry it as well.
     */
   private val memo =
     scala.collection.mutable.HashMap[(String, String), SetCatalog.Memo]()
@@ -351,12 +352,37 @@ final class SetCatalog(spark: SparkSession, root: String,
   /** The written set's read schema, seeded into the memo for the
     * generation a create just wrote: the frame it wrote carries it
     * (file reads come back nullable whatever the frame declared). A
-    * directory-partitioned set is not seeded: which type partition
-    * inference gives its column (a long `bucket` reads back as int) is
-    * only known from a read, so its first [[scanSet]] infers.
+    * directory-partitioned set reads back its data columns in written
+    * order, then the partition column as directory inference types it:
+    * `int` when every `column=value` directory the write made names an
+    * int, whatever type the frame gave the column (a long `bucket` or
+    * `cell_group_N` reads back as int). Any other partition value, or
+    * none, seeds nothing, and the set's first [[scanSet]] infers.
     */
-  private def seedSchema(db: String, set: String, written: DataFrame): Unit =
-    remember(db, set, metaStamp(db, set), Some(written.schema), Map.empty)
+  private def seedSchema(db: String, set: String, written: DataFrame,
+      partitionColumn: Option[String] = None): Unit = {
+    val schema = partitionColumn match {
+      case None => Some(written.schema)
+      case Some(c) => Option.when(intPartitions(db, set, c))(StructType(
+        written.schema.filterNot(_.name == c) :+ StructField(c, IntegerType)))
+    }
+    schema.foreach(s => remember(db, set, metaStamp(db, set), Some(s), Map.empty))
+  }
+
+  /** True when partition inference reads `c` of `db.set` back as int:
+    * type inference is on and the set has `c=value` directories, every
+    * value an int.
+    */
+  private def intPartitions(db: String, set: String, c: String): Boolean =
+    spark.sessionState.conf.partitionColumnTypeInferenceEnabled && {
+      import scala.jdk.CollectionConverters._
+      val ls = Files.list(Paths.get(dir(db, set)))
+      try {
+        val values = ls.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.startsWith(s"$c=")).map(_.stripPrefix(s"$c=")).toList
+        values.nonEmpty && values.forall(_.toIntOption.isDefined)
+      } finally ls.close()
+    }
 
   /** Write `m` as the sidecar of `db.set`; `m.generation` is ignored
     * and replaced by the next generation.
@@ -613,6 +639,7 @@ final class SetCatalog(spark: SparkSession, root: String,
       SaveMode.Overwrite, Some(partitionColumn))
     writeMeta(db, set, SetMeta(Some(partitionColumn), 0, rows, "dirpart",
       files = files))
+    seedSchema(db, set, df, Some(partitionColumn))
   }
 
   /** Append rows to an existing directory-partitioned set: new files land
@@ -765,7 +792,17 @@ final class SetCatalog(spark: SparkSession, root: String,
     * [[recoverSets]] on the same targets, never a discarded user set).
     */
   private[graft] def markStaging(db: String, set: String): Unit =
-    meta(db, set).foreach(m => writeMeta(db, set, m.copy(staging = true)))
+    meta(db, set).foreach(retag(db, set, _, staging = true))
+
+  /** Rewrite `m`, the sidecar of `db.set`, with only its staging tag
+    * changed: the files stay as they are, so a memoized read schema
+    * moves to the new generation.
+    */
+  private def retag(db: String, set: String, m: SetMeta, staging: Boolean): Unit = {
+    val schema = memoAt(db, set, stampOf(db, set, Some(m))).flatMap(_.schema)
+    writeMeta(db, set, m.copy(staging = staging))
+    schema.foreach(s => remember(db, set, metaStamp(db, set), Some(s), Map.empty))
+  }
 
   /** Delete the set's files and then its sidecar: the set is gone
     * from every catalog on the root, and nothing else holds it.
@@ -789,8 +826,10 @@ final class SetCatalog(spark: SparkSession, root: String,
     * below detects exactly that half-moved state and COMPLETES the
     * sidecar move (compactSet's crash-recovery-before-cleanup
     * pattern), so a retry of the same rename self-heals into a no-op.
+    * The files keep their read schema: a memoized one moves with them.
     */
   def renameSet(db: String, from: String, to: String): Unit = {
+    val schema = memoAt(db, from, metaStamp(db, from)).flatMap(_.schema)
     forget(db, from); forget(db, to)
     // Crash recovery BEFORE validation: data under `to` with no `to`
     // sidecar while `from`'s sidecar remains (and `from`'s data is
@@ -809,6 +848,7 @@ final class SetCatalog(spark: SparkSession, root: String,
       s"renameSet: target $db.$to already exists")
     Files.move(Paths.get(dir(db, from)), Paths.get(dir(db, to)))
     Files.move(Paths.get(metaPath(db, from)), Paths.get(metaPath(db, to)))
+    schema.foreach(s => remember(db, to, metaStamp(db, to), Some(s), Map.empty))
     clearStaging(db, to)
   }
 
@@ -818,8 +858,7 @@ final class SetCatalog(spark: SparkSession, root: String,
     * leftover and discard it.
     */
   private def clearStaging(db: String, set: String): Unit =
-    meta(db, set).filter(_.staging)
-      .foreach(m => writeMeta(db, set, m.copy(staging = false)))
+    meta(db, set).filter(_.staging).foreach(retag(db, set, _, staging = false))
 
   /** One marker per swap GROUP, named by the sorted target list — the
     * rebuild that owns a group always knows its exact member sets, so

@@ -211,7 +211,10 @@ object EventStreams {
       .start()
 
   /** file-source streaming read of the events fixture (batch parquet driven
-    * as a stream), for end-to-end smoke use
+    * as a stream), for end-to-end smoke use. The stream's schema is the
+    * batch read's, taken through [[graft.storage.ParquetPaths]]: inferred
+    * once per fixture file, so a later stream over the unchanged file
+    * starts with no inference job.
     */
   def readEventStream(spark: SparkSession, path: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -226,16 +229,9 @@ object EventStreams {
     // the same file so the ts physical type (nanos-as-long vs micros — the
     // fixture has varied across driver generations) is whatever the batch
     // path sees, then normalize exactly like Tables.events.
-    val schema = spark.read.option("pathGlobFilter", glob).parquet(dir).schema
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", glob).parquet(dir)
-    schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case org.apache.spark.sql.types.TimestampType => raw
-      case _ =>
-        raw.withColumn("ts",
-          col("ts").cast(org.apache.spark.sql.types.TimestampType))
-    }
+    val schema = graft.storage.ParquetPaths.read(
+      spark, dir, Map("pathGlobFilter" -> glob)).schema
+    graft.model.Tables.normalizeTs(spark.readStream.schema(schema)
+      .option("pathGlobFilter", glob).parquet(dir))
   }
 }

@@ -1,9 +1,9 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import graft.model.Tables
-import graft.storage.SetCatalog
+import graft.storage.{ParquetPaths, SetCatalog}
 
 class CatalogSpec extends GraftSpecBase {
 
@@ -870,5 +870,100 @@ class CatalogSpec extends GraftSpecBase {
     assert(names == Set("a", "b"))
     assert(Seq("a", "b").forall(t => sets.meta("db", t).exists(!_.staging)))
     assert(!Files.exists(Paths.get(s"$r/db.a+b.swapin")))
+  }
+
+  test("a partitioned set reads back under its seeded schema, typed as inference types it") {
+    val r = tempRoot("graft-seed").toString
+    val sets = new SetCatalog(spark, r)
+    val rows = spark.range(40).select(col("id"), (col("id") % 4).as("bucket"),
+      col("id").cast("string").as("s"))
+    sets.createPartitionedSet("db", "ints", rows, "bucket")
+    // non-int directory values seed nothing: the first scan infers
+    sets.createPartitionedSet("db", "strs",
+      rows.withColumn("bucket", concat(lit("b"), col("bucket"))), "bucket")
+    var seeded: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf { seeded = sets.scanSet("db", "ints") } == 0)
+    assert(seeded.schema("bucket").dataType == org.apache.spark.sql.types.IntegerType)
+    for ((set, df) <- Seq("ints" -> seeded, "strs" -> sets.scanSet("db", "strs")))
+      assert(df.schema == spark.read.parquet(s"$r/db.$set").schema, set)
+    assert(seeded.where(col("bucket") === 3).count() == 10L)
+  }
+
+  /** `df` written as ONE parquet file at `path` (Spark writes a
+    * directory; its single part file is moved over `path`).
+    */
+  private def writeFile(df: org.apache.spark.sql.DataFrame, path: String): Unit = {
+    val tmp = s"$path.tmp"
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    val part = Files.list(Paths.get(tmp))
+    try Files.move(part.filter(_.toString.endsWith(".parquet")).findFirst.get,
+      Paths.get(path), java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    finally part.close()
+    SetCatalog.deleteTree(Paths.get(tmp))
+  }
+
+  test("a re-read of an unchanged parquet file runs no job and returns an equal schema") {
+    val f = s"${tempRoot("graft-paths")}/t.parquet"
+    writeFile(spark.range(10).select(col("id"), col("id").cast("string").as("s")), f)
+    val first = ParquetPaths.read(spark, f)
+    var again: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf { again = ParquetPaths.read(spark, f) } == 0)
+    assert(again.schema == first.schema)
+    assert(again.collect().toSeq == first.collect().toSeq)
+  }
+
+  test("a parquet file rewritten at the same path shows its added column") {
+    val f = s"${tempRoot("graft-paths")}/t.parquet"
+    val base = spark.range(10).select(col("id"))
+    writeFile(base, f)
+    assert(ParquetPaths.read(spark, f).columns.toSeq == Seq("id"))
+    writeFile(base.withColumn("x", col("id") * 2), f)
+    val reread = ParquetPaths.read(spark, f)
+    assert(reread.columns.toSeq == Seq("id", "x"))
+    assert(reread.where(col("id") === 3).head().getLong(1) == 6L)
+  }
+
+  test("flipping spark.sql.parquet.binaryAsString re-infers a binary column") {
+    // written without a Spark schema in the footer: binaryAsString only
+    // applies to plain parquet binaries
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val f = s"${tempRoot("graft-paths")}/b.parquet"
+    val schema = MessageTypeParser.parseMessageType("message m { required binary b; }")
+    val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(f))
+      .withType(schema).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup().append("b", "x"))
+    finally w.close()
+    val key = "spark.sql.parquet.binaryAsString"
+    def typeOfB() = ParquetPaths.read(spark, f).schema("b").dataType
+    try {
+      spark.conf.set(key, "false")
+      assert(typeOfB() == org.apache.spark.sql.types.BinaryType)
+      spark.conf.set(key, "true")
+      assert(typeOfB() == org.apache.spark.sql.types.StringType)
+      assert(ParquetPaths.read(spark, f).head().getString(0) == "x")
+    } finally spark.conf.unset(key)
+  }
+
+  test("a second pathGlobFilter directory read hits the memo") {
+    val d = tempRoot("graft-paths").toString
+    writeFile(spark.range(5).select(col("id")), s"$d/a.parquet")
+    writeFile(spark.range(5).select(col("id").cast("string").as("s")), s"$d/b.parquet")
+    val glob = Map("pathGlobFilter" -> "a*")
+    val first = ParquetPaths.read(spark, d, glob)
+    assert(first.columns.toSeq == Seq("id"))
+    var again: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf { again = ParquetPaths.read(spark, d, glob) } == 0)
+    assert(again.schema == first.schema && again.count() == 5L)
+  }
+
+  test("a second q3_shipping_priority call reads its tables with no inference job") {
+    val q3 = SparkEntry.queries("q3_shipping_priority")
+    q3(spark, sfDir).collect()
+    val sites = jobSitesOf(q3(spark, sfDir).collect())
+    assert(sites.nonEmpty)
+    assert(!sites.exists(_.contains("graft.model.Tables")),
+      s"jobs started from Tables: ${sites.filter(_.contains("graft.model.Tables"))}")
   }
 }

@@ -4,7 +4,7 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-level guards: Scaladoc placement, one storage namespace, oracle
-  * text in graft.queries and one stream start.
+  * text in graft.queries, one stream start and one parquet path read.
   */
 class DocCommentSpec extends AnyFunSuite {
 
@@ -104,6 +104,24 @@ class DocCommentSpec extends AnyFunSuite {
     val writes = java.nio.file.Files.readAllLines(catalog.head).asScala
       .zipWithIndex.collect { case (line, i) if writer.matcher(line).find() => i + 1 }
     assert(writes.isEmpty, s"SetCatalog.scala writes outside writeCounted at lines $writes")
+  }
+
+  test("src/main reads parquet by path only inside graft/storage") {
+    // every path read outside the storage package goes through
+    // ParquetPaths, whose memo spares the footer-inference job; a
+    // DataFrameReader chain ending in `.parquet(` (or a parquet format)
+    // elsewhere would infer on every call. A readStream names its schema.
+    val read = java.util.regex.Pattern.compile(
+      "\\.read\\b(?:\\s*\\.\\w+\\((?:[^()]|\\([^()]*\\))*\\))*" +
+        "\\s*\\.(?:parquet\\(|format\\(\"parquet\"\\))")
+    val hits = mainSources.filterNot(_.toString.contains("graft/storage/"))
+      .flatMap { p =>
+        val text = java.nio.file.Files.readString(p)
+        val m = read.matcher(text)
+        Iterator.continually(m).takeWhile(_.find())
+          .map(m => s"$p:${text.take(m.start).count(_ == '\n') + 1}").toList
+      }
+    assert(hits.isEmpty, s"parquet read by path outside graft/storage at: $hits")
   }
 
   test("src/main has one standing-index lifecycle and one coarse-codebook load") {

@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path}
-import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
@@ -28,16 +28,23 @@ trait GraftSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   /** Spark jobs started while `body` runs (listener bus drained on both
     * sides, so no event of `body` is missed or leaks in).
     */
-  def jobsOf(body: => Unit): Int = {
+  def jobsOf(body: => Unit): Int = jobSitesOf(body).size
+
+  /** The call sites of each Spark job started while `body` runs, one
+    * string per job: the stacks, from the first frame outside Spark,
+    * that created its stages.
+    */
+  def jobSitesOf(body: => Unit): Seq[String] = {
     val sc = spark.sparkContext
     ListenerBusDrain(sc)
-    val n = new AtomicInteger
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        sites.add(e.stageInfos.map(_.details).mkString("\n"))
     }
     sc.addSparkListener(l)
     try { body; ListenerBusDrain(sc) } finally sc.removeSparkListener(l)
-    n.get
+    sites.asScala.toSeq
   }
 
   /** The parquet data files under `dir`, counted by a listing. */
